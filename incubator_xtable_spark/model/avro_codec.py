@@ -1,4 +1,5 @@
-"""Pure-python Avro BINARY decoder (records + OCF container files).
+"""Pure-python Avro BINARY codec (records + OCF container files) — the
+engine's only Avro encoder and decoder.
 
 Written from the PUBLIC Avro 1.x specification (binary encoding +
 object container files): zigzag-varint ints/longs, little-endian IEEE
@@ -8,10 +9,14 @@ enum ordinal; OCF = magic ``Obj\\x01`` + file-metadata map
 (avro.schema / avro.codec) + sync marker + sync-delimited blocks
 (null/deflate codecs; deflate is raw zlib).
 
-Why it exists (r6): the engine previously decoded Avro via the JVM's
-GenericRecord.toString Avro-JSON (py4j), which mangles bytes/fixed
-values and loses logical types — Hudi log blocks with such columns had
-to refuse. This decoder yields TYPED Python values:
+Every Avro file or record the engine writes comes from here: Iceberg
+manifests and manifest lists, Paimon manifests / manifest lists / index
+manifests, Hudi metadata-table records and Hudi CDC log-block records.
+Reads of the same files go through ``read_ocf`` / ``iter_ocf``. The
+JVM's Avro library is only an independent reference in the tests
+(records written here are gated equal under its DataFileReader).
+
+The decoder yields TYPED Python values:
 
 - decimal logical type (bytes/fixed)  -> decimal.Decimal
 - date                                -> datetime.date
@@ -20,12 +25,15 @@ to refuse. This decoder yields TYPED Python values:
 - uuid                                -> str
 - plain bytes/fixed                   -> bytes
 
-It is also JVM-free, so data-source worker processes (no SparkSession)
-can read Avro — the prerequisite for readStream sources over formats
-whose metadata lives in Avro.
+and the encoder accepts the same shapes (raw ints for logical types pass
+through). Avro ``bytes`` take ``bytes``-like values only: a ``str``
+raises instead of being silently re-encoded.
 
-Scale: decoding is driver-or-worker-side over metadata-sized payloads
-(log blocks, manifests); data rows never route through here.
+It is JVM-free, so data-source worker processes (no SparkSession) can
+read Avro and the target write path makes no per-record py4j calls.
+
+Scale: encoding/decoding is driver-or-worker-side over metadata-sized
+payloads (log blocks, manifests); data rows never route through here.
 """
 
 from __future__ import annotations
@@ -283,8 +291,8 @@ def read_ocf(path: str) -> tuple[list[dict], dict[str, bytes]]:
 
 
 # ---------------------------------------------------------------------------
-# Binary ENCODER (r7) — the decoder's inverse, for building Avro payloads
-# without the JVM (HFile fixture records, future manifest writes).
+# Binary ENCODER — the decoder's inverse (manifests, log blocks, metadata
+# records).
 # ---------------------------------------------------------------------------
 
 
@@ -340,7 +348,8 @@ def _unlogical(schema: dict, value: Any) -> Any:
         ):
             size = int(schema.get("size") or schema["type"]["size"])
             return unscaled.to_bytes(size, "big", signed=True)
-        n = max(1, (unscaled.bit_length() + 8) // 8)
+        # minimal two's complement, as java.math.BigInteger.toByteArray()
+        n = (unscaled + (unscaled < 0)).bit_length() // 8 + 1
         return unscaled.to_bytes(n, "big", signed=True)
     if lt == "date" and isinstance(value, datetime.date) and not isinstance(value, datetime.datetime):
         return (value - _EPOCH_D).days
@@ -502,24 +511,27 @@ def write_ocf(
     *,
     codec: str = "null",
     extra_meta: Optional[dict] = None,
-) -> None:
+) -> int:
     """Write an Avro Object Container File (spec 1.11 §Object Container
     Files): magic, metadata map (avro.schema/avro.codec + extras), 16-byte
     sync marker, then one data block. Codecs: null, deflate (raw zlib).
+    Returns the file length in bytes.
 
-    The sync marker is DETERMINISTIC — derived from the schema + record
-    count — because scripts here must stay reproducible (no RNG in the
-    engine's write paths); the marker's only spec role is block-boundary
-    detection, which any fixed value serves. Round-trips through
-    ``read_ocf`` and the JVM DataFileReader (gated in tests)."""
+    The header matches the JVM DataFileWriter's: ``avro.schema`` is
+    compact JSON, the way ``Schema.toString()`` prints it, and the null
+    codec writes no ``avro.codec`` key. The sync marker is DETERMINISTIC —
+    derived from the schema + record count — because scripts here must
+    stay reproducible (no RNG in the engine's write paths); the marker's
+    only spec role is block-boundary detection, which any fixed value
+    serves. Round-trips through ``read_ocf`` and the JVM DataFileReader
+    (gated in tests)."""
     schema = json.loads(schema_json) if isinstance(schema_json, str) else schema_json
-    schema_bytes = json.dumps(schema).encode("utf-8")
+    schema_bytes = json.dumps(schema, separators=(",", ":")).encode("utf-8")
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported avro codec: {codec}")
-    meta: dict[str, bytes] = {
-        "avro.schema": schema_bytes,
-        "avro.codec": codec.encode("ascii"),
-    }
+    meta: dict[str, bytes] = {"avro.schema": schema_bytes}
+    if codec != "null":  # absent means null, as the JVM writer leaves it
+        meta["avro.codec"] = codec.encode("ascii")
     for k, v in (extra_meta or {}).items():
         meta[k] = v if isinstance(v, bytes) else str(v).encode("utf-8")
     sync = hashlib.md5(b"xtable-ocf:%d:" % len(records) + schema_bytes).digest()
@@ -541,4 +553,5 @@ def write_ocf(
         out += block
         out += sync
     with open(path, "wb") as fh:
-        fh.write(bytes(out))
+        fh.write(out)
+    return len(out)

@@ -276,10 +276,8 @@ def drain_rows(df: Any, streaming: Any = None):
 
     ``streaming``:
     - ``None`` (default): bulk ``collect()`` — one job, right for
-      bounded per-commit diffs — unless env ``XT_STREAM_INVENTORY=1``
-      forces streaming;
-    - ``True`` / env ``XT_STREAM_INVENTORY=1``:
-      ``toLocalIterator(prefetchPartitions=True)`` — one partition
+      bounded per-commit diffs;
+    - ``True``: ``toLocalIterator(prefetchPartitions=True)`` — one partition
       resident in python at a time, flat driver RSS;
     - ``"auto"`` (snapshot-scale drains): ``persist()`` + ``count()``
       materializes the plan once into the executor block cache (in
@@ -288,15 +286,7 @@ def drain_rows(df: Any, streaming: Any = None):
       ``STREAM_DRAIN_THRESHOLD`` rows, streaming iterator above it
       (cache also prevents toLocalIterator's per-partition recompute
       of the upstream plan). The cache drops when iteration finishes.
-      Env ``XT_STREAM_INVENTORY`` = ``1``/``0`` overrides "auto" too.
     """
-    import os as _os
-
-    env = _os.environ.get("XT_STREAM_INVENTORY", "")
-    if streaming is None:
-        streaming = env == "1"
-    elif streaming == "auto" and env in ("0", "1"):
-        streaming = env == "1"
     if streaming == "auto" and getattr(df, "_xt_local_hint", False):
         # The source tagged this inventory as driver-built and
         # metadata-sized (every tag site is byte- or file-count-gated,

@@ -412,9 +412,11 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # F.get (not element_at) — returns NULL on out-of-bounds instead of
     # raising under ANSI; arrays are sorted ascending so element 0 of the
-    # filtered suffix IS min(ts > bound), exactly the old join's agg
+    # filtered suffix IS min(ts > bound), exactly the old join's agg.
+    # The NULL user_id group counts as a viewer (GROUP BY keeps it) but
+    # never reaches a later step: the oracle's equi-joins drop NULL keys.
     tb = F.when(
-        F.col("ta").isNotNull(),
+        F.col("ta").isNotNull() & F.col("user_id").isNotNull(),
         F.get(F.filter("clicks", lambda x: x > F.col("ta")), F.lit(0)),
     )
     # two chained projections: tb must EXIST as a column before the

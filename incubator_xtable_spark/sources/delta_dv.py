@@ -383,10 +383,8 @@ def write_purged_files(
 
 # Purged-shadow batches whose PENDING data bytes are at or under this run
 # inline on the driver (one small file re-write); bigger batches keep the
-# parallel executor tier. A bytes gate, never SF. Env-tunable; 0 disables.
-_DRIVER_PURGE_MAX_BYTES = int(
-    os.environ.get("XT_DRIVER_PURGE_MAX_BYTES", str(64 * 1024 * 1024))
-)
+# parallel executor tier. A bytes gate, never SF; 0 disables.
+_DRIVER_PURGE_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _write_one_purged_file(base_path: str, src: str, dv_json: str, out: str) -> None:
@@ -523,9 +521,9 @@ def write_delete_position_files(
 # Metadata-sized DV batches (total serialized DV bytes at or under this)
 # write their position files inline on the driver; bigger sets keep the
 # one-task-per-file distributed tier. Positions scale with DV bytes, so
-# the gate bounds driver work in BYTES, never SF. Env-tunable;
-# 0 disables the driver tier.
-_DRIVER_DV_MAX_BYTES = int(os.environ.get("XT_DRIVER_DV_MAX_BYTES", str(4 * 1024 * 1024)))
+# the gate bounds driver work in BYTES, never SF; 0 disables the driver
+# tier.
+_DRIVER_DV_MAX_BYTES = 4 * 1024 * 1024
 
 
 def _write_one_delete_file(base_path: str, src: str, dv_json: str, out: str) -> None:

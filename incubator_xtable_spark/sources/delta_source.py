@@ -406,13 +406,11 @@ def _commit_slices(
 # collect, the live-files window, stats parses) then plans against local
 # rows at ~millisecond cost instead of paying a full local[32] job per
 # action — measured as the dominant cost of small-table conversions. At
-# scale the threshold routes big logs to the distributed path unchanged;
-# env XT_DRIVER_LOG_MAX_BYTES overrides (0 disables the fast path).
+# scale the threshold routes big logs to the distributed path unchanged
+# (0 disables the fast path).
 # Production justification: a log under a few MB is driver-trivial on any
 # cluster; the distributed read exists for unbounded logs, not these.
-_DRIVER_LOG_MAX_BYTES = int(
-    os.environ.get("XT_DRIVER_LOG_MAX_BYTES", str(4 * 1024 * 1024))
-)
+_DRIVER_LOG_MAX_BYTES = 4 * 1024 * 1024
 
 
 def _schema_dict(value, dtype):

@@ -37,10 +37,11 @@ delete blocks drop keys, rollback commands drop the target instant's
 blocks. The merged map overlays the slice's base file: matching keys
 replace base rows, new keys append, deleted keys vanish.
 
-Scale note: AVRO blocks decode via the JVM's official Avro library
-driver-side (bounded: log files are the un-compacted tail of a slice —
-compaction regularly folds them into base files, which is also why the
-CONVERSION scope stays read-optimized like the reference); PARQUET
+Scale note: AVRO blocks decode and CDC blocks encode through the
+pure-python codec (model/avro_codec) driver-side (bounded: log files are
+the un-compacted tail of a slice — compaction regularly folds them into
+base files, which is also why the CONVERSION scope stays read-optimized
+like the reference); PARQUET
 blocks decode with Arrow. read_hudi_as_df(mode="snapshot") applies the
 merged overlay per slice.
 """
@@ -303,41 +304,21 @@ def cdc_record_schema(row_schema_json: str) -> str:
     )
 
 
-def _avro_binary(spark, schema_json: str, record: dict) -> bytes:
-    """dict -> Avro binary via the JVM's official Avro library
-    (JsonDecoder -> GenericRecord -> BinaryEncoder; py4j unboxes
-    java.lang.Long, so records must be built JVM-side from Avro-JSON —
-    same seam as targets/iceberg_target.AvroIO)."""
-    from incubator_xtable_spark.targets.iceberg_target import _avro_json_encode
-
-    jvm = spark._jvm
-    sch = jvm.org.apache.avro.Schema.Parser().parse(schema_json)
-    factory = jvm.org.apache.avro.io.DecoderFactory.get()
-    efactory = jvm.org.apache.avro.io.EncoderFactory.get()
-    reader = jvm.org.apache.avro.generic.GenericDatumReader(sch)
-    writer = jvm.org.apache.avro.generic.GenericDatumWriter(sch)
-    decoder = factory.jsonDecoder(
-        sch, json.dumps(_avro_json_encode(record, json.loads(schema_json)))
-    )
-    rec = reader.read(None, decoder)
-    baos = jvm.java.io.ByteArrayOutputStream()
-    encoder = efactory.binaryEncoder(baos, None)
-    writer.write(rec, encoder)
-    encoder.flush()
-    return bytes(baos.toByteArray())
-
-
 def write_cdc_log_file(
-    spark, path: str, instant: str, row_schema_json: str, records: list[dict]
+    path: str, instant: str, row_schema_json: str, records: list[dict]
 ) -> int:
     """Write CDC records ({op, before, after} dicts) as ONE framed
-    CDC_DATA_BLOCK log file; returns the file size. Driver-side and
-    bounded by the commit's change volume — the same metadata-sized
-    posture as the reader's block decode."""
+    CDC_DATA_BLOCK log file; returns the file size. Records are Avro
+    binary from model/avro_codec. Driver-side and bounded by the
+    commit's change volume — the same metadata-sized posture as the
+    reader's block decode."""
+    from incubator_xtable_spark.model.avro_codec import encode_binary_record
+
     schema = cdc_record_schema(row_schema_json)
+    schema_dict = json.loads(schema)
     content = struct.pack(">ii", 3, len(records))
     for r in records:
-        blob = _avro_binary(spark, schema, r)
+        blob = encode_binary_record(schema_dict, r)
         content += struct.pack(">i", len(blob)) + blob
     block = _block_bytes(
         CDC_DATA_BLOCK, {H_INSTANT_TIME: instant, H_SCHEMA: schema}, content

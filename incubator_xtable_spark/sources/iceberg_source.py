@@ -47,9 +47,9 @@ from incubator_xtable_spark.model.core import (
     TableFormat,
 )
 from incubator_xtable_spark.model import file_formats as _ff
+from incubator_xtable_spark.model.avro_codec import read_ocf
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 from incubator_xtable_spark.targets.iceberg_target import (
-    AvroIO,
     iceberg_fields_to_schema,
     read_table_metadata,
 )
@@ -70,7 +70,6 @@ class IcebergConversionSource:
         self.spark = spark
         self.base_path = base_path.rstrip("/")
         self.name = name or os.path.basename(self.base_path)
-        self.avro = AvroIO(spark)
         # branch/tag to sync from (spec `refs`); None = the main head
         self.ref = ref
         # CDC channel: attach each snapshot's changelog-scan derivation
@@ -232,7 +231,7 @@ class IcebergConversionSource:
         mappings: dict[int, list[tuple[str, Optional[str]]]] = {}
         data: list[dict] = []
         deletes: list[dict] = []
-        for mf in self.avro.read_records(snap["manifest-list"]):
+        for mf in read_ocf(snap["manifest-list"])[0]:
             # partition-spec evolution: a manifest written under an older
             # spec stores THAT spec's partition tuple; resolve it into the
             # default spec's field names (null where the old spec lacks a
@@ -249,7 +248,7 @@ class IcebergConversionSource:
             # files before it in the manifest — materialized here so
             # every consumer sees explicit ids
             running = mf.get("first_row_id")
-            for entry in self.avro.read_records(mf["manifest_path"]):
+            for entry in read_ocf(mf["manifest_path"])[0]:
                 if entry["status"] == 2:
                     continue
                 if mapping is not None:
@@ -838,11 +837,7 @@ class IcebergConversionSource:
         }
 
         def bounds_map(raw_entries) -> dict[int, bytes]:
-            out = {}
-            for kv in raw_entries or []:
-                v = kv["value"]
-                out[kv["key"]] = v.encode("latin-1") if isinstance(v, str) else bytes(v)
-            return out
+            return {kv["key"]: kv["value"] for kv in raw_entries or []}
 
         from incubator_xtable_spark.functions.partition_transforms import (
             from_iceberg_partition_value,
@@ -1289,11 +1284,7 @@ def _prune_iceberg_entries(
         return entries
 
     def _bounds(raw_entries) -> dict[int, bytes]:
-        out = {}
-        for kv in raw_entries or []:
-            v = kv["value"]
-            out[kv["key"]] = v.encode("latin-1") if isinstance(v, str) else bytes(v)
-        return out
+        return {kv["key"]: kv["value"] for kv in raw_entries or []}
 
     kept = []
     for e in entries:

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model import schema_meta
+from incubator_xtable_spark.model.avro_codec import read_ocf
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
@@ -68,7 +69,6 @@ from incubator_xtable_spark.model.paimon_binary import (
     decode_long_array,
 )
 from incubator_xtable_spark.model.stat_codec import encode_stat
-from incubator_xtable_spark.targets.iceberg_target import AvroIO
 
 DEFAULT_PARTITION_NAME = "__DEFAULT_PARTITION__"  # CoreOptions partition.default-name
 # CoreOptions: num-levels defaults to num-sorted-run.compaction-trigger (5) + 1
@@ -354,7 +354,6 @@ class PaimonConversionSource:
         self.spark = spark
         self.base_path = base_path.rstrip("/")
         self.name = name or os.path.basename(self.base_path)
-        self.avro = AvroIO(spark)
         # CDC channel: attach each commit's changelog to the TableChange
         self.emit_row_changes = emit_row_changes
         # True -> deletion-vector index entries flow through the row-delete
@@ -428,10 +427,10 @@ class PaimonConversionSource:
     def _read_manifest_list(self, name: str) -> list[dict]:
         if not name:
             return []
-        return self.avro.read_records(os.path.join(self.base_path, "manifest", name))
+        return read_ocf(os.path.join(self.base_path, "manifest", name))[0]
 
     def _read_manifest(self, name: str) -> list[dict]:
-        return self.avro.read_records(os.path.join(self.base_path, "manifest", name))
+        return read_ocf(os.path.join(self.base_path, "manifest", name))[0]
 
     def _entries_for_lists(self, list_names: list[str]) -> list[dict]:
         entries = []
@@ -516,8 +515,7 @@ class PaimonConversionSource:
         """-> (partition_values map, hive path 'k=v/k2=v2' or None)."""
         if not keys:
             return None, None
-        data = raw.encode("latin-1") if isinstance(raw, str) else bytes(raw)
-        vals = decode_binary_row(data, codecs)
+        vals = decode_binary_row(raw, codecs)
         pv = {
             k: self._partition_value_str(v, dt, options)
             for k, v, dt in zip(keys, vals, dtypes)
@@ -547,12 +545,9 @@ class PaimonConversionSource:
                 _, codec, _ = parse_paimon_type_from_spark(f.dataType)
             codecs.append(codec or PaimonFieldType("bigint"))
 
-        def blob(x):
-            return x.encode("latin-1") if isinstance(x, str) else bytes(x)
-
-        mins = decode_binary_row(blob(stats["_MIN_VALUES"]), codecs)
-        maxs = decode_binary_row(blob(stats["_MAX_VALUES"]), codecs)
-        nulls = decode_long_array(blob(stats["_NULL_COUNTS"]))
+        mins = decode_binary_row(stats["_MIN_VALUES"], codecs)
+        maxs = decode_binary_row(stats["_MAX_VALUES"], codecs)
+        nulls = decode_long_array(stats["_NULL_COUNTS"])
         out = {}
         for i, c in enumerate(cols):
             f = by_name.get(c)

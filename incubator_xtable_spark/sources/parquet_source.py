@@ -152,13 +152,13 @@ class ParquetConversionSource:
         local_files: Optional[list] = None,
     ) -> DataFrame:
         """``local_files``: the caller's driver-side [(path, size, mtime)]
-        list. Small listings (the XT_DRIVER_FOOTER_MAX_FILES gate) then
+        list. Small listings (the _DRIVER_FOOTER_MAX_FILES gate) then
         build the whole stats-bearing inventory as ONE LocalRelation —
         no footer job, no listing<->stats join in the plan — while the
         partition-values regex stays the same JVM expression both tiers
         share. Values are bit-identical (same `_footer_stat_rows` loop)."""
         inv = listing
-        limit = _driver_footer_max_files()
+        limit = _DRIVER_FOOTER_MAX_FILES
         if with_stats and local_files is not None and 0 < len(local_files) <= limit:
             types_by_name = {f.name: f.dataType for f in data_schema(table).fields}
             stat_by_path = {
@@ -274,20 +274,15 @@ def data_schema(table: InternalTable) -> T.StructType:
 # ---------------------------------------------------------------------------
 
 
-def _driver_footer_max_files() -> int:
-    """Small-listing gate for the driver-side footer path (0 disables).
-
-    Same auto-gating pattern as the Delta small-log parse
-    (XT_DRIVER_LOG_MAX_BYTES): footer reads are ~KB metadata seeks whose
-    DISTRIBUTED execution costs 3-5 fixed-latency Spark jobs (count +
-    repartition exchange + Python-worker pass) — pure overhead when the
-    listing is a handful of files. The gate is on FILE COUNT, not SF: a
-    100 TB table's 100k-file listing always takes the distributed pass
-    (loadtest pins that path)."""
-    try:
-        return int(os.environ.get("XT_DRIVER_FOOTER_MAX_FILES", "64"))
-    except ValueError:
-        return 64
+# Small-listing gate for the driver-side footer path (0 disables).
+# Same auto-gating pattern as the Delta small-log parse
+# (delta_source._DRIVER_LOG_MAX_BYTES): footer reads are ~KB metadata
+# seeks whose DISTRIBUTED execution costs 3-5 fixed-latency Spark jobs
+# (count + repartition exchange + Python-worker pass) — pure overhead when
+# the listing is a handful of files. The gate is on FILE COUNT, not SF: a
+# 100 TB table's 100k-file listing always takes the distributed pass
+# (loadtest pins that path).
+_DRIVER_FOOTER_MAX_FILES = 64
 
 
 def _footer_stat_rows(paths: list, types_by_name: dict) -> list:
@@ -373,7 +368,7 @@ def footer_stats(
     local_paths: Optional[list] = None,
 ) -> DataFrame:
     """Per-file record counts + per-column min/max/null-count from parquet
-    footers. Small listings (<= XT_DRIVER_FOOTER_MAX_FILES, default 64)
+    footers. Small listings (<= _DRIVER_FOOTER_MAX_FILES)
     compute on the DRIVER into a LocalRelation — footer reads are ~KB
     metadata seeks, and the distributed pass costs several fixed-latency
     Spark jobs that dwarf them (guide §1/§5; the Delta small-log parse
@@ -392,7 +387,7 @@ def footer_stats(
             T.StructField("column_stats", FILE_INVENTORY_SCHEMA["column_stats"].dataType, True),
         ]
     )
-    limit = _driver_footer_max_files()
+    limit = _DRIVER_FOOTER_MAX_FILES
     if local_paths is None and limit > 0:
         # bounded probe: collectLimit reads at most limit+1 rows, so a
         # 100k-file listing pays one cheap short-circuit job, never a

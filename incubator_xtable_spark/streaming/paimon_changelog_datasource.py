@@ -4,7 +4,7 @@ changelog source for Paimon tables (Python Data Source API).
 Fourth member of the readStream family (delta_cdf / iceberg_cdc /
 hudi_cdc). Offsets are Paimon's sequential snapshot ids; planning
 replays snapshot JSON + avro manifests entirely in python (the pure OCF
-codec behind AvroIO reads, BinaryRow partitions via
+codec in model/avro_codec, BinaryRow partitions via
 model/paimon_binary), and each partition reads its changelog/data
 parquet executor-side with pyarrow.
 
@@ -43,7 +43,7 @@ from pyspark.sql.datasource import (
 
 def _src(base_path: str):
     """Read-only PaimonConversionSource (spark=None — metadata methods
-    are pure python since AvroIO reads went through model/avro_codec)."""
+    are pure python: manifests read through model/avro_codec)."""
     from incubator_xtable_spark.sources.paimon_source import PaimonConversionSource
 
     return PaimonConversionSource(None, base_path)

@@ -1423,7 +1423,7 @@ def iceberg_remove_orphan_files(
     bool} with paths relative to the table root."""
     import time as _time
 
-    from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+    from incubator_xtable_spark.model.avro_codec import iter_ocf, read_ocf
     from incubator_xtable_spark.targets.iceberg_target import (
         metadata_dir,
         read_table_metadata,
@@ -1432,7 +1432,6 @@ def iceberg_remove_orphan_files(
     meta = read_table_metadata(base_path)
     if meta is None:
         raise ValueError(f"not an iceberg table: {base_path}")
-    src = IcebergConversionSource(spark, base_path)
     base = base_path.rstrip("/")
     mdir = metadata_dir(base_path)
 
@@ -1450,11 +1449,11 @@ def iceberg_remove_orphan_files(
         referenced.add(ml)
         if not os.path.exists(ml):
             continue
-        for mf in src.avro.read_records(ml):
+        for mf in read_ocf(ml)[0]:
             referenced.add(mf["manifest_path"])
             if not os.path.exists(mf["manifest_path"]):
                 continue
-            for entry in src.avro.read_records(mf["manifest_path"]):
+            for entry in iter_ocf(mf["manifest_path"]):
                 p = entry["data_file"].get("file_path")
                 if p:
                     referenced.add(p)

@@ -49,6 +49,10 @@ HOODIE_DIR = ".hoodie"
 COMMIT_ACTION = "commit"
 REPLACE_ACTION = "replacecommit"
 DELTA_COMMIT_ACTION = "deltacommit"  # MOR log-file writes
+# Commits adding at most this many files build their Parquet-index deltas
+# on the driver from the drained rows; bigger ones take the Spark tier
+# (a file-count gate, never SF; 0 disables the driver tier).
+_DRIVER_INDEX_MAX_FILES = 10_000
 
 
 def instant_now() -> str:
@@ -518,12 +522,10 @@ class HudiConversionTarget:
         # every field they need — buffer the rows (file-count gated, never
         # SF-gated) so the index writes run as driver pyarrow appends instead
         # of two Spark write jobs re-evaluating the adds plan (~1.6 s/sync of
-        # fixed job latency). Overflowing the cap falls back to the Spark
-        # tier; XT_DRIVER_INDEX_MAX_FILES=0 disables the driver tier.
-        index_cap = int(os.environ.get("XT_DRIVER_INDEX_MAX_FILES", "10000"))
-        index_adds: Optional[list[dict]] = (
-            [] if (self.metadata_indexes and not hfile_mode and index_cap > 0) else None
-        )
+        # fixed job latency). Overflowing _DRIVER_INDEX_MAX_FILES falls back
+        # to the Spark tier.
+        driver_index = self.metadata_indexes and not hfile_mode and _DRIVER_INDEX_MAX_FILES > 0
+        index_adds: Optional[list[dict]] = [] if driver_index else None
         if self._adds is not None:
             for row in drain_rows(self._adds, "auto" if self._snapshot_sync else None):
                 if (row["file_format"] or "PARQUET").upper() != "PARQUET":
@@ -556,7 +558,7 @@ class HudiConversionTarget:
                         }
                     )
                 if index_adds is not None:
-                    if len(index_adds) >= index_cap:
+                    if len(index_adds) >= _DRIVER_INDEX_MAX_FILES:
                         index_adds = None  # overflow: Spark tier re-evaluates
                     else:
                         index_adds.append(
@@ -742,10 +744,9 @@ class HudiConversionTarget:
         hoodie.table.recordkey.fields, else the first schema field).
         Driver-side and bounded by the commit's change volume — the
         CDC block posture of the log codec. Timestamps/dates normalize
-        to their Avro logical-type representation; decimal columns
-        refuse loudly (the Avro-JSON seam cannot carry them)."""
+        to their Avro logical-type representation; decimals encode as
+        the Avro decimal logical type (model/avro_codec)."""
         import datetime as _dt
-        import decimal as _decimal
 
         from incubator_xtable_spark.sources.hudi_log import write_cdc_log_file
 
@@ -755,15 +756,6 @@ class HudiConversionTarget:
 
         props = read_properties(self.base_path)
         key = (props.get("hoodie.table.recordkey.fields") or cols[0]).split(",")[0]
-
-        bad = [
-            f.name for f in schema.fields if isinstance(f.dataType, T.DecimalType)
-        ]
-        if bad:
-            raise ValueError(
-                f"hudi change_feed cannot carry decimal columns {bad}: the "
-                "Avro-JSON record seam has no decimal byte convention"
-            )
 
         def _norm(v, dt):
             if v is None:
@@ -775,8 +767,6 @@ class HudiConversionTarget:
                 )
             if isinstance(dt, T.DateType):
                 return (v - _dt.date(1970, 1, 1)).days
-            if isinstance(v, _decimal.Decimal):
-                raise ValueError("decimal value in hudi CDC row")
             return v
 
         types = {f.name: f.dataType for f in schema.fields}
@@ -807,7 +797,6 @@ class HudiConversionTarget:
             return
         rel = f".cdc-{instant}.log.1_0-0-0.cdc"
         size = write_cdc_log_file(
-            self.spark,
             os.path.join(self.base_path, rel),
             instant,
             self._avro_schema_with_ids(),

@@ -4,11 +4,10 @@ v2 table (HadoopTables layout) — `metadata/vN.metadata.json` +
 (`*-m0.avro`) — following the PUBLIC Iceberg table spec
 (iceberg.apache.org/spec: field-ids, sequence numbers, snapshot chain).
 
-No Iceberg or spark-avro jars exist in this environment, so Avro files
-are written through the JVM's core Avro classes (org.apache.avro.*, which
-ARE on Spark's classpath) via py4j — Generic records, driver-side. The
-manifest volume is metadata-sized; on a real cluster the bulk path would
-be spark-avro executors, the protocol stays identical.
+Manifests and manifest lists are Avro object container files written
+and read driver-side by the pure-python codec (`model/avro_codec`
+write_ocf / read_ocf) — no JVM call per record. The manifest volume is
+metadata-sized; MANIFEST_CHUNK bounds each file.
 
 Reference parity (what, not how):
 - target txn + snapshot commit     iceberg/IcebergConversionTarget.java:152-376
@@ -41,6 +40,7 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from incubator_xtable_spark.model.avro_codec import iter_ocf, read_ocf, write_ocf
 from incubator_xtable_spark.model.core import InternalTable, TableChange
 from incubator_xtable_spark.model.schema_meta import FIELD_ID, assign_field_ids
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
@@ -402,123 +402,6 @@ def iceberg_fields_to_schema(fields: list[dict]) -> T.StructType:
         return T.StructField(f["name"], dt, not f.get("required", False), meta)
 
     return T.StructType([conv_field(f) for f in fields])
-
-
-# ---------------------------------------------------------------------------
-# Avro helpers (py4j into org.apache.avro on Spark's classpath)
-# ---------------------------------------------------------------------------
-
-
-class AvroIO:
-    def __init__(self, spark: Optional[SparkSession]) -> None:
-        # reads are pure-python (read_records -> model/avro_codec); only
-        # WRITES need the JVM encoder. spark=None builds a read-only
-        # AvroIO usable in data-source worker processes.
-        self.jvm = spark._jvm if spark is not None else None
-
-    def parse_schema(self, schema_json: str):
-        return self.jvm.org.apache.avro.Schema.Parser().parse(schema_json)
-
-    def write_records(self, path: str, schema_json: str, records: list[dict], metadata: dict[str, str]) -> int:
-        """Records are materialized JVM-side from Avro-JSON via JsonDecoder:
-        py4j auto-unboxes java.lang.Long back to Python int at the gateway,
-        so GenericData.Record.put can never receive a proper Long for
-        ["null","long"] unions — the JSON decoder path sidesteps py4j
-        primitive conversion entirely (one gateway call per record)."""
-        sch = self.parse_schema(schema_json)
-        schema_dict = json.loads(schema_json)
-        writer = self.jvm.org.apache.avro.generic.GenericDatumWriter(sch)
-        dfw = self.jvm.org.apache.avro.file.DataFileWriter(writer)
-        for k, v in metadata.items():
-            dfw.setMeta(k, v)
-        f = self.jvm.java.io.File(path)
-        dfw.create(sch, f)
-        reader = self.jvm.org.apache.avro.generic.GenericDatumReader(sch)
-        factory = self.jvm.org.apache.avro.io.DecoderFactory.get()
-        for rec in records:
-            encoded = json.dumps(_avro_json_encode(rec, schema_dict))
-            decoder = factory.jsonDecoder(sch, encoded)
-            dfw.append(reader.read(None, decoder))
-        dfw.close()
-        return int(f.length())
-
-    def read_records(self, path: str) -> list[dict]:
-        """r6: reads ride the pure-python OCF decoder (model/avro_codec)
-        — typed values (real bytes, resolved unions) with no py4j
-        round-trips per record; the previous JVM GenericRecord.toString
-        route surfaced bytes as latin-1 codepoint strings (consumers
-        keep their defensive re-encode for old fixtures)."""
-        from incubator_xtable_spark.model.avro_codec import read_ocf
-
-        return read_ocf(path)[0]
-
-
-_UNION_KEYS = {"boolean", "int", "long", "float", "double", "bytes", "string", "array"}
-
-
-def _collect_named_defs(schema: Any, defs: dict) -> None:
-    """Register record definitions by (short and full) name so later
-    named-type references ("SimpleStats") resolve during encoding."""
-    if isinstance(schema, list):
-        for b in schema:
-            _collect_named_defs(b, defs)
-    elif isinstance(schema, dict):
-        if schema.get("type") == "record":
-            defs[schema["name"]] = schema
-            if schema.get("namespace"):
-                defs[schema["namespace"] + "." + schema["name"]] = schema
-            for f in schema["fields"]:
-                _collect_named_defs(f["type"], defs)
-        elif schema.get("type") == "array":
-            _collect_named_defs(schema["items"], defs)
-        elif schema.get("type") == "map":
-            _collect_named_defs(schema["values"], defs)
-
-
-def _avro_json_encode(value: Any, schema: Any, defs: Optional[dict] = None) -> Any:
-    """Python dict -> Avro-JSON shape for JsonDecoder (union values wrapped
-    as {"long": v} / {"string": v}; nested records recursed; named-type
-    references resolved via defs)."""
-    if defs is None:
-        defs = {}
-        _collect_named_defs(schema, defs)
-    if isinstance(schema, str) and schema in defs:
-        schema = defs[schema]
-    if isinstance(schema, list):  # union
-        if value is None:
-            return None
-        branch = next(b for b in schema if b != "null")
-        branch_name = branch if isinstance(branch, str) else branch.get("type", "record")
-        if isinstance(branch, dict) and branch.get("type") == "record":
-            branch_name = branch["name"]
-        return {branch_name: _avro_json_encode(value, branch, defs)}
-    if isinstance(schema, dict) and schema.get("type") == "record":
-        return {
-            f["name"]: _avro_json_encode(value.get(f["name"]) if value else None, f["type"], defs)
-            for f in schema["fields"]
-        }
-    if isinstance(schema, dict) and schema.get("type") == "array":
-        return [_avro_json_encode(v, schema["items"], defs) for v in (value or [])]
-    if schema == "bytes":
-        # Avro-JSON encodes bytes as an ISO-8859-1 mapped string
-        return value.decode("latin-1") if isinstance(value, (bytes, bytearray)) else value
-    if schema == "long" or schema == "int":
-        return int(value)
-    if schema in ("float", "double"):
-        return float(value)
-    if schema == "boolean":
-        return bool(value)
-    return value
-
-
-def _unwrap_unions(value: Any) -> Any:
-    if isinstance(value, dict):
-        if len(value) == 1 and next(iter(value)) in _UNION_KEYS:
-            return _unwrap_unions(next(iter(value.values())))
-        return {k: _unwrap_unions(v) for k, v in value.items()}
-    if isinstance(value, list):
-        return [_unwrap_unions(v) for v in value]
-    return value
 
 
 # ---------------------------------------------------------------------------
@@ -1071,7 +954,6 @@ class IcebergConversionTarget:
         # (deletion-vector-v1 blobs, the Delta-compatible frame) instead
         # of v2 position-delete parquets
         self.format_version = format_version
-        self.avro = AvroIO(spark)
         self._reset()
 
     # Iceberg v2 can express row-level deletes natively (position-delete
@@ -1624,13 +1506,13 @@ class IcebergConversionTarget:
         if snap is None:
             return []
         entries: list[dict] = []
-        for mf in self.avro.read_records(snap["manifest-list"]):
+        for mf in read_ocf(snap["manifest-list"])[0]:
             # v3 row lineage: materialize manifest-inherited row ids while
             # carrying entries forward — a foreign writer's null per-file
             # first_row_id must resolve to its INHERITED id here, or the
             # next commit would reassign (and silently change) them
             running = mf.get("first_row_id")
-            for entry in self.avro.read_records(mf["manifest_path"]):
+            for entry in iter_ocf(mf["manifest_path"]):
                 if entry["status"] != 2:  # not DELETED
                     df = entry.get("data_file") or {}
                     if (
@@ -1644,7 +1526,7 @@ class IcebergConversionTarget:
         return entries
 
     # entries per manifest file: bounds each driver-side avro write (and
-    # the py4j buffer behind it) — a 10M-file snapshot becomes 100
+    # the encode buffer behind it) — a 10M-file snapshot becomes 100
     # manifests in one manifest list, the spec's own fan-out, instead of
     # one giant file
     MANIFEST_CHUNK = 100_000
@@ -1682,11 +1564,11 @@ class IcebergConversionTarget:
     ) -> tuple[str, int]:
         path = os.path.join(metadata_dir(self.base_path), f"{uuid.uuid4().hex}-m0.avro")
         schema_json = manifest_entry_schema(self._typed_partition_cols(), self.format_version)
-        length = self.avro.write_records(
+        length = write_ocf(
             path,
             schema_json,
             entries,
-            {
+            extra_meta={
                 "schema": json.dumps(self._iceberg_schema_json()),
                 "partition-spec": json.dumps(self._partition_spec_json()["fields"]),
                 "partition-spec-id": str(getattr(self, "_spec_id", 0)),
@@ -1767,11 +1649,11 @@ class IcebergConversionTarget:
         path = os.path.join(
             metadata_dir(self.base_path), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
         )
-        self.avro.write_records(
+        write_ocf(
             path,
             manifest_list_schema(self.format_version),
             manifest_records,
-            {"format-version": str(self.format_version)},
+            extra_meta={"format-version": str(self.format_version)},
         )
         return path
 

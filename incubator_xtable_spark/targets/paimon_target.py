@@ -50,6 +50,7 @@ from typing import Any, Iterator, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from incubator_xtable_spark.model.avro_codec import write_ocf
 from incubator_xtable_spark.model.core import InternalTable, TableChange
 from incubator_xtable_spark.model.paimon_binary import (
     PaimonFieldType,
@@ -58,7 +59,6 @@ from incubator_xtable_spark.model.paimon_binary import (
 )
 from incubator_xtable_spark.model.stat_codec import decode_stat
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
-from incubator_xtable_spark.targets.iceberg_target import AvroIO
 
 XTABLE_OPTION_KEY = "xtable.metadata"
 EPOCH_MS_BASE = 1_700_000_000_000
@@ -171,7 +171,6 @@ class PaimonConversionTarget:
         self.spark = spark
         self.base_path = base_path.rstrip("/")
         self.table_name = table_name
-        self.avro = AvroIO(spark)
         self._reset()
 
     def _reset(self) -> None:
@@ -466,11 +465,10 @@ class PaimonConversionTarget:
                 }
             )
         manifest_name = f"index-manifest-{uuid.uuid4().hex}-0"
-        self.avro.write_records(
+        write_ocf(
             os.path.join(self._dir("manifest"), manifest_name),
             INDEX_MANIFEST_AVRO_SCHEMA,
             entries,
-            {},
         )
         return manifest_name
 
@@ -487,10 +485,7 @@ class PaimonConversionTarget:
         entries = src._merged_live_entries(snap)
         rows = []
         for e in entries:
-            blob = e["_PARTITION"]
-            # avro-JSON surfaces bytes as latin-1 codepoint strings
-            blob = blob.encode("latin-1") if isinstance(blob, str) else bytes(blob)
-            rows.append((src._entry_abs_path(e, sch), blob))
+            rows.append((src._entry_abs_path(e, sch), e["_PARTITION"]))
         if not rows:
             return None
         return self.spark.createDataFrame(rows, "path STRING, part_blob BINARY")
@@ -646,7 +641,7 @@ class PaimonConversionTarget:
 
         name = f"manifest-{uuid.uuid4().hex}-0.avro"
         path = os.path.join(self._dir("manifest"), name)
-        size = self.avro.write_records(path, MANIFEST_AVRO_SCHEMA, entries, {})
+        size = write_ocf(path, MANIFEST_AVRO_SCHEMA, entries)
         return {
             "_VERSION": 2,
             "_FILE_NAME": name,
@@ -667,9 +662,7 @@ class PaimonConversionTarget:
         )
 
         name = f"manifest-list-{uuid.uuid4().hex}-{suffix}.avro"
-        self.avro.write_records(
-            os.path.join(self._dir("manifest"), name), MANIFEST_LIST_AVRO_SCHEMA, metas, {}
-        )
+        write_ocf(os.path.join(self._dir("manifest"), name), MANIFEST_LIST_AVRO_SCHEMA, metas)
         return name
 
     def _ensure_schema_file(self) -> int:

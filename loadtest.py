@@ -199,7 +199,6 @@ def scenario_full(
             "status": status.value,
             "live_files_committed": live,
             "seconds": round(wall, 2),
-            "drain_mode": os.environ.get("XT_STREAM_INVENTORY") or "auto-snapshot/collect-diff",
             "rss_mb_before": rss_before,
             "rss_mb_after": rss_mb(),
         }
@@ -243,7 +242,6 @@ def scenario_incremental(
             "mode": res[fmt].mode.value,
             "seconds": round(wall, 2),
             "seconds_per_commit": round(wall / n_commits, 3),
-            "drain_mode": os.environ.get("XT_STREAM_INVENTORY") or "auto-snapshot/collect-diff",
             "rss_mb_curve": rss_curve,
         }
     finally:
@@ -765,15 +763,7 @@ def main() -> int:
         default=64,
         help="media-decode: total MB of mixed PNG/JPEG/GIF/WAV blobs",
     )
-    ap.add_argument(
-        "--stream",
-        action="store_true",
-        help="drain inventories via toLocalIterator (flat driver RSS; "
-        "see model.core.drain_rows)",
-    )
     args = ap.parse_args()
-    if args.stream:
-        os.environ["XT_STREAM_INVENTORY"] = "1"
 
     spark = get_spark("xtable_loadtest")
     spark.sparkContext.setLogLevel("ERROR")

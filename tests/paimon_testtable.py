@@ -25,6 +25,7 @@ from typing import Any, Optional, Sequence
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from incubator_xtable_spark.model.avro_codec import write_ocf
 from incubator_xtable_spark.model.paimon_binary import (
     PaimonFieldType,
     encode_binary_row,
@@ -35,7 +36,6 @@ from incubator_xtable_spark.sources.paimon_source import (
     MANIFEST_LIST_AVRO_SCHEMA,
     parse_paimon_type,
 )
-from incubator_xtable_spark.targets.iceberg_target import AvroIO
 
 EPOCH_MS = 1_700_000_000_000  # deterministic commit clock base
 
@@ -95,7 +95,6 @@ class PaimonTestTable:
         self.options = dict(options or {})
         # None => stats for all columns (valueStatsCols absent in manifests)
         self.stats_cols = list(stats_cols) if stats_cols is not None else None
-        self.avro = AvroIO(spark)
         self._codecs = {n: parse_paimon_type(t)[1] for n, t in self.fields}
         self._schema_id = 0
         self._snapshot_id = 0
@@ -324,7 +323,7 @@ class PaimonTestTable:
     def _write_manifest(self, entries: list[dict]) -> dict:
         name = f"manifest-{uuid.uuid4().hex}-0.avro"
         path = os.path.join(self.base, "manifest", name)
-        size = self.avro.write_records(path, MANIFEST_AVRO_SCHEMA, entries, {})
+        size = write_ocf(path, MANIFEST_AVRO_SCHEMA, entries)
         return {
             "_VERSION": 2,
             "_FILE_NAME": name,
@@ -342,7 +341,7 @@ class PaimonTestTable:
     def _write_manifest_list(self, metas: list[dict], suffix: int) -> str:
         name = f"manifest-list-{uuid.uuid4().hex}-{suffix}.avro"
         path = os.path.join(self.base, "manifest", name)
-        self.avro.write_records(path, MANIFEST_LIST_AVRO_SCHEMA, metas, {})
+        write_ocf(path, MANIFEST_LIST_AVRO_SCHEMA, metas)
         return name
 
     def commit(
@@ -453,8 +452,8 @@ class PaimonTestTable:
         )
 
         name = f"index-manifest-{uuid.uuid4().hex}-0"
-        self.avro.write_records(
-            os.path.join(self.base, "manifest", name), INDEX_MANIFEST_AVRO_SCHEMA, entries, {}
+        write_ocf(
+            os.path.join(self.base, "manifest", name), INDEX_MANIFEST_AVRO_SCHEMA, entries
         )
         return name
 

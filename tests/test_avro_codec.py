@@ -1,5 +1,5 @@
 """Pure-python Avro codec (model/avro_codec): differential against the
-JVM's official Avro encoder (the engine's write path), logical-type
+JVM's official Avro library (the independent reference), logical-type
 typing, and OCF container parsing incl. the deflate codec."""
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from incubator_xtable_spark.model.avro_codec import (
     read_ocf,
 )
 
-from .hudi_logtable import avro_binary
+from .hudi_logtable import avro_binary, jvm_write_ocf
 
 
 def _zz_encode(n: int) -> bytes:
@@ -53,8 +53,7 @@ def test_string_roundtrip(s):
 
 
 def test_differential_vs_jvm_encoder(spark):
-    """A record produced by the JVM Avro encoder (the exact write path
-    the engine uses) decodes value-identical."""
+    """A record produced by the JVM Avro encoder decodes value-identical."""
     schema = json.dumps(
         {
             "type": "record",
@@ -91,7 +90,7 @@ def test_differential_vs_jvm_encoder(spark):
         "f": 1.5,
         "d": -2.25,
         "s": "ünïcode",
-        "b": b"\x00\x01\xfe\xff".decode("latin-1"),
+        "b": b"\x00\x01\xfe\xff",
         "arr": [1, -2, 3],
         "m": {"k1": "v1", "k2": "v2"},
         "e": "B",
@@ -138,7 +137,7 @@ def test_logical_types_decode_typed(spark):
     )
     unscaled = (-12345).to_bytes(3, "big", signed=True)
     rec = {
-        "amt": unscaled.decode("latin-1"),
+        "amt": unscaled,
         "day": 19876,
         "ts": 1_700_000_000_123_456,
     }
@@ -151,8 +150,6 @@ def test_logical_types_decode_typed(spark):
 
 
 def test_ocf_roundtrip_with_jvm_writer(spark, tmp_path):
-    from incubator_xtable_spark.targets.iceberg_target import AvroIO
-
     schema = json.dumps(
         {
             "type": "record",
@@ -164,9 +161,7 @@ def test_ocf_roundtrip_with_jvm_writer(spark, tmp_path):
         }
     )
     p = str(tmp_path / "t.avro")
-    AvroIO(spark).write_records(
-        p, schema, [{"a": i, "b": f"s{i}"} for i in range(1000)], {"k": "v"}
-    )
+    jvm_write_ocf(spark, p, schema, [{"a": i, "b": f"s{i}"} for i in range(1000)], {"k": "v"})
     recs, meta = read_ocf(p)
     assert len(recs) == 1000
     assert recs[0] == {"a": 0, "b": "s0"} and recs[999] == {"a": 999, "b": "s999"}
@@ -198,13 +193,11 @@ def test_ocf_deflate_codec(tmp_path):
 
 
 def test_ocf_sync_marker_mismatch_detected(spark, tmp_path):
-    from incubator_xtable_spark.targets.iceberg_target import AvroIO
-
     schema = json.dumps(
         {"type": "record", "name": "r", "fields": [{"name": "a", "type": "long"}]}
     )
     p = str(tmp_path / "t.avro")
-    AvroIO(spark).write_records(p, schema, [{"a": 1}], {})
+    jvm_write_ocf(spark, p, schema, [{"a": 1}], {})
     raw = bytearray(open(p, "rb").read())
     raw[-1] ^= 0xFF  # flip a sync byte
     open(p, "wb").write(bytes(raw))
@@ -375,7 +368,10 @@ def test_write_ocf_empty_and_iter_stream(tmp_path):
     p = str(tmp_path / "empty.avro")
     write_ocf(p, schema, [])
     recs, meta = read_ocf(p)
-    assert recs == [] and meta["avro.codec"] == b"null"
+    # the JVM writer's header: no avro.codec key for the null codec, and
+    # the compact schema JSON its Schema.toString() prints
+    assert recs == [] and "avro.codec" not in meta
+    assert meta["avro.schema"] == json.dumps(schema, separators=(",", ":")).encode()
     write_ocf(p, schema, [{"v": i} for i in range(10)], codec="deflate")
     assert [r["v"] for r in iter_ocf(p)] == list(range(10))
 
@@ -444,3 +440,271 @@ def test_avro_scan_typed_columns(spark, tmp_path):
     assert rows[2]["nested"]["b"] == "n2"
     assert all(r["missing"] is None for r in rows)
     assert all(r["_sp"] == p for r in rows)
+
+
+# -- every Avro schema the engine writes, read back by the JVM ----------------
+
+_ENGINE_CASES = [
+    "iceberg_manifest_v1",
+    "iceberg_manifest_list_v1",
+    "iceberg_manifest_v2",
+    "iceberg_manifest_list_v2",
+    "iceberg_manifest_v3",
+    "iceberg_manifest_list_v3",
+    "paimon_manifest",
+    "paimon_manifest_list",
+    "paimon_index_manifest",
+    "hudi_cdc_record",
+]
+
+
+@pytest.fixture(scope="module")
+def engine_avro_writes(spark, tmp_path_factory):
+    """Small real syncs with every Avro write of the engine captured as
+    {case: [(schema_json, records, path, extra_meta) | (schema, record, blob)]}.
+
+    - partitioned parquet (identity partition, footer stats) -> Iceberg v2,
+      Iceberg v3 and Paimon: partition structs and lower/upper bounds;
+    - Delta with a deletion vector -> Iceberg v3 and Paimon: the v3 DV
+      reference fields and the Paimon index manifest;
+    - parquet -> Hudi with change_feed: a CDC block of typed rows.
+    The engine writes no v1 manifests (targets are v2/v3), so the v1
+    cases re-encode the v2 sync's records under the v1 schema functions.
+    """
+    import copy
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from incubator_xtable_spark.model import avro_codec
+    from incubator_xtable_spark.model.core import (
+        InternalPartitionField,
+        SyncStatusCode,
+        TableFormat,
+    )
+    from incubator_xtable_spark.sources.delta_source import DeltaConversionSource
+    from incubator_xtable_spark.sources.paimon_source import (
+        INDEX_MANIFEST_AVRO_SCHEMA,
+        MANIFEST_AVRO_SCHEMA,
+    )
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+    from incubator_xtable_spark.sync.controller import ConversionController
+    from incubator_xtable_spark.targets import iceberg_target, paimon_target
+    from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
+    from incubator_xtable_spark.targets.iceberg_target import (
+        IcebergConversionTarget,
+        manifest_entry_schema,
+        manifest_list_schema,
+    )
+    from incubator_xtable_spark.targets.paimon_target import PaimonConversionTarget
+
+    from .test_row_delete_conversion import _base_table, _dv_commit
+
+    tmp = tmp_path_factory.mktemp("engine_avro")
+    calls: list = []
+
+    def capture(write):
+        def wrapper(path, schema_json, records, **kw):
+            calls.append((schema_json, copy.deepcopy(records), path, kw.get("extra_meta") or {}))
+            return write(path, schema_json, records, **kw)
+
+        return wrapper
+
+    def encode_capture(schema, record):
+        blob = encode_binary_record(schema, record)
+        calls.append((schema, copy.deepcopy(record), blob))
+        return blob
+
+    encode_binary_record = avro_codec.encode_binary_record
+
+    def sync(source, targets):
+        res = ConversionController().sync(source, targets)
+        for fmt, r in res.items():
+            assert r.status == SyncStatusCode.SUCCESS, (fmt, r.error)
+
+    def iceberg_kind(schema_json):
+        return "manifest" if json.loads(schema_json)["name"] == "manifest_entry" else "manifest_list"
+
+    def partitioned_parquet(d):
+        for part, ids in (("a", range(0, 5)), ("b", range(5, 9))):
+            os.makedirs(os.path.join(d, f"p={part}"))
+            pq.write_table(
+                pa.table(
+                    {
+                        "id": pa.array(list(ids), pa.int64()),
+                        "name": [f"n{i}" for i in ids],
+                        "amount": [i * 1.5 for i in ids],
+                    }
+                ),
+                os.path.join(d, f"p={part}", "f.parquet"),
+            )
+        return ParquetConversionSource(
+            spark, d, name="pt", partition_fields=[InternalPartitionField("p")]
+        )
+
+    out: dict[str, list] = {c: [] for c in _ENGINE_CASES}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(iceberg_target, "write_ocf", capture(iceberg_target.write_ocf))
+        mp.setattr(paimon_target, "write_ocf", capture(paimon_target.write_ocf))
+        mp.setattr(avro_codec, "encode_binary_record", encode_capture)
+
+        for fv in (2, 3):
+            d = str(tmp / f"pt_v{fv}")
+            targets = {
+                TableFormat.ICEBERG: IcebergConversionTarget(
+                    spark, d, table_name="pt", format_version=fv
+                )
+            }
+            if fv == 3:
+                targets[TableFormat.PAIMON] = PaimonConversionTarget(
+                    spark, str(tmp / "pt_paimon"), table_name="pt"
+                )
+            calls.clear()
+            sync(partitioned_parquet(d), targets)
+            for c in calls:
+                if c[2].startswith(d):
+                    out[f"iceberg_{iceberg_kind(c[0])}_v{fv}"].append(c)
+                else:
+                    kind = "manifest" if c[0] is MANIFEST_AVRO_SCHEMA else "manifest_list"
+                    out[f"paimon_{kind}"].append(c)
+
+        dv = tmp_path_factory.mktemp("engine_avro_dv")
+        base, s1, _ = _base_table(dv)
+        _dv_commit(base, 1, s1, [2, 3, 7])
+        calls.clear()
+        sync(
+            DeltaConversionSource(spark, base, expose_row_deletes=True),
+            {
+                TableFormat.ICEBERG: IcebergConversionTarget(
+                    spark, base, table_name="dvt", format_version=3
+                ),
+                TableFormat.PAIMON: PaimonConversionTarget(
+                    spark, str(dv / "paimon"), table_name="dvt"
+                ),
+            },
+        )
+        for c in calls:
+            if c[2].startswith(base):
+                out[f"iceberg_{iceberg_kind(c[0])}_v3"].append(c)
+            elif c[0] is INDEX_MANIFEST_AVRO_SCHEMA:
+                out["paimon_index_manifest"].append(c)
+
+        d = str(tmp / "cdc")
+        spark.range(0, 3).select(
+            F.col("id").cast("long"),
+            F.lit("x").alias("name"),
+            F.to_timestamp(F.lit("2024-03-01 10:00:00")).alias("ts"),
+            F.to_date(F.lit("2024-03-01")).alias("day"),
+            F.lit(decimal.Decimal("1.50")).cast("decimal(10,2)").alias("amt"),
+        ).coalesce(1).write.parquet(d)
+        src = ParquetConversionSource(spark, d, name="cdc")
+        target = HudiConversionTarget(spark, d, table_name="cdc", change_feed=True)
+        sync(src, {TableFormat.HUDI: target})
+        spark.range(3, 4).select(
+            F.col("id").cast("long"),
+            F.lit("y").alias("name"),
+            F.to_timestamp(F.lit("2024-03-02 12:30:45.123456")).alias("ts"),
+            F.to_date(F.lit("2024-03-02")).alias("day"),
+            F.lit(decimal.Decimal("-1.28")).cast("decimal(10,2)").alias("amt"),
+        ).coalesce(1).write.mode("append").parquet(d)
+        table = src.get_current_table()
+        ts = datetime.datetime(2024, 3, 2, 12, 30, 45, 123456)
+        changes = spark.createDataFrame(
+            [
+                (3, "y", ts, datetime.date(2024, 3, 2), decimal.Decimal("-1.28"), "insert"),
+                (1, "x", ts, None, decimal.Decimal("1.50"), "delete"),
+                (2, "x", ts, datetime.date(2024, 3, 1), decimal.Decimal("1.50"), "update_preimage"),
+                (2, None, None, datetime.date(2024, 3, 2), None, "update_postimage"),
+            ],
+            T.StructType(
+                list(table.read_schema.fields) + [T.StructField("_change_type", T.StringType())]
+            ),
+        )
+        calls.clear()
+        target.begin_sync(table)
+        target.sync_schema(table.read_schema)
+        target.sync_partition_spec([])
+        target.sync_files_for_snapshot(src.get_current_snapshot().files)
+        target.sync_row_changes(changes)
+        out["hudi_cdc_table"] = (d, target.complete_sync())
+        out["hudi_cdc_record"] = [
+            c for c in calls if isinstance(c[0], dict) and c[0]["name"] == "HoodieCDCRecord"
+        ]
+
+    for case, schema_v1 in (
+        ("iceberg_manifest", manifest_entry_schema(["p"], 1)),
+        ("iceberg_manifest_list", manifest_list_schema(1)),
+    ):
+        for i, (_schema, records, _path, meta) in enumerate(out[f"{case}_v2"]):
+            p = str(tmp / f"{case}_v1-{i}.avro")
+            meta = dict(meta, **{"format-version": "1"})
+            avro_codec.write_ocf(p, schema_v1, records, extra_meta=meta)
+            out[f"{case}_v1"].append((schema_v1, records, p, meta))
+    return out
+
+
+@pytest.mark.parametrize("case", _ENGINE_CASES)
+def test_engine_avro_writes_jvm_differential(spark, engine_avro_writes, case):
+    """Every Avro schema the engine writes: the records handed to the
+    engine's writer equal what the JVM's DataFileReader /
+    GenericDatumReader reads back, compared JVM-side against the same
+    records parsed by the JVM's own JsonDecoder; Iceberg file metadata
+    keys read back unchanged."""
+    from .hudi_logtable import jvm_record
+
+    jvm = spark._jvm
+    writes = engine_avro_writes[case]
+    assert writes, f"no {case} write captured"
+    n_records = 0
+    for w in writes:
+        if case == "hudi_cdc_record":
+            schema, record, blob = w
+            sch, ref = jvm_record(spark, json.dumps(schema), record)
+            dec = jvm.org.apache.avro.io.DecoderFactory.get().binaryDecoder(bytearray(blob), None)
+            got = jvm.org.apache.avro.generic.GenericDatumReader(sch).read(None, dec)
+            assert got.equals(ref), (str(got), str(ref))
+            n_records += 1
+            continue
+        schema_json, records, path, meta = w
+        dfr = jvm.org.apache.avro.file.DataFileReader(
+            jvm.java.io.File(path), jvm.org.apache.avro.generic.GenericDatumReader()
+        )
+        got = []
+        while dfr.hasNext():
+            got.append(dfr.next())
+        file_meta = {k: dfr.getMetaString(k) for k in meta}
+        dfr.close()
+        assert file_meta == {k: str(v) for k, v in meta.items()}
+        assert len(got) == len(records)
+        for g, r in zip(got, records):
+            _, ref = jvm_record(spark, schema_json, r)
+            assert g.equals(ref), (str(g), str(ref))
+        n_records += len(records)
+        if case.startswith("iceberg_manifest_v") and records:
+            dfile = records[0]["data_file"]
+            if dfile["content"] == 0:
+                assert dfile["lower_bounds"] and dfile["upper_bounds"]
+    assert n_records
+    if case.startswith("iceberg_manifest_v"):
+        entries = [r for w in writes for r in w[1]]
+        assert any(r["data_file"]["partition"] for r in entries)
+        if case.endswith("v3"):
+            assert any(r["data_file"].get("referenced_data_file") for r in entries)
+    if case == "hudi_cdc_record":
+        from incubator_xtable_spark.sources.hudi_source import read_hudi_cdc
+
+        assert {w[1]["op"] for w in writes} == {"i", "d", "u"}
+        # decimals ride the Avro decimal logical type and read back typed
+        d, instant = engine_avro_writes["hudi_cdc_table"]
+        got = {
+            (r["id"], r["_change_type"]): r["amt"]
+            for r in read_hudi_cdc(spark, d, instant).collect()
+        }
+        assert got == {
+            (3, "insert"): decimal.Decimal("-1.28"),
+            (1, "delete"): decimal.Decimal("1.50"),
+            (2, "update_preimage"): decimal.Decimal("1.50"),
+            (2, "update_postimage"): None,
+        }

@@ -134,12 +134,8 @@ def test_drain_rows_local_hint_collects_identically(spark):
     df._xt_local_hint = True
     tagged = sorted(r["physical_path"] for r in drain_rows(df, "auto"))
     assert plain == tagged
-    # the env override still forces the streaming iterator
-    os.environ["XT_STREAM_INVENTORY"] = "1"
-    try:
-        streamed = sorted(r["physical_path"] for r in drain_rows(df, "auto"))
-    finally:
-        del os.environ["XT_STREAM_INVENTORY"]
+    # the explicit streaming drain yields the same rows
+    streamed = sorted(r["physical_path"] for r in drain_rows(df, True))
     assert streamed == plain
 
 
@@ -171,6 +167,7 @@ def test_hudi_index_delta_driver_tier_equals_spark_tier(spark, tmp_path, monkeyp
     the SAME physical table twice (copied files, so part names match)
     and compare both merged index views row-for-row."""
     import shutil
+    import time
 
     from pyspark.sql import functions as F
 
@@ -204,9 +201,14 @@ def test_hudi_index_delta_driver_tier_equals_spark_tier(spark, tmp_path, monkeyp
         for f in os.listdir(d):
             if f.endswith(".parquet"):
                 os.remove(os.path.join(d, f))
+        # one shared mtime: the parquet source makes one commit per mtime,
+        # so copies straddling a millisecond would split the rewrite into
+        # a different number of commits in each build
+        now = time.time()
         for f in os.listdir(stage2):
             if f.endswith(".parquet"):
                 shutil.copy(os.path.join(stage2, f), os.path.join(d, f))
+                os.utime(os.path.join(d, f), (now, now))
         sync()
 
     def norm(rows):
@@ -217,10 +219,12 @@ def test_hudi_index_delta_driver_tier_equals_spark_tier(spark, tmp_path, monkeyp
             for r in rows
         )
 
+    import incubator_xtable_spark.targets.hudi_target as HT
+
     build(str(tmp_path / "driver_tier"))
-    monkeypatch.setenv("XT_DRIVER_INDEX_MAX_FILES", "0")
+    monkeypatch.setattr(HT, "_DRIVER_INDEX_MAX_FILES", 0)
     build(str(tmp_path / "spark_tier"))
-    monkeypatch.delenv("XT_DRIVER_INDEX_MAX_FILES")
+    monkeypatch.undo()
 
     for reader in (read_col_stats_index, read_files_index):
         fast = norm(reader(spark, str(tmp_path / "driver_tier")).collect())

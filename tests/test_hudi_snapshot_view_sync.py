@@ -516,7 +516,7 @@ def test_avro_block_bytes_round_trip(spark, mor_base):
                 "20240101000002000",
                 schema,
                 [
-                    {"id": 1, "blob": payload.decode("latin-1")},
+                    {"id": 1, "blob": payload},
                     {"id": 2, "blob": None},
                 ],
             )

@@ -15,6 +15,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
 from incubator_xtable_spark.sources.iceberg_source import (
@@ -25,7 +26,6 @@ from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 from incubator_xtable_spark.targets.iceberg_target import (
     MANIFEST_LIST_SCHEMA,
-    AvroIO,
     manifest_entry_schema,
     metadata_dir,
     read_table_metadata,
@@ -66,7 +66,6 @@ def deleted_table(spark, tmp_path):
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
 
     meta = read_table_metadata(d)
-    avro = AvroIO(spark)
     src = IcebergConversionSource(spark, d)
     entries = src._live_entries(meta, meta["current-snapshot-id"])
     victim = sorted(e["data_file"]["file_path"] for e in entries)[0]
@@ -77,7 +76,7 @@ def deleted_table(spark, tmp_path):
 
     # delete manifest (content=1 entries) at sequence 2
     del_manifest = os.path.join(metadata_dir(d), "del-m0.avro")
-    dlen = avro.write_records(
+    dlen = write_ocf(
         del_manifest,
         manifest_entry_schema([]),
         [
@@ -96,14 +95,14 @@ def deleted_table(spark, tmp_path):
                 },
             }
         ],
-        {"format-version": "2", "content": "deletes"},
+        extra_meta={"format-version": "2", "content": "deletes"},
     )
 
     # new manifest list = old manifests + the delete manifest
     snap1 = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-    old_manifests = avro.read_records(snap1["manifest-list"])
+    old_manifests = read_ocf(snap1["manifest-list"])[0]
     new_list = os.path.join(metadata_dir(d), "snap-999-del.avro")
-    avro.write_records(
+    write_ocf(
         new_list,
         MANIFEST_LIST_SCHEMA,
         old_manifests
@@ -124,7 +123,7 @@ def deleted_table(spark, tmp_path):
                 "deleted_rows_count": 3,
             }
         ],
-        {"format-version": "2"},
+        extra_meta={"format-version": "2"},
     )
 
     # snapshot 2 in a new metadata version
@@ -207,24 +206,23 @@ def test_sequence_rule_gates_application(spark, deleted_table):
     reads whole again."""
     d, victim = deleted_table
     meta = read_table_metadata(d)
-    avro = AvroIO(spark)
     snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == 999)
-    records = avro.read_records(snap["manifest-list"])
+    records = read_ocf(snap["manifest-list"])[0]
     for r in records:
         if r.get("content") == 1:
             # rewrite the delete manifest with sequence 0
-            del_entries = avro.read_records(r["manifest_path"])
+            del_entries = read_ocf(r["manifest_path"])[0]
             for e in del_entries:
                 e["sequence_number"] = 0
             new_path = os.path.join(metadata_dir(d), "del-m0-seq0.avro")
-            avro.write_records(
+            write_ocf(
                 new_path,
                 manifest_entry_schema([]),
                 del_entries,
-                {"format-version": "2", "content": "deletes"},
+                extra_meta={"format-version": "2", "content": "deletes"},
             )
             r["manifest_path"] = new_path
-    avro.write_records(
-        snap["manifest-list"], MANIFEST_LIST_SCHEMA, records, {"format-version": "2"}
+    write_ocf(
+        snap["manifest-list"], MANIFEST_LIST_SCHEMA, records, extra_meta={"format-version": "2"}
     )
     assert len(_ids(read_iceberg_as_df(spark, d))) == 20

@@ -21,6 +21,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
 from incubator_xtable_spark.sources.iceberg_source import (
@@ -31,7 +32,6 @@ from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 from incubator_xtable_spark.targets.iceberg_target import (
     MANIFEST_LIST_SCHEMA,
-    AvroIO,
     manifest_entry_schema,
     metadata_dir,
     read_table_metadata,
@@ -56,7 +56,6 @@ def _append_delete_snapshot(
     (path, equality_ids, partition) and optional new data files
     (path, record_count), all at sequence ``seq``."""
     meta = read_table_metadata(d)
-    avro = AvroIO(spark)
     snap_prev = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
@@ -66,7 +65,7 @@ def _append_delete_snapshot(
     new_manifests = []
     if eq_files:
         del_manifest = os.path.join(metadata_dir(d), f"eqdel-m{snapshot_id}.avro")
-        dlen = avro.write_records(
+        dlen = write_ocf(
             del_manifest,
             schema_json,
             [
@@ -87,7 +86,7 @@ def _append_delete_snapshot(
                 }
                 for p, ids, part in eq_files
             ],
-            {"format-version": "2", "content": "deletes"},
+            extra_meta={"format-version": "2", "content": "deletes"},
         )
         new_manifests.append(
             {
@@ -108,7 +107,7 @@ def _append_delete_snapshot(
         )
     if data_files:
         add_manifest = os.path.join(metadata_dir(d), f"eqadd-m{snapshot_id}.avro")
-        alen = avro.write_records(
+        alen = write_ocf(
             add_manifest,
             schema_json,
             [
@@ -128,7 +127,7 @@ def _append_delete_snapshot(
                 }
                 for p, n in data_files
             ],
-            {"format-version": "2", "content": "data"},
+            extra_meta={"format-version": "2", "content": "data"},
         )
         new_manifests.append(
             {
@@ -148,10 +147,13 @@ def _append_delete_snapshot(
             }
         )
 
-    old_manifests = avro.read_records(snap_prev["manifest-list"])
+    old_manifests = read_ocf(snap_prev["manifest-list"])[0]
     new_list = os.path.join(metadata_dir(d), f"snap-{snapshot_id}-eq.avro")
-    avro.write_records(
-        new_list, MANIFEST_LIST_SCHEMA, old_manifests + new_manifests, {"format-version": "2"}
+    write_ocf(
+        new_list,
+        MANIFEST_LIST_SCHEMA,
+        old_manifests + new_manifests,
+        extra_meta={"format-version": "2"},
     )
     meta2 = json.loads(json.dumps(meta))
     meta2["last-sequence-number"] = seq
@@ -354,13 +356,12 @@ def test_mixed_position_and_equality_deletes(spark, tmp_path):
     eq = _eq_parquet(os.path.join(d, "eqdel-5.parquet"), {"id": pa.array([15], pa.int64())})
     # hand-craft: one delete manifest holding BOTH entries
     meta = read_table_metadata(d)
-    avro = AvroIO(spark)
     snap_prev = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
     schema_json = manifest_entry_schema([])
     del_manifest = os.path.join(metadata_dir(d), "mixed-del.avro")
-    dlen = avro.write_records(
+    dlen = write_ocf(
         del_manifest,
         schema_json,
         [
@@ -394,11 +395,11 @@ def test_mixed_position_and_equality_deletes(spark, tmp_path):
                 },
             },
         ],
-        {"format-version": "2", "content": "deletes"},
+        extra_meta={"format-version": "2", "content": "deletes"},
     )
-    old_manifests = avro.read_records(snap_prev["manifest-list"])
+    old_manifests = read_ocf(snap_prev["manifest-list"])[0]
     new_list = os.path.join(metadata_dir(d), "snap-999-mixed.avro")
-    avro.write_records(
+    write_ocf(
         new_list,
         MANIFEST_LIST_SCHEMA,
         old_manifests
@@ -419,7 +420,7 @@ def test_mixed_position_and_equality_deletes(spark, tmp_path):
                 "deleted_rows_count": 3,
             }
         ],
-        {"format-version": "2"},
+        extra_meta={"format-version": "2"},
     )
     meta2 = json.loads(json.dumps(meta))
     meta2["last-sequence-number"] = 2
@@ -677,9 +678,8 @@ def test_relay_conformance_green_then_red_on_sequence_violation(spark, tmp_path)
     """The relayed table passes conformance (incl. the new content=2
     checks); stripping the equality_ids red-flags ICE_EQ_IDS and bumping
     an entry's sequence past the snapshot's red-flags ICE_EQ_SEQ."""
-    from incubator_xtable_spark.model.avro_codec import read_ocf
     from incubator_xtable_spark.model.conformance import check_iceberg_conformance
-    from incubator_xtable_spark.targets.iceberg_target import AvroIO, manifest_entry_schema
+    from incubator_xtable_spark.targets.iceberg_target import manifest_entry_schema
 
     d = _make_table(spark, tmp_path)
     src0 = IcebergConversionSource(spark, d)
@@ -696,9 +696,8 @@ def test_relay_conformance_green_then_red_on_sequence_violation(spark, tmp_path)
     snap = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
-    avro = AvroIO(spark)
     victim = None
-    for mf in avro.read_records(snap["manifest-list"]):
+    for mf in read_ocf(snap["manifest-list"])[0]:
         if mf.get("content") == 1:
             victim = mf["manifest_path"]
             break
@@ -709,11 +708,11 @@ def test_relay_conformance_green_then_red_on_sequence_violation(spark, tmp_path)
         if (df.get("content") or 0) == 2:
             rec["sequence_number"] = int(snap["sequence-number"]) + 100
     schema_json = manifest_entry_schema([])
-    avro.write_records(
+    write_ocf(
         victim,
         schema_json,
         records,
-        {
+        extra_meta={
             "schema": raw_meta.get("schema", b"{}").decode("utf-8"),
             "partition-spec": raw_meta.get("partition-spec", b"[]").decode("utf-8"),
             "format-version": "2",

@@ -16,6 +16,7 @@ import os
 
 import pytest
 
+from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.conformance import check_iceberg_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import DeltaConversionSource
@@ -25,7 +26,6 @@ from incubator_xtable_spark.sources.iceberg_source import (
 )
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.iceberg_target import (
-    AvroIO,
     IcebergConversionTarget,
     manifest_entry_schema,
     manifest_list_schema,
@@ -132,10 +132,7 @@ def test_inheritance_resolves_null_file_ids(spark, tmp_path):
     snap = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
-    io = AvroIO(spark)
-    [mf] = io.read_records(snap["manifest-list"])
-    from incubator_xtable_spark.model.avro_codec import read_ocf
-
+    [mf] = read_ocf(snap["manifest-list"])[0]
     entries, raw_meta = read_ocf(mf["manifest_path"])
     manifest_meta = {
         k: v.decode("utf-8")
@@ -149,13 +146,13 @@ def test_inheritance_resolves_null_file_ids(spark, tmp_path):
     for e in entries:
         e["data_file"]["first_row_id"] = None
     tmp_manifest = mf["manifest_path"] + ".rewrite"
-    io.write_records(tmp_manifest, manifest_entry_schema([], 3), entries, manifest_meta)
+    write_ocf(tmp_manifest, manifest_entry_schema([], 3), entries, extra_meta=manifest_meta)
     os.replace(tmp_manifest, mf["manifest_path"])
     # manifest list: pin the inheritance base, fix the length
     mf["first_row_id"] = base_id
     mf["manifest_length"] = os.path.getsize(mf["manifest_path"])
     tmp_list = snap["manifest-list"] + ".rewrite"
-    io.write_records(tmp_list, manifest_list_schema(3), [mf], {"format-version": "3"})
+    write_ocf(tmp_list, manifest_list_schema(3), [mf], extra_meta={"format-version": "3"})
     os.replace(tmp_list, snap["manifest-list"])
 
     _meta2, resolved = _live_data_entries(spark, base)
@@ -228,22 +225,21 @@ def test_conformance_red_on_overlapping_ranges(spark, tmp_path):
     snap = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
-    io = AvroIO(spark)
-    [mf] = io.read_records(snap["manifest-list"])
-    entries = io.read_records(mf["manifest_path"])
+    [mf] = read_ocf(snap["manifest-list"])[0]
+    entries = read_ocf(mf["manifest_path"])[0]
     for e in entries:
         e["data_file"]["first_row_id"] = 0  # every file claims the same range
     tmp_manifest = mf["manifest_path"] + ".rewrite"
-    io.write_records(
+    write_ocf(
         tmp_manifest,
         manifest_entry_schema([], 3),
         entries,
-        {"format-version": "3", "content": "data"},
+        extra_meta={"format-version": "3", "content": "data"},
     )
     os.replace(tmp_manifest, mf["manifest_path"])
     mf["manifest_length"] = os.path.getsize(mf["manifest_path"])
     tmp_list = snap["manifest-list"] + ".rewrite"
-    io.write_records(tmp_list, manifest_list_schema(3), [mf], {"format-version": "3"})
+    write_ocf(tmp_list, manifest_list_schema(3), [mf], extra_meta={"format-version": "3"})
     os.replace(tmp_list, snap["manifest-list"])
     codes = {i.code for i in check_iceberg_conformance(spark, base).issues}
     assert "ICE_ROW_ID_OVERLAP" in codes

@@ -24,6 +24,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
+from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import (
     FILE_INVENTORY_SCHEMA,
     InternalPartitionField,
@@ -42,7 +43,6 @@ from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 from incubator_xtable_spark.targets.iceberg_target import (
     MANIFEST_LIST_SCHEMA,
-    AvroIO,
     IcebergConversionTarget,
     manifest_entry_schema,
     metadata_dir,
@@ -141,14 +141,13 @@ def _evolve_add_day_field(spark, d: str, snapshot_id: int = 4242) -> None:
     day_int = (datetime.date.fromisoformat(day) - _EPOCH).days
     fp, n = _write_file(d, "gen2_c.parquet", [10, 11], day)
 
-    avro = AvroIO(spark)
     snap_prev = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
     seq = int(meta.get("last-sequence-number") or 1) + 1
     entry_schema = manifest_entry_schema([("region", "string"), ("ts_day", "int")])
     manifest = os.path.join(metadata_dir(d), f"evo-m{snapshot_id}.avro")
-    mlen = avro.write_records(
+    mlen = write_ocf(
         manifest,
         entry_schema,
         [
@@ -167,11 +166,11 @@ def _evolve_add_day_field(spark, d: str, snapshot_id: int = 4242) -> None:
                 },
             }
         ],
-        {"format-version": "2", "content": "data"},
+        extra_meta={"format-version": "2", "content": "data"},
     )
-    old_manifests = avro.read_records(snap_prev["manifest-list"])
+    old_manifests = read_ocf(snap_prev["manifest-list"])[0]
     new_list = os.path.join(metadata_dir(d), f"snap-{snapshot_id}-evo.avro")
-    avro.write_records(
+    write_ocf(
         new_list,
         MANIFEST_LIST_SCHEMA,
         old_manifests
@@ -192,7 +191,7 @@ def _evolve_add_day_field(spark, d: str, snapshot_id: int = 4242) -> None:
                 "deleted_rows_count": 0,
             }
         ],
-        {"format-version": "2"},
+        extra_meta={"format-version": "2"},
     )
     meta2 = json.loads(json.dumps(meta))
     meta2["partition-specs"].append(spec1)
@@ -429,10 +428,9 @@ def test_target_appends_new_spec_on_partition_change(spark, tmp_path):
     assert f_by_name["region"]["field-id"] == specs[0]["fields"][0]["field-id"]
     assert f_by_name["ts_day"]["field-id"] == meta["last-partition-id"]
     # manifests of the evolved snapshot are tagged with the new spec
-    avro = AvroIO(spark)
     snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
     assert all(
-        m["partition_spec_id"] == 1 for m in avro.read_records(snap["manifest-list"])
+        m["partition_spec_id"] == 1 for m in read_ocf(snap["manifest-list"])[0]
     )
 
     # and the SOURCE (per-spec resolution) round-trips the values

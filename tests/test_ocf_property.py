@@ -40,7 +40,7 @@ def test_ocf_roundtrip_property(tmp_path_factory, records, codec):
     write_ocf(p, SCHEMA, records, codec=codec)
     got, meta = read_ocf(p)
     assert got == records
-    assert meta["avro.codec"].decode() == codec
+    assert meta.get("avro.codec", b"null").decode() == codec
 
 
 def test_ocf_truncation_red(tmp_path):

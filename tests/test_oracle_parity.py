@@ -63,3 +63,48 @@ def test_query_matches_oracle(spark, duck, name):
     d_canon = canon_pdf(duck_pdf)
     mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(s_canon, d_canon)) if a != b]
     assert not mismatches, f"{name}: {len(mismatches)} mismatching rows; first: {mismatches[:3]}"
+
+
+def test_events_funnel_null_user_ids_match_oracle(spark, duck, tmp_path):
+    """NULL user_id rows form one viewer group (GROUP BY keeps NULL) but
+    never reach the click or purchase step: the oracle's equi-joins drop
+    NULL keys, and the single-groupBy plan must do the same."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = [
+        # (user_id, event_type, minutes after t0)
+        (1, "view", 0), (1, "click", 1), (1, "purchase", 2),
+        (2, "view", 0), (2, "click", 5),
+        (3, "click", 0), (3, "view", 1),
+        (None, "view", 0), (None, "click", 1), (None, "purchase", 2),
+        (None, "view", 3), (None, "click", 4),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(rows)), pa.int64()),
+                "ts": pa.array(
+                    [t0 + datetime.timedelta(minutes=m) for _, _, m in rows],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([u for u, _, _ in rows], pa.int64()),
+                "event_type": [e for _, e, _ in rows],
+                "value": pa.array([1.0] * len(rows)),
+                "props": ["{}"] * len(rows),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    spec = REGISTRY["events_funnel"]
+    spark_pdf = spec.fn(spark, str(tmp_path)).toPandas()
+    duck.execute(
+        f"CREATE OR REPLACE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    duck_pdf = duck.execute(spec.oracle).df()
+    assert canon_pdf(spark_pdf) == canon_pdf(duck_pdf)
+    assert spark_pdf.iloc[0]["n_step_view"] == 4  # users 1, 2, 3 and the NULL group
+    assert spark_pdf.iloc[0]["n_step_purchase"] == 1

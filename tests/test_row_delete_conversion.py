@@ -16,6 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_dv import write_dv_file
 from incubator_xtable_spark.sources.delta_source import (
@@ -244,7 +245,6 @@ def _iceberg_deleted_table(spark, tmp_path):
     from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
     from incubator_xtable_spark.targets.iceberg_target import (
         MANIFEST_LIST_SCHEMA,
-        AvroIO,
         IcebergConversionTarget,
         manifest_entry_schema,
         metadata_dir,
@@ -264,7 +264,6 @@ def _iceberg_deleted_table(spark, tmp_path):
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
 
     meta = read_table_metadata(d)
-    avro = AvroIO(spark)
     src = IcebergConversionSource(spark, d)
     entries = src._live_entries(meta, meta["current-snapshot-id"])
     victim = sorted(e["data_file"]["file_path"] for e in entries)[0]
@@ -279,7 +278,7 @@ def _iceberg_deleted_table(spark, tmp_path):
         pos_path,
     )
     del_manifest = os.path.join(metadata_dir(d), "del-m0.avro")
-    dlen = avro.write_records(
+    dlen = write_ocf(
         del_manifest,
         manifest_entry_schema([]),
         [
@@ -298,12 +297,12 @@ def _iceberg_deleted_table(spark, tmp_path):
                 },
             }
         ],
-        {"format-version": "2", "content": "deletes"},
+        extra_meta={"format-version": "2", "content": "deletes"},
     )
     snap1 = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-    old_manifests = avro.read_records(snap1["manifest-list"])
+    old_manifests = read_ocf(snap1["manifest-list"])[0]
     new_list = os.path.join(metadata_dir(d), "snap-999-del.avro")
-    avro.write_records(
+    write_ocf(
         new_list,
         MANIFEST_LIST_SCHEMA,
         old_manifests
@@ -324,7 +323,7 @@ def _iceberg_deleted_table(spark, tmp_path):
                 "deleted_rows_count": 3,
             }
         ],
-        {"format-version": "2"},
+        extra_meta={"format-version": "2"},
     )
     meta2 = json.loads(json.dumps(meta))
     meta2["last-sequence-number"] = 2
@@ -417,7 +416,6 @@ def test_iceberg_delete_widening_updates_delta_dv(spark, tmp_path):
 
     from incubator_xtable_spark.targets.iceberg_target import (
         MANIFEST_LIST_SCHEMA,
-        AvroIO,
         manifest_entry_schema,
         metadata_dir,
         read_table_metadata,
@@ -430,7 +428,6 @@ def test_iceberg_delete_widening_updates_delta_dv(spark, tmp_path):
     assert res[TableFormat.DELTA].status == SyncStatusCode.SUCCESS
 
     # snapshot 1000: a second delete file adds position 3 of the victim
-    avro = AvroIO(spark)
     meta = read_table_metadata(d)
     pos_path2 = os.path.join(d, "delete-0002.parquet")
     pq.write_table(
@@ -443,7 +440,7 @@ def test_iceberg_delete_widening_updates_delta_dv(spark, tmp_path):
         pos_path2,
     )
     del_manifest2 = os.path.join(metadata_dir(d), "del-m1.avro")
-    dlen2 = avro.write_records(
+    dlen2 = write_ocf(
         del_manifest2,
         manifest_entry_schema([]),
         [
@@ -462,12 +459,12 @@ def test_iceberg_delete_widening_updates_delta_dv(spark, tmp_path):
                 },
             }
         ],
-        {"format-version": "2", "content": "deletes"},
+        extra_meta={"format-version": "2", "content": "deletes"},
     )
     snap2 = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-    old_manifests = avro.read_records(snap2["manifest-list"])
+    old_manifests = read_ocf(snap2["manifest-list"])[0]
     new_list = os.path.join(metadata_dir(d), "snap-1000-del.avro")
-    avro.write_records(
+    write_ocf(
         new_list,
         MANIFEST_LIST_SCHEMA,
         old_manifests
@@ -488,7 +485,7 @@ def test_iceberg_delete_widening_updates_delta_dv(spark, tmp_path):
                 "deleted_rows_count": 1,
             }
         ],
-        {"format-version": "2"},
+        extra_meta={"format-version": "2"},
     )
     meta2 = json.loads(json.dumps(meta))
     meta2["last-sequence-number"] = 3
@@ -633,7 +630,6 @@ def test_iceberg_restore_clears_delta_dv(spark, tmp_path):
     re-syncs to Delta as a re-add WITHOUT the deletion vector."""
     from incubator_xtable_spark.targets.iceberg_target import (
         MANIFEST_LIST_SCHEMA,
-        AvroIO,
         metadata_dir,
         read_table_metadata,
     )
@@ -645,12 +641,11 @@ def test_iceberg_restore_clears_delta_dv(spark, tmp_path):
     assert read_delta_as_df(spark, d).count() == 17
 
     # snapshot 1001: manifest list WITHOUT the delete manifest (restore)
-    avro = AvroIO(spark)
     meta = read_table_metadata(d)
     snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-    manifests = [m for m in avro.read_records(snap["manifest-list"]) if m.get("content") != 1]
+    manifests = [m for m in read_ocf(snap["manifest-list"])[0] if m.get("content") != 1]
     new_list = os.path.join(metadata_dir(d), "snap-1001-restore.avro")
-    avro.write_records(new_list, MANIFEST_LIST_SCHEMA, manifests, {"format-version": "2"})
+    write_ocf(new_list, MANIFEST_LIST_SCHEMA, manifests, extra_meta={"format-version": "2"})
     meta2 = json.loads(json.dumps(meta))
     meta2["last-sequence-number"] = meta["last-sequence-number"] + 1
     meta2["current-snapshot-id"] = 1001
@@ -808,7 +803,6 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
     from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
     from incubator_xtable_spark.targets.iceberg_target import (
         MANIFEST_LIST_SCHEMA,
-        AvroIO,
         manifest_entry_schema,
         metadata_dir,
         read_table_metadata,
@@ -850,7 +844,6 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
     target.complete_sync()
 
     # append a position-delete snapshot covering rows 1,4 of f1
-    avro = AvroIO(spark)
     meta = read_table_metadata(d)
     pos_path = os.path.join(d, "delete-0001.parquet")
     pq.write_table(
@@ -863,7 +856,7 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
         pos_path,
     )
     del_manifest = os.path.join(metadata_dir(d), "del-m0.avro")
-    dlen = avro.write_records(
+    dlen = write_ocf(
         del_manifest,
         manifest_entry_schema([]),
         [
@@ -882,14 +875,14 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
                 },
             }
         ],
-        {"format-version": "2", "content": "deletes"},
+        extra_meta={"format-version": "2", "content": "deletes"},
     )
     snap1 = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
     new_list = os.path.join(metadata_dir(d), "snap-999-del.avro")
-    avro.write_records(
+    write_ocf(
         new_list,
         MANIFEST_LIST_SCHEMA,
-        avro.read_records(snap1["manifest-list"])
+        read_ocf(snap1["manifest-list"])[0]
         + [
             {
                 "manifest_path": del_manifest,
@@ -907,7 +900,7 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
                 "deleted_rows_count": 2,
             }
         ],
-        {"format-version": "2"},
+        extra_meta={"format-version": "2"},
     )
     meta2 = json.loads(json.dumps(meta))
     meta2["last-sequence-number"] = 2
