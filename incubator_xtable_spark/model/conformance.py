@@ -150,15 +150,6 @@ def _decode_iceberg_single_value(type_str: str, raw: bytes) -> Any:
     return None
 
 
-def _avro_bytes(v: Any) -> bytes:
-    """Avro-JSON byte strings arrive as codepoint-per-byte strings."""
-    if isinstance(v, str):
-        return bytes(ord(c) & 0xFF for c in v)
-    if isinstance(v, list):
-        return bytes(b & 0xFF for b in v)
-    return v
-
-
 def _read_avro_with_meta(spark: SparkSession, path: str, meta_keys: list[str]):
     """(records, metadata) via the INDEPENDENT pure-python OCF reader
     (model/avro_codec) — r6: the conformance layer no longer shares the
@@ -172,15 +163,6 @@ def _read_avro_with_meta(spark: SparkSession, path: str, meta_keys: list[str]):
         k: raw_meta[k].decode("utf-8") for k in meta_keys if k in raw_meta
     }
     return records, meta
-
-
-def _unwrap(v: Any) -> Any:
-    """Unwrap Avro-JSON union values ({"long": 3} -> 3)."""
-    if isinstance(v, dict) and len(v) == 1:
-        k = next(iter(v))
-        if k in ("boolean", "int", "long", "float", "double", "bytes", "string", "array", "map", "record") or "." in k or k[:1].isupper():
-            return v[k]
-    return v
 
 
 def _abs_path(p: str, base_path: str) -> str:
@@ -1304,7 +1286,6 @@ def check_iceberg_conformance(spark: SparkSession, base_path: str) -> Conformanc
                     try:
                         mf_entries, _ = _read_avro_with_meta(spark, ml, [])
                         for mf in mf_entries:
-                            mf = {k: _unwrap(v) for k, v in mf.items()}
                             if (mf.get("content") or 0) != 0:
                                 continue
                             mp = _abs_path(mf.get("manifest_path") or "", base_path)
@@ -1313,13 +1294,11 @@ def check_iceberg_conformance(spark: SparkSession, base_path: str) -> Conformanc
                             recs, _m = _read_avro_with_meta(spark, mp, [])
                             running = mf.get("first_row_id")
                             for entry in recs:
-                                entry = {k: _unwrap(v) for k, v in entry.items()}
                                 if entry.get("status") == 2:
                                     continue
                                 df = entry.get("data_file")
                                 if not isinstance(df, dict):
                                     continue
-                                df = {k: _unwrap(v) for k, v in df.items()}
                                 if (df.get("content") or 0) != 0:
                                     continue
                                 fid = df.get("first_row_id")
@@ -1384,7 +1363,6 @@ def _check_iceberg_manifests(
         return
     snap_seq = snapshot.get("sequence-number", 0)
     for e in entries:
-        e = {k: _unwrap(v) for k, v in e.items()}
         for req in ("manifest_path", "manifest_length", "partition_spec_id", "content", "sequence_number", "min_sequence_number", "added_snapshot_id"):
             if e.get(req) is None:
                 report.add("ICE_MANIFEST_LIST_FIELD", ml_path, f"{req} required in v2, entry {e.get('manifest_path')}")
@@ -1446,7 +1424,6 @@ def _check_iceberg_manifest_file(
             f"manifest metadata content={meta.get('content')!r} but list says {expected_content!r}",
         )
     for rec in records:
-        rec = {k: _unwrap(v) for k, v in rec.items()}
         status = rec.get("status")
         if status not in (0, 1, 2):
             report.add("ICE_ENTRY_STATUS", path, f"status must be 0/1/2, got {status}")
@@ -1454,7 +1431,6 @@ def _check_iceberg_manifest_file(
         if not isinstance(df, dict):
             report.add("ICE_ENTRY_DATA_FILE", path, "data_file required")
             continue
-        df = {k: _unwrap(v) for k, v in df.items()}
         content = df.get("content") or 0
         if list_content == 1 and content not in (1, 2):
             report.add("ICE_DELETE_CONTENT", path, "delete manifest entries must have content 1/2")
@@ -1463,7 +1439,7 @@ def _check_iceberg_manifest_file(
             # real schema fields, and the entry's explicit sequence number
             # must not exceed the snapshot's (the strict `delete_seq >
             # data_seq` application rule relies on honest sequencing)
-            eq_ids = [_unwrap(x) for x in (df.get("equality_ids") or [])]
+            eq_ids = list(df.get("equality_ids") or [])
             if not eq_ids:
                 report.add("ICE_EQ_IDS", path, "content=2 entry without equality_ids")
             for fid in eq_ids:
@@ -1494,8 +1470,8 @@ def _check_iceberg_manifest_file(
         if (df.get("record_count") or 0) < 0:
             report.add("ICE_RECORD_COUNT", path, "record_count must be >= 0")
         # bounds: independent single-value decode, lower <= upper
-        lowers = {_unwrap(b.get("key")): _avro_bytes(_unwrap(b.get("value"))) for b in (df.get("lower_bounds") or [])}
-        uppers = {_unwrap(b.get("key")): _avro_bytes(_unwrap(b.get("value"))) for b in (df.get("upper_bounds") or [])}
+        lowers = {b["key"]: b["value"] for b in (df.get("lower_bounds") or [])}
+        uppers = {b["key"]: b["value"] for b in (df.get("upper_bounds") or [])}
         for fid, raw_lo in lowers.items():
             raw_hi = uppers.get(fid)
             t = field_types.get(fid)
@@ -1835,7 +1811,6 @@ def check_paimon_conformance(spark: SparkSession, base_path: str) -> Conformance
             report.add("PAI_MANIFEST_LIST_UNREADABLE", lp, str(exc))
             continue
         for m in metas:
-            m = {k: _unwrap(v) for k, v in m.items()}
             mp = os.path.join(mdir, m.get("_FILE_NAME") or "")
             if not os.path.exists(mp):
                 report.add("PAI_MANIFEST_MISSING", lp, mp)

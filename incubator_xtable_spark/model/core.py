@@ -18,7 +18,9 @@ Design deltas from the reference (Spark-first, not a port):
   class tree;
 - the file inventory is a *DataFrame* (one row per data file) rather than
   a Java list, so snapshot diffs are anti-joins and stats rollups are
-  aggregations that scale with the cluster, not the driver.
+  aggregations that scale with the cluster, not the driver. Inventories
+  the driver already holds are built with ``local_frame`` (Arrow-backed
+  ``LocalRelation``), so draining them runs no Spark job.
 """
 
 from __future__ import annotations
@@ -271,6 +273,37 @@ class SyncResult:
 STREAM_DRAIN_THRESHOLD = 200_000
 
 
+def local_frame(spark: Any, rows: Any, schema: T.StructType):
+    """A driver-built metadata frame that Spark plans as a real
+    ``LocalRelation``.
+
+    ``rows`` is a ``pyarrow.Table`` or a list of rows (dicts, tuples or
+    ``Row``s in ``schema`` field order). ``spark.createDataFrame(list)``
+    plans a ``LogicalRDD``, so every drain of it is a full Spark job with
+    defaultParallelism tasks; the Arrow route lands the rows in the
+    driver JVM instead. Deterministic filters and projections over the
+    result (the stats ``from_json`` parse included) fold into a new
+    ``LocalRelation`` at optimization, so collecting them runs no job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(rows, pa.Table):
+        names = schema.fieldNames()
+        rows = pa.Table.from_pylist(
+            [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+            schema=to_arrow_schema(schema),
+        )
+    return spark.createDataFrame(rows, schema)
+
+
+def is_local_plan(df: Any) -> bool:
+    """True when ``df``'s optimized plan is a bare ``LocalRelation``:
+    collecting it returns the driver-resident rows with no Spark job and
+    nothing to compile."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
 def drain_rows(df: Any, streaming: Any = None):
     """Iterate a (metadata-sized) inventory DataFrame driver-side.
 
@@ -279,30 +312,18 @@ def drain_rows(df: Any, streaming: Any = None):
       bounded per-commit diffs;
     - ``True``: ``toLocalIterator(prefetchPartitions=True)`` — one partition
       resident in python at a time, flat driver RSS;
-    - ``"auto"`` (snapshot-scale drains): ``persist()`` + ``count()``
-      materializes the plan once into the executor block cache (in
-      local mode the shared JVM, NOT python driver RSS), then drains
-      from cache — ``collect()`` at or below
-      ``STREAM_DRAIN_THRESHOLD`` rows, streaming iterator above it
-      (cache also prevents toLocalIterator's per-partition recompute
-      of the upstream plan). The cache drops when iteration finishes.
+    - ``"auto"`` (snapshot-scale drains): a frame whose optimized plan is
+      a ``LocalRelation`` is already driver-resident, so it is collected
+      directly. Otherwise ``persist()`` + ``count()`` materializes the
+      plan once into the executor block cache (in local mode the shared
+      JVM, NOT python driver RSS), then drains from cache — ``collect()``
+      at or below ``STREAM_DRAIN_THRESHOLD`` rows, streaming iterator
+      above it (cache also prevents toLocalIterator's per-partition
+      recompute of the upstream plan). The cache drops when iteration
+      finishes.
     """
-    if streaming == "auto" and getattr(df, "_xt_local_hint", False):
-        # The source tagged this inventory as driver-built and
-        # metadata-sized (every tag site is byte- or file-count-gated,
-        # never SF-gated): ONE collect() suffices — the persist+count
-        # probe would only add two extra planning passes to learn a row
-        # count the source already bounded. Whole-stage codegen is also
-        # skipped for just this collect: compiling the stats-projection
-        # stage costs ~1.3 s of janino for rows the interpreter finishes
-        # in milliseconds (same operators, same values, on any cluster).
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        try:
-            return iter(df.collect())
-        finally:
-            spark.conf.set("spark.sql.codegen.wholeStage", prev)
+    if streaming == "auto" and is_local_plan(df):
+        return iter(df.collect())
     if streaming == "auto":
         df = df.persist()
         n = df.count()

@@ -38,6 +38,8 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    is_local_plan,
+    local_frame,
 )
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -156,6 +158,11 @@ _ACTION_SCHEMA = T.StructType(
         ),
     ]
 )
+
+# the add-action struct: the column set of a commit's `add.*` projection
+_ADD_TYPE: T.StructType = _ACTION_SCHEMA["add"].dataType
+_ADD_NO_DV_TYPE = T.StructType([f for f in _ADD_TYPE.fields if f.name != "deletionVector"])
+_EFF_PATH_SCHEMA = T.StructType([T.StructField("eff_path", T.StringType())])
 
 
 def _log_dir(base_path: str) -> str:
@@ -401,13 +408,13 @@ def _commit_slices(
 
 
 # Below this many total log-JSON bytes the commit tail is parsed on the
-# DRIVER into a LocalRelation instead of a distributed spark.read.json
-# (r14): every downstream metadata action (latest_metadata's order/limit
-# collect, the live-files window, stats parses) then plans against local
-# rows at ~millisecond cost instead of paying a full local[32] job per
-# action — measured as the dominant cost of small-table conversions. At
-# scale the threshold routes big logs to the distributed path unchanged
-# (0 disables the fast path).
+# DRIVER into a LocalRelation (model.core.local_frame) instead of a
+# distributed spark.read.json (r14): every downstream metadata action
+# (latest_metadata, the live-files replay, the per-commit diff, stats
+# parses) then runs on local rows at ~millisecond cost instead of paying
+# a full local[32] job per action — measured as the dominant cost of
+# small-table conversions. At scale the threshold routes big logs to the
+# distributed path unchanged (0 disables the fast path).
 # Production justification: a log under a few MB is driver-trivial on any
 # cluster; the distributed read exists for unbounded logs, not these.
 _DRIVER_LOG_MAX_BYTES = 4 * 1024 * 1024
@@ -461,7 +468,7 @@ def _read_log_actions_local(
                     }
                     row["version"] = ver
                     rows.append(row)
-        return spark.createDataFrame(rows, out_schema)
+        return local_frame(spark, rows, out_schema)
     except Exception:  # noqa: BLE001 — any surprise routes to the spark reader
         return None
 
@@ -507,8 +514,10 @@ def read_log_actions(
     if not slices:
         if cp_df is not None:
             return cp_df
-        return spark.createDataFrame(
-            [], T.StructType(list(_ACTION_SCHEMA.fields) + [T.StructField("version", T.LongType())])
+        return local_frame(
+            spark,
+            [],
+            T.StructType(list(_ACTION_SCHEMA.fields) + [T.StructField("version", T.LongType())]),
         )
     if cp_df is None and _DRIVER_LOG_MAX_BYTES > 0:
         local = _read_log_actions_local(spark, slices)
@@ -798,10 +807,8 @@ def _live_files_schema() -> T.StructType:
     """The exact column list live_files_df projects, typed straight off
     _ACTION_SCHEMA's add struct so the local and distributed tiers can
     never drift."""
-    add_t = next(f.dataType for f in _ACTION_SCHEMA.fields if f.name == "add")
-
     def ft(n: str) -> T.DataType:
-        return next(f.dataType for f in add_t.fields if f.name == n)
+        return _ADD_TYPE[n].dataType
 
     return T.StructType(
         [
@@ -840,7 +847,6 @@ def _live_files_rows_local(base_path: str, version: Optional[int]):
             total += os.path.getsize(p)
             if total > _DRIVER_LOG_MAX_BYTES:
                 return None
-        add_t = next(f.dataType for f in _ACTION_SCHEMA.fields if f.name == "add")
         winners: dict = {}  # path -> [version, is_add, projected add dict]
         for p, ver in slices:
             with open(p, encoding="utf-8") as fh:
@@ -851,7 +857,7 @@ def _live_files_rows_local(base_path: str, version: Optional[int]):
                     d = json.loads(line)
                     add, remove = d.get("add"), d.get("remove")
                     if add is not None and add.get("path") is not None:
-                        path, is_add, proj = add["path"], True, _schema_dict(add, add_t)
+                        path, is_add, proj = add["path"], True, _schema_dict(add, _ADD_TYPE)
                     elif remove is not None and remove.get("path") is not None:
                         path, is_add, proj = remove["path"], False, None
                     else:
@@ -879,17 +885,98 @@ def _live_files_rows_local(base_path: str, version: Optional[int]):
         return None
 
 
+def _effective_path(path: str, dv: Optional[dict]) -> str:
+    """The path a file is synced under: its purged shadow when a DV is
+    attached, the file itself otherwise (the Python twin of the Spark
+    `eff_expr` in `_commit_diff_spark`)."""
+    from incubator_xtable_spark.sources.delta_dv import purged_path
+
+    if dv is None or dv.get("storageType") is None:
+        return path
+    return purged_path(path, dv)
+
+
+def _commit_slice_paths(base_path: str, version: int) -> list[str]:
+    """The log file(s) holding commit ``version``'s own actions: its JSON,
+    or a compacted range that tags as this version (its END, the
+    read_log_actions rule). Never a checkpoint — a checkpoint holds a
+    table state, not the commit's actions."""
+    return [p for p, v in _commit_slices(base_path, -1, None) if v == version]
+
+
+def _commit_actions(spark: SparkSession, base_path: str, version: int) -> DataFrame:
+    """Commit ``version``'s own actions as an _ACTION_SCHEMA frame: parsed
+    on the driver under the _DRIVER_LOG_MAX_BYTES gate, read by Spark's
+    JSON reader above it."""
+    slices = [(p, version) for p in _commit_slice_paths(base_path, version)]
+    if _DRIVER_LOG_MAX_BYTES > 0 or not slices:
+        local = _read_log_actions_local(spark, slices)
+        if local is not None:
+            return local
+    return spark.read.schema(_ACTION_SCHEMA).json([p for p, _ in slices])
+
+
+def _commit_diff_local(base_path: str, version: int, by_raw_path: bool):
+    """Driver-side diff of ONE commit for small logs (the
+    _DRIVER_LOG_MAX_BYTES gate): set and dict work over the commit's own
+    actions instead of an intersect and two anti-joins that every
+    consumer re-evaluates as Spark jobs.
+
+    Files are matched by EFFECTIVE path — removes resolve their DV
+    through the live state just before the commit — unless
+    ``by_raw_path`` (row-delete exposure, where a DV update is a
+    data-file no-op). Paths present on both sides are no-ops and drop
+    out. Returns (surviving add dicts typed as _ADD_TYPE, removed
+    effective paths), or None when ineligible — the commit is over the
+    gate, or the pre-commit state is not replayable on the driver (a
+    checkpoint in range, see _live_files_rows_local) — so the caller
+    runs `_commit_diff_spark`."""
+    try:
+        own = _commit_slice_paths(base_path, version)
+        if sum(os.path.getsize(p) for p in own) > _DRIVER_LOG_MAX_BYTES:
+            return None
+        adds: list[dict] = []
+        removes: list[str] = []
+        for p in own:
+            with open(p, encoding="utf-8") as fh:
+                for line in fh:
+                    line = line.strip()
+                    if not line:
+                        continue
+                    d = json.loads(line)
+                    add, remove = d.get("add"), d.get("remove")
+                    if add is not None and add.get("path") is not None:
+                        adds.append(_schema_dict(add, _ADD_TYPE))
+                    if remove is not None and remove.get("path") is not None:
+                        removes.append(remove["path"])
+        if by_raw_path:
+            add_eff = [a["path"] for a in adds]
+            removed_eff = removes
+        else:
+            prev = _live_files_rows_local(base_path, version - 1)
+            if prev is None:
+                return None
+            prev_dv = {r["path"]: r["deletionVector"] for r in prev}
+            add_eff = [_effective_path(a["path"], a["deletionVector"]) for a in adds]
+            removed_eff = [_effective_path(p, prev_dv.get(p)) for p in removes]
+        noop = set(add_eff) & set(removed_eff)
+        return (
+            [a for a, e in zip(adds, add_eff) if e not in noop],
+            [e for e in removed_eff if e not in noop],
+        )
+    except Exception:  # noqa: BLE001 — any surprise routes to the spark diff
+        return None
+
+
 def live_files_df(spark: SparkSession, base_path: str, version: Optional[int] = None) -> DataFrame:
     """Live AddFiles at a version (time travel when version is given):
     last action per path wins; a remove kills the path."""
     if _DRIVER_LOG_MAX_BYTES > 0:
         rows = _live_files_rows_local(base_path, version)
         if rows is not None:
-            df = spark.createDataFrame(rows, _live_files_schema())
-            # LocalRelation inventory: consumers' projections fold
-            # driver-side and drain_rows collects without a count probe
-            df._xt_local_hint = True
-            return df
+            # LocalRelation inventory: consumers' projections fold at
+            # optimization and drain_rows collects it with no job
+            return local_frame(spark, rows, _live_files_schema())
     actions = read_log_actions(spark, base_path, version)
     if version is not None:
         actions = actions.filter(F.col("version") <= version)
@@ -1930,7 +2017,7 @@ class DeltaConversionSource:
             self.expose_row_deletes
             or self.expose_row_lineage
             or "deletionVector" in live.columns
-        ) and not getattr(live, "_xt_local_hint", False):
+        ) and not is_local_plan(live):
             # a LocalRelation live frame is already materialized rows —
             # checkpointing it would only add a job
             live = live.localCheckpoint(eager=True)
@@ -1998,7 +2085,7 @@ class DeltaConversionSource:
         )
 
         if "deletionVector" not in adds.columns:
-            return self.spark.createDataFrame([], ROW_DELETES_SCHEMA)
+            return local_frame(self.spark, [], ROW_DELETES_SCHEMA)
         base = self.base_path.rstrip("/") + "/"
         abs_path = F.when(F.col("path").startswith("/"), F.col("path")).otherwise(
             F.concat(F.lit(base), F.col("path"))
@@ -2009,7 +2096,7 @@ class DeltaConversionSource:
             .collect()
         )
         if not dv_list:
-            return self.spark.createDataFrame([], ROW_DELETES_SCHEMA)
+            return local_frame(self.spark, [], ROW_DELETES_SCHEMA)
         write_delete_position_files(
             self.spark,
             self.base_path,
@@ -2029,7 +2116,7 @@ class DeltaConversionSource:
                     dict(r["partitionValues"] or {}) or None,
                 )
             )
-        return self.spark.createDataFrame(rows, ROW_DELETES_SCHEMA)
+        return local_frame(self.spark, rows, ROW_DELETES_SCHEMA)
 
     def _data_schema(self, table: InternalTable) -> T.StructType:
         part_cols = {pf.source_field for pf in table.partition_fields}
@@ -2088,10 +2175,6 @@ class DeltaConversionSource:
             F.col("partitionValues").alias("partition_values"),
             column_stats_expr(data_schema, parsed).alias("column_stats"),
         )
-        # deterministic projections over a LocalRelation live frame fold
-        # driver-side — carry the drain hint through
-        if getattr(adds, "_xt_local_hint", False):
-            plain_inv._xt_local_hint = True
         if "deletionVector" not in adds.columns:
             return plain_inv
         dv_list = adds.filter(has_dv).select(
@@ -2110,33 +2193,33 @@ class DeltaConversionSource:
                 for r in dv_list
             ],
         )
-        shadow_rows = []
-        for r in dv_list:
-            sp = purged_path(r["abs_path"], r["deletionVector"].asDict())
-            shadow_rows.append(
+        shadows = [purged_path(r["abs_path"], r["deletionVector"].asDict()) for r in dv_list]
+        listing = local_frame(
+            self.spark, [(p,) for p in shadows], T.StructType([FILE_INVENTORY_SCHEMA["physical_path"]])
+        )
+        stats = {
+            r["physical_path"]: (r["record_count"], r["column_stats"])
+            for r in footer_stats(self.spark, listing, data_schema, local_paths=shadows).collect()
+        }
+        dv_rows = []
+        for sp, r in zip(shadows, dv_list):
+            record_count, column_stats = stats.get(sp, (None, None))
+            dv_rows.append(
                 (
                     sp,
+                    "PARQUET",  # purged shadows are engine-written parquet
                     os.path.getsize(sp),
+                    record_count,
                     r["modificationTime"],
                     dict(r["partitionValues"] or {}) or None,
+                    column_stats,
                 )
             )
-        listing = self.spark.createDataFrame(
-            shadow_rows,
-            "physical_path STRING, size_bytes LONG, last_modified_ms LONG, "
-            "partition_values MAP<STRING,STRING>",
-        )
-        stats = footer_stats(self.spark, listing.select("physical_path"), data_schema)
-        dv_inv = listing.join(stats, "physical_path", "left").select(
-            "physical_path",
-            F.lit("PARQUET").alias("file_format"),  # purged shadows are engine-written parquet
-            "size_bytes",
-            "record_count",
-            "last_modified_ms",
-            "partition_values",
-            "column_stats",
-        )
-        return plain_inv.unionByName(dv_inv)
+        if is_local_plan(plain_inv):
+            # both halves are driver rows: ONE LocalRelation keeps the
+            # drain job-free (a union of two would run a job)
+            return local_frame(self.spark, plain_inv.collect() + dv_rows, FILE_INVENTORY_SCHEMA)
+        return plain_inv.unionByName(local_frame(self.spark, dv_rows, FILE_INVENTORY_SCHEMA))
 
     def get_commits_backlog(self, instants: InstantsForIncrementalSync) -> CommitsBacklog:
         last_v = int(instants.last_sync_instant)
@@ -2158,9 +2241,7 @@ class DeltaConversionSource:
                 self.spark, self.base_path, int(commit)
             ).drop("_commit_version")
         if self.expose_row_lineage:
-            actions = read_log_actions(self.spark, self.base_path).filter(
-                F.col("version") == int(commit)
-            )
+            actions = _commit_actions(self.spark, self.base_path, int(commit))
             change.row_lineage = self._row_lineage_map(
                 actions.filter(F.col("add.path").isNotNull()).select("add.*")
             )
@@ -2177,49 +2258,79 @@ class DeltaConversionSource:
         pair and goes row-stale: delta/DeltaConversionSource.java:147-163.)
         True no-ops — add+remove of the same path with an unchanged
         effective path (e.g. stats-recompute commits) — still drop out.
-        """
-        from incubator_xtable_spark.sources.delta_dv import purged_path_expr
 
+        Row-delete exposure diffs files on their RAW paths instead (a DV
+        update commit — remove X + re-add X with a new DV — is a
+        data-file no-op); row_deletes restates the COMPLETE delete state
+        at this version so a dropped DV (RESTORE) clears the target's
+        delete file as well as a widened DV swapping it.
+
+        Small logs diff on the driver (`_commit_diff_local`) into
+        LocalRelation frames, so the whole change drains with no Spark
+        job; the stats parse and path projections below are the same
+        Spark expressions on both tiers.
+        """
         version = int(commit)
         table = self.get_table_at_version(version)
-        actions = read_log_actions(self.spark, self.base_path).filter(F.col("version") == version)
+        local = (
+            _commit_diff_local(self.base_path, version, self.expose_row_deletes)
+            if _DRIVER_LOG_MAX_BYTES > 0
+            else None
+        )
+        if local is not None:
+            add_rows, removed_paths = local
+            # without a DV'd add the frame carries no deletionVector
+            # column, which spares _to_inventory_adds its shadow probe
+            has_dv = any(a["deletionVector"] for a in add_rows)
+            adds = local_frame(self.spark, add_rows, _ADD_TYPE if has_dv else _ADD_NO_DV_TYPE)
+            removes_eff = local_frame(
+                self.spark, [(p,) for p in removed_paths], _EFF_PATH_SCHEMA
+            )
+        else:
+            adds, removes_eff = self._commit_diff_spark(version)
+        base = self.base_path.rstrip("/") + "/"
+        abs_removed = F.when(
+            F.col("eff_path").startswith("/"), F.col("eff_path")
+        ).otherwise(F.concat(F.lit(base), F.col("eff_path")))
+        files_removed = removes_eff.select(
+            abs_removed.alias("physical_path"),
+            self._file_format_expr(abs_removed).alias("file_format"),
+            F.lit(0).cast("long").alias("size_bytes"),
+            F.lit(None).cast("long").alias("record_count"),
+            F.lit(None).cast("long").alias("last_modified_ms"),
+            F.lit(None).cast("map<string,string>").alias("partition_values"),
+            F.lit(None)
+            .cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
+            .alias("column_stats"),
+        )
+        return TableChange(
+            table=table,
+            commit_id=commit,
+            files_added=self._to_inventory_adds(adds, table),
+            files_removed=files_removed,
+            row_deletes=(
+                self._row_deletes_for(live_files_df(self.spark, self.base_path, version))
+                if self.expose_row_deletes
+                else None
+            ),
+        )
+
+    def _commit_diff_spark(self, version: int) -> tuple[DataFrame, DataFrame]:
+        """The distributed twin of `_commit_diff_local` for commits the
+        driver tier refuses (over _DRIVER_LOG_MAX_BYTES, or a checkpoint
+        in range of the pre-commit state): (surviving adds as `add.*`
+        columns, removed effective paths as `eff_path`)."""
+        from incubator_xtable_spark.sources.delta_dv import purged_path_expr
+
+        actions = _commit_actions(self.spark, self.base_path, version)
         adds = actions.filter(F.col("add.path").isNotNull()).select("add.*")
         removes_raw = actions.filter(F.col("remove.path").isNotNull()).select("remove.path")
 
         if self.expose_row_deletes:
-            # row-delete exposure: files diff on their RAW paths (a DV
-            # update commit — remove X + re-add X with a new DV — is a
-            # data-file no-op); row_deletes restates the COMPLETE delete
-            # state at this version so a dropped DV (RESTORE) clears the
-            # target's delete file as well as a widened DV swapping it
-            row_deletes = self._row_deletes_for(
-                live_files_df(self.spark, self.base_path, version)
-            )
             noop = adds.select("path").intersect(removes_raw)
             pure_adds = adds.join(noop, "path", "left_anti")
             pure_removes = removes_raw.join(noop, "path", "left_anti")
-            base = self.base_path.rstrip("/") + "/"
-            abs_removed = F.when(
-                F.col("path").startswith("/"), F.col("path")
-            ).otherwise(F.concat(F.lit(base), F.col("path")))
-            files_removed = pure_removes.select(
-                abs_removed.alias("physical_path"),
-                self._file_format_expr(abs_removed).alias("file_format"),
-                F.lit(0).cast("long").alias("size_bytes"),
-                F.lit(None).cast("long").alias("record_count"),
-                F.lit(None).cast("long").alias("last_modified_ms"),
-                F.lit(None).cast("map<string,string>").alias("partition_values"),
-                F.lit(None)
-                .cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
-                .alias("column_stats"),
-            )
-            return TableChange(
-                table=table,
-                commit_id=commit,
-                files_added=self._to_inventory_adds(pure_adds, table),
-                files_removed=files_removed,
-                row_deletes=row_deletes,
-            )
+            return pure_adds, pure_removes.select(F.col("path").alias("eff_path"))
 
         def eff_expr(dv_col):
             return F.when(
@@ -2239,27 +2350,7 @@ class DeltaConversionSource:
         adds = adds.withColumn("_eff", eff_expr(F.col("deletionVector")))
         noop = adds.select(F.col("_eff").alias("eff_path")).intersect(removes_eff)
         adds = adds.join(noop, adds["_eff"] == noop["eff_path"], "left_anti").drop("_eff")
-        removes_eff = removes_eff.join(noop, "eff_path", "left_anti")
-
-        files_added = self._to_inventory_adds(adds, table)
-        base = self.base_path.rstrip("/") + "/"
-        abs_removed = F.when(
-            F.col("eff_path").startswith("/"), F.col("eff_path")
-        ).otherwise(F.concat(F.lit(base), F.col("eff_path")))
-        files_removed = removes_eff.select(
-            abs_removed.alias("physical_path"),
-            self._file_format_expr(abs_removed).alias("file_format"),
-            F.lit(0).cast("long").alias("size_bytes"),
-            F.lit(None).cast("long").alias("record_count"),
-            F.lit(None).cast("long").alias("last_modified_ms"),
-            F.lit(None).cast("map<string,string>").alias("partition_values"),
-            F.lit(None)
-            .cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
-            .alias("column_stats"),
-        )
-        return TableChange(
-            table=table, commit_id=commit, files_added=files_added, files_removed=files_removed
-        )
+        return adds, removes_eff.join(noop, "eff_path", "left_anti")
 
     def get_commit_identifier(self, commit: str) -> str:
         return commit

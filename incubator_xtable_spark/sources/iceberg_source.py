@@ -45,6 +45,7 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    local_frame,
 )
 from incubator_xtable_spark.model import file_formats as _ff
 from incubator_xtable_spark.model.avro_codec import read_ocf
@@ -667,7 +668,7 @@ class IcebergConversionSource:
         from incubator_xtable_spark.model.core import ROW_DELETES_SCHEMA
 
         if not affected:
-            return self.spark.createDataFrame([], ROW_DELETES_SCHEMA)
+            return local_frame(self.spark, [], ROW_DELETES_SCHEMA)
         from incubator_xtable_spark.functions.partition_transforms import (
             from_iceberg_partition_value,
         )
@@ -693,7 +694,7 @@ class IcebergConversionSource:
             (p, i["positions_path"], int(i["n_deleted"]), pv_by_path.get(p))
             for p, i in affected.items()
         ]
-        return self.spark.createDataFrame(rows, ROW_DELETES_SCHEMA)
+        return local_frame(self.spark, rows, ROW_DELETES_SCHEMA)
 
     def _equality_channel(
         self, data_entries: list[dict], eq_entries: list[dict], table
@@ -827,7 +828,7 @@ class IcebergConversionSource:
         self, entries: list[dict], table: InternalTable, affected: Optional[dict] = None
     ) -> DataFrame:
         if not entries:
-            return self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
+            return local_frame(self.spark, [], FILE_INVENTORY_SCHEMA)
         from incubator_xtable_spark.model.iceberg_values import from_iceberg_bytes
         from incubator_xtable_spark.model.stat_codec import encode_stat
 
@@ -905,10 +906,9 @@ class IcebergConversionSource:
                         col_stats or None,
                     )
                 )
-        inv = self.spark.createDataFrame(rows, FILE_INVENTORY_SCHEMA)
         # manifest entries were walked driver-side already: the inventory
-        # is a LocalRelation, so drains can collect without a count probe
-        inv._xt_local_hint = True
+        # is a LocalRelation, so drains collect it with no Spark job
+        inv = local_frame(self.spark, rows, FILE_INVENTORY_SCHEMA)
         if affected:
             from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stats
 

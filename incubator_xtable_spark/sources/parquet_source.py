@@ -35,6 +35,7 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    local_frame,
 )
 
 _FILE_LIST_SCHEMA = T.StructType(
@@ -137,38 +138,30 @@ class ParquetConversionSource:
     def get_current_snapshot(self, with_stats: bool = True) -> InternalSnapshot:
         table = self.get_current_table()
         files = _list_parquet_files(self.base_path)
-        listing = self.spark.createDataFrame(files, _FILE_LIST_SCHEMA)
-        inventory = self._build_inventory(
-            listing, table, with_stats=with_stats, local_files=files
-        )
+        inventory = self._build_inventory(table, files, with_stats=with_stats)
         version = str(table.latest_commit_time_ms or 0)
         return InternalSnapshot(table=table, version=version, files=inventory)
 
     def _build_inventory(
-        self,
-        listing: DataFrame,
-        table: InternalTable,
-        with_stats: bool,
-        local_files: Optional[list] = None,
+        self, table: InternalTable, files: list, with_stats: Optional[bool]
     ) -> DataFrame:
-        """``local_files``: the caller's driver-side [(path, size, mtime)]
-        list. Small listings (the _DRIVER_FOOTER_MAX_FILES gate) then
-        build the whole stats-bearing inventory as ONE LocalRelation —
-        no footer job, no listing<->stats join in the plan — while the
-        partition-values regex stays the same JVM expression both tiers
-        share. Values are bit-identical (same `_footer_stat_rows` loop)."""
-        inv = listing
-        limit = _DRIVER_FOOTER_MAX_FILES
-        if with_stats and local_files is not None and 0 < len(local_files) <= limit:
+        """``files``: the driver-side [(path, size, mtime)] listing, built
+        into a LocalRelation (model.core.local_frame). Small listings (the
+        _DRIVER_FOOTER_MAX_FILES gate) build the whole stats-bearing
+        inventory as ONE LocalRelation — no footer job, no
+        listing<->stats join in the plan — while the partition-values
+        regex stays the same JVM expression both tiers share, folded at
+        optimization. Values are bit-identical (same `_footer_stat_rows`
+        loop)."""
+        if with_stats and 0 < len(files) <= _DRIVER_FOOTER_MAX_FILES:
             types_by_name = {f.name: f.dataType for f in data_schema(table).fields}
             stat_by_path = {
                 p: (rc, cs)
-                for p, rc, cs in _footer_stat_rows(
-                    [p for p, _, _ in local_files], types_by_name
-                )
+                for p, rc, cs in _footer_stat_rows([p for p, _, _ in files], types_by_name)
             }
-            inv = self.spark.createDataFrame(
-                [(p, sz, m, *stat_by_path[p]) for p, sz, m in local_files],
+            inv = local_frame(
+                self.spark,
+                [(p, sz, m, *stat_by_path[p]) for p, sz, m in files],
                 T.StructType(
                     list(_FILE_LIST_SCHEMA.fields)
                     + [
@@ -182,6 +175,8 @@ class ParquetConversionSource:
                 ),
             )
             with_stats = None  # stats already attached
+        else:
+            inv = listing = local_frame(self.spark, files, _FILE_LIST_SCHEMA)
         # hive-style partition values from path segments (JVM regex)
         part_entries = []
         for pf in table.partition_fields:
@@ -195,21 +190,19 @@ class ParquetConversionSource:
             if part_entries
             else F.lit(None).cast("map<string,string>"),
         )
-        joined_stats = False
         if with_stats:
             stats = footer_stats(
                 self.spark,
                 listing,
                 data_schema(table),
-                local_paths=[p for p, _, _ in local_files] if local_files is not None else None,
+                local_paths=[p for p, _, _ in files],
             )
             inv = inv.join(stats, "physical_path", "left")
-            joined_stats = True
         elif with_stats is False:
             inv = inv.withColumn("record_count", F.lit(None).cast("long")).withColumn(
                 "column_stats", F.lit(None).cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
             )
-        out = inv.select(
+        return inv.select(
             "physical_path",
             F.lit("PARQUET").alias("file_format"),
             "size_bytes",
@@ -218,12 +211,6 @@ class ParquetConversionSource:
             "partition_values",
             "column_stats",
         )
-        if not joined_stats:
-            # listing + driver-footer stats are one LocalRelation and the
-            # partition-regex projection folds over it — drains can collect
-            # without a count probe (the footer-join tier stays untagged)
-            out._xt_local_hint = True
-        return out
 
     # -- commits (mtime-based, like the reference) -------------------------
     # NOTE: mtime commits only observe ADDITIONS. Deleted files are only
@@ -251,11 +238,8 @@ class ParquetConversionSource:
         table = self.get_current_table()
         files = _list_parquet_files(self.base_path)
         added_files = [f for f in files if f[2] == commit_ms]
-        added = self.spark.createDataFrame(added_files, _FILE_LIST_SCHEMA)
-        inventory = self._build_inventory(
-            added, table, with_stats=True, local_files=added_files
-        )
-        empty = self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
+        inventory = self._build_inventory(table, added_files, with_stats=True)
+        empty = local_frame(self.spark, [], FILE_INVENTORY_SCHEMA)
         return TableChange(table=table, commit_id=commit, files_added=inventory, files_removed=empty)
 
     def get_commit_identifier(self, commit: str) -> str:
@@ -397,9 +381,7 @@ def footer_stats(
             local_paths = probe
     if local_paths is not None and 0 < len(local_paths) <= limit:
         types_by_name = {f.name: f.dataType for f in schema.fields}
-        return spark.createDataFrame(
-            _footer_stat_rows(list(local_paths), types_by_name), out_schema
-        )
+        return local_frame(spark, _footer_stat_rows(list(local_paths), types_by_name), out_schema)
     schema_json = schema.json()
     # executor Python workers don't inherit the driver's sys.path; in local /
     # shared-fs mode the package root is directly importable once added (a

@@ -27,7 +27,10 @@ from incubator_xtable_spark.model.core import (
     SyncMode,
     SyncResult,
     SyncStatusCode,
+    TableChange,
     TableFormat,
+    is_local_plan,
+    local_frame,
 )
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
 
@@ -277,7 +280,7 @@ class ConversionController:
                 if not _commit_applies(commit, bm, last_sync, order):
                     continue
                 if change is None:  # lazy: only extract when some target needs it
-                    change = source.get_table_change_for_commit(commit)
+                    change = _materialize_once(source.get_table_change_for_commit(commit))
                 start = time.perf_counter()
                 try:
                     pending = [
@@ -336,6 +339,24 @@ class ConversionController:
                 sync_duration_sec=durations[fmt],
             )
         return results
+
+
+# The metadata-sized change channels every target drains. row_changes is
+# data-scale (row-level CDC) and stays lazy.
+_SHARED_CHANNELS = ("files_added", "files_removed", "row_deletes")
+
+
+def _materialize_once(change: TableChange) -> TableChange:
+    """Evaluate each shared channel of ``change`` ONCE, so N targets
+    drain driver-resident rows instead of each re-running the source's
+    change plan (one Spark job set per target per commit). A frame whose
+    plan is already a LocalRelation is left as is."""
+    for name in _SHARED_CHANNELS:
+        df = getattr(change, name, None)
+        if df is None or is_local_plan(df):
+            continue
+        setattr(change, name, local_frame(df.sparkSession, df.toArrow(), df.schema))
+    return change
 
 
 def _earliest_instant(bookmark: Optional[TableSyncMetadata]) -> str:

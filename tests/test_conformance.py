@@ -358,6 +358,39 @@ def test_iceberg_detects_missing_data_file(spark, tmp_path):
     assert "ICE_DATA_FILE_MISSING" in _codes(check_iceberg_conformance(spark, base))
 
 
+def test_iceberg_upper_case_partition_conforms(spark, tmp_path):
+    """A table partitioned by one upper-case column: every manifest entry
+    carries a one-field partition record named `P`, which the checker
+    must read as the record it is, and the table conforms."""
+    from incubator_xtable_spark.model.avro_codec import read_ocf
+    from incubator_xtable_spark.model.core import InternalPartitionField
+
+    base = str(tmp_path / "upper")
+    (
+        spark.read.parquet(f"{SF_SMOKE}/nation.parquet")
+        .withColumn("P", (F.col("n_nationkey") % 3).cast("string"))
+        .write.partitionBy("P")
+        .parquet(base)
+    )
+    res = ConversionController().sync(
+        ParquetConversionSource(
+            spark, base, name="nation", partition_fields=[InternalPartitionField("P")]
+        ),
+        {TableFormat.ICEBERG: IcebergConversionTarget(spark, base)},
+    )
+    assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
+    report = check_iceberg_conformance(spark, base)
+    assert report.passed, [(i.code, i.detail) for i in report.issues]
+    mdir = os.path.join(base, "metadata")
+    partitions = {
+        json.dumps(rec["data_file"]["partition"], sort_keys=True)
+        for f in os.listdir(mdir)
+        if f.endswith(".avro") and not f.startswith("snap-")
+        for rec in read_ocf(os.path.join(mdir, f))[0]
+    }
+    assert partitions == {json.dumps({"P": v}) for v in ("0", "1", "2")}
+
+
 # ---------------------------------------------------------------------------
 # Red on injected corruption — Hudi
 # ---------------------------------------------------------------------------
