@@ -23,6 +23,7 @@ import json
 import os
 import re
 from typing import Optional
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -1867,6 +1868,24 @@ def column_stats_expr(schema: T.StructType, parsed: Column) -> Column:
     return F.create_map(*entries)
 
 
+# The inventory projections of one (table, schema): the stats parse, the
+# path anchoring and the format tag are a few hundred py4j-built Columns.
+# Each costs a round trip to build, and its proxy another when py4j's
+# finalizer thread releases it, concurrently with whatever runs next. So
+# they are built once per session and reused by every commit of every
+# sync of the table.
+_PROJECTIONS: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+_PROJECTIONS_MAX = 64
+
+
+def _anchored(path_col: str, base: str) -> Column:
+    """Log paths may be absolute (external files); only relative ones are
+    anchored at the table base."""
+    return F.when(F.col(path_col).startswith("/"), F.col(path_col)).otherwise(
+        F.concat(F.lit(base), F.col(path_col))
+    )
+
+
 def _lift_column_mapping(schema: T.StructType) -> T.StructType:
     """Delta column-mapping metadata -> canonical conventions: the
     rename-stable `delta.columnMapping.id` becomes the canonical fieldId
@@ -2144,41 +2163,62 @@ class DeltaConversionSource:
 
         return format_expr(path_col, default=self._default_file_format())
 
+    def _projections(self, data_schema: T.StructType) -> tuple[list[Column], list[Column]]:
+        """(inventory projection of `add.*` rows, inventory projection of
+        `eff_path` rows) for a table whose data columns are
+        ``data_schema``, from the session's cache."""
+        key = (self.base_path, self._default_file_format(), data_schema.json())
+        per = _PROJECTIONS.setdefault(self.spark, {})
+        hit = per.get(key)
+        if hit is None:
+            if len(per) >= _PROJECTIONS_MAX:
+                per.clear()  # a long-lived session over many tables
+            base = self.base_path.rstrip("/") + "/"
+            parsed = parsed_stats_expr(data_schema)
+            abs_path, abs_removed = _anchored("path", base), _anchored("eff_path", base)
+            adds = [
+                abs_path.alias("physical_path"),
+                self._file_format_expr(abs_path).alias("file_format"),
+                F.col("size").alias("size_bytes"),
+                parsed["numRecords"].alias("record_count"),
+                F.col("modificationTime").alias("last_modified_ms"),
+                F.col("partitionValues").alias("partition_values"),
+                column_stats_expr(data_schema, parsed).alias("column_stats"),
+            ]
+            removed = [
+                abs_removed.alias("physical_path"),
+                self._file_format_expr(abs_removed).alias("file_format"),
+                F.lit(0).cast("long").alias("size_bytes"),
+                F.lit(None).cast("long").alias("record_count"),
+                F.lit(None).cast("long").alias("last_modified_ms"),
+                F.lit(None).cast("map<string,string>").alias("partition_values"),
+                F.lit(None)
+                .cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
+                .alias("column_stats"),
+            ]
+            hit = per[key] = (adds, removed)
+        return hit
+
     def _to_inventory_adds(self, adds: DataFrame, table: InternalTable) -> DataFrame:
         """Adds -> inventory. DV'd adds are converted to their purged
         shadow files (materialized idempotently, stats recomputed from the
         shadow's footer) so targets reference row-accurate data — the
         deliberate improvement over the reference's pair-drop
         (delta/DeltaConversionSource.java:147-163); see sources/delta_dv.py."""
-        base = self.base_path.rstrip("/") + "/"
         data_schema = self._data_schema(table)
-        parsed = parsed_stats_expr(data_schema)
-        # log entries may carry absolute paths (external files); only
-        # relative ones are anchored at the table base
-        abs_path = F.when(
-            F.col("path").startswith("/"), F.col("path")
-        ).otherwise(F.concat(F.lit(base), F.col("path")))
-        has_dv = (
-            F.col("deletionVector.storageType").isNotNull()
-            if "deletionVector" in adds.columns and not self.expose_row_deletes
-            else F.lit(False)
-        )
+        projection = self._projections(data_schema)[0]
         # expose_row_deletes: DV'd adds stay at their ORIGINAL path with
         # physical record_count/stats (Iceberg data-file semantics); the
         # delete sets travel separately on row_deletes
-        plain_inv = adds.filter(~has_dv).select(
-            abs_path.alias("physical_path"),
-            self._file_format_expr(abs_path).alias("file_format"),
-            F.col("size").alias("size_bytes"),
-            parsed["numRecords"].alias("record_count"),
-            F.col("modificationTime").alias("last_modified_ms"),
-            F.col("partitionValues").alias("partition_values"),
-            column_stats_expr(data_schema, parsed).alias("column_stats"),
-        )
-        if "deletionVector" not in adds.columns:
-            return plain_inv
+        if "deletionVector" not in adds.columns or self.expose_row_deletes:
+            return adds.select(*projection)
+        has_dv = F.col("deletionVector.storageType").isNotNull()
+        plain_inv = adds.filter(~has_dv).select(*projection)
         dv_list = adds.filter(has_dv).select(
-            abs_path.alias("abs_path"), "deletionVector", "partitionValues", "modificationTime"
+            _anchored("path", self.base_path.rstrip("/") + "/").alias("abs_path"),
+            "deletionVector",
+            "partitionValues",
+            "modificationTime",
         ).collect()
         if not dv_list:
             return plain_inv
@@ -2288,21 +2328,7 @@ class DeltaConversionSource:
             )
         else:
             adds, removes_eff = self._commit_diff_spark(version)
-        base = self.base_path.rstrip("/") + "/"
-        abs_removed = F.when(
-            F.col("eff_path").startswith("/"), F.col("eff_path")
-        ).otherwise(F.concat(F.lit(base), F.col("eff_path")))
-        files_removed = removes_eff.select(
-            abs_removed.alias("physical_path"),
-            self._file_format_expr(abs_removed).alias("file_format"),
-            F.lit(0).cast("long").alias("size_bytes"),
-            F.lit(None).cast("long").alias("record_count"),
-            F.lit(None).cast("long").alias("last_modified_ms"),
-            F.lit(None).cast("map<string,string>").alias("partition_values"),
-            F.lit(None)
-            .cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
-            .alias("column_stats"),
-        )
+        files_removed = removes_eff.select(*self._projections(self._data_schema(table))[1])
         return TableChange(
             table=table,
             commit_id=commit,

@@ -395,6 +395,35 @@ def test_commit_diff_reads_the_commit_not_the_checkpoint(spark, delta_table):
         assert slow == expected[version], f"spark tier at version {version}"
 
 
+def test_inventory_projection_built_once_per_table_schema(spark, delta_table, tmp_path, monkeypatch):
+    """Every commit and every fresh source over one table reuse the
+    session's inventory projection for a schema: the fixture's two data
+    schemas (before and after v8) are built once each across two full
+    replays. A copy of the table at another path gets its own projection,
+    anchored at its own base."""
+    built = []
+    real = DS.parsed_stats_expr
+
+    def counting(schema):
+        built.append(schema.fieldNames())
+        return real(schema)
+
+    monkeypatch.setattr(DS, "parsed_stats_expr", counting)
+    first = {}
+    for _ in range(2):
+        src = DS.DeltaConversionSource(spark, delta_table)
+        changes = {v: _change_rows(src._table_change_impl(str(v))) for v in _VERSIONS}
+        assert first.setdefault("changes", changes) == changes
+    assert built == [["id"], ["id", "name"]]
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(delta_table, copy)
+    change = _change_rows(DS.DeltaConversionSource(spark, copy)._table_change_impl("1"))
+    assert built[2:] == [["id"]]
+    assert [r["physical_path"] for r in change["files_added"]] == [os.path.join(copy, "c.parquet")]
+    assert [r["physical_path"] for r in change["files_removed"]] == [os.path.join(copy, "b.parquet")]
+
+
 _INCR_FORMATS = {"iceberg": "metadata", "hudi": ".hoodie"}
 
 
