@@ -2105,10 +2105,7 @@ class DeltaConversionSource:
 
         if "deletionVector" not in adds.columns:
             return local_frame(self.spark, [], ROW_DELETES_SCHEMA)
-        base = self.base_path.rstrip("/") + "/"
-        abs_path = F.when(F.col("path").startswith("/"), F.col("path")).otherwise(
-            F.concat(F.lit(base), F.col("path"))
-        )
+        abs_path = _anchored("path", self.base_path.rstrip("/") + "/")
         dv_list = (
             adds.filter(F.col("deletionVector.storageType").isNotNull())
             .select(abs_path.alias("abs_path"), "deletionVector", "partitionValues")
