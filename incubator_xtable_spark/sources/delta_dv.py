@@ -39,7 +39,7 @@ from typing import Iterable, Iterator, Optional
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -303,21 +303,6 @@ DV_DESCRIPTOR_SPARK_TYPE = T.StructType(
         T.StructField("cardinality", T.LongType()),
     ]
 )
-
-
-def purged_path_expr(path_col: Column, dv_col: Column) -> Column:
-    """Deterministic shadow-file path for a (file, DV) pair, as a Spark
-    expression: <path minus .parquet>.purged-<md5(uniqueId)[:8]>.parquet.
-    MUST stay in lockstep with `purged_path` below."""
-    uid = F.concat(
-        dv_col["storageType"],
-        dv_col["pathOrInlineDv"],
-        F.when(
-            dv_col["offset"].isNotNull(), F.concat(F.lit("@"), dv_col["offset"].cast("string"))
-        ).otherwise(F.lit("")),
-    )
-    stem = F.regexp_replace(path_col, r"\.parquet$", "")
-    return F.concat(stem, F.lit(".purged-"), F.substring(F.md5(uid), 1, 8), F.lit(".parquet"))
 
 
 def purged_path(path: str, desc: dict) -> str:

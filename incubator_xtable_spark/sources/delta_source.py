@@ -1,6 +1,9 @@
-"""Delta Lake conversion source: replays `_delta_log/*.json` with Spark's
-JSON reader — the log IS a dataset, so snapshot reconstruction is a
-DataFrame computation (window last-action-per-path), not a driver loop.
+"""Delta Lake conversion source. Every piece of log state — live files,
+metaData, protocol, txn and domainMetadata, a commit's own actions — is
+rebuilt by ONE session-free replay (`log_replay`: the checkpoint in range
+read with pyarrow, then the JSON tail) and a few folds over it; the
+frames the source hands on are driver-built `LocalRelation`s
+(`model.core.local_frame`), so draining them runs no Spark job.
 
 Reference parity:
 - snapshot scan / allFiles         delta/DeltaConversionSource.java:93-101,
@@ -11,10 +14,10 @@ Reference parity:
 - stats parse                      delta/DeltaStatsExtractor.java:68-70,
                                    delta/DeltaValueConverter.java:62-235
 
-Scale: a long log is thousands of small JSON files — Spark reads them in
-one distributed scan; the last-wins reconciliation is a single window over
-(path) which shuffles the *file inventory*, never row data. Checkpoint
-parquet support can slot in by unioning `spark.read.parquet(checkpoint)`.
+Scale: the replay reads the latest checkpoint plus the commits after it
+(minor-compaction files substituting their ranges), so its cost follows
+the live state and the checkpoint interval, not the log's age. The state
+is metadata-sized: one dict per live file.
 """
 
 from __future__ import annotations
@@ -22,10 +25,10 @@ from __future__ import annotations
 import json
 import os
 import re
-from typing import Optional
+from typing import Iterator, Optional
 from weakref import WeakKeyDictionary
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,7 +42,6 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
-    is_local_plan,
     local_frame,
 )
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
@@ -160,6 +162,7 @@ _ACTION_SCHEMA = T.StructType(
     ]
 )
 
+_ACTION_TYPES: dict[str, T.StructType] = {f.name: f.dataType for f in _ACTION_SCHEMA.fields}
 # the add-action struct: the column set of a commit's `add.*` projection
 _ADD_TYPE: T.StructType = _ACTION_SCHEMA["add"].dataType
 _ADD_NO_DV_TYPE = T.StructType([f for f in _ADD_TYPE.fields if f.name != "deletionVector"])
@@ -333,36 +336,6 @@ def _checkpoint_parquets(
     return v2[-1:]
 
 
-_SIDECAR_PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "sidecar",
-            T.StructType(
-                [
-                    T.StructField("path", T.StringType()),
-                    T.StructField("sizeInBytes", T.LongType()),
-                ]
-            ),
-        )
-    ]
-)
-
-
-def _sidecar_paths(spark: SparkSession, base_path: str, cp_paths: list[str]) -> list[str]:
-    """V2 checkpoints move file actions into sidecar parquets under
-    _delta_log/_sidecars/; the top-level file lists them as sidecar
-    actions. Absent column -> nulls -> empty list (v1 checkpoints)."""
-    rows = (
-        spark.read.schema(_SIDECAR_PROBE_SCHEMA)
-        .parquet(*cp_paths)
-        .filter(F.col("sidecar.path").isNotNull())
-        .select("sidecar.path")
-        .collect()
-    )
-    d = os.path.join(_log_dir(base_path), "_sidecars")
-    return [p if p.startswith("/") else os.path.join(d, p) for (p,) in rows]
-
-
 def list_compacted_ranges(base_path: str) -> list[tuple[int, int, str]]:
     """Minor log-compaction files <start>.<end>.compacted.json (Delta
     spec log compaction), sorted by start."""
@@ -380,11 +353,11 @@ def list_compacted_ranges(base_path: str) -> list[tuple[int, int, str]]:
 def _commit_slices(
     base_path: str, floor: int, max_version: Optional[int]
 ) -> list[tuple[str, int]]:
-    """(path, version-tag) pairs for the JSON tail above ``floor``,
-    substituting compacted-range files where available: a compacted file
-    replaces its whole commit range and tags as the range END (last-wins
-    windows downstream then order it correctly). At 100k commits with
-    compaction every 100, the listing drops 100x."""
+    """(path, version-tag) pairs for the JSON tail above ``floor`` in
+    version order, substituting compacted-range files where available: a
+    compacted file replaces its whole commit range and tags as the range
+    END, which is where it sorts. At 100k commits with compaction every
+    100, the listing drops 100x."""
     versions = [
         v
         for v in list_log_versions(base_path)
@@ -403,133 +376,183 @@ def _commit_slices(
         covered |= span
         remaining -= span  # the range's commit files (even already-cleaned
         # ones) are fully represented by the compacted file
-    for v in sorted(remaining):
+    for v in remaining:
         slices.append((os.path.join(_log_dir(base_path), f"{v:020d}.json"), v))
-    return slices
+    return sorted(slices, key=lambda s: s[1])
 
 
-# Below this many total log-JSON bytes the commit tail is parsed on the
-# DRIVER into a LocalRelation (model.core.local_frame) instead of a
-# distributed spark.read.json (r14): every downstream metadata action
-# (latest_metadata, the live-files replay, the per-commit diff, stats
-# parses) then runs on local rows at ~millisecond cost instead of paying
-# a full local[32] job per action — measured as the dominant cost of
-# small-table conversions. At scale the threshold routes big logs to the
-# distributed path unchanged (0 disables the fast path).
-# Production justification: a log under a few MB is driver-trivial on any
-# cluster; the distributed read exists for unbounded logs, not these.
-_DRIVER_LOG_MAX_BYTES = 4 * 1024 * 1024
+_LEAF_TYPES = {T.StringType: str, T.BooleanType: bool, T.IntegerType: int, T.LongType: int}
 
 
 def _schema_dict(value, dtype):
-    """Project a parsed-JSON value onto a Spark DataType the way the
-    PERMISSIVE JSON reader does: unknown fields dropped, missing fields
-    null, nested structs recursed. Raises on shape mismatches — the
-    caller falls back to the distributed reader."""
+    """Project a log value onto a Spark DataType: unknown fields dropped,
+    missing fields null, nested structs recursed, maps folded to dicts
+    (pyarrow reads a checkpoint's map columns as (key, value) pairs).
+    Raises TypeError when the value does not fit the type; the replay
+    reports that as a malformed log action."""
     if value is None:
         return None
-    if isinstance(dtype, T.StructType):
+    if isinstance(dtype, T.StructType) and isinstance(value, dict):
         return {f.name: _schema_dict(value.get(f.name), f.dataType) for f in dtype.fields}
-    if isinstance(dtype, T.ArrayType):
+    if isinstance(dtype, T.ArrayType) and isinstance(value, list):
         return [_schema_dict(v, dtype.elementType) for v in value]
-    if isinstance(dtype, T.MapType):
-        return dict(value)
-    return value
+    if isinstance(dtype, T.MapType) and isinstance(value, (dict, list)):
+        pairs = value.items() if isinstance(value, dict) else value
+        return {k: _schema_dict(v, dtype.valueType) for k, v in pairs}
+    py = _LEAF_TYPES.get(type(dtype))
+    if py is not None and isinstance(value, py) and (py is bool or not isinstance(value, bool)):
+        return value
+    raise TypeError(f"{value!r} does not fit {dtype.simpleString()}")
 
 
-def _read_log_actions_local(
-    spark: SparkSession, slices: list[tuple[str, int]]
-) -> Optional[DataFrame]:
-    """Driver-side parse of a SMALL commit-json tail (see
-    _DRIVER_LOG_MAX_BYTES) into the exact _ACTION_SCHEMA + version frame
-    the distributed reader yields — the version tag comes from the slice
-    list itself (compacted ranges tag as their END, same rule as the
-    filename regex). Returns None when the tail is too big or anything
-    about it surprises the parser (caller falls back)."""
-    try:
-        total = 0
-        for p, _ in slices:
-            total += os.path.getsize(p)
-            if total > _DRIVER_LOG_MAX_BYTES:
-                return None
-        out_schema = T.StructType(
-            list(_ACTION_SCHEMA.fields) + [T.StructField("version", T.LongType())]
-        )
-        rows = []
-        for p, ver in slices:
-            with open(p, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    d = json.loads(line)
-                    row = {
-                        f.name: _schema_dict(d.get(f.name), f.dataType)
-                        for f in _ACTION_SCHEMA.fields
-                    }
-                    row["version"] = ver
-                    rows.append(row)
-        return local_frame(spark, rows, out_schema)
-    except Exception:  # noqa: BLE001 — any surprise routes to the spark reader
+def _fit_action(raw) -> dict:
+    """A parsed log line or checkpoint row -> {kind: projected body} for
+    the _ACTION_SCHEMA kinds it carries (cdc, sidecar and the like drop)."""
+    if not isinstance(raw, dict):
+        raise TypeError(f"{raw!r} is not an action object")
+    return {
+        k: _schema_dict(v, _ACTION_TYPES[k])
+        for k, v in raw.items()
+        if k in _ACTION_TYPES and v is not None
+    }
+
+
+def _json_actions(path: str, needle: Optional[str] = None) -> Iterator[dict]:
+    """The actions of one commit (or compacted) JSON file in line order;
+    lines without ``needle`` are skipped unparsed. A line that is not
+    JSON, or whose action does not fit _ACTION_SCHEMA, raises ValueError
+    naming the file."""
+    with open(path, encoding="utf-8") as fh:
+        for n, line in enumerate(fh, 1):
+            if not line.strip() or (needle is not None and needle not in line):
+                continue
+            try:
+                action = _fit_action(json.loads(line))
+            except (TypeError, ValueError) as exc:
+                raise ValueError(f"malformed Delta log action at {path}:{n}: {exc}") from exc
+            if action:
+                yield action
+
+
+def _checkpoint_in_range(base_path: str, version: Optional[int]) -> Optional[dict]:
+    """The `_last_checkpoint` pointer when its checkpoint lies within the
+    view at ``version`` (None = head)."""
+    cp = read_last_checkpoint(base_path)
+    if cp is not None and (version is None or version >= cp["version"]):
+        return cp
+    return None
+
+
+def _checkpoint_actions(
+    base_path: str, cp: dict, kinds: tuple[str, ...] = tuple(_ACTION_TYPES)
+) -> Iterator[dict]:
+    """The ``kinds`` actions of the checkpoint ``cp`` points at, read with
+    pyarrow: classic, multi-part, or v2, whose top-level file lists the
+    sidecar parquets (under _delta_log/_sidecars/) that hold its file
+    actions."""
+    import pyarrow.parquet as pq
+
+    files = _checkpoint_parquets(base_path, cp["version"], cp.get("parts"))
+    sidecar_dir = os.path.join(_log_dir(base_path), "_sidecars")
+    for path in files:  # the loop also visits the sidecars appended below
+        names = pq.read_schema(path).names
+        if "sidecar" in names:
+            refs = pq.read_table(path, columns=["sidecar"]).column("sidecar").to_pylist()
+            files += [os.path.join(sidecar_dir, r["path"]) for r in refs if r and r["path"]]
+        cols = [k for k in kinds if k in names]
+        if not cols:
+            continue
+        try:
+            for row in pq.read_table(path, columns=cols).to_pylist():
+                action = _fit_action(row)
+                if action:
+                    yield action
+        except (TypeError, ValueError) as exc:
+            raise ValueError(f"malformed Delta checkpoint action in {path}: {exc}") from exc
+
+
+def log_replay(base_path: str, version: Optional[int] = None) -> Iterator[tuple[int, dict]]:
+    """The one replay of a Delta log: (version, action) pairs of the view
+    at ``version`` (None = head), in version order. First the actions of
+    the checkpoint in range, tagged with its version; then the JSON tail
+    after it, from `_commit_slices` (compacted ranges tag as their end).
+    An action is {kind: body} for the _ACTION_SCHEMA kinds a line or row
+    carries, projected onto _ACTION_SCHEMA (missing fields null, maps as
+    dicts), so checkpoint and JSON actions compare equal. It needs no
+    SparkSession: the streaming data-source workers replay with it too.
+    A view below the checkpoint replays the JSON from version 0."""
+    cp = _checkpoint_in_range(base_path, version)
+    floor = -1
+    if cp is not None:
+        floor = cp["version"]
+        for action in _checkpoint_actions(base_path, cp):
+            yield floor, action
+    for path, tag in _commit_slices(base_path, floor, version):
+        for action in _json_actions(path):
+            yield tag, action
+
+
+def live_adds(base_path: str, version: Optional[int] = None) -> dict[str, dict]:
+    """path -> add action of every file live at ``version``, the add
+    carrying the ``version`` it came from. The last action per path wins;
+    within one version an add beats a remove whatever the line order (a
+    DV commit removes AND re-adds the same path, and the file stays
+    live)."""
+    live: dict[str, dict] = {}
+    for ver, action in log_replay(base_path, version):
+        add, remove = action.get("add"), action.get("remove")
+        if add is not None:
+            add["version"] = ver
+            live[add["path"]] = add
+        elif remove is not None and live.get(remove["path"], {}).get("version") != ver:
+            live.pop(remove["path"], None)
+    return live
+
+
+def latest_action(base_path: str, kind: str, version: Optional[int] = None) -> Optional[dict]:
+    """The newest ``kind`` action (metaData, protocol) in the view at
+    ``version``: the JSON tail newest-first, stopping at the first file
+    that carries one, then the checkpoint. A lookup reads the commits
+    since ``kind`` last changed, not the whole log."""
+    cp = _checkpoint_in_range(base_path, version)
+    needle = f'"{kind}"'
+    for path, _ in reversed(_commit_slices(base_path, cp["version"] if cp else -1, version)):
+        found = None
+        for action in _json_actions(path, needle):
+            found = action.get(kind, found)
+        if found is not None:
+            return found
+    if cp is None:
         return None
+    return next((a[kind] for a in _checkpoint_actions(base_path, cp, (kind,))), None)
+
+
+def latest_actions(
+    base_path: str, kind: str, key: str, version: Optional[int] = None
+) -> dict[str, dict]:
+    """{``key`` value: its newest ``kind`` action} in the view at
+    ``version``: the per-key reconciliation of txn (by appId) and
+    domainMetadata (by domain), tombstones included."""
+    out: dict[str, dict] = {}
+    for _, action in log_replay(base_path, version):
+        body = action.get(kind)
+        if body is not None:
+            out[body[key]] = body
+    return out
+
+
+def latest_protocol(base_path: str, version: Optional[int] = None) -> Optional[dict]:
+    """The protocol in effect at ``version`` (None = head)."""
+    return latest_action(base_path, "protocol", version)
 
 
 def read_log_actions(
     spark: SparkSession, base_path: str, max_version: Optional[int] = None
 ) -> DataFrame:
-    """Distributed read of the transaction log, tagged with commit version.
-
-    Checkpoint-aware (Delta spec): when a checkpoint at version C exists
-    and the requested view is >= C, read the checkpoint PARQUET(s) (one
-    columnar read instead of C+1 JSON files — classic, v1 multi-part and
-    v2 UUID+sidecar layouts all supported) plus only the JSON commits
-    after C — with minor log-compaction files substituting their commit
-    ranges. Time travel below C falls back to JSON replay (commit files
-    are retained). At 100k commits this is the difference between a
-    bounded scan and an ever-growing one.
-    """
-    cp = read_last_checkpoint(base_path)
-    use_checkpoint = cp is not None and (max_version is None or max_version >= cp["version"])
-    # filename version: compacted files tag as their range END (group 2),
-    # commit files as their single version (group 1)
-    fname = F.input_file_name()
-    compact_end = F.regexp_extract(fname, r"\d{20}\.(\d{20})\.compacted\.json", 1)
-    single = F.regexp_extract(fname, r"(\d{20})\.", 1)
-    version_col = F.when(compact_end != "", compact_end).otherwise(single).cast("long")
-    floor = -1
-    cp_df = None
-    if use_checkpoint:
-        cp_version = cp["version"]
-        cp_paths = _checkpoint_parquets(base_path, cp_version, cp.get("parts"))
-        cp_paths = cp_paths + _sidecar_paths(spark, base_path, cp_paths)
-        # explicit schema: checkpoints written before newer action fields
-        # (e.g. add.deletionVector) existed read back with nulls; v2
-        # checkpointMetadata/sidecar columns are simply not selected
-        cp_df = (
-            spark.read.schema(_ACTION_SCHEMA).parquet(*cp_paths)
-            .select(*[F.col(f.name) for f in _ACTION_SCHEMA.fields])
-            .withColumn("version", F.lit(cp_version).cast("long"))
-        )
-        floor = cp_version
-    slices = _commit_slices(base_path, floor, max_version)
-    if not slices:
-        if cp_df is not None:
-            return cp_df
-        return local_frame(
-            spark,
-            [],
-            T.StructType(list(_ACTION_SCHEMA.fields) + [T.StructField("version", T.LongType())]),
-        )
-    if cp_df is None and _DRIVER_LOG_MAX_BYTES > 0:
-        local = _read_log_actions_local(spark, slices)
-        if local is not None:
-            return local
-    tail_df = (
-        spark.read.schema(_ACTION_SCHEMA)
-        .json([p for p, _ in slices])
-        .withColumn("version", version_col)
-    )
-    return cp_df.unionByName(tail_df) if cp_df is not None else tail_df
+    """The replay as an _ACTION_SCHEMA + version frame (a LocalRelation)."""
+    rows = [dict(action, version=ver) for ver, action in log_replay(base_path, max_version)]
+    schema = T.StructType(list(_ACTION_SCHEMA.fields) + [T.StructField("version", T.LongType())])
+    return local_frame(spark, rows, schema)
 
 
 def write_checkpoint(
@@ -566,14 +589,7 @@ def write_checkpoint(
 
     live = live_files_df(spark, base_path, version)
     meta = latest_metadata(spark, base_path, version)
-    proto_rows = (
-        read_log_actions(spark, base_path, version)
-        .filter((F.col("protocol.minReaderVersion").isNotNull()) & (F.col("version") <= version))
-        .orderBy(F.desc("version"))
-        .select("protocol")
-        .limit(1)
-        .collect()
-    )
+    proto = latest_protocol(base_path, version)
     null_struct = lambda name: F.lit(None).cast(_ACTION_SCHEMA[name].dataType)  # noqa: E731
     adds = live.select(
         F.struct(
@@ -597,8 +613,8 @@ def write_checkpoint(
     head_rows = []
     if meta is not None:
         head_rows.append((None, None, meta, None, None, None, None))
-    if proto_rows:
-        head_rows.append((None, None, None, proto_rows[0]["protocol"], None, None, None))
+    if proto is not None:
+        head_rows.append((None, None, None, proto, None, None, None))
     # spec "Domain Metadata": a checkpoint must carry the latest action per
     # domain, INCLUDING removed=true tombstones (concurrent writers need
     # them to detect conflicts); domains are few — a bounded collect
@@ -755,19 +771,8 @@ def latest_domain_metadata_rows(
     """Latest domainMetadata action per domain at ``version`` (spec "Domain
     Metadata" reconciliation: per-domain latest-wins), INCLUDING
     removed=true tombstones — checkpoint construction needs them. Bounded
-    output (one row per domain); checkpoint-aware via read_log_actions."""
-    actions = read_log_actions(spark, base_path, version)
-    if version is not None:
-        actions = actions.filter(F.col("version") <= version)
-    dm = actions.filter(F.col("domainMetadata.domain").isNotNull())
-    w = W.partitionBy(F.col("domainMetadata.domain")).orderBy(F.desc("version"))
-    return [
-        r["domainMetadata"]
-        for r in dm.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("domainMetadata")
-        .collect()
-    ]
+    output (one dict per domain)."""
+    return list(latest_actions(base_path, "domainMetadata", "domain", version).values())
 
 
 def latest_txn_rows(
@@ -775,20 +780,8 @@ def latest_txn_rows(
 ) -> list:
     """Latest SetTransaction action per appId at ``version`` (spec
     "Transaction Identifiers" reconciliation) — the streaming-writer
-    idempotence watermarks. Bounded output (one row per appId);
-    checkpoint-aware via read_log_actions."""
-    actions = read_log_actions(spark, base_path, version)
-    if version is not None:
-        actions = actions.filter(F.col("version") <= version)
-    tx = actions.filter(F.col("txn.appId").isNotNull())
-    w = W.partitionBy(F.col("txn.appId")).orderBy(F.desc("version"))
-    return [
-        r["txn"]
-        for r in tx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("txn")
-        .collect()
-    ]
+    idempotence watermarks. Bounded output (one dict per appId)."""
+    return list(latest_actions(base_path, "txn", "appId", version).values())
 
 
 def live_domain_metadata(
@@ -805,9 +798,8 @@ def live_domain_metadata(
 
 
 def _live_files_schema() -> T.StructType:
-    """The exact column list live_files_df projects, typed straight off
-    _ACTION_SCHEMA's add struct so the local and distributed tiers can
-    never drift."""
+    """The column list of live_files_df, typed straight off
+    _ACTION_SCHEMA's add struct."""
     def ft(n: str) -> T.DataType:
         return _ADD_TYPE[n].dataType
 
@@ -827,69 +819,9 @@ def _live_files_schema() -> T.StructType:
     )
 
 
-def _live_files_rows_local(base_path: str, version: Optional[int]):
-    """Driver-side live-files replay for small un-checkpointed log tails
-    (the _DRIVER_LOG_MAX_BYTES gate — same eligibility as
-    _read_log_actions_local): last-action-per-path-wins over a
-    metadata-sized action list is pure dict work, and running it through
-    a Spark window costs a shuffle job plus a full planning pass that
-    dwarfs the replay. Within one version the add wins the tie (the
-    Spark window's version DESC, is_add DESC rule — a DV commit removes
-    AND re-adds the same path). Returns live-add row dicts in
-    first-seen-path order, or None when ineligible (checkpoint in range
-    / oversized tail / parse surprise) so the caller falls back."""
-    try:
-        cp = read_last_checkpoint(base_path)
-        if cp is not None and (version is None or version >= cp["version"]):
-            return None
-        slices = _commit_slices(base_path, -1, version)
-        total = 0
-        for p, _ in slices:
-            total += os.path.getsize(p)
-            if total > _DRIVER_LOG_MAX_BYTES:
-                return None
-        winners: dict = {}  # path -> [version, is_add, projected add dict]
-        for p, ver in slices:
-            with open(p, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    d = json.loads(line)
-                    add, remove = d.get("add"), d.get("remove")
-                    if add is not None and add.get("path") is not None:
-                        path, is_add, proj = add["path"], True, _schema_dict(add, _ADD_TYPE)
-                    elif remove is not None and remove.get("path") is not None:
-                        path, is_add, proj = remove["path"], False, None
-                    else:
-                        continue
-                    w = winners.get(path)
-                    if w is None or ver > w[0] or (ver == w[0] and (is_add or not w[1])):
-                        winners[path] = (ver, is_add, proj)
-        return [
-            {
-                "version": ver,
-                "path": path,
-                "is_add": True,
-                "partitionValues": proj.get("partitionValues"),
-                "size": proj.get("size"),
-                "modificationTime": proj.get("modificationTime"),
-                "stats": proj.get("stats"),
-                "baseRowId": proj.get("baseRowId"),
-                "defaultRowCommitVersion": proj.get("defaultRowCommitVersion"),
-                "deletionVector": proj.get("deletionVector"),
-            }
-            for path, (ver, is_add, proj) in winners.items()
-            if is_add
-        ]
-    except Exception:  # noqa: BLE001 — any surprise routes to the spark reader
-        return None
-
-
 def _effective_path(path: str, dv: Optional[dict]) -> str:
     """The path a file is synced under: its purged shadow when a DV is
-    attached, the file itself otherwise (the Python twin of the Spark
-    `eff_expr` in `_commit_diff_spark`)."""
+    attached, the file itself otherwise."""
     from incubator_xtable_spark.sources.delta_dv import purged_path
 
     if dv is None or dv.get("storageType") is None:
@@ -900,164 +832,66 @@ def _effective_path(path: str, dv: Optional[dict]) -> str:
 def _commit_slice_paths(base_path: str, version: int) -> list[str]:
     """The log file(s) holding commit ``version``'s own actions: its JSON,
     or a compacted range that tags as this version (its END, the
-    read_log_actions rule). Never a checkpoint — a checkpoint holds a
-    table state, not the commit's actions."""
+    log_replay rule). Never a checkpoint — a checkpoint holds a table
+    state, not the commit's actions."""
     return [p for p, v in _commit_slices(base_path, -1, None) if v == version]
 
 
+def _own_actions(base_path: str, version: int) -> list[dict]:
+    return [a for p in _commit_slice_paths(base_path, version) for a in _json_actions(p)]
+
+
 def _commit_actions(spark: SparkSession, base_path: str, version: int) -> DataFrame:
-    """Commit ``version``'s own actions as an _ACTION_SCHEMA frame: parsed
-    on the driver under the _DRIVER_LOG_MAX_BYTES gate, read by Spark's
-    JSON reader above it."""
-    slices = [(p, version) for p in _commit_slice_paths(base_path, version)]
-    if _DRIVER_LOG_MAX_BYTES > 0 or not slices:
-        local = _read_log_actions_local(spark, slices)
-        if local is not None:
-            return local
-    return spark.read.schema(_ACTION_SCHEMA).json([p for p, _ in slices])
+    """Commit ``version``'s own actions as an _ACTION_SCHEMA frame."""
+    return local_frame(spark, _own_actions(base_path, version), _ACTION_SCHEMA)
 
 
 def _commit_diff_local(base_path: str, version: int, by_raw_path: bool):
-    """Driver-side diff of ONE commit for small logs (the
-    _DRIVER_LOG_MAX_BYTES gate): set and dict work over the commit's own
-    actions instead of an intersect and two anti-joins that every
-    consumer re-evaluates as Spark jobs.
+    """The diff of ONE commit, on the driver: set and dict work over the
+    commit's own actions.
 
     Files are matched by EFFECTIVE path — removes resolve their DV
     through the live state just before the commit — unless
     ``by_raw_path`` (row-delete exposure, where a DV update is a
     data-file no-op). Paths present on both sides are no-ops and drop
     out. Returns (surviving add dicts typed as _ADD_TYPE, removed
-    effective paths), or None when ineligible — the commit is over the
-    gate, or the pre-commit state is not replayable on the driver (a
-    checkpoint in range, see _live_files_rows_local) — so the caller
-    runs `_commit_diff_spark`."""
-    try:
-        own = _commit_slice_paths(base_path, version)
-        if sum(os.path.getsize(p) for p in own) > _DRIVER_LOG_MAX_BYTES:
-            return None
-        adds: list[dict] = []
-        removes: list[str] = []
-        for p in own:
-            with open(p, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    d = json.loads(line)
-                    add, remove = d.get("add"), d.get("remove")
-                    if add is not None and add.get("path") is not None:
-                        adds.append(_schema_dict(add, _ADD_TYPE))
-                    if remove is not None and remove.get("path") is not None:
-                        removes.append(remove["path"])
-        if by_raw_path:
-            add_eff = [a["path"] for a in adds]
-            removed_eff = removes
-        else:
-            prev = _live_files_rows_local(base_path, version - 1)
-            if prev is None:
-                return None
-            prev_dv = {r["path"]: r["deletionVector"] for r in prev}
-            add_eff = [_effective_path(a["path"], a["deletionVector"]) for a in adds]
-            removed_eff = [_effective_path(p, prev_dv.get(p)) for p in removes]
-        noop = set(add_eff) & set(removed_eff)
-        return (
-            [a for a, e in zip(adds, add_eff) if e not in noop],
-            [e for e in removed_eff if e not in noop],
-        )
-    except Exception:  # noqa: BLE001 — any surprise routes to the spark diff
-        return None
+    effective paths)."""
+    adds: list[dict] = []
+    removes: list[str] = []
+    for action in _own_actions(base_path, version):
+        if action.get("add") is not None:
+            adds.append(action["add"])
+        if action.get("remove") is not None:
+            removes.append(action["remove"]["path"])
+    if by_raw_path:
+        add_eff, removed_eff = [a["path"] for a in adds], removes
+    else:
+        prev = live_adds(base_path, version - 1) if removes else {}
+        add_eff = [_effective_path(a["path"], a["deletionVector"]) for a in adds]
+        removed_eff = [
+            _effective_path(p, prev.get(p, {}).get("deletionVector")) for p in removes
+        ]
+    noop = set(add_eff) & set(removed_eff)
+    return (
+        [a for a, e in zip(adds, add_eff) if e not in noop],
+        [e for e in removed_eff if e not in noop],
+    )
 
 
 def live_files_df(spark: SparkSession, base_path: str, version: Optional[int] = None) -> DataFrame:
-    """Live AddFiles at a version (time travel when version is given):
-    last action per path wins; a remove kills the path."""
-    if _DRIVER_LOG_MAX_BYTES > 0:
-        rows = _live_files_rows_local(base_path, version)
-        if rows is not None:
-            # LocalRelation inventory: consumers' projections fold at
-            # optimization and drain_rows collects it with no job
-            return local_frame(spark, rows, _live_files_schema())
-    actions = read_log_actions(spark, base_path, version)
-    if version is not None:
-        actions = actions.filter(F.col("version") <= version)
-    file_actions = actions.select(
-        "version",
-        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-        F.col("add.path").isNotNull().alias("is_add"),
-        F.col("add.partitionValues").alias("partitionValues"),
-        F.col("add.size").alias("size"),
-        F.col("add.modificationTime").alias("modificationTime"),
-        F.col("add.stats").alias("stats"),
-        F.col("add.baseRowId").alias("baseRowId"),
-        F.col("add.defaultRowCommitVersion").alias("defaultRowCommitVersion"),
-        F.col("add.deletionVector").alias("deletionVector"),
-    ).filter(F.col("path").isNotNull())
-    # within one version, the add wins the tie: a DV commit removes AND
-    # re-adds the same path (the add carries the new deletionVector), and
-    # the file stays live
-    w = W.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-    latest = file_actions.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return latest.filter(F.col("is_add")).drop("rn")
+    """Live AddFiles at a version (time travel when version is given), as
+    a LocalRelation: consumers' projections fold at optimization and
+    draining runs no job."""
+    rows = [dict(a, is_add=True) for a in live_adds(base_path, version).values()]
+    return local_frame(spark, rows, _live_files_schema())
 
 
-_META_LOCAL_MISS = object()
-
-
-def _latest_metadata_local(base_path: str, max_version: Optional[int] = None):
-    """Driver-side `latest_metadata` for small un-checkpointed log tails
-    (the _DRIVER_LOG_MAX_BYTES gate — same eligibility as
-    _read_log_actions_local): the metaData row is a few hundred bytes of
-    JSON, and resolving it through a Spark job costs a fixed scheduling
-    latency that dwarfs the read. Returns the same dict shape the
-    PERMISSIVE reader row projects to (nested structs as dicts,
-    bracket-access compatible), None for "no metaData", or
-    _META_LOCAL_MISS when ineligible (checkpoint in range / oversized
-    tail / parse surprise) so the caller falls back to the Spark path."""
-    try:
-        cp = read_last_checkpoint(base_path)
-        if cp is not None and (max_version is None or max_version >= cp["version"]):
-            return _META_LOCAL_MISS
-        slices = _commit_slices(base_path, -1, max_version)
-        total = 0
-        for p, _ in slices:
-            total += os.path.getsize(p)
-            if total > _DRIVER_LOG_MAX_BYTES:
-                return _META_LOCAL_MISS
-        meta_type = next(f.dataType for f in _ACTION_SCHEMA.fields if f.name == "metaData")
-        best, best_ver = None, -1
-        for p, ver in slices:
-            if ver < best_ver:
-                continue
-            with open(p, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    md = json.loads(line).get("metaData")
-                    if md is not None and md.get("schemaString") is not None and ver >= best_ver:
-                        best, best_ver = _schema_dict(md, meta_type), ver
-        return best
-    except Exception:  # noqa: BLE001 — any surprise routes to the spark reader
-        return _META_LOCAL_MISS
-
-
-def latest_metadata(spark: SparkSession, base_path: str, version: Optional[int] = None):
-    if _DRIVER_LOG_MAX_BYTES > 0:
-        local = _latest_metadata_local(base_path, version)
-        if local is not _META_LOCAL_MISS:
-            return local
-    actions = read_log_actions(spark, base_path, version)
-    if version is not None:
-        actions = actions.filter(F.col("version") <= version)
-    rows = (
-        actions.filter(F.col("metaData.schemaString").isNotNull())
-        .orderBy(F.desc("version"))
-        .select("metaData")
-        .limit(1)
-        .collect()
-    )
-    return rows[0]["metaData"] if rows else None
+def latest_metadata(
+    spark: SparkSession, base_path: str, version: Optional[int] = None
+) -> Optional[dict]:
+    """The metaData action in effect at ``version`` as a dict with every
+    _ACTION_SCHEMA field (None when the log has none)."""
+    return latest_action(base_path, "metaData", version)
 
 
 def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFrame:
@@ -1563,7 +1397,6 @@ def read_delta_as_df(
     if meta is None:
         raise ValueError(f"not a delta table (no metaData): {base_path}")
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    # latest_metadata returns a pyspark Row — subscript, never .get
     cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
     if cm_mode == "id":
         _enable_field_id_reads(spark)
@@ -1955,11 +1788,11 @@ class DeltaConversionSource:
         # conversion instead of assigning fresh ranges. Requires every
         # live add to carry baseRowId (a Row Tracking table).
         self.expose_row_lineage = expose_row_lineage
-        # metaData lookup cache (r14): one sync resolves the same metaData
-        # row 2-3 times (table build + file-format default), each a full
-        # Spark log-scan job. Keyed by (requested version, current log
-        # head) so an incremental commit through a long-lived source can
-        # never serve a stale row — the listdir probe is microseconds.
+        # metaData lookup cache: one sync resolves the same metaData 2-3
+        # times (table build + file-format default), each a log read.
+        # Keyed by (requested version, current log head) so an incremental
+        # commit through a long-lived source can never serve a stale
+        # entry — the listdir probe is microseconds.
         self._meta_cache: dict = {}
 
     def _latest_meta(self, version: Optional[int] = None):
@@ -2027,19 +1860,6 @@ class DeltaConversionSource:
             raise ValueError(f"not a delta table: {self.base_path}")
         version = max(list_log_versions(self.base_path))
         live = live_files_df(self.spark, self.base_path, version)
-        # materialize the live-files frame ONCE when several consumers fan
-        # out of it (inventory projection + DV scan + delete/lineage maps
-        # each re-ran the full log read + window otherwise — r14 measured
-        # the duplicated evaluations dominating the small-table sync);
-        # metadata-sized rows, so the checkpoint is cheap at any scale
-        if (
-            self.expose_row_deletes
-            or self.expose_row_lineage
-            or "deletionVector" in live.columns
-        ) and not is_local_plan(live):
-            # a LocalRelation live frame is already materialized rows —
-            # checkpointing it would only add a job
-            live = live.localCheckpoint(eager=True)
         files = self._to_inventory_adds(live, table)
         return InternalSnapshot(
             table=table,
@@ -2252,11 +2072,9 @@ class DeltaConversionSource:
                     column_stats,
                 )
             )
-        if is_local_plan(plain_inv):
-            # both halves are driver rows: ONE LocalRelation keeps the
-            # drain job-free (a union of two would run a job)
-            return local_frame(self.spark, plain_inv.collect() + dv_rows, FILE_INVENTORY_SCHEMA)
-        return plain_inv.unionByName(local_frame(self.spark, dv_rows, FILE_INVENTORY_SCHEMA))
+        # both halves are driver rows: ONE LocalRelation keeps the drain
+        # job-free (a union of two would run a job)
+        return local_frame(self.spark, plain_inv.collect() + dv_rows, FILE_INVENTORY_SCHEMA)
 
     def get_commits_backlog(self, instants: InstantsForIncrementalSync) -> CommitsBacklog:
         last_v = int(instants.last_sync_instant)
@@ -2302,29 +2120,21 @@ class DeltaConversionSource:
         at this version so a dropped DV (RESTORE) clears the target's
         delete file as well as a widened DV swapping it.
 
-        Small logs diff on the driver (`_commit_diff_local`) into
+        The diff runs on the driver (`_commit_diff_local`) into
         LocalRelation frames, so the whole change drains with no Spark
-        job; the stats parse and path projections below are the same
-        Spark expressions on both tiers.
+        job; the stats parse and path projections are Spark expressions
+        that fold at optimization.
         """
         version = int(commit)
         table = self.get_table_at_version(version)
-        local = (
-            _commit_diff_local(self.base_path, version, self.expose_row_deletes)
-            if _DRIVER_LOG_MAX_BYTES > 0
-            else None
+        add_rows, removed_paths = _commit_diff_local(
+            self.base_path, version, self.expose_row_deletes
         )
-        if local is not None:
-            add_rows, removed_paths = local
-            # without a DV'd add the frame carries no deletionVector
-            # column, which spares _to_inventory_adds its shadow probe
-            has_dv = any(a["deletionVector"] for a in add_rows)
-            adds = local_frame(self.spark, add_rows, _ADD_TYPE if has_dv else _ADD_NO_DV_TYPE)
-            removes_eff = local_frame(
-                self.spark, [(p,) for p in removed_paths], _EFF_PATH_SCHEMA
-            )
-        else:
-            adds, removes_eff = self._commit_diff_spark(version)
+        # without a DV'd add the frame carries no deletionVector column,
+        # which spares _to_inventory_adds its shadow probe
+        has_dv = any(a["deletionVector"] for a in add_rows)
+        adds = local_frame(self.spark, add_rows, _ADD_TYPE if has_dv else _ADD_NO_DV_TYPE)
+        removes_eff = local_frame(self.spark, [(p,) for p in removed_paths], _EFF_PATH_SCHEMA)
         files_removed = removes_eff.select(*self._projections(self._data_schema(table))[1])
         return TableChange(
             table=table,
@@ -2337,43 +2147,6 @@ class DeltaConversionSource:
                 else None
             ),
         )
-
-    def _commit_diff_spark(self, version: int) -> tuple[DataFrame, DataFrame]:
-        """The distributed twin of `_commit_diff_local` for commits the
-        driver tier refuses (over _DRIVER_LOG_MAX_BYTES, or a checkpoint
-        in range of the pre-commit state): (surviving adds as `add.*`
-        columns, removed effective paths as `eff_path`)."""
-        from incubator_xtable_spark.sources.delta_dv import purged_path_expr
-
-        actions = _commit_actions(self.spark, self.base_path, version)
-        adds = actions.filter(F.col("add.path").isNotNull()).select("add.*")
-        removes_raw = actions.filter(F.col("remove.path").isNotNull()).select("remove.path")
-
-        if self.expose_row_deletes:
-            noop = adds.select("path").intersect(removes_raw)
-            pure_adds = adds.join(noop, "path", "left_anti")
-            pure_removes = removes_raw.join(noop, "path", "left_anti")
-            return pure_adds, pure_removes.select(F.col("path").alias("eff_path"))
-
-        def eff_expr(dv_col):
-            return F.when(
-                dv_col["storageType"].isNotNull(),
-                purged_path_expr(F.col("path"), dv_col),
-            ).otherwise(F.col("path"))
-
-        # removed paths resolve through the state just BEFORE this commit
-        # (a removed file that carried a DV was synced as its shadow)
-        prev_dv = live_files_df(self.spark, self.base_path, version - 1).select(
-            "path", F.col("deletionVector").alias("prev_dv")
-        )
-        removes_eff = (
-            removes_raw.join(prev_dv, "path", "left")
-            .select(eff_expr(F.col("prev_dv")).alias("eff_path"))
-        )
-        adds = adds.withColumn("_eff", eff_expr(F.col("deletionVector")))
-        noop = adds.select(F.col("_eff").alias("eff_path")).intersect(removes_eff)
-        adds = adds.join(noop, adds["_eff"] == noop["eff_path"], "left_anti").drop("_eff")
-        return adds, removes_eff.join(noop, "eff_path", "left_anti")
 
     def get_commit_identifier(self, commit: str) -> str:
         return commit

@@ -259,9 +259,7 @@ def data_schema(table: InternalTable) -> T.StructType:
 
 
 # Small-listing gate for the driver-side footer path (0 disables).
-# Same auto-gating pattern as the Delta small-log parse
-# (delta_source._DRIVER_LOG_MAX_BYTES): footer reads are ~KB metadata
-# seeks whose DISTRIBUTED execution costs 3-5 fixed-latency Spark jobs
+# Footer reads are ~KB metadata seeks whose DISTRIBUTED execution costs 3-5 fixed-latency Spark jobs
 # (count + repartition exchange + Python-worker pass) — pure overhead when
 # the listing is a handful of files. The gate is on FILE COUNT, not SF: a
 # 100 TB table's 100k-file listing always takes the distributed pass

@@ -8,10 +8,10 @@ with NO SparkSession, so the engine's DataFrame-based CDC reads cannot
 run there. This source instead re-implements the Delta CDF read in
 PURE PYTHON on top of the same public spec, split the way Spark wants:
 
-- driver side (offsets + planning): pure-python log replay — checkpoint
-  parquet(s) via pyarrow (classic / multi-part / v2+sidecar layouts,
-  minor-compaction substitution via delta_source._commit_slices) plus
-  the JSON tail; each new commit plans into partition descriptors
+- driver side (offsets + planning): the engine's one Delta log replay
+  (`delta_source.log_replay` and its folds: checkpoint parquet(s) via
+  pyarrow plus the JSON tail, no SparkSession needed); each new commit
+  plans into partition descriptors
   (file path, partition values, change type, DV descriptors). Payloads
   stay metadata-sized — positions are NOT expanded at planning time.
 - executor side (read): each partition reads its parquet with pyarrow,
@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator, Optional, Tuple
+from typing import Optional
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -49,126 +49,9 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-# ---------------------------------------------------------------------------
-# Pure-python Delta log replay (no SparkSession — data-source workers)
-# ---------------------------------------------------------------------------
-
 
 def _log_dir(base_path: str) -> str:
     return os.path.join(base_path, "_delta_log")
-
-
-def _py_checkpoint_actions(
-    base_path: str, cp_version: int, cp_parts: int | None = None
-) -> Iterator[dict]:
-    """Yield the checkpoint's actions as dicts (pyarrow; classic,
-    multi-part and v2 UUID+sidecar layouts). ``cp_parts`` is the
-    pointer's optional `parts` field — it pins fragment selection so a
-    torn earlier multi-part attempt can't duplicate actions."""
-    import pyarrow.parquet as pq
-
-    from incubator_xtable_spark.sources.delta_source import _checkpoint_parquets
-
-    paths = list(_checkpoint_parquets(base_path, cp_version, cp_parts))
-    sidecars: list[str] = []
-    for p in paths:
-        tbl = pq.read_table(p)
-        cols = set(tbl.column_names)
-        if "sidecar" in cols:
-            for sc in tbl.column("sidecar").to_pylist():
-                if sc and sc.get("path"):
-                    sp = sc["path"]
-                    sidecars.append(
-                        sp
-                        if sp.startswith("/")
-                        else os.path.join(_log_dir(base_path), "_sidecars", sp)
-                    )
-        for action in ("add", "remove", "metaData", "protocol"):
-            if action in cols:
-                for v in tbl.column(action).to_pylist():
-                    if v is not None:
-                        yield {action: _normalize_maps(v)}
-    for p in sidecars:
-        tbl = pq.read_table(p)
-        for action in ("add", "remove"):
-            if action in set(tbl.column_names):
-                for v in tbl.column(action).to_pylist():
-                    if v is not None:
-                        yield {action: _normalize_maps(v)}
-
-
-def _normalize_maps(v):
-    """pyarrow map columns come back as lists of (k, v) pairs — fold
-    them to dicts recursively so checkpoint and JSON actions agree."""
-    if isinstance(v, list) and v and isinstance(v[0], tuple) and len(v[0]) == 2:
-        return {k: _normalize_maps(x) for k, x in v}
-    if isinstance(v, list):
-        return [_normalize_maps(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _normalize_maps(x) for k, x in v.items()}
-    return v
-
-
-def _py_versioned_actions(
-    base_path: str, max_version: Optional[int]
-) -> Iterator[Tuple[int, dict]]:
-    """(version, action) pairs for the log view at ``max_version``,
-    checkpoint-aware and compaction-aware — the pure-python twin of
-    delta_source.read_log_actions."""
-    from incubator_xtable_spark.sources.delta_source import (
-        _commit_slices,
-        read_last_checkpoint,
-    )
-
-    cp = read_last_checkpoint(base_path)
-    floor = -1
-    if cp is not None and (max_version is None or max_version >= cp["version"]):
-        floor = cp["version"]
-        for action in _py_checkpoint_actions(base_path, cp["version"], cp.get("parts")):
-            yield floor, action
-    for path, tag in _commit_slices(base_path, floor, max_version):
-        with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    yield tag, json.loads(line)
-
-
-def _py_live_files(base_path: str, version: int) -> dict[str, dict]:
-    """path -> {"partitionValues", "deletionVector"} live at ``version``.
-    Last version per path wins, and WITHIN one version the add beats the
-    remove regardless of line order — a DV commit removes AND re-adds
-    the same path and the file stays live (exactly live_files_df's
-    (version desc, is_add desc) fold)."""
-    state: dict[str, Optional[dict]] = {}
-    order: dict[str, tuple] = {}
-    for v, action in _py_versioned_actions(base_path, version):
-        if "add" in action:
-            a = action["add"]
-            key = (v, 1)
-            if key >= order.get(a["path"], (-1, -1)):
-                order[a["path"]] = key
-                state[a["path"]] = {
-                    "partitionValues": a.get("partitionValues") or {},
-                    "deletionVector": a.get("deletionVector"),
-                }
-        elif "remove" in action:
-            r = action["remove"]
-            key = (v, 0)
-            if key >= order.get(r["path"], (-1, -1)):
-                order[r["path"]] = key
-                state[r["path"]] = None
-    return {p: s for p, s in state.items() if s is not None}
-
-
-def _py_latest_metadata(base_path: str, version: Optional[int] = None) -> Optional[dict]:
-    meta = None
-    best = -1
-    for v, action in _py_versioned_actions(base_path, version):
-        if "metaData" in action and v >= best:
-            best = v
-            meta = action["metaData"]
-    return meta
 
 
 # ---------------------------------------------------------------------------
@@ -214,7 +97,9 @@ def _plan_commit(base_path: str, version: int) -> list[dict]:
     pair_paths = sorted(set(adds) & set(removes))
     prev: dict[str, dict] = {}
     if (pair_paths or removes) and version > 0:
-        prev = _py_live_files(base_path, version - 1)
+        from incubator_xtable_spark.sources.delta_source import live_adds
+
+        prev = live_adds(base_path, version - 1)
 
     for p in pair_paths:  # DV-update shape: row-level diff
         new_dv = adds[p].get("deletionVector")
@@ -400,7 +285,9 @@ class DeltaCDFStreamReader(DataSourceStreamReader):
         self._size_cache: dict = {}  # completed-commit bytes are immutable
         self._floor = self.starting - 1
         self.schema = schema
-        meta = _py_latest_metadata(self.base_path)
+        from incubator_xtable_spark.sources.delta_source import latest_action
+
+        meta = latest_action(self.base_path, "metaData")
         if meta is None:
             raise ValueError(f"not a delta table (no metaData): {self.base_path}")
         self.table_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -541,7 +428,9 @@ class DeltaCDFDataSource(DataSource):
 
     def schema(self) -> T.StructType:
         base = (self.options.get("path") or "").rstrip("/")
-        meta = _py_latest_metadata(base)
+        from incubator_xtable_spark.sources.delta_source import latest_action
+
+        meta = latest_action(base, "metaData")
         if meta is None:
             raise ValueError(f"not a delta table (no metaData): {base}")
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))

@@ -160,51 +160,24 @@ class DeltaSinkWriter(DataSourceStreamWriter):
 
     # -- driver ----------------------------------------------------------
     def _latest_txn_version(self) -> int:
-        """The appId's committed watermark: max txn.version across the
-        checkpoint (if any) and the JSON tail — pure-python, no session."""
-        import sys as _sys
-
-        if _PKG_ROOT not in _sys.path:
-            _sys.path.insert(0, _PKG_ROOT)
-        from incubator_xtable_spark.sources.delta_source import (
-            _checkpoint_parquets,
-            _commit_slices,
-            read_last_checkpoint,
-        )
-
-        best = -1
-        floor = -1
-        cp = read_last_checkpoint(self.base_path)
-        if cp is not None:
-            import pyarrow.parquet as pq
-
-            floor = cp["version"]
-            for p in _checkpoint_parquets(self.base_path, cp["version"], cp.get("parts")):
-                t = pq.read_table(p)
-                if "txn" in t.column_names:
-                    for tx in t.column("txn").to_pylist():
-                        if tx and tx.get("appId") == self.app_id:
-                            best = max(best, int(tx.get("version", -1)))
-        for path, _tag in _commit_slices(self.base_path, floor, None):
-            with open(path, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line or '"txn"' not in line:
-                        continue
-                    a = json.loads(line)
-                    tx = a.get("txn")
-                    if tx and tx.get("appId") == self.app_id:
-                        best = max(best, int(tx.get("version", -1)))
-        return best
+        """The appId's committed watermark: its latest txn.version in the
+        log replay (checkpoint included), -1 before its first commit."""
+        tx = self._replay().latest_actions(self.base_path, "txn", "appId").get(self.app_id)
+        return -1 if tx is None else tx["version"]
 
     def _existing_metadata(self) -> dict | None:
+        return self._replay().latest_action(self.base_path, "metaData")
+
+    @staticmethod
+    def _replay():
+        """The Delta log replay module, importable from a Python worker."""
         import sys as _sys
 
         if _PKG_ROOT not in _sys.path:
             _sys.path.insert(0, _PKG_ROOT)
-        from incubator_xtable_spark.streaming.cdf_datasource import _py_latest_metadata
+        from incubator_xtable_spark.sources import delta_source
 
-        return _py_latest_metadata(self.base_path)
+        return delta_source
 
     def commit(self, messages, batchId: int) -> None:
         files = [f for m in messages if m is not None for f in m.files]

@@ -1711,14 +1711,12 @@ def delta_shallow_clone(
     import time as _time
     import uuid as _uuid
 
-    from pyspark.sql import functions as F
-
     from incubator_xtable_spark.sources.delta_dv import dv_absolute_path
     from incubator_xtable_spark.sources.delta_source import (
         latest_metadata,
+        latest_protocol,
         list_log_versions,
         live_files_df,
-        read_log_actions,
     )
 
     src = os.path.abspath(src_path)
@@ -1739,41 +1737,24 @@ def delta_shallow_clone(
     meta = latest_metadata(spark, src, src_version)
     if meta is None:
         raise ValueError(f"not a delta table (no metaData): {src}")
-    proto_actions = read_log_actions(spark, src, src_version)
-    proto_rows = (
-        proto_actions.filter(
-            F.col("protocol.minReaderVersion").isNotNull()
-            & (F.col("version") <= src_version)
-        )
-        .orderBy(F.desc("version"))
-        .select("protocol")
-        .limit(1)
-        .collect()
-    )
-    if not proto_rows:
+    proto = latest_protocol(src, src_version)
+    if proto is None:
         raise ValueError(f"not a delta table (no protocol): {src}")
-    proto = {
-        k: v
-        for k, v in proto_rows[0]["protocol"].asDict(recursive=True).items()
-        if v is not None
-    }
+    proto = {k: v for k, v in proto.items() if v is not None}
     now_ms = int(_time.time() * 1000)
-    # latest_metadata yields a Row from the Spark reader or a plain dict
-    # from the small-log driver parse (r14) — same bracket shape either way
-    md = meta.asDict(recursive=True) if hasattr(meta, "asDict") else meta
     md_out = {
         "id": str(_uuid.uuid4()),  # a clone is a NEW table identity
         "format": {
-            "provider": (md.get("format") or {}).get("provider") or "parquet",
-            "options": dict((md.get("format") or {}).get("options") or {}),
+            "provider": (meta.get("format") or {}).get("provider") or "parquet",
+            "options": dict((meta.get("format") or {}).get("options") or {}),
         },
-        "schemaString": md["schemaString"],
-        "partitionColumns": list(md.get("partitionColumns") or []),
-        "configuration": dict(md.get("configuration") or {}),
+        "schemaString": meta["schemaString"],
+        "partitionColumns": list(meta.get("partitionColumns") or []),
+        "configuration": dict(meta.get("configuration") or {}),
         "createdTime": now_ms,
     }
-    if md.get("name"):
-        md_out["name"] = md["name"]
+    if meta.get("name"):
+        md_out["name"] = meta["name"]
 
     src_base = src.rstrip("/") + "/"
     rows = live_files_df(spark, src, src_version).collect()

@@ -675,7 +675,7 @@ class DeltaConversionTarget:
             if need_domain or rt_on or need_clustering:
                 # domainMetadata / rowTracking / clustering are writer-only
                 writer_version = max(writer_version, 7)
-            prev_proto = None if version == 0 else self._read_latest_protocol()
+            prev_proto = None if version == 0 else self._latest("protocol")
             prev_reader_feats = set((prev_proto or {}).get("readerFeatures") or [])
             prev_writer_feats = set((prev_proto or {}).get("writerFeatures") or [])
             # CDF on an existing table: legacy writer 4-6 implies it; a
@@ -1194,8 +1194,8 @@ class DeltaConversionTarget:
                 .collect()[0]
             )
             num_files, table_bytes = int(row["n"]), int(row["b"])
-        protocol = acc["protocol"] or self._read_latest_protocol()
-        metadata = acc["metadata"] or self._read_latest_metadata()
+        protocol = acc["protocol"] or self._latest("protocol")
+        metadata = acc["metadata"] or self._latest("metaData")
         payload: dict[str, Any] = {
             "txnId": str(uuid.uuid4()),
             "tableSizeBytes": table_bytes,
@@ -1218,7 +1218,7 @@ class DeltaConversionTarget:
         existing = self.get_table_properties()
         if existing is not None and existing.get("__table_id"):
             return existing["__table_id"]
-        meta = self._read_latest_metadata()
+        meta = self._latest("metaData")
         if meta is not None:
             return meta.get("id", str(uuid.uuid4()))
         return str(uuid.uuid4())
@@ -1258,47 +1258,20 @@ class DeltaConversionTarget:
         return None
 
     def _previous_configuration(self) -> dict[str, Any]:
-        meta = self._read_latest_metadata()
+        meta = self._latest("metaData")
         return dict(meta.get("configuration") or {}) if meta else {}
 
-    def _read_latest_protocol(self) -> Optional[dict[str, Any]]:
-        v = current_log_version(self.base_path)
-        if v is None:
-            return None
-        for ver in range(v, -1, -1):
-            fp = _version_file(self.base_path, ver)
-            if not os.path.exists(fp):
-                continue
-            with open(fp, encoding="utf-8") as fh:
-                for line in fh:
-                    if '"protocol"' not in line:
-                        continue
-                    action = json.loads(line)
-                    if "protocol" in action:
-                        return action["protocol"]
-        return None
+    def _latest(self, kind: str) -> Optional[dict[str, Any]]:
+        """The table's newest ``kind`` action (metaData, protocol), checkpoint
+        included, as a JSON writer spells it: the fields the replay fills
+        with null are dropped."""
+        from incubator_xtable_spark.sources.delta_source import latest_action
 
-    def _read_latest_metadata(self) -> Optional[dict[str, Any]]:
-        v = current_log_version(self.base_path)
-        if v is None:
-            return None
-        # newest-first: stop at the first commit carrying a metaData action
-        # (rescanning the whole log per commit made long replays quadratic)
-        for ver in range(v, -1, -1):
-            fp = _version_file(self.base_path, ver)
-            if not os.path.exists(fp):
-                continue
-            with open(fp, encoding="utf-8") as fh:
-                for line in fh:
-                    if '"metaData"' not in line:
-                        continue
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        return action["metaData"]
-        return None
+        body = latest_action(self.base_path, kind)
+        return None if body is None else {k: v for k, v in body.items() if v is not None}
 
     def get_table_properties(self) -> Optional[dict[str, str]]:
-        meta = self._read_latest_metadata()
+        meta = self._latest("metaData")
         if meta is None:
             return None
         return meta.get("configuration") or {}

@@ -193,10 +193,11 @@ def test_stream_starting_version_option(spark, tmp_path):
 def test_py_live_files_add_wins_within_a_version(spark, tmp_path):
     """Self-review r6: within one commit the ADD beats the REMOVE
     regardless of line order (the DV-update shape) — a last-line-wins
-    fold would wrongly kill the path when the add is written first."""
+    fold would wrongly kill the path when the add is written first. The
+    stream plans over the engine's shared live-files fold."""
     import json as _json
 
-    from incubator_xtable_spark.streaming.cdf_datasource import _py_live_files
+    from incubator_xtable_spark.sources.delta_source import live_adds
 
     base = str(tmp_path / "t")
     log = os.path.join(base, "_delta_log")
@@ -208,7 +209,7 @@ def test_py_live_files_add_wins_within_a_version(spark, tmp_path):
         # ADD first, REMOVE second — the file must stay live
         fh.write(_json.dumps({"add": {"path": "f1.parquet", "partitionValues": {}, "size": 1, "modificationTime": 2, "dataChange": True, "deletionVector": {"storageType": "u", "pathOrInlineDv": "x", "offset": 1, "sizeInBytes": 1, "cardinality": 1}}}) + "\n")
         fh.write(_json.dumps({"remove": {"path": "f1.parquet", "deletionTimestamp": 2, "dataChange": True}}) + "\n")
-    live = _py_live_files(base, 1)
+    live = live_adds(base, 1)
     assert "f1.parquet" in live
     assert (live["f1.parquet"]["deletionVector"] or {}).get("storageType") == "u"
 

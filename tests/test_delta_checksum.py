@@ -224,3 +224,36 @@ def test_conformance_red_on_corruptions(spark, tmp_path):
     open(crc_path, "w").write(original)
     report = check_delta_conformance(spark, base)
     assert report.passed, [(i.code, i.detail) for i in report.issues]
+
+
+def test_checksum_protocol_survives_log_expiry(spark, tmp_path):
+    """After delta_expire_log prunes the commits behind a checkpoint, the
+    next commit's .crc still embeds the table's protocol: the target reads
+    it from the log replay, checkpoint included, not from whichever JSON
+    commits remain."""
+    from incubator_xtable_spark.sync.retention import delta_expire_log
+
+    base = _seed(spark, tmp_path, "crc_expire")
+    source = ParquetConversionSource(spark, base, name="customer")
+    controller = ConversionController()
+    customers = spark.read.parquet(f"{SF_SMOKE}/customer.parquet")
+
+    def sync(n):
+        customers.filter(F.col("c_custkey") < n).coalesce(1).write.mode("append").parquet(base)
+        target = DeltaConversionTarget(
+            spark, base, checkpoint_interval=2, version_checksum=True
+        )
+        controller.sync(source, {TableFormat.DELTA: target})
+
+    for n in (10, 20, 30, 40):
+        sync(n)
+    head = current_log_version(base)
+    protocol = read_version_checksum(base, head)["protocol"]
+    assert isinstance(protocol, dict)
+    assert delta_expire_log(base)
+    sync(50)
+    assert current_log_version(base) == head + 1
+    crc = read_version_checksum(base, head + 1)
+    assert crc["protocol"] == protocol
+    assert isinstance(crc["metadata"], dict)
+    assert crc["numFiles"] == _fresh_state(spark, base)[0]

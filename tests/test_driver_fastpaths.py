@@ -1,24 +1,30 @@
-"""Driver-side fast-path tier equality (r14 optimization round).
+"""The Delta log replay on the driver, and the driver-side fast paths.
 
-The small-log live-files replay (`_live_files_rows_local`), the
-driver-side per-commit diff (`_commit_diff_local`) and the LocalRelation
-drain shortcut are pure latency optimizations: every test here pins that
-the fast tier and the distributed tier produce IDENTICAL rows and
-schemas, on tables exercising adds, removes, same-version remove+re-add
-(the DV commit shape), partition values, external paths, schema changes
-and time travel — and that the fast tier really runs no Spark job."""
+Delta log state comes from one session-free replay
+(`delta_source.log_replay` and its folds). This file keeps the Spark
+computation it replaced as a test-local REFERENCE: a `spark.read.json`
+log read with a last-action-per-path window, and the intersect /
+anti-join commit diff. The replay must equal it on tables exercising
+adds, removes, same-version remove+re-add (the DV commit shape),
+partition values, external paths, schema changes and time travel; with
+a classic, multi-part or v2+sidecar checkpoint in range, and after the
+log behind it expired — and it must run no Spark job."""
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
 import shutil
 import uuid
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 import incubator_xtable_spark.sources.delta_source as DS
 from incubator_xtable_spark.model.core import is_local_plan
@@ -135,14 +141,90 @@ def delta_table(tmp_path):
 _VERSIONS = list(range(10))
 
 
-@contextlib.contextmanager
-def _driver_log_tier_off():
-    old = DS._DRIVER_LOG_MAX_BYTES
-    DS._DRIVER_LOG_MAX_BYTES = 0
-    try:
-        yield
-    finally:
-        DS._DRIVER_LOG_MAX_BYTES = old
+# ---------------------------------------------------------------------------
+# The Spark reference: the distributed log computation the replay replaced
+# ---------------------------------------------------------------------------
+
+
+def _spark_actions(spark, base, version):
+    """Every commit JSON up to ``version`` through Spark's JSON reader,
+    tagged with the version in its file name."""
+    files = sorted(glob.glob(os.path.join(base, "_delta_log", "*.json")))
+    files = [f for f in files if int(os.path.basename(f)[:20]) <= version]
+    version_col = F.regexp_extract(F.input_file_name(), r"(\d{20})\.json$", 1).cast("long")
+    return spark.read.schema(DS._ACTION_SCHEMA).json(files).withColumn("version", version_col)
+
+
+def _spark_live_files(spark, base, version):
+    """Last action per path wins; within one version the add wins."""
+    file_actions = _spark_actions(spark, base, version).select(
+        "version",
+        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
+        F.col("add.path").isNotNull().alias("is_add"),
+        *[F.col(f"add.{c}").alias(c) for c in DS._live_files_schema().fieldNames()[3:]],
+    ).filter(F.col("path").isNotNull())
+    w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
+    latest = file_actions.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    return latest.filter(F.col("is_add")).drop("rn")
+
+
+def _spark_purged_path(path_col, dv_col):
+    """`delta_dv.purged_path` as a Spark expression."""
+    uid = F.concat(
+        dv_col["storageType"],
+        dv_col["pathOrInlineDv"],
+        F.when(
+            dv_col["offset"].isNotNull(), F.concat(F.lit("@"), dv_col["offset"].cast("string"))
+        ).otherwise(F.lit("")),
+    )
+    stem = F.regexp_replace(path_col, r"\.parquet$", "")
+    return F.concat(stem, F.lit(".purged-"), F.substring(F.md5(uid), 1, 8), F.lit(".parquet"))
+
+
+def _spark_commit_diff(spark, base, version, by_raw_path):
+    """(surviving adds as `add.*` columns, removed effective paths as
+    `eff_path`) of one commit, with intersect and anti-joins."""
+    log = os.path.join(base, "_delta_log", f"{version:020d}.json")
+    actions = spark.read.schema(DS._ACTION_SCHEMA).json(log)
+    adds = actions.filter(F.col("add.path").isNotNull()).select("add.*")
+    removes_raw = actions.filter(F.col("remove.path").isNotNull()).select("remove.path")
+    if by_raw_path:
+        noop = adds.select("path").intersect(removes_raw)
+        pure_removes = removes_raw.join(noop, "path", "left_anti")
+        return adds.join(noop, "path", "left_anti"), pure_removes.select(
+            F.col("path").alias("eff_path")
+        )
+
+    def eff_expr(dv_col):
+        return F.when(
+            dv_col["storageType"].isNotNull(), _spark_purged_path(F.col("path"), dv_col)
+        ).otherwise(F.col("path"))
+
+    prev_dv = _spark_live_files(spark, base, version - 1).select(
+        "path", F.col("deletionVector").alias("prev_dv")
+    )
+    removes_eff = removes_raw.join(prev_dv, "path", "left").select(
+        eff_expr(F.col("prev_dv")).alias("eff_path")
+    )
+    adds = adds.withColumn("_eff", eff_expr(F.col("deletionVector")))
+    noop = adds.select(F.col("_eff").alias("eff_path")).intersect(removes_eff)
+    adds = adds.join(noop, adds["_eff"] == noop["eff_path"], "left_anti").drop("_eff")
+    return adds, removes_eff.join(noop, "eff_path", "left_anti")
+
+
+def _spark_change_rows(spark, src, version):
+    """`_change_rows` of the reference diff, through the source's own
+    inventory projections."""
+    table = src.get_table_at_version(version)
+    adds, removes_eff = _spark_commit_diff(spark, src.base_path, version, src.expose_row_deletes)
+    live = _spark_live_files(spark, src.base_path, version)
+    return _change_rows(
+        SimpleNamespace(
+            files_added=src._to_inventory_adds(adds, table),
+            files_removed=removes_eff.select(*src._projections(src._data_schema(table))[1]),
+            row_deletes=src._row_deletes_for(live) if src.expose_row_deletes else None,
+        )
+    )
 
 
 @contextlib.contextmanager
@@ -169,15 +251,18 @@ def _schema_json(df):
     return [f.jsonValue() for f in df.schema.fields]
 
 
-def test_live_files_tiers_identical(spark, delta_table):
-    for version in (None, *_VERSIONS):
-        fast = DS.live_files_df(spark, delta_table, version)
-        assert is_local_plan(fast), "small log must take the local tier"
-        with _driver_log_tier_off():
-            slow = DS.live_files_df(spark, delta_table, version)
-            assert not is_local_plan(slow)
-        assert _schema_json(fast) == _schema_json(slow)
-        assert _rows(fast) == _rows(slow), f"tier mismatch at version {version}"
+def test_live_files_match_spark_reference(spark, delta_table):
+    for version in _VERSIONS:
+        with _spark_jobs(spark) as jobs:
+            replayed = DS.live_files_df(spark, delta_table, version)
+            rows = _rows(replayed)
+        assert jobs == [0] and is_local_plan(replayed)
+        reference = _spark_live_files(spark, delta_table, version)
+        assert _schema_json(replayed) == _schema_json(reference)
+        assert rows == _rows(reference), f"mismatch at version {version}"
+    assert _rows(DS.live_files_df(spark, delta_table)) == _rows(
+        DS.live_files_df(spark, delta_table, _VERSIONS[-1])
+    )
 
 
 def test_live_files_dv_tie_add_wins(spark, delta_table):
@@ -189,18 +274,63 @@ def test_live_files_dv_tie_add_wins(spark, delta_table):
     assert live["a.parquet"]["deletionVector"]["cardinality"] == 1
 
 
-def test_live_files_checkpoint_falls_back(spark, tmp_path, delta_table):
-    """A checkpoint in range must route to the distributed reader."""
-    DS.write_checkpoint(spark, delta_table, 2)
-    assert DS._live_files_rows_local(delta_table, None) is None
-    assert DS._live_files_rows_local(delta_table, 2) is None
-    # time travel BELOW the checkpoint keeps the local tier (JSON replay)
-    assert DS._live_files_rows_local(delta_table, 1) is not None
-    # and the public API still answers identically everywhere
-    fast = _rows(DS.live_files_df(spark, delta_table, 1))
-    with _driver_log_tier_off():
-        slow = _rows(DS.live_files_df(spark, delta_table, 1))
-    assert fast == slow
+@pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
+def test_replay_with_checkpoint_in_range(spark, delta_table, monkeypatch, layout):
+    """With a checkpoint at version 4 in range, and again once the log
+    behind it has expired, every view from 4 on replays with no Spark
+    job and equals the JSON-only reference. Fragments and sidecars hold
+    two actions each, so the multi-part and v2 layouts span several
+    files."""
+    from incubator_xtable_spark.sync.retention import delta_expire_log
+
+    monkeypatch.setattr(DS, "_MULTIPART_ACTIONS_PER_FILE", 2)
+    monkeypatch.setattr(DS, "_SIDECAR_ACTIONS_PER_FILE", 2)
+    views = range(4, 10)
+
+    def state(version):
+        return (
+            _rows(_spark_live_files(spark, delta_table, version).drop("version")),
+            DS.latest_metadata(spark, delta_table, version),
+            DS.latest_protocol(delta_table, version),
+        )
+
+    expected = {v: state(v) for v in views}
+    DS.write_checkpoint(spark, delta_table, 4, layout=layout)
+    log = os.path.join(delta_table, "_delta_log")
+    if layout != "classic":
+        parts = glob.glob(os.path.join(log, "*.checkpoint.*.parquet"))
+        parts += glob.glob(os.path.join(log, "_sidecars", "*.parquet"))
+        assert len(parts) > 2, parts
+    for expired in (False, True):
+        if expired:
+            assert delta_expire_log(delta_table) == [0, 1, 2, 3, 4]
+        for v in views:
+            with _spark_jobs(spark) as jobs:
+                live = DS.live_files_df(spark, delta_table, v)
+                got = (
+                    _rows(live.drop("version")),
+                    DS.latest_metadata(spark, delta_table, v),
+                    DS.latest_protocol(delta_table, v),
+                )
+            assert jobs == [0] and is_local_plan(live)
+            assert got == expected[v], f"version {v}, expired={expired}"
+            # state at or above the checkpoint is tagged with its version
+            assert {r["version"] for r in live.collect()} <= set(range(4, v + 1))
+
+
+def test_malformed_log_line_fails_loudly(spark, delta_table):
+    """A log line that is not JSON, or whose action does not fit the
+    action schema, raises a ValueError naming the log file."""
+    log = os.path.join(delta_table, "_delta_log")
+    _write_commit(log, 10, [{"add": {"path": "g.parquet", "size": "12"}}])
+    with pytest.raises(ValueError, match=f"{10:020d}.json:1"):
+        DS.live_files_df(spark, delta_table)
+    with open(os.path.join(log, f"{10:020d}.json"), "w", encoding="utf-8") as fh:
+        fh.write('{"commitInfo": {}}\n{"add": {"path": \n')
+    with pytest.raises(ValueError, match=f"{10:020d}.json:2"):
+        DS.live_files_df(spark, delta_table)
+    # views that do not reach the bad commit still replay
+    assert len(_rows(DS.live_files_df(spark, delta_table, 9))) == 4
 
 
 def test_drain_rows_local_hint_collects_identically(spark):
@@ -240,30 +370,29 @@ def _change_rows(change):
 
 
 @pytest.mark.parametrize("expose_row_deletes", [False, True])
-def test_commit_diff_driver_tier_equals_spark_tier(spark, delta_table, expose_row_deletes):
-    """The driver-side per-commit diff equals the Spark diff for every
-    version of the fixture — the DV update, the same-version tie, the
-    no-op pair, the external path, the DV'd-file removal and the schema
-    change — with stats, in both delete representations."""
+def test_commit_diff_matches_spark_reference(spark, delta_table, expose_row_deletes):
+    """The driver-side per-commit diff equals the Spark reference diff for
+    every version of the fixture — the DV update, the same-version tie,
+    the no-op pair, the external path, the DV'd-file removal and the
+    schema change — with stats, in both delete representations."""
     src = DS.DeltaConversionSource(spark, delta_table, expose_row_deletes=expose_row_deletes)
     seen_removed = seen_added = 0
     for version in _VERSIONS:
         with _spark_jobs(spark) as jobs:
             fast_change = src._table_change_impl(str(version))
             fast = _change_rows(fast_change)
-        # the driver tier — purged shadows and delete files included —
-        # builds and drains every channel with no Spark job at all
+        # purged shadows and delete files included, every channel is
+        # built and drained with no Spark job at all
         assert jobs == [0], f"version {version} ran {jobs[0]} Spark jobs"
         for df in (fast_change.files_added, fast_change.files_removed, fast_change.row_deletes):
             assert df is None or is_local_plan(df)
-        with _driver_log_tier_off():
-            slow = _change_rows(src._table_change_impl(str(version)))
-        assert fast == slow, f"diff tier mismatch at version {version}"
+        reference = _spark_change_rows(spark, src, version)
+        assert fast == reference, f"diff mismatch at version {version}"
         seen_added += len(fast["files_added"])
         seen_removed += len(fast["files_removed"])
     assert seen_added and seen_removed  # non-vacuous
 
-    # spot-check the interesting commits on the driver tier
+    # spot-check the interesting commits
     def paths(version, side):
         return sorted(
             os.path.basename(r["physical_path"])
@@ -284,28 +413,6 @@ def test_commit_diff_driver_tier_equals_spark_tier(spark, delta_table, expose_ro
         assert paths(2, "files_removed") == ["a.parquet"]
         # removing the DV'd file removes the shadow it was synced as
         assert paths(7, "files_removed") == shadow
-
-
-def test_sync_identical_with_fastpath_off(spark, tmp_path):
-    """End-to-end: a delta->iceberg DV-relay sync produces a table whose
-    read-back rows are identical with the driver fast paths disabled."""
-    from incubator_xtable_spark.plans import metadata_queries as MQ
-    from incubator_xtable_spark.sources.iceberg_source import read_iceberg_as_df
-
-    sf = "/root/testdata/sf0.001"
-    MQ._DV_STAGE_CACHE.clear()
-    work_fast = MQ._staged_dv_table(spark, sf)
-    rows_fast = read_iceberg_as_df(spark, work_fast).orderBy("n_nationkey").collect()
-    MQ._DV_STAGE_CACHE.clear()
-    old = DS._DRIVER_LOG_MAX_BYTES
-    DS._DRIVER_LOG_MAX_BYTES = 0
-    try:
-        work_slow = MQ._staged_dv_table(spark, sf)
-        rows_slow = read_iceberg_as_df(spark, work_slow).orderBy("n_nationkey").collect()
-    finally:
-        DS._DRIVER_LOG_MAX_BYTES = old
-        MQ._DV_STAGE_CACHE.clear()
-    assert rows_fast == rows_slow
 
 
 def test_hudi_index_delta_driver_tier_equals_spark_tier(spark, tmp_path, monkeypatch):
@@ -384,15 +491,12 @@ def test_hudi_index_delta_driver_tier_equals_spark_tier(spark, tmp_path, monkeyp
 def test_commit_diff_reads_the_commit_not_the_checkpoint(spark, delta_table):
     """A checkpoint holds a table state, not a commit: after one is
     written at version 4, every commit's diff — at, below and above the
-    checkpoint, on both tiers — still equals the checkpoint-free diff."""
+    checkpoint — still equals the checkpoint-free diff."""
     src = DS.DeltaConversionSource(spark, delta_table)
     expected = {v: _change_rows(src._table_change_impl(str(v))) for v in _VERSIONS}
     DS.write_checkpoint(spark, delta_table, 4)
     for version in _VERSIONS:
         assert _change_rows(src._table_change_impl(str(version))) == expected[version], version
-        with _driver_log_tier_off():
-            slow = _change_rows(src._table_change_impl(str(version)))
-        assert slow == expected[version], f"spark tier at version {version}"
 
 
 def test_inventory_projection_built_once_per_table_schema(spark, delta_table, tmp_path, monkeypatch):
@@ -491,21 +595,26 @@ def _restore_targets(root: str, saved: str) -> None:
         shutil.copytree(os.path.join(saved, fmt), os.path.join(root, sub))
 
 
-def _incremental_sync(spark, root, formats=("iceberg", "hudi")):
+def _incremental_sync(spark, root, formats=("iceberg", "hudi"), source_cls=DS.DeltaConversionSource):
     from incubator_xtable_spark.sync.controller import ConversionController
 
-    res = ConversionController().sync(DS.DeltaConversionSource(spark, root), _targets(spark, root, formats))
+    res = ConversionController().sync(source_cls(spark, root), _targets(spark, root, formats))
     assert {(r.status.value, r.mode.value) for r in res.values()} == {("SUCCESS", "INCREMENTAL")}
 
 
-def test_incremental_sync_runs_no_spark_job(spark, delta_backlog):
-    """Spark-job regression guard: replaying a small, checkpoint-free
-    Delta backlog into Iceberg and Hudi is metadata work only — 0 Spark
-    jobs — and each reader then plans exactly the source's files."""
+@pytest.mark.parametrize("checkpoint", [False, True])
+def test_incremental_sync_runs_no_spark_job(spark, delta_backlog, checkpoint):
+    """Spark-job regression guard: replaying a small Delta backlog into
+    Iceberg and Hudi is metadata work only — 0 Spark jobs, also with a
+    checkpoint at the first backlog commit, which puts the second
+    commit's pre-commit state on the checkpoint — and each reader then
+    plans exactly the source's files."""
     from incubator_xtable_spark.sources.hudi_source import read_hudi_as_df
     from incubator_xtable_spark.sources.iceberg_source import read_iceberg_as_df
 
     root, saved, expected = delta_backlog
+    if checkpoint:
+        DS.write_checkpoint(spark, root, 1)
     _restore_targets(root, saved)
     with _spark_jobs(spark) as jobs:
         _incremental_sync(spark, root)
@@ -519,17 +628,28 @@ def test_incremental_sync_runs_no_spark_job(spark, delta_backlog):
     assert planned(read_hudi_as_df(spark, root)) == expected
 
 
+class _RddChangeSource(DS.DeltaConversionSource):
+    """The Delta source with its change frames re-planned as LogicalRDDs
+    (`spark.createDataFrame(list)`): every drain of one runs a Spark job."""
+
+    def get_table_change_for_commit(self, commit):
+        change = super().get_table_change_for_commit(commit)
+        for name in ("files_added", "files_removed"):
+            df = getattr(change, name)
+            setattr(change, name, self.spark.createDataFrame(df.collect(), df.schema))
+        return change
+
+
 def test_change_materialized_once_across_targets(spark, delta_backlog):
-    """With the driver log tier off the Delta change is a Spark plan; the
-    controller evaluates it once per commit and hands every target the
-    same rows, so a second target adds no Spark job."""
+    """When a source's change frames are Spark plans, the controller
+    evaluates them once per commit and hands every target the same rows,
+    so a second target adds no Spark job."""
     root, saved, _ = delta_backlog
-    with _driver_log_tier_off():
-        _restore_targets(root, saved)
-        with _spark_jobs(spark) as one_target:
-            _incremental_sync(spark, root, ("iceberg",))
-        _restore_targets(root, saved)
-        with _spark_jobs(spark) as two_targets:
-            _incremental_sync(spark, root)
-    assert one_target[0] > 0  # the Spark diff really ran
+    _restore_targets(root, saved)
+    with _spark_jobs(spark) as one_target:
+        _incremental_sync(spark, root, ("iceberg",), _RddChangeSource)
+    _restore_targets(root, saved)
+    with _spark_jobs(spark) as two_targets:
+        _incremental_sync(spark, root, source_cls=_RddChangeSource)
+    assert one_target[0] > 0  # the change frames really ran as jobs
     assert two_targets == one_target
