@@ -263,16 +263,6 @@ class SyncResult:
     catalog_sync_statuses: list = field(default_factory=list)
 
 
-# Above this many inventory rows, the "auto" drain mode switches from one
-# bulk collect() to toLocalIterator(): measured at 1 M files, collect is
-# 48.6 s / 276 MB driver RSS vs stream 28.6 s / 151 MB flat — below it,
-# collect's single job wins. "auto" is requested only on snapshot-scale
-# drains (FULL sync inventories, the one unbounded case); per-commit diff
-# drains stay on plain collect because ANY probe there (count, limit,
-# plan-size estimate) measurably doubled-to-5x'd replay cost when tried.
-STREAM_DRAIN_THRESHOLD = 200_000
-
-
 def local_frame(spark: Any, rows: Any, schema: T.StructType):
     """A driver-built metadata frame that Spark plans as a real
     ``LocalRelation``.
@@ -302,44 +292,3 @@ def is_local_plan(df: Any) -> bool:
     nothing to compile."""
     plan = df._jdf.queryExecution().optimizedPlan()
     return plan.getClass().getSimpleName() == "LocalRelation"
-
-
-def drain_rows(df: Any, streaming: Any = None):
-    """Iterate a (metadata-sized) inventory DataFrame driver-side.
-
-    ``streaming``:
-    - ``None`` (default): bulk ``collect()`` — one job, right for
-      bounded per-commit diffs;
-    - ``True``: ``toLocalIterator(prefetchPartitions=True)`` — one partition
-      resident in python at a time, flat driver RSS;
-    - ``"auto"`` (snapshot-scale drains): a frame whose optimized plan is
-      a ``LocalRelation`` is already driver-resident, so it is collected
-      directly. Otherwise ``persist()`` + ``count()`` materializes the
-      plan once into the executor block cache (in local mode the shared
-      JVM, NOT python driver RSS), then drains from cache — ``collect()``
-      at or below ``STREAM_DRAIN_THRESHOLD`` rows, streaming iterator
-      above it (cache also prevents toLocalIterator's per-partition
-      recompute of the upstream plan). The cache drops when iteration
-      finishes.
-    """
-    if streaming == "auto" and is_local_plan(df):
-        return iter(df.collect())
-    if streaming == "auto":
-        df = df.persist()
-        n = df.count()
-        rows = (
-            df.toLocalIterator(prefetchPartitions=True)
-            if n > STREAM_DRAIN_THRESHOLD
-            else iter(df.collect())
-        )
-
-        def _drain_then_unpersist(frame, it):
-            try:
-                yield from it
-            finally:
-                frame.unpersist()
-
-        return _drain_then_unpersist(df, rows)
-    if streaming:
-        return df.toLocalIterator(prefetchPartitions=True)
-    return iter(df.collect())

@@ -26,8 +26,8 @@ uncovered-file path.
 Scale notes: the index is read distributed (``spark.read.parquet`` over
 the delta files); the merge is one shuffle on (partition_path, file_name,
 column_name); delta rows per commit = files_touched x n_columns (metadata
-volume, ~1e-6 of data volume). Writes go through a Spark single-partition
-write + atomic rename — no driver-side collect of stats rows.
+volume, ~1e-6 of data volume). Each commit's delta is one pyarrow file
+written from the rows the target already holds, then renamed into place.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ import glob
 import json
 import logging
 import os
-import shutil
 import uuid
 from struct import error as struct_error
 from typing import Optional
@@ -1065,115 +1064,16 @@ def read_partition_stats(base_path: str) -> dict[str, dict[str, dict]]:
     return out
 
 
-def relativize_expr(base_path: str, col: str = "physical_path"):
-    """Strip an optional file: scheme plus the literal base-path prefix
-    (substring arithmetic, no regex — metachar-safe)."""
-    base = base_path.rstrip("/") + "/"
-    p = F.regexp_replace(F.col(col), r"^file:(//)?", "")
-    return F.when(p.startswith(base), p.substr(F.lit(len(base) + 1), F.length(p))).otherwise(p)
-
-
-def stats_records_for_commit(
-    adds: DataFrame | None,
-    removed_rel_paths: DataFrame | None,
-    base_path: str,
-    instant: str,
-) -> DataFrame | None:
-    """Build the index delta records for one commit: one record per
-    (added file x column) plus a file-level tombstone per replaced file."""
-    parts = []
-    if adds is not None:
-        rel = relativize_expr(base_path)
-        exploded = (
-            adds.select(
-                rel.alias("rel_path"),
-                F.col("record_count"),
-                F.explode(F.col("column_stats")).alias("column_name", "stat"),
-            )
-            .select(
-                F.lit(instant).alias("commit_instant"),
-                _dirname(F.col("rel_path")).alias("partition_path"),
-                _basename(F.col("rel_path")).alias("file_name"),
-                "column_name",
-                F.col("stat.min_json").alias("min_json"),
-                F.col("stat.max_json").alias("max_json"),
-                F.col("stat.null_count").alias("null_count"),
-                # valueCount counts all values incl. nulls = file row count
-                F.col("record_count").alias("value_count"),
-                F.lit(False).alias("is_deleted"),
-            )
-        )
-        parts.append(exploded)
-    if removed_rel_paths is not None:
-        tombs = removed_rel_paths.select(
-            F.lit(instant).alias("commit_instant"),
-            _dirname(F.col("rel_path")).alias("partition_path"),
-            _basename(F.col("rel_path")).alias("file_name"),
-            F.lit(None).cast("string").alias("column_name"),
-            F.lit(None).cast("string").alias("min_json"),
-            F.lit(None).cast("string").alias("max_json"),
-            F.lit(None).cast("long").alias("null_count"),
-            F.lit(None).cast("long").alias("value_count"),
-            F.lit(True).alias("is_deleted"),
-        )
-        parts.append(tombs)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _dirname(col):
-    # '' for root-partition files (Hudi's empty partitionPath)
-    slash = F.length(col) - F.length(F.substring_index(col, "/", -1)) - 1
-    return F.when(col.contains("/"), col.substr(F.lit(1), slash)).otherwise(F.lit(""))
-
-
 def _basename(col):
     return F.substring_index(col, "/", -1)
 
 
-def _write_index_delta(recs: DataFrame, d: str, instant: str) -> bool:
-    """Single-parquet atomic append (rename — same put-if-absent posture
-    as the timeline write)."""
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-    recs.repartition(1).write.mode("overwrite").parquet(tmp)
-    part = next(iter(glob.glob(os.path.join(tmp, "part-*.parquet"))), None)
-    if part is None:  # zero-row delta — nothing to index
-        shutil.rmtree(tmp, ignore_errors=True)
-        return False
-    final = os.path.join(d, f"{instant}.parquet")
-    os.rename(part, final)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return True
-
-
-def _strip_file_scheme(path: str) -> str:
-    # python twin of relativize_expr's ^file:(//)? strip
-    if path.startswith("file://"):
-        return path[len("file://") :]
-    if path.startswith("file:"):
-        return path[len("file:") :]
-    return path
-
-
-def _relativize_py(base_path: str, path: str) -> str:
-    base = base_path.rstrip("/") + "/"
-    p = _strip_file_scheme(path)
-    return p[len(base) :] if p.startswith(base) else p
-
-
 def _write_index_delta_rows(records: list[tuple], fields: list[tuple], d: str, instant: str) -> bool:
-    """Driver tier of ``_write_index_delta``: identical records, identical
-    single-parquet rename layout, zero Spark jobs. Engaged only for
-    metadata-sized deltas the target already drained to the driver (both
-    index readers load with an explicit Spark schema, so the pyarrow file
-    is read exactly like the Spark-written one). An empty ``records`` list
-    still writes a 0-row typed file — the Spark tier does too (one delta
-    per commit, named by the instant)."""
+    """One index delta file ``<d>/<instant>.parquet``: a pyarrow write to
+    a temp name, then an atomic rename (the put-if-absent posture of the
+    timeline write), no Spark job. Both index readers load with an
+    explicit Spark schema. An empty ``records`` list still writes a 0-row
+    typed file (one delta per commit, named by the instant)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1201,11 +1101,12 @@ def write_col_stats_delta_rows(
     base_path: str,
     instant: str,
 ) -> bool:
-    """Driver-tier twin of ``write_col_stats_delta`` over rows the target
-    already drained for write stats: one record per (added file x column)
-    in drain order, then one tombstone per removed file — the same rows,
-    in the same order, as the Spark expression pipeline emits. ``None``
-    means that input is absent (the Spark tier's ``adds is None``)."""
+    """Append one col-stats index delta for a commit, from the rows the
+    target already built its write stats from: one record per (added file
+    x column) in add order, then one file-level tombstone per removed
+    file. ``add_rows`` carry ``rel_path``, ``record_count`` and
+    ``column_stats``; ``None`` means that input is absent, and with both
+    absent nothing is written."""
     if add_rows is None and removed_rels is None:
         return False
     recs: list[tuple] = []
@@ -1239,7 +1140,11 @@ def write_files_delta_rows(
     base_path: str,
     instant: str,
 ) -> bool:
-    """Driver-tier twin of ``write_files_delta`` (see above)."""
+    """Append one `files` index delta for a commit: one row per added file
+    (with its size) plus an ``is_deleted`` row per replaced or removed
+    file (HoodieMetadataPayload file-list records, ref
+    hudi/HudiConversionTarget.java:267-470 metadata-table maintenance).
+    ``None`` inputs as in ``write_col_stats_delta_rows``."""
     if add_rows is None and removed_rels is None:
         return False
     recs: list[tuple] = [
@@ -1257,72 +1162,6 @@ def write_files_delta_rows(
     return _write_index_delta_rows(
         recs, _arrow_index_fields(FILES_RECORD_SCHEMA), files_dir(base_path), instant
     )
-
-
-def write_col_stats_delta(
-    adds: DataFrame | None,
-    removed_rel_paths: DataFrame | None,
-    base_path: str,
-    instant: str,
-) -> bool:
-    """Append one col-stats index delta file for this commit."""
-    recs = stats_records_for_commit(adds, removed_rel_paths, base_path, instant)
-    if recs is None:
-        return False
-    return _write_index_delta(recs, col_stats_dir(base_path), instant)
-
-
-def files_records_for_commit(
-    adds: DataFrame | None,
-    removed_rel_paths: DataFrame | None,
-    base_path: str,
-    instant: str,
-) -> DataFrame | None:
-    """`files`-partition delta records for one commit: one row per added
-    file (with size) plus an is_deleted row per replaced/removed file
-    (HoodieMetadataPayload file-list records, ref
-    hudi/HudiConversionTarget.java:267-470 metadata-table maintenance)."""
-    parts = []
-    if adds is not None:
-        rel = relativize_expr(base_path)
-        parts.append(
-            adds.select(
-                F.lit(instant).alias("commit_instant"),
-                _dirname(rel).alias("partition_path"),
-                _basename(rel).alias("file_name"),
-                F.col("size_bytes").cast("long").alias("file_size"),
-                F.lit(False).alias("is_deleted"),
-            )
-        )
-    if removed_rel_paths is not None:
-        parts.append(
-            removed_rel_paths.select(
-                F.lit(instant).alias("commit_instant"),
-                _dirname(F.col("rel_path")).alias("partition_path"),
-                _basename(F.col("rel_path")).alias("file_name"),
-                F.lit(None).cast("long").alias("file_size"),
-                F.lit(True).alias("is_deleted"),
-            )
-        )
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def write_files_delta(
-    adds: DataFrame | None,
-    removed_rel_paths: DataFrame | None,
-    base_path: str,
-    instant: str,
-) -> bool:
-    """Append one `files` index delta file for this commit."""
-    recs = files_records_for_commit(adds, removed_rel_paths, base_path, instant)
-    if recs is None:
-        return False
-    return _write_index_delta(recs, files_dir(base_path), instant)
 
 
 def read_files_index(spark: SparkSession, base_path: str) -> DataFrame:

@@ -24,6 +24,7 @@ from incubator_xtable_spark.model.core import (
     CatalogSyncStatus,
     ErrorDetails,
     InstantsForIncrementalSync,
+    InternalSnapshot,
     SyncMode,
     SyncResult,
     SyncStatusCode,
@@ -191,7 +192,7 @@ class ConversionController:
     # -- FULL path (TableFormatSync.syncSnapshot, .java:64-89) --------------
 
     def _sync_snapshot(self, source: Any, targets: dict[TableFormat, Any]) -> dict[TableFormat, SyncResult]:
-        snapshot = source.get_current_snapshot()
+        snapshot = _materialize_once(source.get_current_snapshot(), _SNAPSHOT_CHANNELS)
         results = {}
         for fmt, target in targets.items():
             start = time.perf_counter()
@@ -280,7 +281,9 @@ class ConversionController:
                 if not _commit_applies(commit, bm, last_sync, order):
                     continue
                 if change is None:  # lazy: only extract when some target needs it
-                    change = _materialize_once(source.get_table_change_for_commit(commit))
+                    change = _materialize_once(
+                        source.get_table_change_for_commit(commit), _CHANGE_CHANNELS
+                    )
                 start = time.perf_counter()
                 try:
                     pending = [
@@ -341,22 +344,25 @@ class ConversionController:
         return results
 
 
-# The metadata-sized change channels every target drains. row_changes is
+# The metadata-sized channels every target drains. row_changes is
 # data-scale (row-level CDC) and stays lazy.
-_SHARED_CHANNELS = ("files_added", "files_removed", "row_deletes")
+_SNAPSHOT_CHANNELS = ("files", "row_deletes")
+_CHANGE_CHANNELS = ("files_added", "files_removed", "row_deletes")
 
 
-def _materialize_once(change: TableChange) -> TableChange:
-    """Evaluate each shared channel of ``change`` ONCE, so N targets
-    drain driver-resident rows instead of each re-running the source's
-    change plan (one Spark job set per target per commit). A frame whose
+def _materialize_once(
+    carrier: InternalSnapshot | TableChange, channels: tuple[str, ...]
+) -> InternalSnapshot | TableChange:
+    """Evaluate each of ``carrier``'s ``channels`` ONCE, so N targets
+    collect driver-resident rows instead of each re-running the source's
+    snapshot or change plan (one Spark job set per target). A frame whose
     plan is already a LocalRelation is left as is."""
-    for name in _SHARED_CHANNELS:
-        df = getattr(change, name, None)
+    for name in channels:
+        df = getattr(carrier, name, None)
         if df is None or is_local_plan(df):
             continue
-        setattr(change, name, local_frame(df.sparkSession, df.toArrow(), df.schema))
-    return change
+        setattr(carrier, name, local_frame(df.sparkSession, df.toArrow(), df.schema))
+    return carrier
 
 
 def _earliest_instant(bookmark: Optional[TableSyncMetadata]) -> str:

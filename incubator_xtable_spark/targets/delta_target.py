@@ -14,9 +14,10 @@ because this environment has no delta-spark jars):
                                    model/metadata/TableSyncMetadata.java:43-58
 
 Scale notes: the transaction log is inherently a driver-written artifact
-(single file per commit). Actions stream through ``toLocalIterator`` so a
-100k-file snapshot never materializes as a driver-side list; the diff
-computation (anti-joins) and stats serialization stay distributed.
+(single file per commit). The controller materializes the source snapshot
+or change once; this target collects those driver-resident rows and
+diffs a snapshot against the log replay's live adds with
+``model.files_diff`` (no Spark job either way).
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ import time
 import uuid
 from typing import Any, Iterator, Optional
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,6 +37,7 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
 )
+from incubator_xtable_spark.model.files_diff import files_diff, relativize
 from incubator_xtable_spark.model.stat_codec import to_delta_stats_json
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -75,31 +77,6 @@ def current_log_version(base_path: str) -> Optional[int]:
         if fn.endswith(".json") and fn[:-5].isdigit()
     ]
     return max(versions) if versions else None
-
-
-def _drain(df: DataFrame, auto: bool = False) -> Iterator[Row]:
-    """See model.core.drain_rows: bulk collect() for bounded per-commit
-    inventories; auto=True (snapshot-scale drains) self-selects streaming
-    above STREAM_DRAIN_THRESHOLD rows for flat driver RSS at
-    multi-million files."""
-    from incubator_xtable_spark.model.core import drain_rows
-
-    return drain_rows(df, "auto" if auto else None)
-
-
-def _relativize(path: str, base_path: str) -> str:
-    base = base_path.rstrip("/") + "/"
-    p = path[len("file:") :] if path.startswith("file:") else path
-    return p[len(base) :] if p.startswith(base) else p
-
-
-def _relativize_col(col: Column, base_path: str) -> Column:
-    """Literal prefix strip (NOT regexp_replace: a base path containing
-    regex metacharacters like '(' or '+' would throw or mis-relativize)."""
-    base = base_path.rstrip("/") + "/"
-    return F.when(
-        col.startswith(base), col.substr(F.lit(len(base) + 1), F.length(col))
-    ).otherwise(col)
 
 
 class DeltaConversionTarget:
@@ -195,17 +172,15 @@ class DeltaConversionTarget:
         self._partition_cols: list[str] = []
         self._generated_fields: list[T.StructField] = []
         self._metadata_json: Optional[str] = None
-        self._adds: Optional[DataFrame] = None
-        self._removes: Optional[DataFrame] = None
+        # driver rows: inventory Rows to add, {path, size} dicts to remove
+        self._adds: Optional[list[Row]] = None
+        self._removes: Optional[list[dict]] = None
         self._committed_version: Optional[int] = None
         self._row_deletes: Optional[DataFrame] = None
         self._row_changes: Optional[DataFrame] = None
         self._row_lineage: Optional[dict] = None
         self._domain_metadata: dict[str, str] = {}
         self._removed_domains: set[str] = set()
-        # True when adds/removes came from a FULL-snapshot sync (the one
-        # unbounded inventory) -> drains use the auto collect/stream probe
-        self._snapshot_sync = False
 
     # -- sync steps --------------------------------------------------------
 
@@ -292,27 +267,26 @@ class DeltaConversionTarget:
         """Full snapshot, committed as a minimal diff against the target's
         current live files (snapshot-as-diff,
         delta/DeltaDataFileUpdatesExtractor.java:70-86)."""
-        self._snapshot_sync = True
-        live = self._current_live_paths()
-        snap = files.withColumn(
-            "relative_path", _relativize_col(F.col("physical_path"), self.base_path)
+        from incubator_xtable_spark.sources.delta_source import live_adds
+
+        self._adds, removed = files_diff(
+            files.collect(),
+            live_adds(self.base_path).values(),
+            self.base_path,
+            lambda r: r["physical_path"],
+            lambda a: a["path"],
         )
-        if live is None:
-            self._adds, self._removes = snap.drop("relative_path"), None
-            return
-        self._adds = snap.join(live, snap.relative_path == live.path, "left_anti").drop("relative_path")
-        snap_paths = snap.select(F.col("relative_path").alias("path"))
-        self._removes = live.join(snap_paths, "path", "left_anti")
+        # a remove names the path exactly as the log has it; size rides
+        # along for the spec-optional `size` field (keeps the
+        # version-checksum decrement O(commit))
+        self._removes = [{"path": a["path"], "size": a.get("size")} for a in removed]
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        self._snapshot_sync = False
-        self._adds = change.files_added
-        # size rides along so remove actions can carry the spec-optional
-        # `size` field (keeps the version-checksum decrement O(commit))
-        self._removes = change.files_removed.select(
-            _relativize_col(F.col("physical_path"), self.base_path).alias("path"),
-            F.col("size_bytes").alias("size"),
-        )
+        self._adds = change.files_added.collect()
+        self._removes = [
+            {"path": relativize(r["physical_path"], self.base_path), "size": r["size_bytes"]}
+            for r in change.files_removed.collect()
+        ]
 
     def sync_row_deletes(self, deletes: DataFrame) -> None:
         """Row-delete channel (ROW_DELETES_SCHEMA): each covered data file
@@ -517,12 +491,11 @@ class DeltaConversionTarget:
         dv_map: dict[str, dict] = {}
         dv_readds: list[dict] = []
         if self._row_deletes is not None:
-            from incubator_xtable_spark.model.core import drain_rows
             from incubator_xtable_spark.sources.delta_dv import (
                 write_dv_files_from_positions,
             )
 
-            rd_rows = [r.asDict() for r in drain_rows(self._row_deletes)]
+            rd_rows = [r.asDict() for r in self._row_deletes.collect()]
             dv_map = write_dv_files_from_positions(self.spark, self.base_path, rd_rows)
             if version > 0:
                 # row_deletes is the COMPLETE delete state: a live file
@@ -532,18 +505,10 @@ class DeltaConversionTarget:
                 from incubator_xtable_spark.sources.delta_source import live_files_df
 
                 base = self.base_path.rstrip("/") + "/"
-                add_paths = (
-                    {r["physical_path"] for r in drain_rows(self._adds)}
-                    if self._adds is not None
-                    else set()
-                )
+                add_paths = {relativize(r["physical_path"], base) for r in self._adds or ()}
                 # files removed in THIS commit must not be resurrected by
                 # the re-add loop (their DVs die with them)
-                removed_paths = (
-                    {r["path"] for r in drain_rows(self._removes)}
-                    if self._removes is not None
-                    else set()
-                )
+                removed_paths = {r["path"] for r in self._removes or ()}
                 live_cols = [
                     "path",
                     "partitionValues",
@@ -560,9 +525,9 @@ class DeltaConversionTarget:
                 for r in live.select(*live_cols).collect():
                     if r["path"] in removed_paths:
                         continue
-                    abs_p = r["path"] if r["path"].startswith("/") else base + r["path"]
-                    if abs_p in add_paths:
+                    if relativize(r["path"], base) in add_paths:
                         continue
+                    abs_p = r["path"] if r["path"].startswith("/") else base + r["path"]
                     desc = dv_map.get(abs_p)
                     cur = r["deletionVector"] if has_live_dv else None
                     cur_active = cur is not None and cur["storageType"]
@@ -892,8 +857,7 @@ class DeltaConversionTarget:
                     {"domainMetadata": {"domain": d, "configuration": "", "removed": True}}
                 )
             if self._removes is not None:
-                for row in _drain(self._removes, auto=self._snapshot_sync):
-                    d = row.asDict()
+                for d in self._removes:
                     rm: dict[str, Any] = {
                         "path": d["path"],
                         "deletionTimestamp": now_ms,
@@ -907,7 +871,7 @@ class DeltaConversionTarget:
                     crc_acc["rm_n"] += 1
                     yield json.dumps({"remove": rm})
             if self._adds is not None:
-                for row in _drain(self._adds, auto=self._snapshot_sync):
+                for row in self._adds:
                     crc_acc["add_n"] += 1
                     crc_acc["add_bytes"] += row["size_bytes"]
                     yield self._add_action(
@@ -1099,7 +1063,7 @@ class DeltaConversionTarget:
                 f"{row['file_format']}; Delta tables here are parquet-only"
             )
         add = {
-            "path": _relativize(row["physical_path"], self.base_path),
+            "path": relativize(row["physical_path"], self.base_path),
             "partitionValues": dict(row["partition_values"] or {}),
             "size": row["size_bytes"],
             "modificationTime": row["last_modified_ms"] or now_ms,
@@ -1288,12 +1252,3 @@ class DeltaConversionTarget:
             return None
         return str(self._committed_version)
 
-    def _current_live_paths(self) -> Optional[DataFrame]:
-        v = current_log_version(self.base_path)
-        if v is None:
-            return None
-        from incubator_xtable_spark.sources.delta_source import live_files_df
-
-        # size rides along for the snapshot-as-diff remove set (see
-        # sync_files_for_diff: remove actions carry the optional `size`)
-        return live_files_df(self.spark, self.base_path, v).select("path", "size")

@@ -23,6 +23,12 @@ via `hoodie.table.metadata.partitions=column_stats` (see
 `sources/hudi_metadata.py`; mirrors HudiConversionTarget.java:267-470's
 write-client metadata update), so converted tables keep data-skipping.
 
+Scale notes: the controller materializes the source snapshot or change
+once; this target collects those driver-resident rows, diffs a snapshot
+against the timeline's live file groups with ``model.files_diff``, and
+builds the write stats and both index deltas from the same rows (pyarrow
+appends, no Spark job).
+
 Known LITE limitations (documented, revisit if jars appear): the index is
 parquet-delta, not HFile MOR (no Hudi jars in env); no marker files; base
 files lack the five `_hoodie_*` meta columns (metadata-only conversion
@@ -39,20 +45,17 @@ import os
 import uuid
 from typing import Iterator, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.core import InternalTable, TableChange
+from incubator_xtable_spark.model.files_diff import files_diff, relativize
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
 HOODIE_DIR = ".hoodie"
 COMMIT_ACTION = "commit"
 REPLACE_ACTION = "replacecommit"
 DELTA_COMMIT_ACTION = "deltacommit"  # MOR log-file writes
-# Commits adding at most this many files build their Parquet-index deltas
-# on the driver from the drained rows; bigger ones take the Spark tier
-# (a file-count gate, never SF; 0 disables the driver tier).
-_DRIVER_INDEX_MAX_FILES = 10_000
 
 
 def instant_now() -> str:
@@ -295,11 +298,12 @@ class HudiConversionTarget:
         self._schema: Optional[T.StructType] = None
         self._partition_cols: list[str] = []
         self._metadata_json: Optional[str] = None
-        self._adds: Optional[DataFrame] = None
-        self._replaced_paths: Optional[DataFrame] = None
+        # driver rows: inventory Rows to add, paths of replaced files
+        self._adds: Optional[list[Row]] = None
+        self._adds_have_stats = False
+        self._replaced_paths: list[str] = []
         self._committed_instant: Optional[str] = None
         self._row_changes: Optional[DataFrame] = None
-        self._snapshot_sync = False
 
     def sync_row_changes(self, changes: DataFrame) -> None:
         """CDC channel: the commit's row-level changes (table columns +
@@ -440,27 +444,22 @@ class HudiConversionTarget:
     def sync_files_for_snapshot(self, files: DataFrame) -> None:
         """Snapshot-as-diff against the target's current live files
         (hudi/BaseFileUpdatesExtractor.java:89-133)."""
-        from pyspark.sql import functions as F
+        from incubator_xtable_spark.sources.hudi_source import live_files_rows
 
-        self._snapshot_sync = True
-        live = self._current_live_paths()
-        if live is None:
-            self._adds, self._replaced_paths = files, None
-            return
-        snap_paths = files.select(F.col("physical_path").alias("path"))
-        self._adds = files.join(
-            live, files.physical_path == live.path, "left_anti"
+        self._adds_have_stats = "column_stats" in files.columns
+        self._adds, replaced = files_diff(
+            files.collect(),
+            live_files_rows(self.base_path),
+            self.base_path,
+            lambda r: r["physical_path"],
+            lambda r: r["path"],
         )
-        self._replaced_paths = live.join(snap_paths, "path", "left_anti")
+        self._replaced_paths = [r["path"] for r in replaced]
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        from pyspark.sql import functions as F
-
-        self._snapshot_sync = False
-        self._adds = change.files_added
-        self._replaced_paths = change.files_removed.select(
-            F.col("physical_path").alias("path")
-        )
+        self._adds_have_stats = "column_stats" in change.files_added.columns
+        self._adds = change.files_added.collect()
+        self._replaced_paths = [r["physical_path"] for r in change.files_removed.collect()]
 
     def _avro_schema_with_ids(self) -> str:
         """Commit-metadata schema string: an AVRO record schema (what real
@@ -500,34 +499,15 @@ class HudiConversionTarget:
         if existing and instant <= existing[-1][0]:
             instant = epoch_ms_to_instant(instant_to_epoch_ms(existing[-1][0]) + 1)
 
-        from incubator_xtable_spark.model.core import drain_rows
-        from incubator_xtable_spark.sources.hudi_metadata import _relativize_py
-
-        # ONE evaluation of the replaced-paths plan: the old head(1)
-        # emptiness probe ran the full snapshot-as-diff join as its own
-        # job (~0.7 s/commit) and the non-empty case then re-evaluated it
-        # in the drain below. The listing is metadata-sized (the drain
-        # already buffered it into Python lists).
-        replaced_rows = (
-            list(drain_rows(self._replaced_paths)) if self._replaced_paths is not None else []
-        )
-        has_replacements = bool(replaced_rows)
+        has_replacements = bool(self._replaced_paths)
         action = REPLACE_ACTION if has_replacements else COMMIT_ACTION
 
         hfile_mode = self.metadata_indexes and self.metadata_index_format == "hfile"
-        hfile_adds: list[dict] = []
-        adds_have_stats = self._adds is not None and "column_stats" in self._adds.columns
+        # the index writers take the same per-file rows as the write stats
+        index_adds: list[dict] = []
         partition_to_stats: dict[str, list[dict]] = {}
-        # Parquet-index deltas are metadata-sized and this drain already has
-        # every field they need — buffer the rows (file-count gated, never
-        # SF-gated) so the index writes run as driver pyarrow appends instead
-        # of two Spark write jobs re-evaluating the adds plan (~1.6 s/sync of
-        # fixed job latency). Overflowing _DRIVER_INDEX_MAX_FILES falls back
-        # to the Spark tier.
-        driver_index = self.metadata_indexes and not hfile_mode and _DRIVER_INDEX_MAX_FILES > 0
-        index_adds: Optional[list[dict]] = [] if driver_index else None
         if self._adds is not None:
-            for row in drain_rows(self._adds, "auto" if self._snapshot_sync else None):
+            for row in self._adds:
                 if (row["file_format"] or "PARQUET").upper() != "PARQUET":
                     # hoodie.table.base.file.format is PARQUET table-wide
                     raise NotImplementedError(
@@ -535,7 +515,7 @@ class HudiConversionTarget:
                         f"format {row['file_format']}; the target declares a "
                         "PARQUET base file format"
                     )
-                rel = self._relativize(row["physical_path"])
+                rel = relativize(row["physical_path"], self.base_path)
                 partition = os.path.dirname(rel)
                 stats = {
                     "fileId": file_id_of(rel),
@@ -548,59 +528,25 @@ class HudiConversionTarget:
                     "partitionPath": partition,
                 }
                 partition_to_stats.setdefault(partition, []).append(stats)
-                if hfile_mode:
-                    hfile_adds.append(
-                        {
-                            "rel_path": rel,
-                            "size_bytes": row["size_bytes"],
-                            "record_count": row["record_count"],
-                            "column_stats": row["column_stats"] if adds_have_stats else None,
-                        }
-                    )
-                if index_adds is not None:
-                    if len(index_adds) >= _DRIVER_INDEX_MAX_FILES:
-                        index_adds = None  # overflow: Spark tier re-evaluates
-                    else:
-                        index_adds.append(
-                            {
-                                # relativize_expr twin (file-scheme strip)
-                                "rel_path": _relativize_py(self.base_path, row["physical_path"]),
-                                "size_bytes": row["size_bytes"],
-                                "record_count": row["record_count"],
-                                "column_stats": row["column_stats"] if adds_have_stats else None,
-                            }
-                        )
+                index_adds.append(
+                    {
+                        "rel_path": rel,
+                        "size_bytes": row["size_bytes"],
+                        "record_count": row["record_count"],
+                        "column_stats": row["column_stats"] if self._adds_have_stats else None,
+                    }
+                )
 
         partition_to_replaced: dict[str, list[str]] = {}
-        hfile_removed: list[str] = []
         index_removed: list[str] = []
-        if has_replacements:
-            for row in replaced_rows:
-                rel = self._relativize(row["path"])
-                partition_to_replaced.setdefault(os.path.dirname(rel), []).append(file_id_of(rel))
-                if hfile_mode:
-                    hfile_removed.append(rel)
-                index_removed.append(_relativize_py(self.base_path, row["path"]))
+        for path in self._replaced_paths:
+            rel = relativize(path, self.base_path)
+            partition_to_replaced.setdefault(os.path.dirname(rel), []).append(file_id_of(rel))
+            index_removed.append(rel)
 
         # maintain the col-stats index BEFORE completing the instant (the
         # write-client posture: an orphan index delta from a crashed commit
         # is harmless — readers only look up files the timeline says live)
-        from incubator_xtable_spark.sources.hudi_metadata import (
-            relativize_expr,
-            write_col_stats_delta,
-            write_files_delta,
-        )
-
-        adds_for_index = (
-            self._adds
-            if self._adds is not None and "column_stats" in self._adds.columns
-            else None
-        )
-        removed_for_index = (
-            self._replaced_paths.select(relativize_expr(self.base_path, "path").alias("rel_path"))
-            if has_replacements
-            else None
-        )
         if hfile_mode:
             from incubator_xtable_spark.targets.hudi_metadata_index import (
                 write_hfile_index_commit,
@@ -616,8 +562,8 @@ class HudiConversionTarget:
                     self.spark,
                     self.base_path,
                     instant,
-                    [a["rel_path"] for a in hfile_adds],
-                    hfile_removed,
+                    [a["rel_path"] for a in index_adds],
+                    index_removed,
                     self.record_index_field,
                     num_shards=self.record_index_shards,
                     compact_every=self.metadata_index_compact_every,
@@ -631,8 +577,8 @@ class HudiConversionTarget:
                         self.spark,
                         self.base_path,
                         instant,
-                        [a["rel_path"] for a in hfile_adds],
-                        hfile_removed,
+                        [a["rel_path"] for a in index_adds],
+                        index_removed,
                         self.record_index_field,
                         compact_every=self.metadata_index_compact_every,
                     )
@@ -645,8 +591,8 @@ class HudiConversionTarget:
                         self.spark,
                         self.base_path,
                         instant,
-                        [a["rel_path"] for a in hfile_adds],
-                        hfile_removed,
+                        [a["rel_path"] for a in index_adds],
+                        index_removed,
                         self.record_index_field,
                         self.secondary_index_field,
                         num_shards=self.secondary_index_shards,
@@ -660,8 +606,8 @@ class HudiConversionTarget:
                 extra_stats = extra_stats + write_partition_stats_commit(
                     self.base_path,
                     instant,
-                    hfile_adds,
-                    hfile_removed,
+                    index_adds,
+                    index_removed,
                     self._schema,
                     compact_every=self.metadata_index_compact_every,
                     key_mode=self.metadata_index_key_mode,
@@ -669,8 +615,8 @@ class HudiConversionTarget:
             write_hfile_index_commit(
                 self.base_path,
                 instant,
-                hfile_adds,
-                hfile_removed,
+                index_adds,
+                index_removed,
                 self._schema,
                 self.table_name or (self._table.name if self._table else "table"),
                 key_mode=self.metadata_index_key_mode,
@@ -678,28 +624,24 @@ class HudiConversionTarget:
                 extra_stats=extra_stats,
             )
         elif self.metadata_indexes:
-            if index_adds is not None:
-                from incubator_xtable_spark.sources.hudi_metadata import (
-                    write_col_stats_delta_rows,
-                    write_files_delta_rows,
-                )
+            from incubator_xtable_spark.sources.hudi_metadata import (
+                write_col_stats_delta_rows,
+                write_files_delta_rows,
+            )
 
-                removed_rels = index_removed if has_replacements else None
-                write_col_stats_delta_rows(
-                    index_adds if adds_have_stats else None,
-                    removed_rels,
-                    self.base_path,
-                    instant,
-                )
-                write_files_delta_rows(
-                    index_adds if self._adds is not None else None,
-                    removed_rels,
-                    self.base_path,
-                    instant,
-                )
-            else:
-                write_col_stats_delta(adds_for_index, removed_for_index, self.base_path, instant)
-                write_files_delta(self._adds, removed_for_index, self.base_path, instant)
+            removed_rels = index_removed if has_replacements else None
+            write_col_stats_delta_rows(
+                index_adds if self._adds_have_stats else None,
+                removed_rels,
+                self.base_path,
+                instant,
+            )
+            write_files_delta_rows(
+                index_adds if self._adds is not None else None,
+                removed_rels,
+                self.base_path,
+                instant,
+            )
 
         # CDC channel -> CDC supplemental block file + cdcStats on a write
         # stat (read_hudi_cdc tier 1 locates CDC files exclusively through
@@ -805,11 +747,6 @@ class HudiConversionTarget:
         first_partition = next(iter(partition_to_stats))
         partition_to_stats[first_partition][0]["cdcStats"] = {rel: size}
 
-    def _relativize(self, path: str) -> str:
-        base = self.base_path.rstrip("/") + "/"
-        p = path[len("file:") :] if path.startswith("file:") else path
-        return p[len(base) :] if p.startswith(base) else p
-
     def _write_instant_lifecycle(self, instant: str, action: str, meta: dict) -> None:
         """requested -> inflight -> completed, completed written atomically
         (put-if-absent via hard link, like the Delta target). Table
@@ -844,21 +781,6 @@ class HudiConversionTarget:
             raise RuntimeError(f"concurrent Hudi commit at instant {instant}") from exc
         finally:
             os.unlink(tmp)
-
-    def _current_live_paths(self) -> Optional[DataFrame]:
-        instants = list_completed_instants(self.base_path)
-        if not instants:
-            return None
-        from incubator_xtable_spark.sources.hudi_source import live_files_rows
-
-        rows = live_files_rows(self.base_path)
-        from pyspark.sql import functions as F
-
-        if not rows:
-            return self.spark.createDataFrame([], "path STRING")
-        return self.spark.createDataFrame(
-            [(os.path.join(self.base_path, r["path"]),) for r in rows], "path STRING"
-        )
 
     def get_table_metadata(self) -> Optional[TableSyncMetadata]:
         for instant, action in reversed(list_completed_instants(self.base_path)):

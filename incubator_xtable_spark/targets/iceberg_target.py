@@ -37,11 +37,12 @@ import time
 import uuid
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.avro_codec import iter_ocf, read_ocf, write_ocf
 from incubator_xtable_spark.model.core import InternalTable, TableChange
+from incubator_xtable_spark.model.files_diff import files_diff, relativize
 from incubator_xtable_spark.model.schema_meta import FIELD_ID, assign_field_ids
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -965,10 +966,11 @@ class IcebergConversionTarget:
         self._schema: Optional[T.StructType] = None
         self._partition_cols: list[str] = []
         self._metadata_json: Optional[str] = None
-        self._adds: Optional[DataFrame] = None
-        self._removed_paths: Optional[DataFrame] = None
-        self._snapshot_mode = False
-        self._snapshot_files: Optional[DataFrame] = None
+        # driver rows: a FULL sync sets _snapshot_rows (diffed against the
+        # live manifest entries at commit), an incremental one the other two
+        self._snapshot_rows: Optional[list[Row]] = None
+        self._adds: Optional[list[Row]] = None
+        self._removed_paths: set[str] = set()
         self._committed_snapshot: Optional[int] = None
         self._row_deletes: Optional[DataFrame] = None
         self._equality_deletes: Optional[dict] = None
@@ -1036,13 +1038,13 @@ class IcebergConversionTarget:
         self._metadata_json = metadata.to_json()
 
     def sync_files_for_snapshot(self, files: DataFrame) -> None:
-        self._snapshot_mode = True
-        self._snapshot_files = files
+        self._snapshot_rows = files.collect()
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        self._snapshot_mode = False
-        self._adds = change.files_added
-        self._removed_paths = change.files_removed
+        self._adds = change.files_added.collect()
+        self._removed_paths = {
+            relativize(r["physical_path"], self.base_path) for r in change.files_removed.collect()
+        }
 
     def sync_row_deletes(self, deletes: DataFrame) -> None:
         """Row-delete channel (ROW_DELETES_SCHEMA): each row becomes a v2
@@ -1102,8 +1104,6 @@ class IcebergConversionTarget:
             self._resolve_partition_specs(meta)
         )
 
-        from incubator_xtable_spark.model.core import drain_rows
-
         current_all = self._current_live_entries(meta)
         current = [e for e in current_all if (e["data_file"].get("content") or 0) == 0]
         current_deletes = [
@@ -1112,34 +1112,36 @@ class IcebergConversionTarget:
         current_eq = [
             e for e in current_all if (e["data_file"].get("content") or 0) == 2
         ]
-        if self._snapshot_mode:
-            # snapshot-as-diff inherently compares full sets; the dict is
-            # the bound here, not the transfer (drain_rows streams it in)
-            snap_rows = {r["physical_path"]: r for r in drain_rows(self._snapshot_files, "auto")}
-            prev_paths = {e["data_file"]["file_path"] for e in current}
-            added = [p for p in snap_rows if p not in prev_paths]
-            survivors = [e for e in current if e["data_file"]["file_path"] in snap_rows]
-            deleted_count = len(prev_paths) - len(survivors)
+        if self._snapshot_rows is not None:
+            # snapshot-as-diff (model/files_diff): the full snapshot
+            # against the live manifest entries, keyed by path
+            added, gone = files_diff(
+                self._snapshot_rows,
+                current,
+                self.base_path,
+                lambda r: r["physical_path"],
+                lambda e: e["data_file"]["file_path"],
+            )
+            gone_paths = {e["data_file"]["file_path"] for e in gone}
+            survivors = [e for e in current if e["data_file"]["file_path"] not in gone_paths]
             entries = survivors + [
-                self._entry_from_row(snap_rows[p], snapshot_id, seq, status=1) for p in added
+                self._entry_from_row(r, snapshot_id, seq, status=1) for r in added
             ]
-            counts = (len(added), len(survivors), deleted_count)
+            counts = (len(added), len(survivors), len(current) - len(survivors))
             # full restatement: prior delete files are replaced wholesale
             # by this snapshot's row_deletes (if any)
             delete_entries = self._new_delete_entries(snapshot_id, seq)
         else:
-            removed = (
-                {r["physical_path"] for r in drain_rows(self._removed_paths)}
-                if self._removed_paths is not None
-                else set()
-            )
-            survivors = [e for e in current if e["data_file"]["file_path"] not in removed]
+            survivors = [
+                e
+                for e in current
+                if relativize(e["data_file"]["file_path"], self.base_path) not in self._removed_paths
+            ]
             n_added = 0
             entries = list(survivors)
-            if self._adds is not None:
-                for r in drain_rows(self._adds):
-                    entries.append(self._entry_from_row(r, snapshot_id, seq, status=1))
-                    n_added += 1
+            for r in self._adds or ():
+                entries.append(self._entry_from_row(r, snapshot_id, seq, status=1))
+                n_added += 1
             counts = (n_added, len(survivors), len(current) - len(survivors))
             # row_deletes restates the COMPLETE delete set: rebuild the
             # delete manifests from it, reusing a carried entry when the
@@ -1273,11 +1275,9 @@ class IcebergConversionTarget:
         (content=1) at this commit's sequence number — which satisfies the
         spec application rule delete_seq >= data_seq for every data file
         committed at or before this sequence."""
-        from incubator_xtable_spark.model.core import drain_rows
-
         if self._row_deletes is None:
             return []
-        rows = list(drain_rows(self._row_deletes))
+        rows = self._row_deletes.collect()
         if not rows:
             return []
         if self.format_version >= 3:

@@ -35,8 +35,9 @@ Key design points:
   readers.
 
 Scale: manifest/metadata writes are driver-side and bounded by
-files-touched-per-commit (the inventory drains use the same auto
-collect/stream selection as the other targets); data bytes never move.
+files-touched-per-commit; a snapshot is diffed against the merged live
+entries with ``model.files_diff`` over the controller's driver-resident
+rows (no Spark job); data bytes never move.
 """
 
 from __future__ import annotations
@@ -47,11 +48,12 @@ import os
 import uuid
 from typing import Any, Iterator, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.avro_codec import write_ocf
 from incubator_xtable_spark.model.core import InternalTable, TableChange
+from incubator_xtable_spark.model.files_diff import files_diff
 from incubator_xtable_spark.model.paimon_binary import (
     PaimonFieldType,
     encode_binary_row,
@@ -178,9 +180,10 @@ class PaimonConversionTarget:
         self._schema: Optional[T.StructType] = None
         self._partition_keys: list[str] = []
         self._metadata_json: Optional[str] = None
-        self._adds: Optional[DataFrame] = None
-        self._removes: Optional[DataFrame] = None
-        self._snapshot_sync = False
+        # driver rows: inventory Rows to add, (path, partition blob) pairs
+        # to remove
+        self._adds: Optional[list[Row]] = None
+        self._removes: list[tuple[str, bytes]] = []
         self._row_deletes: Optional[DataFrame] = None
         self._row_changes: Optional[DataFrame] = None
         # commitKind override: maintenance actions set "COMPACT"
@@ -255,27 +258,22 @@ class PaimonConversionTarget:
         self._metadata_json = metadata.to_json()
 
     def sync_files_for_snapshot(self, files: DataFrame) -> None:
-        """Snapshot-as-diff against the current live external paths."""
-        self._snapshot_sync = True
-        live = self._current_live_paths_df()
-        if live is None:
-            self._adds, self._removes = files, None
-            return
-        from pyspark.sql import functions as F
-
-        self._adds = files.join(live, files.physical_path == live.path, "left_anti")
-        snap_paths = files.select(F.col("physical_path").alias("path"))
-        self._removes = live.join(snap_paths, "path", "left_anti")
+        """Snapshot-as-diff against the current live external paths; a
+        remove keeps the live entry's partition blob."""
+        self._adds, self._removes = files_diff(
+            files.collect(),
+            self._live_paths(),
+            self.base_path,
+            lambda r: r["physical_path"],
+            lambda live: live[0],
+        )
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        from pyspark.sql import functions as F
-
-        self._snapshot_sync = False
-        self._adds = change.files_added
-        self._removes = change.files_removed.select(
-            F.col("physical_path").alias("path"),
-            F.col("partition_values"),
-        )
+        self._adds = change.files_added.collect()
+        self._removes = [
+            (r["physical_path"], self._partition_blob(r["partition_values"]))
+            for r in change.files_removed.collect()
+        ]
 
     def sync_row_deletes(self, deletes: DataFrame) -> None:
         """Row-delete channel (ROW_DELETES_SCHEMA): the COMPLETE delete
@@ -412,7 +410,6 @@ class PaimonConversionTarget:
     def _write_dv_index(self, schema_id: int) -> Optional[str]:
         """row_deletes rows -> DV index file(s) per partition group + one
         full-state index manifest. Returns the manifest name or None."""
-        from incubator_xtable_spark.model.core import drain_rows
         from incubator_xtable_spark.sources.paimon_dv import (
             DELETION_VECTORS_INDEX,
             write_dv_index_file,
@@ -421,7 +418,7 @@ class PaimonConversionTarget:
             INDEX_MANIFEST_AVRO_SCHEMA,
         )
 
-        rows = list(drain_rows(self._row_deletes))
+        rows = self._row_deletes.collect()
         if not rows:
             return None
         import pyarrow.parquet as pq
@@ -472,23 +469,16 @@ class PaimonConversionTarget:
         )
         return manifest_name
 
-    def _current_live_paths_df(self) -> Optional[DataFrame]:
+    def _live_paths(self) -> list[tuple[str, bytes]]:
+        """(external path, partition blob) of every live data file."""
         snap = self._latest_snapshot()
         if snap is None:
-            return None
-        from pyspark.sql import functions as F
-
+            return []
         from incubator_xtable_spark.sources.paimon_source import PaimonConversionSource
 
         src = PaimonConversionSource(self.spark, self.base_path)
         sch = src._schema(snap.get("schemaId", 0))
-        entries = src._merged_live_entries(snap)
-        rows = []
-        for e in entries:
-            rows.append((src._entry_abs_path(e, sch), e["_PARTITION"]))
-        if not rows:
-            return None
-        return self.spark.createDataFrame(rows, "path STRING, part_blob BINARY")
+        return [(src._entry_abs_path(e, sch), e["_PARTITION"]) for e in src._merged_live_entries(snap)]
 
     # -- manifest building --------------------------------------------------
 
@@ -597,13 +587,12 @@ class PaimonConversionTarget:
             },
         }
 
-    def _remove_entry(self, path: str, part_blob: Optional[bytes], pv: Optional[dict], schema_id: int) -> dict:
+    def _remove_entry(self, path: str, part_blob: bytes, schema_id: int) -> dict:
         empty = encode_binary_row([], [])
-        blob = part_blob if part_blob is not None else self._partition_blob(pv)
         return {
             "_VERSION": 2,
             "_KIND": 1,
-            "_PARTITION": blob,
+            "_PARTITION": part_blob,
             "_BUCKET": 0,
             "_TOTAL_BUCKETS": 1,
             "_FILE": {
@@ -750,29 +739,15 @@ class PaimonConversionTarget:
                 if ln:
                     base_metas.extend(src._read_manifest_list(ln))
 
-        from incubator_xtable_spark.model.core import drain_rows
-
         entries: list[dict] = []
         # per-file sequence numbers: monotonic across snapshots (append
         # tables only need the total order, not density)
         seq = new_id * 1_000_000
-        if self._adds is not None:
-            for row in drain_rows(self._adds, "auto" if self._snapshot_sync else None):
-                seq += 1
-                entries.append(self._entry_from_row(row, 0, schema_id, seq))
-        n_removed = 0
-        if self._removes is not None:
-            cols = set(self._removes.columns)
-            for row in drain_rows(self._removes):
-                n_removed += 1
-                entries.append(
-                    self._remove_entry(
-                        row["path"],
-                        bytes(row["part_blob"]) if "part_blob" in cols and row["part_blob"] is not None else None,
-                        dict(row["partition_values"]) if "partition_values" in cols and row["partition_values"] is not None else None,
-                        schema_id,
-                    )
-                )
+        for row in self._adds or ():
+            seq += 1
+            entries.append(self._entry_from_row(row, 0, schema_id, seq))
+        for path, blob in self._removes:
+            entries.append(self._remove_entry(path, blob, schema_id))
 
         base_list = self._write_manifest_list(base_metas, 0)
         delta_meta = self._write_manifest(entries, schema_id) if entries else None
@@ -803,7 +778,7 @@ class PaimonConversionTarget:
             "commitUser": "xtable-spark",
             "commitIdentifier": new_id,
             "commitKind": self._commit_kind_override
-            or ("OVERWRITE" if n_removed else "APPEND"),
+            or ("OVERWRITE" if self._removes else "APPEND"),
             "timeMillis": EPOCH_MS_BASE + new_id * 1000,
             "logOffsets": {},
             "totalRecordCount": None,

@@ -8,7 +8,13 @@ anti-join commit diff. The replay must equal it on tables exercising
 adds, removes, same-version remove+re-add (the DV commit shape),
 partition values, external paths, schema changes and time travel; with
 a classic, multi-part or v2+sidecar checkpoint in range, and after the
-log behind it expired — and it must run no Spark job."""
+log behind it expired — and it must run no Spark job.
+
+The Spark pipeline that built Hudi index records is kept the same way,
+as the reference for the pyarrow writers. The sync tests pin the zero-job
+paths: each change and the FULL snapshot are materialized once by the
+controller, and targets diff and commit driver rows with no Spark job,
+also when a source hands over URI-form paths."""
 
 from __future__ import annotations
 
@@ -16,6 +22,7 @@ import contextlib
 import glob
 import json
 import os
+import re
 import shutil
 import uuid
 from types import SimpleNamespace
@@ -333,8 +340,12 @@ def test_malformed_log_line_fails_loudly(spark, delta_table):
     assert len(_rows(DS.live_files_df(spark, delta_table, 9))) == 4
 
 
-def test_drain_rows_local_hint_collects_identically(spark):
-    from incubator_xtable_spark.model.core import drain_rows, local_frame
+def test_local_frame_collects_with_no_job(spark):
+    """A driver-built frame plans as a LocalRelation, and so does a
+    projection over it: collecting either returns the rows with no Spark
+    job. The same rows through spark.createDataFrame(list) plan as a
+    LogicalRDD."""
+    from incubator_xtable_spark.model.core import local_frame
 
     rows = [(i, f"p{i}") for i in range(10)]
     rdd_backed = spark.createDataFrame(rows, "n LONG, physical_path STRING")
@@ -343,14 +354,11 @@ def test_drain_rows_local_hint_collects_identically(spark):
     assert is_local_plan(local)
     # a projection folds into the LocalRelation at optimization
     assert is_local_plan(local.select("physical_path"))
-    plain = sorted(r["physical_path"] for r in drain_rows(rdd_backed, "auto"))
+    plain = sorted(r["physical_path"] for r in rdd_backed.collect())
     with _spark_jobs(spark) as jobs:
-        folded = sorted(r["physical_path"] for r in drain_rows(local, "auto"))
+        folded = sorted(r["physical_path"] for r in local.select("physical_path").collect())
     assert jobs == [0]
     assert plain == folded
-    # the explicit streaming drain yields the same rows
-    streamed = sorted(r["physical_path"] for r in drain_rows(local, True))
-    assert streamed == plain
 
 
 def _change_rows(change):
@@ -415,77 +423,156 @@ def test_commit_diff_matches_spark_reference(spark, delta_table, expose_row_dele
         assert paths(7, "files_removed") == shadow
 
 
-def test_hudi_index_delta_driver_tier_equals_spark_tier(spark, tmp_path, monkeypatch):
-    """The driver pyarrow index-delta writer (r15) emits the same
-    col-stats and files records as the Spark expression pipeline: build
-    the SAME physical table twice (copied files, so part names match)
-    and compare both merged index views row-for-row."""
-    import shutil
+def _spark_relativize(base_path, col):
+    """Spark reference relativizer: an optional file: or file:// scheme,
+    then the literal base prefix."""
+    base = base_path.rstrip("/") + "/"
+    p = F.regexp_replace(F.col(col), r"^file:(//)?", "")
+    return F.when(p.startswith(base), p.substr(F.lit(len(base) + 1), F.length(p))).otherwise(p)
+
+
+def _spark_dirname(col):
+    # '' for root-partition files (Hudi's empty partitionPath)
+    slash = F.length(col) - F.length(F.substring_index(col, "/", -1)) - 1
+    return F.when(col.contains("/"), col.substr(F.lit(1), slash)).otherwise(F.lit(""))
+
+
+def _spark_basename(col):
+    return F.substring_index(col, "/", -1)
+
+
+def _spark_index_records(spark, adds, removed, base_path, instant):
+    """The Spark expression pipeline the Hudi target used to build one
+    commit's (col-stats, files) index records from: one col-stats record
+    per (added file x column), one files record per added file, and a
+    tombstone per removed file in each."""
+    from incubator_xtable_spark.model.core import FILE_INVENTORY_SCHEMA
+
+    adds_df = spark.createDataFrame(adds, FILE_INVENTORY_SCHEMA).select(
+        _spark_relativize(base_path, "physical_path").alias("rel_path"),
+        "size_bytes",
+        "record_count",
+        "column_stats",
+    )
+    rel = F.col("rel_path")
+    stats = adds_df.select(
+        "rel_path", "record_count", F.explode("column_stats").alias("column_name", "stat")
+    ).select(
+        F.lit(instant).alias("commit_instant"),
+        _spark_dirname(rel).alias("partition_path"),
+        _spark_basename(rel).alias("file_name"),
+        "column_name",
+        F.col("stat.min_json").alias("min_json"),
+        F.col("stat.max_json").alias("max_json"),
+        F.col("stat.null_count").alias("null_count"),
+        # valueCount counts all values incl. nulls = file row count
+        F.col("record_count").alias("value_count"),
+        F.lit(False).alias("is_deleted"),
+    )
+    files = adds_df.select(
+        F.lit(instant).alias("commit_instant"),
+        _spark_dirname(rel).alias("partition_path"),
+        _spark_basename(rel).alias("file_name"),
+        F.col("size_bytes").alias("file_size"),
+        F.lit(False).alias("is_deleted"),
+    )
+    gone = spark.createDataFrame([(p,) for p in removed], "path STRING").select(
+        _spark_relativize(base_path, "path").alias("rel_path")
+    )
+    stats = stats.unionByName(
+        gone.select(
+            F.lit(instant).alias("commit_instant"),
+            _spark_dirname(rel).alias("partition_path"),
+            _spark_basename(rel).alias("file_name"),
+            F.lit(None).cast("string").alias("column_name"),
+            F.lit(None).cast("string").alias("min_json"),
+            F.lit(None).cast("string").alias("max_json"),
+            F.lit(None).cast("long").alias("null_count"),
+            F.lit(None).cast("long").alias("value_count"),
+            F.lit(True).alias("is_deleted"),
+        )
+    )
+    files = files.unionByName(
+        gone.select(
+            F.lit(instant).alias("commit_instant"),
+            _spark_dirname(rel).alias("partition_path"),
+            _spark_basename(rel).alias("file_name"),
+            F.lit(None).cast("long").alias("file_size"),
+            F.lit(True).alias("is_deleted"),
+        )
+    )
+    return stats, files
+
+
+def test_hudi_index_delta_matches_spark_reference(spark, tmp_path, monkeypatch):
+    """Every commit's col-stats and files index deltas, written with
+    pyarrow from the rows the Hudi target built its write stats from,
+    hold exactly the records the Spark reference pipeline builds from the
+    same adds and removes: a first commit of adds, then a full rewrite
+    (adds plus a tombstone per old file)."""
     import time
 
-    from pyspark.sql import functions as F
-
-    from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+    from incubator_xtable_spark.model.core import FILE_INVENTORY_SCHEMA, TableFormat
     from incubator_xtable_spark.sources.hudi_metadata import (
-        read_col_stats_index,
-        read_files_index,
+        COL_STATS_RECORD_SCHEMA,
+        FILES_RECORD_SCHEMA,
+        col_stats_dir,
+        files_dir,
     )
     from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
-    from incubator_xtable_spark.sync.controller import ConversionController
     from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
 
+    commits = []
+    complete_sync = HudiConversionTarget.complete_sync
+
+    def capture(self):
+        adds, removed = list(self._adds or ()), list(self._replaced_paths)
+        instant = complete_sync(self)
+        commits.append((instant, adds, removed))
+        return instant
+
+    monkeypatch.setattr(HudiConversionTarget, "complete_sync", capture)
+
     sf = "/root/testdata/sf0.001"
-    stage = str(tmp_path / "stage")
+    d = str(tmp_path / "nation")
     base = spark.read.parquet(f"{sf}/nation.parquet")
-    base.filter(F.col("n_nationkey") >= 5).repartition(3).write.parquet(stage)
+    base.filter(F.col("n_nationkey") >= 5).repartition(3).write.parquet(d)
     stage2 = str(tmp_path / "stage2")
     base.repartition(2).write.parquet(stage2)
 
-    def build(d):
-        def sync():
-            res = ConversionController().sync(
-                ParquetConversionSource(spark, d, name="nation"),
-                {TableFormat.HUDI: HudiConversionTarget(spark, d, table_name="nation")},
-            )
-            assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS
-
-        shutil.copytree(stage, d)
-        sync()  # commit 1: adds
-        # commit 2: full rewrite => adds + tombstones for every old file
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(d, f))
-        # one shared mtime: the parquet source makes one commit per mtime,
-        # so copies straddling a millisecond would split the rewrite into
-        # a different number of commits in each build
-        now = time.time()
-        for f in os.listdir(stage2):
-            if f.endswith(".parquet"):
-                shutil.copy(os.path.join(stage2, f), os.path.join(d, f))
-                os.utime(os.path.join(d, f), (now, now))
-        sync()
-
-    def norm(rows):
-        insts = sorted({r["commit_instant"] for r in rows})
-        ordinal = {v: i for i, v in enumerate(insts)}
-        return sorted(
-            tuple(sorted({**r.asDict(), "commit_instant": ordinal[r["commit_instant"]]}.items()))
-            for r in rows
+    def sync():
+        _full_sync(
+            spark,
+            ParquetConversionSource(spark, d, name="nation"),
+            {TableFormat.HUDI: HudiConversionTarget(spark, d, table_name="nation")},
         )
 
-    import incubator_xtable_spark.targets.hudi_target as HT
+    sync()  # commit 1: adds
+    for f in os.listdir(d):
+        if f.endswith(".parquet"):
+            os.remove(os.path.join(d, f))
+    # one shared mtime: the parquet source makes one commit per mtime
+    now = time.time()
+    for f in os.listdir(stage2):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(stage2, f), os.path.join(d, f))
+            os.utime(os.path.join(d, f), (now, now))
+    sync()  # commit 2: a FULL rewrite, so adds and removes
 
-    build(str(tmp_path / "driver_tier"))
-    monkeypatch.setattr(HT, "_DRIVER_INDEX_MAX_FILES", 0)
-    build(str(tmp_path / "spark_tier"))
-    monkeypatch.undo()
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
 
-    for reader in (read_col_stats_index, read_files_index):
-        fast = norm(reader(spark, str(tmp_path / "driver_tier")).collect())
-        slow = norm(reader(spark, str(tmp_path / "spark_tier")).collect())
-        assert fast == slow
-        assert fast  # non-vacuous
-
+    assert [(len(a), len(r)) for _, a, r in commits] == [(3, 0), (2, 3)]
+    for instant, adds, removed in commits:
+        assert list(adds[0].__fields__) == FILE_INVENTORY_SCHEMA.fieldNames()
+        ref_stats, ref_files = _spark_index_records(spark, adds, removed, d, instant)
+        for schema, where, reference in (
+            (COL_STATS_RECORD_SCHEMA, col_stats_dir(d), ref_stats),
+            (FILES_RECORD_SCHEMA, files_dir(d), ref_files),
+        ):
+            written = spark.read.schema(schema).parquet(os.path.join(where, f"{instant}.parquet"))
+            assert rows(written) == rows(reference.select(*schema.fieldNames()))
+            assert rows(written)  # non-vacuous
 
 
 def test_commit_diff_reads_the_commit_not_the_checkpoint(spark, delta_table):
@@ -653,3 +740,224 @@ def test_change_materialized_once_across_targets(spark, delta_backlog):
         _incremental_sync(spark, root, source_cls=_RddChangeSource)
     assert one_target[0] > 0  # the change frames really ran as jobs
     assert two_targets == one_target
+
+
+_FULL_FORMATS = ("delta", "iceberg", "hudi", "paimon")
+
+
+def _full_targets(spark, root, formats=_FULL_FORMATS):
+    from incubator_xtable_spark.model.core import TableFormat
+    from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
+    from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
+    from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
+    from incubator_xtable_spark.targets.paimon_target import PaimonConversionTarget
+
+    build = {
+        "delta": lambda: (TableFormat.DELTA, DeltaConversionTarget(spark, root)),
+        "iceberg": lambda: (TableFormat.ICEBERG, IcebergConversionTarget(spark, root, table_name="t")),
+        "hudi": lambda: (TableFormat.HUDI, HudiConversionTarget(spark, root, table_name="t")),
+        "paimon": lambda: (TableFormat.PAIMON, PaimonConversionTarget(spark, root, table_name="t")),
+    }
+    return dict(build[f]() for f in formats)
+
+
+def _full_sync(spark, source, targets):
+    from incubator_xtable_spark.model.core import SyncMode
+    from incubator_xtable_spark.sync.controller import ConversionConfig, ConversionController
+
+    res = ConversionController(ConversionConfig(sync_mode=SyncMode.FULL)).sync(source, targets)
+    assert {(r.status.value, r.mode.value) for r in res.values()} == {("SUCCESS", "FULL")}, {
+        f: r.error for f, r in res.items()
+    }
+
+
+class _JobGroupTarget:
+    """A target whose every method call runs under one Spark job group, so
+    the jobs it starts can be told apart from the source's."""
+
+    def __init__(self, spark, target, group):
+        self._sc, self._target, self._group = spark.sparkContext, target, group
+
+    def __getattr__(self, name):
+        attr = getattr(self._target, name)
+        if not callable(attr):
+            return attr
+
+        def call(*args, **kwargs):
+            self._sc.setJobGroup(self._group, self._group)
+            try:
+                return attr(*args, **kwargs)
+            finally:
+                self._sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return call
+
+
+def _target_jobs(spark, source, targets):
+    """FULL-sync ``targets`` and return {format: Spark jobs its calls ran}."""
+    sc = spark.sparkContext
+    groups = {fmt: f"xt-target-{fmt.value}-{uuid.uuid4().hex}" for fmt in targets}
+    _full_sync(
+        spark, source, {fmt: _JobGroupTarget(spark, t, groups[fmt]) for fmt, t in targets.items()}
+    )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {fmt.value.lower(): len(sc.statusTracker().getJobIdsForGroup(g)) for fmt, g in groups.items()}
+
+
+def _planned_files(spark, root, fmt):
+    from incubator_xtable_spark.sources.hudi_source import read_hudi_as_df
+    from incubator_xtable_spark.sources.iceberg_source import read_iceberg_as_df
+    from incubator_xtable_spark.sources.paimon_source import read_paimon_as_df
+
+    reader = {
+        "delta": DS.read_delta_as_df,
+        "iceberg": read_iceberg_as_df,
+        "hudi": read_hudi_as_df,
+        "paimon": read_paimon_as_df,
+    }[fmt]
+    return {
+        os.path.normpath(p[len("file:") :] if p.startswith("file:") else p)
+        for p in reader(spark, root).inputFiles()
+    }
+
+
+def test_full_sync_targets_run_no_spark_job(spark, tmp_path):
+    """A FULL sync of an 80-file table (above the driver footer gate, so
+    the source's distributed footer pass runs) into Delta, Iceberg, Hudi
+    and Paimon: the controller materializes the snapshot once and every
+    target diffs and commits driver-resident rows with no Spark job. A
+    second FULL sync after one file is removed and one added leaves each
+    target holding exactly the source's files, again with no target job."""
+    from incubator_xtable_spark.model.core import InternalPartitionField
+    from incubator_xtable_spark.sources.parquet_source import (
+        _DRIVER_FOOTER_MAX_FILES,
+        ParquetConversionSource,
+    )
+
+    root = str(tmp_path / "table")
+    files = _write_data_files(root, 0, 80, 1_700_000_000)
+    assert len(files) > _DRIVER_FOOTER_MAX_FILES
+
+    def source():
+        return ParquetConversionSource(
+            spark, root, name="t", partition_fields=[InternalPartitionField("p")]
+        )
+
+    zero = {f: 0 for f in _FULL_FORMATS}
+    assert _target_jobs(spark, source(), _full_targets(spark, root)) == zero
+    os.remove(files.pop(7))
+    files += _write_data_files(root, 80, 1, 1_700_000_001)
+    assert _target_jobs(spark, source(), _full_targets(spark, root)) == zero
+    expected = {os.path.normpath(p) for p in files}
+    for fmt in _FULL_FORMATS:
+        assert _planned_files(spark, root, fmt) == expected, fmt
+
+
+def _parquet_snapshot_source(base_cls, files_of):
+    """``base_cls`` with its snapshot's ``files`` frame replaced by
+    ``files_of(spark, files)``."""
+
+    class _Source(base_cls):
+        def get_current_snapshot(self):
+            snap = super().get_current_snapshot()
+            snap.files = files_of(self.spark, snap.files)
+            return snap
+
+    return _Source
+
+
+def test_snapshot_materialized_once_across_targets(spark, tmp_path):
+    """When a source's snapshot frame is a Spark plan, the controller
+    evaluates it once and hands every target the same rows, so a second
+    target adds no Spark job to a FULL sync."""
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+
+    root = str(tmp_path / "table")
+    _write_data_files(root, 0, 4, 1_700_000_000)
+    rdd_source = _parquet_snapshot_source(
+        ParquetConversionSource,
+        lambda spark, df: spark.createDataFrame(df.collect(), df.schema),
+    )
+
+    def jobs(formats):
+        for sub in ("_delta_log", "metadata", ".hoodie"):
+            shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
+        with _spark_jobs(spark) as n:
+            _full_sync(spark, rdd_source(spark, root, name="t"), _full_targets(spark, root, formats))
+        return n[0]
+
+    one_target = jobs(("iceberg",))
+    assert one_target > 0  # the snapshot frame really ran as a job
+    assert jobs(("iceberg", "hudi")) == one_target
+
+
+def _live_relative_paths(spark, root, fmt):
+    """The live files of the ``fmt`` table at ``root`` as its conversion
+    source lists them, relative to ``root``."""
+    from incubator_xtable_spark.sources.hudi_source import HudiConversionSource
+    from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+    from incubator_xtable_spark.sources.paimon_source import PaimonConversionSource
+
+    source = {
+        "delta": DS.DeltaConversionSource,
+        "iceberg": IcebergConversionSource,
+        "hudi": HudiConversionSource,
+        "paimon": PaimonConversionSource,
+    }[fmt](spark, root)
+    paths = (r["physical_path"] for r in source.get_current_snapshot().files.collect())
+    return sorted(os.path.relpath(re.sub(r"^file:(//)?", "", p), root) for p in paths)
+
+
+@pytest.mark.parametrize("scheme", ["file:", "file://"])
+@pytest.mark.parametrize("fmt", _FULL_FORMATS)
+def test_full_sync_of_uri_paths_is_a_no_op_diff(spark, tmp_path, fmt, scheme):
+    """A source may hand its snapshot over with URI-form paths (the
+    Iceberg source returns manifest paths as written). Syncing an
+    unchanged table FULL twice must commit no add and no remove the
+    second time, and every target records the files relative to its base
+    (Delta add paths, Hudi write-stat paths and partitions, the Hudi
+    index records)."""
+    from incubator_xtable_spark.sources.hudi_metadata import read_files_index
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+    from incubator_xtable_spark.targets.hudi_target import list_completed_instants, read_commit_metadata
+    from incubator_xtable_spark.targets.iceberg_target import read_table_metadata
+    from incubator_xtable_spark.targets.paimon_target import PaimonConversionTarget
+
+    root = str(tmp_path / "table")
+    os.makedirs(root)
+    names = [f"f-{i}.parquet" for i in range(4)]
+    for i, name in enumerate(names):
+        pq.write_table(pa.table({"id": pa.array(range(i * 10, i * 10 + 10), pa.int64())}), os.path.join(root, name))
+    uri_source = _parquet_snapshot_source(
+        ParquetConversionSource,
+        lambda spark, df: df.withColumn("physical_path", F.concat(F.lit(scheme), "physical_path")),
+    )
+    for _ in range(2):
+        _full_sync(spark, uri_source(spark, root, name="t"), _full_targets(spark, root, (fmt,)))
+
+    assert _live_relative_paths(spark, root, fmt) == names
+    if fmt == "delta":
+        first, second = (
+            [json.loads(line) for line in open(os.path.join(root, "_delta_log", f"{v:020d}.json"))]
+            for v in (0, 1)
+        )
+        assert sorted(a["add"]["path"] for a in first if "add" in a) == names
+        assert not [a for a in second if "add" in a or "remove" in a]
+    elif fmt == "hudi":
+        (i1, a1), (i2, a2) = list_completed_instants(root)
+        assert (a1, a2) == ("commit", "commit")
+        stats = read_commit_metadata(root, i1, a1)["partitionToWriteStats"]
+        assert list(stats) == [""]
+        assert sorted(s["path"] for s in stats[""]) == names
+        assert read_commit_metadata(root, i2, a2)["partitionToWriteStats"] == {}
+        index = read_files_index(spark, root).collect()
+        assert sorted((r["partition_path"], r["file_name"]) for r in index) == [("", n) for n in names]
+    elif fmt == "paimon":
+        snap = PaimonConversionTarget(spark, root)._latest_snapshot()
+        assert (snap["id"], snap["commitKind"], snap["deltaRecordCount"]) == (2, "APPEND", 0)
+    else:
+        meta = read_table_metadata(root)
+        summary = next(
+            s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
+        )["summary"]
+        assert (summary["added-data-files"], summary["deleted-data-files"]) == ("0", "0")
