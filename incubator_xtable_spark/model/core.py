@@ -286,6 +286,14 @@ def local_frame(spark: Any, rows: Any, schema: T.StructType):
     return spark.createDataFrame(rows, schema)
 
 
+def column(name: str) -> Any:
+    """The top-level column ``name``, quoted: a name such as ``a.b`` is
+    one column, not field ``b`` of a struct ``a``."""
+    from pyspark.sql import functions as F
+
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def is_local_plan(df: Any) -> bool:
     """True when ``df``'s optimized plan is a bare ``LocalRelation``:
     collecting it returns the driver-resident rows with no Spark job and

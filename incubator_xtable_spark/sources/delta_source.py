@@ -42,6 +42,7 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    column,
     local_frame,
 )
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
@@ -1018,7 +1019,7 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
                 "field ids)"
             )
         if cm_mode == "id":
-            _require_field_ids(spark, pq_paths)
+            _require_field_ids(pq_paths)
         # _fp/_ri attach per branch; ORC needs the pyarrow ordinal scan
         # only when this call actually joins on positions (Spark's ORC
         # reader exposes no _metadata.row_index)
@@ -1097,7 +1098,7 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
                 "parquet field ids)"
             )
         if cm_mode == "id":
-            _require_field_ids(spark, cdc_pq)
+            _require_field_ids(cdc_pq)
         fp = F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
         cdc_branches = []
         if cdc_pq:
@@ -1283,7 +1284,7 @@ def _enable_field_id_reads(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
 
 
-def _require_field_ids(spark: SparkSession, paths: list[str]) -> None:
+def _require_field_ids(paths: list[str]) -> None:
     """mode=id files MUST store parquet field ids (Delta columnMapping
     writer contract); refuse id-less files loudly — with ignoreMissing
     evolution semantics they would otherwise silently read all-null."""
@@ -1291,7 +1292,7 @@ def _require_field_ids(spark: SparkSession, paths: list[str]) -> None:
 
     bad = [
         p
-        for (cols, has_ids), grp in _footer_column_groups(spark, paths).items()
+        for (cols, has_ids), grp in _footer_column_groups(paths).items()
         if not has_ids
         for p in grp
     ]
@@ -1453,7 +1454,7 @@ def read_delta_as_df(
         else T.StructType(data_fields)
     )
     if cm_mode == "id":
-        _require_field_ids(spark, pq_paths)
+        _require_field_ids(pq_paths)
     df = spark.read.schema(read_struct).parquet(*pq_paths) if pq_paths else None
     if df is not None and cm_mode in ("name", "id"):
         # physical -> logical: collision-safe rename, then cast nested
@@ -1600,7 +1601,7 @@ def read_delta_as_df(
                     c, F.col("pv").getItem(_physical_name(schema, c)).cast(schema[c].dataType)
                 )
             bdf = bdf.drop("pv")
-        return bdf.select(*[f.name for f in schema.fields])
+        return bdf.select(*[column(f.name) for f in schema.fields])
 
     pos_branches = []
     if orc_dv:
@@ -1633,7 +1634,7 @@ def read_delta_as_df(
             )
         df = df.drop("abs_path", "pv")
     out = df.select(
-        *([f.name for f in schema.fields] + (["_row_id"] if with_row_ids else []))
+        *([column(f.name) for f in schema.fields] + (["_row_id"] if with_row_ids else []))
     )
     return out.unionByName(avro_df) if avro_df is not None else out
 
@@ -2056,7 +2057,7 @@ class DeltaConversionSource:
         )
         stats = {
             r["physical_path"]: (r["record_count"], r["column_stats"])
-            for r in footer_stats(self.spark, listing, data_schema, local_paths=shadows).collect()
+            for r in footer_stats(self.spark, listing, data_schema).collect()
         }
         dv_rows = []
         for sp, r in zip(shadows, dv_list):

@@ -42,7 +42,9 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    column,
 )
+from incubator_xtable_spark.model.hive_partitions import partition_values
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 from incubator_xtable_spark.targets.hudi_target import (
     HOODIE_DIR,
@@ -1075,11 +1077,7 @@ def read_hudi_as_df(
         if missing:
             pv_rows = []
             for r in grp_rows:
-                pv = {}
-                for seg in os.path.dirname(r["path"]).split("/"):
-                    if "=" in seg:
-                        k, _, v = seg.partition("=")
-                        pv[k] = v
+                pv = partition_values(os.path.dirname(r["path"]))
                 pv_rows.append((os.path.join(base_path, r["path"]), pv))
             pv_df = spark.createDataFrame(pv_rows, "abs_path STRING, pv MAP<STRING,STRING>")
             df = df.withColumn(
@@ -1088,7 +1086,7 @@ def read_hudi_as_df(
             for c in missing:
                 df = df.withColumn(c, F.col("pv").getItem(c).cast(table.read_schema[c].dataType))
             df = df.drop("abs_path", "pv")
-        parts.append(df.select(*[f.name for f in table.read_schema.fields]))
+        parts.append(df.select(*[column(f.name) for f in table.read_schema.fields]))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

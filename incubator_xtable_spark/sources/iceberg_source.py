@@ -45,6 +45,7 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    column,
     local_frame,
 )
 from incubator_xtable_spark.model import file_formats as _ff
@@ -1141,44 +1142,17 @@ def _name_mapped_fields(
     return T.StructType(mapped), renames
 
 
-def _footer_column_groups(spark, paths: list[str]) -> dict[tuple, list[str]]:
-    """Group files by (footer column-name set, carries-parquet-field-ids).
-    Small groups read footers driver-side; large ones in one distributed
-    footer-only pass (the parquet_source stats posture) — the distinct
-    keys coming back to the driver are few regardless of file count."""
+def _footer_column_groups(paths: list[str]) -> dict[tuple, list[str]]:
+    """Group files by (footer column-name set, carries-parquet-field-ids),
+    reading each footer's schema on the driver (a few KB per file, the
+    parquet_source posture)."""
     import pyarrow.parquet as _pq
 
-    def _key_of(sch) -> tuple:
-        has_ids = any(
-            f.metadata and b"PARQUET:field_id" in f.metadata for f in sch
-        )
-        return (frozenset(sch.names), has_ids)
-
     groups: dict[tuple, list[str]] = {}
-    if len(paths) <= 64:
-        for p in paths:
-            groups.setdefault(_key_of(_pq.read_schema(p)), []).append(p)
-        return groups
-    pdf = spark.createDataFrame([(p,) for p in paths], "p STRING")
-
-    def _read(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        def enc(x):
-            sch = pq.read_schema(x)
-            has = any(f.metadata and b"PARQUET:field_id" in f.metadata for f in sch)
-            return ("1|" if has else "0|") + "\x00".join(sorted(sch.names))
-
-        for b in batches:
-            yield pd.DataFrame({"p": b["p"], "cols": [enc(x) for x in b["p"]]})
-
-    n_parts = max(1, min(len(paths) // 64, 256))
-    for r in pdf.repartition(n_parts).mapInPandas(_read, "p STRING, cols STRING").collect():
-        has_ids = r["cols"].startswith("1|")
-        names = r["cols"][2:]
-        key = (frozenset(names.split("\x00")) if names else frozenset(), has_ids)
-        groups.setdefault(key, []).append(r["p"])
+    for p in paths:
+        sch = _pq.read_schema(p)
+        has_ids = any(f.metadata and b"PARQUET:field_id" in f.metadata for f in sch)
+        groups.setdefault((frozenset(sch.names), has_ids), []).append(p)
     return groups
 
 
@@ -1214,8 +1188,7 @@ def _with_parquet_field_ids(dt: "T.DataType"):
 
 def _read_name_mapped(spark, meta: dict, fields, paths: list[str]) -> DataFrame:
     """Read ``paths`` presenting the LOGICAL columns of ``fields``,
-    resolved PER DISTINCT FOOTER SCHEMA (one footer-only pass;
-    driver-side up to 64 files, distributed beyond):
+    resolved PER DISTINCT FOOTER SCHEMA (one driver-side footer pass):
 
     - files that STORE PARQUET FIELD IDS resolve by id (the Iceberg
       spec's primary rule) via Spark's native field-id matching, with
@@ -1234,7 +1207,7 @@ def _read_name_mapped(spark, meta: dict, fields, paths: list[str]) -> DataFrame:
     from incubator_xtable_spark.sources.delta_source import _rename_back
 
     logical_names = [f.name for f in fields]
-    groups = _footer_column_groups(spark, paths) if fields else {(frozenset(), False): list(paths)}
+    groups = _footer_column_groups(paths) if fields else {(frozenset(), False): list(paths)}
     parts = []
     for (footer_cols, has_ids), grp_paths in groups.items():
         renames: dict[str, str] = {}
@@ -1257,7 +1230,7 @@ def _read_name_mapped(spark, meta: dict, fields, paths: list[str]) -> DataFrame:
             .withColumn("_nm_pos", F.col("_metadata.row_index"))
         )
         df = _rename_back(df, renames)
-        parts.append(df.select(*logical_names, "_nm_path", "_nm_pos"))
+        parts.append(df.select(*map(column, logical_names), "_nm_path", "_nm_pos"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1478,8 +1451,8 @@ def read_iceberg_as_df(
         )
         df = df.join(F.broadcast(fr), df["_scan_path"] == fr["_fr_path"], "left")
         df = df.withColumn("_row_id", F.col("_first_row_id") + F.col("_nm_pos"))
-        return df.select(*[f.name for f in table.read_schema.fields], "_row_id")
-    return df.select(*[f.name for f in table.read_schema.fields])
+        return df.select(*[column(f.name) for f in table.read_schema.fields], "_row_id")
+    return df.select(*[column(f.name) for f in table.read_schema.fields])
 
 
 def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> DataFrame:

@@ -62,6 +62,7 @@ from incubator_xtable_spark.model.core import (
     PartitionTransformType,
     TableChange,
     TableFormat,
+    column,
 )
 from incubator_xtable_spark.model.paimon_binary import (
     PaimonFieldType,
@@ -1154,13 +1155,13 @@ def read_paimon_as_df(
                     "left_anti",
                 )
             )
-        df = df.select(*[f.name for f in table.read_schema.fields])
+        df = df.select(*[column(f.name) for f in table.read_schema.fields])
     elif dv:
         # no parquet branch but DVs present: still surface the refusal
         src._dv_items(dv)
     if orc_paths:
         orc_df = spark.read.schema(table.read_schema).orc(list(orc_paths)).select(
-            *[f.name for f in table.read_schema.fields]
+            *[column(f.name) for f in table.read_schema.fields]
         )
         df = orc_df if df is None else df.unionByName(orc_df)
     if avro_paths:

@@ -667,7 +667,7 @@ def delta_optimize(
     Scale: candidate selection is a driver pass over the LIVE file
     inventory (metadata-sized); each partition's rewrite is one
     distributed read->coalesce->write job sized by the bin math; stats
-    for the new files come from one distributed footer pass
+    for the new files come from one driver-side footer pass
     (parquet_source.footer_stats). ICT tables get a monotonic
     inCommitTimestamp. Returns {"removed": [...], "added": [...],
     "version": committed version or None when nothing qualified}.
@@ -786,7 +786,7 @@ def delta_optimize(
     if not added:
         return {"removed": [], "added": [], "version": None}
 
-    # stats for the new files: one distributed footer pass
+    # stats for the new files: one driver-side footer pass
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     part_names = set(meta["partitionColumns"] or [])
     data_fields = T.StructType([f for f in schema.fields if f.name not in part_names])
@@ -896,7 +896,7 @@ def iceberg_rewrite_data_files(
     Scale: candidate selection walks the manifest plane (metadata-
     sized); each partition's rewrite is one distributed
     read->anti-join->coalesce->write job; new-file stats come from one
-    distributed footer pass. Returns {"removed", "added",
+    driver-side footer pass. Returns {"removed", "added",
     "snapshot_id"} (snapshot_id None when nothing qualified)."""
     import math
     import uuid as _uuid
@@ -1097,7 +1097,7 @@ def hudi_cluster_small_files(
 
     Scale: the fs-view replay is the driver-side timeline pass the
     source already does; each partition's rewrite is one distributed
-    read->coalesce->write; stats come from one distributed footer pass.
+    read->coalesce->write; stats come from one driver-side footer pass.
     Returns {"removed", "added", "instant"} (instant None when nothing
     qualified)."""
     import math
@@ -1279,7 +1279,7 @@ def paimon_compact_small_files(
 
     Scale: inventory selection is metadata-plane; each partition's
     rewrite is one distributed read->coalesce->write; stats come from
-    one distributed footer pass. Returns {"removed", "added",
+    one driver-side footer pass. Returns {"removed", "added",
     "snapshot_id"}."""
     import math
     import uuid as _uuid

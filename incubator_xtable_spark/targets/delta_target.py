@@ -38,6 +38,7 @@ from incubator_xtable_spark.model.core import (
     TableChange,
 )
 from incubator_xtable_spark.model.files_diff import files_diff, relativize
+from incubator_xtable_spark.model.hive_partitions import partition_values
 from incubator_xtable_spark.model.stat_codec import to_delta_stats_json
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -976,7 +977,6 @@ class DeltaConversionTarget:
         import glob
         import shutil
         import uuid as _uuid
-        from urllib.parse import unquote
 
         if changes.isEmpty():
             return []
@@ -1014,13 +1014,7 @@ class DeltaConversionTarget:
         writer.parquet(tmp)
         out: list[dict] = []
         for part in sorted(glob.glob(os.path.join(tmp, "**", "part-*.parquet"), recursive=True)):
-            rel_dir = os.path.relpath(os.path.dirname(part), tmp)
-            pv: dict[str, str] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    v = unquote(v)
-                    pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+            pv = partition_values(os.path.relpath(os.path.dirname(part), tmp))
             name = f"cdc-{_uuid.uuid4().hex}.parquet"
             dst = os.path.join(cd_dir, name)
             os.replace(part, dst)

@@ -771,39 +771,6 @@ def _full_sync(spark, source, targets):
     }
 
 
-class _JobGroupTarget:
-    """A target whose every method call runs under one Spark job group, so
-    the jobs it starts can be told apart from the source's."""
-
-    def __init__(self, spark, target, group):
-        self._sc, self._target, self._group = spark.sparkContext, target, group
-
-    def __getattr__(self, name):
-        attr = getattr(self._target, name)
-        if not callable(attr):
-            return attr
-
-        def call(*args, **kwargs):
-            self._sc.setJobGroup(self._group, self._group)
-            try:
-                return attr(*args, **kwargs)
-            finally:
-                self._sc.setLocalProperty("spark.jobGroup.id", None)
-
-        return call
-
-
-def _target_jobs(spark, source, targets):
-    """FULL-sync ``targets`` and return {format: Spark jobs its calls ran}."""
-    sc = spark.sparkContext
-    groups = {fmt: f"xt-target-{fmt.value}-{uuid.uuid4().hex}" for fmt in targets}
-    _full_sync(
-        spark, source, {fmt: _JobGroupTarget(spark, t, groups[fmt]) for fmt, t in targets.items()}
-    )
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return {fmt.value.lower(): len(sc.statusTracker().getJobIdsForGroup(g)) for fmt, g in groups.items()}
-
-
 def _planned_files(spark, root, fmt):
     from incubator_xtable_spark.sources.hudi_source import read_hudi_as_df
     from incubator_xtable_spark.sources.iceberg_source import read_iceberg_as_df
@@ -822,35 +789,58 @@ def _planned_files(spark, root, fmt):
 
 
 def test_full_sync_targets_run_no_spark_job(spark, tmp_path):
-    """A FULL sync of an 80-file table (above the driver footer gate, so
-    the source's distributed footer pass runs) into Delta, Iceberg, Hudi
-    and Paimon: the controller materializes the snapshot once and every
-    target diffs and commits driver-resident rows with no Spark job. A
-    second FULL sync after one file is removed and one added leaves each
-    target holding exactly the source's files, again with no target job."""
+    """A FULL sync of an 80-file table into Delta, Iceberg, Hudi and Paimon
+    runs no Spark job at all: the source reads its footers on the driver,
+    the controller materializes the snapshot once and every target diffs
+    and commits driver-resident rows. A second FULL sync after one file is
+    removed and one added also runs none, and leaves each target holding
+    exactly the source's files."""
     from incubator_xtable_spark.model.core import InternalPartitionField
-    from incubator_xtable_spark.sources.parquet_source import (
-        _DRIVER_FOOTER_MAX_FILES,
-        ParquetConversionSource,
-    )
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
 
     root = str(tmp_path / "table")
     files = _write_data_files(root, 0, 80, 1_700_000_000)
-    assert len(files) > _DRIVER_FOOTER_MAX_FILES
 
-    def source():
-        return ParquetConversionSource(
+    def sync_jobs():
+        source = ParquetConversionSource(
             spark, root, name="t", partition_fields=[InternalPartitionField("p")]
         )
+        with _spark_jobs(spark) as n:
+            _full_sync(spark, source, _full_targets(spark, root))
+        return n[0]
 
-    zero = {f: 0 for f in _FULL_FORMATS}
-    assert _target_jobs(spark, source(), _full_targets(spark, root)) == zero
+    assert sync_jobs() == 0
     os.remove(files.pop(7))
     files += _write_data_files(root, 80, 1, 1_700_000_001)
-    assert _target_jobs(spark, source(), _full_targets(spark, root)) == zero
+    assert sync_jobs() == 0
     expected = {os.path.normpath(p) for p in files}
     for fmt in _FULL_FORMATS:
         assert _planned_files(spark, root, fmt) == expected, fmt
+
+
+def test_footer_stats_of_local_listing_runs_no_spark_job(spark, tmp_path):
+    """``footer_stats`` over a driver-built listing reads the footers on
+    the driver and returns a LocalRelation: no Spark job, before or after
+    the result is collected."""
+    from pyspark.sql import types as T
+
+    from incubator_xtable_spark.model.core import local_frame
+    from incubator_xtable_spark.sources.parquet_source import footer_stats
+
+    files = _write_data_files(str(tmp_path / "table"), 0, 80, 1_700_000_000)
+    listing = local_frame(
+        spark, [(p,) for p in files], T.StructType([T.StructField("physical_path", T.StringType())])
+    )
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    with _spark_jobs(spark) as n:
+        stats = footer_stats(spark, listing, schema)
+        rows = {r["physical_path"]: r for r in stats.collect()}
+    assert n[0] == 0
+    assert is_local_plan(stats)
+    assert set(rows) == set(files)
+    r = rows[files[3]]
+    assert r["record_count"] == 10
+    assert (r["column_stats"]["id"]["min_json"], r["column_stats"]["id"]["max_json"]) == ("30", "39")
 
 
 def _parquet_snapshot_source(base_cls, files_of):
