@@ -6,7 +6,7 @@ metadata-plane converter between lakehouse table formats. This package
 re-expresses its capability surface in idiomatic PySpark:
 
 - ``model``      canonical table/schema/stats model (StructType + dataclasses)
-- ``sources``    per-format metadata readers -> file-inventory DataFrames
+- ``sources``    per-format metadata readers -> file-inventory Arrow tables
 - ``targets``    per-format metadata committers (Delta log protocol, ...)
 - ``sync``       full/incremental sync controller + bookmark protocol
 - ``operators``  large-scale data-pipeline operators (dedup, ANN, text, asof)

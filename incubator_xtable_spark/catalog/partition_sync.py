@@ -12,8 +12,8 @@ Reference parity (behavior mirrored, not code):
   incremental path (HudiCatalogPartitionSyncTool.java:230-256)
 
 Format-agnostic by construction: storage partitions come from the
-conversion source's file inventory (one distinct-aggregation over the
-inventory DataFrame — metadata-sized), and the incremental path replays
+conversion source's file inventory (the distinct partition paths of the
+inventory table — metadata-sized), and the incremental path replays
 the same per-commit TableChange diffs the conversion pipeline uses, so
 Hudi/Delta/Iceberg tables all sync partitions through one code path.
 """
@@ -23,13 +23,13 @@ from __future__ import annotations
 import logging
 import os
 from dataclasses import dataclass
-from typing import Optional
 
-from pyspark.sql import functions as F
+import pyarrow.compute as pc
 
 from incubator_xtable_spark.catalog.external_clients import CatalogPartition
 from incubator_xtable_spark.catalog.sync_client import CatalogTableIdentifier
-from incubator_xtable_spark.model.core import InstantsForIncrementalSync, InternalTable
+from incubator_xtable_spark.model.core import InstantsForIncrementalSync, InternalTable, table_rows
+from incubator_xtable_spark.model.hive_partitions import DEFAULT_PARTITION_NAME
 
 log = logging.getLogger(__name__)
 
@@ -44,33 +44,21 @@ class PartitionEvent:
     storage_partition: str  # relative partition path
 
 
-def partition_path_of(row_partition_values: Optional[dict], part_names: list[str]) -> Optional[str]:
-    """Hive-style relative partition path col1=v1/col2=v2 from inventory
-    partition_values (None for unpartitioned tables)."""
-    if not part_names:
-        return None
-    pv = row_partition_values or {}
-    return "/".join(f"{c}={pv.get(c, '__HIVE_DEFAULT_PARTITION__')}" for c in part_names)
-
-
-def storage_partitions_from_inventory(files_df, part_names: list[str]) -> list[str]:
-    """Distinct relative partition paths in a file inventory DataFrame —
-    one narrow distinct over metadata, never a data scan."""
+def storage_partitions_from_inventory(files, part_names: list[str]) -> list[str]:
+    """Distinct relative partition paths (col1=v1/col2=v2) in a file
+    inventory table — metadata only, never a data scan."""
     if not part_names:
         return []
-    expr = F.concat_ws(
-        "/",
-        *[
-            F.concat(
-                F.lit(f"{c}="),
-                F.coalesce(
-                    F.col("partition_values").getItem(c), F.lit("__HIVE_DEFAULT_PARTITION__")
-                ),
+    paths = set()
+    for r in table_rows(files.select(["partition_values"])):
+        pv = r["partition_values"] or {}
+        paths.add(
+            "/".join(
+                f"{c}={DEFAULT_PARTITION_NAME if pv.get(c) is None else pv[c]}"
+                for c in part_names
             )
-            for c in part_names
-        ],
-    )
-    return sorted(r["p"] for r in files_df.select(expr.alias("p")).distinct().collect())
+        )
+    return sorted(paths)
 
 
 def partition_values_in_path(rel_path: str) -> list[str]:
@@ -130,13 +118,13 @@ class CatalogPartitionSyncTool:
         written: set[str] = set()
         for commit in backlog.commits_to_process:
             change = self.source.get_table_change_for_commit(commit)
+            removed = change.files_removed
             written.update(
                 storage_partitions_from_inventory(change.files_added, part_names)
             )
             written.update(
                 storage_partitions_from_inventory(
-                    change.files_removed.filter(F.col("partition_values").isNotNull()),
-                    part_names,
+                    removed.filter(pc.is_valid(removed["partition_values"])), part_names
                 )
             )
         # touched partitions re-validate against the current snapshot: a

@@ -16,20 +16,24 @@ Design deltas from the reference (Spark-first, not a port):
   extras (fieldId, enum values, fixed size, timestamp precision) ride in
   ``StructField.metadata`` (see model/schema_meta.py) — no custom schema
   class tree;
-- the file inventory is a *DataFrame* (one row per data file) rather than
-  a Java list, so snapshot diffs are anti-joins and stats rollups are
-  aggregations that scale with the cluster, not the driver. Inventories
-  the driver already holds are built with ``local_frame`` (Arrow-backed
-  ``LocalRelation``), so draining them runs no Spark job.
+- the file inventory and the row-delete channel are ``pyarrow.Table``s
+  (one row per data file, ``FILE_INVENTORY_ARROW`` /
+  ``ROW_DELETES_ARROW``) held on the driver, as the reference holds its
+  ``InternalDataFile`` lists; sources build them and targets read them
+  with ``table_rows``, and snapshot diffs are ``model/files_diff`` dict
+  work. No model channel crosses into the JVM. Only the CDC channel
+  (``row_changes``) is a Spark DataFrame: its rows are data-sized.
 """
 
 from __future__ import annotations
 
 import enum
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Iterable, Optional
 
+import pyarrow as pa
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class TableFormat(str, enum.Enum):
@@ -125,8 +129,8 @@ class InternalTable:
 
 
 # ---------------------------------------------------------------------------
-# File inventory: DataFrame schema shared by all sources/targets.
-# One row per live data file — the Spark-native InternalDataFile.
+# File inventory: the schema shared by all sources/targets.
+# One row per live data file — the engine's InternalDataFile.
 # ---------------------------------------------------------------------------
 
 FILE_INVENTORY_SCHEMA = T.StructType(
@@ -169,18 +173,22 @@ ROW_DELETES_SCHEMA = T.StructType(
     ]
 )
 
+# the Arrow forms every model channel is carried in
+FILE_INVENTORY_ARROW = to_arrow_schema(FILE_INVENTORY_SCHEMA)
+ROW_DELETES_ARROW = to_arrow_schema(ROW_DELETES_SCHEMA)
+
 
 @dataclass
 class InternalSnapshot:
-    """version + table + live-file inventory (DataFrame)."""
+    """version + table + live-file inventory (pyarrow.Table)."""
 
     table: InternalTable
     version: str
-    # pyspark DataFrame with FILE_INVENTORY_SCHEMA
+    # pyarrow.Table in FILE_INVENTORY_ARROW
     files: Any
     pending_commits: list[str] = field(default_factory=list)
     source_identifier: Optional[str] = None
-    # DataFrame[ROW_DELETES_SCHEMA] when the source exposes row-level
+    # pyarrow.Table in ROW_DELETES_ARROW when the source exposes row-level
     # deletes instead of purging shadow files (None otherwise)
     row_deletes: Any = None
     # equality-delete channel (Iceberg expose_equality_deletes=True):
@@ -196,14 +204,14 @@ class InternalSnapshot:
 
 @dataclass
 class TableChange:
-    """Per-commit change set: adds/removes as inventory DataFrames."""
+    """Per-commit change set: adds/removes as inventory tables."""
 
     table: InternalTable
     commit_id: str
-    files_added: Any  # DataFrame[FILE_INVENTORY_SCHEMA]
-    files_removed: Any  # DataFrame[FILE_INVENTORY_SCHEMA]
+    files_added: Any  # pyarrow.Table in FILE_INVENTORY_ARROW
+    files_removed: Any  # pyarrow.Table in FILE_INVENTORY_ARROW
     source_identifier: Optional[str] = None
-    row_deletes: Any = None  # DataFrame[ROW_DELETES_SCHEMA] or None
+    row_deletes: Any = None  # pyarrow.Table in ROW_DELETES_ARROW, or None
     equality_deletes: Any = None  # see InternalSnapshot.equality_deletes
     # CDC channel (sources with emit_row_changes=True): the commit's
     # row-level changes — table columns + `_change_type` (insert /
@@ -263,26 +271,43 @@ class SyncResult:
     catalog_sync_statuses: list = field(default_factory=list)
 
 
+def arrow_table(rows: Iterable[Any], schema: pa.Schema) -> pa.Table:
+    """``rows`` (dicts, or tuples in ``schema`` field order; map values as
+    dicts) as a ``pyarrow.Table`` in ``schema``: how every model channel
+    is built."""
+    names = schema.names
+    return pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows], schema=schema
+    )
+
+
+def table_rows(table: pa.Table) -> list[dict]:
+    """The rows of a model table as dicts, its top-level map columns as
+    dicts too (``to_pylist`` gives a map as (key, value) pairs): how
+    every consumer reads a model channel."""
+    rows = table.to_pylist()
+    maps = [f.name for f in table.schema if pa.types.is_map(f.type)]
+    for r in rows:
+        for name in maps:
+            if r[name] is not None:
+                r[name] = dict(r[name])
+    return rows
+
+
 def local_frame(spark: Any, rows: Any, schema: T.StructType):
-    """A driver-built metadata frame that Spark plans as a real
-    ``LocalRelation``.
+    """A driver-built frame that Spark plans as a real ``LocalRelation``,
+    for rows that go on to Spark work or to a caller that wants a
+    DataFrame (never a model channel).
 
     ``rows`` is a ``pyarrow.Table`` or a list of rows (dicts, tuples or
     ``Row``s in ``schema`` field order). ``spark.createDataFrame(list)``
     plans a ``LogicalRDD``, so every drain of it is a full Spark job with
     defaultParallelism tasks; the Arrow route lands the rows in the
     driver JVM instead. Deterministic filters and projections over the
-    result (the stats ``from_json`` parse included) fold into a new
-    ``LocalRelation`` at optimization, so collecting them runs no job."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    result fold into a new ``LocalRelation`` at optimization, so
+    collecting them runs no job."""
     if not isinstance(rows, pa.Table):
-        names = schema.fieldNames()
-        rows = pa.Table.from_pylist(
-            [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
-            schema=to_arrow_schema(schema),
-        )
+        rows = arrow_table(rows, to_arrow_schema(schema))
     return spark.createDataFrame(rows, schema)
 
 
@@ -292,11 +317,3 @@ def column(name: str) -> Any:
     from pyspark.sql import functions as F
 
     return F.col("`" + name.replace("`", "``") + "`")
-
-
-def is_local_plan(df: Any) -> bool:
-    """True when ``df``'s optimized plan is a bare ``LocalRelation``:
-    collecting it returns the driver-resident rows with no Spark job and
-    nothing to compile."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    return plan.getClass().getSimpleName() == "LocalRelation"

@@ -7,16 +7,18 @@ Reference parity:
   latest keys absent from previous, the removed ones previous keys absent
   from latest)
 
-Both sides are driver-resident: the controller materializes the source
-snapshot once, and each target reads its own live state from its log or
-manifests. Keys go through ``relativize`` so a URI-form path
+Both sides are driver-resident: the source hands over its snapshot as a
+driver-held table, and each target reads its own live state from its log
+or manifests. Keys go through ``relativize`` so a URI-form path
 (``file:/x``, ``file:///x``) and a bare or base-relative one name the
-same file.
+same file; ``with_file_paths`` turns a Spark scan's URI-escaped file
+paths back into file paths, so readers join them against driver paths.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, TypeVar
+from typing import Any, Callable, Iterable, TypeVar
+from urllib.parse import unquote
 
 L = TypeVar("L")
 P = TypeVar("P")
@@ -54,3 +56,17 @@ def files_diff(
     added = [x for k, x in new.items() if k not in old]
     removed = [x for k, x in old.items() if k not in new]
     return added, removed
+
+
+def with_file_paths(df: Any, name: str) -> Any:
+    """``df`` with its ``name`` column, a scanned file's path as Spark
+    reports it (``input_file_name()`` or ``_metadata.file_path``, scheme
+    stripped), turned into the path the file was listed under. Spark
+    reports the URI string, which quotes a ``%`` or a space; ``unquote``
+    inverts that quoting and, unlike ``url_decode``, keeps a ``+``."""
+    escaped = {}
+    for uri in df.inputFiles():
+        form = _strip_scheme(uri)
+        if unquote(form) != form:
+            escaped[form] = unquote(form)
+    return df.replace(escaped, subset=[name]) if escaped else df

@@ -41,11 +41,7 @@ import decimal
 
 from pyspark.sql import types as T
 
-from incubator_xtable_spark.model.avro_codec import (
-    Branch,
-    decode_binary_record,
-    encode_binary_record,
-)
+from incubator_xtable_spark.model.avro_codec import Branch, encode_binary_record
 
 ALL_PARTITIONS_KEY = "__all_partitions__"
 NON_PARTITIONED_NAME = "."  # real Hudi's record key for the root partition
@@ -158,14 +154,6 @@ def wrap_value(value, dtype: T.DataType) -> Branch | None:
 
 def col_stats_key(column_name: str, file_name: str) -> str:
     return f"{column_name};;{file_name}"
-
-
-def col_stats_key_file(key: str) -> str | None:
-    """file name out of a READABLE column_stats record key, None for
-    hashed/foreign keys (hashed keys carry the file only as an MD5 — use
-    the payload's fileName instead)."""
-    _, sep, fname = key.partition(";;")
-    return fname if sep else None
 
 
 def col_stats_record(
@@ -862,21 +850,3 @@ def metadata_logs_supported(log_paths: list[str]) -> bool:
     except Exception:
         return False
     return True
-
-
-def decode_files_partition(cells: list[tuple[bytes, bytes]], schema_json: str) -> dict[str, dict[str, int]]:
-    """Inverse of files_partition_records over raw HFile cells (row, value):
-    -> {partition_path: {file_name: size}}, tombstoned files dropped."""
-    state: dict[str, dict[str, int]] = {}
-    for _row, value in cells:
-        rec = decode_binary_record(schema_json, value)
-        if rec.get("type") != 2:
-            continue
-        part = rec["key"]
-        part = "" if part == NON_PARTITIONED_NAME else part
-        files = {}
-        for fn, info in (rec.get("filesystemMetadata") or {}).items():
-            if not info.get("isDeleted"):
-                files[fn] = int(info["size"])
-        state[part] = files
-    return state

@@ -100,7 +100,7 @@ def validate_target(
 
             src = IcebergConversionSource(spark, base_path)
             snap = src.get_current_snapshot()
-            abs_paths = [r["physical_path"] for r in snap.files.select("physical_path").collect()]
+            abs_paths = snap.files.column("physical_path").to_pylist()
             reader = read_iceberg_as_df
         elif table_format == "PAIMON":
             from incubator_xtable_spark.sources.paimon_source import (
@@ -109,7 +109,7 @@ def validate_target(
             )
 
             snap = PaimonConversionSource(spark, base_path).get_current_snapshot()
-            abs_paths = [r["physical_path"] for r in snap.files.select("physical_path").collect()]
+            abs_paths = snap.files.column("physical_path").to_pylist()
             reader = read_paimon_as_df
         else:
             raise ValueError(f"unsupported format {table_format}")

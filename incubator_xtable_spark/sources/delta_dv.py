@@ -35,7 +35,7 @@ import os
 import struct
 import uuid as _uuid
 import zlib
-from typing import Iterable, Iterator, Optional
+from typing import Iterable, Iterator
 
 import numpy as np
 
@@ -439,15 +439,6 @@ def delete_positions_path(path: str, desc: dict) -> str:
     h = hashlib.md5(dv_unique_id(desc).encode()).hexdigest()[:8]
     stem = path[: -len(".parquet")] if path.endswith(".parquet") else path
     return f"{stem}.deletes-{h}.parquet"
-
-
-def delete_file_stem(path: str) -> Optional[str]:
-    """Inverse of delete_positions_path: the covered data-file stem, or
-    None if the path is not a positions file."""
-    import re as _re
-
-    m = _re.match(r"^(.*)\.deletes-[0-9a-f]{8}\.parquet$", path)
-    return m.group(1) if m else None
 
 
 def write_delete_position_files(

@@ -1,9 +1,10 @@
 """Delta Lake conversion source. Every piece of log state — live files,
 metaData, protocol, txn and domainMetadata, a commit's own actions — is
 rebuilt by ONE session-free replay (`log_replay`: the checkpoint in range
-read with pyarrow, then the JSON tail) and a few folds over it; the
-frames the source hands on are driver-built `LocalRelation`s
-(`model.core.local_frame`), so draining them runs no Spark job.
+read with pyarrow, then the JSON tail) and a few folds over it. The
+inventories the source hands on are built from those dicts on the
+driver, `add.stats` parsed in Python, so a sync sends none of them
+through the JVM.
 
 Reference parity:
 - snapshot scan / allFiles         delta/DeltaConversionSource.java:93-101,
@@ -23,28 +24,34 @@ is metadata-sized: one dict per live file.
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
-from typing import Iterator, Optional
-from weakref import WeakKeyDictionary
+from decimal import Decimal
+from typing import Any, Iterator, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
-    FILE_INVENTORY_SCHEMA,
+    FILE_INVENTORY_ARROW,
     InstantsForIncrementalSync,
     InternalPartitionField,
     InternalSnapshot,
     InternalTable,
     TableChange,
     TableFormat,
+    arrow_table,
     column,
     local_frame,
 )
+from incubator_xtable_spark.model.file_formats import from_extension
+from incubator_xtable_spark.model.files_diff import with_file_paths
+from incubator_xtable_spark.model.stat_codec import encode_stat
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
 _ACTION_SCHEMA = T.StructType(
@@ -164,10 +171,6 @@ _ACTION_SCHEMA = T.StructType(
 )
 
 _ACTION_TYPES: dict[str, T.StructType] = {f.name: f.dataType for f in _ACTION_SCHEMA.fields}
-# the add-action struct: the column set of a commit's `add.*` projection
-_ADD_TYPE: T.StructType = _ACTION_SCHEMA["add"].dataType
-_ADD_NO_DV_TYPE = T.StructType([f for f in _ADD_TYPE.fields if f.name != "deletionVector"])
-_EFF_PATH_SCHEMA = T.StructType([T.StructField("eff_path", T.StringType())])
 
 
 def _log_dir(base_path: str) -> str:
@@ -547,15 +550,6 @@ def latest_protocol(base_path: str, version: Optional[int] = None) -> Optional[d
     return latest_action(base_path, "protocol", version)
 
 
-def read_log_actions(
-    spark: SparkSession, base_path: str, max_version: Optional[int] = None
-) -> DataFrame:
-    """The replay as an _ACTION_SCHEMA + version frame (a LocalRelation)."""
-    rows = [dict(action, version=ver) for ver, action in log_replay(base_path, max_version)]
-    schema = T.StructType(list(_ACTION_SCHEMA.fields) + [T.StructField("version", T.LongType())])
-    return local_frame(spark, rows, schema)
-
-
 def write_checkpoint(
     spark: SparkSession, base_path: str, version: int, layout: str = "classic"
 ) -> None:
@@ -802,7 +796,7 @@ def _live_files_schema() -> T.StructType:
     """The column list of live_files_df, typed straight off
     _ACTION_SCHEMA's add struct."""
     def ft(n: str) -> T.DataType:
-        return _ADD_TYPE[n].dataType
+        return _ACTION_TYPES["add"][n].dataType
 
     return T.StructType(
         [
@@ -818,6 +812,12 @@ def _live_files_schema() -> T.StructType:
             T.StructField("deletionVector", ft("deletionVector")),
         ]
     )
+
+
+def _dv_of(add: dict) -> Optional[dict]:
+    """The deletion vector an add action attaches, None when it has none."""
+    dv = add["deletionVector"]
+    return dv if dv is not None and dv["storageType"] is not None else None
 
 
 def _effective_path(path: str, dv: Optional[dict]) -> str:
@@ -842,11 +842,6 @@ def _own_actions(base_path: str, version: int) -> list[dict]:
     return [a for p in _commit_slice_paths(base_path, version) for a in _json_actions(p)]
 
 
-def _commit_actions(spark: SparkSession, base_path: str, version: int) -> DataFrame:
-    """Commit ``version``'s own actions as an _ACTION_SCHEMA frame."""
-    return local_frame(spark, _own_actions(base_path, version), _ACTION_SCHEMA)
-
-
 def _commit_diff_local(base_path: str, version: int, by_raw_path: bool):
     """The diff of ONE commit, on the driver: set and dict work over the
     commit's own actions.
@@ -855,8 +850,7 @@ def _commit_diff_local(base_path: str, version: int, by_raw_path: bool):
     through the live state just before the commit — unless
     ``by_raw_path`` (row-delete exposure, where a DV update is a
     data-file no-op). Paths present on both sides are no-ops and drop
-    out. Returns (surviving add dicts typed as _ADD_TYPE, removed
-    effective paths)."""
+    out. Returns (surviving add dicts, removed effective paths)."""
     adds: list[dict] = []
     removes: list[str] = []
     for action in _own_actions(base_path, version):
@@ -1505,6 +1499,7 @@ def read_delta_as_df(
         df = df.withColumn(
             "_fp", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
         ).withColumn("_ri", F.col("_metadata.row_index"))
+        df = with_file_paths(df, "_fp")
         if with_row_ids:
             rid = spark.createDataFrame(
                 [(os.path.join(base, r["path"]), r["baseRowId"]) for r in live],
@@ -1627,7 +1622,7 @@ def read_delta_as_df(
         # input_file_name() may yield file:/p or file:///p depending on the
         # file index path — strip both forms (URI authority is empty)
         df = df.withColumn("abs_path", F.regexp_replace(F.input_file_name(), r"^file:(//)?", ""))
-        df = df.join(F.broadcast(pv), "abs_path", "left")
+        df = with_file_paths(df, "abs_path").join(F.broadcast(pv), "abs_path", "left")
         for c in part_cols:
             df = df.withColumn(
                 c, F.col("pv").getItem(_physical_name(schema, c)).cast(schema[c].dataType)
@@ -1641,83 +1636,93 @@ def read_delta_as_df(
 
 # ---------------------------------------------------------------------------
 # Stats parsing: Delta add.stats JSON -> inventory column_stats, typed by
-# the table schema so numeric fragments stay numeric on re-serialization.
+# the table schema so numeric values stay numeric on re-serialization.
 # ---------------------------------------------------------------------------
 
-_NATIVE_STAT_TYPES = (
-    T.IntegerType,
-    T.LongType,
-    T.ShortType,
-    T.ByteType,
-    T.FloatType,
-    T.DoubleType,
-    T.BooleanType,
-)
+# (low, high) of the integer stat types
+_INT_RANGES = {
+    T.ByteType: (-(2**7), 2**7),
+    T.ShortType: (-(2**15), 2**15),
+    T.IntegerType: (-(2**31), 2**31),
+    T.LongType: (-(2**63), 2**63),
+}
+# the string spellings a JSON float field accepts (Spark's JSON reader)
+_NON_FINITE = {
+    "NaN": math.nan,
+    "Infinity": math.inf,
+    "+Infinity": math.inf,
+    "+INF": math.inf,
+    "-Infinity": -math.inf,
+    "-INF": -math.inf,
+}
 
 
-def _typed_stats_schema(schema: T.StructType) -> T.StructType:
-    """Schema for parsing minValues/maxValues: native JSON types where the
-    column is numeric/boolean; strings elsewhere (our codec writes
-    timestamps/dates/decimals/binary as strings)."""
-    fields = []
-    for f in schema.fields:
-        st = f.dataType if isinstance(f.dataType, _NATIVE_STAT_TYPES) else T.StringType()
-        fields.append(T.StructField(f.name, st, True))
-    return T.StructType(fields)
+def _int_stat(value: Any, dtype: T.DataType) -> Optional[int]:
+    low, high = _INT_RANGES[type(dtype)]
+    if isinstance(value, int) and not isinstance(value, bool) and low <= value < high:
+        return value
+    return None
 
 
-def _json_fragment(col: Column) -> Column:
-    """Scalar column -> standalone JSON fragment string (numbers bare,
-    strings quoted) via the to_json(array(x)) bracket-strip trick."""
-    frag = F.regexp_replace(F.to_json(F.array(col)), r"^\[|\]$", "")
-    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(frag)
+def _stat_value(value: Any, dtype: T.DataType) -> Any:
+    """One ``minValues`` / ``maxValues`` JSON value read as a column of
+    ``dtype``: numbers and booleans natively (None where the value does
+    not fit the type; a float column rounds to 32 bits), every other
+    type as the JSON text of the value (a date, timestamp, decimal or
+    string)."""
+    if value is None:
+        return None
+    if type(dtype) in _INT_RANGES:
+        return _int_stat(value, dtype)
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        if isinstance(value, str):
+            v = _NON_FINITE.get(value)
+        elif isinstance(value, (int, float, Decimal)) and not isinstance(value, bool):
+            v = float(value)
+        else:
+            return None
+        if v is not None and isinstance(dtype, T.FloatType) and math.isfinite(v):
+            v = float(str(np.float32(v)))  # the shortest 32-bit spelling
+        return v
+    if isinstance(dtype, T.BooleanType):
+        return value if isinstance(value, bool) else None
+    if isinstance(value, str):
+        return value
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, (int, Decimal)):
+        return str(value)
+    return json.dumps(value, separators=(",", ":"), ensure_ascii=False, default=float)
 
 
-def parsed_stats_expr(schema: T.StructType) -> Column:
-    typed = _typed_stats_schema(schema)
-    stats_schema = T.StructType(
-        [
-            T.StructField("numRecords", T.LongType()),
-            T.StructField("minValues", typed),
-            T.StructField("maxValues", typed),
-            T.StructField("nullCount", T.MapType(T.StringType(), T.LongType())),
-        ]
+def parse_stats(raw: Optional[str], schema: T.StructType) -> tuple[Optional[int], dict]:
+    """Delta ``add.stats`` JSON -> (numRecords, inventory column_stats
+    with an entry for every column of ``schema``), min/max encoded per
+    data type with ``stat_codec.encode_stat`` (delta/DeltaStatsExtractor
+    .java:68-70). A field that does not fit its type reads as None, a
+    ``nullCount`` with one such value as no null counts at all, and a
+    value that is not a JSON object as no stats."""
+    try:
+        stats = json.loads(raw, parse_float=Decimal) if raw else None
+    except ValueError:
+        stats = None
+    if not isinstance(stats, dict):
+        stats = {}
+    mins, maxs, nulls = (
+        v if isinstance(v, dict) else {}
+        for v in (stats.get(k) for k in ("minValues", "maxValues", "nullCount"))
     )
-    return F.from_json(F.col("stats"), stats_schema)
-
-
-def column_stats_expr(schema: T.StructType, parsed: Column) -> Column:
-    """Build the inventory column_stats map<string, struct<min_json,
-    max_json, null_count>> for every data column in the schema."""
-    entries: list[Column] = []
-    for f in schema.fields:
-        entries.append(F.lit(f.name))
-        entries.append(
-            F.struct(
-                _json_fragment(parsed["minValues"][f.name]).alias("min_json"),
-                _json_fragment(parsed["maxValues"][f.name]).alias("max_json"),
-                parsed["nullCount"][f.name].alias("null_count"),
-            )
-        )
-    return F.create_map(*entries)
-
-
-# The inventory projections of one (table, schema): the stats parse, the
-# path anchoring and the format tag are a few hundred py4j-built Columns.
-# Each costs a round trip to build, and its proxy another when py4j's
-# finalizer thread releases it, concurrently with whatever runs next. So
-# they are built once per session and reused by every commit of every
-# sync of the table.
-_PROJECTIONS: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-_PROJECTIONS_MAX = 64
-
-
-def _anchored(path_col: str, base: str) -> Column:
-    """Log paths may be absolute (external files); only relative ones are
-    anchored at the table base."""
-    return F.when(F.col(path_col).startswith("/"), F.col(path_col)).otherwise(
-        F.concat(F.lit(base), F.col(path_col))
-    )
+    if any(v is not None and _int_stat(v, T.LongType()) is None for v in nulls.values()):
+        nulls = {}
+    column_stats = {
+        f.name: {
+            "min_json": encode_stat(_stat_value(mins.get(f.name), f.dataType), f.dataType),
+            "max_json": encode_stat(_stat_value(maxs.get(f.name), f.dataType), f.dataType),
+            "null_count": nulls.get(f.name),
+        }
+        for f in schema.fields
+    }
+    return _int_stat(stats.get("numRecords"), T.LongType()), column_stats
 
 
 def _lift_column_mapping(schema: T.StructType) -> T.StructType:
@@ -1860,100 +1865,76 @@ class DeltaConversionSource:
         if table is None:
             raise ValueError(f"not a delta table: {self.base_path}")
         version = max(list_log_versions(self.base_path))
-        live = live_files_df(self.spark, self.base_path, version)
-        files = self._to_inventory_adds(live, table)
+        live = list(live_adds(self.base_path, version).values())
         return InternalSnapshot(
             table=table,
             version=str(version),
-            files=files,
+            files=self._to_inventory_adds(live, table),
             row_deletes=self._row_deletes_for(live) if self.expose_row_deletes else None,
             row_lineage=self._row_lineage_map(live) if self.expose_row_lineage else None,
         )
 
-    def _row_lineage_map(self, adds: DataFrame) -> dict:
+    def _absolute(self, path: str) -> str:
+        """Log paths may be absolute (external files); only relative ones
+        are anchored at the table base."""
+        return path if path.startswith("/") else self.base_path + "/" + path
+
+    def _row_lineage_map(self, adds: list[dict]) -> dict:
         """Add actions -> {absolute path: baseRowId} for the row-lineage
         channel. Refuses loudly when an add carries no baseRowId (not a
         Row Tracking table) or when a deletion vector is present without
         expose_row_deletes (the purged-shadow rewrite renumbers physical
         rows, so the original ids cannot survive it). Metadata-sized:
         one driver row per file, same posture as _row_deletes_for."""
-        cols = ["path", "baseRowId"]
-        has_dv = "deletionVector" in adds.columns
-        if has_dv:
-            cols.append("deletionVector")
-        rows = adds.select(*cols).collect()
-        missing = [r["path"] for r in rows if r["baseRowId"] is None]
+        missing = [a["path"] for a in adds if a["baseRowId"] is None]
         if missing:
             raise ValueError(
                 f"expose_row_lineage: {len(missing)} add(s) carry no baseRowId "
                 f"(not a Row Tracking table?), e.g. {missing[:3]}"
             )
-        if (
-            has_dv
-            and not self.expose_row_deletes
-            and any(
-                r["deletionVector"] and r["deletionVector"]["storageType"] for r in rows
-            )
-        ):
+        if not self.expose_row_deletes and any(_dv_of(a) for a in adds):
             raise ValueError(
                 "expose_row_lineage with deletion vectors requires "
                 "expose_row_deletes=True: the purged-shadow rewrite renumbers "
                 "physical rows, so baseRowId-derived ids cannot survive it"
             )
-        base = self.base_path.rstrip("/") + "/"
-        return {
-            (r["path"] if r["path"].startswith("/") else base + r["path"]): int(
-                r["baseRowId"]
-            )
-            for r in rows
-        }
+        return {self._absolute(a["path"]): int(a["baseRowId"]) for a in adds}
 
-    def _row_deletes_for(self, adds: DataFrame) -> DataFrame:
-        """DV'd files -> ROW_DELETES_SCHEMA rows; materializes the
+    def _row_deletes_for(self, adds: list[dict]):
+        """DV'd files -> a ROW_DELETES_ARROW table; materializes the
         Iceberg-shaped (file_path, pos) positions parquet per (file, DV)
         executor-side, idempotently.
 
         The result states the table's COMPLETE current delete set (pass
         the full live file set, not a commit's adds): targets clear
         deletes for any live file absent from it, which is what makes a
-        RESTORE (re-add without DV) propagate. An empty DataFrame means
-        'no rows are deleted' — never None, so the channel stays active."""
-        from incubator_xtable_spark.model.core import ROW_DELETES_SCHEMA
+        RESTORE (re-add without DV) propagate. An empty table means 'no
+        rows are deleted' — never None, so the channel stays active."""
+        from incubator_xtable_spark.model.core import ROW_DELETES_ARROW
         from incubator_xtable_spark.sources.delta_dv import (
             delete_positions_path,
             write_delete_position_files,
         )
 
-        if "deletionVector" not in adds.columns:
-            return local_frame(self.spark, [], ROW_DELETES_SCHEMA)
-        abs_path = _anchored("path", self.base_path.rstrip("/") + "/")
-        dv_list = (
-            adds.filter(F.col("deletionVector.storageType").isNotNull())
-            .select(abs_path.alias("abs_path"), "deletionVector", "partitionValues")
-            .collect()
-        )
-        if not dv_list:
-            return local_frame(self.spark, [], ROW_DELETES_SCHEMA)
-        write_delete_position_files(
-            self.spark,
-            self.base_path,
-            [
-                {"abs_path": r["abs_path"], "deletionVector": r["deletionVector"].asDict()}
-                for r in dv_list
-            ],
-        )
-        rows = []
-        for r in dv_list:
-            desc = r["deletionVector"].asDict()
-            rows.append(
-                (
-                    r["abs_path"],
-                    delete_positions_path(r["abs_path"], desc),
-                    int(desc.get("cardinality") or 0),
-                    dict(r["partitionValues"] or {}) or None,
-                )
+        dv_list = [(self._absolute(a["path"]), a) for a in adds if _dv_of(a)]
+        if dv_list:
+            write_delete_position_files(
+                self.spark,
+                self.base_path,
+                [{"abs_path": p, "deletionVector": a["deletionVector"]} for p, a in dv_list],
             )
-        return local_frame(self.spark, rows, ROW_DELETES_SCHEMA)
+        return arrow_table(
+            [
+                (
+                    p,
+                    delete_positions_path(p, a["deletionVector"]),
+                    int(a["deletionVector"]["cardinality"] or 0),
+                    a["partitionValues"] or None,
+                )
+                for p, a in dv_list
+            ],
+            ROW_DELETES_ARROW,
+        )
 
     def _data_schema(self, table: InternalTable) -> T.StructType:
         part_cols = {pf.source_field for pf in table.partition_fields}
@@ -1974,108 +1955,67 @@ class DeltaConversionSource:
             self._format_default = from_delta_provider(provider)
         return self._format_default
 
-    def _file_format_expr(self, path_col):
-        """Per-file format column: extension wins (a mixed-format table is
-        tagged per file), the table provider is the extension-less default."""
-        from incubator_xtable_spark.model.file_formats import format_expr
-
-        return format_expr(path_col, default=self._default_file_format())
-
-    def _projections(self, data_schema: T.StructType) -> tuple[list[Column], list[Column]]:
-        """(inventory projection of `add.*` rows, inventory projection of
-        `eff_path` rows) for a table whose data columns are
-        ``data_schema``, from the session's cache."""
-        key = (self.base_path, self._default_file_format(), data_schema.json())
-        per = _PROJECTIONS.setdefault(self.spark, {})
-        hit = per.get(key)
-        if hit is None:
-            if len(per) >= _PROJECTIONS_MAX:
-                per.clear()  # a long-lived session over many tables
-            base = self.base_path.rstrip("/") + "/"
-            parsed = parsed_stats_expr(data_schema)
-            abs_path, abs_removed = _anchored("path", base), _anchored("eff_path", base)
-            adds = [
-                abs_path.alias("physical_path"),
-                self._file_format_expr(abs_path).alias("file_format"),
-                F.col("size").alias("size_bytes"),
-                parsed["numRecords"].alias("record_count"),
-                F.col("modificationTime").alias("last_modified_ms"),
-                F.col("partitionValues").alias("partition_values"),
-                column_stats_expr(data_schema, parsed).alias("column_stats"),
-            ]
-            removed = [
-                abs_removed.alias("physical_path"),
-                self._file_format_expr(abs_removed).alias("file_format"),
-                F.lit(0).cast("long").alias("size_bytes"),
-                F.lit(None).cast("long").alias("record_count"),
-                F.lit(None).cast("long").alias("last_modified_ms"),
-                F.lit(None).cast("map<string,string>").alias("partition_values"),
-                F.lit(None)
-                .cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
-                .alias("column_stats"),
-            ]
-            hit = per[key] = (adds, removed)
-        return hit
-
-    def _to_inventory_adds(self, adds: DataFrame, table: InternalTable) -> DataFrame:
-        """Adds -> inventory. DV'd adds are converted to their purged
-        shadow files (materialized idempotently, stats recomputed from the
-        shadow's footer) so targets reference row-accurate data — the
-        deliberate improvement over the reference's pair-drop
-        (delta/DeltaConversionSource.java:147-163); see sources/delta_dv.py."""
-        data_schema = self._data_schema(table)
-        projection = self._projections(data_schema)[0]
-        # expose_row_deletes: DV'd adds stay at their ORIGINAL path with
-        # physical record_count/stats (Iceberg data-file semantics); the
-        # delete sets travel separately on row_deletes
-        if "deletionVector" not in adds.columns or self.expose_row_deletes:
-            return adds.select(*projection)
-        has_dv = F.col("deletionVector.storageType").isNotNull()
-        plain_inv = adds.filter(~has_dv).select(*projection)
-        dv_list = adds.filter(has_dv).select(
-            _anchored("path", self.base_path.rstrip("/") + "/").alias("abs_path"),
-            "deletionVector",
-            "partitionValues",
-            "modificationTime",
-        ).collect()
-        if not dv_list:
-            return plain_inv
-        from incubator_xtable_spark.sources.delta_dv import purged_path, write_purged_files
-        from incubator_xtable_spark.sources.parquet_source import footer_stats
-
-        write_purged_files(
-            self.spark,
-            self.base_path,
-            [
-                {"abs_path": r["abs_path"], "deletionVector": r["deletionVector"].asDict()}
-                for r in dv_list
-            ],
-        )
-        shadows = [purged_path(r["abs_path"], r["deletionVector"].asDict()) for r in dv_list]
-        listing = local_frame(
-            self.spark, [(p,) for p in shadows], T.StructType([FILE_INVENTORY_SCHEMA["physical_path"]])
-        )
-        stats = {
-            r["physical_path"]: (r["record_count"], r["column_stats"])
-            for r in footer_stats(self.spark, listing, data_schema).collect()
+    def _file_row(self, path: str) -> dict:
+        """The inventory row of a file known by path only: a removed one."""
+        return {
+            "physical_path": path,
+            # extension wins (a mixed-format table is tagged per file); the
+            # table provider is the extension-less default
+            "file_format": from_extension(path, default=self._default_file_format()),
+            "size_bytes": 0,
         }
-        dv_rows = []
-        for sp, r in zip(shadows, dv_list):
-            record_count, column_stats = stats.get(sp, (None, None))
-            dv_rows.append(
-                (
-                    sp,
-                    "PARQUET",  # purged shadows are engine-written parquet
-                    os.path.getsize(sp),
-                    record_count,
-                    r["modificationTime"],
-                    dict(r["partitionValues"] or {}) or None,
-                    column_stats,
+
+    def _to_inventory_adds(self, adds: list[dict], table: InternalTable):
+        """Add actions -> inventory table. DV'd adds are converted to their
+        purged shadow files (materialized idempotently, stats recomputed
+        from the shadow's footer) so targets reference row-accurate data —
+        the deliberate improvement over the reference's pair-drop
+        (delta/DeltaConversionSource.java:147-163); see sources/delta_dv.py.
+        With expose_row_deletes, DV'd adds stay at their ORIGINAL path with
+        physical record_count/stats (Iceberg data-file semantics); the
+        delete sets travel separately on row_deletes."""
+        data_schema = self._data_schema(table)
+        rows, dv_adds = [], []
+        for a in adds:
+            if _dv_of(a) and not self.expose_row_deletes:
+                dv_adds.append(a)
+                continue
+            record_count, column_stats = parse_stats(a["stats"], data_schema)
+            rows.append(
+                dict(
+                    self._file_row(self._absolute(a["path"])),
+                    size_bytes=a["size"],
+                    record_count=record_count,
+                    last_modified_ms=a["modificationTime"],
+                    partition_values=a["partitionValues"],
+                    column_stats=column_stats,
                 )
             )
-        # both halves are driver rows: ONE LocalRelation keeps the drain
-        # job-free (a union of two would run a job)
-        return local_frame(self.spark, plain_inv.collect() + dv_rows, FILE_INVENTORY_SCHEMA)
+        if dv_adds:
+            from incubator_xtable_spark.sources.delta_dv import purged_path, write_purged_files
+            from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
+
+            dvs = [
+                {"abs_path": self._absolute(a["path"]), "deletionVector": a["deletionVector"]}
+                for a in dv_adds
+            ]
+            write_purged_files(self.spark, self.base_path, dvs)
+            shadows = [purged_path(d["abs_path"], d["deletionVector"]) for d in dvs]
+            stats = {p: (rc, cs) for p, rc, cs in footer_stat_rows(shadows, data_schema)}
+            for sp, a in zip(shadows, dv_adds):
+                record_count, column_stats = stats.get(sp, (None, None))
+                rows.append(
+                    {
+                        "physical_path": sp,
+                        "file_format": "PARQUET",  # purged shadows are engine-written parquet
+                        "size_bytes": os.path.getsize(sp),
+                        "record_count": record_count,
+                        "last_modified_ms": a["modificationTime"],
+                        "partition_values": a["partitionValues"] or None,
+                        "column_stats": column_stats,
+                    }
+                )
+        return arrow_table(rows, FILE_INVENTORY_ARROW)
 
     def get_commits_backlog(self, instants: InstantsForIncrementalSync) -> CommitsBacklog:
         last_v = int(instants.last_sync_instant)
@@ -2097,9 +2037,8 @@ class DeltaConversionSource:
                 self.spark, self.base_path, int(commit)
             ).drop("_commit_version")
         if self.expose_row_lineage:
-            actions = _commit_actions(self.spark, self.base_path, int(commit))
             change.row_lineage = self._row_lineage_map(
-                actions.filter(F.col("add.path").isNotNull()).select("add.*")
+                [a["add"] for a in _own_actions(self.base_path, int(commit)) if a.get("add")]
             )
         return change
 
@@ -2121,29 +2060,24 @@ class DeltaConversionSource:
         at this version so a dropped DV (RESTORE) clears the target's
         delete file as well as a widened DV swapping it.
 
-        The diff runs on the driver (`_commit_diff_local`) into
-        LocalRelation frames, so the whole change drains with no Spark
-        job; the stats parse and path projections are Spark expressions
-        that fold at optimization.
+        The diff (`_commit_diff_local`) and the inventory rows are built
+        on the driver from the commit's own actions.
         """
         version = int(commit)
         table = self.get_table_at_version(version)
         add_rows, removed_paths = _commit_diff_local(
             self.base_path, version, self.expose_row_deletes
         )
-        # without a DV'd add the frame carries no deletionVector column,
-        # which spares _to_inventory_adds its shadow probe
-        has_dv = any(a["deletionVector"] for a in add_rows)
-        adds = local_frame(self.spark, add_rows, _ADD_TYPE if has_dv else _ADD_NO_DV_TYPE)
-        removes_eff = local_frame(self.spark, [(p,) for p in removed_paths], _EFF_PATH_SCHEMA)
-        files_removed = removes_eff.select(*self._projections(self._data_schema(table))[1])
         return TableChange(
             table=table,
             commit_id=commit,
-            files_added=self._to_inventory_adds(adds, table),
-            files_removed=files_removed,
+            files_added=self._to_inventory_adds(add_rows, table),
+            files_removed=arrow_table(
+                [self._file_row(self._absolute(p)) for p in removed_paths],
+                FILE_INVENTORY_ARROW,
+            ),
             row_deletes=(
-                self._row_deletes_for(live_files_df(self.spark, self.base_path, version))
+                self._row_deletes_for(list(live_adds(self.base_path, version).values()))
                 if self.expose_row_deletes
                 else None
             ),

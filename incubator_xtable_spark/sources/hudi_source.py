@@ -28,6 +28,7 @@ import json
 import os
 from typing import Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,6 +36,7 @@ from pyspark.sql import types as T
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
+    FILE_INVENTORY_ARROW,
     FILE_INVENTORY_SCHEMA,
     InstantsForIncrementalSync,
     InternalPartitionField,
@@ -42,8 +44,12 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    arrow_table,
     column,
+    local_frame,
+    table_rows,
 )
+from incubator_xtable_spark.model.files_diff import relativize, with_file_paths
 from incubator_xtable_spark.model.hive_partitions import partition_values
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 from incubator_xtable_spark.targets.hudi_target import (
@@ -51,6 +57,14 @@ from incubator_xtable_spark.targets.hudi_target import (
     file_id_of,
     list_completed_instants,
     read_commit_metadata,
+)
+
+_LISTING_SCHEMA = T.StructType(
+    [
+        FILE_INVENTORY_SCHEMA["physical_path"],
+        FILE_INVENTORY_SCHEMA["size_bytes"],
+        FILE_INVENTORY_SCHEMA["last_modified_ms"],
+    ]
 )
 
 HOODIE_META_FIELDS = (
@@ -96,35 +110,65 @@ def is_log_file(path: str) -> bool:
     return ".log." in os.path.basename(path)
 
 
-def _apply_commit(groups: dict[str, dict], instant: str, meta: dict) -> None:
+def group_key(row: dict) -> tuple[str, str]:
+    """A file group's identity: (partitionPath, fileId), as Hudi's
+    HoodieFileGroupId — a fileId is unique only within its partition."""
+    return row["partitionPath"], row["fileId"]
+
+
+def _commit_groups(meta: dict) -> tuple[list[tuple[str, str]], list[tuple[tuple[str, str], dict]]]:
+    """(replaced group keys, [(group key, write stat)]) of one commit's
+    metadata."""
+    replaced = [
+        (partition, fid)
+        for partition, fids in (meta.get("partitionToReplaceFileIds") or {}).items()
+        for fid in fids
+    ]
+    written = [
+        ((partition, st["fileId"]), st)
+        for partition, stats in (meta.get("partitionToWriteStats") or {}).items()
+        for st in stats
+    ]
+    return replaced, written
+
+
+def _apply_commit(groups: dict[tuple, dict], instant: str, meta: dict) -> None:
     """File-slice resolution for one commit, mirroring the reference
-    fs-view (hudi/HudiDataFileExtractor.java:128-345): a replaced fileId
-    drops its whole group; a BASE file write starts a new slice for the
+    fs-view (hudi/HudiDataFileExtractor.java:128-345): a replaced file
+    group drops whole; a BASE file write starts a new slice for the
     group (log files of the old slice compact away); a LOG file write
     appends to the group's current slice."""
-    for fid_list in (meta.get("partitionToReplaceFileIds") or {}).values():
-        for fid in fid_list:
-            groups.pop(fid, None)
-    for stats_list in (meta.get("partitionToWriteStats") or {}).values():
-        for st in stats_list:
-            fid = st["fileId"]
-            if is_log_file(st["path"]):
-                grp = groups.setdefault(
-                    fid,
-                    # log-only file group (insert into MOR log before any
-                    # base file exists): tracked, but exposes no base file
-                    {"path": None, "fileId": fid, "size": 0, "numWrites": None, "instant": instant, "log_files": []},
-                )
-                grp.setdefault("log_files", []).append(st["path"])
-            else:
-                groups[fid] = {
-                    "path": st["path"],
+    replaced, written = _commit_groups(meta)
+    for key in replaced:
+        groups.pop(key, None)
+    for key, st in written:
+        partition, fid = key
+        if is_log_file(st["path"]):
+            grp = groups.setdefault(
+                key,
+                # log-only file group (insert into MOR log before any
+                # base file exists): tracked, but exposes no base file
+                {
+                    "path": None,
+                    "partitionPath": partition,
                     "fileId": fid,
-                    "size": st.get("fileSizeInBytes", 0),
-                    "numWrites": st.get("numWrites"),
+                    "size": 0,
+                    "numWrites": None,
                     "instant": instant,
-                    "log_files": [],  # new base file = new slice
-                }
+                    "log_files": [],
+                },
+            )
+            grp.setdefault("log_files", []).append(st["path"])
+        else:
+            groups[key] = {
+                "path": st["path"],
+                "partitionPath": partition,
+                "fileId": fid,
+                "size": st.get("fileSizeInBytes", 0),
+                "numWrites": st.get("numWrites"),
+                "instant": instant,
+                "log_files": [],  # new base file = new slice
+            }
 
 
 def live_files_rows(
@@ -132,11 +176,11 @@ def live_files_rows(
 ) -> list[dict]:
     """File-group resolution over the timeline (archived log first, then
     the active timeline): walk commits in order, latest base file per
-    fileId wins, replaced fileIds drop out, MOR log files attach to their
-    slice. Returns [{path, fileId, size, instant, log_files}] (relative
-    paths) — the READ-OPTIMIZED view (base files), matching the
-    reference's getLatestBaseFiles conversion scope."""
-    groups: dict[str, dict] = {}  # fileId -> latest slice info
+    file group wins, replaced groups drop out, MOR log files attach to
+    their slice. Returns [{path, partitionPath, fileId, size, instant,
+    log_files}] (relative paths) — the READ-OPTIMIZED view (base files),
+    matching the reference's getLatestBaseFiles conversion scope."""
+    groups: dict[tuple, dict] = {}  # group_key -> latest slice info
     for instant, action, meta in _archived_commits(base_path):
         if as_of_instant is not None and instant > as_of_instant:
             break
@@ -162,11 +206,11 @@ def file_liveness_intervals(base_path: str) -> list[tuple]:
     (hudi_clean) resolve EVERY retained/savepointed view in one pass:
     O(timeline + files) total instead of one full replay per retained
     instant (O(retained x timeline) — the r12 watch item)."""
-    current: dict[str, dict] = {}  # fileId -> {path, add, logs:{path: add}}
+    current: dict[tuple, dict] = {}  # group_key -> {path, add, logs:{path: add}}
     out: list[tuple] = []
 
-    def _close_group(fid: str, instant: str) -> None:
-        g = current.pop(fid, None)
+    def _close_group(key: tuple, instant: str) -> None:
+        g = current.pop(key, None)
         if g is None:
             return
         if g["path"] is not None:
@@ -175,27 +219,22 @@ def file_liveness_intervals(base_path: str) -> list[tuple]:
             out.append((lp, la, instant))
 
     def _apply(instant: str, meta: dict) -> None:
-        for fid_list in (meta.get("partitionToReplaceFileIds") or {}).values():
-            for fid in fid_list:
-                _close_group(fid, instant)
-        for stats_list in (meta.get("partitionToWriteStats") or {}).values():
-            for st in stats_list:
-                fid = st["fileId"]
-                if is_log_file(st["path"]):
-                    g = current.setdefault(
-                        fid, {"path": None, "add": instant, "logs": {}}
-                    )
-                    g["logs"].setdefault(st["path"], instant)
-                else:
-                    _close_group(fid, instant)  # new base file = new slice
-                    current[fid] = {"path": st["path"], "add": instant, "logs": {}}
+        replaced, written = _commit_groups(meta)
+        for key in replaced:
+            _close_group(key, instant)
+        for key, st in written:
+            if is_log_file(st["path"]):
+                g = current.setdefault(key, {"path": None, "add": instant, "logs": {}})
+                g["logs"].setdefault(st["path"], instant)
+            else:
+                _close_group(key, instant)  # new base file = new slice
+                current[key] = {"path": st["path"], "add": instant, "logs": {}}
 
     for instant, _action, meta in _archived_commits(base_path):
         _apply(instant, meta)
     for instant, action in list_completed_instants(base_path):
         _apply(instant, read_commit_metadata(base_path, instant, action))
-    for fid in list(current):
-        g = current[fid]
+    for g in current.values():
         if g["path"] is not None:
             out.append((g["path"], g["add"], None))
         for lp, la in g["logs"].items():
@@ -218,7 +257,7 @@ def materialize_mor_shadows(
 
     Shadow paths are deterministic (slice stem + md5 of the log-file
     list), so materialization is idempotent across syncs and as-of
-    states. Returns {fileId: {path(rel), size}} for slices whose
+    states. Returns {group_key: {path(rel), size}} for slices whose
     effective representation is a shadow; slices whose logs merge to a
     no-op keep their base file and are absent from the result.
 
@@ -274,7 +313,7 @@ def materialize_mor_shadows(
                 ),
             )
         )
-        out[r["fileId"]] = {"path": shadow_rel, "fileId": r["fileId"]}
+        out[group_key(r)] = {"path": shadow_rel}
     todo = [p for p in plan_rows if not os.path.exists(p[1])]
     if todo:
         # schema probe for log-only slices: one empty parquet carrying the
@@ -446,17 +485,17 @@ class HudiConversionSource:
         return InternalSnapshot(table=table, version=latest, files=files)
 
     def _effective_rows(
-        self, as_of: str, table: InternalTable, only_file_ids: Optional[set] = None
+        self, as_of: str, table: InternalTable, only_groups: Optional[set] = None
     ) -> list[dict]:
         """Snapshot-view file rows at ``as_of``: base files as-is for
         log-free slices, compaction shadows for log-bearing ones
         (including log-only slices, which have no base file at all).
-        ``only_file_ids`` restricts BOTH the listing and the shadow
-        materialization — a CDC read of a 2-slice commit must not
+        ``only_groups`` (group keys) restricts BOTH the listing and the
+        shadow materialization — a CDC read of a 2-slice commit must not
         compact the table's other 998 log-bearing slices."""
         rows = live_files_rows(self.base_path, as_of, include_log_only=True)
-        if only_file_ids is not None:
-            rows = [r for r in rows if r["fileId"] in only_file_ids]
+        if only_groups is not None:
+            rows = [r for r in rows if group_key(r) in only_groups]
         log_rows = [r for r in rows if r.get("log_files")]
         shadows = (
             materialize_mor_shadows(
@@ -467,18 +506,16 @@ class HudiConversionSource:
         )
         eff = []
         for r in rows:
-            s = shadows.get(r["fileId"])
+            s = shadows.get(group_key(r))
             if s is not None:
-                eff.append(
-                    {"path": s["path"], "fileId": r["fileId"], "size": s["size"], "instant": r["instant"]}
-                )
+                eff.append(dict(r, path=s["path"], size=s["size"]))
             elif r["path"] is not None:
                 eff.append(r)
         return eff
 
     def _indexed_listing(
         self, table: InternalTable, latest: str, with_stats: bool
-    ) -> Optional[DataFrame]:
+    ) -> Optional[pa.Table]:
         """Listing-acceleration tier: when the metadata-table `files`
         partition is available AND covers the head instant, the live-file
         listing comes from a distributed parquet read of the index deltas
@@ -584,12 +621,13 @@ class HudiConversionSource:
 
         return None
 
-    def _to_inventory(self, rows: list[dict], table: InternalTable, with_stats: bool) -> DataFrame:
+    def _to_inventory(self, rows: list[dict], table: InternalTable, with_stats: bool) -> pa.Table:
         from incubator_xtable_spark.targets.hudi_target import instant_to_epoch_ms
 
         if not rows:
-            return self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
-        listing = self.spark.createDataFrame(
+            return FILE_INVENTORY_ARROW.empty_table()
+        listing = local_frame(
+            self.spark,
             [
                 (
                     os.path.join(self.base_path, r["path"]),
@@ -598,27 +636,19 @@ class HudiConversionSource:
                 )
                 for r in rows
             ],
-            "physical_path STRING, size_bytes LONG, last_modified_ms LONG",
+            _LISTING_SCHEMA,
         )
         return self._listing_to_inventory(listing, table, with_stats)
 
     def _listing_to_inventory(
         self, listing: DataFrame, table: InternalTable, with_stats: bool
-    ) -> DataFrame:
+    ) -> pa.Table:
+        """A Spark listing (physical_path, size_bytes, last_modified_ms)
+        with its stats joined in, drained once into an inventory table;
+        partition values are parsed from each path on the driver
+        (``model/hive_partitions``)."""
         from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stats
 
-        part_entries = []
-        for pf in table.partition_fields:
-            col = pf.output_name
-            part_entries.extend(
-                [F.lit(col), F.regexp_extract(F.col("physical_path"), rf"/{col}=([^/]*)/", 1)]
-            )
-        inv = listing.withColumn(
-            "partition_values",
-            F.create_map(*part_entries).cast("map<string,string>")
-            if part_entries
-            else F.lit(None).cast("map<string,string>"),
-        )
         if with_stats:
             # three-tier stats read (HudiFileStatsExtractor.java:99-186):
             # engine LITE col_stats index first, REAL-Hudi HFile index
@@ -641,9 +671,9 @@ class HudiConversionSource:
                 )
             else:
                 stats = footer_stats(self.spark, listing, data_schema(table))
-            inv = inv.join(stats, "physical_path", "left")
+            inv = listing.join(stats, "physical_path", "left")
         else:
-            inv = inv.withColumn("record_count", F.lit(None).cast("long")).withColumn(
+            inv = listing.withColumn("record_count", F.lit(None).cast("long")).withColumn(
                 "column_stats", F.lit(None).cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
             )
         # base-file format from hoodie.properties (real Hudi supports HFILE/
@@ -660,15 +690,25 @@ class HudiConversionSource:
                 f"Hudi base file format {declared} is not supported (PARQUET/ORC)"
             )
         default_fmt = "PARQUET" if declared == "PARQUET" else "APACHE_ORC"
-        return inv.select(
-            "physical_path",
-            format_expr(F.col("physical_path"), default=default_fmt).alias("file_format"),
-            "size_bytes",
-            "record_count",
-            "last_modified_ms",
-            "partition_values",
-            "column_stats",
+        rows = table_rows(
+            inv.select(
+                "physical_path",
+                format_expr(F.col("physical_path"), default=default_fmt).alias("file_format"),
+                "size_bytes",
+                "record_count",
+                "last_modified_ms",
+                "column_stats",
+            ).toArrow()
         )
+        for r in rows:
+            rel_dir = relativize(r["physical_path"], self.base_path).rpartition("/")[0]
+            values = partition_values(rel_dir)
+            r["partition_values"] = (
+                {pf.output_name: values.get(pf.output_name) for pf in table.partition_fields}
+                if table.partition_fields
+                else None
+            )
+        return arrow_table(rows, FILE_INVENTORY_ARROW)
 
     # -- commits -----------------------------------------------------------
 
@@ -701,45 +741,30 @@ class HudiConversionSource:
         # only BASE files enter the conversion diff: a deltacommit that
         # writes log files changes no convertible file (the reference's
         # newBaseFileAdded gate, HudiDataFileExtractor.java:300-310)
-        added_rows = [
-            {
-                "path": st["path"],
-                "fileId": st["fileId"],
-                "size": st.get("fileSizeInBytes", 0),
-                "instant": commit,
-            }
-            for stats_list in (meta.get("partitionToWriteStats") or {}).values()
-            for st in stats_list
+        replaced, written = _commit_groups(meta)
+        new_paths = {
+            key: {"path": st["path"], "size": st.get("fileSizeInBytes", 0), "instant": commit}
+            for key, st in written
             if not is_log_file(st["path"])
-        ]
-        files_added = self._to_inventory(added_rows, table, with_stats=True)
-        # removed = files of replaced fileIds, plus the PREVIOUS base file
+        }
+        files_added = self._to_inventory(list(new_paths.values()), table, with_stats=True)
+        # removed = files of replaced groups, plus the PREVIOUS base file
         # of any group that got a new base file this commit (slice
         # supersession — HudiDataFileExtractor.java:303-313), both
         # resolved against the state just before this commit
-        replaced_ids = {
-            fid
-            for fid_list in (meta.get("partitionToReplaceFileIds") or {}).values()
-            for fid in fid_list
-        }
         removed_rows = []
-        if replaced_ids or added_rows:
+        if replaced or new_paths:
             prev = {
-                r["fileId"]: r
+                group_key(r): r
                 for r in live_files_rows(self.base_path, _prev_instant(self.base_path, commit))
             }
-            removed_rows = [prev[fid] for fid in replaced_ids if fid in prev]
-            new_paths = {r["fileId"]: r["path"] for r in added_rows}
+            removed_rows = [prev[key] for key in dict.fromkeys(replaced) if key in prev]
             removed_rows.extend(
-                prev[fid]
-                for fid, p in new_paths.items()
-                if fid in prev and prev[fid]["path"] not in (None, p)
+                prev[key]
+                for key, new in new_paths.items()
+                if key in prev and prev[key]["path"] not in (None, new["path"])
             )
-        files_removed = (
-            self._to_inventory(removed_rows, table, with_stats=False)
-            if removed_rows
-            else self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
-        )
+        files_removed = self._to_inventory(removed_rows, table, with_stats=False)
         return TableChange(
             table=table, commit_id=commit, files_added=files_added, files_removed=files_removed
         )
@@ -753,26 +778,18 @@ class HudiConversionSource:
         idempotent and as-of-aware, so replaying an old backlog after a
         restart rebuilds the same paths."""
         prev = _prev_instant(self.base_path, commit)
-        cur = {r["fileId"]: r for r in self._effective_rows(commit, table)}
+        cur = {group_key(r): r for r in self._effective_rows(commit, table)}
         prv = (
-            {r["fileId"]: r for r in self._effective_rows(prev, table)} if prev else {}
+            {group_key(r): r for r in self._effective_rows(prev, table)} if prev else {}
         )
         added_rows = [
-            r for fid, r in cur.items() if prv.get(fid, {}).get("path") != r["path"]
+            r for key, r in cur.items() if prv.get(key, {}).get("path") != r["path"]
         ]
         removed_rows = [
-            r for fid, r in prv.items() if cur.get(fid, {}).get("path") != r["path"]
+            r for key, r in prv.items() if cur.get(key, {}).get("path") != r["path"]
         ]
-        files_added = (
-            self._to_inventory(added_rows, table, with_stats=True)
-            if added_rows
-            else self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
-        )
-        files_removed = (
-            self._to_inventory(removed_rows, table, with_stats=False)
-            if removed_rows
-            else self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
-        )
+        files_added = self._to_inventory(added_rows, table, with_stats=True)
+        files_removed = self._to_inventory(removed_rows, table, with_stats=False)
         return TableChange(
             table=table, commit_id=commit, files_added=files_added, files_removed=files_removed
         )
@@ -881,25 +898,17 @@ def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFram
 
     # tier 2: derivation by effective-representation diff of the touched
     # file groups (replaced groups count as fully deleted)
-    touched = {
-        st["fileId"]
-        for stats_list in (meta.get("partitionToWriteStats") or {}).values()
-        for st in stats_list
-    }
-    touched |= {
-        fid
-        for fid_list in (meta.get("partitionToReplaceFileIds") or {}).values()
-        for fid in fid_list
-    }
+    replaced, written = _commit_groups(meta)
+    touched = set(replaced) | {key for key, _ in written}
     prev = _prev_instant(base_path, instant)
-    eff_new = {r["fileId"]: r for r in src._effective_rows(instant, table, touched)}
+    eff_new = {group_key(r): r for r in src._effective_rows(instant, table, touched)}
     eff_old = (
-        {r["fileId"]: r for r in src._effective_rows(prev, table, touched)} if prev else {}
+        {group_key(r): r for r in src._effective_rows(prev, table, touched)} if prev else {}
     )
 
     def _read(reps: dict, alias: str) -> DataFrame:
         paths = [
-            os.path.join(base_path, reps[fid]["path"]) for fid in touched if fid in reps
+            os.path.join(base_path, reps[key]["path"]) for key in touched if key in reps
         ]
         if not paths:
             return spark.createDataFrame([], table.read_schema)
@@ -1082,7 +1091,8 @@ def read_hudi_as_df(
             pv_df = spark.createDataFrame(pv_rows, "abs_path STRING, pv MAP<STRING,STRING>")
             df = df.withColumn(
                 "abs_path", F.regexp_replace(F.input_file_name(), r"^file:(//)?", "")
-            ).join(F.broadcast(pv_df), "abs_path", "left")
+            )
+            df = with_file_paths(df, "abs_path").join(F.broadcast(pv_df), "abs_path", "left")
             for c in missing:
                 df = df.withColumn(c, F.col("pv").getItem(c).cast(table.read_schema[c].dataType))
             df = df.drop("abs_path", "pv")

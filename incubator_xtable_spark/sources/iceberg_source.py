@@ -31,6 +31,7 @@ from typing import Optional
 
 log = logging.getLogger(__name__)
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,18 +39,19 @@ from pyspark.sql import types as T
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
-    FILE_INVENTORY_SCHEMA,
+    FILE_INVENTORY_ARROW,
     InstantsForIncrementalSync,
     InternalPartitionField,
     InternalSnapshot,
     InternalTable,
     TableChange,
     TableFormat,
+    arrow_table,
     column,
-    local_frame,
 )
 from incubator_xtable_spark.model import file_formats as _ff
 from incubator_xtable_spark.model.avro_codec import read_ocf
+from incubator_xtable_spark.model.files_diff import with_file_paths
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 from incubator_xtable_spark.targets.iceberg_target import (
     iceberg_fields_to_schema,
@@ -663,13 +665,13 @@ class IcebergConversionSource:
     def _row_deletes_df(
         self, affected: dict[str, dict], data_entries: list[dict], table: InternalTable
     ):
-        """COMPLETE current delete state (empty DataFrame = no deletes,
+        """COMPLETE current delete state (empty table = no deletes,
         never None — targets clear stale delete files/DVs for live data
         files absent from this restatement)."""
-        from incubator_xtable_spark.model.core import ROW_DELETES_SCHEMA
+        from incubator_xtable_spark.model.core import ROW_DELETES_ARROW
 
         if not affected:
-            return local_frame(self.spark, [], ROW_DELETES_SCHEMA)
+            return ROW_DELETES_ARROW.empty_table()
         from incubator_xtable_spark.functions.partition_transforms import (
             from_iceberg_partition_value,
         )
@@ -695,7 +697,7 @@ class IcebergConversionSource:
             (p, i["positions_path"], int(i["n_deleted"]), pv_by_path.get(p))
             for p, i in affected.items()
         ]
-        return local_frame(self.spark, rows, ROW_DELETES_SCHEMA)
+        return arrow_table(rows, ROW_DELETES_ARROW)
 
     def _equality_channel(
         self, data_entries: list[dict], eq_entries: list[dict], table
@@ -827,9 +829,9 @@ class IcebergConversionSource:
 
     def _to_inventory(
         self, entries: list[dict], table: InternalTable, affected: Optional[dict] = None
-    ) -> DataFrame:
+    ) -> pa.Table:
         if not entries:
-            return local_frame(self.spark, [], FILE_INVENTORY_SCHEMA)
+            return FILE_INVENTORY_ARROW.empty_table()
         from incubator_xtable_spark.model.iceberg_values import from_iceberg_bytes
         from incubator_xtable_spark.model.stat_codec import encode_stat
 
@@ -846,7 +848,7 @@ class IcebergConversionSource:
         )
 
         pf_by_name = {pf.output_name: pf for pf in table.partition_fields}
-        rows = []
+        rows, shadow_rows = [], []
         for e in entries:
             df = e["data_file"]
             # spec-native manifest values (int days/months/... for time
@@ -882,16 +884,14 @@ class IcebergConversionSource:
                     if os.path.exists(sp)
                     else int(df["file_size_in_bytes"])
                 )
-                rows.append(
-                    (
-                        sp,
-                        "PARQUET",  # purged shadows are engine-written parquet
-                        size,
-                        int(df["record_count"]) - shadow["n_deleted"],
-                        None,
-                        pv,
-                        None,
-                    )
+                shadow_rows.append(
+                    {
+                        "physical_path": sp,
+                        "file_format": "PARQUET",  # purged shadows are engine-written parquet
+                        "size_bytes": size,
+                        "record_count": int(df["record_count"]) - shadow["n_deleted"],
+                        "partition_values": pv,
+                    }
                 )
             else:
                 rows.append(
@@ -907,36 +907,23 @@ class IcebergConversionSource:
                         col_stats or None,
                     )
                 )
-        # manifest entries were walked driver-side already: the inventory
-        # is a LocalRelation, so drains collect it with no Spark job
-        inv = local_frame(self.spark, rows, FILE_INVENTORY_SCHEMA)
-        if affected:
-            from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stats
+        if shadow_rows:
+            from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stat_rows
 
             # only footer-read shadows that exist on disk (a removed-side
             # inventory may reference shadows from an earlier sync run)
-            shadow_paths = [
-                i["shadow_path"]
-                for i in affected.values()
-                if os.path.exists(i["shadow_path"])
-            ]
-            if not shadow_paths:
-                return inv
-            shadows = inv.filter(F.col("physical_path").isin(shadow_paths))
-            stats = footer_stats(
-                self.spark, shadows.select("physical_path"), data_schema(table)
-            ).withColumnRenamed("record_count", "rc2").withColumnRenamed(
-                "column_stats", "cs2"
-            )
-            shadows = (
-                shadows.join(stats, "physical_path", "left")
-                .withColumn("record_count", F.coalesce(F.col("rc2"), F.col("record_count")))
-                .withColumn("column_stats", F.col("cs2"))
-                .drop("rc2", "cs2")
-                .select(*[f.name for f in FILE_INVENTORY_SCHEMA.fields])
-            )
-            inv = inv.filter(~F.col("physical_path").isin(shadow_paths)).unionByName(shadows)
-        return inv
+            stats = {
+                p: (rc, cs)
+                for p, rc, cs in footer_stat_rows(
+                    [r["physical_path"] for r in shadow_rows if os.path.exists(r["physical_path"])],
+                    data_schema(table),
+                )
+            }
+            for r in shadow_rows:
+                rc, r["column_stats"] = stats.get(r["physical_path"], (None, None))
+                if rc is not None:
+                    r["record_count"] = rc
+        return arrow_table(rows + shadow_rows, FILE_INVENTORY_ARROW)
 
     # -- commits -----------------------------------------------------------
 
@@ -1407,6 +1394,8 @@ def read_iceberg_as_df(
             spark, avro_paths, list(data_fields.fields), path_col="_scan_path"
         ).withColumn("_nm_pos", F.lit(None).cast("long"))
         df = avro_df if df is None else df.unionByName(avro_df)
+    # every join below keys on the data file's path as the manifest has it
+    df = with_file_paths(df, "_scan_path")
     if delete_entries:
         # v2 position deletes applied row-level: the delete parquet scan
         # distributes with the data scan, anti-joined on

@@ -26,8 +26,8 @@ Design deltas (documented, Spark-first):
 - commit handles and InternalSnapshot.version are snapshot-id strings
   (the reference uses timeMillis; ids are the same total order, without
   same-millisecond collisions, and match the repo's Iceberg convention);
-- the file inventory is a DataFrame (FILE_INVENTORY_SCHEMA) — diffs are
-  anti-joins downstream, not driver lists.
+- the file inventory is a driver-held ``pyarrow.Table``
+  (FILE_INVENTORY_ARROW), like the reference's InternalDataFile lists.
 
 Scale posture: manifest avro files are read driver-side through the JVM
 (same posture as the Iceberg source — one manifest is ~O(10k) entries of
@@ -45,6 +45,7 @@ import re
 import uuid
 from typing import Any, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,7 +55,7 @@ from incubator_xtable_spark.model.avro_codec import read_ocf
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
-    FILE_INVENTORY_SCHEMA,
+    FILE_INVENTORY_ARROW,
     InstantsForIncrementalSync,
     InternalPartitionField,
     InternalSnapshot,
@@ -62,8 +63,10 @@ from incubator_xtable_spark.model.core import (
     PartitionTransformType,
     TableChange,
     TableFormat,
+    arrow_table,
     column,
 )
+from incubator_xtable_spark.model.files_diff import with_file_paths
 from incubator_xtable_spark.model.paimon_binary import (
     PaimonFieldType,
     decode_binary_row,
@@ -358,7 +361,7 @@ class PaimonConversionSource:
         # CDC channel: attach each commit's changelog to the TableChange
         self.emit_row_changes = emit_row_changes
         # True -> deletion-vector index entries flow through the row-delete
-        # channel (ROW_DELETES_SCHEMA) instead of purged-shadow rewrites;
+        # channel (ROW_DELETES_ARROW) instead of purged-shadow rewrites;
         # run_sync auto-enables when every target supports row deletes
         self.expose_row_deletes = expose_row_deletes
 
@@ -656,18 +659,18 @@ class PaimonConversionSource:
             for p, m in sorted(dv.items())
         ]
 
-    def _row_deletes_df(self, dv: dict[str, dict]) -> DataFrame:
+    def _row_deletes_df(self, dv: dict[str, dict]) -> pa.Table:
         """COMPLETE current delete state (empty = no deletes, never None —
         targets clear stale DVs/delete files absent from a restatement).
         Positions files are materialized executor-side first."""
-        from incubator_xtable_spark.model.core import ROW_DELETES_SCHEMA
+        from incubator_xtable_spark.model.core import ROW_DELETES_ARROW
         from incubator_xtable_spark.sources.paimon_dv import (
             materialize_dv_outputs,
             positions_path_for,
         )
 
         if not dv:
-            return self.spark.createDataFrame([], ROW_DELETES_SCHEMA)
+            return ROW_DELETES_ARROW.empty_table()
         materialize_dv_outputs(self.spark, self.base_path, self._dv_items(dv), "positions")
         rows = [
             (
@@ -678,7 +681,7 @@ class PaimonConversionSource:
             )
             for p, m in sorted(dv.items())
         ]
-        return self.spark.createDataFrame(rows, ROW_DELETES_SCHEMA)
+        return arrow_table(rows, ROW_DELETES_ARROW)
 
     def _shadow_overrides(self, dv: dict[str, dict]) -> dict[str, tuple]:
         """Materialize purged shadows for covered files and return the
@@ -699,9 +702,9 @@ class PaimonConversionSource:
 
     def _to_inventory(
         self, entries: list[dict], sch: dict, overrides: Optional[dict[str, tuple]] = None
-    ) -> DataFrame:
+    ) -> pa.Table:
         if not entries:
-            return self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
+            return FILE_INVENTORY_ARROW.empty_table()
         options = sch.get("options") or {}
         keys, codecs, dtypes = self._partition_ctx(sch)
         # stats rows decode against the schema the FILE was written with
@@ -752,7 +755,7 @@ class PaimonConversionSource:
                     stats,
                 )
             )
-        return self.spark.createDataFrame(rows, FILE_INVENTORY_SCHEMA)
+        return arrow_table(rows, FILE_INVENTORY_ARROW)
 
     # -- snapshots / commits -----------------------------------------------
 
@@ -1131,7 +1134,8 @@ def read_paimon_as_df(
             pv_df = spark.createDataFrame(pv_rows, "abs_path STRING, pv MAP<STRING,STRING>")
             df = df.withColumn(
                 "abs_path", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
-            ).join(F.broadcast(pv_df), "abs_path", "left")
+            )
+            df = with_file_paths(df, "abs_path").join(F.broadcast(pv_df), "abs_path", "left")
             for k in missing_parts:
                 df = df.withColumn(k, F.col("pv").getItem(k).cast(table.read_schema[k].dataType))
             df = df.drop("abs_path", "pv")
@@ -1144,16 +1148,13 @@ def read_paimon_as_df(
             from incubator_xtable_spark.sources.paimon_dv import dv_positions_df
 
             positions = dv_positions_df(spark, base_path, src._dv_items(dv))
-            df = (
-                df.withColumn(
-                    "_fp", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
-                )
-                .withColumn("_ri", F.col("_metadata.row_index"))
-                .join(
-                    positions,
-                    (F.col("_fp") == positions.file_path) & (F.col("_ri") == positions.pos),
-                    "left_anti",
-                )
+            df = df.withColumn(
+                "_fp", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
+            ).withColumn("_ri", F.col("_metadata.row_index"))
+            df = with_file_paths(df, "_fp").join(
+                positions,
+                (F.col("_fp") == positions.file_path) & (F.col("_ri") == positions.pos),
+                "left_anti",
             )
         df = df.select(*[column(f.name) for f in table.read_schema.fields])
     elif dv:

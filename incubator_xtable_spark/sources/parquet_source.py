@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
+    FILE_INVENTORY_ARROW,
     FILE_INVENTORY_SCHEMA,
     InstantsForIncrementalSync,
     InternalPartitionField,
@@ -42,6 +43,7 @@ from incubator_xtable_spark.model.core import (
     InternalTable,
     TableChange,
     TableFormat,
+    arrow_table,
     local_frame,
 )
 from incubator_xtable_spark.model.hive_partitions import infer_partitions
@@ -148,10 +150,9 @@ class ParquetConversionSource:
 
     def _build_inventory(
         self, table: InternalTable, files: list, footers: _Footers, with_stats: bool
-    ) -> DataFrame:
+    ) -> pa.Table:
         """``files``: the driver-side [(path, size, mtime)] listing, built
-        with its footer results into one LocalRelation
-        (model.core.local_frame)."""
+        with its footer results into one inventory table."""
         rows = []
         for path, size, mtime in files:
             record_count, column_stats = footers.stats[path] if with_stats else (None, None)
@@ -170,7 +171,7 @@ class ParquetConversionSource:
                     column_stats,
                 )
             )
-        return local_frame(self.spark, rows, FILE_INVENTORY_SCHEMA)
+        return arrow_table(rows, FILE_INVENTORY_ARROW)
 
     # -- commits (mtime-based, like the reference) -------------------------
     # NOTE: mtime commits only observe ADDITIONS. Deleted files are only
@@ -198,8 +199,12 @@ class ParquetConversionSource:
         files, table, footers = self._scan()
         added_files = [f for f in files if f[2] == commit_ms]
         inventory = self._build_inventory(table, added_files, footers, with_stats=True)
-        empty = local_frame(self.spark, [], FILE_INVENTORY_SCHEMA)
-        return TableChange(table=table, commit_id=commit, files_added=inventory, files_removed=empty)
+        return TableChange(
+            table=table,
+            commit_id=commit,
+            files_added=inventory,
+            files_removed=FILE_INVENTORY_ARROW.empty_table(),
+        )
 
     def get_commit_identifier(self, commit: str) -> str:
         return commit
@@ -482,15 +487,21 @@ def _read_footer(path: str) -> Optional[pq.FileMetaData]:
         return None
 
 
+def footer_stat_rows(paths: Iterable[str], schema: T.StructType) -> list:
+    """(path, record_count, column_stats) per parquet file of ``paths``,
+    its footer read on the driver; a file that cannot be read gets no
+    count and no stats. ``schema`` types the stats (inventory encoding)."""
+    types_by_name = {f.name: f.dataType for f in schema.fields}
+    return _footer_stat_rows(((p, _read_footer(p)) for p in paths), types_by_name)
+
+
 def footer_stats(spark: SparkSession, listing: DataFrame, schema: T.StructType) -> DataFrame:
-    """Per-file record counts + per-column min/max/null-count from parquet
-    footers, read on the driver into a LocalRelation. ``listing``'s
-    ``physical_path`` column is collected first: no Spark job when it is
-    itself driver-built (``local_frame``).
+    """``footer_stat_rows`` of ``listing``'s ``physical_path`` column as a
+    LocalRelation, for callers that join the stats in Spark. The listing
+    is collected first: no Spark job when it is itself driver-built
+    (``local_frame``).
 
     Output: physical_path, record_count, column_stats (inventory encoding).
     """
     paths = [r[0] for r in listing.select("physical_path").collect()]
-    types_by_name = {f.name: f.dataType for f in schema.fields}
-    rows = _footer_stat_rows(((p, _read_footer(p)) for p in paths), types_by_name)
-    return local_frame(spark, rows, _STATS_SCHEMA)
+    return local_frame(spark, footer_stat_rows(paths, schema), _STATS_SCHEMA)

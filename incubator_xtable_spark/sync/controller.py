@@ -24,14 +24,10 @@ from incubator_xtable_spark.model.core import (
     CatalogSyncStatus,
     ErrorDetails,
     InstantsForIncrementalSync,
-    InternalSnapshot,
     SyncMode,
     SyncResult,
     SyncStatusCode,
-    TableChange,
     TableFormat,
-    is_local_plan,
-    local_frame,
 )
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
 
@@ -192,7 +188,7 @@ class ConversionController:
     # -- FULL path (TableFormatSync.syncSnapshot, .java:64-89) --------------
 
     def _sync_snapshot(self, source: Any, targets: dict[TableFormat, Any]) -> dict[TableFormat, SyncResult]:
-        snapshot = _materialize_once(source.get_current_snapshot(), _SNAPSHOT_CHANNELS)
+        snapshot = source.get_current_snapshot()
         results = {}
         for fmt, target in targets.items():
             start = time.perf_counter()
@@ -281,9 +277,7 @@ class ConversionController:
                 if not _commit_applies(commit, bm, last_sync, order):
                     continue
                 if change is None:  # lazy: only extract when some target needs it
-                    change = _materialize_once(
-                        source.get_table_change_for_commit(commit), _CHANGE_CHANNELS
-                    )
+                    change = source.get_table_change_for_commit(commit)
                 start = time.perf_counter()
                 try:
                     pending = [
@@ -342,27 +336,6 @@ class ConversionController:
                 sync_duration_sec=durations[fmt],
             )
         return results
-
-
-# The metadata-sized channels every target drains. row_changes is
-# data-scale (row-level CDC) and stays lazy.
-_SNAPSHOT_CHANNELS = ("files", "row_deletes")
-_CHANGE_CHANNELS = ("files_added", "files_removed", "row_deletes")
-
-
-def _materialize_once(
-    carrier: InternalSnapshot | TableChange, channels: tuple[str, ...]
-) -> InternalSnapshot | TableChange:
-    """Evaluate each of ``carrier``'s ``channels`` ONCE, so N targets
-    collect driver-resident rows instead of each re-running the source's
-    snapshot or change plan (one Spark job set per target). A frame whose
-    plan is already a LocalRelation is left as is."""
-    for name in channels:
-        df = getattr(carrier, name, None)
-        if df is None or is_local_plan(df):
-            continue
-        setattr(carrier, name, local_frame(df.sparkSession, df.toArrow(), df.schema))
-    return carrier
 
 
 def _earliest_instant(bookmark: Optional[TableSyncMetadata]) -> str:

@@ -903,13 +903,8 @@ def iceberg_rewrite_data_files(
 
     from pyspark.sql import functions as F
 
-    from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
-        ROW_DELETES_SCHEMA,
-        TableChange,
-    )
+    from incubator_xtable_spark.model.core import ROW_DELETES_ARROW, TableChange, table_rows
     from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
     from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
 
     src = IcebergConversionSource(spark, base_path, name=table_name)
@@ -941,7 +936,7 @@ def iceberg_rewrite_data_files(
     # inventory mapping (identity values + transform spellings)
     inv_by_path = {
         r["physical_path"]: r
-        for r in src._to_inventory(entries, table, None).collect()
+        for r in table_rows(src._to_inventory(entries, table, None))
     }
 
     removed_entries: list = []
@@ -1004,40 +999,7 @@ def iceberg_rewrite_data_files(
     if not added_rows:
         return {"removed": [], "added": [], "snapshot_id": None}
 
-    listing = spark.createDataFrame(
-        [(p,) for p, _, _ in added_rows], "physical_path STRING"
-    )
-    from pyspark.sql import types as T
-
-    part_names = {pf.output_name for pf in table.partition_fields}
-    data_fields = T.StructType(
-        [f for f in table.read_schema.fields if f.name not in part_names]
-    )
-    stats_by_path = {
-        r["physical_path"]: r for r in footer_stats(spark, listing, data_fields).collect()
-    }
-    added_inv = spark.createDataFrame(
-        [
-            (
-                p,
-                "PARQUET",
-                size,
-                int(stats_by_path[p]["record_count"])
-                if p in stats_by_path
-                else None,
-                now_ms,
-                pv,
-                {
-                    k: v.asDict()
-                    for k, v in (stats_by_path[p]["column_stats"] or {}).items()
-                }
-                if p in stats_by_path
-                else None,
-            )
-            for p, size, pv in added_rows
-        ],
-        FILE_INVENTORY_SCHEMA,
-    )
+    added_inv = _compacted_inventory(added_rows, table, now_ms)
     removed_inv = src._to_inventory(removed_entries, table, None)
 
     tgt = IcebergConversionTarget(
@@ -1060,7 +1022,7 @@ def iceberg_rewrite_data_files(
     if affected:
         # every delete-carrying file was rewritten: restate the delete
         # set as EMPTY so stale delete manifests drop with their files
-        tgt.sync_row_deletes(spark.createDataFrame([], ROW_DELETES_SCHEMA))
+        tgt.sync_row_deletes(ROW_DELETES_ARROW.empty_table())
     tgt._summary_operation = "replace"
     new_sid = tgt.complete_sync()
     return {
@@ -1103,13 +1065,12 @@ def hudi_cluster_small_files(
     import math
     import uuid as _uuid
 
-    from incubator_xtable_spark.model.core import FILE_INVENTORY_SCHEMA, TableChange
+    from incubator_xtable_spark.model.core import FILE_INVENTORY_ARROW, TableChange, arrow_table
     from incubator_xtable_spark.sources.hudi_source import (
         HudiConversionSource,
         live_files_rows,
         read_properties,
     )
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
     from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
 
     src = HudiConversionSource(spark, base_path, name=table_name)
@@ -1157,44 +1118,12 @@ def hudi_cluster_small_files(
     if not added_rows:
         return {"removed": [], "added": [], "instant": None}
 
-    from pyspark.sql import types as T
-
-    listing = spark.createDataFrame(
-        [(p,) for p, _ in added_rows], "physical_path STRING"
+    added_inv = _compacted_inventory(
+        [(p, size, None) for p, size in added_rows], table, now_ms
     )
-    part_names = {pf.output_name for pf in table.partition_fields}
-    data_fields = T.StructType(
-        [f for f in table.read_schema.fields if f.name not in part_names]
-    )
-    stats_by_path = {
-        r["physical_path"]: r for r in footer_stats(spark, listing, data_fields).collect()
-    }
-    added_inv = spark.createDataFrame(
-        [
-            (
-                p,
-                "PARQUET",
-                size,
-                int(stats_by_path[p]["record_count"]) if p in stats_by_path else None,
-                now_ms,
-                None,
-                {
-                    k: v.asDict()
-                    for k, v in (stats_by_path[p]["column_stats"] or {}).items()
-                }
-                if p in stats_by_path
-                else None,
-            )
-            for p, size in added_rows
-        ],
-        FILE_INVENTORY_SCHEMA,
-    )
-    removed_inv = spark.createDataFrame(
-        [
-            (base + r["path"], "PARQUET", int(r.get("size") or 0), None, None, None, None)
-            for r in removed
-        ],
-        FILE_INVENTORY_SCHEMA,
+    removed_inv = arrow_table(
+        [(base + r["path"], "PARQUET", int(r.get("size") or 0)) for r in removed],
+        FILE_INVENTORY_ARROW,
     )
 
     props = read_properties(base_path)
@@ -1255,6 +1184,24 @@ def hudi_cluster_small_files(
     }
 
 
+def _compacted_inventory(added: list[tuple], table, now_ms: int):
+    """The inventory table of freshly written compaction outputs
+    ``added`` [(path, size, partition_values)]: PARQUET, stamped
+    ``now_ms``, counts and stats from one driver-side footer pass."""
+    from pyspark.sql import types as T
+
+    from incubator_xtable_spark.model.core import FILE_INVENTORY_ARROW, arrow_table
+    from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
+
+    part_names = {pf.output_name for pf in table.partition_fields}
+    data_fields = T.StructType([f for f in table.read_schema.fields if f.name not in part_names])
+    stats = {p: (rc, cs) for p, rc, cs in footer_stat_rows([a[0] for a in added], data_fields)}
+    return arrow_table(
+        [(p, "PARQUET", size, stats[p][0], now_ms, pv, stats[p][1]) for p, size, pv in added],
+        FILE_INVENTORY_ARROW,
+    )
+
+
 def paimon_compact_small_files(
     spark: SparkSession,
     base_path: str,
@@ -1284,9 +1231,13 @@ def paimon_compact_small_files(
     import math
     import uuid as _uuid
 
-    from incubator_xtable_spark.model.core import FILE_INVENTORY_SCHEMA, TableChange
+    from incubator_xtable_spark.model.core import (
+        FILE_INVENTORY_ARROW,
+        TableChange,
+        arrow_table,
+        table_rows,
+    )
     from incubator_xtable_spark.sources.paimon_source import PaimonConversionSource
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
     from incubator_xtable_spark.targets.paimon_target import PaimonConversionTarget
 
     src = PaimonConversionSource(spark, base_path, name=table_name)
@@ -1299,7 +1250,7 @@ def paimon_compact_small_files(
     snapshot = src.get_current_snapshot()
     table = snapshot.table
     min_file_bytes = min_file_bytes or target_file_bytes // 2
-    rows = snapshot.files.collect()
+    rows = table_rows(snapshot.files)
 
     groups: dict = {}
     for r in rows:
@@ -1334,39 +1285,8 @@ def paimon_compact_small_files(
     if not added_rows:
         return {"removed": [], "added": [], "snapshot_id": None}
 
-    from pyspark.sql import types as T
-
-    listing = spark.createDataFrame(
-        [(p,) for p, _, _ in added_rows], "physical_path STRING"
-    )
-    part_names = {pf.output_name for pf in table.partition_fields}
-    data_fields = T.StructType(
-        [f for f in table.read_schema.fields if f.name not in part_names]
-    )
-    stats_by_path = {
-        r["physical_path"]: r for r in footer_stats(spark, listing, data_fields).collect()
-    }
-    added_inv = spark.createDataFrame(
-        [
-            (
-                p,
-                "PARQUET",
-                size,
-                int(stats_by_path[p]["record_count"]) if p in stats_by_path else None,
-                now_ms,
-                pv,
-                {
-                    k: v.asDict()
-                    for k, v in (stats_by_path[p]["column_stats"] or {}).items()
-                }
-                if p in stats_by_path
-                else None,
-            )
-            for p, size, pv in added_rows
-        ],
-        FILE_INVENTORY_SCHEMA,
-    )
-    removed_inv = spark.createDataFrame(removed, FILE_INVENTORY_SCHEMA)
+    added_inv = _compacted_inventory(added_rows, table, now_ms)
+    removed_inv = arrow_table(removed, FILE_INVENTORY_ARROW)
 
     tgt = PaimonConversionTarget(spark, base_path, table_name=table_name or table.name)
     tgt.begin_sync(table)

@@ -14,10 +14,10 @@ because this environment has no delta-spark jars):
                                    model/metadata/TableSyncMetadata.java:43-58
 
 Scale notes: the transaction log is inherently a driver-written artifact
-(single file per commit). The controller materializes the source snapshot
-or change once; this target collects those driver-resident rows and
-diffs a snapshot against the log replay's live adds with
-``model.files_diff`` (no Spark job either way).
+(single file per commit). The source hands over its snapshot or change
+as driver-held Arrow tables; this target reads their rows and diffs a
+snapshot against the log replay's live adds with ``model.files_diff``
+(no Spark job either way).
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ import time
 import uuid
 from typing import Any, Iterator, Optional
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,6 +36,7 @@ from incubator_xtable_spark.model.core import (
     InternalSnapshot,
     InternalTable,
     TableChange,
+    table_rows,
 )
 from incubator_xtable_spark.model.files_diff import files_diff, relativize
 from incubator_xtable_spark.model.hive_partitions import partition_values
@@ -174,10 +175,10 @@ class DeltaConversionTarget:
         self._generated_fields: list[T.StructField] = []
         self._metadata_json: Optional[str] = None
         # driver rows: inventory Rows to add, {path, size} dicts to remove
-        self._adds: Optional[list[Row]] = None
+        self._adds: Optional[list[dict]] = None
         self._removes: Optional[list[dict]] = None
         self._committed_version: Optional[int] = None
-        self._row_deletes: Optional[DataFrame] = None
+        self._row_deletes: Optional[list[dict]] = None
         self._row_changes: Optional[DataFrame] = None
         self._row_lineage: Optional[dict] = None
         self._domain_metadata: dict[str, str] = {}
@@ -264,14 +265,14 @@ class DeltaConversionTarget:
     def sync_metadata(self, metadata: TableSyncMetadata) -> None:
         self._metadata_json = metadata.to_json()
 
-    def sync_files_for_snapshot(self, files: DataFrame) -> None:
+    def sync_files_for_snapshot(self, files: Any) -> None:
         """Full snapshot, committed as a minimal diff against the target's
         current live files (snapshot-as-diff,
         delta/DeltaDataFileUpdatesExtractor.java:70-86)."""
         from incubator_xtable_spark.sources.delta_source import live_adds
 
         self._adds, removed = files_diff(
-            files.collect(),
+            table_rows(files),
             live_adds(self.base_path).values(),
             self.base_path,
             lambda r: r["physical_path"],
@@ -283,20 +284,20 @@ class DeltaConversionTarget:
         self._removes = [{"path": a["path"], "size": a.get("size")} for a in removed]
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        self._adds = change.files_added.collect()
+        self._adds = table_rows(change.files_added)
         self._removes = [
             {"path": relativize(r["physical_path"], self.base_path), "size": r["size_bytes"]}
-            for r in change.files_removed.collect()
+            for r in table_rows(change.files_removed)
         ]
 
-    def sync_row_deletes(self, deletes: DataFrame) -> None:
+    def sync_row_deletes(self, deletes: Any) -> None:
         """Row-delete channel (ROW_DELETES_SCHEMA): each covered data file
         gets a REAL Delta deletion vector ('u'-storage roaring bitmap,
         written executor-side from the positions parquet) attached to its
         add action — data files are never rewritten. Files already live
         in the target re-commit as remove + re-add with the new DV (the
         shape a Delta DELETE writes); an unchanged delete set is a no-op."""
-        self._row_deletes = deletes
+        self._row_deletes = table_rows(deletes)
 
     def sync_row_lineage(self, mapping: dict) -> None:
         """Row-lineage channel ({physical_path: first row id}): this
@@ -496,41 +497,27 @@ class DeltaConversionTarget:
                 write_dv_files_from_positions,
             )
 
-            rd_rows = [r.asDict() for r in self._row_deletes.collect()]
-            dv_map = write_dv_files_from_positions(self.spark, self.base_path, rd_rows)
+            dv_map = write_dv_files_from_positions(self.spark, self.base_path, self._row_deletes)
             if version > 0:
                 # row_deletes is the COMPLETE delete state: a live file
                 # with a changed set re-adds with the new DV; one absent
                 # from the map whose live add still carries a DV re-adds
                 # WITHOUT it (RESTORE propagation); unchanged sets no-op
-                from incubator_xtable_spark.sources.delta_source import live_files_df
+                from incubator_xtable_spark.sources.delta_source import live_adds
 
                 base = self.base_path.rstrip("/") + "/"
                 add_paths = {relativize(r["physical_path"], base) for r in self._adds or ()}
                 # files removed in THIS commit must not be resurrected by
                 # the re-add loop (their DVs die with them)
                 removed_paths = {r["path"] for r in self._removes or ()}
-                live_cols = [
-                    "path",
-                    "partitionValues",
-                    "size",
-                    "modificationTime",
-                    "stats",
-                    "baseRowId",
-                    "defaultRowCommitVersion",
-                ]
-                live = live_files_df(self.spark, self.base_path, version - 1)
-                has_live_dv = "deletionVector" in live.columns
-                if has_live_dv:
-                    live_cols.append("deletionVector")
-                for r in live.select(*live_cols).collect():
+                for r in live_adds(self.base_path, version - 1).values():
                     if r["path"] in removed_paths:
                         continue
                     if relativize(r["path"], base) in add_paths:
                         continue
                     abs_p = r["path"] if r["path"].startswith("/") else base + r["path"]
                     desc = dv_map.get(abs_p)
-                    cur = r["deletionVector"] if has_live_dv else None
+                    cur = r["deletionVector"]
                     cur_active = cur is not None and cur["storageType"]
                     if desc is None and not cur_active:
                         continue  # never deleted — untouched
@@ -1031,7 +1018,7 @@ class DeltaConversionTarget:
 
     def _add_action(
         self,
-        row: Row,
+        row: dict,
         schema: T.StructType,
         now_ms: int,
         dv_desc: Optional[dict] = None,

@@ -23,8 +23,8 @@ via `hoodie.table.metadata.partitions=column_stats` (see
 `sources/hudi_metadata.py`; mirrors HudiConversionTarget.java:267-470's
 write-client metadata update), so converted tables keep data-skipping.
 
-Scale notes: the controller materializes the source snapshot or change
-once; this target collects those driver-resident rows, diffs a snapshot
+Scale notes: the source hands over its snapshot or change as driver-held
+Arrow tables; this target reads their rows, diffs a snapshot
 against the timeline's live file groups with ``model.files_diff``, and
 builds the write stats and both index deltas from the same rows (pyarrow
 appends, no Spark job).
@@ -43,12 +43,12 @@ import datetime
 import json
 import os
 import uuid
-from typing import Iterator, Optional
+from typing import Any, Iterator, Optional
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from incubator_xtable_spark.model.core import InternalTable, TableChange
+from incubator_xtable_spark.model.core import InternalTable, TableChange, table_rows
 from incubator_xtable_spark.model.files_diff import files_diff, relativize
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -299,8 +299,7 @@ class HudiConversionTarget:
         self._partition_cols: list[str] = []
         self._metadata_json: Optional[str] = None
         # driver rows: inventory Rows to add, paths of replaced files
-        self._adds: Optional[list[Row]] = None
-        self._adds_have_stats = False
+        self._adds: Optional[list[dict]] = None
         self._replaced_paths: list[str] = []
         self._committed_instant: Optional[str] = None
         self._row_changes: Optional[DataFrame] = None
@@ -441,14 +440,13 @@ class HudiConversionTarget:
     def sync_metadata(self, metadata: TableSyncMetadata) -> None:
         self._metadata_json = metadata.to_json()
 
-    def sync_files_for_snapshot(self, files: DataFrame) -> None:
+    def sync_files_for_snapshot(self, files: Any) -> None:
         """Snapshot-as-diff against the target's current live files
         (hudi/BaseFileUpdatesExtractor.java:89-133)."""
         from incubator_xtable_spark.sources.hudi_source import live_files_rows
 
-        self._adds_have_stats = "column_stats" in files.columns
         self._adds, replaced = files_diff(
-            files.collect(),
+            table_rows(files),
             live_files_rows(self.base_path),
             self.base_path,
             lambda r: r["physical_path"],
@@ -457,9 +455,8 @@ class HudiConversionTarget:
         self._replaced_paths = [r["path"] for r in replaced]
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        self._adds_have_stats = "column_stats" in change.files_added.columns
-        self._adds = change.files_added.collect()
-        self._replaced_paths = [r["physical_path"] for r in change.files_removed.collect()]
+        self._adds = table_rows(change.files_added)
+        self._replaced_paths = [r["physical_path"] for r in table_rows(change.files_removed)]
 
     def _avro_schema_with_ids(self) -> str:
         """Commit-metadata schema string: an AVRO record schema (what real
@@ -533,7 +530,7 @@ class HudiConversionTarget:
                         "rel_path": rel,
                         "size_bytes": row["size_bytes"],
                         "record_count": row["record_count"],
-                        "column_stats": row["column_stats"] if self._adds_have_stats else None,
+                        "column_stats": row["column_stats"],
                     }
                 )
 
@@ -631,7 +628,7 @@ class HudiConversionTarget:
 
             removed_rels = index_removed if has_replacements else None
             write_col_stats_delta_rows(
-                index_adds if self._adds_have_stats else None,
+                index_adds if self._adds is not None else None,
                 removed_rels,
                 self.base_path,
                 instant,

@@ -37,11 +37,11 @@ import time
 import uuid
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.avro_codec import iter_ocf, read_ocf, write_ocf
-from incubator_xtable_spark.model.core import InternalTable, TableChange
+from incubator_xtable_spark.model.core import InternalTable, TableChange, table_rows
 from incubator_xtable_spark.model.files_diff import files_diff, relativize
 from incubator_xtable_spark.model.schema_meta import FIELD_ID, assign_field_ids
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
@@ -968,11 +968,11 @@ class IcebergConversionTarget:
         self._metadata_json: Optional[str] = None
         # driver rows: a FULL sync sets _snapshot_rows (diffed against the
         # live manifest entries at commit), an incremental one the other two
-        self._snapshot_rows: Optional[list[Row]] = None
-        self._adds: Optional[list[Row]] = None
+        self._snapshot_rows: Optional[list[dict]] = None
+        self._adds: Optional[list[dict]] = None
         self._removed_paths: set[str] = set()
         self._committed_snapshot: Optional[int] = None
-        self._row_deletes: Optional[DataFrame] = None
+        self._row_deletes: Optional[list[dict]] = None
         self._equality_deletes: Optional[dict] = None
         self._row_lineage: Optional[dict] = None
         # snapshot summary `operation` override: maintenance actions set
@@ -1037,20 +1037,20 @@ class IcebergConversionTarget:
     def sync_metadata(self, metadata: TableSyncMetadata) -> None:
         self._metadata_json = metadata.to_json()
 
-    def sync_files_for_snapshot(self, files: DataFrame) -> None:
-        self._snapshot_rows = files.collect()
+    def sync_files_for_snapshot(self, files: Any) -> None:
+        self._snapshot_rows = table_rows(files)
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        self._adds = change.files_added.collect()
+        self._adds = table_rows(change.files_added)
         self._removed_paths = {
-            relativize(r["physical_path"], self.base_path) for r in change.files_removed.collect()
+            relativize(r["physical_path"], self.base_path) for r in table_rows(change.files_removed)
         }
 
-    def sync_row_deletes(self, deletes: DataFrame) -> None:
+    def sync_row_deletes(self, deletes: Any) -> None:
         """Row-delete channel (ROW_DELETES_SCHEMA): each row becomes a v2
         position-delete file entry in a content=1 manifest at this
         commit's sequence number — the data files are NOT rewritten."""
-        self._row_deletes = deletes
+        self._row_deletes = table_rows(deletes)
 
     def sync_row_lineage(self, mapping: dict) -> None:
         """Row-lineage channel ({physical_path: first row id}): new data
@@ -1275,9 +1275,7 @@ class IcebergConversionTarget:
         (content=1) at this commit's sequence number — which satisfies the
         spec application rule delete_seq >= data_seq for every data file
         committed at or before this sequence."""
-        if self._row_deletes is None:
-            return []
-        rows = self._row_deletes.collect()
+        rows = self._row_deletes
         if not rows:
             return []
         if self.format_version >= 3:

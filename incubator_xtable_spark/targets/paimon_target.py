@@ -48,11 +48,11 @@ import os
 import uuid
 from typing import Any, Iterator, Optional
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.avro_codec import write_ocf
-from incubator_xtable_spark.model.core import InternalTable, TableChange
+from incubator_xtable_spark.model.core import InternalTable, TableChange, table_rows
 from incubator_xtable_spark.model.files_diff import files_diff
 from incubator_xtable_spark.model.paimon_binary import (
     PaimonFieldType,
@@ -182,9 +182,9 @@ class PaimonConversionTarget:
         self._metadata_json: Optional[str] = None
         # driver rows: inventory Rows to add, (path, partition blob) pairs
         # to remove
-        self._adds: Optional[list[Row]] = None
+        self._adds: Optional[list[dict]] = None
         self._removes: list[tuple[str, bytes]] = []
-        self._row_deletes: Optional[DataFrame] = None
+        self._row_deletes: Optional[list[dict]] = None
         self._row_changes: Optional[DataFrame] = None
         # commitKind override: maintenance actions set "COMPACT"
         # (layout-only rewrite — changelog consumers see no row changes)
@@ -257,11 +257,11 @@ class PaimonConversionTarget:
     def sync_metadata(self, metadata: TableSyncMetadata) -> None:
         self._metadata_json = metadata.to_json()
 
-    def sync_files_for_snapshot(self, files: DataFrame) -> None:
+    def sync_files_for_snapshot(self, files: Any) -> None:
         """Snapshot-as-diff against the current live external paths; a
         remove keeps the live entry's partition blob."""
         self._adds, self._removes = files_diff(
-            files.collect(),
+            table_rows(files),
             self._live_paths(),
             self.base_path,
             lambda r: r["physical_path"],
@@ -269,18 +269,18 @@ class PaimonConversionTarget:
         )
 
     def sync_files_for_diff(self, change: TableChange) -> None:
-        self._adds = change.files_added.collect()
+        self._adds = table_rows(change.files_added)
         self._removes = [
             (r["physical_path"], self._partition_blob(r["partition_values"]))
-            for r in change.files_removed.collect()
+            for r in table_rows(change.files_removed)
         ]
 
-    def sync_row_deletes(self, deletes: DataFrame) -> None:
+    def sync_row_deletes(self, deletes: Any) -> None:
         """Row-delete channel (ROW_DELETES_SCHEMA): the COMPLETE delete
         state — each covered data file gets a deletion vector in a V1
         index file; the snapshot's indexManifest restates the full set
         (an empty restatement clears all DVs)."""
-        self._row_deletes = deletes
+        self._row_deletes = table_rows(deletes)
 
     def sync_row_changes(self, changes: DataFrame) -> None:
         """CDC channel: the commit's row-level changes persist as REAL
@@ -418,7 +418,7 @@ class PaimonConversionTarget:
             INDEX_MANIFEST_AVRO_SCHEMA,
         )
 
-        rows = self._row_deletes.collect()
+        rows = self._row_deletes
         if not rows:
             return None
         import pyarrow.parquet as pq
@@ -539,7 +539,7 @@ class PaimonConversionTarget:
         )
 
     def _entry_from_row(self, row, kind: int, schema_id: int, seq: int) -> dict:
-        fmt = row["file_format"] if "file_format" in (row.__fields__ or ()) else None
+        fmt = row["file_format"]
         if kind == 0 and (fmt or "PARQUET").upper() != "PARQUET":
             # Paimon infers format from the file suffix; our FileStore
             # registration and read paths are parquet-based — refuse rather
@@ -548,11 +548,7 @@ class PaimonConversionTarget:
                 f"Paimon target: data file {row['physical_path']!r} has format "
                 f"{fmt}; the metadata-only FileStore layout here is parquet-only"
             )
-        fm_stats, stats_cols = self._value_stats(
-            {k: v.asDict() for k, v in row["column_stats"].items()}
-            if row["column_stats"] is not None
-            else None
-        )
+        fm_stats, stats_cols = self._value_stats(row["column_stats"])
         empty = encode_binary_row([], [])
         path = row["physical_path"]
         return {

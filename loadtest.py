@@ -38,13 +38,14 @@ from pyspark.sql import functions as F
 
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
-    FILE_INVENTORY_SCHEMA,
+    FILE_INVENTORY_ARROW,
     InstantsForIncrementalSync,
     InternalSnapshot,
     InternalTable,
     SyncStatusCode,
     TableChange,
     TableFormat,
+    arrow_table,
 )
 from incubator_xtable_spark.session import get_spark
 from incubator_xtable_spark.sources.delta_source import live_files_df
@@ -62,35 +63,24 @@ SCHEMA = T.StructType(
 )
 
 
-def synthetic_inventory(spark, n_files: int, n_partitions: int, commit: str):
-    """Generated file-inventory DataFrame: n_files across n_partitions,
-    with per-file stats — all computed distributed via spark.range."""
-    return (
-        spark.range(n_files)
-        .select(
-            F.concat(
-                F.lit("level="),
-                (F.col("id") % n_partitions).cast("string"),
-                F.lit("/file_"),
-                F.col("id").cast("string"),
-                F.lit(f"_{commit}.parquet"),
-            ).alias("physical_path"),
-            F.lit("PARQUET").alias("file_format"),
-            (F.col("id") % 10000 + 1024).alias("size_bytes"),
-            F.lit(100).cast("long").alias("record_count"),
-            F.lit(1700000000000).alias("last_modified_ms"),
-            F.create_map(F.lit("level"), (F.col("id") % n_partitions).cast("string")).alias(
-                "partition_values"
-            ),
-            F.create_map(
-                F.lit("id"),
-                F.struct(
-                    F.lit("0").alias("min_json"),
-                    F.lit("99").alias("max_json"),
-                    F.lit(0).cast("long").alias("null_count"),
-                ),
-            ).alias("column_stats"),
-        )
+def synthetic_inventory(n_files: int, n_partitions: int, commit: str):
+    """Generated file-inventory table: n_files across n_partitions, with
+    per-file stats."""
+    stats = {"id": {"min_json": "0", "max_json": "99", "null_count": 0}}
+    return arrow_table(
+        (
+            (
+                f"level={i % n_partitions}/file_{i}_{commit}.parquet",
+                "PARQUET",
+                i % 10000 + 1024,
+                100,
+                1700000000000,
+                {"level": str(i % n_partitions)},
+                stats,
+            )
+            for i in range(n_files)
+        ),
+        FILE_INVENTORY_ARROW,
     )
 
 
@@ -116,7 +106,7 @@ class SyntheticSource:
         return InternalSnapshot(
             table=self._table(),
             version=self.commits[0] if self.commits else "0",
-            files=synthetic_inventory(self.spark, self.n_files, self.n_partitions, "base"),
+            files=synthetic_inventory(self.n_files, self.n_partitions, "base"),
         )
 
     def is_incremental_sync_safe_from(self, instant: str) -> bool:
@@ -131,8 +121,8 @@ class SyntheticSource:
         return TableChange(
             table=self._table(),
             commit_id=commit,
-            files_added=synthetic_inventory(self.spark, self.per_commit, self.n_partitions, commit),
-            files_removed=self.spark.createDataFrame([], FILE_INVENTORY_SCHEMA),
+            files_added=synthetic_inventory(self.per_commit, self.n_partitions, commit),
+            files_removed=FILE_INVENTORY_ARROW.empty_table(),
         )
 
     def get_commit_identifier(self, commit: str) -> str:
@@ -173,7 +163,7 @@ def _live_count(spark, work: str, fmt) -> int:
         return (
             HudiConversionSource(spark, work)
             .get_current_snapshot(with_stats=False)
-            .files.count()
+            .files.num_rows
         )
     return live_files_df(spark, work).count()
 
@@ -258,12 +248,8 @@ class _ChurnSource(SyntheticSource):
         return TableChange(
             table=self._table(),
             commit_id=commit,
-            files_added=synthetic_inventory(
-                self.spark, self.per_commit, self.n_partitions, commit
-            ),
-            files_removed=synthetic_inventory(
-                self.spark, self.per_commit, self.n_partitions, prev_tag
-            ),
+            files_added=synthetic_inventory(self.per_commit, self.n_partitions, commit),
+            files_removed=synthetic_inventory(self.per_commit, self.n_partitions, prev_tag),
         )
 
 
@@ -484,7 +470,7 @@ def scenario_dv_relay(
     channel. Read-back proofs: Delta live adds carry exactly D
     deletionVector descriptors with the right cardinality; the Iceberg
     head snapshot lists exactly D delete entries."""
-    from incubator_xtable_spark.model.core import ROW_DELETES_SCHEMA
+    from incubator_xtable_spark.model.core import ROW_DELETES_ARROW
     from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
 
     work = tempfile.mkdtemp(prefix="xtable_load_dv_")
@@ -537,7 +523,7 @@ def scenario_dv_relay(
         class DVSource(SyntheticSource):
             def get_current_snapshot(self) -> InternalSnapshot:
                 snap = super().get_current_snapshot()
-                snap.row_deletes = self.spark.createDataFrame(rd_rows, ROW_DELETES_SCHEMA)
+                snap.row_deletes = arrow_table(rd_rows, ROW_DELETES_ARROW)
                 return snap
 
         source = DVSource(spark, n_files, n_partitions, ["1"], 0)

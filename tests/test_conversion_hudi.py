@@ -174,9 +174,10 @@ def test_read_hudi_heterogeneous_partition_storage(spark, tmp_path):
     from pyspark.sql import types as T
 
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
         InternalPartitionField,
         InternalTable,
+        arrow_table,
     )
     from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
 
@@ -204,12 +205,12 @@ def test_read_hudi_heterogeneous_partition_storage(spark, tmp_path):
         read_schema=schema,
         partition_fields=[InternalPartitionField(source_field="p")],
     )
-    inv = spark.createDataFrame(
+    inv = arrow_table(
         [
             (f1, "PARQUET", os.path.getsize(f1), 2, 1, {"p": "a"}, None),
             (f2, "PARQUET", os.path.getsize(f2), 2, 1, {"p": "b"}, None),
         ],
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
     )
     target = HudiConversionTarget(spark, base, table_name="hetero")
     target.begin_sync(table)
@@ -221,3 +222,30 @@ def test_read_hudi_heterogeneous_partition_storage(spark, tmp_path):
 
     got = _rows(read_hudi_as_df(spark, base), ["id"])
     assert got == [(1, "a"), (2, "a"), (3, "b"), (4, "b")]
+
+
+def test_same_file_name_in_every_partition_stays_live(spark, tmp_path):
+    """A fileId is unique only within its partition: files named alike in
+    three partitions are three file groups. All their rows read back, and
+    a second FULL sync of the unchanged table replaces nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incubator_xtable_spark.model.core import InternalPartitionField
+    from incubator_xtable_spark.sync.controller import ConversionConfig
+
+    base = str(tmp_path / "same_names")
+    for i, k in enumerate("abc"):
+        os.makedirs(os.path.join(base, f"k={k}"))
+        pq.write_table(
+            pa.table({"id": pa.array([i], pa.int64())}), os.path.join(base, f"k={k}", "f.parquet")
+        )
+    ctrl = ConversionController(ConversionConfig(sync_mode=SyncMode.FULL))
+    for _ in range(2):
+        res = ctrl.sync(
+            ParquetConversionSource(spark, base, partition_fields=[InternalPartitionField("k")]),
+            {TableFormat.HUDI: HudiConversionTarget(spark, base, table_name="t")},
+        )
+        assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS, res[TableFormat.HUDI].error
+    assert _rows(read_hudi_as_df(spark, base), ["id"]) == [(0, "a"), (1, "b"), (2, "c")]
+    assert [action for _, action in list_completed_instants(base)] == ["commit", "commit"]

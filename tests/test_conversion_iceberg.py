@@ -35,6 +35,7 @@ from incubator_xtable_spark.targets.iceberg_target import (
 )
 
 from .conftest import SF_SMOKE
+from .model_tables import model_rows
 
 
 def _rows(df, order_cols):
@@ -129,8 +130,8 @@ def test_iceberg_incremental_chain_and_time_travel(spark, source_dir):
     assert not src.is_incremental_sync_safe_from("12345")
 
     change = src.get_table_change_for_commit(str(snap2))
-    assert change.files_added.count() == 1
-    assert change.files_removed.count() == 0
+    assert change.files_added.num_rows == 1
+    assert change.files_removed.num_rows == 0
 
 
 def test_iceberg_to_delta_conversion(spark, source_dir, tmp_path):
@@ -164,7 +165,7 @@ def test_iceberg_stats_roundtrip_to_delta(spark, source_dir, tmp_path):
     # manifest carries bounds keyed by field id
     src = IcebergConversionSource(spark, source_dir)
     snap = src.get_current_snapshot()
-    inv = snap.files.collect()
+    inv = model_rows(snap.files)
     assert any(r["column_stats"] for r in inv), "no stats parsed from manifests"
     st = next(r["column_stats"] for r in inv if r["column_stats"])
     assert "r_regionkey" in st and st["r_regionkey"]["min_json"] is not None
@@ -302,11 +303,12 @@ def test_transform_partition_values_are_spec_native(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
         InternalPartitionField,
         InternalTable,
         PartitionTransformType,
         TableFormat,
+        arrow_table,
     )
     from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
     from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
@@ -343,9 +345,9 @@ def test_transform_partition_values_are_spec_native(spark, tmp_path):
         read_schema=schema,
         partition_fields=pfs,
     )
-    inv = spark.createDataFrame(
+    inv = arrow_table(
         [(fp, "PARQUET", os.path.getsize(fp), 2, None, {"ts_day": "2024-03-01", "id_bucket": "3"}, None)],
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
     )
     target = IcebergConversionTarget(spark, d, table_name="ice_day")
     target.begin_sync(table)
@@ -362,8 +364,8 @@ def test_transform_partition_values_are_spec_native(spark, tmp_path):
     assert part["ts_day"] == 19783  # days since epoch for 2024-03-01
     assert part["id_bucket"] == 3
     # and the inventory strings round-trip
-    f = src.get_current_snapshot().files.collect()[0]
-    assert f.partition_values == {"ts_day": "2024-03-01", "id_bucket": "3"}
+    f = model_rows(src.get_current_snapshot().files)[0]
+    assert f["partition_values"] == {"ts_day": "2024-03-01", "id_bucket": "3"}
     t = src.get_current_table()
     assert {pf.output_name: pf.transform.value for pf in t.partition_fields} == {
         "ts_day": "DAY",
@@ -472,7 +474,7 @@ def test_partition_spec_evolution_guard(spark, tmp_path):
         json.dump(meta, fh)
     # benign evolution (no partition fields either side) resolves fine
     assert sorted(r["id"] for r in read_iceberg_as_df(spark, d).collect()) == list(range(6))
-    assert IcebergConversionSource(spark, d).get_current_snapshot().files.count() == 1
+    assert IcebergConversionSource(spark, d).get_current_snapshot().files.num_rows == 1
 
     # a spec id metadata.json does not know is still a loud error
     meta = read_table_metadata(d)

@@ -72,17 +72,18 @@ def test_checksum_tracks_appends_and_removals(spark, tmp_path):
     # removal commit through the diff channel (bytes stay on disk, the
     # remove action carries the spec-optional size): one live file leaves
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
         TableChange,
+        arrow_table,
     )
 
     victim = live_files_df(spark, base).collect()[0]
     abs_victim = base.rstrip("/") + "/" + victim["path"]
-    removed = spark.createDataFrame(
+    removed = arrow_table(
         [(abs_victim, "parquet", int(victim["size"]), None, 1, None, None)],
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
     )
-    empty = spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
+    empty = arrow_table([], FILE_INVENTORY_ARROW)
     target3 = DeltaConversionTarget(spark, base, version_checksum=True)
     target3.begin_sync(None)
     target3.sync_schema(spark.read.parquet(f"{SF_SMOKE}/customer.parquet").schema)
@@ -121,7 +122,7 @@ def test_checksum_exact_through_dv_readds(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from incubator_xtable_spark.model.core import ROW_DELETES_SCHEMA
+    from incubator_xtable_spark.model.core import ROW_DELETES_ARROW, arrow_table
 
     live = live_files_df(spark, base).collect()
     victim = base.rstrip("/") + "/" + live[0]["path"]
@@ -135,7 +136,7 @@ def test_checksum_exact_through_dv_readds(spark, tmp_path):
         ),
         pos_path,
     )
-    rd = spark.createDataFrame([(victim, pos_path, 2, None)], ROW_DELETES_SCHEMA)
+    rd = arrow_table([(victim, pos_path, 2, None)], ROW_DELETES_ARROW)
     target2 = DeltaConversionTarget(spark, base, version_checksum=True)
     target2.begin_sync(None)
     target2.sync_schema(spark.read.parquet(f"{SF_SMOKE}/customer.parquet").schema)

@@ -37,6 +37,7 @@ from incubator_xtable_spark.sources.iceberg_source import read_iceberg_as_df
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
 from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
+from .model_tables import model_rows
 
 
 # ---------------------------------------------------------------------------
@@ -185,7 +186,7 @@ def test_read_delta_applies_dv(spark, dv_table):
 def test_snapshot_inventory_uses_purged_shadow(spark, dv_table):
     src = DeltaConversionSource(spark, dv_table)
     snap = src.get_current_snapshot()
-    rows = {os.path.basename(r["physical_path"]): r for r in snap.files.collect()}
+    rows = {os.path.basename(r["physical_path"]): r for r in model_rows(snap.files)}
     shadows = [n for n in rows if ".purged-" in n]
     assert len(shadows) == 1 and len(rows) == 2
     assert rows[shadows[0]]["record_count"] == 7  # 10 - 3 deleted
@@ -218,8 +219,8 @@ def test_incremental_dv_diff_swaps_shadow(spark, dv_table):
     must remove the original file and add the purged shadow."""
     src = DeltaConversionSource(spark, dv_table)
     change = src.get_table_change_for_commit("1")
-    added = [os.path.basename(r["physical_path"]) for r in change.files_added.collect()]
-    removed = [os.path.basename(r["physical_path"]) for r in change.files_removed.collect()]
+    added = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_added)]
+    removed = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_removed)]
     assert added == [os.path.basename(purged_path("part-0001.parquet", _desc_of(spark, dv_table)))]
     assert removed == ["part-0001.parquet"]
 
@@ -273,8 +274,8 @@ def test_dv_update_on_dv_file(spark, dv_table):
     )
     src = DeltaConversionSource(spark, dv_table)
     change = src.get_table_change_for_commit("2")
-    added = [os.path.basename(r["physical_path"]) for r in change.files_added.collect()]
-    removed = [os.path.basename(r["physical_path"]) for r in change.files_removed.collect()]
+    added = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_added)]
+    removed = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_removed)]
     assert added == [os.path.basename(purged_path("part-0001.parquet", desc2))]
     assert removed == [os.path.basename(purged_path("part-0001.parquet", old_desc))]
     expected = [i for i in range(20) if i not in (0, 2, 3, 5, 7)]

@@ -125,9 +125,10 @@ def test_row_ids_stable_across_dv_update(spark, source_dir, tmp_path):
     import pyarrow.parquet as pq
 
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
-        ROW_DELETES_SCHEMA,
+        FILE_INVENTORY_ARROW,
+        ROW_DELETES_ARROW,
         TableChange,
+        arrow_table,
     )
     from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
     from incubator_xtable_spark.sources.delta_source import DeltaConversionSource
@@ -158,14 +159,14 @@ def test_row_ids_stable_across_dv_update(spark, source_dir, tmp_path):
     target.sync_metadata(TableSyncMetadata("i1", row_deletes_mode=True))
     target.sync_schema(table.read_schema)
     target.sync_partition_spec([])
-    empty_inv = spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
+    empty_inv = arrow_table([], FILE_INVENTORY_ARROW)
     target.sync_files_for_diff(
         TableChange(
             table=table, commit_id="i1", files_added=empty_inv, files_removed=empty_inv
         )
     )
     target.sync_row_deletes(
-        spark.createDataFrame([(victim["_fp"], pos_path, 1, None)], ROW_DELETES_SCHEMA)
+        arrow_table([(victim["_fp"], pos_path, 1, None)], ROW_DELETES_ARROW)
     )
     v = target.complete_sync()
     assert v == 1

@@ -11,30 +11,36 @@ a classic, multi-part or v2+sidecar checkpoint in range, and after the
 log behind it expired — and it must run no Spark job.
 
 The Spark pipeline that built Hudi index records is kept the same way,
-as the reference for the pyarrow writers. The sync tests pin the zero-job
-paths: each change and the FULL snapshot are materialized once by the
-controller, and targets diff and commit driver rows with no Spark job,
-also when a source hands over URI-form paths."""
+as the reference for the pyarrow writers, and so is the Spark inventory
+projection (the `add.stats` parse, path anchoring and format tag) as the
+reference for the Delta source's Python stats parse. The sync tests pin
+the zero-job, zero-py4j paths: sources hand their inventories over as
+Arrow tables, and targets diff and commit those rows with no Spark job
+and no py4j command, also when a source hands over URI-form paths."""
 
 from __future__ import annotations
 
 import contextlib
 import glob
 import json
+import math
 import os
 import re
 import shutil
 import uuid
-from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import Window
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import incubator_xtable_spark.sources.delta_source as DS
-from incubator_xtable_spark.model.core import is_local_plan
+from incubator_xtable_spark.model.core import FILE_INVENTORY_SCHEMA
+from incubator_xtable_spark.model.stat_codec import decode_stat
+
+from .model_tables import model_rows
 
 
 def _write_commit(log_dir: str, version: int, actions: list[dict]) -> None:
@@ -219,19 +225,182 @@ def _spark_commit_diff(spark, base, version, by_raw_path):
     return adds, removes_eff.join(noop, "eff_path", "left_anti")
 
 
+# The Spark inventory projection: `add.stats` parsed with `from_json`
+# against a schema typed natively where the column is numeric or boolean
+# (strings elsewhere), each min/max re-serialized as a JSON fragment.
+
+_NATIVE_STAT_TYPES = (
+    T.IntegerType,
+    T.LongType,
+    T.ShortType,
+    T.ByteType,
+    T.FloatType,
+    T.DoubleType,
+    T.BooleanType,
+)
+
+
+def _typed_stats_schema(schema: T.StructType) -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField(
+                f.name, f.dataType if isinstance(f.dataType, _NATIVE_STAT_TYPES) else T.StringType()
+            )
+            for f in schema.fields
+        ]
+    )
+
+
+def _json_fragment(col: Column) -> Column:
+    """Scalar column -> standalone JSON fragment (the to_json(array(x))
+    bracket-strip trick)."""
+    frag = F.regexp_replace(F.to_json(F.array(col)), r"^\[|\]$", "")
+    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(frag)
+
+
+def _parsed_stats_expr(schema: T.StructType) -> Column:
+    typed = _typed_stats_schema(schema)
+    return F.from_json(
+        F.col("stats"),
+        T.StructType(
+            [
+                T.StructField("numRecords", T.LongType()),
+                T.StructField("minValues", typed),
+                T.StructField("maxValues", typed),
+                T.StructField("nullCount", T.MapType(T.StringType(), T.LongType())),
+            ]
+        ),
+    )
+
+
+def _column_stats_expr(schema: T.StructType, parsed: Column) -> Column:
+    entries: list[Column] = []
+    for f in schema.fields:
+        entries.append(F.lit(f.name))
+        entries.append(
+            F.struct(
+                _json_fragment(parsed["minValues"][f.name]).alias("min_json"),
+                _json_fragment(parsed["maxValues"][f.name]).alias("max_json"),
+                parsed["nullCount"][f.name].alias("null_count"),
+            )
+        )
+    return F.create_map(*entries)
+
+
+def _spark_anchored(path_col: str, base: str) -> Column:
+    return F.when(F.col(path_col).startswith("/"), F.col(path_col)).otherwise(
+        F.concat(F.lit(base), F.col(path_col))
+    )
+
+
+def _spark_inventory(src, adds, table):
+    """`add.*` rows -> inventory rows through the Spark projection, DV'd
+    adds (unless exposed) as their purged shadows with footer stats."""
+    from incubator_xtable_spark.model.file_formats import format_expr
+    from incubator_xtable_spark.model.core import local_frame
+    from incubator_xtable_spark.sources.delta_dv import purged_path
+    from incubator_xtable_spark.sources.parquet_source import footer_stats
+
+    base = src.base_path + "/"
+    data_schema = src._data_schema(table)
+    parsed = _parsed_stats_expr(data_schema)
+    abs_path = _spark_anchored("path", base)
+    projection = [
+        abs_path.alias("physical_path"),
+        format_expr(abs_path, default=src._default_file_format()).alias("file_format"),
+        F.col("size").alias("size_bytes"),
+        parsed["numRecords"].alias("record_count"),
+        F.col("modificationTime").alias("last_modified_ms"),
+        F.col("partitionValues").alias("partition_values"),
+        _column_stats_expr(data_schema, parsed).alias("column_stats"),
+    ]
+    if src.expose_row_deletes:
+        return _spark_rows(adds.select(*projection))
+    has_dv = F.col("deletionVector.storageType").isNotNull()
+    dv_list = adds.filter(has_dv).select(
+        abs_path.alias("abs_path"), "deletionVector", "partitionValues", "modificationTime"
+    ).collect()
+    shadows = [purged_path(r["abs_path"], r["deletionVector"].asDict()) for r in dv_list]
+    listing = local_frame(
+        adds.sparkSession,
+        [(p,) for p in shadows],
+        T.StructType([FILE_INVENTORY_SCHEMA["physical_path"]]),
+    )
+    stats = {
+        r["physical_path"]: (r["record_count"], r["column_stats"])
+        for r in _spark_rows(footer_stats(adds.sparkSession, listing, data_schema))
+    }
+    dv_rows = [
+        {
+            "physical_path": sp,
+            "file_format": "PARQUET",
+            "size_bytes": os.path.getsize(sp),
+            "record_count": stats[sp][0],
+            "last_modified_ms": r["modificationTime"],
+            "partition_values": dict(r["partitionValues"] or {}) or None,
+            "column_stats": stats[sp][1],
+        }
+        for sp, r in zip(shadows, dv_list)
+    ]
+    return _spark_rows(adds.filter(~has_dv).select(*projection)) + dv_rows
+
+
+def _spark_rows(df):
+    return [r.asDict(recursive=True) for r in df.collect()]
+
+
 def _spark_change_rows(spark, src, version):
-    """`_change_rows` of the reference diff, through the source's own
-    inventory projections."""
+    """`_change_rows` of the reference diff, through the Spark inventory
+    projection."""
     table = src.get_table_at_version(version)
     adds, removes_eff = _spark_commit_diff(spark, src.base_path, version, src.expose_row_deletes)
-    live = _spark_live_files(spark, src.base_path, version)
-    return _change_rows(
-        SimpleNamespace(
-            files_added=src._to_inventory_adds(adds, table),
-            files_removed=removes_eff.select(*src._projections(src._data_schema(table))[1]),
-            row_deletes=src._row_deletes_for(live) if src.expose_row_deletes else None,
-        )
+    abs_removed = _spark_anchored("eff_path", src.base_path + "/")
+    from incubator_xtable_spark.model.file_formats import format_expr
+
+    removed = removes_eff.select(
+        abs_removed.alias("physical_path"),
+        format_expr(abs_removed, default=src._default_file_format()).alias("file_format"),
+        F.lit(0).cast("long").alias("size_bytes"),
+        F.lit(None).cast("long").alias("record_count"),
+        F.lit(None).cast("long").alias("last_modified_ms"),
+        F.lit(None).cast("map<string,string>").alias("partition_values"),
+        F.lit(None).cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType).alias("column_stats"),
     )
+    live = _spark_rows(_spark_live_files(spark, src.base_path, version))
+    return {
+        "files_added": _normalized(_spark_inventory(src, adds, table), table),
+        "files_removed": _normalized(_spark_rows(removed), table),
+        "row_deletes": _normalized(model_rows(src._row_deletes_for(live)), table)
+        if src.expose_row_deletes
+        else None,
+    }
+
+
+def _decoded(raw, dtype):
+    """A min/max JSON fragment as the value it encodes (NaN as a string,
+    so that equal rows compare equal)."""
+    value = decode_stat(raw, dtype)
+    return "NaN" if isinstance(value, float) and math.isnan(value) else value
+
+
+def _normalized(rows, table):
+    """Inventory rows sorted, each min/max decoded with the column's type:
+    two encoders may spell one value differently (1.0E10, 1e10)."""
+    types = {f.name: f.dataType for f in table.read_schema.fields}
+    out = []
+    for r in rows:
+        r = dict(r)
+        if r.get("column_stats"):
+            r["column_stats"] = {
+                c: {
+                    "min": _decoded(st["min_json"], types[c]),
+                    "max": _decoded(st["max_json"], types[c]),
+                    "null_count": st["null_count"],
+                }
+                for c, st in r["column_stats"].items()
+            }
+        out.append(r)
+    return sorted(out, key=lambda d: json.dumps(d, sort_keys=True, default=repr))
 
 
 @contextlib.contextmanager
@@ -250,6 +419,27 @@ def _spark_jobs(spark):
         out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
+@contextlib.contextmanager
+def _py4j_commands(spark):
+    """Record the py4j commands sent inside the block (read the returned
+    list after it), not counting the proxy releases (``m\nd\n``) py4j's
+    finalizer sends for objects it collects on its own schedule."""
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent: list[str] = []
+
+    def send(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    client.send_command = send
+    try:
+        yield sent
+    finally:
+        del client.send_command
+
+
 def _rows(df):
     return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda d: d["path"])
 
@@ -263,7 +453,7 @@ def test_live_files_match_spark_reference(spark, delta_table):
         with _spark_jobs(spark) as jobs:
             replayed = DS.live_files_df(spark, delta_table, version)
             rows = _rows(replayed)
-        assert jobs == [0] and is_local_plan(replayed)
+        assert jobs == [0]
         reference = _spark_live_files(spark, delta_table, version)
         assert _schema_json(replayed) == _schema_json(reference)
         assert rows == _rows(reference), f"mismatch at version {version}"
@@ -319,7 +509,7 @@ def test_replay_with_checkpoint_in_range(spark, delta_table, monkeypatch, layout
                     DS.latest_metadata(spark, delta_table, v),
                     DS.latest_protocol(delta_table, v),
                 )
-            assert jobs == [0] and is_local_plan(live)
+            assert jobs == [0]
             assert got == expected[v], f"version {v}, expired={expired}"
             # state at or above the checkpoint is tagged with its version
             assert {r["version"] for r in live.collect()} <= set(range(4, v + 1))
@@ -341,19 +531,15 @@ def test_malformed_log_line_fails_loudly(spark, delta_table):
 
 
 def test_local_frame_collects_with_no_job(spark):
-    """A driver-built frame plans as a LocalRelation, and so does a
-    projection over it: collecting either returns the rows with no Spark
-    job. The same rows through spark.createDataFrame(list) plan as a
-    LogicalRDD."""
+    """A driver-built frame, and a projection over it, collects the rows
+    with no Spark job: the projection folds into the LocalRelation at
+    optimization. The same rows through spark.createDataFrame(list) plan
+    as a LogicalRDD."""
     from incubator_xtable_spark.model.core import local_frame
 
     rows = [(i, f"p{i}") for i in range(10)]
     rdd_backed = spark.createDataFrame(rows, "n LONG, physical_path STRING")
     local = local_frame(spark, rows, rdd_backed.schema)
-    assert not is_local_plan(rdd_backed)
-    assert is_local_plan(local)
-    # a projection folds into the LocalRelation at optimization
-    assert is_local_plan(local.select("physical_path"))
     plain = sorted(r["physical_path"] for r in rdd_backed.collect())
     with _spark_jobs(spark) as jobs:
         folded = sorted(r["physical_path"] for r in local.select("physical_path").collect())
@@ -362,13 +548,8 @@ def test_local_frame_collects_with_no_job(spark):
 
 
 def _change_rows(change):
-    def rows(df):
-        if df is None:
-            return None
-        return sorted(
-            (r.asDict(recursive=True) for r in df.collect()),
-            key=lambda d: json.dumps(d, sort_keys=True),
-        )
+    def rows(table):
+        return None if table is None else _normalized(model_rows(table), change.table)
 
     return {
         "files_added": rows(change.files_added),
@@ -390,10 +571,8 @@ def test_commit_diff_matches_spark_reference(spark, delta_table, expose_row_dele
             fast_change = src._table_change_impl(str(version))
             fast = _change_rows(fast_change)
         # purged shadows and delete files included, every channel is
-        # built and drained with no Spark job at all
+        # built and read with no Spark job at all
         assert jobs == [0], f"version {version} ran {jobs[0]} Spark jobs"
-        for df in (fast_change.files_added, fast_change.files_removed, fast_change.row_deletes):
-            assert df is None or is_local_plan(df)
         reference = _spark_change_rows(spark, src, version)
         assert fast == reference, f"diff mismatch at version {version}"
         seen_added += len(fast["files_added"])
@@ -409,7 +588,7 @@ def test_commit_diff_matches_spark_reference(spark, delta_table, expose_row_dele
 
     assert paths(4, "files_added") == [] and paths(4, "files_removed") == []
     assert paths(6, "files_removed") == ["e.parquet"]
-    f_stats = _change_rows(src._table_change_impl("8"))["files_added"][0]["column_stats"]
+    f_stats = model_rows(src._table_change_impl("8").files_added)[0]["column_stats"]
     assert f_stats["name"] == {"min_json": '"x"', "max_json": '"y"', "null_count": 0}
     if expose_row_deletes:
         # a DV update is a data-file no-op under row-delete exposure
@@ -421,6 +600,118 @@ def test_commit_diff_matches_spark_reference(spark, delta_table, expose_row_dele
         assert paths(2, "files_removed") == ["a.parquet"]
         # removing the DV'd file removes the shadow it was synced as
         assert paths(7, "files_removed") == shadow
+
+
+# A table whose adds carry stats of every type the inventory encodes,
+# spelled the ways Delta writers spell them: bare and quoted non-finite
+# floats, a decimal as a JSON number, quotes, backslashes and non-ASCII in
+# strings, values that do not fit their column, and malformed stats.
+_STAT_SCHEMA = {
+    "b": "byte",
+    "s": "short",
+    "i": "integer",
+    "l": "long",
+    "f": "float",
+    "d": "double",
+    "dec": "decimal(10,3)",
+    "dt": "date",
+    "ts": "timestamp",
+    "ntz": "timestamp_ntz",
+    "bo": "boolean",
+    "bin": "binary",
+    "str": "string",
+    "st": {
+        "type": "struct",
+        "fields": [{"name": "x", "type": "integer", "nullable": True, "metadata": {}}],
+    },
+}
+_STATS = {
+    "all.parquet": {
+        "numRecords": 10,
+        "minValues": {
+            "b": -128, "s": -32768, "i": -(2**31), "l": -(2**63), "f": 1.100000023841858,
+            "d": -1e-05, "dec": 12345.678, "dt": "2024-01-31", "ts": "2024-01-31T12:34:56.789Z",
+            "ntz": "2024-01-31T12:34:56.789", "bo": False, "bin": "AAE=", "str": 'a"b\\c',
+            "st": {"x": 1},
+        },
+        "maxValues": {
+            "b": 127, "s": 32767, "i": 2**31 - 1, "l": 2**63 - 1, "f": 3.4028234663852886e38,
+            "d": 1e308, "dec": 99999.999, "dt": "2024-12-31", "ts": "2024-12-31T23:59:59.999999Z",
+            "ntz": "2024-12-31T23:59:59.999999", "bo": True, "bin": "/w==",
+            "str": "z\u00e9\U0001F600\n",
+            "st": {"x": 9},
+        },
+        "nullCount": {c: i for i, c in enumerate(_STAT_SCHEMA) if c != "st"},
+    },
+    "nonfinite.parquet": {
+        "numRecords": 3,
+        "minValues": {"f": "NaN", "d": float("-inf"), "dec": 5, "str": ""},
+        "maxValues": {"f": float("inf"), "d": float("nan"), "dec": "7.250", "str": "\u00fc"},
+        "nullCount": {"f": 0, "d": 1, "str": None},
+    },
+    "unfit.parquet": {
+        "numRecords": "x",
+        "minValues": {"b": 300, "s": 1.5, "i": "7", "bo": "true", "str": 5, "l": 2**63},
+        "maxValues": {"f": "nan", "d": True, "str": False, "dec": "12.5"},
+        "nullCount": {"b": 0, "st": {"x": 0}},
+    },
+    "nostats.parquet": None,
+    "garbage.parquet": "not json",
+    "counts.parquet": {"numRecords": 7},
+}
+
+
+def test_inventory_stats_match_spark_reference(spark, tmp_path):
+    """The Delta source's Python stats parse equals the Spark reference
+    projection (`from_json` against the typed stats schema, each value
+    re-serialized by `to_json`) row for row, min and max compared as the
+    values they encode."""
+    base = str(tmp_path / "tbl")
+    fields = [
+        {"name": n, "type": t, "nullable": True, "metadata": {}}
+        for n, t in [*_STAT_SCHEMA.items(), ("p", "string")]
+    ]
+    adds = []
+    for name, stats in _STATS.items():
+        add = {
+            "path": name,
+            "partitionValues": {"p": "x"},
+            "size": 1,
+            "modificationTime": 1,
+            "dataChange": True,
+        }
+        if stats is not None:
+            add["stats"] = stats if isinstance(stats, str) else json.dumps(stats)
+        adds.append({"add": add})
+    _write_commit(
+        os.path.join(base, "_delta_log"),
+        0,
+        [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {
+                "metaData": {
+                    "id": "t",
+                    "schemaString": json.dumps({"type": "struct", "fields": fields}),
+                    "partitionColumns": ["p"],
+                    "configuration": {},
+                    "format": {"provider": "parquet", "options": {}},
+                }
+            },
+            *adds,
+        ],
+    )
+    src = DS.DeltaConversionSource(spark, base)
+    snapshot = src.get_current_snapshot()
+    log = os.path.join(base, "_delta_log", f"{0:020d}.json")
+    actions = spark.read.schema(DS._ACTION_SCHEMA).json(log)
+    reference_adds = actions.filter(F.col("add.path").isNotNull()).select("add.*")
+    got = _normalized(model_rows(snapshot.files), snapshot.table)
+    assert got == _normalized(_spark_inventory(src, reference_adds, snapshot.table), snapshot.table)
+    by_name = {os.path.basename(r["physical_path"]): r for r in got}
+    assert by_name["all.parquet"]["column_stats"]["f"]["min"] == pytest.approx(1.1)
+    assert by_name["nonfinite.parquet"]["column_stats"]["d"]["max"] == "NaN"
+    unfit = by_name["unfit.parquet"]["column_stats"]["b"]
+    assert unfit == {"min": None, "max": None, "null_count": None}
 
 
 def _spark_relativize(base_path, col):
@@ -446,8 +737,6 @@ def _spark_index_records(spark, adds, removed, base_path, instant):
     commit's (col-stats, files) index records from: one col-stats record
     per (added file x column), one files record per added file, and a
     tombstone per removed file in each."""
-    from incubator_xtable_spark.model.core import FILE_INVENTORY_SCHEMA
-
     adds_df = spark.createDataFrame(adds, FILE_INVENTORY_SCHEMA).select(
         _spark_relativize(base_path, "physical_path").alias("rel_path"),
         "size_bytes",
@@ -564,7 +853,7 @@ def test_hudi_index_delta_matches_spark_reference(spark, tmp_path, monkeypatch):
 
     assert [(len(a), len(r)) for _, a, r in commits] == [(3, 0), (2, 3)]
     for instant, adds, removed in commits:
-        assert list(adds[0].__fields__) == FILE_INVENTORY_SCHEMA.fieldNames()
+        assert list(adds[0]) == FILE_INVENTORY_SCHEMA.fieldNames()
         ref_stats, ref_files = _spark_index_records(spark, adds, removed, d, instant)
         for schema, where, reference in (
             (COL_STATS_RECORD_SCHEMA, col_stats_dir(d), ref_stats),
@@ -584,35 +873,6 @@ def test_commit_diff_reads_the_commit_not_the_checkpoint(spark, delta_table):
     DS.write_checkpoint(spark, delta_table, 4)
     for version in _VERSIONS:
         assert _change_rows(src._table_change_impl(str(version))) == expected[version], version
-
-
-def test_inventory_projection_built_once_per_table_schema(spark, delta_table, tmp_path, monkeypatch):
-    """Every commit and every fresh source over one table reuse the
-    session's inventory projection for a schema: the fixture's two data
-    schemas (before and after v8) are built once each across two full
-    replays. A copy of the table at another path gets its own projection,
-    anchored at its own base."""
-    built = []
-    real = DS.parsed_stats_expr
-
-    def counting(schema):
-        built.append(schema.fieldNames())
-        return real(schema)
-
-    monkeypatch.setattr(DS, "parsed_stats_expr", counting)
-    first = {}
-    for _ in range(2):
-        src = DS.DeltaConversionSource(spark, delta_table)
-        changes = {v: _change_rows(src._table_change_impl(str(v))) for v in _VERSIONS}
-        assert first.setdefault("changes", changes) == changes
-    assert built == [["id"], ["id", "name"]]
-
-    copy = str(tmp_path / "copy")
-    shutil.copytree(delta_table, copy)
-    change = _change_rows(DS.DeltaConversionSource(spark, copy)._table_change_impl("1"))
-    assert built[2:] == [["id"]]
-    assert [r["physical_path"] for r in change["files_added"]] == [os.path.join(copy, "c.parquet")]
-    assert [r["physical_path"] for r in change["files_removed"]] == [os.path.join(copy, "b.parquet")]
 
 
 _INCR_FORMATS = {"iceberg": "metadata", "hudi": ".hoodie"}
@@ -715,31 +975,19 @@ def test_incremental_sync_runs_no_spark_job(spark, delta_backlog, checkpoint):
     assert planned(read_hudi_as_df(spark, root)) == expected
 
 
-class _RddChangeSource(DS.DeltaConversionSource):
-    """The Delta source with its change frames re-planned as LogicalRDDs
-    (`spark.createDataFrame(list)`): every drain of one runs a Spark job."""
-
-    def get_table_change_for_commit(self, commit):
-        change = super().get_table_change_for_commit(commit)
-        for name in ("files_added", "files_removed"):
-            df = getattr(change, name)
-            setattr(change, name, self.spark.createDataFrame(df.collect(), df.schema))
-        return change
-
-
-def test_change_materialized_once_across_targets(spark, delta_backlog):
-    """When a source's change frames are Spark plans, the controller
-    evaluates them once per commit and hands every target the same rows,
-    so a second target adds no Spark job."""
+@pytest.mark.parametrize("checkpoint", [False, True])
+def test_incremental_sync_issues_no_py4j_command(spark, delta_backlog, checkpoint):
+    """The Delta -> Iceberg + Hudi replay never calls into the JVM: the
+    source builds its inventories from the log on the driver, and the
+    targets read those Arrow tables and commit metadata files. Also with
+    a checkpoint at the first backlog commit."""
     root, saved, _ = delta_backlog
+    if checkpoint:
+        DS.write_checkpoint(spark, root, 1)
     _restore_targets(root, saved)
-    with _spark_jobs(spark) as one_target:
-        _incremental_sync(spark, root, ("iceberg",), _RddChangeSource)
-    _restore_targets(root, saved)
-    with _spark_jobs(spark) as two_targets:
-        _incremental_sync(spark, root, source_cls=_RddChangeSource)
-    assert one_target[0] > 0  # the change frames really ran as jobs
-    assert two_targets == one_target
+    with _py4j_commands(spark) as sent:
+        _incremental_sync(spark, root)
+    assert sent == []
 
 
 _FULL_FORMATS = ("delta", "iceberg", "hudi", "paimon")
@@ -818,6 +1066,25 @@ def test_full_sync_targets_run_no_spark_job(spark, tmp_path):
         assert _planned_files(spark, root, fmt) == expected, fmt
 
 
+def test_full_sync_issues_only_session_conf_reads(spark, tmp_path):
+    """A FULL sync of an 80-file table into Delta, Iceberg, Hudi and Paimon
+    sends py4j nothing but the Parquet source's reads of the session
+    settings its schema conversion follows."""
+    from incubator_xtable_spark.model.core import InternalPartitionField
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+
+    root = str(tmp_path / "table")
+    _write_data_files(root, 0, 80, 1_700_000_000)
+    source = ParquetConversionSource(
+        spark, root, name="t", partition_fields=[InternalPartitionField("p")]
+    )
+    targets = _full_targets(spark, root)
+    with _py4j_commands(spark) as sent:
+        _full_sync(spark, source, targets)
+    assert len(sent) <= 4, sent
+    assert all(re.search(r"spark\.sql\.(legacy\.)?parquet\.", c) for c in sent), sent
+
+
 def test_footer_stats_of_local_listing_runs_no_spark_job(spark, tmp_path):
     """``footer_stats`` over a driver-built listing reads the footers on
     the driver and returns a LocalRelation: no Spark job, before or after
@@ -836,7 +1103,6 @@ def test_footer_stats_of_local_listing_runs_no_spark_job(spark, tmp_path):
         stats = footer_stats(spark, listing, schema)
         rows = {r["physical_path"]: r for r in stats.collect()}
     assert n[0] == 0
-    assert is_local_plan(stats)
     assert set(rows) == set(files)
     r = rows[files[3]]
     assert r["record_count"] == 10
@@ -844,41 +1110,16 @@ def test_footer_stats_of_local_listing_runs_no_spark_job(spark, tmp_path):
 
 
 def _parquet_snapshot_source(base_cls, files_of):
-    """``base_cls`` with its snapshot's ``files`` frame replaced by
-    ``files_of(spark, files)``."""
+    """``base_cls`` with its snapshot's ``files`` table replaced by
+    ``files_of(files)``."""
 
     class _Source(base_cls):
         def get_current_snapshot(self):
             snap = super().get_current_snapshot()
-            snap.files = files_of(self.spark, snap.files)
+            snap.files = files_of(snap.files)
             return snap
 
     return _Source
-
-
-def test_snapshot_materialized_once_across_targets(spark, tmp_path):
-    """When a source's snapshot frame is a Spark plan, the controller
-    evaluates it once and hands every target the same rows, so a second
-    target adds no Spark job to a FULL sync."""
-    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
-
-    root = str(tmp_path / "table")
-    _write_data_files(root, 0, 4, 1_700_000_000)
-    rdd_source = _parquet_snapshot_source(
-        ParquetConversionSource,
-        lambda spark, df: spark.createDataFrame(df.collect(), df.schema),
-    )
-
-    def jobs(formats):
-        for sub in ("_delta_log", "metadata", ".hoodie"):
-            shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-        with _spark_jobs(spark) as n:
-            _full_sync(spark, rdd_source(spark, root, name="t"), _full_targets(spark, root, formats))
-        return n[0]
-
-    one_target = jobs(("iceberg",))
-    assert one_target > 0  # the snapshot frame really ran as a job
-    assert jobs(("iceberg", "hudi")) == one_target
 
 
 def _live_relative_paths(spark, root, fmt):
@@ -894,7 +1135,7 @@ def _live_relative_paths(spark, root, fmt):
         "hudi": HudiConversionSource,
         "paimon": PaimonConversionSource,
     }[fmt](spark, root)
-    paths = (r["physical_path"] for r in source.get_current_snapshot().files.collect())
+    paths = (r["physical_path"] for r in model_rows(source.get_current_snapshot().files))
     return sorted(os.path.relpath(re.sub(r"^file:(//)?", "", p), root) for p in paths)
 
 
@@ -920,7 +1161,11 @@ def test_full_sync_of_uri_paths_is_a_no_op_diff(spark, tmp_path, fmt, scheme):
         pq.write_table(pa.table({"id": pa.array(range(i * 10, i * 10 + 10), pa.int64())}), os.path.join(root, name))
     uri_source = _parquet_snapshot_source(
         ParquetConversionSource,
-        lambda spark, df: df.withColumn("physical_path", F.concat(F.lit(scheme), "physical_path")),
+        lambda files: files.set_column(
+            0,
+            files.schema.field("physical_path"),
+            pa.array([scheme + p for p in files.column("physical_path").to_pylist()]),
+        ),
     )
     for _ in range(2):
         _full_sync(spark, uri_source(spark, root, name="t"), _full_targets(spark, root, (fmt,)))

@@ -28,6 +28,7 @@ from incubator_xtable_spark.sources.delta_source import (
 )
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
+from .model_tables import model_rows
 
 SCHEMA_STRING = json.dumps(
     {
@@ -175,7 +176,7 @@ def test_delta_inventory_tags_by_extension(spark, mixed_format_delta):
     snap = src.get_current_snapshot()
     fmts = {
         os.path.basename(r["physical_path"]): r["file_format"]
-        for r in snap.files.collect()
+        for r in model_rows(snap.files)
     }
     assert fmts == {
         "part-0001.parquet": "PARQUET",
@@ -216,7 +217,7 @@ def test_orc_tag_survives_delta_to_iceberg(spark, mixed_format_delta, tmp_path):
     # and the converted inventory reads back with the engine tag
     fmts = {
         os.path.basename(r["physical_path"]): r["file_format"]
-        for r in isrc.get_current_snapshot().files.collect()
+        for r in model_rows(isrc.get_current_snapshot().files)
     }
     assert fmts["part-0002.orc"] == "APACHE_ORC"
     assert fmts["part-0003.avro"] == "APACHE_AVRO"
@@ -266,7 +267,7 @@ def test_provider_orc_defaults_extensionless_files(spark, tmp_path):
         ],
     )
     src = DeltaConversionSource(spark, base)
-    rows = src.get_current_snapshot().files.collect()
+    rows = model_rows(src.get_current_snapshot().files)
     assert [r["file_format"] for r in rows] == ["APACHE_ORC"]
     got = sorted((r["id"], r["label"]) for r in read_delta_as_df(spark, base).collect())
     assert got == [(0, "x"), (1, "y")]
@@ -310,7 +311,7 @@ def test_unknown_provider_refuses(spark, tmp_path):
     )
     src = DeltaConversionSource(spark, base)
     with pytest.raises(ValueError, match="hfile"):
-        src.get_current_snapshot().files.collect()
+        model_rows(src.get_current_snapshot().files)
 
 
 def test_parquet_only_targets_refuse_orc(spark, mixed_format_delta, tmp_path):

@@ -156,8 +156,7 @@ def _footer_stats_map(spark, table_dir):
     snap = src.get_current_snapshot(with_stats=True)
     # materialize: tests delete the LITE index the lazy snapshot plan reads
     listing = spark.createDataFrame(
-        snap.files.select("physical_path", "size_bytes", "last_modified_ms").collect(),
-        "physical_path STRING, size_bytes LONG, last_modified_ms LONG",
+        snap.files.select(["physical_path", "size_bytes", "last_modified_ms"])
     )
     schema = data_schema(src.get_current_table())
     fb = footer_stats(spark, listing.select("physical_path"), schema)
@@ -239,7 +238,9 @@ def test_hfile_tier_selected_by_snapshot(spark, hudi_table):
     _drop_lite_index(hudi_table)
 
     snap = HudiConversionSource(spark, hudi_table).get_current_snapshot(with_stats=True)
-    inv = snap.files.select("physical_path", "record_count", "column_stats")
+    inv = spark.createDataFrame(
+        snap.files.select(["physical_path", "record_count", "column_stats"])
+    )
     assert _stats_by_path(inv) == _stats_by_path(footers)
 
 

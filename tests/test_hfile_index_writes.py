@@ -40,6 +40,7 @@ from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
 
 from .conftest import SF_SMOKE
 from .test_hfile import _footer_stats_map, _stats_by_path
+from .model_tables import model_rows
 
 
 def _sync(spark, d, target=None):
@@ -116,7 +117,7 @@ def test_snapshot_listing_comes_from_hfile_index(spark, table_dir):
     src = HudiConversionSource(spark, table_dir)
     with_idx = {
         (r["physical_path"], r["size_bytes"])
-        for r in src.get_current_snapshot(with_stats=False).files.collect()
+        for r in model_rows(src.get_current_snapshot(with_stats=False).files)
     }
     assert hfile_files_available(table_dir)
 
@@ -128,9 +129,9 @@ def test_snapshot_listing_comes_from_hfile_index(spark, table_dir):
     assert not hfile_files_available(table_dir)
     without_idx = {
         (r["physical_path"], r["size_bytes"])
-        for r in HudiConversionSource(spark, table_dir)
-        .get_current_snapshot(with_stats=False)
-        .files.collect()
+        for r in model_rows(
+            HudiConversionSource(spark, table_dir).get_current_snapshot(with_stats=False).files
+        )
     }
     assert with_idx == without_idx
 

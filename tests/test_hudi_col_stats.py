@@ -40,6 +40,7 @@ from incubator_xtable_spark.targets.hudi_target import (
 )
 
 from .conftest import SF_SMOKE
+from .model_tables import model_rows
 
 
 def _build_hudi_table(spark, d: str) -> str:
@@ -102,7 +103,9 @@ def test_index_stats_equal_footer_stats(spark, hudi_table_ro):
     byte-equal a footer recompute on the same live files."""
     src = HudiConversionSource(spark, hudi_table_ro)
     snap = src.get_current_snapshot(with_stats=True)
-    listing = snap.files.select("physical_path", "size_bytes", "last_modified_ms")
+    listing = spark.createDataFrame(
+        snap.files.select(["physical_path", "size_bytes", "last_modified_ms"])
+    )
 
     via_index = file_stats_from_index(spark, hudi_table_ro).join(
         listing.select("physical_path"), "physical_path"
@@ -114,7 +117,9 @@ def test_index_stats_equal_footer_stats(spark, hudi_table_ro):
     assert idx_map == footer_map
 
     # and the snapshot path (which routes through the index tier) agrees
-    snap_map = _stats_by_path(snap.files.select("physical_path", "record_count", "column_stats"))
+    snap_map = _stats_by_path(
+        spark.createDataFrame(snap.files.select(["physical_path", "record_count", "column_stats"]))
+    )
     assert snap_map == footer_map
 
 
@@ -143,7 +148,7 @@ def test_replacecommit_tombstones_old_files(spark, hudi_table):
 
 
 def snap_paths(src):
-    return src.get_current_snapshot(with_stats=False).files.select("physical_path").collect()
+    return model_rows(src.get_current_snapshot(with_stats=False).files, "physical_path")
 
 
 def test_uncovered_files_fall_back_to_footers(spark, hudi_table, caplog):
@@ -155,7 +160,9 @@ def test_uncovered_files_fall_back_to_footers(spark, hudi_table, caplog):
 
     src = HudiConversionSource(spark, hudi_table)
     snap = src.get_current_snapshot(with_stats=False)
-    listing = snap.files.select("physical_path", "size_bytes", "last_modified_ms")
+    listing = spark.createDataFrame(
+        snap.files.select(["physical_path", "size_bytes", "last_modified_ms"])
+    )
 
     import logging
 

@@ -24,6 +24,7 @@ from incubator_xtable_spark.sources.hudi_source import (
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
+from .model_tables import model_rows
 
 
 def _write_base(base: str, name: str, ids: list[int]) -> int:
@@ -122,7 +123,7 @@ def test_read_optimized_snapshot_excludes_logs(spark, mor_table):
 
     src = HudiConversionSource(spark, mor_table)
     snap = src.get_current_snapshot(with_stats=False)
-    inv_paths = sorted(os.path.basename(r["physical_path"]) for r in snap.files.collect())
+    inv_paths = sorted(os.path.basename(r["physical_path"]) for r in model_rows(snap.files))
     assert inv_paths == ["g1_0-0-0_001.parquet", "g2_0-0-0_001.parquet"]
 
 
@@ -131,8 +132,8 @@ def test_log_only_deltacommit_diffs_empty(spark, mor_table):
     file (HudiDataFileExtractor.java:300-310 newBaseFileAdded gate)."""
     src = HudiConversionSource(spark, mor_table)
     change = src.get_table_change_for_commit("20240101000002000")
-    assert change.files_added.count() == 0
-    assert change.files_removed.count() == 0
+    assert change.files_added.num_rows == 0
+    assert change.files_removed.num_rows == 0
 
 
 def test_compaction_swaps_base_file(spark, mor_table):
@@ -147,8 +148,8 @@ def test_compaction_swaps_base_file(spark, mor_table):
     )
     src = HudiConversionSource(spark, mor_table)
     change = src.get_table_change_for_commit("20240101000003000")
-    added = [os.path.basename(r["physical_path"]) for r in change.files_added.collect()]
-    removed = [os.path.basename(r["physical_path"]) for r in change.files_removed.collect()]
+    added = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_added)]
+    removed = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_removed)]
     assert added == ["g1_0-0-0_003.parquet"]
     assert removed == ["g1_0-0-0_001.parquet"]
 

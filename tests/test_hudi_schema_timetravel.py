@@ -12,9 +12,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.core import (
-    FILE_INVENTORY_SCHEMA,
+    FILE_INVENTORY_ARROW,
     InternalTable,
     TableFormat,
+    arrow_table,
 )
 from incubator_xtable_spark.sources.hudi_source import read_hudi_as_df
 from incubator_xtable_spark.targets.hudi_target import (
@@ -43,7 +44,7 @@ def test_asof_read_uses_commit_schema(spark, tmp_path):
         tgt.sync_schema(schema)
         tgt.sync_partition_spec([])
         tgt.sync_files_for_snapshot(
-            spark.createDataFrame(inv_rows, FILE_INVENTORY_SCHEMA)
+            arrow_table(inv_rows, FILE_INVENTORY_ARROW)
         )
         return tgt.complete_sync()
 

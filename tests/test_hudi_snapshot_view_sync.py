@@ -27,6 +27,7 @@ from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 
 from .hudi_logtable import avro_data_block, delete_block
 from .test_hudi_log_merge import AVRO_SCHEMA, _add_log, _commit, _write_base, mor_base  # noqa: F401
+from .model_tables import model_rows
 
 
 def _rows(df):
@@ -185,11 +186,11 @@ def test_shadow_materialization_idempotent(spark, tmp_path, mor_base):
     )
     src = HudiConversionSource(spark, mor_base, view="snapshot")
     snap1 = src.get_current_snapshot()
-    paths1 = sorted(r["physical_path"] for r in snap1.files.collect())
+    paths1 = sorted(r["physical_path"] for r in model_rows(snap1.files))
     mtimes = {p: os.path.getmtime(p) for p in paths1 if ".compacted-" in p}
     assert mtimes
     snap2 = HudiConversionSource(spark, mor_base, view="snapshot").get_current_snapshot()
-    paths2 = sorted(r["physical_path"] for r in snap2.files.collect())
+    paths2 = sorted(r["physical_path"] for r in model_rows(snap2.files))
     assert paths1 == paths2
     for p, m in mtimes.items():
         assert os.path.getmtime(p) == m  # untouched on re-materialize

@@ -30,6 +30,7 @@ from incubator_xtable_spark.targets.iceberg_target import (
     metadata_dir,
     read_table_metadata,
 )
+from .model_tables import model_rows
 
 
 def _write_positions(path: str, rows: list[tuple[str, int]]) -> None:
@@ -171,7 +172,7 @@ def test_snapshot_uses_purged_shadow(spark, deleted_table):
     d, victim = deleted_table
     src = IcebergConversionSource(spark, d)
     snap = src.get_current_snapshot()
-    rows = {r["physical_path"]: r for r in snap.files.collect()}
+    rows = {r["physical_path"]: r for r in model_rows(snap.files)}
     shadows = [p for p in rows if ".purged-" in p]
     assert len(shadows) == 1
     deleted_victim_rows = 3
@@ -185,8 +186,8 @@ def test_diff_swaps_shadow_for_original(spark, deleted_table):
     d, victim = deleted_table
     src = IcebergConversionSource(spark, d)
     change = src.get_table_change_for_commit("999")
-    added = [r["physical_path"] for r in change.files_added.collect()]
-    removed = [r["physical_path"] for r in change.files_removed.collect()]
+    added = [r["physical_path"] for r in model_rows(change.files_added)]
+    removed = [r["physical_path"] for r in model_rows(change.files_removed)]
     assert len(added) == 1 and ".purged-" in added[0]
     assert removed == [victim]
 

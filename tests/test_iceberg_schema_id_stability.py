@@ -153,9 +153,10 @@ def test_time_travel_reads_snapshot_schema(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
         InternalTable,
         TableFormat,
+        arrow_table,
     )
     from incubator_xtable_spark.sources.iceberg_source import read_iceberg_as_df
 
@@ -177,7 +178,7 @@ def test_time_travel_reads_snapshot_schema(spark, tmp_path):
         )
         tgt.sync_schema(schema)
         tgt.sync_partition_spec([])
-        tgt.sync_files_for_snapshot(spark.createDataFrame(inv_rows, FILE_INVENTORY_SCHEMA))
+        tgt.sync_files_for_snapshot(arrow_table(inv_rows, FILE_INVENTORY_ARROW))
         return tgt.complete_sync()
 
     def _inv(path, n):

@@ -26,12 +26,13 @@ from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import (
-    FILE_INVENTORY_SCHEMA,
+    FILE_INVENTORY_ARROW,
     InternalPartitionField,
     InternalTable,
     PartitionTransformType,
     SyncStatusCode,
     TableFormat,
+    arrow_table,
 )
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
@@ -48,6 +49,7 @@ from incubator_xtable_spark.targets.iceberg_target import (
     metadata_dir,
     read_table_metadata,
 )
+from .model_tables import model_rows
 
 _EPOCH = datetime.date(1970, 1, 1)
 
@@ -92,12 +94,12 @@ def _identity_partitioned_table(spark, d: str) -> None:
     )
     f1, n1 = _write_file(d, "gen1_a.parquet", [1, 2, 3], "2024-03-01")
     f2, n2 = _write_file(d, "gen1_b.parquet", [4, 5], "2024-03-02")
-    inv = spark.createDataFrame(
+    inv = arrow_table(
         [
             (f1, "PARQUET", os.path.getsize(f1), n1, None, {"region": "a"}, None),
             (f2, "PARQUET", os.path.getsize(f2), n2, None, {"region": "b"}, None),
         ],
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
     )
     target = IcebergConversionTarget(spark, d, table_name="evo")
     target.begin_sync(table)
@@ -221,10 +223,10 @@ def _evolve_add_day_field(spark, d: str, snapshot_id: int = 4242) -> None:
         fh.write(str(v + 1))
 
 
-def _pv_by_path(files_df) -> dict[str, dict]:
+def _pv_by_path(files) -> dict[str, dict]:
     return {
         os.path.basename(r["physical_path"]): dict(r["partition_values"] or {})
-        for r in files_df.collect()
+        for r in model_rows(files)
     }
 
 
@@ -372,7 +374,7 @@ def test_target_appends_new_spec_on_partition_change(spark, tmp_path):
             read_schema=schema,
             partition_fields=pfs,
         )
-        inv = spark.createDataFrame(inv_rows, FILE_INVENTORY_SCHEMA)
+        inv = arrow_table(inv_rows, FILE_INVENTORY_ARROW)
         target = IcebergConversionTarget(spark, d, table_name="evo_w")
         target.begin_sync(table)
         target.sync_metadata(TableSyncMetadata(last_instant_synced="1"))

@@ -16,12 +16,13 @@ import pytest
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.core import (
-    FILE_INVENTORY_SCHEMA,
+    FILE_INVENTORY_ARROW,
     InternalPartitionField,
     InternalTable,
     PartitionTransformType,
     SyncStatusCode,
     TableFormat,
+    arrow_table,
 )
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
@@ -77,12 +78,12 @@ def day_partitioned_iceberg(spark, tmp_path):
         read_schema=schema,
         partition_fields=pfs,
     )
-    inv = spark.createDataFrame(
+    inv = arrow_table(
         [
             (fp, "PARQUET", os.path.getsize(fp), n, None, {"ts_day": day}, None)
             for fp, day, n in files
         ],
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
     )
     target = IcebergConversionTarget(spark, d, table_name="ice_days")
     target.begin_sync(table)
@@ -154,9 +155,9 @@ def test_day_partition_values_survive_incremental(spark, day_partitioned_iceberg
     )
     src0 = IcebergConversionSource(spark, d, name="ice_days")
     table = src0.get_current_table()
-    inv = spark.createDataFrame(
+    inv = arrow_table(
         [(fp, "PARQUET", os.path.getsize(fp), 1, None, {"ts_day": "2024-03-05"}, None)],
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
     )
     tgt = IcebergConversionTarget(spark, d, table_name="ice_days")
     tgt.begin_sync(table)
@@ -165,7 +166,7 @@ def test_day_partition_values_survive_incremental(spark, day_partitioned_iceberg
     tgt.sync_partition_spec(table.partition_fields)
     from incubator_xtable_spark.model.core import TableChange
 
-    empty = spark.createDataFrame([], FILE_INVENTORY_SCHEMA)
+    empty = arrow_table([], FILE_INVENTORY_ARROW)
     tgt.sync_files_for_diff(
         TableChange(table=table, commit_id="2", files_added=inv, files_removed=empty)
     )

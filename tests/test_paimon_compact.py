@@ -44,7 +44,7 @@ def test_compact_kind_preserves_rows_and_empty_changelog(spark, tmp_path):
     src = PaimonConversionSource(spark, d)
     old_sid = src.latest_snapshot_id()
     before = _keys(read_paimon_as_df(spark, d))
-    assert src.get_current_snapshot().files.count() == 4
+    assert src.get_current_snapshot().files.num_rows == 4
 
     out = paimon_compact_small_files(spark, d, target_file_bytes=64 * 1024 * 1024)
     assert out["snapshot_id"] is not None
@@ -52,7 +52,7 @@ def test_compact_kind_preserves_rows_and_empty_changelog(spark, tmp_path):
 
     snap = src._snapshot(out["snapshot_id"])
     assert snap["commitKind"] == "COMPACT"
-    assert src.get_current_snapshot().files.count() == 1
+    assert src.get_current_snapshot().files.num_rows == 1
     assert _keys(read_paimon_as_df(spark, d)) == before
     # time travel: the pre-compact snapshot keeps the old layout
     assert _keys(read_paimon_as_df(spark, d, snapshot_id=old_sid)) == before

@@ -17,6 +17,7 @@ from incubator_xtable_spark.sources.paimon_source import (
 )
 
 from .paimon_testtable import PaimonTestTable
+from .model_tables import model_rows
 
 FIELDS = [("id", "INT"), ("label", "STRING"), ("part", "INT")]
 
@@ -47,7 +48,7 @@ def test_read_paimon_nonparquet_row_parity(spark, tmp_path, fmt):
     assert got == [(1, "a", 0), (2, "b", 0), (3, "c", 1), (4, None, 1)]
     # inventory tags carry the engine enum for every file
     snap = PaimonConversionSource(spark, t.base).get_current_snapshot()
-    fmts = {r["file_format"] for r in snap.files.collect()}
+    fmts = {r["file_format"] for r in model_rows(snap.files)}
     assert fmts == {"APACHE_ORC" if fmt == "orc" else "APACHE_AVRO"}
 
 

@@ -36,6 +36,7 @@ from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 
 from .paimon_testtable import PaimonTestTable
+from .model_tables import model_rows
 
 FIELDS = [
     ("id", "INT NOT NULL"),
@@ -145,20 +146,20 @@ def test_parse_paimon_type_shapes():
 def test_snapshot_partitioned(spark, part_table):
     src = PaimonConversionSource(spark, part_table.base)
     snap = src.get_current_snapshot()
-    files = snap.files.collect()
+    files = model_rows(snap.files)
     # 2 partitions in commit 1 + 1 partition in commit 2 = 3 data files
     assert len(files) == 3
     assert snap.version == "2"
     by_part = {}
     for f in files:
-        assert f.physical_path.startswith(part_table.base)
-        assert "/bucket-0/" in f.physical_path
-        assert f.file_format == "PARQUET"
-        assert f.size_bytes > 0
-        by_part.setdefault(f.partition_values["level"], []).append(f)
+        assert f["physical_path"].startswith(part_table.base)
+        assert "/bucket-0/" in f["physical_path"]
+        assert f["file_format"] == "PARQUET"
+        assert f["size_bytes"] > 0
+        by_part.setdefault(f["partition_values"]["level"], []).append(f)
     assert sorted(by_part) == ["ERROR", "INFO"]
-    assert sum(f.record_count for f in by_part["INFO"]) == 17
-    assert sum(f.record_count for f in by_part["ERROR"]) == 5
+    assert sum(f["record_count"] for f in by_part["INFO"]) == 17
+    assert sum(f["record_count"] for f in by_part["ERROR"]) == 5
     # table metadata
     t = snap.table
     assert t.table_format == TableFormat.PAIMON
@@ -184,10 +185,10 @@ def test_snapshot_unpartitioned(spark, tmp_path):
     t.append(_mkrows(0, 8, "INFO"))
     src = PaimonConversionSource(spark, t.base)
     snap = src.get_current_snapshot()
-    files = snap.files.collect()
+    files = model_rows(snap.files)
     assert len(files) == 1
-    assert files[0].partition_values is None
-    assert "/bucket-0/" in files[0].physical_path
+    assert files[0]["partition_values"] is None
+    assert "/bucket-0/" in files[0]["physical_path"]
     assert snap.table.partition_fields == []
     assert read_paimon_as_df(spark, t.base).count() == 8
 
@@ -208,24 +209,24 @@ def test_stats_extraction(spark, part_table):
     snap = src.get_current_snapshot()
     f = next(
         f
-        for f in snap.files.collect()
-        if f.partition_values["level"] == "ERROR"
+        for f in model_rows(snap.files)
+        if f["partition_values"]["level"] == "ERROR"
     )
     # rows 10..14: name null when id % 5 == 0 (id=10)
-    st = f.column_stats
+    st = f["column_stats"]
     from pyspark.sql import types as T
 
-    assert decode_stat(st["id"].min_json, T.IntegerType()) == 10
-    assert decode_stat(st["id"].max_json, T.IntegerType()) == 14
-    assert st["id"].null_count == 0
-    assert decode_stat(st["name"].min_json, T.StringType()) == "name-11"
-    assert st["name"].null_count == 1
-    assert decode_stat(st["score"].min_json, T.DoubleType()) == 5.0
-    assert decode_stat(st["score"].max_json, T.DoubleType()) == 7.0
+    assert decode_stat(st["id"]["min_json"], T.IntegerType()) == 10
+    assert decode_stat(st["id"]["max_json"], T.IntegerType()) == 14
+    assert st["id"]["null_count"] == 0
+    assert decode_stat(st["name"]["min_json"], T.StringType()) == "name-11"
+    assert st["name"]["null_count"] == 1
+    assert decode_stat(st["score"]["min_json"], T.DoubleType()) == 5.0
+    assert decode_stat(st["score"]["max_json"], T.DoubleType()) == 7.0
     # partition columns are stored in the data files too, so they carry
     # value stats like any other field
-    assert decode_stat(st["level"].min_json, T.StringType()) == "ERROR"
-    assert decode_stat(st["level"].max_json, T.StringType()) == "ERROR"
+    assert decode_stat(st["level"]["min_json"], T.StringType()) == "ERROR"
+    assert decode_stat(st["level"]["max_json"], T.StringType()) == "ERROR"
 
 
 def test_stats_cols_subset(spark, tmp_path):
@@ -234,8 +235,8 @@ def test_stats_cols_subset(spark, tmp_path):
     ).create()
     t.append(_mkrows(0, 6, "INFO"))
     src = PaimonConversionSource(spark, t.base)
-    f = src.get_current_snapshot().files.collect()[0]
-    assert set(f.column_stats.keys()) == {"id"}
+    f = model_rows(src.get_current_snapshot().files)[0]
+    assert set(f["column_stats"].keys()) == {"id"}
 
 
 def test_stats_typed_columns(spark, tmp_path):
@@ -257,15 +258,15 @@ def test_stats_typed_columns(spark, tmp_path):
     ]
     t.append(rows)
     src = PaimonConversionSource(spark, t.base)
-    st = src.get_current_snapshot().files.collect()[0].column_stats
+    st = model_rows(src.get_current_snapshot().files)[0]["column_stats"]
     from pyspark.sql import types as T
 
-    assert decode_stat(st["d"].min_json, T.DateType()) == datetime.date(2024, 1, 1)
-    assert decode_stat(st["d"].max_json, T.DateType()) == datetime.date(2024, 1, 4)
-    assert decode_stat(st["ts"].min_json, T.TimestampNTZType()) == datetime.datetime(
+    assert decode_stat(st["d"]["min_json"], T.DateType()) == datetime.date(2024, 1, 1)
+    assert decode_stat(st["d"]["max_json"], T.DateType()) == datetime.date(2024, 1, 4)
+    assert decode_stat(st["ts"]["min_json"], T.TimestampNTZType()) == datetime.datetime(
         2024, 1, 1, 12, 0, 0, 123456
     )
-    assert decode_stat(st["amt"].max_json, T.DecimalType(10, 2)) == Decimal("103.25")
+    assert decode_stat(st["amt"]["max_json"], T.DecimalType(10, 2)) == Decimal("103.25")
 
 
 # -- incremental -----------------------------------------------------------
@@ -274,25 +275,25 @@ def test_stats_typed_columns(spark, tmp_path):
 def test_commit_diff_append_and_overwrite(spark, part_table):
     src = PaimonConversionSource(spark, part_table.base)
     ch2 = src.get_table_change_for_commit("2")
-    assert ch2.files_added.count() == 1
-    assert ch2.files_removed.count() == 0
-    added = ch2.files_added.collect()[0]
-    assert added.partition_values["level"] == "INFO"
-    assert added.record_count == 7
+    assert ch2.files_added.num_rows == 1
+    assert ch2.files_removed.num_rows == 0
+    added = model_rows(ch2.files_added)[0]
+    assert added["partition_values"]["level"] == "INFO"
+    assert added["record_count"] == 7
 
     # overwrite the ERROR partition's file
     snap = src.get_current_snapshot()
     err_entry = next(
         e
         for e in src._merged_live_entries(src._snapshot(2))
-        if src._to_inventory([e], src._schema(0)).collect()[0].partition_values["level"]
+        if model_rows(src._to_inventory([e], src._schema(0)))[0]["partition_values"]["level"]
         == "ERROR"
     )
     sid, _ = part_table.overwrite([err_entry], _mkrows(100, 3, "ERROR"))
     ch3 = src.get_table_change_for_commit(str(sid))
-    assert ch3.files_added.count() == 1
-    assert ch3.files_removed.count() == 1
-    assert ch3.files_removed.collect()[0].partition_values["level"] == "ERROR"
+    assert ch3.files_added.num_rows == 1
+    assert ch3.files_removed.num_rows == 1
+    assert model_rows(ch3.files_removed)[0]["partition_values"]["level"] == "ERROR"
     # full view after overwrite
     rows = {r.id for r in read_paimon_as_df(spark, part_table.base).collect()}
     assert {100, 101, 102} <= rows
@@ -337,18 +338,18 @@ def test_primary_key_top_level_only(spark, tmp_path):
     _, e2 = t.append(_mkrows(5, 5, "INFO"), level=0)
     src = PaimonConversionSource(spark, t.base)
     # only level-0 files exist -> read-optimized view is empty
-    assert src.get_current_snapshot().files.count() == 0
+    assert src.get_current_snapshot().files.num_rows == 0
     # compaction merges to the top level (num-levels default 6 -> level 5)
     sid, _ = t.compact(e1 + e2, _mkrows(0, 10, "INFO"), top_level=5)
     snap = src.get_current_snapshot()
-    files = snap.files.collect()
+    files = model_rows(snap.files)
     assert len(files) == 1
-    assert files[0].record_count == 10
+    assert files[0]["record_count"] == 10
     # the compact commit's diff contains ONLY the top-level add (the
     # level-0 deletes are below the top level and are filtered)
     ch = src.get_table_change_for_commit(str(sid))
-    assert ch.files_added.count() == 1
-    assert ch.files_removed.count() == 0
+    assert ch.files_added.num_rows == 1
+    assert ch.files_removed.num_rows == 0
     assert read_paimon_as_df(spark, t.base).count() == 10
 
 
@@ -412,11 +413,11 @@ def test_schema_evolution(spark, tmp_path):
         "level",
     ]
     # both files inventory with per-write-schema stats intact
-    files = src.get_current_snapshot().files.collect()
+    files = model_rows(src.get_current_snapshot().files)
     assert len(files) == 2
-    by_count = {f.record_count: f for f in files}
-    assert "rank" not in by_count[6].column_stats  # old file: no rank stats
-    assert by_count[4].column_stats["rank"].null_count == 0
+    by_count = {f["record_count"]: f for f in files}
+    assert "rank" not in by_count[6]["column_stats"]  # old file: no rank stats
+    assert by_count[4]["column_stats"]["rank"]["null_count"] == 0
     # read: old rows surface NULL rank
     df = read_paimon_as_df(spark, t.base)
     got = {r["id"]: r["rank"] for r in df.collect()}
@@ -479,8 +480,8 @@ def test_timestamp_partition_key(spark, tmp_path):
     hr = datetime.datetime(2024, 3, 1, 12, 0)
     t.append([{"id": i, "hr": hr} for i in range(4)])
     src = PaimonConversionSource(spark, t.base)
-    f = src.get_current_snapshot().files.collect()[0]
-    assert f.partition_values["hr"] == "2024-03-01T12:00"
-    assert "/hr=2024-03-01T12:00/" in f.physical_path
-    assert os.path.exists(f.physical_path)
+    f = model_rows(src.get_current_snapshot().files)[0]
+    assert f["partition_values"]["hr"] == "2024-03-01T12:00"
+    assert "/hr=2024-03-01T12:00/" in f["physical_path"]
+    assert os.path.exists(f["physical_path"])
     assert read_paimon_as_df(spark, t.base).count() == 4

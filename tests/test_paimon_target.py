@@ -37,6 +37,7 @@ from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarge
 from incubator_xtable_spark.targets.paimon_target import PaimonConversionTarget
 
 from .conftest import SF_SMOKE
+from .model_tables import model_rows
 
 
 def _rows(df, order_cols):
@@ -96,8 +97,8 @@ def test_paimon_target_incremental_append(spark, source_dir):
     src = PaimonConversionSource(spark, source_dir)
     assert src.latest_snapshot_id() == 2
     ch = src.get_table_change_for_commit("2")
-    assert ch.files_added.count() >= 1
-    assert ch.files_removed.count() == 0
+    assert ch.files_added.num_rows >= 1
+    assert ch.files_removed.num_rows == 0
 
 
 def test_paimon_target_stats_roundtrip(spark, source_dir):
@@ -106,8 +107,8 @@ def test_paimon_target_stats_roundtrip(spark, source_dir):
         {TableFormat.PAIMON: PaimonConversionTarget(spark, source_dir, table_name="nation")},
     )
     snap = PaimonConversionSource(spark, source_dir).get_current_snapshot()
-    row = snap.files.filter(F.col("column_stats").isNotNull()).collect()[0]
-    stats = {k: v.asDict() for k, v in row["column_stats"].items()}
+    row = next(r for r in model_rows(snap.files) if r["column_stats"] is not None)
+    stats = row["column_stats"]
     assert "n_nationkey" in stats
     mn = json.loads(stats["n_nationkey"]["min_json"])
     mx = json.loads(stats["n_nationkey"]["max_json"])
@@ -146,7 +147,7 @@ def test_partitioned_parquet_to_paimon(spark, tmp_path):
 
     # manifest partitions decode back to the identity values
     snap = PaimonConversionSource(spark, base).get_current_snapshot()
-    pvs = {r["partition_values"]["o_year"] for r in snap.files.collect()}
+    pvs = {r["partition_values"]["o_year"] for r in model_rows(snap.files)}
     assert pvs and all(v.isdigit() for v in pvs)
 
 

@@ -7,7 +7,8 @@ partition values and its per-file stats, each checked against Spark.
   conflict raises on both sides.
 - Partition values: unescaped, ``__HIVE_DEFAULT_PARTITION__`` as null,
   equal to what ``spark.read.parquet`` gives, and read back the same from
-  every target.
+  every target, also where a path holds a ``%``, a space or a ``+``, and
+  through a Hudi table read as a source.
 - Stats: only top-level primitive columns carry them, so nested columns
   and a top-level ``a.b`` next to ``a`` sync into every target.
 """
@@ -28,6 +29,7 @@ import pytest
 from incubator_xtable_spark.model.core import InternalPartitionField
 from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
 
+from .model_tables import model_rows
 from .test_driver_fastpaths import _full_sync, _full_targets
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
@@ -256,7 +258,7 @@ def test_partition_values_equal_spark_read(spark, tmp_path, dirs):
     snap = ParquetConversionSource(
         spark, root, partition_fields=[InternalPartitionField("k")]
     ).get_current_snapshot()
-    by_path = {r["physical_path"]: r["partition_values"] for r in snap.files.collect()}
+    by_path = {r["physical_path"]: r["partition_values"] for r in model_rows(snap.files)}
     assert {i: by_path[p] for i, p in paths.items()} == {i: {"k": k} for i, k in spark_k.items()}
 
 
@@ -290,6 +292,38 @@ def test_default_partition_reads_back_as_null_from_every_target(spark, tmp_path)
         assert _rows(read(spark, root).select("id", "v", "k")) == expected, fmt
 
 
+def test_escaped_partition_values_read_back_from_every_target(spark, tmp_path):
+    """Escaped hive values put a ``%`` or a space in the data file paths;
+    each reader still joins its partition values onto the rows."""
+    root = str(tmp_path / "t")
+    _partitioned_table(root, ["k=a%3Ab", "k=50%25", "k=a b+c"])
+    expected = _rows(spark.read.parquet(root).select("id", "v", "k"))
+    assert '"k": "50%"' in "".join(expected)
+    source = ParquetConversionSource(spark, root, partition_fields=[InternalPartitionField("k")])
+    _full_sync(spark, source, _full_targets(spark, root, tuple(_readers())))
+    for fmt, read in _readers().items():
+        assert _rows(read(spark, root).select("id", "v", "k")) == expected, fmt
+
+
+def test_hudi_source_partition_values_equal_spark_read(spark, tmp_path):
+    """A Hudi table read as a source parses its hive partition paths as
+    Spark does, and a Delta table synced from it reads back its rows."""
+    from incubator_xtable_spark.sources.hudi_source import HudiConversionSource
+
+    root = str(tmp_path / "t")
+    paths = _partitioned_table(root, ["k=a%3Ab", "k=__HIVE_DEFAULT_PARTITION__"])
+    expected = _rows(spark.read.parquet(root).select("id", "v", "k"))
+    source = ParquetConversionSource(spark, root, partition_fields=[InternalPartitionField("k")])
+    _full_sync(spark, source, _full_targets(spark, root, ("hudi",)))
+    spark_k = {r["id"]: r["k"] for r in spark.read.parquet(root).collect()}
+    hudi = HudiConversionSource(spark, root)
+    files = model_rows(hudi.get_current_snapshot().files)
+    by_path = {r["physical_path"]: r["partition_values"] for r in files}
+    assert {i: by_path[p] for i, p in paths.items()} == {i: {"k": k} for i, k in spark_k.items()}
+    _full_sync(spark, hudi, _full_targets(spark, root, ("delta",)))
+    assert _rows(_readers()["delta"](spark, root).select("id", "v", "k")) == expected
+
+
 def test_nested_and_dotted_columns_sync_into_every_target(spark, tmp_path):
     """Struct, list and map columns get no stats; a top-level ``a.b``
     keeps its own, never folded into the column ``a``."""
@@ -308,7 +342,7 @@ def test_nested_and_dotted_columns_sync_into_every_target(spark, tmp_path):
         ),
     )
     source = ParquetConversionSource(spark, root)
-    (stats,) = [r["column_stats"] for r in source.get_current_snapshot().files.collect()]
+    (stats,) = [r["column_stats"] for r in model_rows(source.get_current_snapshot().files)]
     assert set(stats) == {"id", "a", "a.b"}
     assert (stats["a"]["min_json"], stats["a"]["max_json"]) == ("10", "20")
     assert (stats["a.b"]["min_json"], stats["a.b"]["max_json"]) == ("-1", "99")

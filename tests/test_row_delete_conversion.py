@@ -30,6 +30,7 @@ from incubator_xtable_spark.sources.iceberg_source import (
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
+from .model_tables import model_rows
 
 SCHEMA_STRING = json.dumps(
     {
@@ -124,13 +125,13 @@ def test_expose_snapshot_keeps_original_paths(spark, tmp_path):
     _dv_commit(base, 1, s1, [2, 3, 7])
     src = DeltaConversionSource(spark, base, expose_row_deletes=True)
     snap = src.get_current_snapshot()
-    rows = {os.path.basename(r["physical_path"]): r for r in snap.files.collect()}
+    rows = {os.path.basename(r["physical_path"]): r for r in model_rows(snap.files)}
     # original paths, physical record counts — no shadow rewrite
     assert set(rows) == {"part-0001.parquet", "part-0002.parquet"}
     assert rows["part-0001.parquet"]["record_count"] == 10
     assert not glob.glob(os.path.join(base, "*.purged-*"))
     # the delete set rides on row_deletes as an Iceberg-shaped parquet
-    rd = snap.row_deletes.collect()
+    rd = model_rows(snap.row_deletes)
     assert len(rd) == 1
     assert os.path.basename(rd[0]["data_file_path"]) == "part-0001.parquet"
     assert rd[0]["delete_count"] == 3
@@ -210,7 +211,7 @@ def test_default_mode_still_purges_shadows(spark, tmp_path):
     src = DeltaConversionSource(spark, base)
     snap = src.get_current_snapshot()
     assert snap.row_deletes is None
-    names = {os.path.basename(r["physical_path"]) for r in snap.files.collect()}
+    names = {os.path.basename(r["physical_path"]) for r in model_rows(snap.files)}
     assert any(".purged-" in n for n in names)
 
 
@@ -356,11 +357,11 @@ def test_iceberg_deletes_to_delta_dv(spark, tmp_path):
     d, victim = _iceberg_deleted_table(spark, tmp_path)
     src = IcebergConversionSource(spark, d, name="icedel", expose_row_deletes=True)
     snap = src.get_current_snapshot()
-    rd = snap.row_deletes.collect()
+    rd = model_rows(snap.row_deletes)
     assert len(rd) == 1 and rd[0]["data_file_path"] == victim
     assert rd[0]["delete_count"] == 3
     # data inventory references ORIGINAL files, not purged shadows
-    paths = {r["physical_path"] for r in snap.files.collect()}
+    paths = {r["physical_path"] for r in model_rows(snap.files)}
     assert victim in paths and not any(".purged-" in p for p in paths)
 
     res = ConversionController().sync(
@@ -685,10 +686,11 @@ def test_removed_dv_file_not_resurrected(spark, tmp_path):
     from pyspark.sql import types as T
 
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
-        ROW_DELETES_SCHEMA,
+        FILE_INVENTORY_ARROW,
+        ROW_DELETES_ARROW,
         InternalTable,
         TableChange,
+        arrow_table,
     )
     from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
 
@@ -722,7 +724,7 @@ def test_removed_dv_file_not_resurrected(spark, tmp_path):
             )
             for n in names
         ]
-        return spark.createDataFrame(rows, FILE_INVENTORY_SCHEMA)
+        return arrow_table(rows, FILE_INVENTORY_ARROW)
 
     def deletes(spec):
         rows = []
@@ -739,7 +741,7 @@ def test_removed_dv_file_not_resurrected(spark, tmp_path):
                 pos_path,
             )
             rows.append((abs_p, pos_path, len(positions), None))
-        return spark.createDataFrame(rows, ROW_DELETES_SCHEMA)
+        return arrow_table(rows, ROW_DELETES_ARROW)
 
     target = DeltaConversionTarget(spark, base)
 
@@ -795,10 +797,11 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
     from pyspark.sql import types as T
 
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
         InternalPartitionField,
         InternalTable,
         PartitionTransformType,
+        arrow_table,
     )
     from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
     from incubator_xtable_spark.targets.iceberg_target import (
@@ -831,9 +834,9 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
         read_schema=schema,
         partition_fields=pfs,
     )
-    inv = spark.createDataFrame(
+    inv = arrow_table(
         [(fp, "PARQUET", os.path.getsize(fp), 6, None, {"ts_day": "2024-03-01"}, None)],
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
     )
     target = IcebergConversionTarget(spark, d, table_name="ice_day_del")
     target.begin_sync(table)
@@ -927,12 +930,12 @@ def test_transform_partitioned_iceberg_row_deletes(spark, tmp_path):
 
     src = IcebergConversionSource(spark, d, expose_row_deletes=True)
     snap = src.get_current_snapshot()
-    rd = snap.row_deletes.collect()
+    rd = model_rows(snap.row_deletes)
     assert len(rd) == 1 and rd[0]["delete_count"] == 2
     # spec-native int (19783) converted back to the engine's string
     assert rd[0]["partition_values"] == {"ts_day": "2024-03-01"}
     # and it agrees with the data inventory's convention
-    f = snap.files.collect()[0]
+    f = model_rows(snap.files)[0]
     assert f["partition_values"] == {"ts_day": "2024-03-01"}
 
 

@@ -232,9 +232,10 @@ def test_iceberg_wide_schema_target_to_source(spark, tmp_path):
     import os
 
     from incubator_xtable_spark.model.core import (
-        FILE_INVENTORY_SCHEMA,
+        FILE_INVENTORY_ARROW,
         InternalTable,
         TableFormat,
+        arrow_table,
     )
     from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
     from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
@@ -251,7 +252,7 @@ def test_iceberg_wide_schema_target_to_source(spark, tmp_path):
     target.sync_metadata(TableSyncMetadata(last_instant_synced="1"))
     target.sync_schema(schema)
     target.sync_partition_spec([])
-    target.sync_files_for_snapshot(spark.createDataFrame([], FILE_INVENTORY_SCHEMA))
+    target.sync_files_for_snapshot(arrow_table([], FILE_INVENTORY_ARROW))
     target.complete_sync()
 
     extracted = IcebergConversionSource(spark, d).get_current_table().read_schema
