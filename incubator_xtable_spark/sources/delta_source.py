@@ -663,25 +663,26 @@ def _write_multipart_checkpoint(
     into N fragments named ``<v>.checkpoint.<i>.<n>.parquet`` (both
     tokens %010d, ``i`` 1-based). The spec lets actions land in any
     fragment as long as the set is complete, so the split is a plain
-    round-robin repartition — one write task per fragment, no driver
-    funnel. -> (total action count, fragment count) for
-    ``_last_checkpoint``'s size/parts fields."""
+    round-robin repartition — one write task per fragment. It runs from
+    one input partition (the state is driver-built): round-robin from
+    many small input partitions can leave a slot empty and overfill the
+    others past the per-file bound. The fragments are counted and named
+    from the part files actually written. -> (total action count,
+    fragment count) for ``_last_checkpoint``'s size/parts fields."""
     import glob
     import shutil
     import uuid as _uuid
 
     head = spark.createDataFrame(head_rows, _ACTION_SCHEMA) if head_rows else None
     out = head.unionByName(adds) if head is not None else adds
-    out = out.persist()
+    out = out.coalesce(1).persist()
     n_total = out.count()
     n_parts = max(1, -(-n_total // _MULTIPART_ACTIONS_PER_FILE))
     tmp_dir = os.path.join(log_dir, f".cp-tmp-{_uuid.uuid4().hex}")
-    (out.repartition(n_parts) if n_parts > 1 else out.coalesce(1)).write.parquet(tmp_dir)
+    (out.repartition(n_parts) if n_parts > 1 else out).write.parquet(tmp_dir)
     out.unpersist()
     parts = sorted(glob.glob(os.path.join(tmp_dir, "part-*.parquet")))
-    # repartition(n) emits exactly n part files; pin the invariant the
-    # fragment names declare rather than silently misnaming
-    assert len(parts) == n_parts, (len(parts), n_parts)
+    n_parts = len(parts)
     for i, part in enumerate(parts, start=1):
         final = os.path.join(
             log_dir, f"{version:020d}.checkpoint.{i:010d}.{n_parts:010d}.parquet"
@@ -1016,15 +1017,20 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
             _require_field_ids(pq_paths)
         # _fp/_ri attach per branch; ORC needs the pyarrow ordinal scan
         # only when this call actually joins on positions (Spark's ORC
-        # reader exposes no _metadata.row_index)
+        # reader exposes no _metadata.row_index). Spark scans report the
+        # quoted URI form, so their _fp goes through with_file_paths; the
+        # pyarrow scans already carry the listed paths
         fp = F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
         branches = []
         if pq_paths:
             branches.append(
-                spark.read.schema(T.StructType(data_fields))
-                .parquet(*pq_paths)
-                .withColumn("_fp", fp)
-                .withColumn("_ri", F.col("_metadata.row_index"))
+                with_file_paths(
+                    spark.read.schema(T.StructType(data_fields))
+                    .parquet(*pq_paths)
+                    .withColumn("_fp", fp)
+                    .withColumn("_ri", F.col("_metadata.row_index")),
+                    "_fp",
+                )
             )
         if orc_paths and positions is not None:
             from incubator_xtable_spark.sources.orc_scan import read_orc_rows
@@ -1036,10 +1042,13 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
             )
         elif orc_paths:
             branches.append(
-                spark.read.schema(T.StructType(data_fields))
-                .orc(list(orc_paths))
-                .withColumn("_fp", fp)
-                .withColumn("_ri", F.lit(None).cast("long"))
+                with_file_paths(
+                    spark.read.schema(T.StructType(data_fields))
+                    .orc(list(orc_paths))
+                    .withColumn("_fp", fp)
+                    .withColumn("_ri", F.lit(None).cast("long")),
+                    "_fp",
+                )
             )
         if avro_paths:
             from incubator_xtable_spark.sources.avro_scan import read_avro_rows
@@ -1097,11 +1106,17 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
         cdc_branches = []
         if cdc_pq:
             cdc_branches.append(
-                spark.read.schema(T.StructType(cdc_fields)).parquet(*cdc_pq).withColumn("_fp", fp)
+                with_file_paths(
+                    spark.read.schema(T.StructType(cdc_fields)).parquet(*cdc_pq).withColumn("_fp", fp),
+                    "_fp",
+                )
             )
         if cdc_orc:
             cdc_branches.append(
-                spark.read.schema(T.StructType(cdc_fields)).orc(list(cdc_orc)).withColumn("_fp", fp)
+                with_file_paths(
+                    spark.read.schema(T.StructType(cdc_fields)).orc(list(cdc_orc)).withColumn("_fp", fp),
+                    "_fp",
+                )
             )
         if cdc_avro:
             from incubator_xtable_spark.sources.avro_scan import read_avro_rows

@@ -1,10 +1,13 @@
-"""Hudi metadata-table column-stats index (Spark-native analog).
+"""Hudi metadata-table indexes: the source-side readers and the engine's
+LITE index writer.
 
 Reference parity (what, not how):
 - col_stats-first stats tier with per-file parquet-footer fallback and a
   warning for uncovered files      hudi/HudiFileStatsExtractor.java:99-186
-- availability gated on the table config listing the COLUMN_STATS
-  metadata partition                hudi/HudiFileStatsExtractor.java:101-105
+- listing from the metadata table's `files` partition
+                                   hudi/HudiDataFileExtractor.java:102-126
+- availability gated on the table config listing the metadata partition
+                                   hudi/HudiFileStatsExtractor.java:101-105
   (``hoodie.table.metadata.partitions`` — the real Hudi config key read by
   ``isMetadataPartitionAvailable``)
 - record count = max valueCount across top-level columns
@@ -12,22 +15,26 @@ Reference parity (what, not how):
 - target-side index maintenance on every commit (the write-client's
   metadata-table update)           hudi/HudiConversionTarget.java:267-470
 
-Layout deviation (documented): real Hudi stores the index as an MOR
-metadata table with HFile base files; this environment has no Hudi jars or
-HFile codec, so the index is a directory of per-commit parquet delta files
-``.hoodie/metadata/col_stats/<instant>.parquet`` with the SAME logical
-record model as HoodieMetadataColumnStats — keyed by (partition_path,
-file_name, column_name), latest-instant-wins merge, ``is_deleted``
-tombstones — replayed with a window function instead of the HFile merge.
-A real Hudi table's HFile index is detected (no parquet deltas present)
-and falls back to footers with a warning, which is exactly the reference's
-uncovered-file path.
+The readers decode the real layout: the metadata table is an MOR Hudi
+table whose partitions hold HFile base files plus unmerged log files,
+merged with the HoodieMetadataPayload rules (``model/hfile``,
+``model/hudi_metadata_records``). A table without decodable HFile slices
+gets its listing from the timeline and its stats from parquet footers.
 
-Scale notes: the index is read distributed (``spark.read.parquet`` over
-the delta files); the merge is one shuffle on (partition_path, file_name,
-column_name); delta rows per commit = files_touched x n_columns (metadata
-volume, ~1e-6 of data volume). Each commit's delta is one pyarrow file
-written from the rows the target already holds, then renamed into place.
+The engine's LITE index (the target's default ``metadata_index_format``)
+is a directory of per-commit parquet delta files
+``.hoodie/metadata/{col_stats,files}/<instant>.parquet`` carrying the
+logical HoodieMetadataColumnStats / file-list records; nothing in the
+engine reads it back, so a LITE-indexed table syncs from the timeline
+and footers like an unindexed one.
+
+Scale notes: the stats, listing and point-lookup readers run on the
+driver. The indexes are metadata-sized (files x columns records), and a
+Spark job over them paid seconds of fixed per-job cost where the decode
+takes milliseconds. The bulk record-index and secondary-index reads
+return DataFrames for Spark consumers, one task per file slice.
+Each LITE delta is one pyarrow file written from the rows the target
+already holds, then renamed into place.
 """
 
 from __future__ import annotations
@@ -38,13 +45,9 @@ import logging
 import os
 import uuid
 from struct import error as struct_error
-from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from incubator_xtable_spark.model.core import FILE_INVENTORY_SCHEMA
 
 log = logging.getLogger(__name__)
 
@@ -96,24 +99,6 @@ def col_stats_dir(base_path: str) -> str:
 
 def files_dir(base_path: str) -> str:
     return os.path.join(base_path, FILES_SUBDIR)
-
-
-def _delta_files(base_path: str) -> list[str]:
-    return sorted(glob.glob(os.path.join(col_stats_dir(base_path), "*.parquet")))
-
-
-def col_stats_available(base_path: str) -> bool:
-    """Mirror of isMetadataPartitionAvailable(COLUMN_STATS): the table
-    config must list the partition AND readable (parquet) delta files must
-    exist — a real-Hudi HFile index satisfies the first but not the
-    second, and correctly drops to the footer tier."""
-    from incubator_xtable_spark.sources.hudi_source import read_properties
-
-    props = read_properties(base_path)
-    parts = (props.get(METADATA_PARTITIONS_KEY) or "").split(",")
-    if COLUMN_STATS_PARTITION not in parts:
-        return False
-    return bool(_delta_files(base_path))
 
 
 def _latest_hfile_slices(d: str, as_of_instant: str | None = None) -> list[str]:
@@ -262,9 +247,8 @@ def lookup_col_stats_record(
     slice's log records for that key only. -> the merged
     HoodieMetadataRecord dict, or None when absent/tombstoned.
 
-    Driver-side by design: a point probe is metadata-cheap; the
-    DISTRIBUTED full-partition scan (hfile_stats_records) remains the
-    bulk-stats path."""
+    A point probe decodes one block; the full-partition decode
+    (hfile_stats_records) is the bulk-stats path."""
     from incubator_xtable_spark.model.hudi_hash import col_stats_index_key
     from incubator_xtable_spark.model.hudi_metadata_records import (
         point_lookup_slice_record,
@@ -296,164 +280,102 @@ def _safe_point_lookup(base: str, logs: list[str], key: str) -> dict | None:
 
 
 def hfile_stats_records(
-    spark: SparkSession,
-    base_path: str,
-    schema: T.StructType,
-    as_of_instant: str | None = None,
-) -> DataFrame:
-    """Decode a REAL Hudi column_stats partition (HFile base files) into
-    the engine's stat-record shape: one row per (file_name, column_name)
-    with min/max re-encoded by the data schema's column types.
-    ``as_of_instant`` replays the index AS OF a data-table instant
-    (base selection by embedded instant + log blocks by INSTANT_TIME
-    header) — the state a time-travel read may trust.
+    base_path: str, schema: T.StructType, as_of_instant: str | None = None
+) -> list[dict]:
+    """Decode a REAL Hudi column_stats partition (HFile base files plus
+    their unmerged logs) into the engine's stat records: one dict per live
+    (file, column) record with ``record_key``, ``file_name``,
+    ``column_name``, ``min_json`` / ``max_json`` (re-encoded by the data
+    schema's column types; None for a column the schema lacks),
+    ``null_count`` and ``value_count``. Tombstoned records drop out.
+    ``as_of_instant`` replays the index AS OF a data-table instant (base
+    selection by embedded instant + log blocks by INSTANT_TIME header) —
+    the state a time-travel read may trust."""
+    from incubator_xtable_spark.model.hudi_metadata_records import (
+        merged_metadata_slice_records,
+    )
+    from incubator_xtable_spark.model.stat_codec import encode_stat
 
-    Distribution: one task per file SLICE — base HFile plus its unmerged
-    log files (pure-python HFile/log/Avro codecs in Arrow batch workers —
-    index files are metadata-sized); the schema travels as JSON, values
-    re-encode executor-side. No driver funnel.
-    """
+    dtypes = {f.name: f.dataType for f in schema.fields}
+
+    def encode(wrapper, dtype):
+        if dtype is None:
+            return None
+        return encode_stat(coerce_hudi_wrapper_value((wrapper or {}).get("value"), dtype), dtype)
+
     slices, _ = _hfile_partition_state(
         os.path.join(base_path, HFILE_COL_STATS_SUBDIR), as_of_instant=as_of_instant
     )
-    schema_json = schema.json()
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out_schema = T.StructType(
-        [
-            T.StructField("record_key", T.StringType(), False),
-            T.StructField("file_name", T.StringType(), False),
-            T.StructField("column_name", T.StringType(), False),
-            T.StructField("min_json", T.StringType(), True),
-            T.StructField("max_json", T.StringType(), True),
-            T.StructField("null_count", T.LongType(), True),
-            T.StructField("value_count", T.LongType(), True),
-            T.StructField("is_deleted", T.BooleanType(), False),
-        ]
-    )
+    out = []
+    for base, logs in slices:
+        for key, rec in merged_metadata_slice_records(base, logs, as_of_instant):
+            cs = rec.get("ColumnStatsMetadata")
+            if cs is None or cs.get("isDeleted"):
+                continue
+            dtype = dtypes.get(cs.get("columnName"))
+            out.append(
+                {
+                    "record_key": key,
+                    "file_name": cs.get("fileName"),
+                    "column_name": cs.get("columnName"),
+                    "min_json": encode(cs.get("minValue"), dtype),
+                    "max_json": encode(cs.get("maxValue"), dtype),
+                    "null_count": cs.get("nullCount"),
+                    "value_count": cs.get("valueCount"),
+                }
+            )
+    return out
 
-    def _decode(batches):
-        import sys as _sys
 
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import datetime as _dt
-        import decimal as _decimal
-        import json as _json
-
-        import pandas as pd
-        from pyspark.sql import types as _T
-
-        from incubator_xtable_spark.model.hudi_metadata_records import (
-            merged_metadata_slice_records,
+def file_stats_from_hfile_index(base_path: str, schema: T.StructType) -> dict[str, tuple]:
+    """The decoded HFile records pivoted per file NAME (Hudi-native file
+    names are uuid-unique; the payload carries no partition path) ->
+    {file_name: (record_count, column_stats)}. record_count is the max
+    valueCount across columns; column_stats maps each column, in name
+    order, to its (min_json, max_json, null_count). A name holding two
+    records for one column (the same base name in two partitions of the
+    index) is ambiguous and left out."""
+    by_name: dict[str, dict[str, dict]] = {}
+    counts: dict[str, list[int]] = {}
+    clashing: set[str] = set()
+    for r in hfile_stats_records(base_path, schema):
+        name, col = r["file_name"], r["column_name"]
+        stats = by_name.setdefault(name, {})
+        if col in stats:
+            clashing.add(name)
+        stats[col] = {k: r[k] for k in ("min_json", "max_json", "null_count")}
+        if r["value_count"] is not None:
+            counts.setdefault(name, []).append(r["value_count"])
+    return {
+        name: (
+            max(counts[name]) if name in counts else None,
+            {c: stats[c] for c in sorted(stats)},
         )
-        from incubator_xtable_spark.model.stat_codec import encode_stat
-
-        data_schema = _T.StructType.fromJson(_json.loads(schema_json))
-        dtypes = {f.name: f.dataType for f in data_schema.fields}
-        cols = [f.name for f in out_schema.fields]
-
-        from incubator_xtable_spark.sources.hudi_metadata import (
-            coerce_hudi_wrapper_value as _coerce,
-        )
-        for pdf in batches:
-            rows = []
-            for p, logs_json in zip(pdf["hfile_path"], pdf["log_paths"]):
-                # base + unmerged log files resolve slice-side (r8: the
-                # log-bearing limitation is lifted; tombstoned records
-                # drop out in the merge)
-                for _key, rec in merged_metadata_slice_records(
-                    p, _json.loads(logs_json), as_of_instant
-                ):
-                    cs = rec.get("ColumnStatsMetadata")
-                    if cs is None:
-                        continue
-                    col = cs.get("columnName")
-                    dtype = dtypes.get(col)
-                    mn = _coerce((cs.get("minValue") or {}).get("value"), dtype)
-                    mx = _coerce((cs.get("maxValue") or {}).get("value"), dtype)
-                    rows.append(
-                        (
-                            _key,
-                            cs.get("fileName"),
-                            col,
-                            encode_stat(mn, dtype) if dtype is not None else None,
-                            encode_stat(mx, dtype) if dtype is not None else None,
-                            cs.get("nullCount"),
-                            cs.get("valueCount"),
-                            bool(cs.get("isDeleted")),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    listing = spark.createDataFrame(
-        [(p, json.dumps(logs)) for p, logs in slices],
-        "hfile_path STRING, log_paths STRING",
-    )
-    if listing.rdd.getNumPartitions() < len(slices):
-        listing = listing.repartition(len(slices))
-    return listing.mapInPandas(_decode, out_schema)
-
-
-def file_stats_from_hfile_index(
-    spark: SparkSession,
-    base_path: str,
-    schema: T.StructType,
-    exclude_file_names: Optional[set] = None,
-) -> DataFrame:
-    """Pivot the decoded HFile records into (file_name, record_count,
-    column_stats) — the REAL-Hudi twin of file_stats_from_index, keyed by
-    file NAME (Hudi-native file names are uuid-unique; the payload
-    carries no partition path). ``exclude_file_names``: base names the
-    caller knows are AMBIGUOUS (the same name under several partitions —
-    possible on converted parquet-dir layouts) — their records are
-    dropped here so they route to the footer tier instead of
-    cross-serving or colliding in the stats map."""
-    recs = hfile_stats_records(spark, base_path, schema).filter(~F.col("is_deleted"))
-    if exclude_file_names:
-        recs = recs.filter(~F.col("file_name").isin(sorted(exclude_file_names)))
-    stat_struct = F.struct(
-        F.col("min_json").alias("min_json"),
-        F.col("max_json").alias("max_json"),
-        F.col("null_count").alias("null_count"),
-    )
-    return (
-        recs.groupBy("file_name")
-        .agg(
-            F.max("value_count").alias("record_count"),
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct(F.col("column_name"), stat_struct)))
-            ).alias("column_stats"),
-        )
-        .select(
-            "file_name",
-            "record_count",
-            F.col("column_stats").cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType),
-        )
-    )
+        for name, stats in by_name.items()
+        if name not in clashing
+    }
 
 
 def stats_with_hfile_tier(
-    spark: SparkSession,
-    base_path: str,
-    listing: DataFrame,
-    schema: T.StructType,
-) -> DataFrame:
+    base_path: str, paths: list[str], schema: T.StructType
+) -> list[tuple]:
     """Index-first stats over a REAL Hudi metadata table (HFile base
-    files), parquet-footer recompute with a warning for uncovered files —
-    the same two-tier contract as stats_with_index_tier (ref
-    hudi/HudiFileStatsExtractor.java:99-186, which reads these HFiles via
-    the Hudi client; this engine decodes them directly)."""
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
+    files), parquet-footer recompute with a warning for uncovered files
+    (ref hudi/HudiFileStatsExtractor.java:99-186, which reads these HFiles
+    via the Hudi client; this engine decodes them directly). -> (path,
+    record_count, column_stats) per path of ``paths``, the shape of
+    ``parquet_source.footer_stat_rows``.
 
-    paths = listing.select("physical_path")
-    # base names shared by several listed paths are ambiguous for the
-    # name-keyed join — exclude them from the index tier (they fall to
-    # footers below) so one partition's stats can never serve another's
-    named = paths.withColumn("file_name", _basename(F.col("physical_path")))
-    dup_names = {
-        r["file_name"]
-        for r in named.groupBy("file_name").count().filter(F.col("count") > 1).collect()
-    }
+    The index is keyed by base name, so a name that several listed paths
+    share (possible on converted parquet-dir layouts) is ambiguous: those
+    files take footer stats, so one partition's stats never serve
+    another's."""
+    from collections import Counter
+
+    from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
+
+    names = [os.path.basename(p) for p in paths]
+    dup_names = {n for n, k in Counter(names).items() if k > 1}
     if dup_names:
         log.warning(
             "%d duplicate file base name(s) across partitions in %s; the "
@@ -461,42 +383,23 @@ def stats_with_hfile_tier(
             len(dup_names),
             base_path,
         )
-    idx = file_stats_from_hfile_index(
-        spark, base_path, schema, exclude_file_names=dup_names or None
-    )
-    covered = (
-        named
-        .join(idx, "file_name")
-        .select("physical_path", "record_count", "column_stats")
-    )
-    uncovered = paths.join(
-        covered.select("physical_path"), "physical_path", "left_anti"
-    )
-    n_missing = uncovered.count()
-    if n_missing:
+    index = file_stats_from_hfile_index(base_path, schema)
+    out, missing = [], []
+    for path, name in zip(paths, names):
+        hit = None if name in dup_names else index.get(name)
+        if hit is None:
+            missing.append(path)
+        else:
+            out.append((path, *hit))
+    if missing:
         log.warning(
             "%d file(s) had no column stats in the HFile metadata index for table %s; "
             "falling back to parquet footers",
-            n_missing,
+            len(missing),
             base_path,
         )
-        listing_missing = listing.join(uncovered, "physical_path")
-        return covered.unionByName(footer_stats(spark, listing_missing, schema))
-    return covered
-
-
-def files_index_available(base_path: str) -> bool:
-    """isMetadataPartitionAvailable(FILES) analog: the table config must
-    list the `files` partition AND readable parquet deltas must exist (a
-    real-Hudi HFile files index satisfies the first only — those route
-    through hfile_files_available / hfile_files_listing instead)."""
-    from incubator_xtable_spark.sources.hudi_source import read_properties
-
-    props = read_properties(base_path)
-    parts = (props.get(METADATA_PARTITIONS_KEY) or "").split(",")
-    if FILES_PARTITION not in parts:
-        return False
-    return bool(glob.glob(os.path.join(files_dir(base_path), "*.parquet")))
+        out.extend(footer_stat_rows(missing, schema))
+    return out
 
 
 def hfile_files_available(base_path: str) -> bool:
@@ -547,55 +450,27 @@ def hfile_files_head_instant(base_path: str) -> str | None:
     return best
 
 
-def hfile_files_listing(spark: SparkSession, base_path: str) -> DataFrame:
+def hfile_files_listing(base_path: str) -> list[tuple[str, str, int]]:
     """Decode a REAL Hudi `files` partition (HFile base files + unmerged
-    log files) into (partition_path, file_name, file_size) — one task per
-    file slice, pure-python HFile/log/avro codecs in Arrow batch workers;
-    the same distribution as hfile_stats_records. Tombstoned files drop
-    out in the HoodieMetadataPayload map merge."""
+    log files) into (partition_path, file_name, file_size) rows, on the
+    driver. Tombstoned files drop out in the HoodieMetadataPayload map
+    merge."""
+    from incubator_xtable_spark.model.hudi_metadata_records import (
+        NON_PARTITIONED_NAME,
+        merged_metadata_slice_records,
+    )
+
     slices, _ = _hfile_partition_state(files_dir(base_path))
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out_schema = T.StructType(
-        [
-            T.StructField("partition_path", T.StringType(), False),
-            T.StructField("file_name", T.StringType(), False),
-            T.StructField("file_size", T.LongType(), False),
-        ]
-    )
-
-    def _decode(batches):
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import json as _json
-
-        import pandas as pd
-
-        from incubator_xtable_spark.model.hudi_metadata_records import (
-            NON_PARTITIONED_NAME,
-            merged_metadata_slice_records,
-        )
-
-        for pdf in batches:
-            rows = []
-            for p, logs_json in zip(pdf["hfile_path"], pdf["log_paths"]):
-                for key, rec in merged_metadata_slice_records(p, _json.loads(logs_json)):
-                    if rec.get("type") != 2:
-                        continue
-                    part = "" if key == NON_PARTITIONED_NAME else key
-                    for fn, info in (rec.get("filesystemMetadata") or {}).items():
-                        if not info.get("isDeleted"):
-                            rows.append((part, fn, int(info["size"])))
-            yield pd.DataFrame(rows, columns=["partition_path", "file_name", "file_size"])
-
-    listing = spark.createDataFrame(
-        [(p, json.dumps(logs)) for p, logs in slices],
-        "hfile_path STRING, log_paths STRING",
-    )
-    if listing.rdd.getNumPartitions() < len(slices):
-        listing = listing.repartition(len(slices))
-    return listing.mapInPandas(_decode, out_schema)
+    out = []
+    for base, logs in slices:
+        for key, rec in merged_metadata_slice_records(base, logs):
+            if rec.get("type") != 2:
+                continue
+            part = "" if key == NON_PARTITIONED_NAME else key
+            for name, info in (rec.get("filesystemMetadata") or {}).items():
+                if not info.get("isDeleted"):
+                    out.append((part, name, int(info["size"])))
+    return out
 
 
 RECORD_INDEX_PARTITION = "record_index"
@@ -908,7 +783,6 @@ def coerce_hudi_wrapper_value(v, dtype):
 
 
 def prune_files_by_col_stats(
-    spark: SparkSession,
     base_path: str,
     rel_paths: list[str],
     schema: T.StructType,
@@ -942,10 +816,9 @@ def prune_files_by_col_stats(
     consumers with external coverage knowledge can call
     lookup_partition_stats directly.)
 
-    Scale: the index decode is the DISTRIBUTED hfile_stats_records scan
-    (one task per metadata file slice); only predicate columns' stat rows
-    (O(files x |bounds|), metadata-sized) collect to the driver, where
-    the file list already lives (this engine's listing posture)."""
+    Scale: the index decode is hfile_stats_records on the driver, where
+    the file list already lives; the index is metadata-sized (files x
+    columns records)."""
     if not bounds or not rel_paths:
         return set(rel_paths)
     if not hfile_col_stats_available(base_path, as_of_instant):
@@ -984,14 +857,8 @@ def prune_files_by_col_stats(
             expect[col_ids[c] + part_ids[part] + fid] = (rel, c)
             if unpartitioned:
                 expect[col_stats_key(c, fname)] = (rel, c)
-    stats = (
-        hfile_stats_records(spark, base_path, schema, as_of_instant)
-        .filter(F.col("column_name").isin(cols) & ~F.col("is_deleted"))
-        .select("record_key", "min_json", "max_json")
-        .collect()
-    )
     drop: set[str] = set()
-    for r in stats:
+    for r in hfile_stats_records(base_path, schema, as_of_instant):
         hit = expect.get(r["record_key"])
         if not hit:
             continue  # foreign or ambiguous key: no usable information
@@ -1064,15 +931,11 @@ def read_partition_stats(base_path: str) -> dict[str, dict[str, dict]]:
     return out
 
 
-def _basename(col):
-    return F.substring_index(col, "/", -1)
-
-
 def _write_index_delta_rows(records: list[tuple], fields: list[tuple], d: str, instant: str) -> bool:
     """One index delta file ``<d>/<instant>.parquet``: a pyarrow write to
     a temp name, then an atomic rename (the put-if-absent posture of the
-    timeline write), no Spark job. Both index readers load with an
-    explicit Spark schema. An empty ``records`` list still writes a 0-row
+    timeline write), no Spark job. The columns are typed from the
+    record schema, so an empty ``records`` list still writes a 0-row
     typed file (one delta per commit, named by the instant)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1162,127 +1025,3 @@ def write_files_delta_rows(
     return _write_index_delta_rows(
         recs, _arrow_index_fields(FILES_RECORD_SCHEMA), files_dir(base_path), instant
     )
-
-
-def read_files_index(spark: SparkSession, base_path: str) -> DataFrame:
-    """Merged live file listing from the `files` partition: latest record
-    per (partition_path, file_name) wins, deleted entries drop out — the
-    HoodieMetadataPayload merge as a window function. One shuffle on the
-    file key; input volume = files-touched-per-commit x commits (metadata
-    scale, compactable by rewriting deltas into one)."""
-    deltas = sorted(glob.glob(os.path.join(files_dir(base_path), "*.parquet")))
-    raw = spark.read.schema(FILES_RECORD_SCHEMA).parquet(*deltas)
-    w = Window.partitionBy("partition_path", "file_name").orderBy(
-        F.col("commit_instant").desc()
-    )
-    return (
-        raw.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & ~F.col("is_deleted"))
-        .drop("_rn", "is_deleted")
-    )
-
-
-def file_listing_from_index(spark: SparkSession, base_path: str) -> DataFrame:
-    """Inventory-shaped listing (physical_path, size_bytes) from the
-    `files` index — the listing-acceleration tier real Hudi readers get
-    from the metadata table instead of recursive fs listing."""
-    base = base_path.rstrip("/")
-    idx = read_files_index(spark, base_path)
-    abs_path = F.concat(
-        F.lit(base + "/"),
-        F.when(
-            F.col("partition_path") != "", F.concat(F.col("partition_path"), F.lit("/"))
-        ).otherwise(F.lit("")),
-        F.col("file_name"),
-    )
-    return idx.select(
-        abs_path.alias("physical_path"), F.col("file_size").alias("size_bytes")
-    )
-
-
-def read_col_stats_index(spark: SparkSession, base_path: str) -> DataFrame:
-    """Merged live view of the index: latest record per key wins, records
-    at/behind a newer file-level tombstone drop out (the MOR payload-merge
-    semantics of HoodieMetadataPayload, expressed as window + anti-filter)."""
-    raw = spark.read.schema(COL_STATS_RECORD_SCHEMA).parquet(*_delta_files(base_path))
-    tombs = (
-        raw.filter(F.col("is_deleted"))
-        .groupBy("partition_path", "file_name")
-        .agg(F.max("commit_instant").alias("del_instant"))
-    )
-    stats = raw.filter(~F.col("is_deleted"))
-    live = stats.join(tombs, ["partition_path", "file_name"], "left").filter(
-        F.col("del_instant").isNull() | (F.col("commit_instant") > F.col("del_instant"))
-    )
-    w = Window.partitionBy("partition_path", "file_name", "column_name").orderBy(
-        F.col("commit_instant").desc()
-    )
-    return (
-        live.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "del_instant", "is_deleted")
-    )
-
-
-def file_stats_from_index(spark: SparkSession, base_path: str) -> DataFrame:
-    """Pivot the merged index into the inventory stats encoding:
-    physical_path, record_count, column_stats (same shape/bytes as
-    parquet_source.footer_stats, so the two tiers are interchangeable)."""
-    idx = read_col_stats_index(spark, base_path)
-    base = base_path.rstrip("/")
-    abs_path = F.concat(
-        F.lit(base + "/"),
-        F.when(F.col("partition_path") != "", F.concat(F.col("partition_path"), F.lit("/"))).otherwise(
-            F.lit("")
-        ),
-        F.col("file_name"),
-    )
-    stat_struct = F.struct(
-        F.col("min_json").alias("min_json"),
-        F.col("max_json").alias("max_json"),
-        F.col("null_count").alias("null_count"),
-    )
-    return (
-        idx.withColumn("physical_path", abs_path)
-        .groupBy("physical_path")
-        .agg(
-            # recordCount = max valueCount across columns (ref :204-214)
-            F.max("value_count").alias("record_count"),
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct(F.col("column_name"), stat_struct)))
-            ).alias("column_stats"),
-        )
-        .select(
-            "physical_path",
-            "record_count",
-            F.col("column_stats").cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType),
-        )
-    )
-
-
-def stats_with_index_tier(
-    spark: SparkSession,
-    base_path: str,
-    listing: DataFrame,
-    schema: T.StructType,
-) -> DataFrame:
-    """The two-tier stats read of HudiFileStatsExtractor.addStatsToFiles:
-    index-first for covered files, parquet-footer recompute (with a
-    warning) for the rest. Output schema matches footer_stats."""
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
-
-    paths = listing.select("physical_path")
-    idx = file_stats_from_index(spark, base_path).join(paths, "physical_path")
-    uncovered = paths.join(idx.select("physical_path"), "physical_path", "left_anti")
-    n_missing = uncovered.count()
-    if n_missing:
-        log.warning(
-            "%d file(s) had no column stats in the metadata index for table %s; "
-            "falling back to parquet footers",
-            n_missing,
-            base_path,
-        )
-        listing_missing = listing.join(uncovered, "physical_path")
-        fb = footer_stats(spark, listing_missing, schema)
-        return idx.unionByName(fb)
-    return idx

@@ -17,15 +17,18 @@ Reference parity:
   footers for uncovered files)     hudi/HudiFileStatsExtractor.java:99-186
   (see sources/hudi_metadata.py)
 
-The timeline is small metadata (driver-side JSON, same as the reference's
-timeline reads); the file inventory and footer-stats extraction are
-distributed DataFrames.
+The timeline, the metadata-table indexes and the parquet footers are
+metadata-sized, so the snapshot and change inventories are built on the
+driver (as the reference's timeline and metadata-table reads are) and
+run no Spark job. Only MOR compaction shadows and the CDC derivation,
+which read data files, are Spark work.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Optional
 
 import pyarrow as pa
@@ -37,7 +40,6 @@ from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
     FILE_INVENTORY_ARROW,
-    FILE_INVENTORY_SCHEMA,
     InstantsForIncrementalSync,
     InternalPartitionField,
     InternalSnapshot,
@@ -46,26 +48,20 @@ from incubator_xtable_spark.model.core import (
     TableFormat,
     arrow_table,
     column,
-    local_frame,
-    table_rows,
 )
+from incubator_xtable_spark.model.file_formats import APACHE_ORC, PARQUET, from_extension
 from incubator_xtable_spark.model.files_diff import relativize, with_file_paths
 from incubator_xtable_spark.model.hive_partitions import partition_values
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 from incubator_xtable_spark.targets.hudi_target import (
     HOODIE_DIR,
-    file_id_of,
+    instant_to_epoch_ms,
     list_completed_instants,
     read_commit_metadata,
 )
 
-_LISTING_SCHEMA = T.StructType(
-    [
-        FILE_INVENTORY_SCHEMA["physical_path"],
-        FILE_INVENTORY_SCHEMA["size_bytes"],
-        FILE_INVENTORY_SCHEMA["last_modified_ms"],
-    ]
-)
+# a Hudi base-file name's embedded write instant (<fileId>_<token>_<instant>.<ext>)
+_NAME_INSTANT = re.compile(r"_([0-9]{14,17})\.[A-Za-z][^.]*$")
 
 HOODIE_META_FIELDS = (
     "_hoodie_commit_time",
@@ -103,6 +99,13 @@ def _archived_commits(base_path: str) -> list[tuple[str, str, dict]]:
             d = json.loads(line)
             out.append((d["instant"], d["action"], d["metadata"]))
     return sorted(out)
+
+
+def _epoch_ms(instant: str) -> Optional[int]:
+    try:
+        return instant_to_epoch_ms(instant)
+    except ValueError:
+        return None
 
 
 def is_log_file(path: str) -> bool:
@@ -516,171 +519,82 @@ class HudiConversionSource:
     def _indexed_listing(
         self, table: InternalTable, latest: str, with_stats: bool
     ) -> Optional[pa.Table]:
-        """Listing-acceleration tier: when the metadata-table `files`
-        partition is available AND covers the head instant, the live-file
-        listing comes from a distributed parquet read of the index deltas
-        instead of a driver-side timeline replay — the same acceleration
-        real Hudi readers get from the metadata table (ref
-        hudi/HudiConversionTarget.java:267-470 maintains it; readers gate
-        on hoodie.table.metadata.partitions). Returns None to fall back.
+        """The live-file listing from the metadata table's `files`
+        partition — HFile base files plus their logs, decoded on the
+        driver — when it covers the head instant: the reference's primary
+        listing path (ref hudi/HudiDataFileExtractor.java:102-126; readers
+        gate on hoodie.table.metadata.partitions). Returns None to fall
+        back to the timeline replay: no decodable HFile slices (the
+        engine's LITE parquet deltas are not read), or an index lagging
+        the head.
 
-        Scale: timeline replay is O(commits x files/commit) driver-side;
-        the index read is one distributed scan + one shuffle on the file
-        key, so a 10k-commit table lists in bounded driver memory."""
-        import glob as _glob
-
+        The index records carry no per-file commit instant, but Hudi
+        base-file NAMES embed their write instant
+        (<fileId>_<token>_<instant>.<ext>): last_modified_ms comes from
+        it, so inventory timestamps agree with the timeline replay; names
+        that don't parse (foreign layouts) take the index head instant."""
         from incubator_xtable_spark.sources.hudi_metadata import (
-            files_dir,
-            files_index_available,
             hfile_files_available,
             hfile_files_head_instant,
             hfile_files_listing,
-            read_files_index,
-        )
-        from incubator_xtable_spark.targets.hudi_target import instant_to_epoch_ms
-
-        base = self.base_path.rstrip("/")
-        abs_path = F.concat(
-            F.lit(base + "/"),
-            F.when(
-                F.col("partition_path") != "",
-                F.concat(F.col("partition_path"), F.lit("/")),
-            ).otherwise(F.lit("")),
-            F.col("file_name"),
         )
 
-        if files_index_available(self.base_path):
-            # freshness: the newest index delta must match the head instant —
-            # a lagging index (a writer that stopped maintaining it) falls
-            # back to timeline replay
-            deltas = sorted(
-                os.path.basename(p)[: -len(".parquet")]
-                for p in _glob.glob(os.path.join(files_dir(self.base_path), "*.parquet"))
+        if not hfile_files_available(self.base_path):
+            return None
+        head = hfile_files_head_instant(self.base_path)
+        if head != latest:
+            return None
+        head_ms = _epoch_ms(head)
+        if head_ms is None:
+            # an unparseable head instant (legacy 14-digit or foreign
+            # format) has no honest fallback timestamp — serve the
+            # listing from timeline replay instead of epoch-0 rows
+            return None
+        listing = []
+        for part, name, size in hfile_files_listing(self.base_path):
+            m = _NAME_INSTANT.search(name)
+            listing.append(
+                (
+                    os.path.join(self.base_path, part, name),
+                    size,
+                    (m and _epoch_ms(m.group(1))) or head_ms,
+                )
             )
-            if not deltas or deltas[-1] != latest:
-                return None
-            idx = read_files_index(self.spark, self.base_path)
-            # epoch ms per instant resolved driver-side (bounded by commit
-            # count) and joined in as a small map literal
-            instants = sorted({r["commit_instant"] for r in idx.select("commit_instant").distinct().collect()})
-            ms_map = F.create_map(
-                *[x for i in instants for x in (F.lit(i), F.lit(instant_to_epoch_ms(i)))]
-            )
-            listing = idx.select(
-                abs_path.alias("physical_path"),
-                F.col("file_size").cast("long").alias("size_bytes"),
-                ms_map[F.col("commit_instant")].alias("last_modified_ms"),
-            )
-            return self._listing_to_inventory(listing, table, with_stats)
-
-        if hfile_files_available(self.base_path):
-            # REAL-Hudi HFile `files` partition (r8): full-state base file
-            # at the head instant serves the listing; a lagging index falls
-            # back to timeline replay. The index records carry no per-file
-            # commit instant, but Hudi base-file NAMES embed their write
-            # instant (<fileId>_<token>_<instant>.<ext>) — derive
-            # last_modified_ms from it so inventory timestamps agree with
-            # the LITE-index and timeline-replay tiers (ADVICE r8); names
-            # that don't parse (foreign layouts, log files) fall back to
-            # the index snapshot instant.
-            head = hfile_files_head_instant(self.base_path)
-            if head != latest:
-                return None
-
-            def _ms(instant: str) -> int | None:
-                try:
-                    return instant_to_epoch_ms(instant)
-                except ValueError:
-                    return None
-
-            idx = hfile_files_listing(self.spark, self.base_path)
-            name_instant = F.regexp_extract(
-                F.col("file_name"), r"_([0-9]{14,17})\.[A-Za-z][^.]*$", 1
-            )
-            idx = idx.withColumn(
-                "_instant", F.when(name_instant != "", name_instant).otherwise(F.lit(head))
-            )
-            instants = sorted(
-                r["_instant"] for r in idx.select("_instant").distinct().collect()
-            )
-            head_ms = _ms(head)
-            if head_ms is None:
-                # an unparseable head instant (legacy 14-digit or foreign
-                # format) has no honest fallback timestamp — serve the
-                # listing from timeline replay instead of epoch-0 rows
-                return None
-            ms_map = F.create_map(
-                *[x for i in instants for x in (F.lit(i), F.lit(_ms(i) or head_ms))]
-            )
-            listing = idx.select(
-                abs_path.alias("physical_path"),
-                F.col("file_size").cast("long").alias("size_bytes"),
-                ms_map[F.col("_instant")].alias("last_modified_ms"),
-            )
-            return self._listing_to_inventory(listing, table, with_stats)
-
-        return None
+        return self._listing_to_inventory(listing, table, with_stats)
 
     def _to_inventory(self, rows: list[dict], table: InternalTable, with_stats: bool) -> pa.Table:
-        from incubator_xtable_spark.targets.hudi_target import instant_to_epoch_ms
-
-        if not rows:
-            return FILE_INVENTORY_ARROW.empty_table()
-        listing = local_frame(
-            self.spark,
-            [
-                (
-                    os.path.join(self.base_path, r["path"]),
-                    int(r["size"]),
-                    instant_to_epoch_ms(r["instant"]),
-                )
-                for r in rows
-            ],
-            _LISTING_SCHEMA,
-        )
+        listing = [
+            (
+                os.path.join(self.base_path, r["path"]),
+                int(r["size"]),
+                instant_to_epoch_ms(r["instant"]),
+            )
+            for r in rows
+        ]
         return self._listing_to_inventory(listing, table, with_stats)
 
     def _listing_to_inventory(
-        self, listing: DataFrame, table: InternalTable, with_stats: bool
+        self, listing: list[tuple[str, int, int]], table: InternalTable, with_stats: bool
     ) -> pa.Table:
-        """A Spark listing (physical_path, size_bytes, last_modified_ms)
-        with its stats joined in, drained once into an inventory table;
-        partition values are parsed from each path on the driver
-        (``model/hive_partitions``)."""
-        from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stats
+        """A driver listing [(physical_path, size_bytes, last_modified_ms)]
+        with its stats and partition values, as an inventory table.
 
-        if with_stats:
-            # three-tier stats read (HudiFileStatsExtractor.java:99-186):
-            # engine LITE col_stats index first, REAL-Hudi HFile index
-            # second (r7: decoded directly, no Hudi/HBase jars), parquet-
-            # footer recompute for uncovered files / unindexed tables
-            from incubator_xtable_spark.sources.hudi_metadata import (
-                col_stats_available,
-                hfile_col_stats_available,
-                stats_with_hfile_tier,
-                stats_with_index_tier,
-            )
+        Stats (HudiFileStatsExtractor.java:99-186): the REAL-Hudi HFile
+        column_stats index first (decoded directly, no Hudi/HBase jars),
+        parquet footers for uncovered files and unindexed tables.
+        Partition values are parsed from each path
+        (``model/hive_partitions``). The base-file format comes from
+        hoodie.properties (real Hudi supports HFILE/ORC base files too);
+        the extension wins per file, and an unsupported table format
+        refuses loudly instead of mis-tagging (ref model/storage/FileFormat)."""
+        from incubator_xtable_spark.sources.hudi_metadata import (
+            hfile_col_stats_available,
+            stats_with_hfile_tier,
+        )
+        from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stat_rows
 
-            if col_stats_available(self.base_path):
-                stats = stats_with_index_tier(
-                    self.spark, self.base_path, listing, data_schema(table)
-                )
-            elif hfile_col_stats_available(self.base_path):
-                stats = stats_with_hfile_tier(
-                    self.spark, self.base_path, listing, data_schema(table)
-                )
-            else:
-                stats = footer_stats(self.spark, listing, data_schema(table))
-            inv = listing.join(stats, "physical_path", "left")
-        else:
-            inv = listing.withColumn("record_count", F.lit(None).cast("long")).withColumn(
-                "column_stats", F.lit(None).cast(FILE_INVENTORY_SCHEMA["column_stats"].dataType)
-            )
-        # base-file format from hoodie.properties (real Hudi supports HFILE/
-        # ORC base files too); extension wins per file, unknown table formats
-        # refuse loudly instead of mis-tagging (ref model/storage/FileFormat)
-        from incubator_xtable_spark.model.file_formats import format_expr
-
+        if not listing:
+            return FILE_INVENTORY_ARROW.empty_table()
         declared = (
             read_properties(self.base_path).get("hoodie.table.base.file.format")
             or "PARQUET"
@@ -689,24 +603,31 @@ class HudiConversionSource:
             raise NotImplementedError(
                 f"Hudi base file format {declared} is not supported (PARQUET/ORC)"
             )
-        default_fmt = "PARQUET" if declared == "PARQUET" else "APACHE_ORC"
-        rows = table_rows(
-            inv.select(
-                "physical_path",
-                format_expr(F.col("physical_path"), default=default_fmt).alias("file_format"),
-                "size_bytes",
-                "record_count",
-                "last_modified_ms",
-                "column_stats",
-            ).toArrow()
-        )
-        for r in rows:
-            rel_dir = relativize(r["physical_path"], self.base_path).rpartition("/")[0]
-            values = partition_values(rel_dir)
-            r["partition_values"] = (
-                {pf.output_name: values.get(pf.output_name) for pf in table.partition_fields}
-                if table.partition_fields
-                else None
+        default_fmt = PARQUET if declared == "PARQUET" else APACHE_ORC
+        stats = {}
+        if with_stats:
+            paths = [path for path, _, _ in listing]
+            schema = data_schema(table)
+            if hfile_col_stats_available(self.base_path):
+                stat_rows = stats_with_hfile_tier(self.base_path, paths, schema)
+            else:
+                stat_rows = footer_stat_rows(paths, schema)
+            stats = {path: (n, cs) for path, n, cs in stat_rows}
+        rows = []
+        for path, size, modified_ms in listing:
+            record_count, column_stats = stats.get(path, (None, None))
+            values = partition_values(relativize(path, self.base_path).rpartition("/")[0])
+            rows.append(
+                (
+                    path,
+                    from_extension(path, default=default_fmt),
+                    size,
+                    record_count,
+                    modified_ms,
+                    {pf.output_name: values.get(pf.output_name) for pf in table.partition_fields}
+                    or None,
+                    column_stats,
+                )
             )
         return arrow_table(rows, FILE_INVENTORY_ARROW)
 
@@ -1008,7 +929,6 @@ def read_hudi_as_df(
         )
 
         kept = prune_files_by_col_stats(
-            spark,
             base_path,
             [r["path"] for r in rows],
             table.read_schema,
@@ -1034,9 +954,6 @@ def read_hudi_as_df(
     # listing itself)
     import pyarrow.parquet as _pq
 
-    from incubator_xtable_spark.model.file_formats import APACHE_ORC, PARQUET
-    from incubator_xtable_spark.model.file_formats import from_extension as _from_ext
-
     declared = (
         read_properties(base_path).get("hoodie.table.base.file.format") or "PARQUET"
     ).upper()
@@ -1060,7 +977,7 @@ def read_hudi_as_df(
     groups: dict[tuple, list[dict]] = {}
     for r in rows:
         abs_p = os.path.join(base_path, r["path"])
-        fmt = _from_ext(abs_p, default=default_fmt)
+        fmt = from_extension(abs_p, default=default_fmt)
         if fmt not in (PARQUET, APACHE_ORC):
             raise NotImplementedError(
                 f"read_hudi_as_df: data file {abs_p!r} has format {fmt}; "

@@ -75,8 +75,6 @@ from incubator_xtable_spark.model.paimon_binary import (
 from incubator_xtable_spark.model.stat_codec import encode_stat
 
 DEFAULT_PARTITION_NAME = "__DEFAULT_PARTITION__"  # CoreOptions partition.default-name
-# CoreOptions: num-levels defaults to num-sorted-run.compaction-trigger (5) + 1
-DEFAULT_NUM_LEVELS = 6
 
 FILE_KIND_ADD = 0
 FILE_KIND_DELETE = 1

@@ -29,14 +29,13 @@ from typing import Iterable, NamedTuple, Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
     DataLayoutStrategy,
     FILE_INVENTORY_ARROW,
-    FILE_INVENTORY_SCHEMA,
     InstantsForIncrementalSync,
     InternalPartitionField,
     InternalSnapshot,
@@ -44,7 +43,6 @@ from incubator_xtable_spark.model.core import (
     TableChange,
     TableFormat,
     arrow_table,
-    local_frame,
 )
 from incubator_xtable_spark.model.hive_partitions import infer_partitions
 from incubator_xtable_spark.model.stat_codec import encode_stat
@@ -393,13 +391,6 @@ def footer_schema(
 # Footer stats
 # ---------------------------------------------------------------------------
 
-_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("physical_path", T.StringType(), False),
-        T.StructField("record_count", T.LongType(), True),
-        T.StructField("column_stats", FILE_INVENTORY_SCHEMA["column_stats"].dataType, True),
-    ]
-)
 _NESTED = (T.StructType, T.ArrayType, T.MapType)
 
 
@@ -493,15 +484,3 @@ def footer_stat_rows(paths: Iterable[str], schema: T.StructType) -> list:
     count and no stats. ``schema`` types the stats (inventory encoding)."""
     types_by_name = {f.name: f.dataType for f in schema.fields}
     return _footer_stat_rows(((p, _read_footer(p)) for p in paths), types_by_name)
-
-
-def footer_stats(spark: SparkSession, listing: DataFrame, schema: T.StructType) -> DataFrame:
-    """``footer_stat_rows`` of ``listing``'s ``physical_path`` column as a
-    LocalRelation, for callers that join the stats in Spark. The listing
-    is collected first: no Spark job when it is itself driver-built
-    (``local_frame``).
-
-    Output: physical_path, record_count, column_stats (inventory encoding).
-    """
-    paths = [r[0] for r in listing.select("physical_path").collect()]
-    return local_frame(spark, footer_stat_rows(paths, schema), _STATS_SCHEMA)

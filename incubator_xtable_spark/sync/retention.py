@@ -668,7 +668,7 @@ def delta_optimize(
     inventory (metadata-sized); each partition's rewrite is one
     distributed read->coalesce->write job sized by the bin math; stats
     for the new files come from one driver-side footer pass
-    (parquet_source.footer_stats). ICT tables get a monotonic
+    (parquet_source.footer_stat_rows). ICT tables get a monotonic
     inCommitTimestamp. Returns {"removed": [...], "added": [...],
     "version": committed version or None when nothing qualified}.
     """
@@ -687,7 +687,7 @@ def delta_optimize(
         live_files_df,
         read_commit_ict,
     )
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
+    from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
 
     meta = latest_metadata(spark, base_path)
     if meta is None:
@@ -790,12 +790,11 @@ def delta_optimize(
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     part_names = set(meta["partitionColumns"] or [])
     data_fields = T.StructType([f for f in schema.fields if f.name not in part_names])
-    listing = spark.createDataFrame(
-        [(os.path.join(base_path, p),) for p, _ in added], "physical_path STRING"
-    )
     stats_by_path = {
-        r["physical_path"]: r
-        for r in footer_stats(spark, listing, data_fields).collect()
+        path: (n_records, col_stats)
+        for path, n_records, col_stats in footer_stat_rows(
+            [os.path.join(base_path, p) for p, _ in added], data_fields
+        )
     }
 
     now_ms = int(_time.time() * 1000)
@@ -830,13 +829,7 @@ def delta_optimize(
         )
     for rel, pv in added:
         absolute = os.path.join(base_path, rel)
-        st = stats_by_path.get(absolute)
-        col_stats = (
-            {k: v.asDict() for k, v in (st["column_stats"] or {}).items()}
-            if st is not None
-            else {}
-        )
-        n_records = int(st["record_count"]) if st is not None else None
+        n_records, col_stats = stats_by_path[absolute]
         lines.append(
             json.dumps(
                 {

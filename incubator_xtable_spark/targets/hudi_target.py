@@ -17,11 +17,14 @@ environment has no Hudi jars):
 - bookmark in commit extraMetadata model/metadata/TableSyncMetadata.java
 - instant format                   hudi/HudiInstantUtils.java:42-80
 
-Metadata-table col-stats index: every commit also appends a delta to the
-column-stats index under `.hoodie/metadata/col_stats/` and advertises it
-via `hoodie.table.metadata.partitions=column_stats` (see
-`sources/hudi_metadata.py`; mirrors HudiConversionTarget.java:267-470's
-write-client metadata update), so converted tables keep data-skipping.
+Metadata-table indexes: every commit also updates the `column_stats` and
+`files` metadata partitions and advertises them via
+`hoodie.table.metadata.partitions` (mirrors HudiConversionTarget.java:
+267-470's write-client metadata update). With
+``metadata_index_format="hfile"`` they take the real Hudi layout
+(`targets/hudi_metadata_index.py`), which Hudi readers and this engine's
+Hudi source read; the default writes the LITE per-commit parquet deltas
+(`sources/hudi_metadata.py`).
 
 Scale notes: the source hands over its snapshot or change as driver-held
 Arrow tables; this target reads their rows, diffs a snapshot
@@ -29,10 +32,14 @@ against the timeline's live file groups with ``model.files_diff``, and
 builds the write stats and both index deltas from the same rows (pyarrow
 appends, no Spark job).
 
-Known LITE limitations (documented, revisit if jars appear): the index is
-parquet-delta, not HFile MOR (no Hudi jars in env); no marker files; base
-files lack the five `_hoodie_*` meta columns (metadata-only conversion
-never rewrites data — readers that require meta columns need
+Known LITE limitations: the default index is parquet deltas, not HFile
+MOR, so real Hudi readers cannot open it, and nothing in this engine reads
+it back (its Hudi source lists a LITE-indexed table from the timeline and
+reads parquet footers). It is kept while the benchmark's
+``hudi_index`` setting passes ``metadata_index_format``; the HFile layout
+is the one index the engine reads. Also: no marker files; base files lack
+the five `_hoodie_*` meta columns (metadata-only conversion never rewrites
+data — readers that require meta columns need
 `hoodie.populate.meta.fields=false` semantics, which this target records
 in hoodie.properties).
 """
@@ -219,7 +226,7 @@ class HudiConversionTarget:
         # source uses its timeline-replay + footer tiers
         self.metadata_indexes = metadata_indexes
         # "parquet" (default): engine-internal LITE per-commit parquet
-        # deltas. "hfile": REAL Hudi metadata-table layout — HFile base
+        # deltas, which no engine reader reads. "hfile": REAL Hudi metadata-table layout — HFile base
         # files + per-commit delta log files + periodic compaction, with
         # real Hudi's hashed col-stats record keys (key_mode) — readable
         # by real Hudi AND by this engine's HFile read tier. See

@@ -200,18 +200,18 @@ def test_hudi_prune_replays_index_as_of_instant(spark, tmp_path):
     # the DIVERGENCE the replay exists for: at t1 part-0001 was 100..199,
     # so a (1050, inf) predicate excludes it AS OF t1 — while HEAD state
     # (which mixes the rewrite's 1000..1099) keeps it
-    kept_head = prune_files_by_col_stats(spark, d, rels, schema, {"id": (1050, None)})
+    kept_head = prune_files_by_col_stats(d, rels, schema, {"id": (1050, None)})
     kept_asof = prune_files_by_col_stats(
-        spark, d, rels, schema, {"id": (1050, None)}, as_of_instant=t1
+        d, rels, schema, {"id": (1050, None)}, as_of_instant=t1
     )
     assert "part-0001.parquet" in kept_head
     assert kept_asof == set()
     # contemporaneous bounds serve the as-of decision on every range
     assert prune_files_by_col_stats(
-        spark, d, rels, schema, {"id": (120, 150)}, as_of_instant=t1
+        d, rels, schema, {"id": (120, 150)}, as_of_instant=t1
     ) == {"part-0001.parquet"}
     assert prune_files_by_col_stats(
-        spark, d, rels, schema, {"id": (0, 50)}, as_of_instant=t1
+        d, rels, schema, {"id": (0, 50)}, as_of_instant=t1
     ) == {"part-0000.parquet"}
 
     # end-to-end: as_of + prune on an append-only history (no rewrite)

@@ -205,3 +205,83 @@ def test_vacuumed_remove_raises(spark, tmp_path):
 
     with pytest.raises(ValueError, match="vacuumed"):
         read_delta_cdf(spark, base, 1)
+
+
+def test_dv_cdf_on_escaped_partition_paths(spark, tmp_path):
+    """Deletion vectors on files whose paths Spark reports quoted (a `%`
+    in `k=a%3Ab`, a space in `k=a b+c`): a DV update's CDF is exactly the
+    newly deleted rows, and a DV'd add's CDF leaves its deleted rows out,
+    each with its partition value."""
+    import time
+
+    from incubator_xtable_spark.sources.delta_dv import write_dv_file
+
+    base = str(tmp_path / "t")
+    log = os.path.join(base, "_delta_log")
+    os.makedirs(log)
+    files = {"k=a%3Ab/f1.parquet": "a:b", "k=a b+c/f2.parquet": "a b+c"}
+    for i, rel in enumerate(files):
+        os.makedirs(os.path.join(base, os.path.dirname(rel)), exist_ok=True)
+        ids = pa.array(range(i * 10, i * 10 + 4), pa.int64())
+        pq.write_table(pa.table({"id": ids}), os.path.join(base, rel))
+    late = "k=a%3Ab/f3.parquet"
+    pq.write_table(pa.table({"id": pa.array(range(20, 24), pa.int64())}), os.path.join(base, late))
+    schema = json.dumps(
+        {
+            "type": "struct",
+            "fields": [
+                {"name": "id", "type": "long", "nullable": True, "metadata": {}},
+                {"name": "k", "type": "string", "nullable": True, "metadata": {}},
+            ],
+        }
+    )
+    now = int(time.time() * 1000)
+
+    def add(rel, value, dv=None):
+        action = {
+            "path": rel,
+            "partitionValues": {"k": value},
+            "size": os.path.getsize(os.path.join(base, rel)),
+            "modificationTime": now,
+            "dataChange": True,
+        }
+        if dv is not None:
+            action["deletionVector"] = dv
+        return {"add": action}
+
+    def commit(version, actions):
+        with open(os.path.join(log, f"{version:020d}.json"), "w", encoding="utf-8") as fh:
+            fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+
+    commit(
+        0,
+        [
+            {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                          "readerFeatures": ["deletionVectors"],
+                          "writerFeatures": ["deletionVectors"]}},
+            {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
+                          "schemaString": schema, "partitionColumns": ["k"],
+                          "configuration": {"delta.enableDeletionVectors": "true"}}},
+        ]
+        + [add(rel, value) for rel, value in files.items()],
+    )
+    deleted = {"k=a%3Ab/f1.parquet": [1], "k=a b+c/f2.parquet": [0, 2]}
+    commit(
+        1,
+        [
+            a
+            for rel, value in files.items()
+            for a in (
+                {"remove": {"path": rel, "deletionTimestamp": now, "dataChange": True}},
+                add(rel, value, write_dv_file(base, deleted[rel])),
+            )
+        ],
+    )
+    commit(2, [add(late, "a:b", write_dv_file(base, [0, 3]))])
+
+    def changes(version):
+        rows = read_delta_cdf(spark, base, version).select("id", "k", "_change_type").collect()
+        return sorted(tuple(r) for r in rows)
+
+    assert changes(1) == [(1, "a:b", "delete"), (10, "a b+c", "delete"), (12, "a b+c", "delete")]
+    assert changes(2) == [(21, "a:b", "insert"), (22, "a:b", "insert")]

@@ -297,9 +297,8 @@ def _spark_inventory(src, adds, table):
     """`add.*` rows -> inventory rows through the Spark projection, DV'd
     adds (unless exposed) as their purged shadows with footer stats."""
     from incubator_xtable_spark.model.file_formats import format_expr
-    from incubator_xtable_spark.model.core import local_frame
     from incubator_xtable_spark.sources.delta_dv import purged_path
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
+    from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
 
     base = src.base_path + "/"
     data_schema = src._data_schema(table)
@@ -321,15 +320,7 @@ def _spark_inventory(src, adds, table):
         abs_path.alias("abs_path"), "deletionVector", "partitionValues", "modificationTime"
     ).collect()
     shadows = [purged_path(r["abs_path"], r["deletionVector"].asDict()) for r in dv_list]
-    listing = local_frame(
-        adds.sparkSession,
-        [(p,) for p in shadows],
-        T.StructType([FILE_INVENTORY_SCHEMA["physical_path"]]),
-    )
-    stats = {
-        r["physical_path"]: (r["record_count"], r["column_stats"])
-        for r in _spark_rows(footer_stats(adds.sparkSession, listing, data_schema))
-    }
+    stats = {p: (n, cs) for p, n, cs in footer_stat_rows(shadows, data_schema)}
     dv_rows = [
         {
             "physical_path": sp,
@@ -990,6 +981,103 @@ def test_incremental_sync_issues_no_py4j_command(spark, delta_backlog, checkpoin
     assert sent == []
 
 
+_HUDI_SOURCE_LAYOUTS = {
+    "lite": {},
+    "hfile": {"metadata_index_format": "hfile"},
+    "unindexed": {"metadata_indexes": False},
+}
+
+
+def _hudi_commit(spark, root, layout):
+    """Sync the parquet files under ``root`` into its Hudi table (the
+    engine's Hudi target with the ``layout`` index settings)."""
+    from incubator_xtable_spark.model.core import InternalPartitionField, TableFormat
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+    from incubator_xtable_spark.sync.controller import ConversionController
+    from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
+
+    source = ParquetConversionSource(
+        spark, root, name="t", partition_fields=[InternalPartitionField("p")]
+    )
+    target = HudiConversionTarget(spark, root, table_name="t", **_HUDI_SOURCE_LAYOUTS[layout])
+    res = ConversionController().sync(source, {TableFormat.HUDI: target})
+    assert res[TableFormat.HUDI].status.value == "SUCCESS", res[TableFormat.HUDI].error
+
+
+@pytest.mark.parametrize("layout", list(_HUDI_SOURCE_LAYOUTS))
+def test_hudi_source_issues_no_py4j_command(spark, tmp_path, layout):
+    """The Hudi source builds its snapshot and change inventories on the
+    driver, from the timeline or the HFile metadata index plus parquet
+    footers: no Spark job and no py4j command, with the default LITE
+    index, the HFile index (here with log-bearing slices and one base
+    name in two partitions) and no index. A Hudi -> Delta + Iceberg FULL
+    sync, then an INCREMENTAL one, sends py4j nothing either."""
+    from incubator_xtable_spark.model.core import SyncMode, TableFormat
+    from incubator_xtable_spark.sources.hudi_metadata import (
+        HFILE_COL_STATS_SUBDIR,
+        _hfile_partition_state,
+        hfile_col_stats_available,
+        hfile_files_head_instant,
+    )
+    from incubator_xtable_spark.sources.hudi_source import HudiConversionSource
+    from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
+    from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
+    from incubator_xtable_spark.targets.hudi_target import list_completed_instants
+    from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
+
+    root = str(tmp_path / "table")
+    files = _write_data_files(root, 0, 8, 1_700_000_000)
+    for part in ("p=0", "p=1"):
+        path = os.path.join(root, part, "dup.parquet")
+        pq.write_table(pa.table({"id": pa.array([len(files)], pa.int64())}), path)
+        os.utime(path, (1_700_000_000, 1_700_000_000))
+        files.append(path)
+    _hudi_commit(spark, root, layout)
+    files += _write_data_files(root, 8, 4, 1_700_000_001)
+    _hudi_commit(spark, root, layout)
+    latest = list_completed_instants(root)[-1][0]
+    if layout == "hfile":
+        slices, ok = _hfile_partition_state(os.path.join(root, HFILE_COL_STATS_SUBDIR))
+        assert ok and any(logs for _, logs in slices)
+        assert hfile_col_stats_available(root) and hfile_files_head_instant(root) == latest
+
+    source = HudiConversionSource(spark, root)
+    with _spark_jobs(spark) as jobs, _py4j_commands(spark) as sent:
+        snapshot = source.get_current_snapshot()
+        change = source.get_table_change_for_commit(latest)
+    assert (jobs, sent) == ([0], [])
+    rows = model_rows(snapshot.files)
+    assert sorted(r["physical_path"] for r in rows) == sorted(files)
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    footers = {p: (n, cs) for p, n, cs in footer_stat_rows(files, schema)}
+    assert {r["physical_path"]: (r["record_count"], r["column_stats"]) for r in rows} == footers
+    assert sorted(r["physical_path"] for r in model_rows(change.files_added)) == sorted(files[-4:])
+
+    mirror = str(tmp_path / "mirror")
+
+    def to_delta_and_iceberg(mode):
+        from incubator_xtable_spark.sync.controller import ConversionConfig, ConversionController
+
+        targets = {
+            TableFormat.DELTA: DeltaConversionTarget(spark, mirror),
+            TableFormat.ICEBERG: IcebergConversionTarget(spark, mirror, table_name="t"),
+        }
+        with _py4j_commands(spark) as sent:
+            res = ConversionController(ConversionConfig(sync_mode=mode)).sync(
+                HudiConversionSource(spark, root), targets
+            )
+        assert {(r.status.value, r.mode.value) for r in res.values()} == {("SUCCESS", mode.value)}
+        assert sent == []
+
+    to_delta_and_iceberg(SyncMode.FULL)
+    files += _write_data_files(root, 12, 2, 1_700_000_002)
+    _hudi_commit(spark, root, layout)
+    to_delta_and_iceberg(SyncMode.INCREMENTAL)
+    expected = {os.path.normpath(p) for p in files}
+    assert _planned_files(spark, mirror, "delta") == expected
+    assert _planned_files(spark, mirror, "iceberg") == expected
+
+
 _FULL_FORMATS = ("delta", "iceberg", "hudi", "paimon")
 
 
@@ -1085,28 +1173,20 @@ def test_full_sync_issues_only_session_conf_reads(spark, tmp_path):
     assert all(re.search(r"spark\.sql\.(legacy\.)?parquet\.", c) for c in sent), sent
 
 
-def test_footer_stats_of_local_listing_runs_no_spark_job(spark, tmp_path):
-    """``footer_stats`` over a driver-built listing reads the footers on
-    the driver and returns a LocalRelation: no Spark job, before or after
-    the result is collected."""
-    from pyspark.sql import types as T
-
-    from incubator_xtable_spark.model.core import local_frame
-    from incubator_xtable_spark.sources.parquet_source import footer_stats
+def test_footer_stat_rows_run_no_spark_job(spark, tmp_path):
+    """``footer_stat_rows`` reads each file's footer on the driver: no
+    Spark job, one (path, record_count, column_stats) row per file."""
+    from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
 
     files = _write_data_files(str(tmp_path / "table"), 0, 80, 1_700_000_000)
-    listing = local_frame(
-        spark, [(p,) for p in files], T.StructType([T.StructField("physical_path", T.StringType())])
-    )
     schema = T.StructType([T.StructField("id", T.LongType())])
     with _spark_jobs(spark) as n:
-        stats = footer_stats(spark, listing, schema)
-        rows = {r["physical_path"]: r for r in stats.collect()}
+        rows = {p: (count, cs) for p, count, cs in footer_stat_rows(files, schema)}
     assert n[0] == 0
     assert set(rows) == set(files)
-    r = rows[files[3]]
-    assert r["record_count"] == 10
-    assert (r["column_stats"]["id"]["min_json"], r["column_stats"]["id"]["max_json"]) == ("30", "39")
+    count, cs = rows[files[3]]
+    assert count == 10
+    assert (cs["id"]["min_json"], cs["id"]["max_json"]) == ("30", "39")
 
 
 def _parquet_snapshot_source(base_cls, files_of):
@@ -1148,7 +1228,7 @@ def test_full_sync_of_uri_paths_is_a_no_op_diff(spark, tmp_path, fmt, scheme):
     second time, and every target records the files relative to its base
     (Delta add paths, Hudi write-stat paths and partitions, the Hudi
     index records)."""
-    from incubator_xtable_spark.sources.hudi_metadata import read_files_index
+    from incubator_xtable_spark.sources.hudi_metadata import files_dir
     from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
     from incubator_xtable_spark.targets.hudi_target import list_completed_instants, read_commit_metadata
     from incubator_xtable_spark.targets.iceberg_target import read_table_metadata
@@ -1185,7 +1265,11 @@ def test_full_sync_of_uri_paths_is_a_no_op_diff(spark, tmp_path, fmt, scheme):
         assert list(stats) == [""]
         assert sorted(s["path"] for s in stats[""]) == names
         assert read_commit_metadata(root, i2, a2)["partitionToWriteStats"] == {}
-        index = read_files_index(spark, root).collect()
+        index = [
+            r
+            for p in glob.glob(os.path.join(files_dir(root), "*.parquet"))
+            for r in pq.read_table(p).to_pylist()
+        ]
         assert sorted((r["partition_path"], r["file_name"]) for r in index) == [("", n) for n in names]
     elif fmt == "paimon":
         snap = PaimonConversionTarget(spark, root)._latest_snapshot()

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 import struct
 
 import pytest
@@ -30,6 +29,8 @@ from incubator_xtable_spark.model.hfile import (
     write_hfile,
     write_vlong,
 )
+
+from .model_tables import model_rows
 
 REAL_HFILE = (
     "/root/reference/demo/data/db/hudi_dimCustomer/.hoodie/metadata/files/"
@@ -149,32 +150,31 @@ def hudi_table(spark, tmp_path):
 
 
 def _footer_stats_map(spark, table_dir):
+    """(live paths, data schema, their footer stats as (path,
+    record_count, column_stats) triples)."""
     from incubator_xtable_spark.sources.hudi_source import HudiConversionSource
-    from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stats
+    from incubator_xtable_spark.sources.parquet_source import data_schema, footer_stat_rows
 
     src = HudiConversionSource(spark, table_dir)
     snap = src.get_current_snapshot(with_stats=True)
-    # materialize: tests delete the LITE index the lazy snapshot plan reads
-    listing = spark.createDataFrame(
-        snap.files.select(["physical_path", "size_bytes", "last_modified_ms"])
-    )
+    paths = snap.files.column("physical_path").to_pylist()
     schema = data_schema(src.get_current_table())
-    fb = footer_stats(spark, listing.select("physical_path"), schema)
-    return listing, schema, fb
+    return paths, schema, footer_stat_rows(paths, schema)
 
 
-def _stats_by_path(df):
-    out = {}
-    for r in df.collect():
-        cs = r["column_stats"] or {}
-        out[r["physical_path"]] = (
-            r["record_count"],
-            {k: (v["min_json"], v["max_json"], v["null_count"]) for k, v in cs.items()},
+def _stats_by_path(rows):
+    """{path: (record_count, {column: (min_json, max_json, null_count)})}
+    of (path, record_count, column_stats) triples."""
+    return {
+        path: (
+            count,
+            {k: (v["min_json"], v["max_json"], v["null_count"]) for k, v in (cs or {}).items()},
         )
-    return out
+        for path, count, cs in rows
+    }
 
 
-def _build_hfile_index_from_footers(spark, table_dir, listing, schema, footer_df):
+def _build_hfile_index_from_footers(spark, table_dir, paths, schema, footers):
     """Write the real-layout HFile index whose records restate the footer
     stats (what a real Hudi writer would have indexed)."""
     from incubator_xtable_spark.model.stat_codec import decode_stat
@@ -182,9 +182,9 @@ def _build_hfile_index_from_footers(spark, table_dir, listing, schema, footer_df
     from .hudi_hfile_fixture import col_stats_record, write_col_stats_hfile
 
     records = []
-    for r in footer_df.collect():
-        fname = os.path.basename(r["physical_path"])
-        for col, st in (r["column_stats"] or {}).items():
+    for path, count, cs in footers:
+        fname = os.path.basename(path)
+        for col, st in (cs or {}).items():
             dtype = schema[col].dataType
             records.append(
                 col_stats_record(
@@ -193,19 +193,11 @@ def _build_hfile_index_from_footers(spark, table_dir, listing, schema, footer_df
                     decode_stat(st["min_json"], dtype),
                     decode_stat(st["max_json"], dtype),
                     dtype,
-                    value_count=r["record_count"],
+                    value_count=count,
                     null_count=st["null_count"],
                 )
             )
     return write_col_stats_hfile(table_dir, records)
-
-
-def _drop_lite_index(table_dir):
-    """Remove the engine's LITE parquet index so the HFile tier is the one
-    selected (the table config keeps advertising column_stats)."""
-    from incubator_xtable_spark.sources.hudi_metadata import col_stats_dir
-
-    shutil.rmtree(col_stats_dir(table_dir), ignore_errors=True)
 
 
 def test_hfile_tier_equals_footer_tier(spark, hudi_table):
@@ -213,18 +205,15 @@ def test_hfile_tier_equals_footer_tier(spark, hudi_table):
     ColumnStat rows as the footer tier — byte-equal stat encodings, through
     the engine's own stats path."""
     from incubator_xtable_spark.sources.hudi_metadata import (
-        col_stats_available,
         hfile_col_stats_available,
         stats_with_hfile_tier,
     )
 
-    listing, schema, footers = _footer_stats_map(spark, hudi_table)
-    _build_hfile_index_from_footers(spark, hudi_table, listing, schema, footers)
-    _drop_lite_index(hudi_table)
-    assert not col_stats_available(hudi_table)
+    paths, schema, footers = _footer_stats_map(spark, hudi_table)
+    _build_hfile_index_from_footers(spark, hudi_table, paths, schema, footers)
     assert hfile_col_stats_available(hudi_table)
 
-    served = stats_with_hfile_tier(spark, hudi_table, listing, schema)
+    served = stats_with_hfile_tier(hudi_table, paths, schema)
     assert _stats_by_path(served) == _stats_by_path(footers)
 
 
@@ -233,14 +222,14 @@ def test_hfile_tier_selected_by_snapshot(spark, hudi_table):
     inventory's stats come from the HFile tier and equal footer stats."""
     from incubator_xtable_spark.sources.hudi_source import HudiConversionSource
 
-    listing, schema, footers = _footer_stats_map(spark, hudi_table)
-    _build_hfile_index_from_footers(spark, hudi_table, listing, schema, footers)
-    _drop_lite_index(hudi_table)
+    paths, schema, footers = _footer_stats_map(spark, hudi_table)
+    _build_hfile_index_from_footers(spark, hudi_table, paths, schema, footers)
 
     snap = HudiConversionSource(spark, hudi_table).get_current_snapshot(with_stats=True)
-    inv = spark.createDataFrame(
-        snap.files.select(["physical_path", "record_count", "column_stats"])
-    )
+    inv = [
+        (r["physical_path"], r["record_count"], r["column_stats"])
+        for r in model_rows(snap.files)
+    ]
     assert _stats_by_path(inv) == _stats_by_path(footers)
 
 
@@ -282,10 +271,9 @@ def test_typed_wrappers_roundtrip(spark, tmp_path):
     r = ConversionController().sync(source, {TableFormat.HUDI: target})
     assert r[TableFormat.HUDI].status == SyncStatusCode.SUCCESS, r[TableFormat.HUDI].error
 
-    listing, dschema, footers = _footer_stats_map(spark, d)
-    _build_hfile_index_from_footers(spark, d, listing, dschema, footers)
-    _drop_lite_index(d)
-    served = stats_with_hfile_tier(spark, d, listing, dschema)
+    paths, dschema, footers = _footer_stats_map(spark, d)
+    _build_hfile_index_from_footers(spark, d, paths, dschema, footers)
+    served = stats_with_hfile_tier(d, paths, dschema)
     assert _stats_by_path(served) == _stats_by_path(footers)
 
 
@@ -296,25 +284,23 @@ def test_tombstoned_file_falls_back_to_footer(spark, hudi_table):
     from incubator_xtable_spark.model.stat_codec import decode_stat
     from incubator_xtable_spark.sources.hudi_metadata import stats_with_hfile_tier
 
-    listing, schema, footers = _footer_stats_map(spark, hudi_table)
-    rows = footers.collect()
-    dead = os.path.basename(rows[0]["physical_path"])
+    paths, schema, footers = _footer_stats_map(spark, hudi_table)
+    dead = os.path.basename(footers[0][0])
     records = []
-    for r in rows:
-        fname = os.path.basename(r["physical_path"])
-        for col, st in (r["column_stats"] or {}).items():
+    for path, count, cs in footers:
+        fname = os.path.basename(path)
+        for col, st in (cs or {}).items():
             dtype = schema[col].dataType
             records.append(
                 col_stats_record(
                     fname, col,
                     decode_stat(st["min_json"], dtype), decode_stat(st["max_json"], dtype),
-                    dtype, value_count=r["record_count"], null_count=st["null_count"],
+                    dtype, value_count=count, null_count=st["null_count"],
                     is_deleted=(fname == dead),
                 )
             )
     write_col_stats_hfile(hudi_table, records)
-    _drop_lite_index(hudi_table)
-    served = stats_with_hfile_tier(spark, hudi_table, listing, schema)
+    served = stats_with_hfile_tier(hudi_table, paths, schema)
     assert _stats_by_path(served) == _stats_by_path(footers)
 
 
@@ -332,9 +318,8 @@ def test_undecodable_log_disables_hfile_tier(spark, hudi_table):
         hfile_col_stats_available,
     )
 
-    listing, schema, footers = _footer_stats_map(spark, hudi_table)
-    _build_hfile_index_from_footers(spark, hudi_table, listing, schema, footers)
-    _drop_lite_index(hudi_table)
+    paths, schema, footers = _footer_stats_map(spark, hudi_table)
+    _build_hfile_index_from_footers(spark, hudi_table, paths, schema, footers)
     assert hfile_col_stats_available(hudi_table)
     d = os.path.join(hudi_table, HFILE_COL_STATS_SUBDIR)
     torn = os.path.join(d, ".col-stats-0000-0_00000000000000010.log.1_0-1-1")
@@ -353,18 +338,17 @@ def test_latest_base_file_per_group_wins(spark, hudi_table):
     from incubator_xtable_spark.sources.hudi_metadata import stats_with_hfile_tier
     from .hudi_hfile_fixture import col_stats_record, write_col_stats_hfile
 
-    listing, schema, footers = _footer_stats_map(spark, hudi_table)
+    paths, schema, footers = _footer_stats_map(spark, hudi_table)
     # older slice: WRONG stats (zeroed counts) — must lose
     stale = []
-    for r in footers.collect():
-        fname = os.path.basename(r["physical_path"])
-        for col, st in (r["column_stats"] or {}).items():
+    for path, _count, cs in footers:
+        fname = os.path.basename(path)
+        for col, st in (cs or {}).items():
             dtype = schema[col].dataType
             stale.append(
                 col_stats_record(fname, col, None, None, dtype, value_count=0, null_count=0)
             )
     write_col_stats_hfile(hudi_table, stale, instant="00000000000000005")
-    _build_hfile_index_from_footers(spark, hudi_table, listing, schema, footers)  # instant ...10
-    _drop_lite_index(hudi_table)
-    served = stats_with_hfile_tier(spark, hudi_table, listing, schema)
+    _build_hfile_index_from_footers(spark, hudi_table, paths, schema, footers)  # instant ...10
+    served = stats_with_hfile_tier(hudi_table, paths, schema)
     assert _stats_by_path(served) == _stats_by_path(footers)

@@ -21,9 +21,8 @@ from pyspark.sql import functions as F
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.hudi_metadata import (
     HFILE_COL_STATS_SUBDIR,
-    col_stats_available,
+    col_stats_dir,
     files_dir,
-    files_index_available,
     hfile_col_stats_available,
     hfile_files_available,
     hfile_files_listing,
@@ -75,13 +74,13 @@ def test_written_index_selected_and_byte_equal_to_footers(spark, table_dir):
     path serves the written index byte-equal to the footer tier."""
     _sync(spark, table_dir)
     # hfile mode writes NO LITE parquet deltas; the HFile tier is selected
-    assert not col_stats_available(table_dir)
-    assert not files_index_available(table_dir)
+    assert not glob.glob(os.path.join(col_stats_dir(table_dir), "*.parquet"))
+    assert not glob.glob(os.path.join(files_dir(table_dir), "*.parquet"))
     assert hfile_col_stats_available(table_dir)
     assert hfile_files_available(table_dir)
 
-    listing, schema, footers = _footer_stats_map(spark, table_dir)
-    served = stats_with_hfile_tier(spark, table_dir, listing, schema)
+    paths, schema, footers = _footer_stats_map(spark, table_dir)
+    served = stats_with_hfile_tier(table_dir, paths, schema)
     assert _stats_by_path(served) == _stats_by_path(footers)
 
 
@@ -97,10 +96,7 @@ def test_files_hfile_listing_equals_timeline_replay(spark, table_dir):
         ).write.mode("append").parquet(table_dir)
         _sync(spark, table_dir, target)
 
-    idx = {
-        (r["partition_path"], r["file_name"]): int(r["file_size"])
-        for r in hfile_files_listing(spark, table_dir).collect()
-    }
+    idx = {(part, name): size for part, name, size in hfile_files_listing(table_dir)}
     fs = _fs_view(table_dir)
     assert {
         os.path.join(table_dir, p, f) if p else os.path.join(table_dir, f): sz
@@ -151,9 +147,7 @@ def test_incremental_merge_drops_replaced_files(spark, table_dir):
     after = _fs_view(table_dir)
     assert len(after) == 1 and not (set(after) & before)
 
-    listed = {
-        r["file_name"] for r in hfile_files_listing(spark, table_dir).collect()
-    }
+    listed = {name for _, name, _ in hfile_files_listing(table_dir)}
     assert listed == {os.path.basename(p) for p in after}
 
     # col_stats: the MERGED slice view (base + delta logs, r9) must
@@ -286,8 +280,8 @@ def test_typed_columns_roundtrip_through_written_index(spark, tmp_path):
     assert r[TableFormat.HUDI].status == SyncStatusCode.SUCCESS, r[TableFormat.HUDI].error
 
     assert hfile_col_stats_available(d)
-    listing, dschema, footers = _footer_stats_map(spark, d)
-    served = stats_with_hfile_tier(spark, d, listing, dschema)
+    paths, dschema, footers = _footer_stats_map(spark, d)
+    served = stats_with_hfile_tier(d, paths, dschema)
     assert _stats_by_path(served) == _stats_by_path(footers)
 
 
@@ -302,19 +296,19 @@ def test_hashed_point_lookups_resolve_byte_equal_to_footers(spark, table_dir):
     )
 
     _sync(spark, table_dir)
-    listing, schema, footers = _footer_stats_map(spark, table_dir)
+    paths, schema, footers = _footer_stats_map(spark, table_dir)
     dtypes = {f.name: f.dataType for f in schema.fields}
 
     n_probed = 0
-    for r in footers.collect():
-        rel = os.path.relpath(r["physical_path"], table_dir)
+    for path, count, stats in footers:
+        rel = os.path.relpath(path, table_dir)
         part, fname = os.path.dirname(rel), os.path.basename(rel)
-        for col, st in (r["column_stats"] or {}).items():
+        for col, st in (stats or {}).items():
             rec = lookup_col_stats_record(table_dir, part, fname, col)
             assert rec is not None, (fname, col)
             cs = rec["ColumnStatsMetadata"]
             assert cs["fileName"] == fname and cs["columnName"] == col
-            assert cs["valueCount"] == r["record_count"]
+            assert cs["valueCount"] == count
             assert cs["nullCount"] == st["null_count"]
             dtype = dtypes[col]
             got_min = encode_stat(_coerce((cs["minValue"] or {}).get("value"), dtype), dtype)
@@ -457,8 +451,8 @@ def test_hashed_and_readable_key_modes_serve_identical_stats(spark, table_dir):
     from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
 
     _sync(spark, table_dir)
-    listing, schema, footers = _footer_stats_map(spark, table_dir)
-    hashed = _stats_by_path(stats_with_hfile_tier(spark, table_dir, listing, schema))
+    paths, schema, footers = _footer_stats_map(spark, table_dir)
+    hashed = _stats_by_path(stats_with_hfile_tier(table_dir, paths, schema))
 
     shutil.rmtree(os.path.join(table_dir, ".hoodie"))
     _sync(
@@ -472,7 +466,7 @@ def test_hashed_and_readable_key_modes_serve_identical_stats(spark, table_dir):
             metadata_index_key_mode="readable",
         ),
     )
-    readable = _stats_by_path(stats_with_hfile_tier(spark, table_dir, listing, schema))
+    readable = _stats_by_path(stats_with_hfile_tier(table_dir, paths, schema))
     assert hashed == readable == _stats_by_path(footers)
 
 

@@ -3,7 +3,9 @@
 Mirrors the reference's two-tier stats read (HudiFileStatsExtractor.java:
 99-186): index-first when the table config advertises the COLUMN_STATS
 metadata partition, parquet-footer fallback per uncovered file — and the
-target-side index maintenance (HudiConversionTarget.java:267-470).
+target-side index maintenance (HudiConversionTarget.java:267-470). The
+engine's LITE index deltas are read here with pyarrow: the engine itself
+no longer reads them.
 """
 
 from __future__ import annotations
@@ -11,6 +13,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,11 +21,7 @@ from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.hudi_metadata import (
     COLUMN_STATS_PARTITION,
     METADATA_PARTITIONS_KEY,
-    col_stats_available,
     col_stats_dir,
-    file_stats_from_index,
-    read_col_stats_index,
-    stats_with_index_tier,
 )
 from incubator_xtable_spark.sources.hudi_source import (
     HudiConversionSource,
@@ -31,7 +30,7 @@ from incubator_xtable_spark.sources.hudi_source import (
 from incubator_xtable_spark.sources.parquet_source import (
     ParquetConversionSource,
     data_schema,
-    footer_stats,
+    footer_stat_rows,
 )
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.hudi_target import (
@@ -77,15 +76,54 @@ def hudi_table_ro(spark, tmp_path_factory):
     )
 
 
-def _stats_by_path(df):
-    out = {}
-    for r in df.collect():
-        cs = r["column_stats"] or {}
-        out[r["physical_path"]] = (
-            r["record_count"],
-            {k: (v["min_json"], v["max_json"], v["null_count"]) for k, v in cs.items()},
+def _stats_by_path(rows):
+    """{path: (record_count, {column: (min_json, max_json, null_count)})}
+    of (path, record_count, column_stats) triples."""
+    return {
+        path: (
+            count,
+            {k: (v["min_json"], v["max_json"], v["null_count"]) for k, v in (cs or {}).items()},
         )
+        for path, count, cs in rows
+    }
+
+
+def _lite_col_stats(d: str) -> dict:
+    """The LITE col-stats index deltas merged: the latest record per
+    (partition_path, file_name, column_name) wins, and a file's records
+    at or behind its newest tombstone drop out (the HoodieMetadataPayload
+    merge) -> {(partition_path, file_name, column_name): record}."""
+    records = sorted(
+        (r for p in glob.glob(os.path.join(col_stats_dir(d), "*.parquet"))
+         for r in pq.read_table(p).to_pylist()),
+        key=lambda r: r["commit_instant"],
+    )
+    tombstones = {}
+    for r in records:
+        if r["is_deleted"]:
+            tombstones[(r["partition_path"], r["file_name"])] = r["commit_instant"]
+    live = {}
+    for r in records:
+        gone = tombstones.get((r["partition_path"], r["file_name"]))
+        if not r["is_deleted"] and (gone is None or r["commit_instant"] > gone):
+            live[(r["partition_path"], r["file_name"], r["column_name"])] = r
+    return live
+
+
+def _lite_stats_by_path(d: str) -> dict:
+    """``_stats_by_path`` of the merged LITE index, record count = max
+    value count across columns."""
+    out: dict = {}
+    for (part, name, col), r in _lite_col_stats(d).items():
+        path = os.path.join(d, part, name)
+        count, cols = out.get(path, (None, {}))
+        cols[col] = (r["min_json"], r["max_json"], r["null_count"])
+        out[path] = (max(count or 0, r["value_count"]), cols)
     return out
+
+
+def _advertises_col_stats(d: str) -> bool:
+    return COLUMN_STATS_PARTITION in (read_properties(d).get(METADATA_PARTITIONS_KEY) or "").split(",")
 
 
 def test_index_written_and_advertised(spark, hudi_table_ro):
@@ -95,30 +133,24 @@ def test_index_written_and_advertised(spark, hudi_table_ro):
     instants = [i for i, _ in list_completed_instants(hudi_table_ro)]
     # one index delta per commit, named by the commit instant
     assert [os.path.splitext(os.path.basename(p))[0] for p in deltas] == instants
-    assert col_stats_available(hudi_table_ro)
 
 
 def test_index_stats_equal_footer_stats(spark, hudi_table_ro):
-    """The differential the verdict asked for: stats served from the index
-    byte-equal a footer recompute on the same live files."""
+    """The LITE index the target writes holds stats byte-equal to a
+    footer recompute on the same live files, and the snapshot (which
+    reads footers on a LITE-indexed table) serves those same stats."""
     src = HudiConversionSource(spark, hudi_table_ro)
     snap = src.get_current_snapshot(with_stats=True)
-    listing = spark.createDataFrame(
-        snap.files.select(["physical_path", "size_bytes", "last_modified_ms"])
-    )
+    rows = model_rows(snap.files)
+    paths = [r["physical_path"] for r in rows]
 
-    via_index = file_stats_from_index(spark, hudi_table_ro).join(
-        listing.select("physical_path"), "physical_path"
-    )
-    via_footers = footer_stats(spark, listing, data_schema(snap.table))
-
-    idx_map, footer_map = _stats_by_path(via_index), _stats_by_path(via_footers)
+    footer_map = _stats_by_path(footer_stat_rows(paths, data_schema(snap.table)))
+    idx_map = _lite_stats_by_path(hudi_table_ro)
     assert set(idx_map) == set(footer_map)
     assert idx_map == footer_map
 
-    # and the snapshot path (which routes through the index tier) agrees
     snap_map = _stats_by_path(
-        spark.createDataFrame(snap.files.select(["physical_path", "record_count", "column_stats"]))
+        (r["physical_path"], r["record_count"], r["column_stats"]) for r in rows
     )
     assert snap_map == footer_map
 
@@ -126,7 +158,7 @@ def test_index_stats_equal_footer_stats(spark, hudi_table_ro):
 def test_replacecommit_tombstones_old_files(spark, hudi_table):
     """A replace sync tombstones the replaced files out of the merged
     index view (MOR latest-wins + is_deleted semantics)."""
-    before_files = {r["file_name"] for r in read_col_stats_index(spark, hudi_table).collect()}
+    before_files = {name for _, name, _ in _lite_col_stats(hudi_table)}
 
     # rewrite the dataset => snapshot-as-diff produces adds + replacements
     spark.read.parquet(f"{SF_SMOKE}/nation.parquet").repartition(2).write.mode(
@@ -137,8 +169,7 @@ def test_replacecommit_tombstones_old_files(spark, hudi_table):
     res = ConversionController().sync(source, {TableFormat.HUDI: target})
     assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS, res[TableFormat.HUDI].error
 
-    merged = read_col_stats_index(spark, hudi_table)
-    live_files = {r["file_name"] for r in merged.collect()}
+    live_files = {name for _, name, _ in _lite_col_stats(hudi_table)}
     src = HudiConversionSource(spark, hudi_table)
     snap_files = {
         os.path.basename(r["physical_path"]) for r in snap_paths(src)
@@ -151,30 +182,6 @@ def snap_paths(src):
     return model_rows(src.get_current_snapshot(with_stats=False).files, "physical_path")
 
 
-def test_uncovered_files_fall_back_to_footers(spark, hudi_table, caplog):
-    """Delete the first commit's index delta: its files become uncovered,
-    the two-tier read warns and recomputes them from footers, and the
-    combined result still equals a full footer recompute."""
-    deltas = sorted(glob.glob(os.path.join(col_stats_dir(hudi_table), "*.parquet")))
-    os.remove(deltas[0])
-
-    src = HudiConversionSource(spark, hudi_table)
-    snap = src.get_current_snapshot(with_stats=False)
-    listing = spark.createDataFrame(
-        snap.files.select(["physical_path", "size_bytes", "last_modified_ms"])
-    )
-
-    import logging
-
-    with caplog.at_level(logging.WARNING, logger="incubator_xtable_spark.sources.hudi_metadata"):
-        two_tier = stats_with_index_tier(spark, hudi_table, listing, data_schema(snap.table))
-        two_tier_map = _stats_by_path(two_tier)
-    assert any("falling back to parquet footers" in m for m in caplog.messages)
-
-    footer_map = _stats_by_path(footer_stats(spark, listing, data_schema(snap.table)))
-    assert two_tier_map == footer_map
-
-
 def test_properties_upgrade_adds_partition_key(spark, hudi_table):
     """Tables created before the index existed get the availability flag
     appended on the next sync (upgrade path)."""
@@ -183,12 +190,12 @@ def test_properties_upgrade_adds_partition_key(spark, hudi_table):
         lines = [l for l in fh if not l.startswith(METADATA_PARTITIONS_KEY)]
     with open(props_path, "w", encoding="utf-8") as fh:
         fh.writelines(lines)
-    assert not col_stats_available(hudi_table)
+    assert not _advertises_col_stats(hudi_table)
 
     target = HudiConversionTarget(spark, hudi_table, table_name="nation")
     src = HudiConversionSource(spark, hudi_table)
     target.begin_sync(src.get_current_table())
-    assert col_stats_available(hudi_table)
+    assert _advertises_col_stats(hudi_table)
 
 
 # -- index-driven file pruning (r9: the data-skipping CONSUMER) --------------
@@ -242,18 +249,18 @@ def test_prune_files_by_col_stats_drops_provably_disjoint_files(spark, pruned_ta
     rels = [r["path"] for r in live_files_rows(d) if r["path"]]
     assert len(rels) == 3
     schema = HudiConversionSource(spark, d).get_current_table().read_schema
-    kept = prune_files_by_col_stats(spark, d, rels, schema, {"id": (120, 150)})
+    kept = prune_files_by_col_stats(d, rels, schema, {"id": (120, 150)})
     assert kept == {r for r in rels if "part-0001" in r}
     # open ranges
-    assert prune_files_by_col_stats(spark, d, rels, schema, {"id": (200, None)}) == {
+    assert prune_files_by_col_stats(d, rels, schema, {"id": (200, None)}) == {
         r for r in rels if "part-0002" in r
     }
-    assert prune_files_by_col_stats(spark, d, rels, schema, {"id": (None, 99)}) == {
+    assert prune_files_by_col_stats(d, rels, schema, {"id": (None, 99)}) == {
         r for r in rels if "part-0000" in r
     }
     # range spanning everything keeps everything; unknown column keeps all
-    assert prune_files_by_col_stats(spark, d, rels, schema, {"id": (None, None)}) == set(rels)
-    assert prune_files_by_col_stats(spark, d, rels, schema, {"nope": (1, 2)}) == set(rels)
+    assert prune_files_by_col_stats(d, rels, schema, {"id": (None, None)}) == set(rels)
+    assert prune_files_by_col_stats(d, rels, schema, {"nope": (1, 2)}) == set(rels)
 
 
 def test_read_hudi_with_prune_is_exact_and_skips_files(spark, pruned_table_ro):
@@ -291,7 +298,7 @@ def test_prune_keeps_files_without_index_coverage(spark, tmp_path):
     schema = HudiConversionSource(spark, d).get_current_table().read_schema
     # no col-stats partition at all -> no-op prune
     shutil.rmtree(os.path.join(d, ".hoodie", "metadata", "column_stats"))
-    assert prune_files_by_col_stats(spark, d, rels, schema, {"id": (120, 150)}) == set(rels)
+    assert prune_files_by_col_stats(d, rels, schema, {"id": (120, 150)}) == set(rels)
 
 
 def test_prune_refuses_mor_snapshot_mode(spark, pruned_table_ro):
@@ -338,7 +345,7 @@ def test_prune_keeps_file_whose_footer_lacks_column_stats(spark, tmp_path):
     assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS
     rels = [r["path"] for r in live_files_rows(d) if r["path"]]
     schema = HudiConversionSource(spark, d).get_current_table().read_schema
-    kept = prune_files_by_col_stats(spark, d, rels, schema, {"id": (500, 600)})
+    kept = prune_files_by_col_stats(d, rels, schema, {"id": (500, 600)})
     # the covered file provably excludes [500,600]; the stats-less file
     # must survive even though its rows also miss the range
     assert kept == {r for r in rels if "uncovered" in r}
@@ -391,7 +398,7 @@ def test_prune_duplicate_basenames_never_cross_serve(spark, tmp_path):
     assert len({os.path.basename(r) for r in rels}) == 1  # basenames collide
     schema = HudiConversionSource(spark, d).get_current_table().read_schema
     # range only bucket=0 holds: bucket=1's file must drop, bucket=0 stay
-    kept = prune_files_by_col_stats(spark, d, rels, schema, {"id": (0, 50)})
+    kept = prune_files_by_col_stats(d, rels, schema, {"id": (0, 50)})
     assert kept == {r for r in rels if r.startswith("bucket=0/")}
 
 
@@ -410,10 +417,7 @@ def test_stats_tier_serves_duplicate_basenames_via_footers(spark, tmp_path):
     )
     from incubator_xtable_spark.sources.hudi_metadata import stats_with_hfile_tier
     from incubator_xtable_spark.sources.hudi_source import HudiConversionSource
-    from incubator_xtable_spark.sources.parquet_source import (
-        ParquetConversionSource,
-        footer_stats,
-    )
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
     from incubator_xtable_spark.sync.controller import ConversionController
     from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
 
@@ -447,18 +451,12 @@ def test_stats_tier_serves_duplicate_basenames_via_footers(spark, tmp_path):
     schema = ST.StructType(
         [f for f in table.read_schema.fields if f.name != "bucket"]
     )
-    listing = spark.createDataFrame(
-        [(os.path.join(d, f"bucket={b}", "data.parquet"),) for b in (0, 1)],
-        "physical_path STRING",
-    )
-    served = stats_with_hfile_tier(spark, d, listing, schema)
-    truth = footer_stats(spark, listing, schema)
-    by_path = lambda df: {
-        r["physical_path"]: (
-            r["record_count"],
-            {c: (s["min_json"], s["max_json"]) for c, s in (r["column_stats"] or {}).items()},
-        )
-        for r in df.collect()
+    paths = [os.path.join(d, f"bucket={b}", "data.parquet") for b in (0, 1)]
+    served = stats_with_hfile_tier(d, paths, schema)
+    truth = footer_stat_rows(paths, schema)
+    by_path = lambda rows: {
+        path: (count, {c: (s["min_json"], s["max_json"]) for c, s in (cs or {}).items()})
+        for path, count, cs in rows
     }
     got, want = by_path(served), by_path(truth)
     assert got == want

@@ -1,7 +1,7 @@
 """Log-bearing REAL-Hudi metadata slices (VERDICT r7 #2): unmerged log
 files atop HFile base files MERGE through the engine's log-block codec
 (sources/hudi_log) + pure avro codec instead of dropping the tier — the
-HoodieMetadataPayload merge semantics restated executor-side.
+HoodieMetadataPayload merge semantics restated on the driver.
 
 Differentials: a base file carrying STALE stats corrected by a log block
 must serve footer-identical stats (merge-or-wrong, no fallback path can
@@ -37,7 +37,6 @@ from .hudi_hfile_fixture import (
     write_metadata_log_file,
 )
 from .test_hfile import (
-    _drop_lite_index,
     _footer_stats_map,
     _stats_by_path,
     hudi_table,  # noqa: F401 (fixture)
@@ -48,23 +47,23 @@ def _footer_records(footers, schema, *, distort: str | None = None):
     """(good records, records for `distort` file distorted) from the
     footer stats — distorted = min/max swapped, null_count inflated."""
     good, bad = [], []
-    for r in footers.collect():
-        fname = os.path.basename(r["physical_path"])
-        for col, st in (r["column_stats"] or {}).items():
+    for path, count, cs in footers:
+        fname = os.path.basename(path)
+        for col, st in (cs or {}).items():
             dtype = schema[col].dataType
             mn = decode_stat(st["min_json"], dtype)
             mx = decode_stat(st["max_json"], dtype)
             good.append(
                 col_stats_record(
                     fname, col, mn, mx, dtype,
-                    value_count=r["record_count"], null_count=st["null_count"],
+                    value_count=count, null_count=st["null_count"],
                 )
             )
             if fname == distort:
                 bad.append(
                     col_stats_record(
                         fname, col, mx, mn, dtype,  # swapped: provably stale
-                        value_count=r["record_count"] + 7,
+                        value_count=count + 7,
                         null_count=(st["null_count"] or 0) + 3,
                     )
                 )
@@ -79,12 +78,10 @@ def test_log_block_corrects_stale_base_stats(spark, hudi_table, block_kind):  # 
     the corrected records. Served stats MUST equal footers — only a real
     merge can produce that (a fallback would also differ: the base is
     present and well-formed)."""
-    listing, schema, footers = _footer_stats_map(spark, hudi_table)
-    rows = footers.collect()
-    victim = os.path.basename(rows[0]["physical_path"])
+    paths, schema, footers = _footer_stats_map(spark, hudi_table)
+    victim = os.path.basename(footers[0][0])
     good, bad = _footer_records(footers, schema, distort=victim)
     write_col_stats_hfile(hudi_table, bad)
-    _drop_lite_index(hudi_table)
 
     d = os.path.join(hudi_table, HFILE_COL_STATS_SUBDIR)
     # only the victim's corrected records ride the log (a commit's delta).
@@ -109,7 +106,7 @@ def test_log_block_corrects_stale_base_stats(spark, hudi_table, block_kind):  # 
     )
 
     assert hfile_col_stats_available(hudi_table)
-    served = stats_with_hfile_tier(spark, hudi_table, listing, schema)
+    served = stats_with_hfile_tier(hudi_table, paths, schema)
     assert _stats_by_path(served) == _stats_by_path(footers)
 
 
@@ -117,12 +114,10 @@ def test_delete_block_uncovers_file_for_footer_fallback(spark, hudi_table):  # n
     """A DELETE_BLOCK for one file's record keys drops them from the
     merged view; the uncovered file is served by the footer tier and the
     total still matches."""
-    listing, schema, footers = _footer_stats_map(spark, hudi_table)
-    rows = footers.collect()
-    victim = os.path.basename(rows[0]["physical_path"])
+    paths, schema, footers = _footer_stats_map(spark, hudi_table)
+    victim = os.path.basename(footers[0][0])
     good, _ = _footer_records(footers, schema)
     write_col_stats_hfile(hudi_table, good)
-    _drop_lite_index(hudi_table)
 
     d = os.path.join(hudi_table, HFILE_COL_STATS_SUBDIR)
     keys = [
@@ -133,7 +128,7 @@ def test_delete_block_uncovers_file_for_footer_fallback(spark, hudi_table):  # n
     write_metadata_log_file(d, [], block_kind="delete", delete_keys=keys)
 
     assert hfile_col_stats_available(hudi_table)
-    served = stats_with_hfile_tier(spark, hudi_table, listing, schema)
+    served = stats_with_hfile_tier(hudi_table, paths, schema)
     assert _stats_by_path(served) == _stats_by_path(footers)
 
 
@@ -186,10 +181,7 @@ def test_files_partition_log_merges_mutations(spark, tmp_path):
 
     assert hfile_files_available(d)
     assert hfile_files_head_instant(d) == "00000000000000020"
-    listed = {
-        (r["partition_path"], r["file_name"], r["file_size"])
-        for r in hfile_files_listing(spark, d).collect()
-    }
+    listed = set(hfile_files_listing(d))
     assert listed == {("", "b.parquet", 20), ("", "c.parquet", 30)}
 
 

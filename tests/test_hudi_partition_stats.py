@@ -350,10 +350,10 @@ def test_prune_across_partitions_via_hashed_keys(spark, tmp_path):
     rels = [r["path"] for r in live_files_rows(d) if r["path"]]
     assert len(rels) == 3
     schema = HudiConversionSource(spark, d).get_current_table().read_schema
-    kept = prune_files_by_col_stats(spark, d, rels, schema, {"id": (120, 150)})
+    kept = prune_files_by_col_stats(d, rels, schema, {"id": (120, 150)})
     assert kept == {r for r in rels if r.startswith("bucket=1/")}
-    assert prune_files_by_col_stats(spark, d, rels, schema, {"id": (None, None)}) == set(rels)
-    assert prune_files_by_col_stats(spark, d, rels, schema, {"id": (5000, None)}) == set()
+    assert prune_files_by_col_stats(d, rels, schema, {"id": (None, None)}) == set(rels)
+    assert prune_files_by_col_stats(d, rels, schema, {"id": (5000, None)}) == set()
 
 
 def test_prune_unaffected_by_stale_partition_stats(spark, tmp_path):
@@ -412,7 +412,7 @@ def test_prune_unaffected_by_stale_partition_stats(spark, tmp_path):
     rels = [r["path"] for r in live_files_rows(d) if r["path"]]
     assert any(r.startswith("bucket=7/") for r in rels)
     schema = HudiConversionSource(spark, d).get_current_table().read_schema
-    kept = prune_files_by_col_stats(spark, d, rels, schema, {"id": (120, 150)})
+    kept = prune_files_by_col_stats(d, rels, schema, {"id": (120, 150)})
     # file-level stats still prune correctly — and the new file SURVIVES
     assert kept == {
         r for r in rels if r.startswith("bucket=1/") or r.startswith("bucket=7/")
