@@ -294,23 +294,6 @@ def table_rows(table: pa.Table) -> list[dict]:
     return rows
 
 
-def local_frame(spark: Any, rows: Any, schema: T.StructType):
-    """A driver-built frame that Spark plans as a real ``LocalRelation``,
-    for rows that go on to Spark work or to a caller that wants a
-    DataFrame (never a model channel).
-
-    ``rows`` is a ``pyarrow.Table`` or a list of rows (dicts, tuples or
-    ``Row``s in ``schema`` field order). ``spark.createDataFrame(list)``
-    plans a ``LogicalRDD``, so every drain of it is a full Spark job with
-    defaultParallelism tasks; the Arrow route lands the rows in the
-    driver JVM instead. Deterministic filters and projections over the
-    result fold into a new ``LocalRelation`` at optimization, so
-    collecting them runs no job."""
-    if not isinstance(rows, pa.Table):
-        rows = arrow_table(rows, to_arrow_schema(schema))
-    return spark.createDataFrame(rows, schema)
-
-
 def column(name: str) -> Any:
     """The top-level column ``name``, quoted: a name such as ``a.b`` is
     one column, not field ``b`` of a struct ``a``."""

@@ -76,12 +76,9 @@ def validate_target(
 
     try:
         if table_format == "DELTA":
-            from incubator_xtable_spark.sources.delta_source import (
-                live_files_df,
-                read_delta_as_df,
-            )
+            from incubator_xtable_spark.sources.delta_source import live_adds, read_delta_as_df
 
-            paths = [r["path"] for r in live_files_df(spark, base_path).select("path").collect()]
+            paths = list(live_adds(base_path))
             abs_paths = [p if p.startswith("/") else os.path.join(base_path, p) for p in paths]
             reader = read_delta_as_df
         elif table_format == "HUDI":

@@ -21,12 +21,15 @@ Here a DV'd file is converted to a deterministic PURGED shadow file
 Hudi/Iceberg targets reference row-accurate data
 (delta/ITDeltaDeleteVectorConvert.java is the scenario source).
 
-Scale notes: DV decode + purge run executor-side via mapInPandas over the
-descriptor list (metadata-sized input, one task per DV'd file — only DV'd
-files are ever rewritten, the metadata-only fast path is untouched for the
-rest). Row-level application in `read_delta_as_df` anti-joins on
-(_metadata.file_path, _metadata.row_index), which distributes with the
-scan and never collects positions to the driver.
+Scale notes: the DV-side files (Delta DV files from row deletes,
+position-delete parquets from DVs) are written on the driver, one file
+per DV'd data file: their size follows the delete sets, which are
+metadata-sized next to the data. Purged shadows rewrite DATA files, so a
+batch over _DRIVER_PURGE_MAX_BYTES of pending data runs one Spark task
+per file; only DV'd files are ever rewritten. Row-level application in
+`read_delta_as_df` anti-joins on (_metadata.file_path,
+_metadata.row_index), decoded executor-side by `dv_positions_df`, which
+distributes with the scan and never collects positions to the driver.
 """
 
 from __future__ import annotations
@@ -214,6 +217,13 @@ def deserialize_dv_data(data: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def _dv_file_bytes(data: bytes) -> bytes:
+    """A DV file holding the one DV blob ``data``: the format version
+    byte, then int32-BE size, data, int32-BE CRC32(data)."""
+    crc = zlib.crc32(data) & 0xFFFFFFFF
+    return b"\x01" + struct.pack(">i", len(data)) + data + struct.pack(">I", crc)
+
+
 def write_dv_file(base_path: str, positions: Iterable[int], prefix: str = "") -> dict:
     """Write a 'u'-storage DV file and return its descriptor (the shape a
     Delta writer would put in add.deletionVector). Test/tooling utility."""
@@ -223,10 +233,7 @@ def write_dv_file(base_path: str, positions: Iterable[int], prefix: str = "") ->
     d = os.path.join(base_path, prefix) if prefix else base_path
     os.makedirs(d, exist_ok=True)
     with open(os.path.join(d, name), "wb") as fh:
-        fh.write(b"\x01")  # format version
-        fh.write(struct.pack(">i", len(data)))
-        fh.write(data)
-        fh.write(struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF))
+        fh.write(_dv_file_bytes(data))
     card = len(set(int(p) for p in positions))
     return {
         "storageType": "u",
@@ -441,158 +448,60 @@ def delete_positions_path(path: str, desc: dict) -> str:
     return f"{stem}.deletes-{h}.parquet"
 
 
-def write_delete_position_files(
-    spark: SparkSession, base_path: str, dv_adds: list[dict]
-) -> None:
-    """Materialize Iceberg-spec position-delete files for DV'd adds,
-    executor-side: one task per (file, DV), idempotent. Each output
-    parquet holds (file_path STRING, pos BIGINT) sorted by pos — directly
-    referenceable from an Iceberg v2 content=1 manifest, so conversion
-    never rewrites data bytes (contrast write_purged_files above)."""
-    if not dv_adds:
-        return
-    import json as _json
-
-    rows = [
-        (
-            r["abs_path"],
-            _json.dumps(r["deletionVector"]),
-            delete_positions_path(r["abs_path"], r["deletionVector"]),
-        )
-        for r in dv_adds
-    ]
-    # driver tier (r14 optimization): the positions payload is bounded by
-    # the DVs' own serialized size, so when the whole batch is metadata-
-    # sized the per-file write runs inline — a Spark job would cost a
-    # fixed Python-worker round trip to move a few KB. The SAME loop body
-    # runs on both tiers (byte-identical outputs); big DV sets keep the
-    # one-task-per-file distributed path.
-    if sum(int(r["deletionVector"].get("sizeInBytes") or 0) for r in dv_adds) <= _DRIVER_DV_MAX_BYTES:
-        for src, dv_json, out in rows:
-            _write_one_delete_file(base_path, src, dv_json, out)
-        return
-    df = spark.createDataFrame(rows, "abs_path STRING, dv_json STRING, out_path STRING")
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    bp = base_path
-
-    def _write(batches: Iterator["object"]) -> Iterator["object"]:
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import pandas as pd
-
-        from incubator_xtable_spark.sources.delta_dv import _write_one_delete_file
-
-        for pdf in batches:
-            outs = []
-            for src, dv_json, out in zip(pdf["abs_path"], pdf["dv_json"], pdf["out_path"]):
-                _write_one_delete_file(bp, src, dv_json, out)
-                outs.append(out)
-            yield pd.DataFrame({"out_path": outs})
-
-    df.repartition(len(rows)).mapInPandas(_write, "out_path STRING").count()
-
-
-# Metadata-sized DV batches (total serialized DV bytes at or under this)
-# write their position files inline on the driver; bigger sets keep the
-# one-task-per-file distributed tier. Positions scale with DV bytes, so
-# the gate bounds driver work in BYTES, never SF; 0 disables the driver
-# tier.
-_DRIVER_DV_MAX_BYTES = 4 * 1024 * 1024
-
-
-def _write_one_delete_file(base_path: str, src: str, dv_json: str, out: str) -> None:
-    """The per-(file, DV) positions-parquet write both tiers share:
-    decode, sort, write (file_path, pos), atomic replace, idempotent."""
-    import json as _j
-
+def write_delete_position_files(base_path: str, dv_adds: list[dict]) -> None:
+    """Materialize Iceberg-spec position-delete files for DV'd adds on the
+    driver: one file per (file, DV), idempotent. Each output parquet holds
+    (file_path STRING, pos BIGINT) sorted by pos — directly referenceable
+    from an Iceberg v2 content=1 manifest, so conversion never rewrites
+    data bytes (contrast write_purged_files above). `dv_adds` rows:
+    {abs_path, deletionVector (dict)}."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if os.path.exists(out):
-        return
-    positions = np.sort(read_dv_positions(base_path, _j.loads(dv_json)).astype(np.int64))
-    table = pa.table(
-        {
-            "file_path": pa.array([src] * len(positions), pa.string()),
-            "pos": pa.array(positions, pa.int64()),
-        }
-    )
-    tmp = out + f".tmp-{os.getpid()}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, out)
-
-
-def write_dv_files_from_positions(
-    spark: SparkSession, base_path: str, deletes_rows: list[dict]
-) -> dict[str, dict]:
-    """ROW_DELETES rows -> 'u'-storage Delta DV files, executor-side (one
-    task per data file; the positions parquet is read in the task, never
-    on the driver). The DV file uuid derives deterministically from the
-    positions file name (which already encodes the delete-set hash), so
-    rewrites are idempotent and a changed delete set yields a new file.
-    Returns {data_file_path: deletionVector descriptor}."""
-    if not deletes_rows:
-        return {}
-    rows = [
-        (r["data_file_path"], r["positions_path"]) for r in deletes_rows
-    ]
-    df = spark.createDataFrame(rows, "data_file_path STRING, positions_path STRING")
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    bp = base_path
-
-    def _write(batches: Iterator["object"]) -> Iterator["object"]:
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import hashlib as _hashlib
-        import json as _j
-        import uuid as _u
-
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        from incubator_xtable_spark.sources.delta_dv import (
-            serialize_dv_data,
-            z85_encode,
+    for r in dv_adds:
+        src, desc = r["abs_path"], r["deletionVector"]
+        out = delete_positions_path(src, desc)
+        if os.path.exists(out):
+            continue
+        positions = np.sort(read_dv_positions(base_path, desc).astype(np.int64))
+        table = pa.table(
+            {
+                "file_path": pa.array([src] * len(positions), pa.string()),
+                "pos": pa.array(positions, pa.int64()),
+            }
         )
+        tmp = out + f".tmp-{os.getpid()}"
+        pq.write_table(table, tmp)
+        os.replace(tmp, out)
 
-        for pdf in batches:
-            data_paths, descs = [], []
-            for data_path, pos_path in zip(pdf["data_file_path"], pdf["positions_path"]):
-                uid = _u.UUID(bytes=_hashlib.md5(os.path.basename(pos_path).encode()).digest())
-                out = os.path.join(bp, f"deletion_vector_{uid}.bin")
-                positions = pq.read_table(pos_path, columns=["pos"])["pos"].to_numpy()
-                data = serialize_dv_data(positions)
-                if not os.path.exists(out):
-                    tmp = out + f".tmp-{os.getpid()}"
-                    with open(tmp, "wb") as fh:
-                        fh.write(b"\x01")
-                        fh.write(struct.pack(">i", len(data)))
-                        fh.write(data)
-                        fh.write(struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF))
-                    os.replace(tmp, out)
-                data_paths.append(data_path)
-                descs.append(
-                    _j.dumps(
-                        {
-                            "storageType": "u",
-                            "pathOrInlineDv": z85_encode(uid.bytes),
-                            "offset": 1,
-                            "sizeInBytes": len(data),
-                            "cardinality": int(len(positions)),
-                        }
-                    )
-                )
-            yield pd.DataFrame({"data_file_path": data_paths, "desc_json": descs})
 
-    out_rows = (
-        df.repartition(len(rows))
-        .mapInPandas(_write, "data_file_path STRING, desc_json STRING")
-        .collect()
-    )
-    import json as _json
+def write_dv_files_from_positions(base_path: str, deletes_rows: list[dict]) -> dict[str, dict]:
+    """ROW_DELETES rows -> 'u'-storage Delta DV files, on the driver: each
+    row's positions parquet is read and its bitmap serialized. The DV file
+    uuid derives deterministically from the positions file name (which
+    already encodes the delete-set hash), so rewrites are idempotent and a
+    changed delete set yields a new file. Returns {data_file_path:
+    deletionVector descriptor}."""
+    import hashlib
 
-    return {r["data_file_path"]: _json.loads(r["desc_json"]) for r in out_rows}
+    import pyarrow.parquet as pq
+
+    out: dict[str, dict] = {}
+    for r in deletes_rows:
+        uid = _uuid.UUID(bytes=hashlib.md5(os.path.basename(r["positions_path"]).encode()).digest())
+        path = os.path.join(base_path, f"deletion_vector_{uid}.bin")
+        positions = pq.read_table(r["positions_path"], columns=["pos"])["pos"].to_numpy()
+        data = serialize_dv_data(positions)
+        if not os.path.exists(path):
+            tmp = path + f".tmp-{os.getpid()}"
+            with open(tmp, "wb") as fh:
+                fh.write(_dv_file_bytes(data))
+            os.replace(tmp, path)
+        out[r["data_file_path"]] = {
+            "storageType": "u",
+            "pathOrInlineDv": z85_encode(uid.bytes),
+            "offset": 1,
+            "sizeInBytes": len(data),
+            "cardinality": int(len(positions)),
+        }
+    return out

@@ -4,7 +4,8 @@ rebuilt by ONE session-free replay (`log_replay`: the checkpoint in range
 read with pyarrow, then the JSON tail) and a few folds over it. The
 inventories the source hands on are built from those dicts on the
 driver, `add.stats` parsed in Python, so a sync sends none of them
-through the JVM.
+through the JVM. Checkpoints are written from the same replay, on the
+driver too (`write_checkpoint`).
 
 Reference parity:
 - snapshot scan / allFiles         delta/DeltaConversionSource.java:93-101,
@@ -14,6 +15,9 @@ Reference parity:
 - incremental safety               delta/DeltaConversionSource.java:191-204
 - stats parse                      delta/DeltaStatsExtractor.java:68-70,
                                    delta/DeltaValueConverter.java:62-235
+- checkpoint write                 delta/DeltaConversionTarget.java:294-328
+                                   (the commit whose post-commit hook
+                                   checkpoints)
 
 Scale: the replay reads the latest checkpoint plus the commits after it
 (minor-compaction files substituting their ranges), so its cost follows
@@ -27,13 +31,17 @@ import json
 import math
 import os
 import re
+import uuid
 from decimal import Decimal
 from typing import Any, Iterator, Optional
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from incubator_xtable_spark.model.core import (
     CommitsBacklog,
@@ -47,7 +55,6 @@ from incubator_xtable_spark.model.core import (
     TableFormat,
     arrow_table,
     column,
-    local_frame,
 )
 from incubator_xtable_spark.model.file_formats import from_extension
 from incubator_xtable_spark.model.files_diff import with_file_paths
@@ -454,8 +461,6 @@ def _checkpoint_actions(
     pyarrow: classic, multi-part, or v2, whose top-level file lists the
     sidecar parquets (under _delta_log/_sidecars/) that hold its file
     actions."""
-    import pyarrow.parquet as pq
-
     files = _checkpoint_parquets(base_path, cp["version"], cp.get("parts"))
     sidecar_dir = os.path.join(_log_dir(base_path), "_sidecars")
     for path in files:  # the loop also visits the sidecars appended below
@@ -496,26 +501,49 @@ def log_replay(base_path: str, version: Optional[int] = None) -> Iterator[tuple[
             yield tag, action
 
 
+# the non-file kinds a table state carries, with the field that keys
+# their latest-wins reconciliation (None: one action per table)
+_STATE_KEYS = {"protocol": None, "metaData": None, "domainMetadata": "domain", "txn": "appId"}
+
+
+def _replay_state(
+    base_path: str, version: Optional[int] = None
+) -> tuple[dict[str, dict], dict[tuple, dict]]:
+    """One fold of the replay at ``version``: (path -> live add, as
+    `live_adds` returns it; (kind, key) -> the newest action of each
+    _STATE_KEYS kind per key — protocol and metaData once, domainMetadata
+    per domain with removed=true tombstones kept, txn per appId)."""
+    live: dict[str, dict] = {}
+    latest: dict[tuple, dict] = {}
+    for ver, action in log_replay(base_path, version):
+        add, remove = action.get("add"), action.get("remove")
+        if add is not None:
+            add["version"] = ver
+            live[add["path"]] = add
+        elif remove is not None:
+            if live.get(remove["path"], {}).get("version") != ver:
+                live.pop(remove["path"], None)
+        else:  # an action is one kind (PROTOCOL.md "Actions")
+            for kind, body in action.items():
+                if kind in _STATE_KEYS:
+                    key = _STATE_KEYS[kind]
+                    latest[kind, body[key] if key else None] = body
+    return live, latest
+
+
 def live_adds(base_path: str, version: Optional[int] = None) -> dict[str, dict]:
     """path -> add action of every file live at ``version``, the add
     carrying the ``version`` it came from. The last action per path wins;
     within one version an add beats a remove whatever the line order (a
     DV commit removes AND re-adds the same path, and the file stays
     live)."""
-    live: dict[str, dict] = {}
-    for ver, action in log_replay(base_path, version):
-        add, remove = action.get("add"), action.get("remove")
-        if add is not None:
-            add["version"] = ver
-            live[add["path"]] = add
-        elif remove is not None and live.get(remove["path"], {}).get("version") != ver:
-            live.pop(remove["path"], None)
-    return live
+    return _replay_state(base_path, version)[0]
 
 
 def latest_action(base_path: str, kind: str, version: Optional[int] = None) -> Optional[dict]:
     """The newest ``kind`` action (metaData, protocol) in the view at
-    ``version``: the JSON tail newest-first, stopping at the first file
+    ``version``, as a dict with every _ACTION_SCHEMA field (None when the
+    log has none): the JSON tail newest-first, stopping at the first file
     that carries one, then the checkpoint. A lookup reads the commits
     since ``kind`` last changed, not the whole log."""
     cp = _checkpoint_in_range(base_path, version)
@@ -550,174 +578,23 @@ def latest_protocol(base_path: str, version: Optional[int] = None) -> Optional[d
     return latest_action(base_path, "protocol", version)
 
 
-def write_checkpoint(
-    spark: SparkSession, base_path: str, version: int, layout: str = "classic"
-) -> None:
-    """Write a spec checkpoint at ``version`` plus the `_last_checkpoint`
-    pointer. Readers then scan columnar checkpoint file(s) plus
-    post-checkpoint JSON commits instead of the whole log.
-
-    layout="classic": one <v>.checkpoint.parquet holding the reconstructed
-    state (latest protocol + metaData + live add actions).
-    layout="multipart" (the spec's legacy multi-part checkpoint): the
-    same reconstructed state split across N fragments named
-    <v>.checkpoint.<i>.<n>.parquet (i 1-based, both %010d), written
-    distributed (one task per fragment, no single-file coalesce) with
-    `_last_checkpoint` recording the ``parts`` count (spec-optional;
-    always written here). V2
-    supersedes this layout, but real tables written by older engines
-    use it — and a target should be able to PRODUCE every shape it can
-    read.
-
-    layout="v2" (Delta PROTOCOL.md V2 Checkpoints, requires the
-    `v2Checkpoint` reader/writer table feature): file actions go to
-    sidecar parquets under _delta_log/_sidecars/<uuid>.parquet; the
-    UUID-named top-level <v>.checkpoint.<uuid>.parquet holds only
-    checkpointMetadata + protocol + metaData + one `sidecar` action per
-    sidecar file. At 10M+ live files the sidecars are written as multiple
-    bounded parquets (distributed write, no single-file coalesce), which
-    is the layout's whole point.
-    """
-    import glob
-    import shutil
-    import uuid as _uuid
-
-    live = live_files_df(spark, base_path, version)
-    meta = latest_metadata(spark, base_path, version)
-    proto = latest_protocol(base_path, version)
-    null_struct = lambda name: F.lit(None).cast(_ACTION_SCHEMA[name].dataType)  # noqa: E731
-    adds = live.select(
-        F.struct(
-            F.col("path"),
-            F.col("partitionValues"),
-            F.col("size"),
-            F.col("modificationTime"),
-            F.lit(False).alias("dataChange"),  # checkpoint entries are state, not changes
-            F.col("stats"),
-            F.col("baseRowId"),
-            F.col("defaultRowCommitVersion"),
-            F.col("deletionVector"),
-        ).alias("add"),
-        null_struct("remove").alias("remove"),
-        null_struct("metaData").alias("metaData"),
-        null_struct("protocol").alias("protocol"),
-        null_struct("commitInfo").alias("commitInfo"),
-        null_struct("domainMetadata").alias("domainMetadata"),
-        null_struct("txn").alias("txn"),
-    )
-    head_rows = []
-    if meta is not None:
-        head_rows.append((None, None, meta, None, None, None, None))
-    if proto is not None:
-        head_rows.append((None, None, None, proto, None, None, None))
-    # spec "Domain Metadata": a checkpoint must carry the latest action per
-    # domain, INCLUDING removed=true tombstones (concurrent writers need
-    # them to detect conflicts); domains are few — a bounded collect
-    for dm in latest_domain_metadata_rows(spark, base_path, version):
-        head_rows.append((None, None, None, None, None, dm, None))
-    # spec "Transaction Identifiers": the latest txn per appId must survive
-    # checkpointing or streaming idempotence breaks once retention prunes
-    # the JSON commits behind the checkpoint; appIds are few — bounded
-    for tx in latest_txn_rows(spark, base_path, version):
-        head_rows.append((None, None, None, None, None, None, tx))
-    log_dir = _log_dir(base_path)
-    n_parts = None
-    if layout == "v2":
-        n_total = _write_v2_checkpoint(spark, log_dir, version, adds, head_rows)
-    elif layout == "multipart":
-        n_total, n_parts = _write_multipart_checkpoint(
-            spark, log_dir, version, adds, head_rows
-        )
-    else:
-        head = spark.createDataFrame(head_rows, _ACTION_SCHEMA) if head_rows else None
-        out = head.unionByName(adds) if head is not None else adds
-        tmp_dir = os.path.join(log_dir, f".cp-tmp-{_uuid.uuid4().hex}")
-        out.coalesce(1).write.parquet(tmp_dir)
-        part = glob.glob(os.path.join(tmp_dir, "part-*.parquet"))[0]
-        final = os.path.join(log_dir, f"{version:020d}.checkpoint.parquet")
-        os.replace(part, final)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        n_total = out.count()
-    pointer = os.path.join(log_dir, "_last_checkpoint")
-    tmp_ptr = pointer + f".tmp-{_uuid.uuid4().hex}"
-    lc: dict = {"version": version, "size": n_total}
-    if n_parts is not None:
-        lc["parts"] = n_parts  # spec-optional; always recorded here
-    with open(tmp_ptr, "w", encoding="utf-8") as fh:
-        json.dump(lc, fh)
-    os.replace(tmp_ptr, pointer)
+def live_domain_metadata(base_path: str, version: Optional[int] = None) -> dict[str, str]:
+    """{domain: configuration} of the LIVE domains at ``version`` —
+    removed=true tombstones drop (they exist only for conflict
+    detection)."""
+    return {
+        r["domain"]: r["configuration"]
+        for r in latest_actions(base_path, "domainMetadata", "domain", version).values()
+        if not r["removed"]
+    }
 
 
-# actions per sidecar parquet: bounds per-file memory for readers while
-# keeping file count low (10M live files -> 20 sidecars)
-_SIDECAR_ACTIONS_PER_FILE = 500_000
+_ACTION_ARROW = to_arrow_schema(_ACTION_SCHEMA)
 
-# actions per v1 multi-part checkpoint fragment (same bound rationale)
-_MULTIPART_ACTIONS_PER_FILE = 500_000
-
-
-def _write_multipart_checkpoint(
-    spark: SparkSession, log_dir: str, version: int, adds: DataFrame, head_rows: list
-) -> tuple[int, int]:
-    """V1 multi-part checkpoint: the reconstructed state repartitioned
-    into N fragments named ``<v>.checkpoint.<i>.<n>.parquet`` (both
-    tokens %010d, ``i`` 1-based). The spec lets actions land in any
-    fragment as long as the set is complete, so the split is a plain
-    round-robin repartition — one write task per fragment. It runs from
-    one input partition (the state is driver-built): round-robin from
-    many small input partitions can leave a slot empty and overfill the
-    others past the per-file bound. The fragments are counted and named
-    from the part files actually written. -> (total action count,
-    fragment count) for ``_last_checkpoint``'s size/parts fields."""
-    import glob
-    import shutil
-    import uuid as _uuid
-
-    head = spark.createDataFrame(head_rows, _ACTION_SCHEMA) if head_rows else None
-    out = head.unionByName(adds) if head is not None else adds
-    out = out.coalesce(1).persist()
-    n_total = out.count()
-    n_parts = max(1, -(-n_total // _MULTIPART_ACTIONS_PER_FILE))
-    tmp_dir = os.path.join(log_dir, f".cp-tmp-{_uuid.uuid4().hex}")
-    (out.repartition(n_parts) if n_parts > 1 else out).write.parquet(tmp_dir)
-    out.unpersist()
-    parts = sorted(glob.glob(os.path.join(tmp_dir, "part-*.parquet")))
-    n_parts = len(parts)
-    for i, part in enumerate(parts, start=1):
-        final = os.path.join(
-            log_dir, f"{version:020d}.checkpoint.{i:010d}.{n_parts:010d}.parquet"
-        )
-        os.replace(part, final)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    return n_total, n_parts
-
-
-def _write_v2_checkpoint(
-    spark: SparkSession, log_dir: str, version: int, adds: DataFrame, head_rows: list
-) -> int:
-    """V2 checkpoint layout: returns the total action count (sidecar file
-    actions + top-level non-file actions) for `_last_checkpoint.size`."""
-    import glob
-    import shutil
-    import uuid as _uuid
-
-    sidecar_dir = os.path.join(log_dir, "_sidecars")
-    os.makedirs(sidecar_dir, exist_ok=True)
-    n_adds = adds.persist().count()
-    n_parts = max(1, -(-n_adds // _SIDECAR_ACTIONS_PER_FILE))
-    tmp_dir = os.path.join(log_dir, f".cp-tmp-{_uuid.uuid4().hex}")
-    (adds.repartition(n_parts) if n_parts > 1 else adds.coalesce(1)).write.parquet(tmp_dir)
-    adds.unpersist()
-    sidecars: list[tuple[str, int, int]] = []  # (fileName, sizeInBytes, mtimeMs)
-    for part in sorted(glob.glob(os.path.join(tmp_dir, "part-*.parquet"))):
-        name = f"{_uuid.uuid4()}.parquet"
-        dst = os.path.join(sidecar_dir, name)
-        os.replace(part, dst)
-        st = os.stat(dst)
-        sidecars.append((name, st.st_size, int(st.st_mtime * 1000)))
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-
-    top_schema = T.StructType(
+# the v2 top-level checkpoint file: the actions plus checkpointMetadata
+# and one sidecar action per sidecar file
+_V2_TOP_ARROW = to_arrow_schema(
+    T.StructType(
         list(_ACTION_SCHEMA.fields)
         + [
             T.StructField(
@@ -742,77 +619,103 @@ def _write_v2_checkpoint(
             ),
         ]
     )
-    top_rows: list[tuple] = [
-        (None, None, None, None, None, None, None, (version, None), None)
-    ]
-    for _, _, m, p, _, dm, tx in head_rows:
-        top_rows.append((None, None, m, p, None, dm, tx, None, None))
-    for name, size, mtime in sidecars:
-        top_rows.append(
-            (None, None, None, None, None, None, None, None, (name, size, mtime, None))
-        )
-    top = spark.createDataFrame(top_rows, top_schema)
-    tmp_dir = os.path.join(log_dir, f".cp-tmp-{_uuid.uuid4().hex}")
-    top.coalesce(1).write.parquet(tmp_dir)
-    part = glob.glob(os.path.join(tmp_dir, "part-*.parquet"))[0]
-    final = os.path.join(log_dir, f"{version:020d}.checkpoint.{_uuid.uuid4()}.parquet")
-    os.replace(part, final)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    return n_adds + len(top_rows)
+)
+
+# actions per sidecar parquet: bounds per-file memory for readers while
+# keeping file count low (10M live files -> 20 sidecars)
+_SIDECAR_ACTIONS_PER_FILE = 500_000
+
+# actions per v1 multi-part checkpoint fragment (same bound rationale)
+_MULTIPART_ACTIONS_PER_FILE = 500_000
 
 
-def latest_domain_metadata_rows(
-    spark: SparkSession, base_path: str, version: Optional[int] = None
-) -> list:
-    """Latest domainMetadata action per domain at ``version`` (spec "Domain
-    Metadata" reconciliation: per-domain latest-wins), INCLUDING
-    removed=true tombstones — checkpoint construction needs them. Bounded
-    output (one dict per domain)."""
-    return list(latest_actions(base_path, "domainMetadata", "domain", version).values())
+def _put_log_file(path: str, data: Any) -> None:
+    """Write ``data`` (an Arrow table as parquet, or bytes) to ``path``
+    through a temporary name that no checkpoint glob matches, then rename
+    it into place: a reader sees the whole file or none."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        if isinstance(data, pa.Table):
+            # no ARROW:schema footer blob: Delta readers never use it
+            pq.write_table(data, tmp, store_schema=False)
+        else:
+            with open(tmp, "wb") as fh:
+                fh.write(data)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
 
 
-def latest_txn_rows(
-    spark: SparkSession, base_path: str, version: Optional[int] = None
-) -> list:
-    """Latest SetTransaction action per appId at ``version`` (spec
-    "Transaction Identifiers" reconciliation) — the streaming-writer
-    idempotence watermarks. Bounded output (one dict per appId)."""
-    return list(latest_actions(base_path, "txn", "appId", version).values())
+def write_checkpoint(base_path: str, version: int, layout: str = "classic") -> None:
+    """Write a spec checkpoint of the view at ``version`` plus the
+    `_last_checkpoint` pointer, on the driver. One `_replay_state` fold
+    collects the state: the live adds (dataChange=false: checkpoint
+    entries are state, not changes), the latest protocol and metaData,
+    the latest domainMetadata per domain INCLUDING removed=true
+    tombstones (spec "Domain Metadata": concurrent writers need them)
+    and the latest txn per appId (spec "Transaction Identifiers":
+    streaming idempotence survives log retention). One Arrow table in
+    _ACTION_SCHEMA holds those actions; the layouts only slice it:
 
+    - "classic": one <v>.checkpoint.parquet;
+    - "multipart" (the spec's v1 multi-part checkpoint, which older
+      engines write and a target should be able to produce):
+      ceil(n / _MULTIPART_ACTIONS_PER_FILE) fragments named
+      <v>.checkpoint.<i>.<n>.parquet (both %010d, i 1-based), with
+      `_last_checkpoint.parts` = n;
+    - "v2" (PROTOCOL.md V2 Checkpoints, requires the `v2Checkpoint`
+      reader/writer feature): the adds in sidecars of at most
+      _SIDECAR_ACTIONS_PER_FILE under _delta_log/_sidecars/, then the
+      UUID-named <v>.checkpoint.<uuid>.parquet holding
+      checkpointMetadata, the other actions and one `sidecar` action per
+      sidecar file.
 
-def live_domain_metadata(
-    spark: SparkSession, base_path: str, version: Optional[int] = None
-) -> dict[str, str]:
-    """{domain: configuration} of the LIVE domains at ``version`` —
-    removed=true tombstones drop (they exist only for conflict
-    detection)."""
-    return {
-        r["domain"]: r["configuration"]
-        for r in latest_domain_metadata_rows(spark, base_path, version)
-        if not r["removed"]
-    }
-
-
-def _live_files_schema() -> T.StructType:
-    """The column list of live_files_df, typed straight off
-    _ACTION_SCHEMA's add struct."""
-    def ft(n: str) -> T.DataType:
-        return _ACTION_TYPES["add"][n].dataType
-
-    return T.StructType(
-        [
-            T.StructField("version", T.LongType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("is_add", T.BooleanType(), False),
-            T.StructField("partitionValues", ft("partitionValues")),
-            T.StructField("size", ft("size")),
-            T.StructField("modificationTime", ft("modificationTime")),
-            T.StructField("stats", ft("stats")),
-            T.StructField("baseRowId", ft("baseRowId")),
-            T.StructField("defaultRowCommitVersion", ft("defaultRowCommitVersion")),
-            T.StructField("deletionVector", ft("deletionVector")),
-        ]
-    )
+    Every file lands through `_put_log_file` and `_last_checkpoint` is
+    written last, so a failure at any write leaves the pointer on the
+    previous checkpoint. Scale: one replay and one pyarrow write per
+    file; the work is the live state's size, with no Spark job.
+    """
+    live, latest = _replay_state(base_path, version)
+    head = [{kind: body} for (kind, _), body in latest.items()]
+    adds = [{"add": dict(add, dataChange=False)} for add in live.values()]
+    actions = arrow_table(head + adds, _ACTION_ARROW)
+    log_dir = _log_dir(base_path)
+    prefix = os.path.join(log_dir, f"{version:020d}.checkpoint")
+    pointer: dict = {"version": version, "size": actions.num_rows}
+    if layout == "v2":
+        sidecar_dir = os.path.join(log_dir, "_sidecars")
+        os.makedirs(sidecar_dir, exist_ok=True)
+        sidecars = []
+        for start in range(len(head), actions.num_rows, _SIDECAR_ACTIONS_PER_FILE):
+            name = f"{uuid.uuid4()}.parquet"
+            path = os.path.join(sidecar_dir, name)
+            _put_log_file(path, actions.slice(start, _SIDECAR_ACTIONS_PER_FILE))
+            st = os.stat(path)
+            sidecars.append(
+                {
+                    "sidecar": {
+                        "path": name,
+                        "sizeInBytes": st.st_size,
+                        "modificationTime": int(st.st_mtime * 1000),
+                    }
+                }
+            )
+        top = [{"checkpointMetadata": {"version": version}}] + head + sidecars
+        _put_log_file(f"{prefix}.{uuid.uuid4()}.parquet", arrow_table(top, _V2_TOP_ARROW))
+        pointer["size"] = len(adds) + len(top)
+    elif layout == "multipart":
+        per = _MULTIPART_ACTIONS_PER_FILE
+        n_parts = max(1, math.ceil(actions.num_rows / per))
+        for i in range(n_parts):
+            _put_log_file(
+                f"{prefix}.{i + 1:010d}.{n_parts:010d}.parquet", actions.slice(i * per, per)
+            )
+        pointer["parts"] = n_parts  # spec-optional; always recorded here
+    else:
+        _put_log_file(f"{prefix}.parquet", actions)
+    _put_log_file(os.path.join(log_dir, "_last_checkpoint"), json.dumps(pointer).encode())
 
 
 def _dv_of(add: dict) -> Optional[dict]:
@@ -874,22 +777,6 @@ def _commit_diff_local(base_path: str, version: int, by_raw_path: bool):
     )
 
 
-def live_files_df(spark: SparkSession, base_path: str, version: Optional[int] = None) -> DataFrame:
-    """Live AddFiles at a version (time travel when version is given), as
-    a LocalRelation: consumers' projections fold at optimization and
-    draining runs no job."""
-    rows = [dict(a, is_add=True) for a in live_adds(base_path, version).values()]
-    return local_frame(spark, rows, _live_files_schema())
-
-
-def latest_metadata(
-    spark: SparkSession, base_path: str, version: Optional[int] = None
-) -> Optional[dict]:
-    """The metaData action in effect at ``version`` as a dict with every
-    _ACTION_SCHEMA field (None when the log has none)."""
-    return latest_action(base_path, "metaData", version)
-
-
 def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFrame:
     """Change Data Feed of ONE commit as a CDC-shaped DataFrame: the row
     columns plus `_change_type` (insert / update_preimage /
@@ -911,7 +798,7 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
     DV position sets decode executor-side; no row ever collects to the
     driver. Pair with get_commits_backlog for the commit cursor.
     """
-    meta = latest_metadata(spark, base_path, version)
+    meta = latest_action(base_path, "metaData", version)
     if meta is None:
         raise ValueError(f"not a delta table (no metaData): {base_path}")
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -1145,19 +1032,9 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
     prev_dv: dict[str, Optional[dict]] = {}
     prev_pv: dict[str, Optional[dict]] = {}
     if (pair_paths or removes) and version > 0:
-        prev_rows = (
-            live_files_df(spark, base_path, version - 1)
-            .select("path", "partitionValues", "deletionVector")
-            .collect()
-        )
-        prev_dv = {
-            r["path"]: (r["deletionVector"].asDict() if r["deletionVector"] else None)
-            for r in prev_rows
-        }
-        prev_pv = {
-            r["path"]: (dict(r["partitionValues"]) if r["partitionValues"] else None)
-            for r in prev_rows
-        }
+        prev_rows = live_adds(base_path, version - 1).values()
+        prev_dv = {r["path"]: r["deletionVector"] for r in prev_rows}
+        prev_pv = {r["path"]: r["partitionValues"] or None for r in prev_rows}
 
     # 1. DV-update pairs: remove+re-add of the same path -> row-level diff,
     # batched into ONE position-set comparison across every paired file
@@ -1403,18 +1280,14 @@ def read_delta_as_df(
                 "read_delta_as_df: pass either version or as_of_timestamp_ms, not both"
             )
         version = version_at_timestamp(base_path, as_of_timestamp_ms)
-    meta = latest_metadata(spark, base_path, version)
+    meta = latest_action(base_path, "metaData", version)
     if meta is None:
         raise ValueError(f"not a delta table (no metaData): {base_path}")
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
     if cm_mode == "id":
         _enable_field_id_reads(spark)
-    live = (
-        live_files_df(spark, base_path, version)
-        .select("path", "partitionValues", "deletionVector", "stats", "baseRowId")
-        .collect()
-    )
+    live = list(live_adds(base_path, version).values())
     part_cols = list(meta["partitionColumns"] or [])
     if prune:
         live = _prune_live_rows(live, schema, part_cols, prune)
@@ -1496,7 +1369,7 @@ def read_delta_as_df(
 
         dv_files = spark.createDataFrame(
             [
-                (os.path.join(base, r["path"]), r["deletionVector"].asDict())
+                (os.path.join(base, r["path"]), r["deletionVector"])
                 for r in dv_rows
             ],
             T.StructType(
@@ -1821,7 +1694,7 @@ class DeltaConversionSource:
         key = (version, head)
         if key not in self._meta_cache:
             self._meta_cache.clear()  # old-head entries are dead weight
-            self._meta_cache[key] = latest_metadata(self.spark, self.base_path, version)
+            self._meta_cache[key] = latest_action(self.base_path, "metaData", version)
         return self._meta_cache[key]
 
     def get_current_table(self) -> Optional[InternalTable]:
@@ -1918,7 +1791,7 @@ class DeltaConversionSource:
     def _row_deletes_for(self, adds: list[dict]):
         """DV'd files -> a ROW_DELETES_ARROW table; materializes the
         Iceberg-shaped (file_path, pos) positions parquet per (file, DV)
-        executor-side, idempotently.
+        on the driver, idempotently.
 
         The result states the table's COMPLETE current delete set (pass
         the full live file set, not a commit's adds): targets clear
@@ -1934,7 +1807,6 @@ class DeltaConversionSource:
         dv_list = [(self._absolute(a["path"]), a) for a in adds if _dv_of(a)]
         if dv_list:
             write_delete_position_files(
-                self.spark,
                 self.base_path,
                 [{"abs_path": p, "deletionVector": a["deletionVector"]} for p, a in dv_list],
             )
@@ -1959,7 +1831,7 @@ class DeltaConversionSource:
         """Table-level format from metaData.format.provider (ref
         delta/DeltaActionsConverter.java:91-97: parquet/orc recognized,
         anything else refused loudly). Cached — Delta never changes a
-        table's provider, and latest_metadata is a log scan."""
+        table's provider, and the metaData lookup is a log scan."""
         if getattr(self, "_format_default", None) is None:
             from incubator_xtable_spark.model.file_formats import from_delta_provider
 
@@ -2102,7 +1974,7 @@ class DeltaConversionSource:
         return commit
 
     def get_table_properties(self) -> dict[str, str]:
-        meta = latest_metadata(self.spark, self.base_path)
+        meta = latest_action(self.base_path, "metaData")
         return dict(meta["configuration"] or {}) if meta is not None else {}
 
     def get_sync_metadata(self) -> Optional[TableSyncMetadata]:

@@ -114,12 +114,10 @@ def delta_vacuum(spark: SparkSession, base_path: str, dry_run: bool = True) -> l
     window = head only, the aggressive setting; a time-based window keeps
     files from all versions newer than the horizon). Never touches
     `_delta_log`. Returns the (to-be-)deleted paths."""
-    from incubator_xtable_spark.sources.delta_source import live_files_df
+    from incubator_xtable_spark.sources.delta_source import live_adds
     from incubator_xtable_spark.sources.parquet_source import _list_parquet_files
 
-    live = {
-        r["path"] for r in live_files_df(spark, base_path).select("path").collect()
-    }
+    live = set(live_adds(base_path))
     base = base_path.rstrip("/") + "/"
     orphans = []
     for path, _size, _m in _list_parquet_files(base_path):
@@ -682,14 +680,15 @@ def delta_optimize(
     from incubator_xtable_spark.model.stat_codec import to_delta_stats_json
     from incubator_xtable_spark.sources.delta_dv import read_dv_positions
     from incubator_xtable_spark.sources.delta_source import (
-        latest_metadata,
+        _dv_of,
+        latest_action,
         list_log_versions,
-        live_files_df,
+        live_adds,
         read_commit_ict,
     )
     from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
 
-    meta = latest_metadata(spark, base_path)
+    meta = latest_action(base_path, "metaData")
     if meta is None:
         raise ValueError(f"not a delta table: {base_path}")
     cfg = dict(meta["configuration"] or {})
@@ -706,12 +705,7 @@ def delta_optimize(
         )
     min_file_bytes = min_file_bytes or target_file_bytes // 2
     version = max(list_log_versions(base_path))
-    live_cols = ["path", "partitionValues", "size"]
-    live = live_files_df(spark, base_path, version)
-    has_dv = "deletionVector" in live.columns
-    if has_dv:
-        live_cols.append("deletionVector")
-    rows = live.select(*live_cols).collect()
+    rows = live_adds(base_path, version).values()
     base = base_path.rstrip("/") + "/"
 
     def _abs(p: str) -> str:
@@ -731,15 +725,8 @@ def delta_optimize(
             # change for every row, not just the small files
             cand = list(members)
         else:
-            cand = [
-                r
-                for r in members
-                if r["size"] < min_file_bytes
-                or (has_dv and r["deletionVector"] and r["deletionVector"]["storageType"])
-            ]
-        only_dv = [
-            r for r in cand if has_dv and r["deletionVector"] and r["deletionVector"]["storageType"]
-        ]
+            cand = [r for r in members if r["size"] < min_file_bytes or _dv_of(r)]
+        only_dv = [r for r in cand if _dv_of(r)]
         if not zorder_by and len(cand) < 2 and not only_dv:
             continue
         if zorder_by and not cand:
@@ -748,8 +735,7 @@ def delta_optimize(
         df = spark.read.parquet(*paths)
         pos_rows = []
         for r in only_dv:
-            desc = r["deletionVector"].asDict()
-            for pos in read_dv_positions(base_path, desc):
+            for pos in read_dv_positions(base_path, r["deletionVector"]):
                 pos_rows.append((_abs(r["path"]), int(pos)))
         if pos_rows:
             df = df.withColumn(
@@ -1486,28 +1472,22 @@ def delta_restore(spark: SparkSession, base_path: str, to_version: int) -> dict:
     import uuid as _uuid
 
     from incubator_xtable_spark.sources.delta_source import (
-        latest_metadata,
+        _dv_of,
+        latest_action,
         list_log_versions,
-        live_files_df,
+        live_adds,
         read_commit_ict,
     )
 
     head = max(list_log_versions(base_path))
     if to_version >= head:
         raise ValueError(f"restore target {to_version} is not before head {head}")
-    cols = ["path", "partitionValues", "size", "modificationTime", "stats"]
-    old_df = live_files_df(spark, base_path, to_version)
-    new_df = live_files_df(spark, base_path, head)
-    opt = [c for c in ("deletionVector", "baseRowId", "defaultRowCommitVersion") if c in old_df.columns]
-    old = {r["path"]: r for r in old_df.select(*cols, *opt).collect()}
-    opt_new = [c for c in ("deletionVector",) if c in new_df.columns]
-    new = {r["path"]: r for r in new_df.select("path", "size", *opt_new).collect()}
+    old = live_adds(base_path, to_version)
+    new = live_adds(base_path, head)
 
-    def _dv_id(row) -> Optional[tuple]:
-        dv = row["deletionVector"] if "deletionVector" in row.asDict() else None
-        if dv is None or dv["storageType"] is None:
-            return None
-        return (dv["storageType"], dv["pathOrInlineDv"], dv["offset"])
+    def _dv_id(add: dict) -> Optional[tuple]:
+        dv = _dv_of(add)
+        return None if dv is None else (dv["storageType"], dv["pathOrInlineDv"], dv["offset"])
 
     readds = [p for p in old if p not in new or _dv_id(old[p]) != _dv_id(new[p])]
     removes = [p for p in new if p not in old]
@@ -1523,7 +1503,7 @@ def delta_restore(spark: SparkSession, base_path: str, to_version: int) -> dict:
             f"vacuumed, e.g. {missing[:3]} — the version is no longer restorable"
         )
 
-    meta = latest_metadata(spark, base_path)
+    meta = latest_action(base_path, "metaData")
     cfg = dict(meta["configuration"] or {}) if meta is not None else {}
     now_ms = int(_time.time() * 1000)
     commit_info: dict = {
@@ -1550,8 +1530,7 @@ def delta_restore(spark: SparkSession, base_path: str, to_version: int) -> dict:
             )
         )
     for p in sorted(readds):
-        r = old[p]
-        d = r.asDict(recursive=True)
+        d = old[p]
         add = {
             "path": p,
             "partitionValues": dict(d.get("partitionValues") or {}),
@@ -1626,10 +1605,10 @@ def delta_shallow_clone(
 
     from incubator_xtable_spark.sources.delta_dv import dv_absolute_path
     from incubator_xtable_spark.sources.delta_source import (
-        latest_metadata,
+        latest_action,
         latest_protocol,
         list_log_versions,
-        live_files_df,
+        live_adds,
     )
 
     src = os.path.abspath(src_path)
@@ -1647,7 +1626,7 @@ def delta_shallow_clone(
             f"clone version {version} is not available "
             f"(retained log versions: {versions[0]}..{versions[-1]})"
         )
-    meta = latest_metadata(spark, src, src_version)
+    meta = latest_action(src, "metaData", src_version)
     if meta is None:
         raise ValueError(f"not a delta table (no metaData): {src}")
     proto = latest_protocol(src, src_version)
@@ -1670,7 +1649,7 @@ def delta_shallow_clone(
         md_out["name"] = meta["name"]
 
     src_base = src.rstrip("/") + "/"
-    rows = live_files_df(spark, src, src_version).collect()
+    rows = live_adds(src, src_version).values()
     lines = [
         json.dumps(
             {
@@ -1687,8 +1666,7 @@ def delta_shallow_clone(
         json.dumps({"protocol": proto}),
         json.dumps({"metaData": md_out}),
     ]
-    for r in sorted(rows, key=lambda x: x["path"]):
-        d = r.asDict(recursive=True)
+    for d in sorted(rows, key=lambda x: x["path"]):
         p = d["path"]
         add = {
             "path": p if p.startswith("/") else src_base + p,

@@ -17,7 +17,10 @@ Scale notes: the transaction log is inherently a driver-written artifact
 (single file per commit). The source hands over its snapshot or change
 as driver-held Arrow tables; this target reads their rows and diffs a
 snapshot against the log replay's live adds with ``model.files_diff``
-(no Spark job either way).
+(no Spark job either way). The commit's other log-side files —
+checkpoints, `.crc` checksums, DV files from row deletes — are written
+on the driver too. Only the CDC rows of ``sync_row_changes`` are written
+with Spark; any other commit runs no Spark job and sends py4j nothing.
 """
 
 from __future__ import annotations
@@ -110,8 +113,8 @@ class DeltaConversionTarget:
         # no table feature required; "v2" = UUID top-level + sidecar
         # parquets (PROTOCOL.md V2 Checkpoints — requires and
         # auto-declares the v2Checkpoint reader/writer table feature).
-        # multipart and v2 keep checkpointing distributed at 10M+ live
-        # files (one write task per fragment/sidecar).
+        # multipart and v2 bound each file at 500k actions; every layout
+        # is written on the driver (delta_source.write_checkpoint).
         if checkpoint_layout not in ("classic", "multipart", "v2"):
             raise ValueError(f"unsupported checkpoint_layout: {checkpoint_layout}")
         self.checkpoint_layout = checkpoint_layout
@@ -159,8 +162,8 @@ class DeltaConversionTarget:
         # Computed INCREMENTALLY from the previous checksum plus this
         # commit's add/remove byte deltas (remove actions then carry the
         # spec-optional `size` field so the decrement is O(commit), the
-        # same trick delta-spark's RemoveFile uses); falls back to one
-        # distributed live-files aggregation when no prior checksum exists.
+        # same trick delta-spark's RemoveFile uses); falls back to summing
+        # one log replay's live adds when no prior checksum exists.
         self.version_checksum = version_checksum
         self._reset()
 
@@ -293,7 +296,7 @@ class DeltaConversionTarget:
     def sync_row_deletes(self, deletes: Any) -> None:
         """Row-delete channel (ROW_DELETES_SCHEMA): each covered data file
         gets a REAL Delta deletion vector ('u'-storage roaring bitmap,
-        written executor-side from the positions parquet) attached to its
+        written on the driver from the positions parquet) attached to its
         add action — data files are never rewritten. Files already live
         in the target re-commit as remove + re-add with the new DV (the
         shape a Delta DELETE writes); an unchanged delete set is a no-op."""
@@ -447,9 +450,7 @@ class DeltaConversionTarget:
                 )
 
                 if (
-                    live_domain_metadata(self.spark, self.base_path).get(
-                        "delta.clustering"
-                    )
+                    live_domain_metadata(self.base_path).get("delta.clustering")
                     == clustering_json
                 ):
                     clustering_json = None  # unchanged — no re-emission
@@ -477,9 +478,7 @@ class DeltaConversionTarget:
                     live_domain_metadata,
                 )
 
-                raw = live_domain_metadata(self.spark, self.base_path).get(
-                    "delta.rowTracking"
-                )
+                raw = live_domain_metadata(self.base_path).get("delta.rowTracking")
                 if raw:
                     hwm = int(json.loads(raw).get("rowIdHighWaterMark", -1))
             # hwm0 freezes the pre-commit watermark (lineage hand-outs
@@ -497,7 +496,7 @@ class DeltaConversionTarget:
                 write_dv_files_from_positions,
             )
 
-            dv_map = write_dv_files_from_positions(self.spark, self.base_path, self._row_deletes)
+            dv_map = write_dv_files_from_positions(self.base_path, self._row_deletes)
             if version > 0:
                 # row_deletes is the COMPLETE delete state: a live file
                 # with a changed set re-adds with the new DV; one absent
@@ -927,7 +926,7 @@ class DeltaConversionTarget:
         if self.checkpoint_interval and version > 0 and version % self.checkpoint_interval == 0:
             from incubator_xtable_spark.sources.delta_source import write_checkpoint
 
-            write_checkpoint(self.spark, self.base_path, version, layout=self.checkpoint_layout)
+            write_checkpoint(self.base_path, version, layout=self.checkpoint_layout)
         if (
             self.compaction_interval
             and version > 0
@@ -1112,8 +1111,8 @@ class DeltaConversionTarget:
         and this commit's add/remove deltas adjust them (every remove action
         carries the optional ``size`` field exactly so this decrement never
         needs the prior snapshot). Only when no prior checksum exists (first
-        commit, or checksums enabled mid-table) does it fall back to ONE
-        distributed live-files aggregation."""
+        commit, or checksums enabled mid-table) does it fall back to
+        summing the live adds of one log replay."""
         prev = read_version_checksum(self.base_path, version - 1) if version else None
         usable_prev = (
             prev is not None
@@ -1128,17 +1127,10 @@ class DeltaConversionTarget:
             num_files = prev["numFiles"] + acc["add_n"] - acc["rm_n"]
             table_bytes = prev["tableSizeBytes"] + acc["add_bytes"] - acc["rm_bytes"]
         else:
-            from incubator_xtable_spark.sources.delta_source import live_files_df
+            from incubator_xtable_spark.sources.delta_source import live_adds
 
-            row = (
-                live_files_df(self.spark, self.base_path, version)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("size"), F.lit(0)).alias("b"),
-                )
-                .collect()[0]
-            )
-            num_files, table_bytes = int(row["n"]), int(row["b"])
+            live = live_adds(self.base_path, version).values()
+            num_files, table_bytes = len(live), sum(a["size"] or 0 for a in live)
         protocol = acc["protocol"] or self._latest("protocol")
         metadata = acc["metadata"] or self._latest("metaData")
         payload: dict[str, Any] = {

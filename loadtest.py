@@ -48,7 +48,7 @@ from incubator_xtable_spark.model.core import (
     arrow_table,
 )
 from incubator_xtable_spark.session import get_spark
-from incubator_xtable_spark.sources.delta_source import live_files_df
+from incubator_xtable_spark.sources.delta_source import live_adds
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 
@@ -165,7 +165,7 @@ def _live_count(spark, work: str, fmt) -> int:
             .get_current_snapshot(with_stats=False)
             .files.num_rows
         )
-    return live_files_df(spark, work).count()
+    return len(live_adds(work))
 
 
 def scenario_full(
@@ -551,12 +551,11 @@ def scenario_dv_relay(
         )
 
         # read-back proofs (both sides, metadata plane only)
-        live = live_files_df(spark, work)
-        dv_adds = (
-            live.filter("deletionVector IS NOT NULL AND deletionVector.storageType != ''")
-            .select("deletionVector.cardinality")
-            .collect()
-        )
+        dv_adds = [
+            a["deletionVector"]
+            for a in live_adds(work).values()
+            if a["deletionVector"] and a["deletionVector"]["storageType"]
+        ]
         from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
 
         ice = IcebergConversionSource(spark, work)

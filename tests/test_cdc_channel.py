@@ -147,8 +147,6 @@ def test_delta_to_delta_cdf_relay(spark, tmp_path):
     assert ctrl2.sync(relay_src, {TableFormat.DELTA: dst_target})[TableFormat.DELTA].status == SyncStatusCode.SUCCESS
     # FULL sync carries no CDC; the incremental DV commit does
     relay_v0 = current_log_version(dst)
-    from incubator_xtable_spark.sources.delta_source import live_files_df  # noqa: F401
-
     # replay the source's DV commit incrementally
     eq2 = _eq_parquet(os.path.join(d, "e2.parquet"), {"id": pa.array([15], pa.int64())})
     _append_delete_snapshot(spark, d, [(eq2, [fid], {})], seq=3, snapshot_id=1000)

@@ -24,7 +24,7 @@ from incubator_xtable_spark.model.core import SyncMode, SyncStatusCode, TableFor
 from incubator_xtable_spark.sources.delta_source import (
     DeltaConversionSource,
     list_log_versions,
-    live_files_df,
+    live_adds,
     read_delta_as_df,
 )
 from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
@@ -117,7 +117,7 @@ def test_stats_written_and_parsed_back(spark, source_dir):
     target = DeltaConversionTarget(spark, source_dir)
     ConversionController().sync(source, {TableFormat.DELTA: target})
 
-    live = live_files_df(spark, source_dir).collect()
+    live = list(live_adds(source_dir).values())
     assert live, "no live files in target log"
     stats = json.loads(live[0]["stats"])
     assert stats["numRecords"] > 0
@@ -212,7 +212,7 @@ def test_deletion_vector_style_diff_dropped(spark, source_dir):
     ConversionController().sync(source, {TableFormat.DELTA: target})
 
     # hand-craft a DV-style commit: same path removed and re-added
-    live = live_files_df(spark, source_dir).select("path", "size").collect()
+    live = list(live_adds(source_dir).values())
     p, sz = live[0]["path"], live[0]["size"]
     v = max(list_log_versions(source_dir)) + 1
     with open(

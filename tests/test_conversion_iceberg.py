@@ -156,7 +156,7 @@ def test_iceberg_stats_roundtrip_to_delta(spark, source_dir, tmp_path):
     serialization) -> parsed back -> delta stats JSON: full stats chain."""
     import json as _json
 
-    from incubator_xtable_spark.sources.delta_source import live_files_df
+    from incubator_xtable_spark.sources.delta_source import live_adds
 
     ConversionController().sync(
         ParquetConversionSource(spark, source_dir, name="region"),
@@ -176,7 +176,7 @@ def test_iceberg_stats_roundtrip_to_delta(spark, source_dir, tmp_path):
     ConversionController().sync(
         src, {TableFormat.DELTA: DeltaConversionTarget(spark, mirror)}
     )
-    live = live_files_df(spark, mirror).collect()
+    live = list(live_adds(mirror).values())
     stats = _json.loads(live[0]["stats"])
     assert stats["minValues"]["r_regionkey"] >= 0
     assert stats["maxValues"]["r_regionkey"] <= 4

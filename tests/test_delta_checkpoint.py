@@ -1,18 +1,23 @@
 """Delta checkpoint tests: spec checkpoint parquet + _last_checkpoint
-pointer, read equivalence through/around checkpoints, time travel below
-the checkpoint version."""
+pointer in the classic, multi-part and v2 layouts, each file readable by
+Spark's own parquet reader; read equivalence through/around checkpoints,
+time travel below the checkpoint version."""
 
 from __future__ import annotations
 
-import json
+import glob
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
+import incubator_xtable_spark.sources.delta_source as DS
+from incubator_xtable_spark.model.conformance import check_delta_conformance
 from incubator_xtable_spark.model.core import TableFormat
 from incubator_xtable_spark.sources.delta_source import (
     list_log_versions,
-    live_files_df,
+    live_adds,
     read_delta_as_df,
     read_last_checkpoint,
 )
@@ -22,12 +27,29 @@ from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 
 from .conftest import SF_SMOKE
 
+# the action kinds a checkpoint file may carry, counted per file
+_KINDS = ("add", "metaData", "protocol", "checkpointMetadata", "sidecar")
 
-def test_checkpoint_written_and_read(spark, tmp_path):
+
+def _kind_counts(spark, path: str) -> dict[str, int]:
+    """{kind: non-null rows} of one checkpoint file, read by Spark."""
+    df = spark.read.parquet(path)
+    kinds = [k for k in _KINDS if k in df.columns]
+    row = df.select(*[F.count(F.col(k)).alias(k) for k in kinds]).collect()[0]
+    return {k: row[k] for k in kinds} | {"rows": df.count()}
+
+
+@pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
+def test_checkpoint_written_and_read(spark, tmp_path, monkeypatch, layout):
+    """Fragments and sidecars hold two actions each, so the multi-part
+    and v2 checkpoints span several files; Spark reads every one of
+    them and finds the state at the checkpoint version."""
+    monkeypatch.setattr(DS, "_MULTIPART_ACTIONS_PER_FILE", 2)
+    monkeypatch.setattr(DS, "_SIDECAR_ACTIONS_PER_FILE", 2)
     d = str(tmp_path / "cp_table")
     spark.read.parquet(f"{SF_SMOKE}/region.parquet").coalesce(1).write.parquet(d)
     source = ParquetConversionSource(spark, d, name="region")
-    target = DeltaConversionTarget(spark, d, checkpoint_interval=3)
+    target = DeltaConversionTarget(spark, d, checkpoint_interval=3, checkpoint_layout=layout)
     controller = ConversionController()
     controller.sync(source, {TableFormat.DELTA: target})
 
@@ -43,7 +65,31 @@ def test_checkpoint_written_and_read(spark, tmp_path):
     assert max(versions) == 5
     cp = read_last_checkpoint(d)
     assert cp is not None and cp["version"] == 3
-    assert os.path.exists(os.path.join(d, "_delta_log", f"{3:020d}.checkpoint.parquet"))
+
+    # every file the writer produced, as Spark's parquet reader sees it:
+    # 4 live adds + metaData + protocol at v3
+    log = os.path.join(d, "_delta_log")
+    top = sorted(glob.glob(os.path.join(log, f"{3:020d}.checkpoint*.parquet")))
+    sidecars = sorted(glob.glob(os.path.join(log, "_sidecars", "*.parquet")))
+    counts = [_kind_counts(spark, p) for p in top + sidecars]
+    total = {k: sum(c.get(k, 0) for c in counts) for k in _KINDS + ("rows",)}
+    assert (total["add"], total["metaData"], total["protocol"]) == (4, 1, 1)
+    assert cp["size"] == total["rows"]
+    if layout == "classic":
+        assert [os.path.basename(p) for p in top] == [f"{3:020d}.checkpoint.parquet"]
+        assert "parts" not in cp and not sidecars
+    elif layout == "multipart":
+        assert [os.path.basename(p) for p in top] == [
+            f"{3:020d}.checkpoint.{i:010d}.{3:010d}.parquet" for i in (1, 2, 3)
+        ]
+        assert cp["parts"] == 3 and not sidecars
+        assert all(c["rows"] == 2 for c in counts)
+    else:
+        assert len(top) == 1 and len(sidecars) == 2
+        assert (total["checkpointMetadata"], total["sidecar"]) == (1, 2)
+        assert [c["add"] for c in counts[1:]] == [2, 2]
+        assert "parts" not in cp
+    assert check_delta_conformance(spark, d).passed
 
     # reads through the checkpoint path match raw parquet
     a = sorted(map(tuple, spark.read.parquet(d).collect()))
@@ -51,20 +97,106 @@ def test_checkpoint_written_and_read(spark, tmp_path):
     assert a == b and len(a) == 30
 
     # live file count at head = 6 files
-    assert live_files_df(spark, d).count() == 6
+    assert len(live_adds(d)) == 6
 
     # time travel BELOW the checkpoint still replays JSON correctly
     assert read_delta_as_df(spark, d, version=1).count() == 10
     assert read_delta_as_df(spark, d, version=3).count() == 20
 
-    # checkpoint parquet holds metaData + protocol + live adds at v3
-    cp_df = spark.read.parquet(os.path.join(d, "_delta_log", f"{3:020d}.checkpoint.parquet"))
-    kinds = cp_df.select(
-        F.col("add.path").isNotNull().alias("is_add"),
-        F.col("metaData.schemaString").isNotNull().alias("is_meta"),
-        F.col("protocol.minReaderVersion").isNotNull().alias("is_proto"),
-    ).collect()
-    assert sum(1 for r in kinds if r["is_add"]) == 4  # live files at v3
-    assert sum(1 for r in kinds if r["is_meta"]) == 1
-    assert sum(1 for r in kinds if r["is_proto"]) == 1
-    assert cp["size"] == len(kinds)
+
+class _FailingOs:
+    """The ``os`` module as delta_source sees it, except that its
+    ``fail_at``-th ``os.replace`` raises (0: none does); counts them."""
+
+    def __init__(self, fail_at: int) -> None:
+        self.fail_at = fail_at
+        self.replaces = 0
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+    def replace(self, src, dst):
+        self.replaces += 1
+        if self.replaces == self.fail_at:
+            raise OSError(f"injected failure at os.replace #{self.replaces}")
+        os.replace(src, dst)
+
+
+def _write_checkpoint_with(monkeypatch, fake_os, base, version, layout):
+    monkeypatch.setattr(DS, "os", fake_os)
+    try:
+        DS.write_checkpoint(base, version, layout=layout)
+    finally:
+        monkeypatch.setattr(DS, "os", os)
+
+
+@pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
+def test_checkpoint_write_survives_a_failure_at_every_rename(
+    spark, tmp_path, monkeypatch, layout
+):
+    """A checkpoint write that fails at its k-th rename, for every k,
+    leaves `_last_checkpoint` on the previous checkpoint, every view's
+    state as it was, no temporary file behind, and a conformant table;
+    writing the checkpoint again then succeeds. Two actions per fragment
+    or sidecar, so the split layouts rename several files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incubator_xtable_spark.model.core import InternalPartitionField
+
+    monkeypatch.setattr(DS, "_MULTIPART_ACTIONS_PER_FILE", 2)
+    monkeypatch.setattr(DS, "_SIDECAR_ACTIONS_PER_FILE", 2)
+    pristine = str(tmp_path / "pristine")
+    target = DeltaConversionTarget(spark, pristine, checkpoint_interval=3, checkpoint_layout=layout)
+    for v in range(6):  # one file per commit; a checkpoint lands at v3
+        path = os.path.join(pristine, f"p={v % 2}", f"f-{v}.parquet")
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(pa.table({"id": pa.array([v], pa.int64())}), path)
+        os.utime(path, (1_700_000_000 + v, 1_700_000_000 + v))
+        source = ParquetConversionSource(
+            spark, pristine, name="t", partition_fields=[InternalPartitionField("p")]
+        )
+        ConversionController().sync(source, {TableFormat.DELTA: target})
+    assert list_log_versions(pristine) == list(range(6))
+    previous = read_last_checkpoint(pristine)
+    assert previous["version"] == 3
+
+    def state(base, exact=True):
+        """Every view's live adds, metaData and protocol; not ``exact``:
+        without the fields that tell which checkpoint a view was read
+        through (the version tag, dataChange=false)."""
+        drop = () if exact else ("version", "dataChange")
+        return {
+            v: (
+                {
+                    p: {k: x for k, x in a.items() if k not in drop}
+                    for p, a in live_adds(base, v).items()
+                },
+                DS.latest_action(base, "metaData", v),
+                DS.latest_action(base, "protocol", v),
+            )
+            for v in range(6)
+        }
+
+    def leftovers(base):
+        dirs = [os.path.join(base, "_delta_log", sub) for sub in ("", "_sidecars")]
+        return [n for d in dirs if os.path.isdir(d) for n in os.listdir(d) if "tmp" in n]
+
+    expected = state(pristine)
+    counter = _FailingOs(0)
+    _write_checkpoint_with(
+        monkeypatch, counter, shutil.copytree(pristine, str(tmp_path / "count")), 5, layout
+    )
+    assert counter.replaces >= 2  # at least the checkpoint file and its pointer
+    for k in range(1, counter.replaces + 1):
+        d = shutil.copytree(pristine, str(tmp_path / f"crash-{k}"))
+        with pytest.raises(OSError, match="injected"):
+            _write_checkpoint_with(monkeypatch, _FailingOs(k), d, 5, layout)
+        assert read_last_checkpoint(d) == previous, k
+        assert state(d) == expected, k
+        assert not leftovers(d), k
+        assert check_delta_conformance(spark, d).passed, k
+        DS.write_checkpoint(d, 5, layout=layout)
+        assert read_last_checkpoint(d)["version"] == 5
+        assert state(d, exact=False) == state(pristine, exact=False), k
+        assert check_delta_conformance(spark, d).passed, k

@@ -3,7 +3,7 @@ summary delta-spark's VersionChecksum hook writes next to each commit.
 
 Gates:
 - every committed version gets a .crc whose numFiles/tableSizeBytes equal a
-  fresh distributed live-files aggregation (the incremental maintenance is
+  fresh log replay's live files (the incremental maintenance is
   exact through appends, removals, and DV remove+re-add pairs);
 - mid-table enablement falls back to one full recompute and is correct;
 - conformance validates the sidecars against its own log replay, red-proven
@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from incubator_xtable_spark.model.conformance import check_delta_conformance
 from incubator_xtable_spark.model.core import TableFormat
-from incubator_xtable_spark.sources.delta_source import live_files_df
+from incubator_xtable_spark.sources.delta_source import live_adds
 from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
 from incubator_xtable_spark.sync.controller import ConversionController
 from incubator_xtable_spark.targets.delta_target import (
@@ -36,14 +36,9 @@ def _codes(report):
     return {i.code for i in report.issues}
 
 
-def _fresh_state(spark, base):
-    v = current_log_version(base)
-    row = (
-        live_files_df(spark, base, v)
-        .agg(F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("size"), F.lit(0)).alias("b"))
-        .collect()[0]
-    )
-    return int(row["n"]), int(row["b"])
+def _fresh_state(base):
+    live = live_adds(base, current_log_version(base)).values()
+    return len(live), sum(a["size"] for a in live)
 
 
 def _seed(spark, tmp_path, name):
@@ -77,7 +72,7 @@ def test_checksum_tracks_appends_and_removals(spark, tmp_path):
         arrow_table,
     )
 
-    victim = live_files_df(spark, base).collect()[0]
+    victim = list(live_adds(base).values())[0]
     abs_victim = base.rstrip("/") + "/" + victim["path"]
     removed = arrow_table(
         [(abs_victim, "parquet", int(victim["size"]), None, 1, None, None)],
@@ -101,7 +96,7 @@ def test_checksum_tracks_appends_and_removals(spark, tmp_path):
         assert crc["numMetadata"] == 1 and crc["numProtocol"] == 1
         assert isinstance(crc["protocol"], dict) and isinstance(crc["metadata"], dict)
 
-    n, b = _fresh_state(spark, base)
+    n, b = _fresh_state(base)
     crc = read_version_checksum(base, head)
     assert crc["numFiles"] == n
     assert crc["tableSizeBytes"] == b
@@ -124,7 +119,7 @@ def test_checksum_exact_through_dv_readds(spark, tmp_path):
 
     from incubator_xtable_spark.model.core import ROW_DELETES_ARROW, arrow_table
 
-    live = live_files_df(spark, base).collect()
+    live = list(live_adds(base).values())
     victim = base.rstrip("/") + "/" + live[0]["path"]
     pos_path = str(tmp_path / "pos.parquet")
     pq.write_table(
@@ -144,7 +139,7 @@ def test_checksum_exact_through_dv_readds(spark, tmp_path):
     target2.sync_row_deletes(rd)
     v = target2.complete_sync()
 
-    n, b = _fresh_state(spark, base)
+    n, b = _fresh_state(base)
     crc = read_version_checksum(base, v)
     assert crc["numFiles"] == n
     assert crc["tableSizeBytes"] == b
@@ -170,7 +165,7 @@ def test_mid_table_enablement_recomputes(spark, tmp_path):
     head = current_log_version(base)
     crc = read_version_checksum(base, head)
     assert crc is not None
-    n, b = _fresh_state(spark, base)
+    n, b = _fresh_state(base)
     assert (crc["numFiles"], crc["tableSizeBytes"]) == (n, b)
 
 
@@ -257,4 +252,4 @@ def test_checksum_protocol_survives_log_expiry(spark, tmp_path):
     crc = read_version_checksum(base, head + 1)
     assert crc["protocol"] == protocol
     assert isinstance(crc["metadata"], dict)
-    assert crc["numFiles"] == _fresh_state(spark, base)[0]
+    assert crc["numFiles"] == _fresh_state(base)[0]

@@ -17,7 +17,7 @@ import pytest
 from incubator_xtable_spark.model.conformance import check_delta_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import (
-    latest_metadata,
+    latest_action,
     list_log_versions,
     read_delta_as_df,
 )
@@ -55,10 +55,10 @@ def test_clone_reads_identical_then_diverges(spark, tmp_path):
     assert out["version"] == 0 and out["cloned_files"] >= 1
     assert _keys(read_delta_as_df(spark, dst)) == before
     # fresh identity, same schema/config; history starts at 0
-    assert latest_metadata(spark, dst)["id"] != latest_metadata(spark, src)["id"]
+    assert latest_action(dst, "metaData")["id"] != latest_action(src, "metaData")["id"]
     assert (
-        latest_metadata(spark, dst)["schemaString"]
-        == latest_metadata(spark, src)["schemaString"]
+        latest_action(dst, "metaData")["schemaString"]
+        == latest_action(src, "metaData")["schemaString"]
     )
     assert list_log_versions(dst) == [0]
     # no data bytes under the clone — metadata only

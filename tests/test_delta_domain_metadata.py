@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from incubator_xtable_spark.model.conformance import check_delta_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import (
-    latest_domain_metadata_rows,
+    latest_actions,
     live_domain_metadata,
 )
 from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
@@ -71,7 +71,7 @@ def test_domain_metadata_latest_wins_and_tombstones(spark, source_dir):
         source_dir,
         domains={"engine.sampling": '{"rate":0.1}', "engine.tags": '{"team":"a"}'},
     )
-    assert live_domain_metadata(spark, source_dir) == {
+    assert live_domain_metadata(source_dir) == {
         "engine.sampling": '{"rate":0.1}',
         "engine.tags": '{"team":"a"}',
     }
@@ -84,16 +84,16 @@ def test_domain_metadata_latest_wins_and_tombstones(spark, source_dir):
         domains={"engine.sampling": '{"rate":0.5}'},
         removed={"engine.tags"},
     )
-    assert live_domain_metadata(spark, source_dir) == {
+    assert live_domain_metadata(source_dir) == {
         "engine.sampling": '{"rate":0.5}'
     }
     # time travel sees the old domain state
-    assert live_domain_metadata(spark, source_dir, version=0) == {
+    assert live_domain_metadata(source_dir, version=0) == {
         "engine.sampling": '{"rate":0.1}',
         "engine.tags": '{"team":"a"}',
     }
     # tombstone is retained in the reconciled rows (conflict detection)
-    rows = {r["domain"]: r for r in latest_domain_metadata_rows(spark, source_dir)}
+    rows = {r["domain"]: r for r in latest_actions(source_dir, "domainMetadata", "domain").values()}
     assert rows["engine.tags"]["removed"] is True
 
     proto_lines = []
@@ -116,7 +116,7 @@ def test_domain_metadata_survives_checkpoint_with_features(spark, source_dir):
 
     from incubator_xtable_spark.sources.delta_source import write_checkpoint
 
-    write_checkpoint(spark, source_dir, 1)
+    write_checkpoint(source_dir, 1)
     cp = os.path.join(source_dir, "_delta_log", f"{1:020d}.checkpoint.parquet")
     cpdf = spark.read.parquet(cp)
     dm = {
@@ -134,7 +134,7 @@ def test_domain_metadata_survives_checkpoint_with_features(spark, source_dir):
     assert "domainMetadata" in (proto["writerFeatures"] or [])
 
     # live view still resolves after the checkpoint (checkpoint-aware read)
-    assert live_domain_metadata(spark, source_dir) == {"engine.window": "w1"}
+    assert live_domain_metadata(source_dir) == {"engine.window": "w1"}
 
 
 def test_domain_metadata_conformance_red(spark, source_dir):
@@ -211,7 +211,7 @@ def test_clustered_table_domain_and_feature(spark, source_dir):
     re-emit, and changed sets do."""
     _sync(spark, source_dir, clustering_columns=["r_regionkey"])
     assert json.loads(
-        live_domain_metadata(spark, source_dir)["delta.clustering"]
+        live_domain_metadata(source_dir)["delta.clustering"]
     ) == {"clusteringColumns": [["r_regionkey"]]}
     with open(os.path.join(source_dir, "_delta_log", f"{0:020d}.json")) as fh:
         v0 = [json.loads(l) for l in fh if l.strip()]
@@ -233,7 +233,7 @@ def test_clustered_table_domain_and_feature(spark, source_dir):
     _append_rows(spark, source_dir, 200)
     _sync(spark, source_dir, clustering_columns=["r_name", "r_regionkey"])
     assert json.loads(
-        live_domain_metadata(spark, source_dir)["delta.clustering"]
+        live_domain_metadata(source_dir)["delta.clustering"]
     ) == {"clusteringColumns": [["r_name"], ["r_regionkey"]]}
 
     report = check_delta_conformance(spark, source_dir)

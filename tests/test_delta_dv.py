@@ -14,8 +14,6 @@ import pytest
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import functions as F
-
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_dv import (
     deserialize_dv_data,
@@ -221,7 +219,7 @@ def test_incremental_dv_diff_swaps_shadow(spark, dv_table):
     change = src.get_table_change_for_commit("1")
     added = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_added)]
     removed = [os.path.basename(r["physical_path"]) for r in model_rows(change.files_removed)]
-    assert added == [os.path.basename(purged_path("part-0001.parquet", _desc_of(spark, dv_table)))]
+    assert added == [os.path.basename(purged_path("part-0001.parquet", _desc_of(dv_table)))]
     assert removed == ["part-0001.parquet"]
 
     # end-to-end: full sync from v0 state, then incremental to v1
@@ -231,22 +229,16 @@ def test_incremental_dv_diff_swaps_shadow(spark, dv_table):
     assert _ids(read_hudi_as_df(spark, dv_table)) == EXPECTED_IDS
 
 
-def _desc_of(spark, base):
-    from incubator_xtable_spark.sources.delta_source import live_files_df
+def _desc_of(base):
+    from incubator_xtable_spark.sources.delta_source import _dv_of, live_adds
 
-    row = (
-        live_files_df(spark, base)
-        .filter(F.col("deletionVector.storageType").isNotNull())
-        .select("deletionVector")
-        .collect()[0]
-    )
-    return row["deletionVector"].asDict()
+    return next(_dv_of(a) for a in live_adds(base).values() if _dv_of(a))
 
 
 def test_dv_update_on_dv_file(spark, dv_table):
     """Second DELETE on the same file: diff removes the OLD shadow and
     adds the new one (effective-path tracking across DV generations)."""
-    old_desc = _desc_of(spark, dv_table)
+    old_desc = _desc_of(dv_table)
     desc2 = write_dv_file(dv_table, [2, 3, 7, 11 - 11, 5])  # {0,2,3,5,7}
     s1 = {
         "numRecords": 10,

@@ -14,7 +14,7 @@ from incubator_xtable_spark.model.conformance import check_delta_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import (
     list_log_versions,
-    live_files_df,
+    live_adds,
     read_delta_as_df,
     read_delta_cdf,
 )
@@ -45,17 +45,17 @@ def test_optimize_compacts_and_preserves_rows(spark, tmp_path):
     d = _make_table(spark, tmp_path, n_files=4)
     v0 = max(list_log_versions(d))
     before = _keys(read_delta_as_df(spark, d))
-    n_before = live_files_df(spark, d).count()
+    n_before = len(live_adds(d))
     assert n_before == 4
 
     out = delta_optimize(spark, d, target_file_bytes=64 * 1024 * 1024)
     assert out["version"] == v0 + 1
     assert len(out["removed"]) == 4 and len(out["added"]) == 1
 
-    assert live_files_df(spark, d).count() == 1
+    assert len(live_adds(d)) == 1
     assert _keys(read_delta_as_df(spark, d)) == before
     # time travel: the pre-optimize version still reads the old layout
-    assert live_files_df(spark, d, v0).count() == 4
+    assert len(live_adds(d, v0)) == 4
     assert _keys(read_delta_as_df(spark, d, version=v0)) == before
 
     # the commit is the spec rewrite shape: everything dataChange=false
@@ -98,12 +98,10 @@ def test_optimize_applies_deletion_vectors(spark, tmp_path):
     expected = sorted(i for i in range(20) if i not in (2, 3, 7))
     out = delta_optimize(spark, base, target_file_bytes=64 * 1024 * 1024)
     assert out["version"] is not None
-    live = live_files_df(spark, base).collect()
+    live = list(live_adds(base).values())
     # compaction applied + dropped the DV
     assert all(
-        (r["deletionVector"] is None or r["deletionVector"]["storageType"] is None)
-        for r in live
-        if "deletionVector" in r.asDict()
+        r["deletionVector"] is None or r["deletionVector"]["storageType"] is None for r in live
     )
     got = sorted(r["id"] for r in read_delta_as_df(spark, base).select("id").collect())
     assert got == expected
@@ -194,12 +192,12 @@ def test_optimize_partitioned_table_bins_per_partition(spark, tmp_path):
         for r in read_delta_as_df(spark, d).select("n_nationkey", "region").collect()
     )
     n_parts = len({pv for (_, pv) in before})
-    files_before = live_files_df(spark, d).collect()
+    files_before = list(live_adds(d).values())
     assert len(files_before) > n_parts  # multiple files per partition
 
     out = delta_optimize(spark, d, target_file_bytes=64 * 1024 * 1024)
     assert out["version"] is not None
-    live = live_files_df(spark, d).collect()
+    live = list(live_adds(d).values())
     # one compacted file per partition, each carrying its partitionValues
     assert len(live) == n_parts
     pvs = sorted(dict(r["partitionValues"])["region"] for r in live)
@@ -253,7 +251,7 @@ def test_optimize_zorder_clusters_and_prunes(spark, tmp_path):
             out.append((min(mns), max(mxs)))
         return out
 
-    live = live_files_df(spark, d).collect()
+    live = list(live_adds(d).values())
     pre_paths = [os.path.join(d, r["path"]) for r in live]
     pre = _x_ranges(pre_paths)
     assert all(mx - mn > 0.9 * n for mn, mx in pre), pre  # shuffled layout
@@ -265,7 +263,7 @@ def test_optimize_zorder_clusters_and_prunes(spark, tmp_path):
     assert out["version"] == v0 + 1 and len(out["added"]) >= 3
 
     post_paths = [
-        os.path.join(d, r["path"]) for r in live_files_df(spark, d).collect()
+        os.path.join(d, r["path"]) for r in list(live_adds(d).values())
     ]
     post = _x_ranges(post_paths)
     lo, hi = 0, n // 10

@@ -23,7 +23,7 @@ from incubator_xtable_spark.model.conformance import check_delta_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import (
     live_domain_metadata,
-    live_files_df,
+    live_adds,
     read_delta_as_df,
 )
 from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
@@ -68,7 +68,7 @@ def test_row_tracking_assignment_and_read(spark, source_dir):
     _append_rows(spark, source_dir, 100)
     _sync(spark, source_dir, row_tracking=True)
 
-    live = live_files_df(spark, source_dir).collect()
+    live = list(live_adds(source_dir).values())
     assert all(r["baseRowId"] is not None for r in live)
     # disjoint ranges covering exactly [0, total)
     def n_records(r):
@@ -82,7 +82,7 @@ def test_row_tracking_assignment_and_read(spark, source_dir):
     assert total == 10
 
     # high watermark covers every assigned id
-    hwm = json.loads(live_domain_metadata(spark, source_dir)["delta.rowTracking"])[
+    hwm = json.loads(live_domain_metadata(source_dir)["delta.rowTracking"])[
         "rowIdHighWaterMark"
     ]
     assert hwm == max(e for _, e in ranges) - 1
@@ -312,7 +312,7 @@ def test_all_writer_features_compose(spark, source_dir, tmp_path):
         icts.append(lines[0]["commitInfo"]["inCommitTimestamp"])
     assert icts[1] > icts[0]
 
-    dom = live_domain_metadata(spark, source_dir)
+    dom = live_domain_metadata(source_dir)
     assert dom["engine.note"] == "v"
     assert "delta.clustering" in dom and "delta.rowTracking" in dom
 

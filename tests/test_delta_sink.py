@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from incubator_xtable_spark.sources.delta_source import (
-    latest_txn_rows,
+    latest_actions,
     list_log_versions,
     read_delta_as_df,
     write_checkpoint,
@@ -73,7 +73,7 @@ def test_sink_commits_batches_and_reads_back(spark, dirs):
     )
     assert got == [(1, "aaa"), (2, "bbb"), (3, "ccc")]
     # SetTransaction watermark = last batchId
-    (tx,) = latest_txn_rows(spark, tbl)
+    (tx,) = list(latest_actions(tbl, "txn", "appId").values())
     assert tx["version"] == 1 and tx["appId"].startswith("delta_sink:")
     # add actions carry stats a pruner can use
     with open(os.path.join(tbl, "_delta_log", f"{0:020d}.json")) as fh:
@@ -121,9 +121,9 @@ def test_sink_txn_watermark_survives_checkpoint_and_log_expiry(spark, dirs):
     # checkpoint the table, then expire the pre-checkpoint JSON commits:
     # the txn watermark must survive INSIDE the checkpoint (spec
     # "Transaction Identifiers" — checkpoints carry latest txn per appId)
-    write_checkpoint(spark, tbl, 1)
+    write_checkpoint(tbl, 1)
     assert delta_expire_log(tbl) == [0, 1]
-    (tx,) = latest_txn_rows(spark, tbl)
+    (tx,) = list(latest_actions(tbl, "txn", "appId").values())
     assert tx["version"] == 1
     # replay from scratch: still a no-op even with the JSON tail gone
     shutil.rmtree(ckpt)

@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import (
     list_log_versions,
-    live_files_df,
+    live_adds,
     read_delta_as_df,
     read_last_checkpoint,
 )
@@ -73,7 +73,7 @@ def _build_v2_checkpoint(spark, base, version):
     the file actions, UUID-named top-level parquet with
     protocol/metaData/checkpointMetadata/sidecar actions."""
     log = os.path.join(base, "_delta_log")
-    live = live_files_df(spark, base, version).collect()
+    live = list(live_adds(base, version).values())
     meta_row = None
     proto_row = None
     for v in range(version + 1):
@@ -200,7 +200,7 @@ def test_multipart_v1_checkpoint_read(spark, tmp_path):
     # it into two spec multi-part files
     from incubator_xtable_spark.sources.delta_source import write_checkpoint
 
-    write_checkpoint(spark, base, 1)
+    write_checkpoint(base, 1)
     classic = os.path.join(log, f"{1:020d}.checkpoint.parquet")
     df = spark.read.parquet(classic)
     rows = df.collect()
@@ -257,7 +257,7 @@ def test_log_compaction_preserves_late_removes(spark, tmp_path):
     for v in range(1, 4):
         os.remove(os.path.join(log, f"{v:020d}.json"))
     assert _rows(spark, base) == expected
-    live_paths = {r["path"] for r in live_files_df(spark, base).collect()}
+    live_paths = {r["path"] for r in list(live_adds(base).values())}
     assert victim not in live_paths
 
 

@@ -8,7 +8,7 @@ anti-join commit diff. The replay must equal it on tables exercising
 adds, removes, same-version remove+re-add (the DV commit shape),
 partition values, external paths, schema changes and time travel; with
 a classic, multi-part or v2+sidecar checkpoint in range, and after the
-log behind it expired — and it must run no Spark job.
+log behind it expired.
 
 The Spark pipeline that built Hudi index records is kept the same way,
 as the reference for the pyarrow writers, and so is the Spark inventory
@@ -16,7 +16,9 @@ projection (the `add.stats` parse, path anchoring and format tag) as the
 reference for the Delta source's Python stats parse. The sync tests pin
 the zero-job, zero-py4j paths: sources hand their inventories over as
 Arrow tables, and targets diff and commit those rows with no Spark job
-and no py4j command, also when a source hands over URI-form paths."""
+and no py4j command, also when a source hands over URI-form paths, and
+a Delta target commit that writes a checkpoint, DV files or a `.crc`
+fallback writes them on the driver too."""
 
 from __future__ import annotations
 
@@ -159,6 +161,19 @@ _VERSIONS = list(range(10))
 # ---------------------------------------------------------------------------
 
 
+# the columns of a live file row: the version it was added at, then the
+# add action's fields (dataChange is a change flag, not state)
+_LIVE_FIELDS = ["version", "path"] + [
+    f for f in DS._ACTION_TYPES["add"].fieldNames() if f not in ("path", "dataChange")
+]
+
+
+def _live_rows(base, version=None):
+    """``live_adds`` at ``version`` as rows in _LIVE_FIELDS, by path."""
+    live = DS.live_adds(base, version).values()
+    return sorted(({k: a[k] for k in _LIVE_FIELDS} for a in live), key=lambda d: d["path"])
+
+
 def _spark_actions(spark, base, version):
     """Every commit JSON up to ``version`` through Spark's JSON reader,
     tagged with the version in its file name."""
@@ -174,11 +189,11 @@ def _spark_live_files(spark, base, version):
         "version",
         F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
         F.col("add.path").isNotNull().alias("is_add"),
-        *[F.col(f"add.{c}").alias(c) for c in DS._live_files_schema().fieldNames()[3:]],
+        *[F.col(f"add.{c}").alias(c) for c in _LIVE_FIELDS[2:]],
     ).filter(F.col("path").isNotNull())
     w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
     latest = file_actions.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return latest.filter(F.col("is_add")).drop("rn")
+    return latest.filter(F.col("is_add")).drop("rn", "is_add")
 
 
 def _spark_purged_path(path_col, dv_col):
@@ -435,28 +450,15 @@ def _rows(df):
     return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda d: d["path"])
 
 
-def _schema_json(df):
-    return [f.jsonValue() for f in df.schema.fields]
-
-
 def test_live_files_match_spark_reference(spark, delta_table):
     for version in _VERSIONS:
-        with _spark_jobs(spark) as jobs:
-            replayed = DS.live_files_df(spark, delta_table, version)
-            rows = _rows(replayed)
-        assert jobs == [0]
-        reference = _spark_live_files(spark, delta_table, version)
-        assert _schema_json(replayed) == _schema_json(reference)
-        assert rows == _rows(reference), f"mismatch at version {version}"
-    assert _rows(DS.live_files_df(spark, delta_table)) == _rows(
-        DS.live_files_df(spark, delta_table, _VERSIONS[-1])
-    )
+        reference = _rows(_spark_live_files(spark, delta_table, version))
+        assert _live_rows(delta_table, version) == reference, f"mismatch at version {version}"
+    assert _live_rows(delta_table) == _live_rows(delta_table, _VERSIONS[-1])
 
 
 def test_live_files_dv_tie_add_wins(spark, delta_table):
-    live = {
-        r["path"]: r.asDict(recursive=True) for r in DS.live_files_df(spark, delta_table, 3).collect()
-    }
+    live = DS.live_adds(delta_table, 3)
     assert set(live) == {"a.parquet", "c.parquet", "d.parquet"}
     # the re-added a.parquet carries its DV (the add won the same-version tie)
     assert live["a.parquet"]["deletionVector"]["cardinality"] == 1
@@ -465,25 +467,30 @@ def test_live_files_dv_tie_add_wins(spark, delta_table):
 @pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
 def test_replay_with_checkpoint_in_range(spark, delta_table, monkeypatch, layout):
     """With a checkpoint at version 4 in range, and again once the log
-    behind it has expired, every view from 4 on replays with no Spark
-    job and equals the JSON-only reference. Fragments and sidecars hold
-    two actions each, so the multi-part and v2 layouts span several
-    files."""
+    behind it has expired, every view from 4 on replays to the JSON-only
+    reference. Writing the checkpoint runs no Spark job. Fragments and
+    sidecars hold two actions each, so the multi-part and v2 layouts span
+    several files."""
     from incubator_xtable_spark.sync.retention import delta_expire_log
 
     monkeypatch.setattr(DS, "_MULTIPART_ACTIONS_PER_FILE", 2)
     monkeypatch.setattr(DS, "_SIDECAR_ACTIONS_PER_FILE", 2)
     views = range(4, 10)
 
-    def state(version):
+    def without_version(rows):
+        return [{k: v for k, v in r.items() if k != "version"} for r in rows]
+
+    def state(live, version):
         return (
-            _rows(_spark_live_files(spark, delta_table, version).drop("version")),
-            DS.latest_metadata(spark, delta_table, version),
+            without_version(live),
+            DS.latest_action(delta_table, "metaData", version),
             DS.latest_protocol(delta_table, version),
         )
 
-    expected = {v: state(v) for v in views}
-    DS.write_checkpoint(spark, delta_table, 4, layout=layout)
+    expected = {v: state(_rows(_spark_live_files(spark, delta_table, v)), v) for v in views}
+    with _spark_jobs(spark) as jobs:
+        DS.write_checkpoint(delta_table, 4, layout=layout)
+    assert jobs == [0]
     log = os.path.join(delta_table, "_delta_log")
     if layout != "classic":
         parts = glob.glob(os.path.join(log, "*.checkpoint.*.parquet"))
@@ -493,17 +500,10 @@ def test_replay_with_checkpoint_in_range(spark, delta_table, monkeypatch, layout
         if expired:
             assert delta_expire_log(delta_table) == [0, 1, 2, 3, 4]
         for v in views:
-            with _spark_jobs(spark) as jobs:
-                live = DS.live_files_df(spark, delta_table, v)
-                got = (
-                    _rows(live.drop("version")),
-                    DS.latest_metadata(spark, delta_table, v),
-                    DS.latest_protocol(delta_table, v),
-                )
-            assert jobs == [0]
-            assert got == expected[v], f"version {v}, expired={expired}"
+            live = _live_rows(delta_table, v)
+            assert state(live, v) == expected[v], f"version {v}, expired={expired}"
             # state at or above the checkpoint is tagged with its version
-            assert {r["version"] for r in live.collect()} <= set(range(4, v + 1))
+            assert {r["version"] for r in live} <= set(range(4, v + 1))
 
 
 def test_malformed_log_line_fails_loudly(spark, delta_table):
@@ -512,30 +512,13 @@ def test_malformed_log_line_fails_loudly(spark, delta_table):
     log = os.path.join(delta_table, "_delta_log")
     _write_commit(log, 10, [{"add": {"path": "g.parquet", "size": "12"}}])
     with pytest.raises(ValueError, match=f"{10:020d}.json:1"):
-        DS.live_files_df(spark, delta_table)
+        DS.live_adds(delta_table)
     with open(os.path.join(log, f"{10:020d}.json"), "w", encoding="utf-8") as fh:
         fh.write('{"commitInfo": {}}\n{"add": {"path": \n')
     with pytest.raises(ValueError, match=f"{10:020d}.json:2"):
-        DS.live_files_df(spark, delta_table)
+        DS.live_adds(delta_table)
     # views that do not reach the bad commit still replay
-    assert len(_rows(DS.live_files_df(spark, delta_table, 9))) == 4
-
-
-def test_local_frame_collects_with_no_job(spark):
-    """A driver-built frame, and a projection over it, collects the rows
-    with no Spark job: the projection folds into the LocalRelation at
-    optimization. The same rows through spark.createDataFrame(list) plan
-    as a LogicalRDD."""
-    from incubator_xtable_spark.model.core import local_frame
-
-    rows = [(i, f"p{i}") for i in range(10)]
-    rdd_backed = spark.createDataFrame(rows, "n LONG, physical_path STRING")
-    local = local_frame(spark, rows, rdd_backed.schema)
-    plain = sorted(r["physical_path"] for r in rdd_backed.collect())
-    with _spark_jobs(spark) as jobs:
-        folded = sorted(r["physical_path"] for r in local.select("physical_path").collect())
-    assert jobs == [0]
-    assert plain == folded
+    assert len(DS.live_adds(delta_table, 9)) == 4
 
 
 def _change_rows(change):
@@ -861,7 +844,7 @@ def test_commit_diff_reads_the_commit_not_the_checkpoint(spark, delta_table):
     checkpoint — still equals the checkpoint-free diff."""
     src = DS.DeltaConversionSource(spark, delta_table)
     expected = {v: _change_rows(src._table_change_impl(str(v))) for v in _VERSIONS}
-    DS.write_checkpoint(spark, delta_table, 4)
+    DS.write_checkpoint(delta_table, 4)
     for version in _VERSIONS:
         assert _change_rows(src._table_change_impl(str(version))) == expected[version], version
 
@@ -952,7 +935,7 @@ def test_incremental_sync_runs_no_spark_job(spark, delta_backlog, checkpoint):
 
     root, saved, expected = delta_backlog
     if checkpoint:
-        DS.write_checkpoint(spark, root, 1)
+        DS.write_checkpoint(root, 1)
     _restore_targets(root, saved)
     with _spark_jobs(spark) as jobs:
         _incremental_sync(spark, root)
@@ -974,7 +957,7 @@ def test_incremental_sync_issues_no_py4j_command(spark, delta_backlog, checkpoin
     a checkpoint at the first backlog commit."""
     root, saved, _ = delta_backlog
     if checkpoint:
-        DS.write_checkpoint(spark, root, 1)
+        DS.write_checkpoint(root, 1)
     _restore_targets(root, saved)
     with _py4j_commands(spark) as sent:
         _incremental_sync(spark, root)
@@ -1280,3 +1263,95 @@ def test_full_sync_of_uri_paths_is_a_no_op_diff(spark, tmp_path, fmt, scheme):
             s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
         )["summary"]
         assert (summary["added-data-files"], summary["deleted-data-files"]) == ("0", "0")
+
+
+def _frozen(source):
+    """``source`` handing over the snapshot it has now, taken once here,
+    so that a sync around it measures the targets alone."""
+    snapshot = source.get_current_snapshot()
+    source.get_current_snapshot = lambda: snapshot
+    return source
+
+
+def _driver_only_delta_commit(spark, source, target):
+    """FULL-sync ``source`` into the Delta ``target``, asserting that the
+    commit runs no Spark job and sends py4j no command."""
+    from incubator_xtable_spark.model.core import TableFormat
+
+    source = _frozen(source)
+    with _spark_jobs(spark) as jobs, _py4j_commands(spark) as sent:
+        _full_sync(spark, source, {TableFormat.DELTA: target})
+    assert (jobs, sent) == ([0], [])
+
+
+def _parquet_source(spark, root):
+    from incubator_xtable_spark.model.core import InternalPartitionField
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+
+    return ParquetConversionSource(spark, root, name="t", partition_fields=[InternalPartitionField("p")])
+
+
+@pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
+def test_delta_checkpoint_commit_is_driver_only(spark, tmp_path, monkeypatch, layout):
+    """A Delta target commit that reaches ``checkpoint_interval`` writes
+    its checkpoint on the driver: no Spark job, no py4j command, in each
+    layout (two actions per fragment or sidecar, so the split layouts
+    write several files)."""
+    from incubator_xtable_spark.model.conformance import check_delta_conformance
+    from incubator_xtable_spark.model.core import TableFormat
+    from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
+
+    monkeypatch.setattr(DS, "_MULTIPART_ACTIONS_PER_FILE", 2)
+    monkeypatch.setattr(DS, "_SIDECAR_ACTIONS_PER_FILE", 2)
+    root = str(tmp_path / "table")
+
+    def target():
+        return DeltaConversionTarget(spark, root, checkpoint_interval=1, checkpoint_layout=layout)
+
+    _write_data_files(root, 0, 4, 1_700_000_000)
+    _full_sync(spark, _parquet_source(spark, root), {TableFormat.DELTA: target()})
+    assert DS.read_last_checkpoint(root) is None
+    files = _write_data_files(root, 4, 2, 1_700_000_001)
+    _driver_only_delta_commit(spark, _parquet_source(spark, root), target())
+    assert DS.read_last_checkpoint(root)["version"] == 1
+    assert len(DS.live_adds(root)) == 6 and files[0][len(root) + 1 :] in DS.live_adds(root)
+    assert check_delta_conformance(spark, root).passed
+
+
+def test_delta_dv_commit_is_driver_only(spark, tmp_path):
+    """Iceberg v2 position deletes reach a Delta target as row deletes;
+    the commit writes their DV files on the driver: no Spark job, no py4j
+    command, and the victim file's add carries a 3-row DV."""
+    from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+    from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
+
+    from .test_row_delete_conversion import _iceberg_deleted_table
+
+    d, victim = _iceberg_deleted_table(spark, tmp_path)
+    source = IcebergConversionSource(spark, d, name="icedel", expose_row_deletes=True)
+    _driver_only_delta_commit(spark, source, DeltaConversionTarget(spark, d))
+    dvs = [a["deletionVector"] for a in DS.live_adds(d).values() if DS._dv_of(a)]
+    assert [(dv["storageType"], dv["cardinality"]) for dv in dvs] == [("u", 3)]
+    assert DS.read_delta_as_df(spark, d).count() == 17
+
+
+def test_delta_checksum_fallback_is_driver_only(spark, tmp_path):
+    """Checksums enabled mid-table: the first `.crc` has no predecessor,
+    so the commit sums the live state of one log replay, on the driver:
+    no Spark job, no py4j command."""
+    from incubator_xtable_spark.model.core import TableFormat
+    from incubator_xtable_spark.targets.delta_target import (
+        DeltaConversionTarget,
+        read_version_checksum,
+    )
+
+    root = str(tmp_path / "table")
+    _write_data_files(root, 0, 4, 1_700_000_000)
+    _full_sync(spark, _parquet_source(spark, root), {TableFormat.DELTA: DeltaConversionTarget(spark, root)})
+    assert read_version_checksum(root, 0) is None
+    _write_data_files(root, 4, 2, 1_700_000_001)
+    target = DeltaConversionTarget(spark, root, version_checksum=True)
+    _driver_only_delta_commit(spark, _parquet_source(spark, root), target)
+    live = DS.live_adds(root).values()
+    crc = read_version_checksum(root, 1)
+    assert (crc["numFiles"], crc["tableSizeBytes"]) == (6, sum(a["size"] for a in live))

@@ -143,9 +143,9 @@ def test_incremental_log_commits_swap_shadows(spark, tmp_path, mor_base):
     assert res.mode == SyncMode.INCREMENTAL
     assert _rows(read_delta_as_df(spark, delta_dir)) == merged
     # the live delta file set is now the compacted base, no shadows
-    from incubator_xtable_spark.sources.delta_source import live_files_df
+    from incubator_xtable_spark.sources.delta_source import live_adds
 
-    paths = [r["path"] for r in live_files_df(spark, delta_dir).collect()]
+    paths = list(live_adds(delta_dir))
     assert any("g1_0-0-0_004" in p for p in paths)
     assert not any(".compacted-" in p for p in paths)
 

@@ -166,7 +166,7 @@ def test_transform_roundtrip_through_delta_and_iceberg(spark, tmp_path):
     import json as _json
 
     from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
-    from incubator_xtable_spark.sources.delta_source import DeltaConversionSource, latest_metadata
+    from incubator_xtable_spark.sources.delta_source import DeltaConversionSource, latest_action
     from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
     from incubator_xtable_spark.sync.controller import ConversionController
     from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
@@ -193,7 +193,7 @@ def test_transform_roundtrip_through_delta_and_iceberg(spark, tmp_path):
         assert res.status == SyncStatusCode.SUCCESS, (fmt, res.error)
 
     # Delta: generated column present with generationExpression + protocol v4
-    meta = latest_metadata(spark, d)
+    meta = latest_action(d, "metaData")
     gen_name = generated_column_name(PartitionTransformType.DAY, "o_orderdate")
     assert meta["partitionColumns"] == [gen_name]
     fields = {f["name"]: f for f in _json.loads(meta["schemaString"])["fields"]}

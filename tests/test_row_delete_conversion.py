@@ -779,9 +779,9 @@ def test_removed_dv_file_not_resurrected(spark, tmp_path):
         row_deletes=deletes({"B.parquet": [0]}),
     )
 
-    from incubator_xtable_spark.sources.delta_source import live_files_df
+    from incubator_xtable_spark.sources.delta_source import live_adds
 
-    live = {r["path"]: r.asDict() for r in live_files_df(spark, base).collect()}
+    live = live_adds(base)
     assert "A.parquet" not in live, "removed DV'd file resurrected by re-add loop"
     assert set(live) == {"B.parquet", "C.parquet"}
     dv_b = live["B.parquet"].get("deletionVector")

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from incubator_xtable_spark.model.core import SyncMode, SyncStatusCode, TableFormat
 from incubator_xtable_spark.sources.delta_source import (
-    latest_metadata,
+    latest_action,
     read_delta_as_df,
 )
 from incubator_xtable_spark.sources.hudi_source import read_hudi_as_df
@@ -57,7 +57,7 @@ def test_schema_evolution_delta_and_hudi(spark, evolving_dir):
         assert res.mode == SyncMode.INCREMENTAL
 
     # delta metaData action carries the evolved schema
-    meta = latest_metadata(spark, evolving_dir)
+    meta = latest_action(evolving_dir, "metaData")
     evolved_fields = [f["name"] for f in json.loads(meta["schemaString"])["fields"]]
     assert "score" in evolved_fields
 

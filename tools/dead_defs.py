@@ -11,6 +11,7 @@ file under incubator_xtable_spark/, tests/ and perfbench/ plus
 loadtest.py, bench.py and __spark_entry__.py. Comments and plain strings
 do not count; f-string replacement fields do. A name whose only use is
 its own definition is printed as ``path:line: name``.
+``tests/test_dead_defs.py`` runs the same scan as a test.
 """
 
 from __future__ import annotations
@@ -69,17 +70,26 @@ def _definitions(path: str, text: str):
             yield node.lineno, node.target.id
 
 
-def main(root: str) -> None:
+def dead_definitions(root: str) -> list[tuple[str, int, str]]:
+    """(path relative to ``root``, line, name) of every definition whose
+    only use is its own."""
     sources = _sources(root)
     counts = _use_counts(sources)
     engine = os.path.join(root, "incubator_xtable_spark")
+    out = []
     for path in sorted(sources):
         rel = os.path.relpath(path, engine)
         if rel.startswith("..") or rel.split(os.sep)[0] in _FROZEN:
             continue
         for line, name in _definitions(path, sources[path]):
             if not name.startswith("__") and counts.get(name, 0) <= 1:
-                print(f"{os.path.relpath(path, root)}:{line}: {name}")
+                out.append((os.path.relpath(path, root), line, name))
+    return out
+
+
+def main(root: str) -> None:
+    for path, line, name in dead_definitions(root):
+        print(f"{path}:{line}: {name}")
 
 
 if __name__ == "__main__":
