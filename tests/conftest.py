@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import pytest
@@ -55,8 +56,20 @@ def register_duck_views(con, sf_dir: str) -> None:
 # and filtered invocations (-k/-m, explicit paths) are untouched.
 #
 # Shard files must be self-contained: tmp_path-scoped state only, no fixed
-# ports (the socket tests bind port 0), no cross-file fixtures.
+# ports (the socket tests bind port 0), no cross-file fixtures — and no
+# memory beyond the heap budget below.
 # XT_TEST_SHARDS=off forces the old serial behavior.
+#
+# Heap budget: a sharded run starts len(_SHARDS) + 1 Spark JVMs at once (one
+# per shard plus the main process), and get_spark's 8g default heap for each
+# overcommits a 16 GB host until the kernel OOM killer takes one (its shard
+# then reports a block of py4j ConnectionRefusedErrors). So when sharding
+# engages and SPARK_DRIVER_MEMORY is unset, every shard and the main process
+# get SPARK_DRIVER_MEMORY = min(8g, MemAvailable / (2 * (len(_SHARDS) + 1))):
+# an equal share of the memory free at launch, half of it left for each JVM's
+# non-heap memory and Python workers. The main session is built lazily by the
+# `spark` fixture, after collection, so it picks the value up. An explicit
+# SPARK_DRIVER_MEMORY wins; single-file and filtered runs set nothing.
 # ---------------------------------------------------------------------------
 
 _SHARDS: dict[str, list[str]] = {
@@ -104,6 +117,20 @@ _SHARDS: dict[str, list[str]] = {
 
 _SHARD_PROCS: dict[str, dict] = {}
 
+_HEAP_CAP_MB = 8 * 1024  # get_spark's default spark.driver.memory
+
+
+def _shard_heap(meminfo: str = "/proc/meminfo") -> str | None:
+    """Driver heap for each JVM of a sharded run (see the heap budget in the
+    sharding note), or None where MemAvailable cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            avail_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return None
+    share_mb = avail_kb // 1024 // (2 * (len(_SHARDS) + 1))
+    return f"{min(_HEAP_CAP_MB, share_mb)}m"
+
 
 def _shard_logs_dir() -> str:
     import tempfile
@@ -111,6 +138,20 @@ def _shard_logs_dir() -> str:
     d = os.path.join(tempfile.gettempdir(), f"xt_test_shards_{os.getpid()}")
     os.makedirs(d, exist_ok=True)
     return d
+
+
+def _shard_env(environ=os.environ) -> dict:
+    """The shards' environment. Sets the heap budget in ``environ`` too, so
+    the main process's lazily built session gets the same heap."""
+    if "SPARK_DRIVER_MEMORY" not in environ:
+        heap = _shard_heap()
+        if heap:
+            environ["SPARK_DRIVER_MEMORY"] = heap
+    env = dict(environ, XT_TEST_SHARDS="off")
+    # each shard JVM at 8 cores: same results, less scheduler churn when
+    # 6 sessions share the box (the files are latency-bound, not CPU-bound)
+    env.setdefault("SPARK_GRAFT_CPUS", "8")
+    return env
 
 
 def pytest_collection_modifyitems(config, items):
@@ -129,10 +170,7 @@ def pytest_collection_modifyitems(config, items):
 
     logs = _shard_logs_dir()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, XT_TEST_SHARDS="off")
-    # each shard JVM at 8 cores: same results, less scheduler churn when
-    # 6 sessions share the box (the files are latency-bound, not CPU-bound)
-    env.setdefault("SPARK_GRAFT_CPUS", "8")
+    env = _shard_env()
     for name, files in _SHARDS.items():
         log_path = os.path.join(logs, f"{name}.log")
         with open(log_path, "w") as fh:
@@ -156,9 +194,36 @@ def pytest_collection_modifyitems(config, items):
     config.hook.pytest_deselected(items=deselected)
 
 
+_PROGRESS = re.compile(r"^([.FEsxX]+) *(?:\[ *\d+%\])?$", re.M)
+_SECTION = re.compile(r"^_+ [^_ ].* _+$", re.M)  # `___ test_x ___`
+_SECTION_END = re.compile(r"^(?:_+ [^_ ].* _+|=+ .* =+)$", re.M)
+
+
+def first_failure(log: str) -> str:
+    """The report section of the first test, in run order, that failed or
+    errored in a ``pytest -q`` log, or "" when there is none.
+
+    pytest reports all ERRORS sections before all FAILURES sections, so a
+    shard that lost its JVM lists later tests' ConnectionRefusedErrors first;
+    the progress characters (``..FE``) say which kind came first, and the
+    k-th ``F``/``E`` is the k-th section under its banner.
+    """
+    progress = "".join(m.group(1) for m in _PROGRESS.finditer(log))
+    first = next((c for c in progress if c in "FE"), None)
+    if first is None:
+        return ""
+    banner = re.search(rf"^=+ {'FAILURES' if first == 'F' else 'ERRORS'} =+$", log, re.M)
+    head = banner and _SECTION.search(log, banner.end())
+    if not head:
+        return ""
+    end = _SECTION_END.search(log, head.end())
+    return log[head.start() : end.start() if end else len(log)].rstrip()
+
+
 def wait_shards(timeout_s: int = 2400):
     """Block until every shard subprocess finishes; returns
-    {name: (returncode, log_tail)} or None when sharding never engaged."""
+    {name: (returncode, log_path, log_text)} or None when sharding never
+    engaged."""
     import time as _time
 
     if not _SHARD_PROCS:
@@ -174,8 +239,8 @@ def wait_shards(timeout_s: int = 2400):
             proc.wait()
         try:
             with open(info["log"], "r", errors="replace") as fh:
-                tail = fh.read()[-4000:]
+                log = fh.read()
         except OSError:
-            tail = "<no shard log>"
-        results[name] = (proc.returncode, tail)
+            log = "<no shard log>"
+        results[name] = (proc.returncode, info["log"], log)
     return results
