@@ -1427,6 +1427,12 @@ def _check_iceberg_manifest_file(
         status = rec.get("status")
         if status not in (0, 1, 2):
             report.add("ICE_ENTRY_STATUS", path, f"status must be 0/1/2, got {status}")
+        # only ADDED entries may leave sequence numbers to the manifest
+        # (spec "Sequence Number Inheritance"); a reader has nothing to
+        # give an EXISTING or DELETED entry written with nulls
+        for key in ("sequence_number", "file_sequence_number"):
+            if status in (0, 2) and rec.get(key) is None:
+                report.add("ICE_ENTRY_SEQ_NULL", path, f"status {status} entry with null {key}")
         df = rec.get("data_file")
         if not isinstance(df, dict):
             report.add("ICE_ENTRY_DATA_FILE", path, "data_file required")

@@ -4,6 +4,7 @@ written by our target or any spec-conforming writer of the same subset.
 
 Reference parity:
 - snapshot scan (planFiles w/ stats) iceberg/IcebergConversionSource.java:90-199
+  (live entries, inheritance applied: model/iceberg_manifests)
 - commit diff (added/removedDataFiles)
                                      iceberg/IcebergConversionSource.java:204-232
 - commits backlog (parentId chain)   iceberg/IcebergConversionSource.java:235-261
@@ -41,7 +42,6 @@ from incubator_xtable_spark.model.core import (
     DataLayoutStrategy,
     FILE_INVENTORY_ARROW,
     InstantsForIncrementalSync,
-    InternalPartitionField,
     InternalSnapshot,
     InternalTable,
     TableChange,
@@ -50,8 +50,8 @@ from incubator_xtable_spark.model.core import (
     column,
 )
 from incubator_xtable_spark.model import file_formats as _ff
-from incubator_xtable_spark.model.avro_codec import read_ocf
 from incubator_xtable_spark.model.files_diff import with_file_paths
+from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 from incubator_xtable_spark.targets.iceberg_target import (
     iceberg_fields_to_schema,
@@ -211,64 +211,6 @@ class IcebergConversionSource:
             )
         return out
 
-    # -- snapshots ---------------------------------------------------------
-
-    def _snapshot_by_id(self, meta: dict, snapshot_id: int) -> Optional[dict]:
-        return next((s for s in meta.get("snapshots", []) if s["snapshot-id"] == snapshot_id), None)
-
-    def _live_entries(self, meta: dict, snapshot_id: int) -> list[dict]:
-        """Live DATA entries (data_file.content 0/absent)."""
-        return self._entries_by_content(meta, snapshot_id)[0]
-
-    def _live_delete_entries(self, meta: dict, snapshot_id: int) -> list[dict]:
-        """Live v2 DELETE entries (position content==1, equality content==2)."""
-        return self._entries_by_content(meta, snapshot_id)[1]
-
-    def _spec_field_mapping(self, meta: dict, mf_spec_id: int) -> list[tuple[str, Optional[str]]]:
-        return spec_field_mapping(meta, mf_spec_id)
-
-    def _entries_by_content(self, meta: dict, snapshot_id: int) -> tuple[list[dict], list[dict]]:
-        snap = self._snapshot_by_id(meta, snapshot_id)
-        if snap is None:
-            return [], []
-        default_spec = meta.get("default-spec-id", 0)
-        mappings: dict[int, list[tuple[str, Optional[str]]]] = {}
-        data: list[dict] = []
-        deletes: list[dict] = []
-        for mf in read_ocf(snap["manifest-list"])[0]:
-            # partition-spec evolution: a manifest written under an older
-            # spec stores THAT spec's partition tuple; resolve it into the
-            # default spec's field names (null where the old spec lacks a
-            # field) so every consumer sees ONE unified representation
-            mf_spec = mf.get("partition_spec_id")
-            mapping = None
-            if mf_spec is not None and mf_spec != default_spec:
-                if mf_spec not in mappings:
-                    mappings[mf_spec] = self._spec_field_mapping(meta, mf_spec)
-                mapping = mappings[mf_spec]
-            # v3 row lineage inheritance (spec field 520 / 142): a data
-            # file with null first_row_id takes the manifest's
-            # first_row_id plus the record counts of the null-id data
-            # files before it in the manifest — materialized here so
-            # every consumer sees explicit ids
-            running = mf.get("first_row_id")
-            for entry in read_ocf(mf["manifest_path"])[0]:
-                if entry["status"] == 2:
-                    continue
-                if mapping is not None:
-                    part = entry["data_file"].get("partition") or {}
-                    entry["data_file"]["partition"] = {
-                        dn: (part.get(on) if on is not None else None)
-                        for dn, on in mapping
-                    }
-                content = entry["data_file"].get("content") or 0
-                if content == 0 and running is not None:
-                    if entry["data_file"].get("first_row_id") is None:
-                        entry["data_file"]["first_row_id"] = running
-                        running += int(entry["data_file"].get("record_count") or 0)
-                (deletes if content in (1, 2) else data).append(entry)
-        return data, deletes
-
     # -- v2 position + equality deletes -------------------------------------
 
     def _positions_df(
@@ -292,7 +234,7 @@ class IcebergConversionSource:
         dv_items = []
         for e in delete_entries:
             df = e["data_file"]
-            seq = int(e.get("sequence_number") or 0)
+            seq = e["sequence_number"]
             if (df.get("file_format") or "").upper() == "PUFFIN" or df.get(
                 "referenced_data_file"
             ):
@@ -369,7 +311,7 @@ class IcebergConversionSource:
             if pf.transform == PartitionTransformType.VALUE
         }
         data_seq = {
-            e["data_file"]["file_path"]: int(e.get("sequence_number") or 0)
+            e["data_file"]["file_path"]: e["sequence_number"]
             for e in data_entries
         }
         pv_raw = {
@@ -403,7 +345,7 @@ class IcebergConversionSource:
                     )
                 fields.append(f)
             cols = [f.name for f in fields]
-            max_seq = max(int(e.get("sequence_number") or 0) for e in group)
+            max_seq = max(e["sequence_number"] for e in group)
             cand = [p for p, s in data_seq.items() if s < max_seq]
             if not cand:
                 continue
@@ -455,7 +397,7 @@ class IcebergConversionSource:
                 p = (
                     self.spark.read.schema(del_schema)
                     .parquet(dfile["file_path"])
-                    .withColumn("delete_seq", F.lit(int(e.get("sequence_number") or 0)))
+                    .withColumn("delete_seq", F.lit(e["sequence_number"]))
                     .withColumn(
                         "del_scope", F.lit(_scope(dfile.get("partition") or {})).cast("string")
                     )
@@ -529,7 +471,7 @@ class IcebergConversionSource:
         if not delete_entries:
             return {}
         data_seq = {
-            e["data_file"]["file_path"]: int(e.get("sequence_number") or 0)
+            e["data_file"]["file_path"]: e["sequence_number"]
             for e in data_entries
         }
         seq_rows = [(p, s) for p, s in data_seq.items()]
@@ -580,7 +522,7 @@ class IcebergConversionSource:
             reader="iceberg delete-shadow purge",
         )
         data_seq = {
-            e["data_file"]["file_path"]: int(e.get("sequence_number") or 0)
+            e["data_file"]["file_path"]: e["sequence_number"]
             for e in data_entries
         }
         positions = self._positions_df(delete_entries, data_entries)
@@ -625,7 +567,7 @@ class IcebergConversionSource:
         if not todo:
             return
         data_seq = {
-            e["data_file"]["file_path"]: int(e.get("sequence_number") or 0)
+            e["data_file"]["file_path"]: e["sequence_number"]
             for e in data_entries
         }
         positions = self._positions_df(delete_entries, data_entries)
@@ -751,7 +693,7 @@ class IcebergConversionSource:
                     "file_format": str(df.get("file_format") or "PARQUET").upper(),
                     "file_size": int(df.get("file_size_in_bytes") or 0),
                     "record_count": int(df.get("record_count") or 0),
-                    "sequence_number": int(e.get("sequence_number") or 0),
+                    "sequence_number": e["sequence_number"],
                     "equality_columns": cols,
                     "partition": part,
                 }
@@ -759,7 +701,7 @@ class IcebergConversionSource:
         return {
             "files": files,
             "data_sequences": {
-                e["data_file"]["file_path"]: int(e.get("sequence_number") or 0)
+                e["data_file"]["file_path"]: e["sequence_number"]
                 for e in data_entries
             },
         }
@@ -768,7 +710,7 @@ class IcebergConversionSource:
         """Data entries -> {file_path: first_row_id} for the row-lineage
         channel; refuses when any live data file lacks an id (not a v3
         row-lineage table — inheritance was already materialized by
-        _entries_by_content, so null here means genuinely unassigned)."""
+        model/iceberg_manifests, so null here means genuinely unassigned)."""
         out: dict = {}
         missing = []
         for e in entries:
@@ -789,7 +731,7 @@ class IcebergConversionSource:
         meta = self._meta()
         table = self.get_current_table()
         snapshot_id = self._head_snapshot_id(meta)
-        entries, deletes = self._entries_by_content(meta, snapshot_id)
+        entries, deletes = live_entries(meta, snapshot_id)
         eq_entries: list[dict] = []
         if self.expose_equality_deletes:
             eq_entries = [e for e in deletes if (e["data_file"].get("content") or 0) == 2]
@@ -933,11 +875,11 @@ class IcebergConversionSource:
         meta = self._meta()
         last = int(instants.last_sync_instant) if instants.last_sync_instant.isdigit() else None
         chain: list[str] = []
-        cur = self._snapshot_by_id(meta, self._head_snapshot_id(meta))
+        cur = snapshot_by_id(meta, self._head_snapshot_id(meta))
         while cur is not None and cur["snapshot-id"] != last:
             chain.append(str(cur["snapshot-id"]))
             parent = cur.get("parent-snapshot-id")
-            cur = self._snapshot_by_id(meta, parent) if parent is not None else None
+            cur = snapshot_by_id(meta, parent) if parent is not None else None
         return CommitsBacklog(commits_to_process=list(reversed(chain)))
 
     def is_incremental_sync_safe_from(self, instant: str) -> bool:
@@ -947,14 +889,14 @@ class IcebergConversionSource:
         if not instant.isdigit():
             return False
         target = int(instant)
-        cur = self._snapshot_by_id(meta, self._head_snapshot_id(meta))
+        cur = snapshot_by_id(meta, self._head_snapshot_id(meta))
         while cur is not None:
             if cur["snapshot-id"] == target:
                 return True
             parent = cur.get("parent-snapshot-id")
             if parent is None:
                 return False
-            cur = self._snapshot_by_id(meta, parent)
+            cur = snapshot_by_id(meta, parent)
         return False
 
     def get_table_change_for_commit(self, commit: str) -> TableChange:
@@ -974,13 +916,13 @@ class IcebergConversionSource:
         meta = self._meta()
         table = self.get_current_table()
         snapshot_id = int(commit)
-        snap = self._snapshot_by_id(meta, snapshot_id)
+        snap = snapshot_by_id(meta, snapshot_id)
 
         if self.expose_row_deletes:
             # raw-path diff; the commit's full applicable delete map rides
             # on row_deletes (targets supersede by stem, so re-stating an
             # unchanged set is a no-op and a changed set swaps files)
-            cur_data, cur_dels = self._entries_by_content(meta, snapshot_id)
+            cur_data, cur_dels = live_entries(meta, snapshot_id)
             eq_entries: list[dict] = []
             if self.expose_equality_deletes:
                 eq_entries = [
@@ -991,7 +933,7 @@ class IcebergConversionSource:
                 ]
             parent = snap.get("parent-snapshot-id") if snap else None
             prev_data, _ = (
-                self._entries_by_content(meta, parent) if parent is not None else ([], [])
+                live_entries(meta, parent) if parent is not None else ([], [])
             )
             cur_paths = {e["data_file"]["file_path"] for e in cur_data}
             prev_paths = {e["data_file"]["file_path"] for e in prev_data}
@@ -1019,7 +961,7 @@ class IcebergConversionSource:
         def eff_view(sid: Optional[int], materialize: bool):
             if sid is None:
                 return {}, {}
-            data, dels = self._entries_by_content(meta, sid)
+            data, dels = live_entries(meta, sid)
             affected = self._applicable_deletes(data, dels)
             if affected and materialize:
                 self._materialize_delete_shadows(affected, dels, data)
@@ -1056,51 +998,6 @@ class IcebergConversionSource:
         meta = self._meta()
         raw = (meta.get("properties") or {}).get(XTABLE_METADATA_KEY)
         return TableSyncMetadata.from_json(raw) if raw else None
-
-
-def spec_field_mapping(meta: dict, mf_spec_id: int) -> list:
-    """Partition-spec EVOLUTION resolution: how a manifest written under
-    spec ``mf_spec_id`` maps into the table's DEFAULT spec representation
-    — [(default_field_name, old_field_name|None)]. Match by partition
-    field-id (stable across evolution), falling back to
-    (source-id, transform). A default-spec field absent from the old
-    spec resolves to None: per the Iceberg spec's read semantics, files
-    written before a partition field was added have null for it.
-    Old-spec fields absent from the default spec drop (removed
-    partition fields). This EXCEEDS the reference, which reads every
-    manifest with only the current spec and silently mis-maps old
-    manifests (ref IcebergDataFileExtractor.java:174,207,
-    IcebergPartitionSpecExtractor.java:1-172). Module-level and
-    Spark-free so the streaming data source shares it."""
-    specs_by_id = {s.get("spec-id", 0): s for s in meta.get("partition-specs", [])}
-    old = specs_by_id.get(mf_spec_id)
-    if old is None:
-        raise ValueError(
-            f"manifest references partition spec {mf_spec_id}, which is "
-            f"not in metadata.json partition-specs ({sorted(specs_by_id)})"
-        )
-    default_fields = (
-        specs_by_id.get(meta.get("default-spec-id", 0)) or {"fields": []}
-    ).get("fields", [])
-    old_fields = old.get("fields", [])
-    by_fid = {
-        f.get("field-id"): f for f in old_fields if f.get("field-id") is not None
-    }
-    out = []
-    for f in default_fields:
-        m = by_fid.get(f.get("field-id"))
-        if m is None:
-            m = next(
-                (
-                    g
-                    for g in old_fields
-                    if g.get("source-id") == f.get("source-id")
-                    and g.get("transform") == f.get("transform")
-                ),
-                None,
-            )
-        out.append((f["name"], m["name"] if m is not None else None))
-    return out
 
 
 def _name_mapped_fields(
@@ -1285,7 +1182,7 @@ def read_iceberg_as_df(
     ``with_row_ids``: on a v3 row-lineage table, append ``_row_id`` =
     data file ``first_row_id`` + physical row position (the spec's row
     lineage derivation; inherited manifest ids are materialized by
-    `_entries_by_content`). Stable across commits, rewrites and
+    `model/iceberg_manifests`). Stable across commits, rewrites and
     deletes — the Iceberg twin of read_delta_as_df's Row Tracking
     reads. Parquet-only (positions key on _metadata.row_index)."""
     src = IcebergConversionSource(spark, base_path, ref=ref)
@@ -1296,7 +1193,7 @@ def read_iceberg_as_df(
     # reads with THAT schema (spec: snapshots record their schema-id and
     # `schemas` keeps the history) — columns added later don't appear,
     # columns since dropped come back
-    snap_meta = src._snapshot_by_id(meta, sid)
+    snap_meta = snapshot_by_id(meta, sid)
     snap_schema_id = (snap_meta or {}).get("schema-id")
     if snap_schema_id is not None and snap_schema_id != meta.get("current-schema-id"):
         hist = next(
@@ -1313,7 +1210,7 @@ def read_iceberg_as_df(
             table = _dc_replace(
                 table, read_schema=iceberg_fields_to_schema(hist["fields"])
             )
-    entries, delete_entries = src._entries_by_content(meta, sid)
+    entries, delete_entries = live_entries(meta, sid)
     if prune and entries:
         entries = _prune_iceberg_entries(entries, table, prune)
     if not entries:
@@ -1403,7 +1300,7 @@ def read_iceberg_as_df(
         # rule delete_seq >= data_seq — no driver-side positions
         seq_df = spark.createDataFrame(
             [
-                (e["data_file"]["file_path"], int(e.get("sequence_number") or 0))
+                (e["data_file"]["file_path"], e["sequence_number"])
                 for e in entries
             ],
             "file_path STRING, data_seq LONG",
@@ -1469,7 +1366,7 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
     src = IcebergConversionSource(spark, base_path)
     meta = src._meta()
     table = src.get_current_table()
-    snap = src._snapshot_by_id(meta, snapshot_id)
+    snap = snapshot_by_id(meta, snapshot_id)
     if snap is None:
         raise ValueError(f"no snapshot {snapshot_id} in {base_path}")
     if (snap.get("summary") or {}).get("operation") == "replace":
@@ -1484,16 +1381,16 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
         )
         return spark.createDataFrame([], empty_schema)
     parent = snap.get("parent-snapshot-id")
-    if parent is not None and src._snapshot_by_id(meta, parent) is None:
+    if parent is not None and snapshot_by_id(meta, parent) is None:
         # an expired parent would silently turn the whole table into
         # "inserts" — refuse instead (same contract as an expired cursor)
         raise ValueError(
             f"snapshot {snapshot_id}'s parent {parent} has been expired; "
             "its changelog can no longer be derived"
         )
-    cur_data, cur_dels = src._entries_by_content(meta, snapshot_id)
+    cur_data, cur_dels = live_entries(meta, snapshot_id)
     prev_data, prev_dels = (
-        src._entries_by_content(meta, parent) if parent is not None else ([], [])
+        live_entries(meta, parent) if parent is not None else ([], [])
     )
     _ff.require_parquet(
         (
@@ -1521,7 +1418,7 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
         if not dels or not data:
             return None
         seq_df = spark.createDataFrame(
-            [(e["data_file"]["file_path"], int(e.get("sequence_number") or 0)) for e in data],
+            [(e["data_file"]["file_path"], e["sequence_number"]) for e in data],
             "file_path STRING, data_seq LONG",
         )
         return (

@@ -82,17 +82,16 @@ def _commits_after(
             )
         return [str(s) for s in range(floor + 1, latest + 1)]
     if fmt == "ICEBERG":
-        from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+        from incubator_xtable_spark.model.iceberg_manifests import snapshot_by_id
+        from incubator_xtable_spark.streaming.iceberg_cdc_datasource import _py_meta
 
-        src = IcebergConversionSource(spark, base_path)
-        meta = src._meta()
+        meta = _py_meta(base_path)
         chain: list[str] = []
-        cur = src._snapshot_by_id(meta, meta.get("current-snapshot-id"))
+        cur = snapshot_by_id(meta, meta.get("current-snapshot-id"))
         stop = int(after) if after is not None else None
         while cur is not None and cur["snapshot-id"] != stop:
             chain.append(str(cur["snapshot-id"]))
-            parent = cur.get("parent-snapshot-id")
-            cur = src._snapshot_by_id(meta, parent) if parent is not None else None
+            cur = snapshot_by_id(meta, cur.get("parent-snapshot-id"))
         if stop is not None and cur is None and after is not None:
             raise ValueError(
                 f"cursor snapshot {after} is no longer in the chain (expired); "

@@ -4,9 +4,10 @@ changelog source for Iceberg tables (Python Data Source API).
 The delta_cdf source's sibling, enabled by r6's pure-python Avro OCF
 codec: offsets and per-snapshot planning replay the HadoopTables
 metadata tree (version-hint -> metadata.json -> manifest-list ->
-manifests) entirely in python in the data-source driver worker —
-partition-spec evolution resolved per manifest via
-iceberg_source.spec_field_mapping — and each planned partition reads
+manifests) entirely in python in the data-source driver worker — live
+entries, their inherited sequence numbers and row ids and the
+partition-spec mapping all come from model/iceberg_manifests, as for
+the batch source — and each planned partition reads
 its parquet executor-side with pyarrow, applying position-delete
 sources decoded pure-python (position-delete parquets filtered to the
 file, v3 puffin deletion-vector blobs via model/puffin).
@@ -35,8 +36,7 @@ then  spark.readStream.format("iceberg_cdc").option("path", p).load().
 from __future__ import annotations
 
 import json
-import os
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -45,6 +45,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
 from incubator_xtable_spark.streaming.cdf_datasource import _arrow_type, _pv_value
 
 # ---------------------------------------------------------------------------
@@ -59,42 +60,6 @@ def _py_meta(base_path: str) -> dict:
     if meta is None:
         raise ValueError(f"not an iceberg table: {base_path}")
     return meta
-
-
-def _py_entries(meta: dict, snapshot_id: Optional[int]) -> tuple[list[dict], list[dict]]:
-    """(data entries, delete entries) of one snapshot via the pure OCF
-    reader, partition tuples normalized to the default spec."""
-    from incubator_xtable_spark.model.avro_codec import read_ocf
-    from incubator_xtable_spark.sources.iceberg_source import spec_field_mapping
-
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == snapshot_id), None
-    )
-    if snap is None:
-        return [], []
-    default_spec = meta.get("default-spec-id", 0)
-    mappings: dict[int, list] = {}
-    data: list[dict] = []
-    deletes: list[dict] = []
-    for mf in read_ocf(snap["manifest-list"])[0]:
-        mf_spec = mf.get("partition_spec_id")
-        mapping = None
-        if mf_spec is not None and mf_spec != default_spec:
-            if mf_spec not in mappings:
-                mappings[mf_spec] = spec_field_mapping(meta, mf_spec)
-            mapping = mappings[mf_spec]
-        for entry in read_ocf(mf["manifest_path"])[0]:
-            if entry["status"] == 2:
-                continue
-            if mapping is not None:
-                part = entry["data_file"].get("partition") or {}
-                entry["data_file"]["partition"] = {
-                    dn: (part.get(on) if on is not None else None)
-                    for dn, on in mapping
-                }
-            content = entry["data_file"].get("content") or 0
-            (deletes if content in (1, 2) else data).append(entry)
-    return data, deletes
 
 
 def _scope_key(part: Optional[dict]) -> Optional[str]:
@@ -116,7 +81,7 @@ def _delete_sources(
     out = []
     for e in deletes:
         df = e["data_file"]
-        seq = int(e.get("sequence_number") or 0)
+        seq = e["sequence_number"]
         content = df.get("content") or 0
         if content == 2:
             if seq <= data_seq:
@@ -160,24 +125,20 @@ def _delete_sources(
 
 
 def _plan_snapshot(meta: dict, snapshot_id: int) -> list[dict]:
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == snapshot_id), None
-    )
+    snap = snapshot_by_id(meta, snapshot_id)
     if snap is None:
         raise ValueError(f"no snapshot {snapshot_id}")
     if (snap.get("summary") or {}).get("operation") == "replace":
         # replace = layout-only rewrite (compaction): no logical changes
         return []
     parent = snap.get("parent-snapshot-id")
-    if parent is not None and not any(
-        s["snapshot-id"] == parent for s in meta.get("snapshots", [])
-    ):
+    if parent is not None and snapshot_by_id(meta, parent) is None:
         raise ValueError(
             f"snapshot {snapshot_id}'s parent {parent} has been expired; "
             "its changelog can no longer be derived"
         )
-    cur_data, cur_dels = _py_entries(meta, snapshot_id)
-    prev_data, prev_dels = _py_entries(meta, parent) if parent is not None else ([], [])
+    cur_data, cur_dels = live_entries(meta, snapshot_id)
+    prev_data, prev_dels = live_entries(meta, parent) if parent is not None else ([], [])
     cur_by_path = {e["data_file"]["file_path"]: e for e in cur_data}
     prev_by_path = {e["data_file"]["file_path"]: e for e in prev_data}
 
@@ -202,7 +163,7 @@ def _plan_snapshot(meta: dict, snapshot_id: int) -> list[dict]:
 
     units: list[dict] = []
     for p, e in cur_by_path.items():
-        seq = int(e.get("sequence_number") or 0)
+        seq = e["sequence_number"]
         part = e["data_file"].get("partition")
         if p not in prev_by_path:
             units.append(
@@ -216,7 +177,7 @@ def _plan_snapshot(meta: dict, snapshot_id: int) -> list[dict]:
                 )
             )
     for p, e in prev_by_path.items():
-        seq = int(e.get("sequence_number") or 0)
+        seq = e["sequence_number"]
         part = e["data_file"].get("partition")
         if p not in cur_by_path:
             units.append(
@@ -231,7 +192,7 @@ def _plan_snapshot(meta: dict, snapshot_id: int) -> list[dict]:
             )
         else:
             cur_e = cur_by_path[p]
-            cur_seq = int(cur_e.get("sequence_number") or 0)
+            cur_seq = cur_e["sequence_number"]
             cur_part = cur_e["data_file"].get("partition")
             cur_src = _delete_sources(cur_dels, p, cur_seq, cur_part)
             prev_src = _delete_sources(prev_dels, p, seq, part)

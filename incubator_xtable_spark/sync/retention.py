@@ -57,7 +57,10 @@ def delta_compact_log(base_path: str, start: int, end: int) -> str:
     write one file holding the RECONCILED actions of the commit range —
     last file-action per path (an add following a remove of the same
     path in one commit stays an add: the DV-update shape), the latest
-    metaData/protocol, the latest txn per appId; commitInfo dropped.
+    metaData/protocol, the latest txn per appId, the latest
+    domainMetadata per domain (tombstones included, so a removal inside
+    the range still masks the domain's earlier value, e.g. the Row
+    Tracking high watermark); commitInfo dropped.
     Readers then open one file per range instead of (end-start+1)
     commits (see delta_source._commit_slices). Raw JSON dicts are
     carried verbatim, so fields this engine does not model survive.
@@ -72,6 +75,7 @@ def delta_compact_log(base_path: str, start: int, end: int) -> str:
     latest_meta: Optional[dict] = None
     latest_proto: Optional[dict] = None
     txns: dict[str, dict] = {}
+    domains: dict[str, dict] = {}
     for v in range(start, end + 1):
         p = os.path.join(d, f"{v:020d}.json")
         with open(p, encoding="utf-8") as fh:
@@ -90,13 +94,15 @@ def delta_compact_log(base_path: str, start: int, end: int) -> str:
                     latest_proto = a
                 elif "txn" in a:
                     txns[a["txn"].get("appId", "")] = a
+                elif "domainMetadata" in a:
+                    domains[a["domainMetadata"]["domain"]] = a
     out = os.path.join(d, f"{start:020d}.{end:020d}.compacted.json")
     tmp = out + f".tmp-{_uuid.uuid4().hex}"
     with open(tmp, "w", encoding="utf-8") as fh:
         for a in [latest_proto, latest_meta]:
             if a is not None:
                 fh.write(json.dumps(a) + "\n")
-        for a in txns.values():
+        for a in [*txns.values(), *domains.values()]:
             fh.write(json.dumps(a) + "\n")
         for path in sorted(per_path):
             fh.write(json.dumps(per_path[path]) + "\n")
@@ -883,6 +889,7 @@ def iceberg_rewrite_data_files(
     from pyspark.sql import functions as F
 
     from incubator_xtable_spark.model.core import ROW_DELETES_ARROW, TableChange, table_rows
+    from incubator_xtable_spark.model.iceberg_manifests import live_entries
     from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
     from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
 
@@ -896,7 +903,7 @@ def iceberg_rewrite_data_files(
         )
     table = src.get_current_table()
     sid = src._head_snapshot_id(meta)
-    entries, delete_entries = src._entries_by_content(meta, sid)
+    entries, delete_entries = live_entries(meta, sid)
     if any((e["data_file"].get("content") or 0) == 2 for e in delete_entries):
         raise NotImplementedError(
             "iceberg_rewrite_data_files with equality deletes is not "
@@ -935,7 +942,7 @@ def iceberg_rewrite_data_files(
         df = spark.read.parquet(*paths)
         if has_deletes:
             seq_df = spark.createDataFrame(
-                [(p, int(e.get("sequence_number") or 0)) for e, p in zip(cand, paths)],
+                [(p, e["sequence_number"]) for e, p in zip(cand, paths)],
                 "file_path STRING, data_seq LONG",
             )
             applicable_pos = (

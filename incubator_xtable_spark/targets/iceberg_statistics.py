@@ -31,6 +31,7 @@ from incubator_xtable_spark.functions.theta_sketch import (
     ThetaSketch,
     build_column_sketches,
 )
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.model.puffin import read_blob, read_puffin_footer, write_puffin
 from incubator_xtable_spark.targets.iceberg_target import (
     current_metadata_version,
@@ -177,9 +178,8 @@ def update_ndv_statistics(
     prior = max(prior_entries, key=lambda e: seq_of[e["snapshot-id"]])
     prior_sid = prior["snapshot-id"]
 
-    src = IcebergConversionSource(spark, base_path)
-    cur_data, cur_del = src._entries_by_content(meta, snapshot_id)
-    old_data, old_del = src._entries_by_content(meta, prior_sid)
+    cur_data, cur_del = live_entries(meta, snapshot_id)
+    old_data, old_del = live_entries(meta, prior_sid)
     if cur_del or old_del:
         return _full()
     cur_paths = {e["data_file"]["file_path"] for e in cur_data}
@@ -189,7 +189,7 @@ def update_ndv_statistics(
     added = sorted(cur_paths - old_paths)
 
     prior_stats = read_ndv_statistics(base_path, prior_sid)
-    table = src.get_current_table()
+    table = IcebergConversionSource(spark, base_path).get_current_table()
     name_by_fid = {
         (f.metadata or {}).get("xtable.fieldId"): f.name for f in table.read_schema.fields
     }
@@ -280,8 +280,7 @@ def write_partition_statistics(spark, base_path: str) -> str:
     if meta is None:
         raise ValueError(f"not an iceberg table: {base_path}")
     snapshot_id = meta["current-snapshot-id"]
-    src = IcebergConversionSource(spark, base_path)
-    data, deletes = src._entries_by_content(meta, snapshot_id)
+    data, deletes = live_entries(meta, snapshot_id)
     default_spec = meta.get("default-spec-id", 0)
     spec = next(
         (s for s in meta.get("partition-specs", []) if s.get("spec-id") == default_spec),
@@ -302,7 +301,7 @@ def write_partition_statistics(spark, base_path: str) -> str:
     # identity-transform values type by the SOURCE column (the unified
     # partition type); non-identity transform values keep their
     # spec-native manifest representation (ints for time transforms)
-    table = src.get_current_table()
+    table = IcebergConversionSource(spark, base_path).get_current_table()
     dtype_by_name = {f.name: f.dataType for f in table.read_schema.fields}
     casters = {}
     cur_schema = next(

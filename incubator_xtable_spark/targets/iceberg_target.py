@@ -5,8 +5,9 @@ v2 table (HadoopTables layout) — `metadata/vN.metadata.json` +
 (iceberg.apache.org/spec: field-ids, sequence numbers, snapshot chain).
 
 Manifests and manifest lists are Avro object container files written
-and read driver-side by the pure-python codec (`model/avro_codec`
-write_ocf / read_ocf) — no JVM call per record. The manifest volume is
+driver-side by the pure-python codec (`model/avro_codec` write_ocf) —
+no JVM call per record — and the branch head's live entries are read
+back through `model/iceberg_manifests`. The manifest volume is
 metadata-sized; MANIFEST_CHUNK bounds each file.
 
 Reference parity (what, not how):
@@ -40,9 +41,10 @@ from typing import Any, Optional
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from incubator_xtable_spark.model.avro_codec import iter_ocf, read_ocf, write_ocf
+from incubator_xtable_spark.model.avro_codec import write_ocf
 from incubator_xtable_spark.model.core import InternalTable, TableChange, table_rows
 from incubator_xtable_spark.model.files_diff import files_diff, relativize
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.model.schema_meta import FIELD_ID, assign_field_ids
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -1104,14 +1106,11 @@ class IcebergConversionTarget:
             self._resolve_partition_specs(meta)
         )
 
-        current_all = self._current_live_entries(meta)
-        current = [e for e in current_all if (e["data_file"].get("content") or 0) == 0]
+        current, current_all_deletes = self._current_live_entries(meta)
         current_deletes = [
-            e for e in current_all if (e["data_file"].get("content") or 0) == 1
+            e for e in current_all_deletes if e["data_file"]["content"] == 1
         ]
-        current_eq = [
-            e for e in current_all if (e["data_file"].get("content") or 0) == 2
-        ]
+        current_eq = [e for e in current_all_deletes if e["data_file"]["content"] == 2]
         if self._snapshot_rows is not None:
             # snapshot-as-diff (model/files_diff): the full snapshot
             # against the live manifest entries, keyed by path
@@ -1485,9 +1484,13 @@ class IcebergConversionTarget:
             out["value_counts"] = sorted(values, key=lambda e: e["key"])
         return out
 
-    def _current_live_entries(self, meta: Optional[dict]) -> list[dict]:
+    def _current_live_entries(self, meta: Optional[dict]) -> tuple[list[dict], list[dict]]:
+        """(data, delete) entries live at this target's branch head, with
+        inheritance materialized (a foreign writer's null sequence numbers
+        and first_row_ids resolve here, or the next commit would rewrite
+        them as EXISTING nulls and reassign row ids)."""
         if meta is None:
-            return []
+            return [], []
         # carry-forward base = THIS TARGET'S BRANCH head: a second staged
         # commit must build on the first staged snapshot, not on main
         # (keying on current-snapshot-id silently dropped every file the
@@ -1496,32 +1499,8 @@ class IcebergConversionTarget:
             "snapshot-id"
         ) or meta.get("current-snapshot-id")
         if not head or head == -1:
-            return []
-        snap = next(
-            (s for s in meta.get("snapshots", []) if s["snapshot-id"] == head),
-            None,
-        )
-        if snap is None:
-            return []
-        entries: list[dict] = []
-        for mf in read_ocf(snap["manifest-list"])[0]:
-            # v3 row lineage: materialize manifest-inherited row ids while
-            # carrying entries forward — a foreign writer's null per-file
-            # first_row_id must resolve to its INHERITED id here, or the
-            # next commit would reassign (and silently change) them
-            running = mf.get("first_row_id")
-            for entry in iter_ocf(mf["manifest_path"]):
-                if entry["status"] != 2:  # not DELETED
-                    df = entry.get("data_file") or {}
-                    if (
-                        running is not None
-                        and (df.get("content") or 0) == 0
-                        and df.get("first_row_id") is None
-                    ):
-                        df["first_row_id"] = running
-                        running += int(df.get("record_count") or 0)
-                    entries.append(entry)
-        return entries
+            return [], []
+        return live_entries(meta, head)
 
     # entries per manifest file: bounds each driver-side avro write (and
     # the encode buffer behind it) — a 10M-file snapshot becomes 100
@@ -1598,13 +1577,7 @@ class IcebergConversionTarget:
         records = []
         for idx, chunk in enumerate(chunks):
             path, length = self._write_manifest(chunk, snapshot_id, seq, content)
-            min_seq = min(
-                (
-                    e["sequence_number"] if e.get("sequence_number") is not None else seq
-                    for e in chunk
-                ),
-                default=seq,
-            )
+            min_seq = min((e["sequence_number"] for e in chunk), default=seq)
             added = [e for e in chunk if e.get("snapshot_id") == snapshot_id]
             existing = [e for e in chunk if e.get("snapshot_id") != snapshot_id]
             records.append(

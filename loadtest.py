@@ -556,11 +556,11 @@ def scenario_dv_relay(
             for a in live_adds(work).values()
             if a["deletionVector"] and a["deletionVector"]["storageType"]
         ]
-        from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+        from incubator_xtable_spark.model.iceberg_manifests import live_entries
+        from incubator_xtable_spark.targets.iceberg_target import read_table_metadata
 
-        ice = IcebergConversionSource(spark, work)
-        meta = ice._meta()
-        _data, deletes = ice._entries_by_content(meta, ice._head_snapshot_id(meta))
+        meta = read_table_metadata(work)
+        _data, deletes = live_entries(meta, meta["current-snapshot-id"])
         out.append(
             {
                 "scenario": "dv_relay_readback",

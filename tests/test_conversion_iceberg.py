@@ -18,6 +18,7 @@ from incubator_xtable_spark.model.core import (
     SyncStatusCode,
     TableFormat,
 )
+from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
 from incubator_xtable_spark.sources.hudi_source import read_hudi_as_df
 from incubator_xtable_spark.sources.iceberg_source import (
@@ -216,7 +217,7 @@ def test_chunked_manifests_roundtrip(spark, tmp_path, monkeypatch):
 
     src = IcebergConversionSource(spark, d)
     meta = src._meta()
-    snap = src._snapshot_by_id(meta, meta["current-snapshot-id"])
+    snap = snapshot_by_id(meta, meta["current-snapshot-id"])
     manifests = read_ocf(snap["manifest-list"])[0]
     assert len(manifests) >= 3  # 7 files / chunk of 3
     assert sum(m["added_files_count"] for m in manifests) == 7
@@ -359,7 +360,7 @@ def test_transform_partition_values_are_spec_native(spark, tmp_path):
 
     src = IcebergConversionSource(spark, d)
     meta = src._meta()
-    entries = src._live_entries(meta, meta["current-snapshot-id"])
+    entries = live_entries(meta, meta["current-snapshot-id"])[0]
     part = entries[0]["data_file"]["partition"]
     assert part["ts_day"] == 19783  # days since epoch for 2024-03-01
     assert part["id_bucket"] == 3

@@ -109,6 +109,27 @@ def test_row_tracking_assignment_and_read(spark, source_dir):
     assert "rowTracking" in wf and "domainMetadata" in wf
 
 
+def test_row_ids_disjoint_across_log_compaction(spark, tmp_path):
+    """compaction_interval=2: each compacted range carries the latest
+    delta.rowTracking domainMetadata, so the high watermark survives the
+    compacted head and every sync draws a fresh baseRowId range."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "rt_compact")
+    os.makedirs(d)
+    for i in range(4):
+        ids = pa.array([2 * i, 2 * i + 1], pa.int64())
+        pq.write_table(pa.table({"id": ids}), f"{d}/f-{i}.parquet")
+        _sync(spark, d, row_tracking=True, compaction_interval=2, checkpoint_interval=0)
+    log = os.listdir(os.path.join(d, "_delta_log"))
+    assert len([f for f in log if f.endswith(".compacted.json")]) == 2
+    base = {os.path.basename(p): a["baseRowId"] for p, a in live_adds(d).items()}
+    assert base == {"f-0.parquet": 0, "f-1.parquet": 2, "f-2.parquet": 4, "f-3.parquet": 6}
+    hwm = json.loads(live_domain_metadata(d)["delta.rowTracking"])["rowIdHighWaterMark"]
+    assert hwm == 7
+
+
 def test_row_ids_stable_across_dv_update(spark, source_dir, tmp_path):
     """A deletion-vector re-add must keep its original baseRowId: survivors'
     row ids do not move when rows are deleted (spec stability rule)."""

@@ -22,6 +22,7 @@ from incubator_xtable_spark.model.file_formats import (
     require_parquet,
     to_iceberg_manifest,
 )
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.sources.delta_source import (
     DeltaConversionSource,
     read_delta_as_df,
@@ -203,7 +204,7 @@ def test_orc_tag_survives_delta_to_iceberg(spark, mixed_format_delta, tmp_path):
     # the Iceberg manifest carries ORC for the orc file (spec spelling)
     isrc = IcebergConversionSource(spark, mixed_format_delta)
     meta = isrc._meta()
-    entries, _ = isrc._entries_by_content(meta, isrc._head_snapshot_id(meta))
+    entries, _ = live_entries(meta, isrc._head_snapshot_id(meta))
     by_name = {
         os.path.basename(e["data_file"]["file_path"]): e["data_file"]["file_format"]
         for e in entries

@@ -17,6 +17,7 @@ import pytest
 
 from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
 from incubator_xtable_spark.sources.iceberg_source import (
     IcebergConversionSource,
@@ -68,7 +69,7 @@ def deleted_table(spark, tmp_path):
 
     meta = read_table_metadata(d)
     src = IcebergConversionSource(spark, d)
-    entries = src._live_entries(meta, meta["current-snapshot-id"])
+    entries = live_entries(meta, meta["current-snapshot-id"])[0]
     victim = sorted(e["data_file"]["file_path"] for e in entries)[0]
 
     # positions parquet: delete rows 0,1,2 of the victim file

@@ -23,6 +23,7 @@ import pytest
 
 from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
 from incubator_xtable_spark.sources.iceberg_source import (
     IcebergConversionSource,
@@ -51,10 +52,15 @@ def _append_delete_snapshot(
     data_files: list[tuple[str, int]] = (),
     seq: int = 2,
     snapshot_id: int = 999,
+    inherit_seq: bool = False,
 ) -> None:
     """Append a spec-shaped snapshot carrying equality-delete entries
     (path, equality_ids, partition) and optional new data files
-    (path, record_count), all at sequence ``seq``."""
+    (path, record_count), all at sequence ``seq``. ``inherit_seq`` writes
+    the ADDED entries with null sequence numbers, left to the manifest
+    list record's ``sequence_number`` (how Iceberg Java writes a fresh
+    manifest)."""
+    entry_seq = None if inherit_seq else seq
     meta = read_table_metadata(d)
     snap_prev = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
@@ -72,8 +78,8 @@ def _append_delete_snapshot(
                 {
                     "status": 1,
                     "snapshot_id": snapshot_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
+                    "sequence_number": entry_seq,
+                    "file_sequence_number": entry_seq,
                     "data_file": {
                         "content": 2,
                         "file_path": p,
@@ -114,8 +120,8 @@ def _append_delete_snapshot(
                 {
                     "status": 1,
                     "snapshot_id": snapshot_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
+                    "sequence_number": entry_seq,
+                    "file_sequence_number": entry_seq,
                     "data_file": {
                         "content": 0,
                         "file_path": p,
@@ -180,6 +186,13 @@ def _append_delete_snapshot(
         fh.write(str(v + 1))
 
 
+# the three sequence-rule tests run on explicit entry sequence numbers
+# and on ADDED entries that inherit them from the manifest list
+_SEQ_SHAPES = pytest.mark.parametrize(
+    "inherit_seq", [False, True], ids=["explicit_seq", "inherited_seq"]
+)
+
+
 def _make_table(spark, tmp_path, n=20, files=2):
     """Unpartitioned Iceberg table with ids 0..n-1 over `files` files."""
     import pyspark.sql.functions as F
@@ -210,14 +223,15 @@ def _ids(df):
     return sorted(r["id"] for r in df.select("id").collect())
 
 
-def test_read_applies_equality_deletes(spark, tmp_path):
+@_SEQ_SHAPES
+def test_read_applies_equality_deletes(spark, tmp_path, inherit_seq):
     d = _make_table(spark, tmp_path)
     src = IcebergConversionSource(spark, d)
     fid = _field_id(src, "id")
     eq = _eq_parquet(
         os.path.join(d, "eqdel-1.parquet"), {"id": pa.array([3, 7, 12], pa.int64())}
     )
-    _append_delete_snapshot(spark, d, [(eq, [fid], {})])
+    _append_delete_snapshot(spark, d, [(eq, [fid], {})], inherit_seq=inherit_seq)
     got = _ids(read_iceberg_as_df(spark, d))
     assert got == [i for i in range(20) if i not in (3, 7, 12)]
     # time travel to snapshot 1 still sees all rows
@@ -226,7 +240,8 @@ def test_read_applies_equality_deletes(spark, tmp_path):
     assert len(_ids(read_iceberg_as_df(spark, d, snapshot_id=snap1))) == 20
 
 
-def test_strict_sequence_rule_spares_same_commit_file(spark, tmp_path):
+@_SEQ_SHAPES
+def test_strict_sequence_rule_spares_same_commit_file(spark, tmp_path, inherit_seq):
     """A data file added in the SAME snapshot as the equality delete
     (equal sequence numbers) is NOT affected — the strict < rule, which
     is exactly how CDC upserts re-insert the new row version."""
@@ -247,13 +262,16 @@ def test_strict_sequence_rule_spares_same_commit_file(spark, tmp_path):
     _shutil.move(part, newfile)
     _shutil.rmtree(newfile + ".dir")
     eq = _eq_parquet(os.path.join(d, "eqdel-2.parquet"), {"id": pa.array([3], pa.int64())})
-    _append_delete_snapshot(spark, d, [(eq, [fid], {})], data_files=[(newfile, 1)])
+    _append_delete_snapshot(
+        spark, d, [(eq, [fid], {})], data_files=[(newfile, 1)], inherit_seq=inherit_seq
+    )
     df = read_iceberg_as_df(spark, d)
     assert _ids(df) == list(range(20))  # still one id=3 — the NEW row
     assert df.filter(F.col("id") == 3).select("name").collect()[0][0] == "NEW"
 
 
-def test_conversion_purged_shadows_row_parity(spark, tmp_path):
+@_SEQ_SHAPES
+def test_conversion_purged_shadows_row_parity(spark, tmp_path, inherit_seq):
     """Iceberg-with-equality-deletes -> Delta converts row-accurately via
     purged shadows (default posture: target formats get plain files)."""
     d = _make_table(spark, tmp_path)
@@ -262,7 +280,7 @@ def test_conversion_purged_shadows_row_parity(spark, tmp_path):
     eq = _eq_parquet(
         os.path.join(d, "eqdel-3.parquet"), {"id": pa.array([0, 5, 19], pa.int64())}
     )
-    _append_delete_snapshot(spark, d, [(eq, [fid], {})])
+    _append_delete_snapshot(spark, d, [(eq, [fid], {})], inherit_seq=inherit_seq)
     delta_dir = str(tmp_path / "as_delta")
     res = ConversionController().sync(
         IcebergConversionSource(spark, d),
@@ -341,7 +359,7 @@ def test_mixed_position_and_equality_deletes(spark, tmp_path):
     src = IcebergConversionSource(spark, d)
     fid = _field_id(src, "id")
     meta = read_table_metadata(d)
-    entries = src._live_entries(meta, meta["current-snapshot-id"])
+    entries = live_entries(meta, meta["current-snapshot-id"])[0]
     victim = sorted(e["data_file"]["file_path"] for e in entries)[0]
     pos = os.path.join(d, "posdel-1.parquet")
     pq.write_table(
@@ -615,7 +633,7 @@ def _relay(spark, d, tmp_path, name="relay"):
 def _target_delete_entries(spark, out):
     src = IcebergConversionSource(spark, out)
     meta = src._meta()
-    return src._live_delete_entries(meta, meta["current-snapshot-id"])
+    return live_entries(meta, meta["current-snapshot-id"])[1]
 
 
 def test_relay_preserves_equality_shape_and_rows(spark, tmp_path):

@@ -10,6 +10,7 @@ import pytest
 
 from incubator_xtable_spark.model.conformance import check_iceberg_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.sources.iceberg_source import (
     IcebergConversionSource,
     read_iceberg_as_df,
@@ -44,7 +45,7 @@ def test_rewrite_compacts_preserves_rows_and_is_replace(spark, tmp_path):
     meta = src._meta()
     old_sid = meta["current-snapshot-id"]
     before = _keys(read_iceberg_as_df(spark, d))
-    assert len(src._live_entries(meta, old_sid)) == 4
+    assert len(live_entries(meta, old_sid)[0]) == 4
 
     out = iceberg_rewrite_data_files(spark, d, target_file_bytes=64 * 1024 * 1024)
     assert out["snapshot_id"] is not None
@@ -55,10 +56,10 @@ def test_rewrite_compacts_preserves_rows_and_is_replace(spark, tmp_path):
         s for s in meta2["snapshots"] if s["snapshot-id"] == out["snapshot_id"]
     )
     assert snap["summary"]["operation"] == "replace"
-    assert len(src._live_entries(meta2, out["snapshot_id"])) == 1
+    assert len(live_entries(meta2, out["snapshot_id"])[0]) == 1
     assert _keys(read_iceberg_as_df(spark, d)) == before
     # time travel: pre-rewrite snapshot still reads the old layout
-    assert len(src._live_entries(meta2, old_sid)) == 4
+    assert len(live_entries(meta2, old_sid)[0]) == 4
     assert _keys(read_iceberg_as_df(spark, d, snapshot_id=old_sid)) == before
 
     # CDC consumers skip replace snapshots
@@ -85,14 +86,14 @@ def test_rewrite_applies_position_deletes(spark, tmp_path):
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
     src = IcebergConversionSource(spark, base)
     meta = src._meta()
-    assert src._live_delete_entries(meta, meta["current-snapshot-id"])
+    assert live_entries(meta, meta["current-snapshot-id"])[1]
     expected = sorted(i for i in range(20) if i not in (2, 3, 7))
 
     out = iceberg_rewrite_data_files(spark, base, target_file_bytes=64 * 1024 * 1024)
     assert out["snapshot_id"] is not None
     meta2 = src._meta()
     # deletes applied: no delete entries survive, rows are exact
-    assert src._live_delete_entries(meta2, out["snapshot_id"]) == []
+    assert live_entries(meta2, out["snapshot_id"])[1] == []
     got = sorted(r["id"] for r in read_iceberg_as_df(spark, base).select("id").collect())
     assert got == expected
     report = check_iceberg_conformance(spark, base)
@@ -136,7 +137,7 @@ def test_rewrite_partitioned_table_bins_per_partition(spark, tmp_path):
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
     src = IcebergConversionSource(spark, d)
     meta = src._meta()
-    entries = src._live_entries(meta, meta["current-snapshot-id"])
+    entries = live_entries(meta, meta["current-snapshot-id"])[0]
     parts_before = {e["data_file"]["partition"].get("region") for e in entries}
     assert len(entries) > len(parts_before)
     before = sorted(
@@ -147,7 +148,7 @@ def test_rewrite_partitioned_table_bins_per_partition(spark, tmp_path):
     out = iceberg_rewrite_data_files(spark, d, target_file_bytes=64 * 1024 * 1024)
     assert out["snapshot_id"] is not None
     meta2 = src._meta()
-    entries2 = src._live_entries(meta2, out["snapshot_id"])
+    entries2 = live_entries(meta2, out["snapshot_id"])[0]
     assert len(entries2) == len(parts_before)  # one file per partition
     assert {e["data_file"]["partition"].get("region") for e in entries2} == parts_before
     after = sorted(

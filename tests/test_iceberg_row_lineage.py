@@ -19,6 +19,7 @@ import pytest
 from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.conformance import check_iceberg_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.sources.delta_source import DeltaConversionSource
 from incubator_xtable_spark.sources.iceberg_source import (
     IcebergConversionSource,
@@ -57,7 +58,7 @@ def _sync_v3(spark, base, **kw):
 def _live_data_entries(spark, base):
     src = IcebergConversionSource(spark, base)
     meta = src._meta()
-    return meta, src._live_entries(meta, meta["current-snapshot-id"])
+    return meta, live_entries(meta, meta["current-snapshot-id"])[0]
 
 
 def test_v3_assigns_disjoint_row_ids_and_next_row_id(spark, tmp_path):

@@ -24,6 +24,7 @@ from incubator_xtable_spark.model.core import (
     TableFormat,
     arrow_table,
 )
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
 from incubator_xtable_spark.sources.iceberg_source import (
@@ -102,7 +103,7 @@ def test_day_partitioned_iceberg_to_delta(spark, day_partitioned_iceberg):
     # the manifest stores spec-native ints; the conversion must land
     # formatted strings in Delta
     meta = src._meta()
-    entries = src._live_entries(meta, meta["current-snapshot-id"])
+    entries = live_entries(meta, meta["current-snapshot-id"])[0]
     assert sorted(e["data_file"]["partition"]["ts_day"] for e in entries) == [19783, 19784]
 
     res = ConversionController().sync(

@@ -19,6 +19,7 @@ import pytest
 
 from incubator_xtable_spark.model.conformance import check_iceberg_conformance
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.model.puffin import (
     DELETION_VECTOR_V1,
     dv_blob_bytes,
@@ -99,7 +100,7 @@ def test_delta_dv_to_iceberg_v3(spark, tmp_path):
     src = IcebergConversionSource(spark, base)
     meta = src._meta()
     assert meta["format-version"] == 3
-    deletes = src._live_delete_entries(meta, meta["current-snapshot-id"])
+    deletes = live_entries(meta, meta["current-snapshot-id"])[1]
     assert deletes, "expected DV delete entries"
     for e in deletes:
         df = e["data_file"]

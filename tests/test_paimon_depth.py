@@ -18,6 +18,7 @@ import os
 import pytest
 
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.sources.delta_source import read_delta_as_df
 from incubator_xtable_spark.sources.iceberg_source import (
     IcebergConversionSource,
@@ -193,7 +194,7 @@ def test_paimon_dv_to_iceberg_position_deletes(spark, dv_table):
     assert _ids(read_iceberg_as_df(spark, dv_table.base)) == [0, 1, 4, 5, 6, 8, 9]
     src = IcebergConversionSource(spark, dv_table.base)
     meta = src._meta()
-    deletes = src._live_delete_entries(meta, meta["current-snapshot-id"])
+    deletes = live_entries(meta, meta["current-snapshot-id"])[1]
     assert deletes and all(
         (e["data_file"].get("content") or 0) == 1 for e in deletes
     )

@@ -18,6 +18,7 @@ import pytest
 
 from incubator_xtable_spark.model.avro_codec import read_ocf, write_ocf
 from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
+from incubator_xtable_spark.model.iceberg_manifests import live_entries
 from incubator_xtable_spark.sources.delta_dv import write_dv_file
 from incubator_xtable_spark.sources.delta_source import (
     DeltaConversionSource,
@@ -153,7 +154,7 @@ def test_full_sync_writes_position_deletes(spark, tmp_path):
     assert _ids(read_delta_as_df(spark, base)) == expected
     # manifest-level: data entries keep ORIGINAL paths; one content=1 entry
     isrc = IcebergConversionSource(spark, base)
-    data, deletes = isrc._entries_by_content(isrc._meta(), isrc._meta()["current-snapshot-id"])
+    data, deletes = live_entries(isrc._meta(), isrc._meta()["current-snapshot-id"])
     data_paths = {os.path.basename(e["data_file"]["file_path"]) for e in data}
     assert data_paths == {"part-0001.parquet", "part-0002.parquet"}
     assert len(deletes) == 1
@@ -189,7 +190,7 @@ def test_incremental_dv_supersedes_delete_file(spark, tmp_path):
     expected2 = [i for i in range(20) if i not in (2, 3, 5, 7)]
     assert _ids(read_iceberg_as_df(spark, base)) == expected2
     isrc = IcebergConversionSource(spark, base)
-    data, deletes = isrc._entries_by_content(isrc._meta(), isrc._meta()["current-snapshot-id"])
+    data, deletes = live_entries(isrc._meta(), isrc._meta()["current-snapshot-id"])
     assert len(deletes) == 1  # superseded, not accumulated
     assert deletes[0]["data_file"]["record_count"] == 4
     # sequence rule: the delete's sequence is >= every data file's
@@ -266,7 +267,7 @@ def _iceberg_deleted_table(spark, tmp_path):
 
     meta = read_table_metadata(d)
     src = IcebergConversionSource(spark, d)
-    entries = src._live_entries(meta, meta["current-snapshot-id"])
+    entries = live_entries(meta, meta["current-snapshot-id"])[0]
     victim = sorted(e["data_file"]["file_path"] for e in entries)[0]
     pos_path = os.path.join(d, "delete-0001.parquet")
     pq.write_table(
@@ -559,7 +560,7 @@ def test_restore_clears_iceberg_delete_files(spark, tmp_path):
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS, res
     assert _ids(read_iceberg_as_df(spark, base)) == list(range(20))
     isrc = IcebergConversionSource(spark, base)
-    _, deletes = isrc._entries_by_content(isrc._meta(), isrc._meta()["current-snapshot-id"])
+    _, deletes = live_entries(isrc._meta(), isrc._meta()["current-snapshot-id"])
     assert deletes == []
 
 
@@ -587,7 +588,7 @@ def test_rewrite_drops_dangling_delete_entries(spark, tmp_path):
     expected = [i for i in range(20) if i not in (2, 3, 7)]
     assert _ids(read_iceberg_as_df(spark, base)) == expected
     isrc = IcebergConversionSource(spark, base)
-    data, deletes = isrc._entries_by_content(isrc._meta(), isrc._meta()["current-snapshot-id"])
+    data, deletes = live_entries(isrc._meta(), isrc._meta()["current-snapshot-id"])
     assert deletes == []  # nothing dangles
     assert {os.path.basename(e["data_file"]["file_path"]) for e in data} == {
         "part-0002.parquet",
@@ -608,7 +609,7 @@ def test_mode_flip_forces_full_restatement(spark, tmp_path):
     )
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
     isrc = IcebergConversionSource(spark, base)
-    data, _ = isrc._entries_by_content(isrc._meta(), isrc._meta()["current-snapshot-id"])
+    data, _ = live_entries(isrc._meta(), isrc._meta()["current-snapshot-id"])
     assert any(".purged-" in e["data_file"]["file_path"] for e in data)
 
     # flip to exposure: must run FULL (not incremental) and swap paths
@@ -618,7 +619,7 @@ def test_mode_flip_forces_full_restatement(spark, tmp_path):
     )
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
     assert res[TableFormat.ICEBERG].mode.value == "FULL"
-    data, deletes = isrc._entries_by_content(isrc._meta(), isrc._meta()["current-snapshot-id"])
+    data, deletes = live_entries(isrc._meta(), isrc._meta()["current-snapshot-id"])
     paths = {os.path.basename(e["data_file"]["file_path"]) for e in data}
     assert paths == {"part-0001.parquet", "part-0002.parquet"}
     assert len(deletes) == 1
@@ -972,5 +973,5 @@ def test_mixed_targets_degrade_to_shadows_with_row_parity(spark, tmp_path):
     assert glob.glob(os.path.join(base, "*.purged-*"))
     src = IcebergConversionSource(spark, base)
     meta = src._meta()
-    entries = src._live_entries(meta, meta["current-snapshot-id"])
+    entries = live_entries(meta, meta["current-snapshot-id"])[0]
     assert all((e["data_file"].get("content") or 0) == 0 for e in entries)
