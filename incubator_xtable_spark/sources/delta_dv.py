@@ -21,15 +21,13 @@ Here a DV'd file is converted to a deterministic PURGED shadow file
 Hudi/Iceberg targets reference row-accurate data
 (delta/ITDeltaDeleteVectorConvert.java is the scenario source).
 
-Scale notes: the DV-side files (Delta DV files from row deletes,
-position-delete parquets from DVs) are written on the driver, one file
-per DV'd data file: their size follows the delete sets, which are
-metadata-sized next to the data. Purged shadows rewrite DATA files, so a
-batch over _DRIVER_PURGE_MAX_BYTES of pending data runs one Spark task
-per file; only DV'd files are ever rewritten. Row-level application in
+Scale notes: DV positions are decoded on the driver (`read_dv_positions`);
+they are metadata-sized next to the data. Everything written from them
+(position-delete parquets, purged shadows) and the (file_path, pos) frame
 `read_delta_as_df` anti-joins on (_metadata.file_path,
-_metadata.row_index), decoded executor-side by `dv_positions_df`, which
-distributes with the scan and never collects positions to the driver.
+_metadata.row_index) go through `sources/row_deletes`, named by
+`dv_set_id`. Delta DV files written from row deletes
+(`write_dv_files_from_positions`) are driver loops too.
 """
 
 from __future__ import annotations
@@ -38,13 +36,9 @@ import os
 import struct
 import uuid as _uuid
 import zlib
-from typing import Iterable, Iterator
+from typing import Iterable
 
 import numpy as np
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # Z85 (ZeroMQ base-85), the alphabet Delta uses for inline DVs and UUIDs
@@ -298,181 +292,22 @@ def dv_unique_id(desc: dict) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Purged shadow files (targets cannot express Delta DVs row-level)
+# Output names (targets cannot express Delta DVs row-level)
 # ---------------------------------------------------------------------------
 
-DV_DESCRIPTOR_SPARK_TYPE = T.StructType(
-    [
-        T.StructField("storageType", T.StringType()),
-        T.StructField("pathOrInlineDv", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("sizeInBytes", T.IntegerType()),
-        T.StructField("cardinality", T.LongType()),
-    ]
-)
+
+def dv_set_id(desc: dict) -> str:
+    """The delete-set id of a (file, DV) pair's row-delete outputs:
+    md5 of the DV's unique id, so a changed DV names new files."""
+    import hashlib
+
+    return hashlib.md5(dv_unique_id(desc).encode()).hexdigest()[:8]
 
 
 def purged_path(path: str, desc: dict) -> str:
-    import hashlib
+    from incubator_xtable_spark.sources.row_deletes import shadow_path
 
-    h = hashlib.md5(dv_unique_id(desc).encode()).hexdigest()[:8]
-    stem = path[: -len(".parquet")] if path.endswith(".parquet") else path
-    return f"{stem}.purged-{h}.parquet"
-
-
-def write_purged_files(
-    spark: SparkSession, base_path: str, dv_adds: list[dict]
-) -> None:
-    """Materialize the shadow files for DV'd adds, executor-side: one task
-    per (file, DV), idempotent (skips existing shadows). `dv_adds` rows:
-    {abs_path, deletionVector (dict)}. Only DV'd files are ever rewritten —
-    this is the one place metadata-only conversion touches data bytes,
-    because no target format can honor a Delta DV row-level."""
-    if not dv_adds:
-        return
-    import json as _json
-
-    rows = [
-        (r["abs_path"], _json.dumps(r["deletionVector"]), purged_path(r["abs_path"], r["deletionVector"]))
-        for r in dv_adds
-    ]
-    # driver tier (r14 optimization): purging reads DATA bytes, so the
-    # gate is the total size of the files still needing a shadow — a
-    # metadata-sized batch (small fixtures, single small files) runs
-    # inline instead of paying a Python-worker job round trip. The SAME
-    # per-file body runs on both tiers; big batches keep the
-    # one-task-per-file parallel path.
-    pending_bytes = sum(
-        os.path.getsize(src) for src, _, out in rows if not os.path.exists(out) and os.path.exists(src)
-    )
-    if pending_bytes <= _DRIVER_PURGE_MAX_BYTES:
-        for src, dv_json, out in rows:
-            _write_one_purged_file(base_path, src, dv_json, out)
-        return
-    df = spark.createDataFrame(rows, "abs_path STRING, dv_json STRING, out_path STRING")
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    bp = base_path
-
-    def _purge(batches: Iterator["object"]) -> Iterator["object"]:
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import pandas as pd
-
-        from incubator_xtable_spark.sources.delta_dv import _write_one_purged_file
-
-        for pdf in batches:
-            outs = []
-            for src, dv_json, out in zip(pdf["abs_path"], pdf["dv_json"], pdf["out_path"]):
-                _write_one_purged_file(bp, src, dv_json, out)
-                outs.append(out)
-            yield pd.DataFrame({"out_path": outs})
-
-    # one task per shadow file so purges run in parallel
-    df.repartition(len(rows)).mapInPandas(_purge, "out_path STRING").count()
-
-
-# Purged-shadow batches whose PENDING data bytes are at or under this run
-# inline on the driver (one small file re-write); bigger batches keep the
-# parallel executor tier. A bytes gate, never SF; 0 disables.
-_DRIVER_PURGE_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _write_one_purged_file(base_path: str, src: str, dv_json: str, out: str) -> None:
-    """The per-(file, DV) shadow rewrite both tiers share: read, drop the
-    DV'd positions, write, atomic replace, idempotent."""
-    import json as _j
-
-    import pyarrow.parquet as pq
-
-    if os.path.exists(out):
-        return
-    positions = read_dv_positions(base_path, _j.loads(dv_json))
-    table = pq.read_table(src)
-    keep = np.setdiff1d(
-        np.arange(table.num_rows, dtype=np.int64),
-        positions.astype(np.int64),
-        assume_unique=True,
-    )
-    tmp = out + f".tmp-{os.getpid()}"
-    pq.write_table(table.take(keep), tmp)
-    os.replace(tmp, out)
-
-
-def dv_positions_df(spark: SparkSession, base_path: str, files_with_dv: DataFrame) -> DataFrame:
-    """(abs_path, deletionVector struct) -> exploded (file_path, pos) rows,
-    decoded executor-side (no driver collect of positions)."""
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    bp = base_path
-    src = files_with_dv.select(
-        F.col("abs_path"), F.to_json(F.col("deletionVector")).alias("dv_json")
-    )
-
-    def _explode(batches: Iterator["object"]) -> Iterator["object"]:
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import json as _j
-
-        import pandas as pd
-
-        from incubator_xtable_spark.sources.delta_dv import read_dv_positions
-
-        for pdf in batches:
-            for path, dv_json in zip(pdf["abs_path"], pdf["dv_json"]):
-                positions = read_dv_positions(bp, _j.loads(dv_json))
-                yield pd.DataFrame(
-                    {"file_path": path, "pos": positions.astype("int64")}
-                )
-
-    return src.mapInPandas(_explode, "file_path STRING, pos LONG")
-
-
-# ---------------------------------------------------------------------------
-# Row-delete exposure: Iceberg-shaped position-delete files
-# ---------------------------------------------------------------------------
-
-
-def delete_positions_path(path: str, desc: dict) -> str:
-    """Deterministic positions-file path for a (data file, DV) pair:
-    <path minus .parquet>.deletes-<md5(uniqueId)[:8]>.parquet. The stem
-    identifies the covered data file (targets use it to supersede older
-    delete files for the same data file); the hash makes a changed DV a
-    new file, so writes stay idempotent."""
-    import hashlib
-
-    h = hashlib.md5(dv_unique_id(desc).encode()).hexdigest()[:8]
-    stem = path[: -len(".parquet")] if path.endswith(".parquet") else path
-    return f"{stem}.deletes-{h}.parquet"
-
-
-def write_delete_position_files(base_path: str, dv_adds: list[dict]) -> None:
-    """Materialize Iceberg-spec position-delete files for DV'd adds on the
-    driver: one file per (file, DV), idempotent. Each output parquet holds
-    (file_path STRING, pos BIGINT) sorted by pos — directly referenceable
-    from an Iceberg v2 content=1 manifest, so conversion never rewrites
-    data bytes (contrast write_purged_files above). `dv_adds` rows:
-    {abs_path, deletionVector (dict)}."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for r in dv_adds:
-        src, desc = r["abs_path"], r["deletionVector"]
-        out = delete_positions_path(src, desc)
-        if os.path.exists(out):
-            continue
-        positions = np.sort(read_dv_positions(base_path, desc).astype(np.int64))
-        table = pa.table(
-            {
-                "file_path": pa.array([src] * len(positions), pa.string()),
-                "pos": pa.array(positions, pa.int64()),
-            }
-        )
-        tmp = out + f".tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, out)
+    return shadow_path(path, dv_set_id(desc))
 
 
 def write_dv_files_from_positions(base_path: str, deletes_rows: list[dict]) -> dict[str, dict]:

@@ -795,8 +795,9 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
        shrinking DV emit as inserts).
 
     Scale: one distributed scan over only the files this commit touched;
-    DV position sets decode executor-side; no row ever collects to the
-    driver. Pair with get_commits_backlog for the commit cursor.
+    DV position sets decode on the driver (metadata-sized) and diff in
+    numpy; no data row ever collects to the driver. Pair with
+    get_commits_backlog for the commit cursor.
     """
     meta = latest_action(base_path, "metaData", version)
     if meta is None:
@@ -843,31 +844,23 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
             )
         return df.drop("abs_path", "pv")
 
-    def _positions_for(items: list[tuple]) -> Optional[DataFrame]:
-        """(file_path, pos) rows for the items' DV descriptors."""
-        dv_items = [(p, d) for p, _, d in items if d and d.get("storageType")]
-        if not dv_items:
-            return None
-        from incubator_xtable_spark.sources.delta_dv import (
-            DV_DESCRIPTOR_SPARK_TYPE,
-            dv_positions_df,
-        )
+    def _positions_for(items: list[tuple]) -> dict:
+        """{absolute path: deleted positions} of the items' DVs."""
+        from incubator_xtable_spark.sources.delta_dv import read_dv_positions
 
-        dv_files = spark.createDataFrame(
-            [(os.path.join(base, p), d) for p, d in dv_items],
-            T.StructType(
-                [
-                    T.StructField("abs_path", T.StringType()),
-                    T.StructField("deletionVector", DV_DESCRIPTOR_SPARK_TYPE),
-                ]
-            ),
-        )
-        return dv_positions_df(spark, base, dv_files)
+        return {
+            os.path.join(base, p): read_dv_positions(base, d).astype(np.int64)
+            for p, _, d in items
+            if d and d.get("storageType")
+        }
 
     def _rows_of(items: list[tuple], change_type: str, positions=None, mode: str = "drop") -> DataFrame:
         """Read the items' rows tagged ``change_type``; ``positions``
-        restricts via anti (mode=drop: everything except) or semi
-        (mode=keep: only) join on (file, row_index)."""
+        ({path: positions}) restricts via anti (mode=drop: everything
+        except) or semi (mode=keep: only) join on (file, row_index)."""
+        from incubator_xtable_spark.sources.row_deletes import positions_frame
+
+        positions = positions_frame(spark, positions) if positions else None
         item_paths = [os.path.join(base, p) for p, _, _ in items]
         from incubator_xtable_spark.model.file_formats import (
             from_delta_provider,
@@ -1036,30 +1029,22 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
         prev_dv = {r["path"]: r["deletionVector"] for r in prev_rows}
         prev_pv = {r["path"]: r["partitionValues"] or None for r in prev_rows}
 
-    # 1. DV-update pairs: remove+re-add of the same path -> row-level diff,
-    # batched into ONE position-set comparison across every paired file
-    # (the join keys on (file_path, pos), so files never cross-talk)
+    # 1. DV-update pairs: remove+re-add of the same path -> row-level diff
+    # of each paired file's old and new position sets
     if pair_paths:
         new_items = [
             (p, adds[p].get("partitionValues"), adds[p].get("deletionVector"))
             for p in pair_paths
         ]
-        old_items = [
-            (p, adds[p].get("partitionValues"), prev_dv.get(p)) for p in pair_paths
-        ]
+        from incubator_xtable_spark.sources.row_deletes import positions_minus
+
         new_pos = _positions_for(new_items)
-        old_pos = _positions_for(old_items)
-        newly_deleted = restored = None
-        if new_pos is not None and old_pos is not None:
-            newly_deleted = new_pos.join(old_pos, ["file_path", "pos"], "left_anti")
-            restored = old_pos.join(new_pos, ["file_path", "pos"], "left_anti")
-        elif new_pos is not None:
-            newly_deleted = new_pos
-        elif old_pos is not None:
-            restored = old_pos
-        if newly_deleted is not None:
+        old_pos = _positions_for([(p, None, prev_dv.get(p)) for p in pair_paths])
+        newly_deleted = positions_minus(new_pos, old_pos)
+        restored = positions_minus(old_pos, new_pos)
+        if newly_deleted:
             parts.append(_rows_of(new_items, "delete", newly_deleted, mode="keep"))
-        if restored is not None:
+        if restored:
             parts.append(_rows_of(new_items, "insert", restored, mode="keep"))
 
     # 2. pure adds: the file's visible rows are inserts
@@ -1362,24 +1347,16 @@ def read_delta_as_df(
     dv_abs = {os.path.join(base, r["path"]) for r in dv_rows}
     positions = None
     if dv_rows:
-        from incubator_xtable_spark.sources.delta_dv import (
-            DV_DESCRIPTOR_SPARK_TYPE,
-            dv_positions_df,
-        )
+        from incubator_xtable_spark.sources.delta_dv import read_dv_positions
+        from incubator_xtable_spark.sources.row_deletes import positions_frame
 
-        dv_files = spark.createDataFrame(
-            [
-                (os.path.join(base, r["path"]), r["deletionVector"])
+        positions = positions_frame(
+            spark,
+            {
+                os.path.join(base, r["path"]): read_dv_positions(base, r["deletionVector"])
                 for r in dv_rows
-            ],
-            T.StructType(
-                [
-                    T.StructField("abs_path", T.StringType()),
-                    T.StructField("deletionVector", DV_DESCRIPTOR_SPARK_TYPE),
-                ]
-            ),
+            },
         )
-        positions = dv_positions_df(spark, base, dv_files)
     if df is not None and (positions is not None or with_row_ids):
         # _metadata is resolvable only on the scan relation (not through
         # joins): materialize file path + physical position ONCE, then
@@ -1799,29 +1776,22 @@ class DeltaConversionSource:
         RESTORE (re-add without DV) propagate. An empty table means 'no
         rows are deleted' — never None, so the channel stays active."""
         from incubator_xtable_spark.model.core import ROW_DELETES_ARROW
-        from incubator_xtable_spark.sources.delta_dv import (
-            delete_positions_path,
-            write_delete_position_files,
-        )
+        from incubator_xtable_spark.sources.delta_dv import dv_set_id, read_dv_positions
+        from incubator_xtable_spark.sources.row_deletes import positions_path, write_positions_file
 
-        dv_list = [(self._absolute(a["path"]), a) for a in adds if _dv_of(a)]
-        if dv_list:
-            write_delete_position_files(
-                self.base_path,
-                [{"abs_path": p, "deletionVector": a["deletionVector"]} for p, a in dv_list],
+        rows = []
+        for a in adds:
+            desc = _dv_of(a)
+            if desc is None:
+                continue
+            path = self._absolute(a["path"])
+            out = positions_path(path, dv_set_id(desc))
+            if not os.path.exists(out):
+                write_positions_file(path, read_dv_positions(self.base_path, desc), out)
+            rows.append(
+                (path, out, int(desc["cardinality"] or 0), a["partitionValues"] or None)
             )
-        return arrow_table(
-            [
-                (
-                    p,
-                    delete_positions_path(p, a["deletionVector"]),
-                    int(a["deletionVector"]["cardinality"] or 0),
-                    a["partitionValues"] or None,
-                )
-                for p, a in dv_list
-            ],
-            ROW_DELETES_ARROW,
-        )
+        return arrow_table(rows, ROW_DELETES_ARROW)
 
     def _data_schema(self, table: InternalTable) -> T.StructType:
         part_cols = {pf.source_field for pf in table.partition_fields}
@@ -1879,15 +1849,20 @@ class DeltaConversionSource:
                 )
             )
         if dv_adds:
-            from incubator_xtable_spark.sources.delta_dv import purged_path, write_purged_files
+            from incubator_xtable_spark.sources.delta_dv import purged_path, read_dv_positions
             from incubator_xtable_spark.sources.parquet_source import footer_stat_rows
+            from incubator_xtable_spark.sources.row_deletes import write_purged_files
 
-            dvs = [
-                {"abs_path": self._absolute(a["path"]), "deletionVector": a["deletionVector"]}
-                for a in dv_adds
-            ]
-            write_purged_files(self.spark, self.base_path, dvs)
-            shadows = [purged_path(d["abs_path"], d["deletionVector"]) for d in dvs]
+            paths = [self._absolute(a["path"]) for a in dv_adds]
+            shadows = [purged_path(p, a["deletionVector"]) for p, a in zip(paths, dv_adds)]
+            write_purged_files(
+                self.spark,
+                [
+                    (p, read_dv_positions(self.base_path, a["deletionVector"]), sp)
+                    for p, a, sp in zip(paths, dv_adds, shadows)
+                    if not os.path.exists(sp)
+                ],
+            )
             stats = {p: (rc, cs) for p, rc, cs in footer_stat_rows(shadows, data_schema)}
             for sp, a in zip(shadows, dv_adds):
                 record_count, column_stats = stats.get(sp, (None, None))

@@ -11,16 +11,18 @@ Reference parity:
 - incremental-safety (broken chain => snapshot expired => unsafe)
                                      iceberg/IcebergConversionSource.java:266-290
 - schema w/ field ids                iceberg/IcebergSchemaExtractor.java:114-300
-- v2 position deletes: content=1 manifests, file_path/pos delete parquet,
-  the delete_seq >= data_seq application rule. Reads apply them row-level
-  (delete scan distributes with the data scan); conversions expose purged
-  shadow files so every target stays row-accurate (same posture as the
-  Delta DV path in sources/delta_dv.py).
+- v2 position deletes and v3 deletion vectors: content=1 manifests,
+  file_path/pos delete parquets and Puffin blobs, the delete_seq >=
+  data_seq application rule. `_resolve_deletes` reads them on the driver
+  into each data file's positions (metadata-sized); readers anti-join
+  on those, conversions write positions files or purged shadows from
+  them through sources/row_deletes (the same path as Delta and Paimon
+  deletion vectors), so every target stays row-accurate.
 - v2 equality deletes: content=2 manifests with equality_ids resolve to
-  positions via a distributed null-safe join against the candidate data
-  files under the STRICT rule data_seq < delete_seq (with per-partition
-  scoping), then ride the same position pipeline — reads, purged
-  shadows, and row-delete exposure all inherit them.
+  positions via a distributed null-safe join against the data files
+  they apply to under the STRICT rule data_seq < delete_seq (with
+  per-partition scoping), then ride the same position path — reads,
+  purged shadows, and row-delete exposure all inherit them.
 """
 
 from __future__ import annotations
@@ -32,7 +34,9 @@ from typing import Optional
 
 log = logging.getLogger(__name__)
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,10 +57,91 @@ from incubator_xtable_spark.model import file_formats as _ff
 from incubator_xtable_spark.model.files_diff import with_file_paths
 from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
+from incubator_xtable_spark.sources.row_deletes import positions_frame, positions_minus, shadow_path
 from incubator_xtable_spark.targets.iceberg_target import (
     iceberg_fields_to_schema,
     read_table_metadata,
 )
+
+
+# -- delete application rules (Iceberg spec "Scan Planning") ---------------
+# The batch resolver (`IcebergConversionSource._resolve_deletes`) and the
+# `iceberg_cdc` stream planner both apply deletes through these.
+
+
+def _scope_key(part: Optional[dict]) -> Optional[str]:
+    """A partition as a comparable string; None for a partition-less
+    (global) delete file."""
+    if not part:
+        return None
+    return json.dumps({k: str(v) for k, v in sorted(part.items())}, sort_keys=True)
+
+
+def is_equality_delete(entry: dict) -> bool:
+    return (entry["data_file"].get("content") or 0) == 2
+
+
+def position_delete_applies(entry: dict, data_seq: int) -> bool:
+    """A position-delete file or deletion vector applies to data files
+    whose sequence number is at most its own (delete_seq >= data_seq)."""
+    return entry["sequence_number"] >= data_seq
+
+
+def equality_delete_applies(entry: dict, data_seq: int, data_partition: Optional[dict]) -> bool:
+    """An equality-delete file applies to data files STRICTLY older than
+    it (data_seq < delete_seq), and only within its partition: a delete
+    file without partition values applies globally."""
+    if entry["sequence_number"] <= data_seq:
+        return False
+    scope = _scope_key(entry["data_file"].get("partition"))
+    return scope is None or scope == _scope_key(data_partition)
+
+
+def dv_reference(delete_file: dict) -> Optional[str]:
+    """The data file a v3 deletion vector (a Puffin blob) covers; None
+    for a v2 position-delete parquet."""
+    if (delete_file.get("file_format") or "").upper() != "PUFFIN" and not delete_file.get(
+        "referenced_data_file"
+    ):
+        return None
+    ref = delete_file.get("referenced_data_file")
+    if ref is None:
+        # a DV blob is positions OF ONE data file; without the manifest
+        # reference (field 143) it cannot be attributed
+        raise ValueError(
+            f"puffin deletion vector {delete_file['file_path']} carries no "
+            "referenced_data_file; cannot attribute its positions"
+        )
+    return ref
+
+
+def _positions_by_file(table: pa.Table) -> dict[str, np.ndarray]:
+    """A (file_path, pos) table split per data file."""
+    paths = table.column("file_path").combine_chunks().dictionary_encode()
+    codes = paths.indices.to_numpy(zero_copy_only=False)
+    pos = table.column("pos").to_numpy().astype(np.int64)
+    return {p: pos[codes == i] for i, p in enumerate(paths.dictionary.to_pylist())}
+
+
+def delete_file_positions(delete_file: dict) -> dict[str, np.ndarray]:
+    """{data file path: deleted positions} of one position-delete file,
+    read on the driver: a Puffin deletion-vector blob, or a v2 parquet
+    read once and split per data file it names."""
+    from incubator_xtable_spark.model.puffin import read_dv_positions_from_puffin
+
+    ref = dv_reference(delete_file)
+    if ref is not None:
+        positions = read_dv_positions_from_puffin(
+            delete_file["file_path"],
+            int(delete_file["content_offset"]),
+            int(delete_file["content_size_in_bytes"]),
+        )
+        return {ref: positions.astype(np.int64)}
+    _ff.require_parquet(
+        [(delete_file["file_path"], _ff.from_iceberg_manifest(delete_file.get("file_format")))],
+        reader="iceberg position-delete read",
+    )
+    return _positions_by_file(pq.read_table(delete_file["file_path"], columns=["file_path", "pos"]))
 
 
 class IcebergConversionSource:
@@ -213,92 +298,63 @@ class IcebergConversionSource:
 
     # -- v2 position + equality deletes -------------------------------------
 
-    def _positions_df(
-        self, delete_entries: list[dict], data_entries: Optional[list[dict]] = None
-    ) -> DataFrame:
-        """Union the delete positions tagged with each delete file's
-        sequence number. v2 position-delete parquets are a distributed
-        scan (positions never touch the driver); v3 puffin deletion
-        vectors (file_format PUFFIN / referenced_data_file set) decode
-        executor-side from their (content_offset, content_size) blob;
-        v2 equality deletes (content==2) resolve to positions with a
-        distributed join against the candidate data files
-        (``data_entries`` supplies the candidates)."""
-        eq_entries = [
-            e for e in delete_entries if (e["data_file"].get("content") or 0) == 2
-        ]
-        delete_entries = [
-            e for e in delete_entries if (e["data_file"].get("content") or 0) != 2
-        ]
-        parts = []
-        dv_items = []
+    def _resolve_deletes(
+        self, data_entries: list[dict], delete_entries: list[dict]
+    ) -> dict[str, tuple[np.ndarray, str]]:
+        """Per affected data file: its deleted positions (sorted, unique)
+        under the spec's sequence rules, and their delete-set id
+        (`row_deletes.positions_id`, so a file's outputs keep their names
+        until its own delete set changes). Position-delete parquets and
+        Puffin deletion vectors are read on the driver, each file once;
+        equality deletes lowered to positions come from
+        `_equality_positions_df`, the one data-sized scan."""
+        from incubator_xtable_spark.sources.row_deletes import positions_id
+
+        data_seq = {e["data_file"]["file_path"]: e["sequence_number"] for e in data_entries}
+        found: dict[str, list[np.ndarray]] = {}
+        eq_entries = []
         for e in delete_entries:
-            df = e["data_file"]
-            seq = e["sequence_number"]
-            if (df.get("file_format") or "").upper() == "PUFFIN" or df.get(
-                "referenced_data_file"
-            ):
-                dv_items.append(
-                    (
-                        df["file_path"],
-                        int(df["content_offset"]),
-                        int(df["content_size_in_bytes"]),
-                        df["referenced_data_file"],
-                        seq,
-                    )
-                )
+            if is_equality_delete(e):
+                eq_entries.append(e)
                 continue
-            _ff.require_parquet(
-                [(df["file_path"], _ff.from_iceberg_manifest(df.get("file_format")))],
-                reader="iceberg position-delete read",
-            )
-            p = (
-                self.spark.read.schema("file_path STRING, pos LONG")
-                .parquet(df["file_path"])
-                .withColumn("delete_seq", F.lit(seq))
-            )
-            parts.append(p)
-        if dv_items:
-            parts.append(self._puffin_positions_df(dv_items))
-        if eq_entries:
-            parts.append(self._equality_positions_df(eq_entries, data_entries or []))
-        if not parts:
-            return self.spark.createDataFrame(
-                [], "file_path STRING, pos LONG, delete_seq LONG"
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+            for path, pos in delete_file_positions(e["data_file"]).items():
+                if path in data_seq and position_delete_applies(e, data_seq[path]):
+                    found.setdefault(path, []).append(pos)
+        eq = self._equality_positions_df(eq_entries, data_entries)
+        if eq is not None:
+            for path, pos in _positions_by_file(eq.toArrow()).items():
+                found.setdefault(path, []).append(pos)
+        out = {}
+        for path, parts in found.items():
+            pos = np.unique(np.concatenate(parts))
+            if len(pos):
+                out[path] = (pos, positions_id(pos))
         return out
 
     def _equality_positions_df(
         self, eq_entries: list[dict], data_entries: list[dict]
-    ) -> DataFrame:
-        """Resolve v2 EQUALITY deletes (content==2) to concrete
-        (file_path, pos, delete_seq) rows — the Spark-first expression of
-        the spec rule "a data row is deleted when a matching equality
-        delete row exists with delete_seq strictly greater than the data
-        file's sequence number".
+    ) -> Optional[DataFrame]:
+        """Resolve v2 EQUALITY deletes (content==2) to the (file_path, pos)
+        rows they delete; None when no delete file applies anywhere.
 
-        Per distinct equality-id set: ONE distributed scan of only the
-        candidate data files (data_seq < max delete_seq), pruned to just
-        the equality columns + _metadata.row_index, joined null-safely
-        (Iceberg equality matches NULLs) against the delete rows with
-        data_seq < delete_seq and partition scoping (a delete file
-        written into a partition applies only there; partition-less
-        delete files apply globally). Identity-partition equality columns
-        absent from the data files re-attach from manifest values. Only
-        matched rows emit, each already satisfying the strict rule, so
-        the downstream position-delete filters (delete_seq >= data_seq)
-        pass them through unchanged.
+        Which delete file applies to which data file is metadata:
+        `equality_delete_applies` (the STRICT data_seq < delete_seq rule,
+        partition-scoped: a delete file written into a partition applies
+        only there, a partition-less one globally) decides each pair on
+        the driver. Per distinct equality-id set: ONE distributed scan of
+        only the data files some delete file applies to, pruned to the
+        equality columns + _metadata.row_index, joined null-safely
+        (Iceberg equality matches NULLs) against the delete rows and kept
+        where the (data file, delete file) pair applies. Identity-partition
+        equality columns absent from the data files re-attach from
+        manifest values.
 
         Scale: cost is one column-pruned scan of candidate files per id
         set — the minimum any engine pays to apply equality deletes; the
         join keys are the equality columns, so AQE broadcasts the
         (typically tiny CDC-key) delete side."""
-        empty = self.spark.createDataFrame([], "file_path STRING, pos LONG, delete_seq LONG")
         if not eq_entries or not data_entries:
-            return empty
+            return None
         table = self.get_current_table()
         by_id = {
             (f.metadata or {}).get("xtable.fieldId"): f for f in table.read_schema.fields
@@ -310,19 +366,10 @@ class IcebergConversionSource:
             for pf in table.partition_fields
             if pf.transform == PartitionTransformType.VALUE
         }
-        data_seq = {
-            e["data_file"]["file_path"]: e["sequence_number"]
-            for e in data_entries
-        }
         pv_raw = {
             e["data_file"]["file_path"]: e["data_file"].get("partition") or {}
             for e in data_entries
         }
-
-        def _scope(part: dict) -> Optional[str]:
-            if not part:
-                return None
-            return json.dumps({k: str(v) for k, v in sorted(part.items())}, sort_keys=True)
 
         groups: dict[tuple, list[dict]] = {}
         for e in eq_entries:
@@ -345,10 +392,15 @@ class IcebergConversionSource:
                     )
                 fields.append(f)
             cols = [f.name for f in fields]
-            max_seq = max(e["sequence_number"] for e in group)
-            cand = [p for p, s in data_seq.items() if s < max_seq]
-            if not cand:
+            pairs = [
+                (d["data_file"]["file_path"], i)
+                for d in data_entries
+                for i, e in enumerate(group)
+                if equality_delete_applies(e, d["sequence_number"], d["data_file"].get("partition"))
+            ]
+            if not pairs:
                 continue
+            cand = sorted({p for p, _ in pairs})
             file_fields = [f for f in fields if f.name not in identity_cols]
             # name mapping: renamed sources' files store physical names,
             # resolved per distinct footer schema (mixed provenances read
@@ -358,11 +410,6 @@ class IcebergConversionSource:
                 .withColumnRenamed("_nm_path", "file_path")
                 .withColumnRenamed("_nm_pos", "pos")
             )
-            seq_scope = self.spark.createDataFrame(
-                [(p, data_seq[p], _scope(pv_raw[p])) for p in cand],
-                "file_path STRING, data_seq LONG, data_scope STRING",
-            )
-            df = df.join(F.broadcast(seq_scope), "file_path")
             part_fields = [f for f in fields if f.name in identity_cols]
             if part_fields:
                 pv_rows = [
@@ -388,129 +435,47 @@ class IcebergConversionSource:
                 df = df.drop("pv")
             del_schema = T.StructType([T.StructField(f.name, f.dataType) for f in fields])
             del_parts = []
-            for e in group:
+            for i, e in enumerate(group):
                 dfile = e["data_file"]
                 _ff.require_parquet(
                     [(dfile["file_path"], _ff.from_iceberg_manifest(dfile.get("file_format")))],
                     reader="iceberg equality-delete read",
                 )
-                p = (
+                del_parts.append(
                     self.spark.read.schema(del_schema)
                     .parquet(dfile["file_path"])
-                    .withColumn("delete_seq", F.lit(e["sequence_number"]))
-                    .withColumn(
-                        "del_scope", F.lit(_scope(dfile.get("partition") or {})).cast("string")
-                    )
+                    .withColumn("_del_file", F.lit(i))
                 )
-                del_parts.append(p)
             dels = del_parts[0]
             for p in del_parts[1:]:
                 dels = dels.unionByName(p)
-            dels = dels.select(
-                *[F.col(c).alias(f"_del_{c}") for c in cols], "delete_seq", "del_scope"
-            )
-            cond = F.col("data_seq") < F.col("delete_seq")
-            for c in cols:
+            dels = dels.select(*[F.col(c).alias(f"_del_{c}") for c in cols], "_del_file")
+            cond = F.col(cols[0]).eqNullSafe(F.col(f"_del_{cols[0]}"))
+            for c in cols[1:]:
                 cond = cond & F.col(c).eqNullSafe(F.col(f"_del_{c}"))
-            cond = cond & (
-                F.col("del_scope").isNull() | (F.col("del_scope") == F.col("data_scope"))
+            applies = self.spark.createDataFrame(pairs, "file_path STRING, _del_file INT")
+            out_parts.append(
+                df.join(dels, cond)
+                .join(F.broadcast(applies), ["file_path", "_del_file"])
+                .select("file_path", "pos")
             )
-            out_parts.append(df.join(dels, cond).select("file_path", "pos", "delete_seq"))
         if not out_parts:
-            return empty
+            return None
         out = out_parts[0]
         for p in out_parts[1:]:
             out = out.unionByName(p)
-        # a row matched by several delete files/rows must count once downstream
-        return out.groupBy("file_path", "pos").agg(F.max("delete_seq").alias("delete_seq"))
+        # a row matched by several delete files/rows counts once
+        return out.distinct()
 
-    def _puffin_positions_df(self, items: list[tuple]) -> DataFrame:
-        """(puffin_path, offset, length, referenced_file, seq) -> exploded
-        (file_path, pos, delete_seq) rows, blobs decoded executor-side."""
-        import os as _os
+    def _write_shadows(self, resolved: dict, data_entries: list[dict]) -> None:
+        """Purged shadow files for the data files with applicable deletes,
+        through `row_deletes.write_purged_files` (no target format here
+        can express row-level deletes without its own delete files, so
+        conversion rewrites ONLY the affected files)."""
+        from incubator_xtable_spark.sources.row_deletes import write_purged_files
 
-        pkg_root = _os.path.dirname(
-            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-        )
-        df = self.spark.createDataFrame(
-            items,
-            "puffin STRING, offset LONG, length LONG, file_path STRING, delete_seq LONG",
-        )
-
-        def _explode(batches):
-            import sys as _sys
-
-            if pkg_root not in _sys.path:
-                _sys.path.insert(0, pkg_root)
-            import pandas as pd
-
-            from incubator_xtable_spark.model.puffin import (
-                read_dv_positions_from_puffin,
-            )
-
-            for pdf in batches:
-                for puffin, offset, length, fp, seq in zip(
-                    pdf["puffin"], pdf["offset"], pdf["length"], pdf["file_path"], pdf["delete_seq"]
-                ):
-                    positions = read_dv_positions_from_puffin(puffin, int(offset), int(length))
-                    yield pd.DataFrame(
-                        {"file_path": fp, "pos": positions, "delete_seq": int(seq)}
-                    )
-
-        return df.mapInPandas(_explode, "file_path STRING, pos LONG, delete_seq LONG")
-
-    def _applicable_deletes(
-        self, data_entries: list[dict], delete_entries: list[dict]
-    ) -> dict[str, dict]:
-        """Per affected data file: the delete-file set that applies (v2
-        rule: delete.sequence_number >= data file's sequence number) and
-        the deterministic shadow path. Metadata-sized driver dict — one
-        row per AFFECTED file, not per deleted row."""
-        import hashlib
-
-        if not delete_entries:
-            return {}
-        data_seq = {
-            e["data_file"]["file_path"]: e["sequence_number"]
-            for e in data_entries
-        }
-        seq_rows = [(p, s) for p, s in data_seq.items()]
-        seq_df = self.spark.createDataFrame(seq_rows, "file_path STRING, data_seq LONG")
-        counts = (
-            self._positions_df(delete_entries, data_entries)
-            .join(F.broadcast(seq_df), "file_path")
-            .filter(F.col("delete_seq") >= F.col("data_seq"))
-            .groupBy("file_path")
-            .agg(F.countDistinct("pos").alias("n_deleted"))
-            .collect()
-        )
-        del_id = hashlib.md5(
-            "|".join(sorted(e["data_file"]["file_path"] for e in delete_entries)).encode()
-        ).hexdigest()[:8]
-        out = {}
-        for r in counts:
-            path = r["file_path"]
-            stem = path[: -len(".parquet")] if path.endswith(".parquet") else path
-            out[path] = {
-                "shadow_path": f"{stem}.purged-{del_id}.parquet",
-                # row-delete exposure: Iceberg-shaped per-file positions
-                # parquet under the stem convention targets use for
-                # supersession (delta_dv.delete_positions_path shape)
-                "positions_path": f"{stem}.deletes-{del_id}.parquet",
-                "n_deleted": int(r["n_deleted"]),
-            }
-        return out
-
-    def _materialize_delete_shadows(
-        self, affected: dict[str, dict], delete_entries: list[dict], data_entries: list[dict]
-    ) -> None:
-        """Write purged shadow files for data files with applicable
-        position deletes — executor-side, one task per affected file,
-        idempotent (same posture as sources/delta_dv.write_purged_files;
-        no target format here can express row-level deletes without its
-        own delete files, so conversion rewrites ONLY the affected
-        files)."""
-        todo = {p: i for p, i in affected.items() if not os.path.exists(i["shadow_path"])}
+        shadows = {p: shadow_path(p, sid) for p, (_, sid) in resolved.items()}
+        todo = {p: sp for p, sp in shadows.items() if not os.path.exists(sp)}
         if not todo:
             return
         fmt_by_path = {
@@ -521,98 +486,20 @@ class IcebergConversionSource:
             ((p, _ff.from_iceberg_manifest(fmt_by_path.get(p))) for p in todo),
             reader="iceberg delete-shadow purge",
         )
-        data_seq = {
-            e["data_file"]["file_path"]: e["sequence_number"]
-            for e in data_entries
-        }
-        positions = self._positions_df(delete_entries, data_entries)
-        plan = self.spark.createDataFrame(
-            [(p, i["shadow_path"], data_seq.get(p, 0)) for p, i in todo.items()],
-            "file_path STRING, shadow_path STRING, data_seq LONG",
-        )
-        joined = positions.join(F.broadcast(plan), "file_path").filter(
-            F.col("delete_seq") >= F.col("data_seq")
-        )
-
-        def _purge(key, pdf):
-            import os as _os
-
-            import pandas as pd
-            import pyarrow.parquet as pq
-            import numpy as np
-
-            src = pdf["file_path"].iloc[0]
-            out = pdf["shadow_path"].iloc[0]
-            if not _os.path.exists(out):
-                table = pq.read_table(src)
-                drop = np.unique(pdf["pos"].to_numpy().astype(np.int64))
-                keep = np.setdiff1d(
-                    np.arange(table.num_rows, dtype=np.int64), drop, assume_unique=True
-                )
-                tmp = out + f".tmp-{_os.getpid()}"
-                pq.write_table(table.take(keep), tmp)
-                _os.replace(tmp, out)
-            return pd.DataFrame({"out": [out]})
-
-        joined.groupBy("file_path").applyInPandas(_purge, "out STRING").count()
-
-    def _materialize_position_files(
-        self, affected: dict[str, dict], delete_entries: list[dict], data_entries: list[dict]
-    ) -> None:
-        """Per-file (file_path, pos) parquets for row-delete exposure —
-        the union of each data file's APPLICABLE delete positions under
-        the v2 sequence rule, written executor-side (one task per file,
-        idempotent), sorted by pos as the Iceberg spec requires."""
-        todo = {p: i for p, i in affected.items() if not os.path.exists(i["positions_path"])}
-        if not todo:
-            return
-        data_seq = {
-            e["data_file"]["file_path"]: e["sequence_number"]
-            for e in data_entries
-        }
-        positions = self._positions_df(delete_entries, data_entries)
-        plan = self.spark.createDataFrame(
-            [(p, i["positions_path"], data_seq.get(p, 0)) for p, i in todo.items()],
-            "file_path STRING, positions_path STRING, data_seq LONG",
-        )
-        joined = positions.join(F.broadcast(plan), "file_path").filter(
-            F.col("delete_seq") >= F.col("data_seq")
-        )
-
-        def _write(key, pdf):
-            import os as _os
-
-            import numpy as np
-            import pandas as pd
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            src = pdf["file_path"].iloc[0]
-            out = pdf["positions_path"].iloc[0]
-            if not _os.path.exists(out):
-                pos = np.unique(pdf["pos"].to_numpy().astype(np.int64))
-                table = pa.table(
-                    {
-                        "file_path": pa.array([src] * len(pos), pa.string()),
-                        "pos": pa.array(pos, pa.int64()),
-                    }
-                )
-                tmp = out + f".tmp-{_os.getpid()}"
-                pq.write_table(table, tmp)
-                _os.replace(tmp, out)
-            return pd.DataFrame({"out": [out]})
-
-        joined.groupBy("file_path").applyInPandas(_write, "out STRING").count()
+        write_purged_files(self.spark, [(p, resolved[p][0], sp) for p, sp in todo.items()])
 
     def _row_deletes_df(
-        self, affected: dict[str, dict], data_entries: list[dict], table: InternalTable
+        self, resolved: dict, data_entries: list[dict], table: InternalTable
     ):
         """COMPLETE current delete state (empty table = no deletes,
         never None — targets clear stale delete files/DVs for live data
-        files absent from this restatement)."""
+        files absent from this restatement). Writes each affected file's
+        positions parquet first, under the stem convention targets use
+        for supersession."""
         from incubator_xtable_spark.model.core import ROW_DELETES_ARROW
+        from incubator_xtable_spark.sources.row_deletes import positions_path, write_positions_file
 
-        if not affected:
+        if not resolved:
             return ROW_DELETES_ARROW.empty_table()
         from incubator_xtable_spark.functions.partition_transforms import (
             from_iceberg_partition_value,
@@ -635,10 +522,11 @@ class IcebergConversionSource:
             )
             for e in data_entries
         }
-        rows = [
-            (p, i["positions_path"], int(i["n_deleted"]), pv_by_path.get(p))
-            for p, i in affected.items()
-        ]
+        rows = []
+        for p, (pos, sid) in resolved.items():
+            out = positions_path(p, sid)
+            write_positions_file(p, pos, out)
+            rows.append((p, out, len(pos), pv_by_path.get(p)))
         return arrow_table(rows, ROW_DELETES_ARROW)
 
     def _equality_channel(
@@ -734,17 +622,15 @@ class IcebergConversionSource:
         entries, deletes = live_entries(meta, snapshot_id)
         eq_entries: list[dict] = []
         if self.expose_equality_deletes:
-            eq_entries = [e for e in deletes if (e["data_file"].get("content") or 0) == 2]
-            deletes = [e for e in deletes if (e["data_file"].get("content") or 0) != 2]
-        affected = self._applicable_deletes(entries, deletes)
-        if (affected or self.expose_equality_deletes) and self.expose_row_deletes:
-            if affected:
-                self._materialize_position_files(affected, deletes, entries)
+            eq_entries = [e for e in deletes if is_equality_delete(e)]
+            deletes = [e for e in deletes if not is_equality_delete(e)]
+        resolved = self._resolve_deletes(entries, deletes)
+        if (resolved or self.expose_equality_deletes) and self.expose_row_deletes:
             return InternalSnapshot(
                 table=table,
                 version=str(snapshot_id),
                 files=self._to_inventory(entries, table, None),
-                row_deletes=self._row_deletes_df(affected, entries, table),
+                row_deletes=self._row_deletes_df(resolved, entries, table),
                 equality_deletes=(
                     self._equality_channel(entries, eq_entries, table)
                     if self.expose_equality_deletes
@@ -754,24 +640,26 @@ class IcebergConversionSource:
                 if self.expose_row_lineage
                 else None,
             )
-        if affected and self.expose_row_lineage:
+        if resolved and self.expose_row_lineage:
             raise ValueError(
                 "expose_row_lineage with applicable deletes requires "
                 "expose_row_deletes=True: the purged-shadow rewrite renumbers "
                 "physical rows, so first_row_id-derived ids cannot survive it"
             )
-        if affected:
-            self._materialize_delete_shadows(affected, deletes, entries)
+        self._write_shadows(resolved, entries)
         return InternalSnapshot(
             table=table,
             version=str(snapshot_id),
-            files=self._to_inventory(entries, table, affected),
+            files=self._to_inventory(entries, table, resolved),
             row_lineage=self._lineage_map(entries) if self.expose_row_lineage else None,
         )
 
     def _to_inventory(
-        self, entries: list[dict], table: InternalTable, affected: Optional[dict] = None
+        self, entries: list[dict], table: InternalTable, resolved: Optional[dict] = None
     ) -> pa.Table:
+        """Data entries -> inventory table; with ``resolved``
+        (`_resolve_deletes`), each affected file is listed as its purged
+        shadow."""
         if not entries:
             return FILE_INVENTORY_ARROW.empty_table()
         from incubator_xtable_spark.model.iceberg_values import from_iceberg_bytes
@@ -816,11 +704,11 @@ class IcebergConversionSource:
                     "max_json": encode_stat(from_iceberg_bytes(upper.get(fid), f.dataType), f.dataType),
                     "null_count": nulls.get(fid),
                 }
-            shadow = (affected or {}).get(df["file_path"])
-            if shadow is not None:
+            deleted = (resolved or {}).get(df["file_path"])
+            if deleted is not None:
                 # position deletes apply: expose the purged shadow with
                 # corrected row count; stats recomputed from its footer
-                sp = shadow["shadow_path"]
+                sp = shadow_path(df["file_path"], deleted[1])
                 size = (
                     int(os.path.getsize(sp))
                     if os.path.exists(sp)
@@ -831,7 +719,7 @@ class IcebergConversionSource:
                         "physical_path": sp,
                         "file_format": "PARQUET",  # purged shadows are engine-written parquet
                         "size_bytes": size,
-                        "record_count": int(df["record_count"]) - shadow["n_deleted"],
+                        "record_count": int(df["record_count"]) - len(deleted[0]),
                         "partition_values": pv,
                     }
                 )
@@ -925,12 +813,8 @@ class IcebergConversionSource:
             cur_data, cur_dels = live_entries(meta, snapshot_id)
             eq_entries: list[dict] = []
             if self.expose_equality_deletes:
-                eq_entries = [
-                    e for e in cur_dels if (e["data_file"].get("content") or 0) == 2
-                ]
-                cur_dels = [
-                    e for e in cur_dels if (e["data_file"].get("content") or 0) != 2
-                ]
+                eq_entries = [e for e in cur_dels if is_equality_delete(e)]
+                cur_dels = [e for e in cur_dels if not is_equality_delete(e)]
             parent = snap.get("parent-snapshot-id") if snap else None
             prev_data, _ = (
                 live_entries(meta, parent) if parent is not None else ([], [])
@@ -939,15 +823,13 @@ class IcebergConversionSource:
             prev_paths = {e["data_file"]["file_path"] for e in prev_data}
             added = [e for e in cur_data if e["data_file"]["file_path"] not in prev_paths]
             removed = [e for e in prev_data if e["data_file"]["file_path"] not in cur_paths]
-            affected = self._applicable_deletes(cur_data, cur_dels)
-            if affected:
-                self._materialize_position_files(affected, cur_dels, cur_data)
+            resolved = self._resolve_deletes(cur_data, cur_dels)
             return TableChange(
                 table=table,
                 commit_id=commit,
                 files_added=self._to_inventory(added, table, None),
                 files_removed=self._to_inventory(removed, table, None),
-                row_deletes=self._row_deletes_df(affected, cur_data, table),
+                row_deletes=self._row_deletes_df(resolved, cur_data, table),
                 equality_deletes=(
                     self._equality_channel(cur_data, eq_entries, table)
                     if self.expose_equality_deletes
@@ -962,22 +844,22 @@ class IcebergConversionSource:
             if sid is None:
                 return {}, {}
             data, dels = live_entries(meta, sid)
-            affected = self._applicable_deletes(data, dels)
-            if affected and materialize:
-                self._materialize_delete_shadows(affected, dels, data)
+            resolved = self._resolve_deletes(data, dels)
+            if materialize:
+                self._write_shadows(resolved, data)
             eff = {}
             for e in data:
                 p = e["data_file"]["file_path"]
-                eff[affected[p]["shadow_path"] if p in affected else p] = e
-            return eff, affected
+                eff[shadow_path(p, resolved[p][1]) if p in resolved else p] = e
+            return eff, resolved
 
-        cur_eff, cur_affected = eff_view(snapshot_id, materialize=True)
+        cur_eff, cur_resolved = eff_view(snapshot_id, materialize=True)
         parent = snap.get("parent-snapshot-id") if snap else None
-        prev_eff, prev_affected = eff_view(parent, materialize=False)
+        prev_eff, prev_resolved = eff_view(parent, materialize=False)
 
         added = [e for p, e in cur_eff.items() if p not in prev_eff]
         removed = [e for p, e in prev_eff.items() if p not in cur_eff]
-        if self.expose_row_lineage and (cur_affected or prev_affected):
+        if self.expose_row_lineage and (cur_resolved or prev_resolved):
             raise ValueError(
                 "expose_row_lineage with applicable deletes requires "
                 "expose_row_deletes=True: the purged-shadow rewrite renumbers "
@@ -986,8 +868,8 @@ class IcebergConversionSource:
         return TableChange(
             table=table,
             commit_id=commit,
-            files_added=self._to_inventory(added, table, cur_affected),
-            files_removed=self._to_inventory(removed, table, prev_affected),
+            files_added=self._to_inventory(added, table, cur_resolved),
+            files_removed=self._to_inventory(removed, table, prev_resolved),
             row_lineage=self._lineage_map(added) if self.expose_row_lineage else None,
         )
 
@@ -1293,24 +1175,11 @@ def read_iceberg_as_df(
         df = avro_df if df is None else df.unionByName(avro_df)
     # every join below keys on the data file's path as the manifest has it
     df = with_file_paths(df, "_scan_path")
-    if delete_entries:
-        # v2 position deletes applied row-level: the delete parquet scan
-        # distributes with the data scan, anti-joined on
-        # (_metadata.file_path, _metadata.row_index) under the sequence
-        # rule delete_seq >= data_seq — no driver-side positions
-        seq_df = spark.createDataFrame(
-            [
-                (e["data_file"]["file_path"], e["sequence_number"])
-                for e in entries
-            ],
-            "file_path STRING, data_seq LONG",
-        )
-        applicable = (
-            src._positions_df(delete_entries, entries)
-            .join(F.broadcast(seq_df), "file_path")
-            .filter(F.col("delete_seq") >= F.col("data_seq"))
-            .select("file_path", "pos")
-        )
+    resolved = src._resolve_deletes(entries, delete_entries)
+    if resolved:
+        # deletes applied row-level: the positions resolved on the driver
+        # anti-join on (_metadata.file_path, _metadata.row_index)
+        applicable = positions_frame(spark, {p: pos for p, (pos, _) in resolved.items()})
         df = df.join(
             applicable,
             (F.col("_scan_path") == applicable.file_path)
@@ -1361,8 +1230,9 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
     change types never occur here — consumers treat a same-key
     delete+insert in one snapshot as an update if they key the stream.
 
-    Scale: scans only the files the snapshot touched plus position-set
-    joins; nothing row-sized reaches the driver."""
+    Scale: scans only the files the snapshot touched; delete positions
+    resolve and diff on the driver (metadata-sized, except lowered
+    equality deletes), and no data row reaches the driver."""
     src = IcebergConversionSource(spark, base_path)
     meta = src._meta()
     table = src.get_current_table()
@@ -1413,30 +1283,19 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
         "_commit_snapshot_id",
     ]
 
-    def applicable_positions(data, dels) -> Optional[DataFrame]:
-        """(file_path, pos) delete positions in force for this state."""
-        if not dels or not data:
-            return None
-        seq_df = spark.createDataFrame(
-            [(e["data_file"]["file_path"], e["sequence_number"]) for e in data],
-            "file_path STRING, data_seq LONG",
-        )
-        return (
-            src._positions_df(dels, data)
-            .join(F.broadcast(seq_df), "file_path")
-            .filter(F.col("delete_seq") >= F.col("data_seq"))
-            .select("file_path", "pos")
-            .distinct()
-        )
+    def applicable_positions(data, dels) -> dict:
+        """{file_path: positions} of the deletes in force for this state."""
+        return {p: pos for p, (pos, _) in src._resolve_deletes(data, dels).items()}
 
-    def rows_of(entries, change_type: str, positions, mode: str) -> DataFrame:
+    def rows_of(entries, change_type: str, positions: dict, mode: str) -> DataFrame:
         file_paths = [e["data_file"]["file_path"] for e in entries]
         df = (
             _read_name_mapped(spark, meta, data_fields.fields, file_paths)
             .withColumnRenamed("_nm_path", "_fp")
             .withColumnRenamed("_nm_pos", "_ri")
         )
-        if positions is not None:
+        if positions:
+            positions = positions_frame(spark, positions)
             df = df.join(
                 positions,
                 (F.col("_fp") == positions.file_path) & (F.col("_ri") == positions.pos),
@@ -1477,22 +1336,15 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
         parts.append(rows_of(added, "insert", cur_pos, mode="drop"))
     if removed:
         parts.append(rows_of(removed, "delete", prev_pos, mode="drop"))
-    if common and (cur_pos is not None or prev_pos is not None):
+    if common:
         common_paths = {e["data_file"]["file_path"] for e in common}
-        in_common = F.col("file_path").isin(*common_paths)
-        c = cur_pos.filter(in_common) if cur_pos is not None else None
-        p = prev_pos.filter(in_common) if prev_pos is not None else None
-        newly, restored = None, None
-        if c is not None and p is not None:
-            newly = c.join(p, ["file_path", "pos"], "left_anti")
-            restored = p.join(c, ["file_path", "pos"], "left_anti")
-        elif c is not None:
-            newly = c
-        else:
-            restored = p
-        if newly is not None:
+        cur_common = {f: pos for f, pos in cur_pos.items() if f in common_paths}
+        prev_common = {f: pos for f, pos in prev_pos.items() if f in common_paths}
+        newly = positions_minus(cur_common, prev_common)
+        restored = positions_minus(prev_common, cur_common)
+        if newly:
             parts.append(rows_of(common, "delete", newly, mode="keep"))
-        if restored is not None:
+        if restored:
             parts.append(rows_of(common, "insert", restored, mode="keep"))
     if not parts:
         out_fields = list(table.read_schema.fields) + [

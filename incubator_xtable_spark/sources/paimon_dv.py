@@ -22,9 +22,10 @@ deletes) to Paimon sources, so a delete-heavy Paimon table converts
 metadata-only. The bitmap codec is the same 32-bit portable roaring
 format used by Delta DVs (sources/delta_dv.py) — reused, not reimplemented.
 
-Scale: index files are read executor-side (one task per DV'd file) when
-positions are materialized; driver touches only the bounded manifest
-metadata.
+Scale: index files are metadata-sized, so DV positions are decoded on
+the driver (`read_dv_from_index`); the positions files, purged shadows
+and reader frames built from them go through `sources/row_deletes`,
+named by `dv_range_id`.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ import os
 import struct
 import uuid
 import zlib
-from typing import Iterable, Iterator, Optional
+from typing import Iterable
 
 import numpy as np
 
@@ -119,132 +120,3 @@ def read_dv_from_index(index_path: str, offset: int, length: int) -> np.ndarray:
 
 def dv_range_id(index_file: str, offset: int, length: int) -> str:
     return hashlib.md5(f"{index_file}:{offset}:{length}".encode()).hexdigest()[:8]
-
-
-def positions_path_for(data_path: str, index_file: str, offset: int, length: int) -> str:
-    """Deterministic Iceberg-shaped positions-file path for a (data file,
-    DV range): <stem>.deletes-<h8>.parquet — same stem convention as
-    delta_dv.delete_positions_path, so targets supersede by stem."""
-    stem = data_path[: -len(".parquet")] if data_path.endswith(".parquet") else data_path
-    return f"{stem}.deletes-{dv_range_id(index_file, offset, length)}.parquet"
-
-
-def shadow_path_for(data_path: str, index_file: str, offset: int, length: int) -> str:
-    """Purged-shadow path for expose-off conversions (same convention as
-    delta_dv.purged_path): <stem>.purged-<h8>.parquet."""
-    stem = data_path[: -len(".parquet")] if data_path.endswith(".parquet") else data_path
-    return f"{stem}.purged-{dv_range_id(index_file, offset, length)}.parquet"
-
-
-def dv_positions_df(spark, base_path: str, items: list[dict]):
-    """[{data_path, index_file, offset, length}] -> exploded
-    (file_path, pos) rows, decoded executor-side (no driver positions)."""
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    rows = [
-        (
-            it["data_path"],
-            os.path.join(base_path, INDEX_DIR, it["index_file"]),
-            int(it["offset"]),
-            int(it["length"]),
-        )
-        for it in items
-    ]
-    df = spark.createDataFrame(
-        rows, "data_path STRING, index_path STRING, offset LONG, length LONG"
-    )
-
-    def _explode(batches: Iterator["object"]) -> Iterator["object"]:
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import pandas as pd
-
-        from incubator_xtable_spark.sources.paimon_dv import read_dv_from_index
-
-        for pdf in batches:
-            for data_path, index_path, offset, length in zip(
-                pdf["data_path"], pdf["index_path"], pdf["offset"], pdf["length"]
-            ):
-                positions = read_dv_from_index(index_path, int(offset), int(length))
-                yield pd.DataFrame({"file_path": data_path, "pos": positions})
-
-    return df.mapInPandas(_explode, "file_path STRING, pos LONG")
-
-
-def materialize_dv_outputs(
-    spark,
-    base_path: str,
-    items: list[dict],
-    mode: str,
-) -> None:
-    """Executor-side materialization, one task per DV'd file, idempotent.
-
-    items: [{data_path, index_file, offset, length}]
-    mode="positions": write Iceberg-spec (file_path, pos) parquets.
-    mode="shadows":   rewrite the data file minus deleted rows.
-    """
-    if not items:
-        return
-    rows = [
-        (
-            it["data_path"],
-            os.path.join(base_path, INDEX_DIR, it["index_file"]),
-            int(it["offset"]),
-            int(it["length"]),
-            positions_path_for(it["data_path"], it["index_file"], it["offset"], it["length"])
-            if mode == "positions"
-            else shadow_path_for(it["data_path"], it["index_file"], it["offset"], it["length"]),
-        )
-        for it in items
-    ]
-    df = spark.createDataFrame(
-        rows, "data_path STRING, index_path STRING, offset LONG, length LONG, out_path STRING"
-    )
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out_mode = mode
-
-    def _work(batches: Iterator["object"]) -> Iterator["object"]:
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from incubator_xtable_spark.sources.paimon_dv import read_dv_from_index
-
-        for pdf in batches:
-            outs = []
-            for data_path, index_path, offset, length, out in zip(
-                pdf["data_path"], pdf["index_path"], pdf["offset"], pdf["length"], pdf["out_path"]
-            ):
-                if not os.path.exists(out):
-                    positions = read_dv_from_index(index_path, int(offset), int(length))
-                    tmp = out + f".tmp-{os.getpid()}"
-                    if out_mode == "positions":
-                        pq.write_table(
-                            pa.table(
-                                {
-                                    "file_path": pa.array(
-                                        [data_path] * len(positions), pa.string()
-                                    ),
-                                    "pos": pa.array(np.sort(positions), pa.int64()),
-                                }
-                            ),
-                            tmp,
-                        )
-                    else:
-                        table = pq.read_table(data_path)
-                        keep = np.setdiff1d(
-                            np.arange(table.num_rows, dtype=np.int64),
-                            positions,
-                            assume_unique=True,
-                        )
-                        pq.write_table(table.take(keep), tmp)
-                    os.replace(tmp, out)
-                outs.append(out)
-            yield pd.DataFrame({"out_path": outs})
-
-    df.repartition(len(rows)).mapInPandas(_work, "out_path STRING").count()

@@ -625,19 +625,21 @@ class PaimonConversionSource:
                 }
         return out
 
-    def _dv_cardinality(self, meta: dict) -> int:
-        """Manifest cardinality when present; else one bounded driver-side
-        decode of the DV (index files are metadata-sized)."""
-        if meta.get("cardinality") is not None:
-            return int(meta["cardinality"])
+    def _dv_positions(self, meta: dict):
+        """The deleted positions of one DV range, decoded on the driver
+        (index files are metadata-sized)."""
         from incubator_xtable_spark.sources.paimon_dv import INDEX_DIR, read_dv_from_index
 
         idx = os.path.join(self.base_path, INDEX_DIR, meta["index_file"])
-        n = len(read_dv_from_index(idx, meta["offset"], meta["length"]))
-        meta["cardinality"] = n
-        return n
+        return read_dv_from_index(idx, meta["offset"], meta["length"])
 
-    def _dv_items(self, dv: dict[str, dict]) -> list[dict]:
+    def _dv_cardinality(self, meta: dict) -> int:
+        """Manifest cardinality when present; else one decode of the DV."""
+        if meta.get("cardinality") is None:
+            meta["cardinality"] = len(self._dv_positions(meta))
+        return int(meta["cardinality"])
+
+    def _dv_items(self, dv: dict[str, dict]) -> list[tuple[str, dict]]:
         # deletion vectors key on PARQUET row indexes (the engine decodes
         # positions against _metadata.row_index / pyarrow row order); a DV
         # pointing at an ORC/AVRO data file must refuse loudly, never
@@ -647,56 +649,41 @@ class PaimonConversionSource:
         require_parquet(
             ((p, None) for p in sorted(dv)), reader="paimon deletion vectors"
         )
-        return [
-            {
-                "data_path": p,
-                "index_file": m["index_file"],
-                "offset": m["offset"],
-                "length": m["length"],
-            }
-            for p, m in sorted(dv.items())
-        ]
+        return sorted(dv.items())
 
     def _row_deletes_df(self, dv: dict[str, dict]) -> pa.Table:
         """COMPLETE current delete state (empty = no deletes, never None —
         targets clear stale DVs/delete files absent from a restatement).
-        Positions files are materialized executor-side first."""
+        Missing positions files are written on the driver first."""
         from incubator_xtable_spark.model.core import ROW_DELETES_ARROW
-        from incubator_xtable_spark.sources.paimon_dv import (
-            materialize_dv_outputs,
-            positions_path_for,
-        )
+        from incubator_xtable_spark.sources.paimon_dv import dv_range_id
+        from incubator_xtable_spark.sources.row_deletes import positions_path, write_positions_file
 
-        if not dv:
-            return ROW_DELETES_ARROW.empty_table()
-        materialize_dv_outputs(self.spark, self.base_path, self._dv_items(dv), "positions")
-        rows = [
-            (
-                p,
-                positions_path_for(p, m["index_file"], m["offset"], m["length"]),
-                self._dv_cardinality(m),
-                m["partition_values"],
-            )
-            for p, m in sorted(dv.items())
-        ]
+        rows = []
+        for p, m in self._dv_items(dv):
+            out = positions_path(p, dv_range_id(m["index_file"], m["offset"], m["length"]))
+            if not os.path.exists(out):
+                write_positions_file(p, self._dv_positions(m), out)
+            rows.append((p, out, self._dv_cardinality(m), m["partition_values"]))
         return arrow_table(rows, ROW_DELETES_ARROW)
 
     def _shadow_overrides(self, dv: dict[str, dict]) -> dict[str, tuple]:
         """Materialize purged shadows for covered files and return the
         inventory overrides map path -> (new_path, new_size, row_delta)."""
-        from incubator_xtable_spark.sources.paimon_dv import (
-            materialize_dv_outputs,
-            shadow_path_for,
-        )
+        from incubator_xtable_spark.sources.paimon_dv import dv_range_id
+        from incubator_xtable_spark.sources.row_deletes import shadow_path, write_purged_files
 
-        if not dv:
-            return {}
-        materialize_dv_outputs(self.spark, self.base_path, self._dv_items(dv), "shadows")
-        out = {}
-        for p, m in dv.items():
-            sp = shadow_path_for(p, m["index_file"], m["offset"], m["length"])
-            out[p] = (sp, os.path.getsize(sp), self._dv_cardinality(m))
-        return out
+        shadows = {
+            p: shadow_path(p, dv_range_id(m["index_file"], m["offset"], m["length"]))
+            for p, m in self._dv_items(dv)
+        }
+        write_purged_files(
+            self.spark,
+            [(p, self._dv_positions(dv[p]), sp) for p, sp in shadows.items() if not os.path.exists(sp)],
+        )
+        return {
+            p: (sp, os.path.getsize(sp), self._dv_cardinality(dv[p])) for p, sp in shadows.items()
+        }
 
     def _to_inventory(
         self, entries: list[dict], sch: dict, overrides: Optional[dict[str, tuple]] = None
@@ -870,10 +857,11 @@ class PaimonConversionSource:
             p: m for p, m in prev_dv.items() if p in removed_paths | set(changed)
         }
         if prev_cover:
-            from incubator_xtable_spark.sources.paimon_dv import shadow_path_for
+            from incubator_xtable_spark.sources.paimon_dv import dv_range_id
+            from incubator_xtable_spark.sources.row_deletes import shadow_path
 
             prev_overrides = {
-                p: (shadow_path_for(p, m["index_file"], m["offset"], m["length"]), 0, 0)
+                p: (shadow_path(p, dv_range_id(m["index_file"], m["offset"], m["length"])), 0, 0)
                 for p, m in prev_cover.items()
             }
         extra_removes = [by_path[p] for p in changed if p in by_path]
@@ -1138,14 +1126,16 @@ def read_paimon_as_df(
                 df = df.withColumn(k, F.col("pv").getItem(k).cast(table.read_schema[k].dataType))
             df = df.drop("abs_path", "pv")
         if dv:
-            # deletion vectors apply row-level: decode positions
-            # executor-side and anti-join on (_metadata.file_path,
-            # row_index) — same shape as the Delta DV read path,
-            # distributes with the scan. _dv_items refuses DVs that point
-            # at non-parquet files (positions key on parquet row indexes).
-            from incubator_xtable_spark.sources.paimon_dv import dv_positions_df
+            # deletion vectors apply row-level: decode positions on the
+            # driver and anti-join on (_metadata.file_path, row_index) —
+            # same shape as the Delta DV read path. _dv_items refuses DVs
+            # that point at non-parquet files (positions key on parquet
+            # row indexes).
+            from incubator_xtable_spark.sources.row_deletes import positions_frame
 
-            positions = dv_positions_df(spark, base_path, src._dv_items(dv))
+            positions = positions_frame(
+                spark, {p: src._dv_positions(m) for p, m in src._dv_items(dv)}
+            )
             df = df.withColumn(
                 "_fp", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
             ).withColumn("_ri", F.col("_metadata.row_index"))

@@ -9,8 +9,9 @@ entries, their inherited sequence numbers and row ids and the
 partition-spec mapping all come from model/iceberg_manifests, as for
 the batch source — and each planned partition reads
 its parquet executor-side with pyarrow, applying position-delete
-sources decoded pure-python (position-delete parquets filtered to the
-file, v3 puffin deletion-vector blobs via model/puffin).
+sources through the batch source's `delete_file_positions`
+(position-delete parquets split per data file, v3 puffin
+deletion-vector blobs via model/puffin).
 
 Semantics mirror sources/iceberg_source.read_iceberg_cdc (the
 changelog-scan derivation): added data files -> inserts of their
@@ -22,12 +23,14 @@ never occur. Offsets follow the PARENT CHAIN ({"snapshot": id} —
 snapshot ids are random and must never be ordered numerically); an
 expired parent refuses rather than restating the table as inserts.
 
-EQUALITY deletes (content=2) resolve per partition with a pure-python
-value match against the file's resolved columns: the spec's STRICT
-data_seq < delete_seq rule, null-safe tuple comparison, and partition
-scoping (a partition-less delete file applies globally) — the
-per-file-bounded twin of the batch reader's distributed null-safe
-join. Nested equality columns refuse loudly (same as batch).
+Which delete files apply to which data file is decided by the batch
+source's rules (`position_delete_applies`, and `equality_delete_applies`:
+the spec's STRICT data_seq < delete_seq rule with partition scoping, a
+partition-less delete file applying globally). EQUALITY deletes then
+resolve per file with a pure-python, null-safe value match against the
+file's resolved columns — the per-file-bounded twin of the batch
+reader's distributed null-safe join. Nested equality columns refuse
+loudly (same as batch).
 
 Register per-session:  spark.dataSource.register(IcebergCDCDataSource)
 then  spark.readStream.format("iceberg_cdc").option("path", p).load().
@@ -38,6 +41,8 @@ from __future__ import annotations
 import json
 from typing import Optional
 
+import numpy as np
+
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -46,11 +51,28 @@ from pyspark.sql.datasource import (
 )
 
 from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
+from incubator_xtable_spark.sources.iceberg_source import (
+    delete_file_positions,
+    dv_reference,
+    equality_delete_applies,
+    is_equality_delete,
+    position_delete_applies,
+)
 from incubator_xtable_spark.streaming.cdf_datasource import _arrow_type, _pv_value
 
 # ---------------------------------------------------------------------------
 # Pure-python metadata replay
 # ---------------------------------------------------------------------------
+
+
+# the delete-file fields `delete_file_positions` reads, carried in a plan
+_POSITION_FILE_KEYS = (
+    "file_path",
+    "file_format",
+    "referenced_data_file",
+    "content_offset",
+    "content_size_in_bytes",
+)
 
 
 def _py_meta(base_path: str) -> dict:
@@ -62,32 +84,17 @@ def _py_meta(base_path: str) -> dict:
     return meta
 
 
-def _scope_key(part: Optional[dict]) -> Optional[str]:
-    """Stringified partition scope (the batch reader's _scope twin):
-    None for a partition-less (global) delete file."""
-    if not part:
-        return None
-    return json.dumps({k: str(v) for k, v in sorted(part.items())}, sort_keys=True)
-
-
 def _delete_sources(
     deletes: list[dict], file_path: str, data_seq: int, file_partition: Optional[dict] = None
 ) -> list[dict]:
     """Metadata-sized descriptors of every delete source applicable to
-    ``file_path`` at ``data_seq``. Sequence rules per the Iceberg spec:
-    position deletes and DV blobs apply at delete_seq >= data_seq;
-    EQUALITY deletes apply STRICTLY at data_seq < delete_seq and only
-    within their partition scope (empty partition = global)."""
+    ``file_path`` at ``data_seq``, under the batch source's rules
+    (`position_delete_applies`, `equality_delete_applies`)."""
     out = []
     for e in deletes:
         df = e["data_file"]
-        seq = e["sequence_number"]
-        content = df.get("content") or 0
-        if content == 2:
-            if seq <= data_seq:
-                continue
-            scope = _scope_key(df.get("partition"))
-            if scope is not None and scope != _scope_key(file_partition):
+        if is_equality_delete(e):
+            if not equality_delete_applies(e, data_seq, file_partition):
                 continue
             ids = sorted(df.get("equality_ids") or [])
             if not ids:
@@ -95,32 +102,8 @@ def _delete_sources(
                     f"equality delete file {df['file_path']} has no equality_ids"
                 )
             out.append({"kind": "eqfile", "path": df["file_path"], "eq_ids": ids})
-            continue
-        if seq < data_seq:
-            continue
-        if (df.get("file_format") or "").upper() == "PUFFIN" or df.get(
-            "referenced_data_file"
-        ):
-            ref = df.get("referenced_data_file")
-            if ref is None:
-                # a DV blob is positions OF ONE data file; without the
-                # manifest reference (field 143) it cannot be attributed
-                raise ValueError(
-                    f"puffin deletion vector {df['file_path']} carries no "
-                    "referenced_data_file; cannot attribute its positions"
-                )
-            if ref != file_path:
-                continue
-            out.append(
-                {
-                    "kind": "puffin",
-                    "path": df["file_path"],
-                    "offset": int(df["content_offset"]),
-                    "size": int(df["content_size_in_bytes"]),
-                }
-            )
-        else:
-            out.append({"kind": "posfile", "path": df["file_path"]})
+        elif position_delete_applies(e, data_seq) and dv_reference(df) in (None, file_path):
+            out.append({"kind": "position", "file": {k: df.get(k) for k in _POSITION_FILE_KEYS}})
     return out
 
 
@@ -262,26 +245,8 @@ def _eq_positions(
 def _positions_from(sources: list[dict], file_path: str) -> set:
     out: set[int] = set()
     for s in sources:
-        if s["kind"] == "eqfile":
-            continue  # resolved by _eq_positions with data context
-        if s["kind"] == "puffin":
-            from incubator_xtable_spark.model.puffin import (
-                read_dv_positions_from_puffin,
-            )
-
-            out.update(
-                int(x)
-                for x in read_dv_positions_from_puffin(
-                    s["path"], s["offset"], s["size"]
-                )
-            )
-        else:
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(s["path"], columns=["file_path", "pos"])
-            mask = pc.equal(tbl.column("file_path"), file_path)
-            out.update(int(x) for x in tbl.filter(mask).column("pos").to_pylist())
+        if s["kind"] == "position":  # eqfile: resolved by _eq_positions
+            out.update(delete_file_positions(s["file"]).get(file_path, np.empty(0)).tolist())
     return out
 
 

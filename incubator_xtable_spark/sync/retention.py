@@ -10,7 +10,8 @@ Reference parity:
 
 Safety model mirrors each format:
 - Delta: commit JSONs at/below the last checkpoint are prunable (the
-  checkpoint reconstructs state); data-file vacuum deletes files no
+  checkpoint reconstructs state), and so are older checkpoints and
+  sidecars no checkpoint references; data-file vacuum deletes files no
   retained version references;
 - Iceberg: expiring a snapshot breaks the parent chain behind it — which
   is exactly what the source's incremental-safety check detects;
@@ -34,9 +35,16 @@ from pyspark.sql import SparkSession
 
 
 def delta_expire_log(base_path: str) -> list[int]:
-    """Delete commit JSONs at/below the last checkpoint (they are
-    reconstructable from it). Returns the pruned versions."""
+    """Delete what the last checkpoint makes unnecessary: the commit
+    JSONs at/below it (reconstructable from it), the checkpoints below
+    it, and the v2 sidecars that no remaining checkpoint references and
+    that are older than its top-level file (a failed checkpoint write
+    leaves such sidecars behind; a concurrent writer's new sidecars are
+    younger, so they stay). Returns the pruned versions."""
+    import pyarrow.parquet as pq
+
     from incubator_xtable_spark.sources.delta_source import (
+        _checkpoint_parquets,
         list_log_versions,
         read_last_checkpoint,
     )
@@ -44,11 +52,36 @@ def delta_expire_log(base_path: str) -> list[int]:
     cp = read_last_checkpoint(base_path)
     if cp is None:
         return []
+    log_dir = os.path.join(base_path, "_delta_log")
     pruned = []
     for v in list_log_versions(base_path):
         if v <= cp["version"]:
-            os.unlink(os.path.join(base_path, "_delta_log", f"{v:020d}.json"))
+            os.unlink(os.path.join(log_dir, f"{v:020d}.json"))
             pruned.append(v)
+    remaining = []
+    for name in os.listdir(log_dir):
+        if ".checkpoint." in name and name.endswith(".parquet"):
+            path = os.path.join(log_dir, name)
+            if int(name[:20]) < cp["version"]:
+                os.unlink(path)
+            else:
+                remaining.append(path)
+    sidecar_dir = os.path.join(log_dir, "_sidecars")
+    if not os.path.isdir(sidecar_dir):
+        return pruned
+    referenced = set()
+    for path in remaining:
+        if "sidecar" in pq.read_schema(path).names:
+            refs = pq.read_table(path, columns=["sidecar"]).column("sidecar").to_pylist()
+            referenced |= {os.path.basename(r["path"]) for r in refs if r and r["path"]}
+    cutoff = min(
+        (os.path.getmtime(p) for p in _checkpoint_parquets(base_path, cp["version"], cp.get("parts"))),
+        default=0.0,
+    )
+    for name in os.listdir(sidecar_dir):
+        path = os.path.join(sidecar_dir, name)
+        if name.endswith(".parquet") and name not in referenced and os.path.getmtime(path) < cutoff:
+            os.unlink(path)
     return pruned
 
 
@@ -890,7 +923,11 @@ def iceberg_rewrite_data_files(
 
     from incubator_xtable_spark.model.core import ROW_DELETES_ARROW, TableChange, table_rows
     from incubator_xtable_spark.model.iceberg_manifests import live_entries
-    from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+    from incubator_xtable_spark.sources.iceberg_source import (
+        IcebergConversionSource,
+        is_equality_delete,
+    )
+    from incubator_xtable_spark.sources.row_deletes import positions_frame
     from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
 
     src = IcebergConversionSource(spark, base_path, name=table_name)
@@ -904,13 +941,13 @@ def iceberg_rewrite_data_files(
     table = src.get_current_table()
     sid = src._head_snapshot_id(meta)
     entries, delete_entries = live_entries(meta, sid)
-    if any((e["data_file"].get("content") or 0) == 2 for e in delete_entries):
+    if any(is_equality_delete(e) for e in delete_entries):
         raise NotImplementedError(
             "iceberg_rewrite_data_files with equality deletes is not "
             "supported (content=2 application needs per-row key evaluation)"
         )
     min_file_bytes = min_file_bytes or target_file_bytes // 2
-    affected = src._applicable_deletes(entries, delete_entries)
+    resolved = src._resolve_deletes(entries, delete_entries)
 
     groups: dict = {}
     for e in entries:
@@ -933,23 +970,16 @@ def iceberg_rewrite_data_files(
             e
             for e in members
             if int(e["data_file"].get("file_size_in_bytes") or 0) < min_file_bytes
-            or e["data_file"]["file_path"] in affected
+            or e["data_file"]["file_path"] in resolved
         ]
-        has_deletes = any(e["data_file"]["file_path"] in affected for e in cand)
+        has_deletes = any(e["data_file"]["file_path"] in resolved for e in cand)
         if len(cand) < 2 and not has_deletes:
             continue
         paths = [e["data_file"]["file_path"] for e in cand]
         df = spark.read.parquet(*paths)
         if has_deletes:
-            seq_df = spark.createDataFrame(
-                [(p, e["sequence_number"]) for e, p in zip(cand, paths)],
-                "file_path STRING, data_seq LONG",
-            )
-            applicable_pos = (
-                src._positions_df(delete_entries, entries)
-                .join(F.broadcast(seq_df), "file_path")
-                .filter(F.col("delete_seq") >= F.col("data_seq"))
-                .select("file_path", "pos")
+            applicable_pos = positions_frame(
+                spark, {p: resolved[p][0] for p in paths if p in resolved}
             )
             df = (
                 df.withColumn(
@@ -1005,7 +1035,7 @@ def iceberg_rewrite_data_files(
             files_removed=removed_inv,
         )
     )
-    if affected:
+    if resolved:
         # every delete-carrying file was rewritten: restate the delete
         # set as EMPTY so stale delete manifests drop with their files
         tgt.sync_row_deletes(ROW_DELETES_ARROW.empty_table())

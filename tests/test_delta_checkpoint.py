@@ -130,6 +130,26 @@ def _write_checkpoint_with(monkeypatch, fake_os, base, version, layout):
         monkeypatch.setattr(DS, "os", os)
 
 
+def _one_file_commits(spark, base, layout):
+    """Six one-file commits (versions 0..5) through a Delta target whose
+    checkpoint lands at v3 in ``layout``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incubator_xtable_spark.model.core import InternalPartitionField
+
+    target = DeltaConversionTarget(spark, base, checkpoint_interval=3, checkpoint_layout=layout)
+    for v in range(6):
+        path = os.path.join(base, f"p={v % 2}", f"f-{v}.parquet")
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(pa.table({"id": pa.array([v], pa.int64())}), path)
+        os.utime(path, (1_700_000_000 + v, 1_700_000_000 + v))
+        source = ParquetConversionSource(
+            spark, base, name="t", partition_fields=[InternalPartitionField("p")]
+        )
+        ConversionController().sync(source, {TableFormat.DELTA: target})
+
+
 @pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
 def test_checkpoint_write_survives_a_failure_at_every_rename(
     spark, tmp_path, monkeypatch, layout
@@ -139,24 +159,10 @@ def test_checkpoint_write_survives_a_failure_at_every_rename(
     state as it was, no temporary file behind, and a conformant table;
     writing the checkpoint again then succeeds. Two actions per fragment
     or sidecar, so the split layouts rename several files."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from incubator_xtable_spark.model.core import InternalPartitionField
-
     monkeypatch.setattr(DS, "_MULTIPART_ACTIONS_PER_FILE", 2)
     monkeypatch.setattr(DS, "_SIDECAR_ACTIONS_PER_FILE", 2)
     pristine = str(tmp_path / "pristine")
-    target = DeltaConversionTarget(spark, pristine, checkpoint_interval=3, checkpoint_layout=layout)
-    for v in range(6):  # one file per commit; a checkpoint lands at v3
-        path = os.path.join(pristine, f"p={v % 2}", f"f-{v}.parquet")
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(pa.table({"id": pa.array([v], pa.int64())}), path)
-        os.utime(path, (1_700_000_000 + v, 1_700_000_000 + v))
-        source = ParquetConversionSource(
-            spark, pristine, name="t", partition_fields=[InternalPartitionField("p")]
-        )
-        ConversionController().sync(source, {TableFormat.DELTA: target})
+    _one_file_commits(spark, pristine, layout)
     assert list_log_versions(pristine) == list(range(6))
     previous = read_last_checkpoint(pristine)
     assert previous["version"] == 3
@@ -200,3 +206,36 @@ def test_checkpoint_write_survives_a_failure_at_every_rename(
         assert read_last_checkpoint(d)["version"] == 5
         assert state(d, exact=False) == state(pristine, exact=False), k
         assert check_delta_conformance(spark, d).passed, k
+
+
+def test_expire_removes_sidecars_a_failed_checkpoint_left(spark, tmp_path, monkeypatch):
+    """A v2 checkpoint write (at v4, below the head v5) that fails at its
+    3rd rename has renamed two sidecars that nothing references. Once the
+    write is rerun,
+    `delta_expire_log` removes them, the checkpoint below and that
+    checkpoint's sidecars: only the sidecars the new checkpoint
+    references remain, and the table reads and conforms as before."""
+    import pyarrow.parquet as pq
+
+    from incubator_xtable_spark.sync.retention import delta_expire_log
+
+    monkeypatch.setattr(DS, "_SIDECAR_ACTIONS_PER_FILE", 2)
+    d = str(tmp_path / "t")
+    _one_file_commits(spark, d, "v2")
+    log = os.path.join(d, "_delta_log")
+    sidecar_dir = os.path.join(log, "_sidecars")
+    before = set(os.listdir(sidecar_dir))
+    with pytest.raises(OSError, match="injected"):
+        _write_checkpoint_with(monkeypatch, _FailingOs(3), d, 4, "v2")
+    assert len(set(os.listdir(sidecar_dir)) - before) == 2
+    DS.write_checkpoint(d, 4, layout="v2")
+    expected = sorted(map(tuple, read_delta_as_df(spark, d).collect()))
+    assert check_delta_conformance(spark, d).passed
+
+    assert delta_expire_log(d) == list(range(5))
+    (top,) = glob.glob(os.path.join(log, "*.checkpoint*.parquet"))
+    assert os.path.basename(top).startswith(f"{4:020d}.checkpoint.")
+    refs = pq.read_table(top, columns=["sidecar"]).column("sidecar").to_pylist()
+    assert sorted(os.listdir(sidecar_dir)) == sorted(r["path"] for r in refs if r)
+    assert check_delta_conformance(spark, d).passed
+    assert sorted(map(tuple, read_delta_as_df(spark, d).collect())) == expected

@@ -1355,3 +1355,381 @@ def test_delta_checksum_fallback_is_driver_only(spark, tmp_path):
     live = DS.live_adds(root).values()
     crc = read_version_checksum(root, 1)
     assert (crc["numFiles"], crc["tableSizeBytes"]) == (6, sum(a["size"] for a in live))
+
+
+# -- row deletes ---------------------------------------------------------------
+# The Spark resolvers the driver ones replaced, kept as the reference:
+# Iceberg's position-delete parquet scan tagged with each delete file's
+# sequence number, its executor-side Puffin decode and its equality join,
+# filtered with the `delete_seq >= data_seq` join; Delta's and Paimon's
+# executor-side DV decodes.
+
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _spark_puffin_positions(spark, items):
+    """(puffin, offset, length, referenced file, seq) -> (file_path, pos,
+    delete_seq), blobs decoded executor-side."""
+    df = spark.createDataFrame(
+        items, "puffin STRING, offset LONG, length LONG, file_path STRING, delete_seq LONG"
+    )
+    root = _PKG_ROOT
+
+    def explode(batches):
+        import sys
+
+        if root not in sys.path:
+            sys.path.insert(0, root)
+        import pandas as pd
+
+        from incubator_xtable_spark.model.puffin import read_dv_positions_from_puffin
+
+        for pdf in batches:
+            for puffin, offset, length, fp, seq in zip(
+                pdf["puffin"], pdf["offset"], pdf["length"], pdf["file_path"], pdf["delete_seq"]
+            ):
+                positions = read_dv_positions_from_puffin(puffin, int(offset), int(length))
+                yield pd.DataFrame({"file_path": fp, "pos": positions.astype("int64"), "delete_seq": int(seq)})
+
+    return df.mapInPandas(explode, "file_path STRING, pos LONG, delete_seq LONG")
+
+
+def _spark_equality_positions(spark, data_entries, eq_entries, column):
+    """Equality deletes on one top-level data ``column`` as (file_path,
+    pos, delete_seq): a null-safe join of the data rows against the delete
+    rows under data_seq < delete_seq and the delete file's partition
+    scope."""
+
+    def scope(part):
+        return json.dumps({k: str(v) for k, v in sorted(part.items())}, sort_keys=True) if part else None
+
+    data = spark.createDataFrame(
+        [
+            (e["data_file"]["file_path"], e["sequence_number"], scope(e["data_file"].get("partition")))
+            for e in data_entries
+        ],
+        "file_path STRING, data_seq LONG, data_scope STRING",
+    )
+    rows = (
+        spark.read.parquet(*[e["data_file"]["file_path"] for e in data_entries])
+        .select(
+            column,
+            F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "").alias("file_path"),
+            F.col("_metadata.row_index").alias("pos"),
+        )
+        .join(F.broadcast(data), "file_path")
+    )
+    dels = None
+    for e in eq_entries:
+        part = (
+            spark.read.parquet(e["data_file"]["file_path"])
+            .select(F.col(column).alias("_del"))
+            .withColumn("delete_seq", F.lit(e["sequence_number"]))
+            .withColumn("del_scope", F.lit(scope(e["data_file"].get("partition"))).cast("string"))
+        )
+        dels = part if dels is None else dels.unionByName(part)
+    cond = (
+        (F.col("data_seq") < F.col("delete_seq"))
+        & F.col(column).eqNullSafe(F.col("_del"))
+        & (F.col("del_scope").isNull() | (F.col("del_scope") == F.col("data_scope")))
+    )
+    return rows.join(dels, cond).select("file_path", "pos", "delete_seq")
+
+
+def _spark_iceberg_positions(spark, data_entries, delete_entries, eq_column=None):
+    """The positions in force per data file, resolved with Spark jobs."""
+    parts, dvs = [], []
+    eq_entries = [e for e in delete_entries if e["data_file"].get("content") == 2]
+    for e in delete_entries:
+        df = e["data_file"]
+        if df.get("content") == 2:
+            continue
+        if (df.get("file_format") or "").upper() == "PUFFIN":
+            dvs.append(
+                (
+                    df["file_path"],
+                    int(df["content_offset"]),
+                    int(df["content_size_in_bytes"]),
+                    df["referenced_data_file"],
+                    e["sequence_number"],
+                )
+            )
+        else:
+            parts.append(
+                spark.read.schema("file_path STRING, pos LONG")
+                .parquet(df["file_path"])
+                .withColumn("delete_seq", F.lit(e["sequence_number"]))
+            )
+    if dvs:
+        parts.append(_spark_puffin_positions(spark, dvs))
+    if eq_entries:
+        parts.append(_spark_equality_positions(spark, data_entries, eq_entries, eq_column))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    seq = spark.createDataFrame(
+        [(e["data_file"]["file_path"], e["sequence_number"]) for e in data_entries],
+        "file_path STRING, data_seq LONG",
+    )
+    applicable = (
+        out.join(F.broadcast(seq), "file_path")
+        .filter(F.col("delete_seq") >= F.col("data_seq"))
+        .select("file_path", "pos")
+        .distinct()
+    )
+    return _positions_by_file(applicable)
+
+
+def _spark_dv_positions(spark, rows, read):
+    """(data path, *DV locator) rows -> {data path: positions}, each DV
+    decoded executor-side by ``read(*locator)``."""
+    root = _PKG_ROOT
+
+    def explode(batches):
+        import sys
+
+        if root not in sys.path:
+            sys.path.insert(0, root)
+        import pandas as pd
+
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                positions = read(*row[1:])
+                yield pd.DataFrame({"file_path": row[0], "pos": positions.astype("int64")})
+
+    n = len(rows[0]) - 1
+    schema = "data_path STRING, " + ", ".join(f"a{i} STRING" for i in range(n))
+    df = spark.createDataFrame([tuple(str(x) for x in r) for r in rows], schema)
+    return _positions_by_file(df.mapInPandas(explode, "file_path STRING, pos LONG"))
+
+
+def _positions_by_file(df):
+    out: dict[str, list[int]] = {}
+    for r in df.collect():
+        out.setdefault(r["file_path"], []).append(r["pos"])
+    return {p: sorted(v) for p, v in out.items()}
+
+
+def _positions_file(path):
+    """A positions parquet as {data path: positions}, checking it names
+    one data file and is sorted by pos."""
+    t = pq.read_table(path).to_pydict()
+    assert sorted(t) == ["file_path", "pos"] and len(set(t["file_path"])) == 1
+    assert t["pos"] == sorted(t["pos"])
+    return {t["file_path"][0]: t["pos"]}
+
+
+def _iceberg_case(spark, tmp_path, case):
+    """An Iceberg table with deletes of one kind, and the equality column
+    its equality deletes match on (None when it has none)."""
+    from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+
+    from .test_iceberg_deletes import _append_delete_snapshot, _data_files
+    from .test_row_delete_conversion import _iceberg_deleted_table
+
+    if case == "v3_puffin":
+        return _iceberg_v3_dv_table(spark, tmp_path), None
+    if case == "equality":
+        from .test_iceberg_equality_deletes import _append_delete_snapshot as append_eq
+        from .test_iceberg_equality_deletes import _eq_parquet, _field_id, _make_table
+
+        d = _make_table(spark, tmp_path)
+        eq = _eq_parquet(os.path.join(d, "eqdel.parquet"), {"id": pa.array([3, 12, 17], pa.int64())})
+        append_eq(spark, d, [(eq, [_field_id(IcebergConversionSource(spark, d), "id")], {})])
+        return d, "id"
+    d, _ = _iceberg_deleted_table(spark, tmp_path)
+    a, b = _data_files(d)
+    if case == "v2_two_files":
+        _append_delete_snapshot(d, [(a, 5), (b, 0), (b, 7), (a, 2)], 1000, 3)
+    else:  # seq_boundary: equal sequence numbers apply, an older delete does not
+        _append_delete_snapshot(d, [(a, 9)], 1000, 1)
+        _append_delete_snapshot(d, [(b, 3)], 1001, 0)
+    return d, None
+
+
+def _iceberg_v3_dv_table(spark, tmp_path):
+    """A Delta table with a DV on part-0001, converted into an Iceberg v3
+    table (the DV becomes a Puffin blob) in the same directory."""
+    from incubator_xtable_spark.model.core import TableFormat
+    from incubator_xtable_spark.sync.controller import ConversionController
+    from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
+
+    from .test_row_delete_conversion import _base_table, _dv_commit
+
+    base, s1, _ = _base_table(tmp_path)
+    _dv_commit(base, 1, s1, [2, 3, 7])
+    ConversionController().sync(
+        DS.DeltaConversionSource(spark, base, expose_row_deletes=True),
+        {TableFormat.ICEBERG: IcebergConversionTarget(spark, base, table_name="v3t", format_version=3)},
+    )
+    return base
+
+
+@pytest.mark.parametrize("case", ["v2_two_files", "seq_boundary", "v3_puffin", "equality"])
+def test_iceberg_delete_positions_match_spark_reference(spark, tmp_path, case):
+    """The driver resolver's positions per data file equal the Spark
+    resolution's, for a position parquet covering two data files, a
+    delete at the data file's sequence number (applies) and one below it
+    (does not), a v3 Puffin deletion vector and a lowered equality
+    delete; each positions file holds exactly those positions."""
+    from incubator_xtable_spark.model.iceberg_manifests import live_entries
+    from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+
+    d, eq_column = _iceberg_case(spark, tmp_path, case)
+    src = IcebergConversionSource(spark, d, expose_row_deletes=True)
+    meta = src._meta()
+    data, deletes = live_entries(meta, src._head_snapshot_id(meta))
+    reference = _spark_iceberg_positions(spark, data, deletes, eq_column)
+    resolved = src._resolve_deletes(data, deletes)
+    assert {p: pos.tolist() for p, (pos, _) in resolved.items()} == reference
+    expected_counts = {
+        "v2_two_files": [2, 4],
+        "seq_boundary": [4],
+        "v3_puffin": [3],
+        "equality": [1, 2],
+    }[case]
+    assert sorted(len(v) for v in reference.values()) == sorted(expected_counts)
+    written = {}
+    for r in model_rows(src.get_current_snapshot().row_deletes):
+        written.update(_positions_file(r["positions_path"]))
+    assert written == reference
+
+
+def _shadow_rows(shadow, data_path, positions):
+    """Check that ``shadow`` holds ``data_path``'s rows without
+    ``positions``."""
+    data = pq.read_table(data_path).to_pylist()
+    assert pq.read_table(shadow).to_pylist() == [r for i, r in enumerate(data) if i not in set(positions)]
+
+
+def test_delta_dv_outputs_match_spark_reference(spark, tmp_path, monkeypatch):
+    """Delta DVs decoded on the driver: the positions file and the purged
+    shadow hold the Spark decode's positions under the names the
+    DV's unique id gives them, and the shadow tier for big batches writes
+    the same shadow."""
+    import hashlib
+
+    from incubator_xtable_spark.sources import row_deletes
+    from incubator_xtable_spark.sources.delta_dv import read_dv_positions
+
+    from .test_row_delete_conversion import _base_table, _dv_commit
+
+    base, s1, _ = _base_table(tmp_path)
+    _dv_commit(base, 1, s1, [2, 3, 7])
+    dvs = {os.path.join(base, a["path"]): DS._dv_of(a) for a in DS.live_adds(base).values() if DS._dv_of(a)}
+    reference = _spark_dv_positions(
+        spark,
+        [(p, json.dumps(d)) for p, d in dvs.items()],
+        lambda desc: read_dv_positions(base, json.loads(desc)),
+    )
+    assert [len(v) for v in reference.values()] == [3]
+    (path, desc), (positions,) = next(iter(dvs.items())), reference.values()
+    uid = f"{desc['storageType']}{desc['pathOrInlineDv']}@{desc['offset']}"
+    stem = path[: -len(".parquet")]
+    h = hashlib.md5(uid.encode()).hexdigest()[:8]
+
+    (row,) = model_rows(DS.DeltaConversionSource(spark, base, expose_row_deletes=True).get_current_snapshot().row_deletes)
+    assert row["positions_path"] == f"{stem}.deletes-{h}.parquet"
+    assert _positions_file(row["positions_path"]) == reference
+    files = model_rows(DS.DeltaConversionSource(spark, base).get_current_snapshot().files)
+    shadow = f"{stem}.purged-{h}.parquet"
+    assert shadow in {r["physical_path"] for r in files}
+    _shadow_rows(shadow, path, positions)
+
+    os.remove(shadow)
+    monkeypatch.setattr(row_deletes, "_DRIVER_PURGE_MAX_BYTES", 0)
+    with _spark_jobs(spark) as jobs:
+        DS.DeltaConversionSource(spark, base).get_current_snapshot()
+    assert jobs[0] >= 1
+    _shadow_rows(shadow, path, positions)
+
+
+def _paimon_dv_table(spark, tmp_path):
+    """The Paimon append table of ids 0..9 with a DV on positions 2, 3, 7
+    (`test_paimon_depth.dv_table`)."""
+    from .paimon_testtable import PaimonTestTable
+    from .test_paimon_depth import FIELDS, _mkrows
+
+    t = PaimonTestTable(spark, str(tmp_path / "dvt"), FIELDS, partition_keys=["level"]).create()
+    _, entries = t.append(_mkrows(0, 10))
+    t.set_deletion_vectors([({"level": "INFO"}, 0, {entries[0]["_FILE"]["_FILE_NAME"]: [2, 3, 7]})])
+    return t.base
+
+
+def test_paimon_dv_outputs_match_spark_reference(spark, tmp_path):
+    """Paimon DVs decoded on the driver: the positions file and the purged
+    shadow hold the Spark decode's positions under the names the index
+    range gives them."""
+    import hashlib
+
+    from incubator_xtable_spark.sources.paimon_dv import INDEX_DIR, read_dv_from_index
+    from incubator_xtable_spark.sources.paimon_source import PaimonConversionSource
+
+    base = _paimon_dv_table(spark, tmp_path)
+    src = PaimonConversionSource(spark, base, name="p", expose_row_deletes=True)
+    snap = src._latest()
+    sch = src._schema(snap.get("schemaId", 0))
+    dv = src._index_dv_map(snap, sch)
+    reference = _spark_dv_positions(
+        spark,
+        [(p, os.path.join(base, INDEX_DIR, m["index_file"]), m["offset"], m["length"]) for p, m in dv.items()],
+        lambda index, offset, length: read_dv_from_index(index, int(offset), int(length)),
+    )
+    assert [len(v) for v in reference.values()] == [3]
+    (path, m), (positions,) = next(iter(dv.items())), reference.values()
+    stem = path[: -len(".parquet")]
+    h = hashlib.md5(f"{m['index_file']}:{m['offset']}:{m['length']}".encode()).hexdigest()[:8]
+
+    (row,) = model_rows(src.get_current_snapshot().row_deletes)
+    assert row["positions_path"] == f"{stem}.deletes-{h}.parquet"
+    assert _positions_file(row["positions_path"]) == reference
+    files = model_rows(PaimonConversionSource(spark, base, name="p").get_current_snapshot().files)
+    shadow = f"{stem}.purged-{h}.parquet"
+    assert shadow in {r["physical_path"] for r in files}
+    _shadow_rows(shadow, path, positions)
+
+
+def _row_delete_source(spark, tmp_path, table):
+    """(make_source(expose_row_deletes), commit with deletes) of ``table``."""
+    from incubator_xtable_spark.sources.iceberg_source import IcebergConversionSource
+    from incubator_xtable_spark.sources.paimon_source import PaimonConversionSource
+
+    from .test_row_delete_conversion import _iceberg_deleted_table
+
+    if table == "paimon_dv":
+        base = _paimon_dv_table(spark, tmp_path)
+        commit = str(PaimonConversionSource(spark, base).latest_snapshot_id())
+        return (lambda expose: PaimonConversionSource(spark, base, name="p", expose_row_deletes=expose)), commit
+    if table == "iceberg_v3_puffin":
+        base = _iceberg_v3_dv_table(spark, tmp_path)
+    else:
+        base, _ = _iceberg_deleted_table(spark, tmp_path)
+    commit = str(IcebergConversionSource(spark, base)._meta()["current-snapshot-id"])
+    return (lambda expose: IcebergConversionSource(spark, base, name="i", expose_row_deletes=expose)), commit
+
+
+@pytest.mark.parametrize("table", ["iceberg_deleted_table", "iceberg_v3_puffin", "paimon_dv"])
+def test_row_delete_sources_are_driver_only(spark, tmp_path, table):
+    """A snapshot and a commit's change of a table with position deletes,
+    deletion vectors or Puffin blobs, with row deletes exposed and not,
+    each cold (no positions file or shadow yet) and warm: no Spark job and
+    no py4j command, the shadows being under the driver's byte gate.
+    Equality deletes lowered to positions are exempt: they need one
+    data-sized scan (`IcebergConversionSource._equality_positions_df`)."""
+    make, commit = _row_delete_source(spark, tmp_path, table)
+    calls = {
+        "snapshot": lambda src: src.get_current_snapshot(),
+        "change": lambda src: src.get_table_change_for_commit(commit),
+    }
+    for expose in (True, False):
+        for name, call in calls.items():
+            for kind in ("deletes", "purged"):
+                for path in glob.glob(os.path.join(tmp_path, "**", f"*.{kind}-*.parquet"), recursive=True):
+                    os.remove(path)
+            for state in ("cold", "warm"):
+                src = make(expose)
+                with _spark_jobs(spark) as jobs, _py4j_commands(spark) as sent:
+                    call(src)
+                assert (jobs, sent) == ([0], []), (expose, name, state)
+            kind = "deletes" if expose else "purged"
+            assert glob.glob(os.path.join(tmp_path, "**", f"*.{kind}-*.parquet"), recursive=True)

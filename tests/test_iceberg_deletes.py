@@ -46,6 +46,90 @@ def _write_positions(path: str, rows: list[tuple[str, int]]) -> None:
     )
 
 
+def _append_delete_snapshot(d: str, rows: list[tuple[str, int]], snapshot_id: int, seq: int) -> None:
+    """Append a spec-shaped snapshot ``snapshot_id`` at sequence ``seq``
+    to the head: its manifest list is the head's plus one delete manifest
+    (content=1) holding one position-delete parquet of ``rows``."""
+    meta = read_table_metadata(d)
+    head = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
+    pos_path = os.path.join(d, f"delete-{snapshot_id}.parquet")
+    _write_positions(pos_path, rows)
+    del_manifest = os.path.join(metadata_dir(d), f"del-m-{snapshot_id}.avro")
+    dlen = write_ocf(
+        del_manifest,
+        manifest_entry_schema([]),
+        [
+            {
+                "status": 1,
+                "snapshot_id": snapshot_id,
+                "sequence_number": seq,
+                "file_sequence_number": seq,
+                "data_file": {
+                    "content": 1,
+                    "file_path": pos_path,
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": len(rows),
+                    "file_size_in_bytes": os.path.getsize(pos_path),
+                },
+            }
+        ],
+        extra_meta={"format-version": "2", "content": "deletes"},
+    )
+    new_list = os.path.join(metadata_dir(d), f"snap-{snapshot_id}-del.avro")
+    write_ocf(
+        new_list,
+        MANIFEST_LIST_SCHEMA,
+        read_ocf(head["manifest-list"])[0]
+        + [
+            {
+                "manifest_path": del_manifest,
+                "manifest_length": dlen,
+                "partition_spec_id": 0,
+                "content": 1,
+                "sequence_number": seq,
+                "min_sequence_number": seq,
+                "added_snapshot_id": snapshot_id,
+                "added_files_count": 1,
+                "existing_files_count": 0,
+                "deleted_files_count": 0,
+                "added_rows_count": len(rows),
+                "existing_rows_count": 0,
+                "deleted_rows_count": len(rows),
+            }
+        ],
+        extra_meta={"format-version": "2"},
+    )
+    meta2 = json.loads(json.dumps(meta))
+    meta2["last-sequence-number"] = seq
+    meta2["current-snapshot-id"] = snapshot_id
+    meta2["snapshots"].append(
+        {
+            "snapshot-id": snapshot_id,
+            "parent-snapshot-id": head["snapshot-id"],
+            "sequence-number": seq,
+            "timestamp-ms": head["timestamp-ms"] + 1,
+            "manifest-list": new_list,
+            "summary": {"operation": "delete"},
+            "schema-id": 0,
+        }
+    )
+    v = max(
+        int(fn[1:].split(".")[0])
+        for fn in os.listdir(metadata_dir(d))
+        if fn.startswith("v") and fn.endswith(".metadata.json")
+    )
+    with open(os.path.join(metadata_dir(d), f"v{v + 1}.metadata.json"), "w") as fh:
+        json.dump(meta2, fh)
+    with open(os.path.join(metadata_dir(d), "version-hint.text"), "w") as fh:
+        fh.write(str(v + 1))
+
+
+def _data_files(d: str) -> list[str]:
+    meta = read_table_metadata(d)
+    return sorted(e["data_file"]["file_path"] for e in live_entries(meta, meta["current-snapshot-id"])[0])
+
+
 @pytest.fixture()
 def deleted_table(spark, tmp_path):
     """Build an Iceberg table via our target (snapshot 1), then append a
@@ -67,91 +151,9 @@ def deleted_table(spark, tmp_path):
     res = ConversionController().sync(source, {TableFormat.ICEBERG: target})
     assert res[TableFormat.ICEBERG].status == SyncStatusCode.SUCCESS
 
-    meta = read_table_metadata(d)
-    src = IcebergConversionSource(spark, d)
-    entries = live_entries(meta, meta["current-snapshot-id"])[0]
-    victim = sorted(e["data_file"]["file_path"] for e in entries)[0]
-
-    # positions parquet: delete rows 0,1,2 of the victim file
-    pos_path = os.path.join(d, "delete-0001.parquet")
-    _write_positions(pos_path, [(victim, 0), (victim, 1), (victim, 2)])
-
-    # delete manifest (content=1 entries) at sequence 2
-    del_manifest = os.path.join(metadata_dir(d), "del-m0.avro")
-    dlen = write_ocf(
-        del_manifest,
-        manifest_entry_schema([]),
-        [
-            {
-                "status": 1,
-                "snapshot_id": 999,
-                "sequence_number": 2,
-                "file_sequence_number": 2,
-                "data_file": {
-                    "content": 1,
-                    "file_path": pos_path,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": 3,
-                    "file_size_in_bytes": os.path.getsize(pos_path),
-                },
-            }
-        ],
-        extra_meta={"format-version": "2", "content": "deletes"},
-    )
-
-    # new manifest list = old manifests + the delete manifest
-    snap1 = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-    old_manifests = read_ocf(snap1["manifest-list"])[0]
-    new_list = os.path.join(metadata_dir(d), "snap-999-del.avro")
-    write_ocf(
-        new_list,
-        MANIFEST_LIST_SCHEMA,
-        old_manifests
-        + [
-            {
-                "manifest_path": del_manifest,
-                "manifest_length": dlen,
-                "partition_spec_id": 0,
-                "content": 1,
-                "sequence_number": 2,
-                "min_sequence_number": 2,
-                "added_snapshot_id": 999,
-                "added_files_count": 1,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": 3,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 3,
-            }
-        ],
-        extra_meta={"format-version": "2"},
-    )
-
-    # snapshot 2 in a new metadata version
-    meta2 = json.loads(json.dumps(meta))
-    meta2["last-sequence-number"] = 2
-    meta2["current-snapshot-id"] = 999
-    meta2["snapshots"].append(
-        {
-            "snapshot-id": 999,
-            "parent-snapshot-id": snap1["snapshot-id"],
-            "sequence-number": 2,
-            "timestamp-ms": snap1["timestamp-ms"] + 1,
-            "manifest-list": new_list,
-            "summary": {"operation": "delete"},
-            "schema-id": 0,
-        }
-    )
-    v = max(
-        int(fn[1:].split(".")[0])
-        for fn in os.listdir(metadata_dir(d))
-        if fn.startswith("v") and fn.endswith(".metadata.json")
-    )
-    with open(os.path.join(metadata_dir(d), f"v{v + 1}.metadata.json"), "w") as fh:
-        json.dump(meta2, fh)
-    with open(os.path.join(metadata_dir(d), "version-hint.text"), "w") as fh:
-        fh.write(str(v + 1))
+    victim = _data_files(d)[0]
+    # delete rows 0,1,2 of the victim file at sequence 2
+    _append_delete_snapshot(d, [(victim, 0), (victim, 1), (victim, 2)], 999, 2)
     return d, victim
 
 
@@ -228,3 +230,42 @@ def test_sequence_rule_gates_application(spark, deleted_table):
         snap["manifest-list"], MANIFEST_LIST_SCHEMA, records, extra_meta={"format-version": "2"}
     )
     assert len(_ids(read_iceberg_as_df(spark, d))) == 20
+
+
+def test_delete_for_another_file_keeps_the_victims_outputs(spark, deleted_table):
+    """A later snapshot adds a delete for the OTHER data file only. The
+    victim's delete set is unchanged, so its positions file (expose on)
+    and purged shadow (expose off) keep their names; the expose-off
+    change neither removes nor re-adds the victim, and its shadow is not
+    rewritten."""
+    d, victim = deleted_table
+    other = _data_files(d)[1]
+
+    def positions_paths():
+        src = IcebergConversionSource(spark, d, expose_row_deletes=True)
+        return {
+            r["data_file_path"]: r["positions_path"]
+            for r in model_rows(src.get_current_snapshot().row_deletes)
+        }
+
+    def shadows():
+        snap = IcebergConversionSource(spark, d).get_current_snapshot()
+        return sorted(r["physical_path"] for r in model_rows(snap.files) if ".purged-" in r["physical_path"])
+
+    before = positions_paths()
+    (shadow,) = shadows()
+    stat = os.stat(shadow)
+
+    _append_delete_snapshot(d, [(other, 4)], 1000, 3)
+    after = positions_paths()
+    assert after[victim] == before[victim]
+    assert set(after) == {victim, other}
+    change = IcebergConversionSource(spark, d).get_table_change_for_commit("1000")
+    added = [r["physical_path"] for r in model_rows(change.files_added)]
+    removed = [r["physical_path"] for r in model_rows(change.files_removed)]
+    assert removed == [other]
+    assert len(added) == 1 and added[0].startswith(other[: -len(".parquet")] + ".purged-")
+    assert shadow in shadows()
+    after_stat = os.stat(shadow)
+    assert (after_stat.st_ino, after_stat.st_mtime_ns) == (stat.st_ino, stat.st_mtime_ns)
+    assert len(_ids(read_iceberg_as_df(spark, d))) == 16
