@@ -99,10 +99,9 @@ def equality_delete_applies(entry: dict, data_seq: int, data_partition: Optional
 
 def dv_reference(delete_file: dict) -> Optional[str]:
     """The data file a v3 deletion vector (a Puffin blob) covers; None
-    for a v2 position-delete parquet."""
-    if (delete_file.get("file_format") or "").upper() != "PUFFIN" and not delete_file.get(
-        "referenced_data_file"
-    ):
+    for a position-delete parquet, which names its data files per row
+    (it may carry `referenced_data_file` too, when they are all one)."""
+    if (delete_file.get("file_format") or "").upper() != "PUFFIN":
         return None
     ref = delete_file.get("referenced_data_file")
     if ref is None:

@@ -18,7 +18,14 @@ the zero-job, zero-py4j paths: sources hand their inventories over as
 Arrow tables, and targets diff and commit those rows with no Spark job
 and no py4j command, also when a source hands over URI-form paths, and
 a Delta target commit that writes a checkpoint, DV files or a `.crc`
-fallback writes them on the driver too."""
+fallback writes them on the driver too.
+
+The Spark forms of the row-delete resolvers are kept the same way
+(Iceberg's delete scans under the `delete_seq >= data_seq` join, Delta's
+and Paimon's executor-side DV decodes), as the reference for the driver
+resolvers and for the positions files and shadows written from them;
+and snapshots and changes of tables with row deletes run no Spark job
+and send no py4j command."""
 
 from __future__ import annotations
 

@@ -46,32 +46,40 @@ def _write_positions(path: str, rows: list[tuple[str, int]]) -> None:
     )
 
 
-def _append_delete_snapshot(d: str, rows: list[tuple[str, int]], snapshot_id: int, seq: int) -> None:
+def _append_delete_snapshot(
+    d: str, rows: list[tuple[str, int]], snapshot_id: int, seq: int, referenced: bool = False
+) -> None:
     """Append a spec-shaped snapshot ``snapshot_id`` at sequence ``seq``
     to the head: its manifest list is the head's plus one delete manifest
-    (content=1) holding one position-delete parquet of ``rows``."""
+    (content=1) holding one position-delete parquet of ``rows``, whose
+    entry names the one data file they delete as `referenced_data_file`
+    when ``referenced``."""
     meta = read_table_metadata(d)
     head = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
     pos_path = os.path.join(d, f"delete-{snapshot_id}.parquet")
     _write_positions(pos_path, rows)
     del_manifest = os.path.join(metadata_dir(d), f"del-m-{snapshot_id}.avro")
+    data_file = {
+        "content": 1,
+        "file_path": pos_path,
+        "file_format": "PARQUET",
+        "partition": {},
+        "record_count": len(rows),
+        "file_size_in_bytes": os.path.getsize(pos_path),
+    }
+    if referenced:
+        (data_file["referenced_data_file"],) = {path for path, _ in rows}
     dlen = write_ocf(
         del_manifest,
-        manifest_entry_schema([]),
+        # the v3 entry schema is the one with referenced_data_file
+        manifest_entry_schema([], format_version=3 if referenced else 2),
         [
             {
                 "status": 1,
                 "snapshot_id": snapshot_id,
                 "sequence_number": seq,
                 "file_sequence_number": seq,
-                "data_file": {
-                    "content": 1,
-                    "file_path": pos_path,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": len(rows),
-                    "file_size_in_bytes": os.path.getsize(pos_path),
-                },
+                "data_file": data_file,
             }
         ],
         extra_meta={"format-version": "2", "content": "deletes"},
@@ -269,3 +277,15 @@ def test_delete_for_another_file_keeps_the_victims_outputs(spark, deleted_table)
     after_stat = os.stat(shadow)
     assert (after_stat.st_ino, after_stat.st_mtime_ns) == (stat.st_ino, stat.st_mtime_ns)
     assert len(_ids(read_iceberg_as_df(spark, d))) == 16
+
+
+def test_position_file_with_a_referenced_data_file(spark, deleted_table):
+    """A position-delete parquet may name the one data file it deletes
+    from in `referenced_data_file`; it still reads as a parquet of
+    (file_path, pos) rows, not as a Puffin deletion vector."""
+    d, _ = deleted_table
+    other = _data_files(d)[1]
+    _append_delete_snapshot(d, [(other, 4), (other, 6)], 1000, 3, referenced=True)
+    assert len(_ids(read_iceberg_as_df(spark, d))) == 15
+    snap = IcebergConversionSource(spark, d, expose_row_deletes=True).get_current_snapshot()
+    assert sorted(r["delete_count"] for r in model_rows(snap.row_deletes)) == [2, 3]
