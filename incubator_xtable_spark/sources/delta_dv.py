@@ -1,5 +1,6 @@
 """Delta Lake deletion vectors: descriptor resolution, the RoaringBitmapArray
-codec, row-level application, and purged shadow files for targets.
+codec, DV files, and the delete-set ids that name their row-delete
+outputs (positions files, purged shadows) for targets.
 
 Formats implemented from PUBLIC specs only:
 - Delta PROTOCOL.md "Deletion Vectors" (delta-io/delta PROTOCOL.md):

@@ -115,11 +115,14 @@ def dv_reference(delete_file: dict) -> Optional[str]:
 
 
 def _positions_by_file(table: pa.Table) -> dict[str, np.ndarray]:
-    """A (file_path, pos) table split per data file."""
+    """A (file_path, pos) table split per data file (one sort, so a
+    delete file naming many data files costs O(rows log rows))."""
     paths = table.column("file_path").combine_chunks().dictionary_encode()
     codes = paths.indices.to_numpy(zero_copy_only=False)
     pos = table.column("pos").to_numpy().astype(np.int64)
-    return {p: pos[codes == i] for i, p in enumerate(paths.dictionary.to_pylist())}
+    counts = np.bincount(codes, minlength=len(paths.dictionary))
+    parts = np.split(pos[np.argsort(codes, kind="stable")], np.cumsum(counts)[:-1])
+    return dict(zip(paths.dictionary.to_pylist(), parts))
 
 
 def delete_file_positions(delete_file: dict) -> dict[str, np.ndarray]:
