@@ -57,7 +57,12 @@ from incubator_xtable_spark.model import file_formats as _ff
 from incubator_xtable_spark.model.files_diff import with_file_paths
 from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
-from incubator_xtable_spark.sources.row_deletes import positions_frame, positions_minus, shadow_path
+from incubator_xtable_spark.sources.row_deletes import (
+    positions_frame,
+    positions_id,
+    positions_minus,
+    shadow_path,
+)
 from incubator_xtable_spark.targets.iceberg_target import (
     iceberg_fields_to_schema,
     read_table_metadata,
@@ -69,11 +74,14 @@ from incubator_xtable_spark.targets.iceberg_target import (
 # `iceberg_cdc` stream planner both apply deletes through these.
 
 
-def _scope_key(part: Optional[dict]) -> Optional[str]:
-    """A partition as a comparable string; None for a partition-less
-    (global) delete file."""
+# the scope of a delete file without partition values: it applies globally
+_GLOBAL_SCOPE = ""
+
+
+def _scope_key(part: Optional[dict]) -> str:
+    """A partition as a comparable string; `_GLOBAL_SCOPE` for none."""
     if not part:
-        return None
+        return _GLOBAL_SCOPE
     return json.dumps({k: str(v) for k, v in sorted(part.items())}, sort_keys=True)
 
 
@@ -87,14 +95,26 @@ def position_delete_applies(entry: dict, data_seq: int) -> bool:
     return entry["sequence_number"] >= data_seq
 
 
-def equality_delete_applies(entry: dict, data_seq: int, data_partition: Optional[dict]) -> bool:
+def _equality_rule(delete_seq, data_seq, delete_scope, data_scope):
     """An equality-delete file applies to data files STRICTLY older than
-    it (data_seq < delete_seq), and only within its partition: a delete
-    file without partition values applies globally."""
-    if entry["sequence_number"] <= data_seq:
-        return False
-    scope = _scope_key(entry["data_file"].get("partition"))
-    return scope is None or scope == _scope_key(data_partition)
+    it (data_seq < delete_seq), and only within its partition scope; a
+    global one applies everywhere. Its operators mean the same on Python
+    values and on Spark columns, so the driver and the batch join
+    (`_equality_positions_df`) apply this one expression."""
+    return (data_seq < delete_seq) & (
+        (delete_scope == _GLOBAL_SCOPE) | (delete_scope == data_scope)
+    )
+
+
+def equality_delete_applies(entry: dict, data_seq: int, data_partition: Optional[dict]) -> bool:
+    return bool(
+        _equality_rule(
+            entry["sequence_number"],
+            data_seq,
+            _scope_key(entry["data_file"].get("partition")),
+            _scope_key(data_partition),
+        )
+    )
 
 
 def dv_reference(delete_file: dict) -> Optional[str]:
@@ -171,6 +191,12 @@ class IcebergConversionSource:
         # delete sets ride on snapshot/change.row_deletes (only valid
         # when every target can express row-level deletes)
         self.expose_row_deletes = expose_row_deletes
+        # bookmark tag (controller): purged shadows are named from each
+        # file's own positions. A target synced under the earlier naming
+        # (one id for the table's whole delete set, no tag) holds shadow
+        # names this source cannot derive for the parent side of an
+        # incremental diff, so the tag flip restates it FULL once.
+        self.sync_view = None if expose_row_deletes else "purged-by-file-positions"
         # When True, content=2 EQUALITY deletes keep their shape: the
         # delete files + their equality columns and sequence numbers ride
         # the equality channel for targets that can re-register them
@@ -302,16 +328,14 @@ class IcebergConversionSource:
 
     def _resolve_deletes(
         self, data_entries: list[dict], delete_entries: list[dict]
-    ) -> dict[str, tuple[np.ndarray, str]]:
+    ) -> dict[str, np.ndarray]:
         """Per affected data file: its deleted positions (sorted, unique)
-        under the spec's sequence rules, and their delete-set id
-        (`row_deletes.positions_id`, so a file's outputs keep their names
-        until its own delete set changes). Position-delete parquets and
-        Puffin deletion vectors are read on the driver, each file once;
-        equality deletes lowered to positions come from
+        under the spec's sequence rules; outputs are named from them
+        (`row_deletes.positions_id`), so a file's outputs keep their
+        names until its own delete set changes. Position-delete parquets
+        and Puffin deletion vectors are read on the driver, each file
+        once; equality deletes lowered to positions come from
         `_equality_positions_df`, the one data-sized scan."""
-        from incubator_xtable_spark.sources.row_deletes import positions_id
-
         data_seq = {e["data_file"]["file_path"]: e["sequence_number"] for e in data_entries}
         found: dict[str, list[np.ndarray]] = {}
         eq_entries = []
@@ -330,7 +354,7 @@ class IcebergConversionSource:
         for path, parts in found.items():
             pos = np.unique(np.concatenate(parts))
             if len(pos):
-                out[path] = (pos, positions_id(pos))
+                out[path] = pos
         return out
 
     def _equality_positions_df(
@@ -339,15 +363,16 @@ class IcebergConversionSource:
         """Resolve v2 EQUALITY deletes (content==2) to the (file_path, pos)
         rows they delete; None when no delete file applies anywhere.
 
-        Which delete file applies to which data file is metadata:
-        `equality_delete_applies` (the STRICT data_seq < delete_seq rule,
+        Per distinct equality-id set: ONE distributed scan of only the
+        data files some delete file applies to, pruned to the equality
+        columns + _metadata.row_index, joined null-safely (Iceberg
+        equality matches NULLs) against the delete rows under
+        `_equality_rule` (the STRICT data_seq < delete_seq rule,
         partition-scoped: a delete file written into a partition applies
-        only there, a partition-less one globally) decides each pair on
-        the driver. Per distinct equality-id set: ONE distributed scan of
-        only the data files some delete file applies to, pruned to the
-        equality columns + _metadata.row_index, joined null-safely
-        (Iceberg equality matches NULLs) against the delete rows and kept
-        where the (data file, delete file) pair applies. Identity-partition
+        only there, a partition-less one globally). The driver sends one
+        row per candidate data file (sequence number, scope) and tags
+        each delete file's rows with its own, so the metadata shipped is
+        linear in data files plus delete files. Identity-partition
         equality columns absent from the data files re-attach from
         manifest values.
 
@@ -372,6 +397,8 @@ class IcebergConversionSource:
             e["data_file"]["file_path"]: e["data_file"].get("partition") or {}
             for e in data_entries
         }
+        data_scope = {p: _scope_key(part) for p, part in pv_raw.items()}
+        seq_by_path = {e["data_file"]["file_path"]: e["sequence_number"] for e in data_entries}
 
         groups: dict[tuple, list[dict]] = {}
         for e in eq_entries:
@@ -394,15 +421,24 @@ class IcebergConversionSource:
                     )
                 fields.append(f)
             cols = [f.name for f in fields]
-            pairs = [
-                (d["data_file"]["file_path"], i)
-                for d in data_entries
-                for i, e in enumerate(group)
-                if equality_delete_applies(e, d["sequence_number"], d["data_file"].get("partition"))
-            ]
-            if not pairs:
+            del_scope = [_scope_key(e["data_file"].get("partition")) for e in group]
+            # the rule only widens with delete_seq, so a data file is a
+            # candidate iff the newest delete in its scope or the newest
+            # global one applies to it
+            newest: dict[str, int] = {}
+            for e, scope in zip(group, del_scope):
+                newest[scope] = max(newest.get(scope, e["sequence_number"]), e["sequence_number"])
+            cand = sorted(
+                p
+                for p, seq in seq_by_path.items()
+                if any(
+                    _equality_rule(newest[k], seq, k, data_scope[p])
+                    for k in {_GLOBAL_SCOPE, data_scope[p]}
+                    if k in newest
+                )
+            )
+            if not cand:
                 continue
-            cand = sorted({p for p, _ in pairs})
             file_fields = [f for f in fields if f.name not in identity_cols]
             # name mapping: renamed sources' files store physical names,
             # resolved per distinct footer schema (mixed provenances read
@@ -413,10 +449,12 @@ class IcebergConversionSource:
                 .withColumnRenamed("_nm_pos", "pos")
             )
             part_fields = [f for f in fields if f.name in identity_cols]
-            if part_fields:
-                pv_rows = [
+            info = self.spark.createDataFrame(
+                [
                     (
                         p,
+                        seq_by_path[p],
+                        data_scope[p],
                         {
                             f.name: (
                                 None
@@ -427,17 +465,16 @@ class IcebergConversionSource:
                         },
                     )
                     for p in cand
-                ]
-                pv = self.spark.createDataFrame(
-                    pv_rows, "file_path STRING, pv MAP<STRING,STRING>"
-                )
-                df = df.join(F.broadcast(pv), "file_path")
-                for f in part_fields:
-                    df = df.withColumn(f.name, F.col("pv").getItem(f.name).cast(f.dataType))
-                df = df.drop("pv")
+                ],
+                "file_path STRING, _data_seq LONG, _data_scope STRING, pv MAP<STRING,STRING>",
+            )
+            df = df.join(F.broadcast(info), "file_path")
+            for f in part_fields:
+                df = df.withColumn(f.name, F.col("pv").getItem(f.name).cast(f.dataType))
+            df = df.drop("pv")
             del_schema = T.StructType([T.StructField(f.name, f.dataType) for f in fields])
             del_parts = []
-            for i, e in enumerate(group):
+            for e, scope in zip(group, del_scope):
                 dfile = e["data_file"]
                 _ff.require_parquet(
                     [(dfile["file_path"], _ff.from_iceberg_manifest(dfile.get("file_format")))],
@@ -446,21 +483,21 @@ class IcebergConversionSource:
                 del_parts.append(
                     self.spark.read.schema(del_schema)
                     .parquet(dfile["file_path"])
-                    .withColumn("_del_file", F.lit(i))
+                    .withColumn("_del_seq", F.lit(e["sequence_number"]).cast("long"))
+                    .withColumn("_del_scope", F.lit(scope))
                 )
             dels = del_parts[0]
             for p in del_parts[1:]:
                 dels = dels.unionByName(p)
-            dels = dels.select(*[F.col(c).alias(f"_del_{c}") for c in cols], "_del_file")
-            cond = F.col(cols[0]).eqNullSafe(F.col(f"_del_{cols[0]}"))
-            for c in cols[1:]:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"_del_{c}"))
-            applies = self.spark.createDataFrame(pairs, "file_path STRING, _del_file INT")
-            out_parts.append(
-                df.join(dels, cond)
-                .join(F.broadcast(applies), ["file_path", "_del_file"])
-                .select("file_path", "pos")
+            dels = dels.select(
+                *[F.col(c).alias(f"_del_{c}") for c in cols], "_del_seq", "_del_scope"
             )
+            cond = _equality_rule(
+                F.col("_del_seq"), F.col("_data_seq"), F.col("_del_scope"), F.col("_data_scope")
+            )
+            for c in cols:
+                cond = cond & F.col(c).eqNullSafe(F.col(f"_del_{c}"))
+            out_parts.append(df.join(dels, cond).select("file_path", "pos"))
         if not out_parts:
             return None
         out = out_parts[0]
@@ -476,7 +513,7 @@ class IcebergConversionSource:
         conversion rewrites ONLY the affected files)."""
         from incubator_xtable_spark.sources.row_deletes import write_purged_files
 
-        shadows = {p: shadow_path(p, sid) for p, (_, sid) in resolved.items()}
+        shadows = {p: shadow_path(p, positions_id(pos)) for p, pos in resolved.items()}
         todo = {p: sp for p, sp in shadows.items() if not os.path.exists(sp)}
         if not todo:
             return
@@ -488,7 +525,7 @@ class IcebergConversionSource:
             ((p, _ff.from_iceberg_manifest(fmt_by_path.get(p))) for p in todo),
             reader="iceberg delete-shadow purge",
         )
-        write_purged_files(self.spark, [(p, resolved[p][0], sp) for p, sp in todo.items()])
+        write_purged_files(self.spark, [(p, resolved[p], sp) for p, sp in todo.items()])
 
     def _row_deletes_df(
         self, resolved: dict, data_entries: list[dict], table: InternalTable
@@ -525,9 +562,10 @@ class IcebergConversionSource:
             for e in data_entries
         }
         rows = []
-        for p, (pos, sid) in resolved.items():
-            out = positions_path(p, sid)
-            write_positions_file(p, pos, out)
+        for p, pos in resolved.items():
+            out = positions_path(p, positions_id(pos))
+            if not os.path.exists(out):
+                write_positions_file(p, pos, out)
             rows.append((p, out, len(pos), pv_by_path.get(p)))
         return arrow_table(rows, ROW_DELETES_ARROW)
 
@@ -710,7 +748,7 @@ class IcebergConversionSource:
             if deleted is not None:
                 # position deletes apply: expose the purged shadow with
                 # corrected row count; stats recomputed from its footer
-                sp = shadow_path(df["file_path"], deleted[1])
+                sp = shadow_path(df["file_path"], positions_id(deleted))
                 size = (
                     int(os.path.getsize(sp))
                     if os.path.exists(sp)
@@ -721,7 +759,7 @@ class IcebergConversionSource:
                         "physical_path": sp,
                         "file_format": "PARQUET",  # purged shadows are engine-written parquet
                         "size_bytes": size,
-                        "record_count": int(df["record_count"]) - len(deleted[0]),
+                        "record_count": int(df["record_count"]) - len(deleted),
                         "partition_values": pv,
                     }
                 )
@@ -852,7 +890,7 @@ class IcebergConversionSource:
             eff = {}
             for e in data:
                 p = e["data_file"]["file_path"]
-                eff[shadow_path(p, resolved[p][1]) if p in resolved else p] = e
+                eff[shadow_path(p, positions_id(resolved[p])) if p in resolved else p] = e
             return eff, resolved
 
         cur_eff, cur_resolved = eff_view(snapshot_id, materialize=True)
@@ -1181,7 +1219,7 @@ def read_iceberg_as_df(
     if resolved:
         # deletes applied row-level: the positions resolved on the driver
         # anti-join on (_metadata.file_path, _metadata.row_index)
-        applicable = positions_frame(spark, {p: pos for p, (pos, _) in resolved.items()})
+        applicable = positions_frame(spark, resolved)
         df = df.join(
             applicable,
             (F.col("_scan_path") == applicable.file_path)
@@ -1285,10 +1323,6 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
         "_commit_snapshot_id",
     ]
 
-    def applicable_positions(data, dels) -> dict:
-        """{file_path: positions} of the deletes in force for this state."""
-        return {p: pos for p, (pos, _) in src._resolve_deletes(data, dels).items()}
-
     def rows_of(entries, change_type: str, positions: dict, mode: str) -> DataFrame:
         file_paths = [e["data_file"]["file_path"] for e in entries]
         df = (
@@ -1330,8 +1364,8 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
     removed = [e for p, e in prev_by_path.items() if p not in cur_by_path]
     common = [e for p, e in cur_by_path.items() if p in prev_by_path]
 
-    cur_pos = applicable_positions(cur_data, cur_dels)
-    prev_pos = applicable_positions(prev_data, prev_dels)
+    cur_pos = src._resolve_deletes(cur_data, cur_dels)
+    prev_pos = src._resolve_deletes(prev_data, prev_dels)
 
     parts: list[DataFrame] = []
     if added:

@@ -24,8 +24,9 @@ after that happens here, on the driver:
 
 Output names share one convention, ``<data stem>.deletes-<id>.parquet``
 and ``<data stem>.purged-<id>.parquet``: targets supersede delete files
-by stem, and the id makes a changed delete set a new file, so every
-write is idempotent.
+by stem, and the id makes a changed delete set a new file. An output
+that exists is final: callers skip it before decoding its positions,
+and the writers here write whatever they are handed.
 """
 
 from __future__ import annotations
@@ -72,9 +73,7 @@ def _put(table: pa.Table, out: str) -> None:
 def write_positions_file(data_path: str, positions: np.ndarray, out: str) -> None:
     """Write ``data_path``'s deleted ``positions`` as an Iceberg-spec
     position-delete parquet (file_path STRING, pos BIGINT, sorted by pos)
-    at ``out``, through a temporary name; an existing ``out`` is kept."""
-    if os.path.exists(out):
-        return
+    at ``out``, through a temporary name."""
     pos = np.unique(np.asarray(positions, dtype=np.int64))
     _put(
         pa.table(
@@ -89,8 +88,6 @@ def write_positions_file(data_path: str, positions: np.ndarray, out: str) -> Non
 
 def _write_shadow(src: str, positions: np.ndarray, out: str) -> None:
     """Rewrite ``src`` without the rows at ``positions`` to ``out``."""
-    if os.path.exists(out):
-        return
     table = pq.read_table(src)
     keep = np.setdiff1d(
         np.arange(table.num_rows, dtype=np.int64), np.asarray(positions, dtype=np.int64)
@@ -100,18 +97,19 @@ def _write_shadow(src: str, positions: np.ndarray, out: str) -> None:
 
 def write_purged_files(spark: SparkSession, items: list[tuple[str, np.ndarray, str]]) -> None:
     """Write the purged shadow of each (data path, positions, shadow path)
-    item, idempotently (existing shadows are kept). This is the one place
-    metadata-only conversion touches data bytes: no target here can honor
-    the source's row deletes without its own delete files, so only the
-    affected files are rewritten."""
-    todo = [it for it in items if not os.path.exists(it[2])]
-    pending_bytes = sum(os.path.getsize(src) for src, _, _ in todo if os.path.exists(src))
+    item; callers pass only shadows not yet written. This is the one
+    place metadata-only conversion touches data bytes: no target here can
+    honor the source's row deletes without its own delete files, so only
+    the affected files are rewritten."""
+    if not items:
+        return
+    pending_bytes = sum(os.path.getsize(src) for src, _, _ in items)
     if pending_bytes <= _DRIVER_PURGE_MAX_BYTES:
-        for src, positions, out in todo:
+        for src, positions, out in items:
             _write_shadow(src, positions, out)
         return
     df = spark.createDataFrame(
-        [(src, out, np.asarray(positions, dtype=np.int64).tolist()) for src, positions, out in todo],
+        [(src, out, np.asarray(positions, dtype=np.int64).tolist()) for src, positions, out in items],
         "src STRING, out STRING, pos ARRAY<LONG>",
     )
     pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -131,7 +129,7 @@ def write_purged_files(spark: SparkSession, items: list[tuple[str, np.ndarray, s
             yield pd.DataFrame({"out": pdf["out"]})
 
     # one task per shadow file so purges run in parallel
-    df.repartition(len(todo)).mapInPandas(_purge, "out STRING").count()
+    df.repartition(len(items)).mapInPandas(_purge, "out STRING").count()
 
 
 def positions_minus(a: dict[str, np.ndarray], b: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
@@ -145,18 +143,20 @@ def positions_minus(a: dict[str, np.ndarray], b: dict[str, np.ndarray]) -> dict[
 
 def positions_frame(spark: SparkSession, positions: dict[str, np.ndarray]) -> DataFrame:
     """{data path: positions} -> one (file_path STRING, pos BIGINT)
-    DataFrame built from an Arrow table, for a reader's anti-join."""
+    DataFrame for a reader's anti-join. It is sent as one Arrow row per
+    data file (its positions as a list, 8 bytes each, the path once) and
+    exploded by Spark, so neither side repeats a path per position. The
+    planner cannot see how many positions the lists hold, and a broadcast
+    of millions of keyed rows exhausts the driver heap, so joins against
+    it sort-merge."""
+    from pyspark.sql import functions as F
+
     paths = list(positions)
     arrays = [np.asarray(positions[p], dtype=np.int64) for p in paths]
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "file_path": pa.array(
-                    np.repeat(np.array(paths, dtype=object), [len(a) for a in arrays]), pa.string()
-                ),
-                "pos": pa.array(
-                    np.concatenate(arrays) if arrays else np.empty(0, np.int64), pa.int64()
-                ),
-            }
-        )
+    offsets = np.concatenate([[0], np.cumsum([len(a) for a in arrays], dtype=np.int64)])
+    pos = pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)),
+        pa.array(np.concatenate(arrays) if arrays else np.empty(0, np.int64), pa.int64()),
     )
+    per_file = spark.createDataFrame(pa.table({"file_path": pa.array(paths, pa.string()), "pos": pos}))
+    return per_file.select("file_path", F.explode("pos").alias("pos")).hint("merge")

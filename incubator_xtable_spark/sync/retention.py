@@ -979,7 +979,7 @@ def iceberg_rewrite_data_files(
         df = spark.read.parquet(*paths)
         if has_deletes:
             applicable_pos = positions_frame(
-                spark, {p: resolved[p][0] for p in paths if p in resolved}
+                spark, {p: resolved[p] for p in paths if p in resolved}
             )
             df = (
                 df.withColumn(

@@ -1588,7 +1588,7 @@ def test_iceberg_delete_positions_match_spark_reference(spark, tmp_path, case):
     data, deletes = live_entries(meta, src._head_snapshot_id(meta))
     reference = _spark_iceberg_positions(spark, data, deletes, eq_column)
     resolved = src._resolve_deletes(data, deletes)
-    assert {p: pos.tolist() for p, (pos, _) in resolved.items()} == reference
+    assert {p: pos.tolist() for p, pos in resolved.items()} == reference
     expected_counts = {
         "v2_two_files": [2, 4],
         "seq_boundary": [4],

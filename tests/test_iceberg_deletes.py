@@ -279,6 +279,49 @@ def test_delete_for_another_file_keeps_the_victims_outputs(spark, deleted_table)
     assert len(_ids(read_iceberg_as_df(spark, d))) == 16
 
 
+@pytest.mark.parametrize("expose", [False, True], ids=["shadows", "positions_files"])
+def test_sync_after_the_output_naming_changed(spark, deleted_table, monkeypatch, expose):
+    """A target converted while outputs were named for the table's whole
+    delete set holds names this source no longer derives, and its
+    bookmark carries no source view. After a delete for the same file,
+    the next sync stays row-accurate: purged shadows restate FULL (the
+    old shadow leaves the target, no row counts twice), positions files
+    are superseded per data file by an INCREMENTAL sync. The sync after
+    that runs INCREMENTAL."""
+    from incubator_xtable_spark.model.core import SyncMode
+    from incubator_xtable_spark.sources import iceberg_source
+
+    d, victim = deleted_table
+    other = _data_files(d)[1]
+
+    def sync(src):
+        res = ConversionController().sync(src, {TableFormat.DELTA: DeltaConversionTarget(spark, d)})[
+            TableFormat.DELTA
+        ]
+        assert res.status == SyncStatusCode.SUCCESS, res.error
+        return res.mode
+
+    def source():
+        return IcebergConversionSource(spark, d, expose_row_deletes=expose)
+
+    with monkeypatch.context() as m:
+        m.setattr(iceberg_source, "positions_id", lambda positions: "a11de1e7")
+        legacy = source()
+        legacy.sync_view = None
+        sync(legacy)
+    assert len(_ids(read_delta_as_df(spark, d))) == 17
+
+    _append_delete_snapshot(d, [(victim, 5)], 1000, 3)
+    assert sync(source()) == (SyncMode.INCREMENTAL if expose else SyncMode.FULL)
+    assert _ids(read_delta_as_df(spark, d)) == _ids(read_iceberg_as_df(spark, d))
+    assert len(_ids(read_delta_as_df(spark, d))) == 16
+
+    _append_delete_snapshot(d, [(other, 4)], 1001, 4)
+    assert sync(source()) == SyncMode.INCREMENTAL
+    assert _ids(read_delta_as_df(spark, d)) == _ids(read_iceberg_as_df(spark, d))
+    assert len(_ids(read_delta_as_df(spark, d))) == 15
+
+
 def test_position_file_with_a_referenced_data_file(spark, deleted_table):
     """A position-delete parquet may name the one data file it deletes
     from in `referenced_data_file`; it still reads as a parquet of
