@@ -24,10 +24,9 @@ Hudi/Iceberg targets reference row-accurate data
 
 Scale notes: DV positions are decoded on the driver (`read_dv_positions`);
 they are metadata-sized next to the data. Everything written from them
-(position-delete parquets, purged shadows) and the (file_path, pos) frame
-`read_delta_as_df` anti-joins on (_metadata.file_path,
-_metadata.row_index) go through `sources/row_deletes`, named by
-`dv_set_id`. Delta DV files written from row deletes
+(position-delete parquets, purged shadows) goes through
+`sources/row_deletes`, named by `dv_set_id`, and the readers' scans
+anti-join the positions through `sources/file_scan`. Delta DV files written from row deletes
 (`write_dv_files_from_positions`) are driver loops too.
 """
 

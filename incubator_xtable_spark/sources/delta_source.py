@@ -54,10 +54,8 @@ from incubator_xtable_spark.model.core import (
     TableChange,
     TableFormat,
     arrow_table,
-    column,
 )
 from incubator_xtable_spark.model.file_formats import from_extension
-from incubator_xtable_spark.model.files_diff import with_file_paths
 from incubator_xtable_spark.model.stat_codec import encode_stat
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -803,24 +801,9 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
     if meta is None:
         raise ValueError(f"not a delta table (no metaData): {base_path}")
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
-    if cm_mode == "id":
-        _enable_field_id_reads(spark)
     part_cols = list(meta["partitionColumns"] or [])
-    logical_fields = [f for f in schema.fields if f.name not in part_cols]
-    # column mapping: data AND change files store physical names
-    # (mode=id additionally resolves by parquet field id)
-    data_fields = (
-        list(_physical_type(T.StructType(logical_fields), with_field_ids=cm_mode == "id").fields)
-        if cm_mode in ("name", "id")
-        else logical_fields
-    )
-    cm_renames = {
-        rf.name: f.name
-        for f, rf in zip(logical_fields, data_fields)
-        if rf.name != f.name
-    }
-    out_names = [f.name for f in schema.fields] + ["_change_type", "_commit_version"]
+    data_fields = [f for f in schema.fields if f.name not in part_cols]
+    change_type = T.StructField("_change_type", T.StringType())
     commit_file = os.path.join(_log_dir(base_path), f"{version:020d}.json")
     if not os.path.exists(commit_file):
         raise ValueError(
@@ -830,189 +813,47 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
     actions = [json.loads(line) for line in open(commit_file, encoding="utf-8") if line.strip()]
     base = base_path.rstrip("/")
 
-    def _with_parts(df: DataFrame, items: list[tuple]) -> DataFrame:
-        if not part_cols:
-            return df
-        pv = spark.createDataFrame(
-            [(os.path.join(base, p), dict(v or {})) for p, v, _ in items],
-            "abs_path STRING, pv MAP<STRING,STRING>",
-        )
-        df = df.join(F.broadcast(pv), df["_fp"] == pv["abs_path"], "left")
-        for c in part_cols:
-            df = df.withColumn(
-                c, F.col("pv").getItem(_physical_name(schema, c)).cast(schema[c].dataType)
-            )
-        return df.drop("abs_path", "pv")
-
-    def _positions_for(items: list[tuple]) -> dict:
-        """{absolute path: deleted positions} of the items' DVs."""
+    def _positions(items: list[tuple]) -> list[tuple[str, np.ndarray]]:
+        """(absolute path, deleted positions) of the items' DVs."""
         from incubator_xtable_spark.sources.delta_dv import read_dv_positions
 
-        return {
-            os.path.join(base, p): read_dv_positions(base, d).astype(np.int64)
+        return [
+            (os.path.join(base, p), read_dv_positions(base, d))
             for p, _, d in items
             if d and d.get("storageType")
-        }
+        ]
 
-    def _rows_of(items: list[tuple], change_type: str, positions=None, mode: str = "drop") -> DataFrame:
-        """Read the items' rows tagged ``change_type``; ``positions``
-        ({path: positions}) restricts via anti (mode=drop: everything
-        except) or semi (mode=keep: only) join on (file, row_index)."""
-        from incubator_xtable_spark.sources.row_deletes import positions_frame
-
-        positions = positions_frame(spark, positions) if positions else None
-        item_paths = [os.path.join(base, p) for p, _, _ in items]
-        from incubator_xtable_spark.model.file_formats import (
-            from_delta_provider,
-            from_extension,
-            split_readable,
+    def _rows_of(items: list[tuple], change: str, positions=None, keep: bool = False) -> DataFrame:
+        """The rows of the items' (path, partitionValues, DV) files tagged
+        ``change``; ``positions`` drop rows (``keep``: keep only those)."""
+        return (
+            _scan(
+                spark,
+                base,
+                meta,
+                schema,
+                [(p, v) for p, v, _ in items],
+                data_fields,
+                "read_delta_cdf",
+                positions=positions,
+                keep=keep,
+            )
+            .withColumn("_change_type", F.lit(change))
+            .withColumn("_commit_version", F.lit(version).cast("long"))
         )
 
-        provider_fmt = from_delta_provider(
-            meta["format"]["provider"] if meta["format"] is not None else None
-        )
-        pq_paths, orc_paths, avro_paths = split_readable(
-            ((p, from_extension(p, default=provider_fmt)) for p in item_paths),
-            reader="read_delta_cdf",
-        )
-        # same matrix as read_delta_as_df: ORC/AVRO serve mode=name via
-        # physical-name resolution (data_fields are already physical and
-        # _rename_back applies after the union); mode=id refuses on both
-        # (id resolution needs parquet field ids). DV row diffs ride
-        # per-file row ordinals: parquet from _metadata.row_index,
-        # ORC/AVRO from the engine's ordinal-preserving scans.
-        if avro_paths and cm_mode == "id":
-            raise NotImplementedError(
-                "read_delta_cdf: column mapping mode=id with AVRO data "
-                "files is not supported (id resolution needs parquet "
-                "field ids)"
-            )
-        if orc_paths and cm_mode == "id":
-            raise NotImplementedError(
-                "read_delta_cdf: column mapping mode=id with ORC data "
-                "files is not supported (id resolution needs parquet "
-                "field ids)"
-            )
-        if cm_mode == "id":
-            _require_field_ids(pq_paths)
-        # _fp/_ri attach per branch; ORC needs the pyarrow ordinal scan
-        # only when this call actually joins on positions (Spark's ORC
-        # reader exposes no _metadata.row_index). Spark scans report the
-        # quoted URI form, so their _fp goes through with_file_paths; the
-        # pyarrow scans already carry the listed paths
-        fp = F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
-        branches = []
-        if pq_paths:
-            branches.append(
-                with_file_paths(
-                    spark.read.schema(T.StructType(data_fields))
-                    .parquet(*pq_paths)
-                    .withColumn("_fp", fp)
-                    .withColumn("_ri", F.col("_metadata.row_index")),
-                    "_fp",
-                )
-            )
-        if orc_paths and positions is not None:
-            from incubator_xtable_spark.sources.orc_scan import read_orc_rows
-
-            branches.append(
-                read_orc_rows(
-                    spark, orc_paths, data_fields, path_col="_fp", row_index_col="_ri"
-                )
-            )
-        elif orc_paths:
-            branches.append(
-                with_file_paths(
-                    spark.read.schema(T.StructType(data_fields))
-                    .orc(list(orc_paths))
-                    .withColumn("_fp", fp)
-                    .withColumn("_ri", F.lit(None).cast("long")),
-                    "_fp",
-                )
-            )
-        if avro_paths:
-            from incubator_xtable_spark.sources.avro_scan import read_avro_rows
-
-            branches.append(
-                read_avro_rows(
-                    spark, avro_paths, data_fields, path_col="_fp", row_index_col="_ri"
-                )
-            )
-        df = branches[0]
-        for b in branches[1:]:
-            df = df.unionByName(b)
-        df = _rename_back(df, cm_renames)
-        for f, rf in zip(logical_fields, data_fields):
-            if rf.dataType != f.dataType:
-                df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        if positions is not None:
-            df = df.join(
-                positions,
-                (F.col("_fp") == positions.file_path) & (F.col("_ri") == positions.pos),
-                "left_anti" if mode == "drop" else "left_semi",
-            )
-        df = _with_parts(df, items)
-        return df.withColumn("_change_type", F.lit(change_type)).withColumn(
-            "_commit_version", F.lit(version).cast("long")
-        ).select(*out_names)
-
-    parts: list[DataFrame] = []
     cdc = [a["cdc"] for a in actions if a.get("cdc")]
     if cdc:
-        from incubator_xtable_spark.model.file_formats import (
-            from_delta_provider,
-            from_extension,
-            split_readable,
-        )
-
-        cdc_fields = data_fields + [T.StructField("_change_type", T.StringType())]
-        cdc_paths = [os.path.join(base, c["path"]) for c in cdc]
-        provider_fmt = from_delta_provider(
-            meta["format"]["provider"] if meta["format"] is not None else None
-        )
-        cdc_pq, cdc_orc, cdc_avro = split_readable(
-            ((p, from_extension(p, default=provider_fmt)) for p in cdc_paths),
-            reader="read_delta_cdf(change files)",
-        )
-        if (cdc_orc or cdc_avro) and cm_mode == "id":
-            raise NotImplementedError(
-                "read_delta_cdf: column mapping mode=id with ORC/AVRO "
-                "change files is not supported (id resolution needs "
-                "parquet field ids)"
-            )
-        if cm_mode == "id":
-            _require_field_ids(cdc_pq)
-        fp = F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
-        cdc_branches = []
-        if cdc_pq:
-            cdc_branches.append(
-                with_file_paths(
-                    spark.read.schema(T.StructType(cdc_fields)).parquet(*cdc_pq).withColumn("_fp", fp),
-                    "_fp",
-                )
-            )
-        if cdc_orc:
-            cdc_branches.append(
-                with_file_paths(
-                    spark.read.schema(T.StructType(cdc_fields)).orc(list(cdc_orc)).withColumn("_fp", fp),
-                    "_fp",
-                )
-            )
-        if cdc_avro:
-            from incubator_xtable_spark.sources.avro_scan import read_avro_rows
-
-            cdc_branches.append(
-                read_avro_rows(spark, cdc_avro, cdc_fields, path_col="_fp")
-            )
-        df = cdc_branches[0]
-        for b in cdc_branches[1:]:
-            df = df.unionByName(b)
-        df = _rename_back(df, cm_renames)
-        for f, rf in zip(logical_fields, data_fields):
-            if rf.dataType != f.dataType:
-                df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        df = _with_parts(df, [(c["path"], c.get("partitionValues"), None) for c in cdc])
-        return df.withColumn("_commit_version", F.lit(version).cast("long")).select(*out_names)
+        return _scan(
+            spark,
+            base,
+            meta,
+            schema,
+            [(c["path"], c.get("partitionValues")) for c in cdc],
+            data_fields + [change_type],
+            "read_delta_cdf",
+            change_files=True,
+        ).withColumn("_commit_version", F.lit(version).cast("long"))
 
     adds = {a["add"]["path"]: a["add"] for a in actions if a.get("add")}
     removes = {
@@ -1029,6 +870,7 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
         prev_dv = {r["path"]: r["deletionVector"] for r in prev_rows}
         prev_pv = {r["path"]: r["partitionValues"] or None for r in prev_rows}
 
+    parts: list[DataFrame] = []
     # 1. DV-update pairs: remove+re-add of the same path -> row-level diff
     # of each paired file's old and new position sets
     if pair_paths:
@@ -1038,14 +880,14 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
         ]
         from incubator_xtable_spark.sources.row_deletes import positions_minus
 
-        new_pos = _positions_for(new_items)
-        old_pos = _positions_for([(p, None, prev_dv.get(p)) for p in pair_paths])
+        new_pos = dict(_positions(new_items))
+        old_pos = dict(_positions([(p, None, prev_dv.get(p)) for p in pair_paths]))
         newly_deleted = positions_minus(new_pos, old_pos)
         restored = positions_minus(old_pos, new_pos)
         if newly_deleted:
-            parts.append(_rows_of(new_items, "delete", newly_deleted, mode="keep"))
+            parts.append(_rows_of(new_items, "delete", list(newly_deleted.items()), keep=True))
         if restored:
-            parts.append(_rows_of(new_items, "insert", restored, mode="keep"))
+            parts.append(_rows_of(new_items, "insert", list(restored.items()), keep=True))
 
     # 2. pure adds: the file's visible rows are inserts
     pure_adds = [
@@ -1054,7 +896,7 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
         if p not in removes
     ]
     if pure_adds:
-        parts.append(_rows_of(pure_adds, "insert", _positions_for(pure_adds), mode="drop"))
+        parts.append(_rows_of(pure_adds, "insert", _positions(pure_adds)))
 
     # 3. pure removes: rows visible at the previous version are deletes
     pure_removes = [
@@ -1069,19 +911,122 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
             f"but they are vacuumed: {gone[:3]}"
         )
     if pure_removes:
-        parts.append(_rows_of(pure_removes, "delete", _positions_for(pure_removes), mode="drop"))
+        parts.append(_rows_of(pure_removes, "delete", _positions(pure_removes)))
 
     if not parts:
-        out_fields = list(schema.fields) + [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_commit_version", T.LongType()),
-        ]
-        return spark.createDataFrame([], T.StructType(out_fields))
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                list(schema.fields) + [change_type, T.StructField("_commit_version", T.LongType())]
+            ),
+        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
 
+
+def _scan(
+    spark: SparkSession,
+    base: str,
+    meta: dict,
+    schema: T.StructType,
+    files: list[tuple[str, Optional[dict]]],
+    fields: list[T.StructField],
+    reader: str,
+    *,
+    positions=None,
+    keep: bool = False,
+    row_ids: Optional[dict[str, Optional[int]]] = None,
+    change_files: bool = False,
+) -> DataFrame:
+    """Scan a Delta table's (relative path, partitionValues) ``files``
+    through `file_scan.scan_files` (``row_ids`` keys each file's
+    baseRowId by relative path), resolving the stored columns of
+    ``fields`` (the logical columns the files hold) the way the table's
+    column mapping says: mode=name reads each column's PHYSICAL name,
+    mode=id matches PARQUET FIELD IDS (fed from delta.columnMapping.id,
+    mirroring DeltaSchemaExtractor.java:57-58,137-144), and both rename
+    and cast back to the logical schema. Partition columns come from
+    partitionValues, which key by physical name.
+
+    Refusal matrix (README "Delta non-parquet depth"): ORC and AVRO
+    files serve mode=name (their columns and fields ARE named the
+    physical names); mode=id refuses on both, since id resolution keys
+    on parquet field ids those formats cannot carry."""
+    from incubator_xtable_spark.model.file_formats import (
+        APACHE_AVRO,
+        APACHE_ORC,
+        PARQUET,
+        from_delta_provider,
+        split_readable,
+    )
+    from incubator_xtable_spark.sources.file_scan import ScanGroup, scan_files
+
+    cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
+    provider_fmt = from_delta_provider(
+        meta["format"]["provider"] if meta["format"] is not None else None
+    )
+    paths = [os.path.join(base, p) for p, _ in files]
+    pq_paths, orc_paths, avro_paths = split_readable(
+        ((p, from_extension(p, default=provider_fmt)) for p in paths),
+        reader=f"{reader}(change files)" if change_files else reader,
+    )
+    if cm_mode == "id":
+        if change_files and (orc_paths or avro_paths):
+            raise NotImplementedError(
+                f"{reader}: column mapping mode=id with ORC/AVRO change files is not "
+                "supported (id resolution needs parquet field ids)"
+            )
+        for label, fmt_paths in (("AVRO", avro_paths), ("ORC", orc_paths)):
+            if fmt_paths:
+                raise NotImplementedError(
+                    f"{reader}: column mapping mode=id with {label} data files is not "
+                    "supported (id resolution needs parquet field ids)"
+                )
+        _require_field_ids(pq_paths)
+    if row_ids is not None:
+        if orc_paths or avro_paths:
+            raise NotImplementedError(
+                "with_row_ids is parquet-only (row ids key on _metadata.row_index)"
+            )
+        missing = [p for p, base_row_id in row_ids.items() if base_row_id is None]
+        if missing:
+            raise ValueError(
+                "with_row_ids: table has adds without baseRowId (row tracking "
+                f"not enabled), e.g. {missing[0]!r}"
+            )
+        row_ids = {os.path.join(base, p): base_row_id for p, base_row_id in row_ids.items()}
+    logical = T.StructType(list(fields))
+    stored = (
+        _physical_type(logical, with_field_ids=cm_mode == "id")
+        if cm_mode in ("name", "id")
+        else logical
+    )
+    renames = {rf.name: f.name for f, rf in zip(logical.fields, stored.fields) if rf.name != f.name}
+    part_cols = list(meta["partitionColumns"] or [])
+    groups = [
+        ScanGroup(fmt, fmt_paths, stored, renames)
+        for fmt, fmt_paths in ((PARQUET, pq_paths), (APACHE_ORC, orc_paths), (APACHE_AVRO, avro_paths))
+    ]
+    partition_values = (
+        {
+            path: {c: (pv or {}).get(_physical_name(schema, c)) for c in part_cols}
+            for path, (_, pv) in zip(paths, files)
+        }
+        if part_cols
+        else None
+    )
+    out = list(schema.fields) + [f for f in fields if f.name not in schema.names]
+    return scan_files(
+        spark,
+        groups,
+        out,
+        partition_values=partition_values,
+        positions=positions,
+        keep=keep,
+        row_ids=row_ids,
+    )
 
 
 def _physical_name(schema: T.StructType, name: str) -> str:
@@ -1092,18 +1037,6 @@ def _physical_name(schema: T.StructType, name: str) -> str:
     except KeyError:
         return name
     return (f.metadata or {}).get("delta.columnMapping.physicalName", name)
-
-
-def _rename_back(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """stored->logical renames, collision-safe (swap renames like a->b,
-    b->a would corrupt with sequential withColumnRenamed): two phases via
-    unique temporaries. Keeps hidden columns (_metadata) reachable."""
-    tmp_names = {stored: f"__xtable_rn_{i}" for i, stored in enumerate(mapping)}
-    for stored, tmp in tmp_names.items():
-        df = df.withColumnRenamed(stored, tmp)
-    for stored, tmp in tmp_names.items():
-        df = df.withColumnRenamed(tmp, mapping[stored])
-    return df
 
 
 def _physical_type(dt: T.DataType, with_field_ids: bool = False) -> T.DataType:
@@ -1140,19 +1073,6 @@ def _physical_type(dt: T.DataType, with_field_ids: bool = False) -> T.DataType:
             dt.valueContainsNull,
         )
     return dt
-
-
-def _enable_field_id_reads(spark: SparkSession) -> None:
-    """mode=id resolution rides Spark's native parquet field-id matching;
-    runtime-settable, and inert for read schemas without parquet.field.id
-    metadata (the harness uses a vanilla session — conf must be set here,
-    not at session build). ignoreMissing=true is the SPEC semantics for
-    schema evolution: a column added after a file was written has no id
-    in that file and must read as null. The writer-contract violation
-    this could mask — a file with NO ids at all silently nulling — is
-    guarded explicitly by _require_field_ids instead."""
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
 
 
 def _require_field_ids(paths: list[str]) -> None:
@@ -1232,9 +1152,10 @@ def read_delta_as_df(
     the live file set (optionally at a past version = time travel) and read
     those parquet files, re-attaching partition columns from
     partitionValues (they are not stored in the data files). Deletion
-    vectors are applied row-level: deleted positions are decoded
-    executor-side and anti-joined on (_metadata.file_path,
-    _metadata.row_index) — distributes with the scan, no driver collect.
+    vectors are applied row-level: each DV's deleted positions decode on
+    the driver (`delta_dv.read_dv_positions`, metadata-sized) and
+    `file_scan.scan_files` anti-joins them on (file, row index) with the
+    distributed scan; no data row reaches the driver.
 
     Column mapping: mode=name tables read by each column's PHYSICAL name
     (renamed columns would otherwise silently return nulls) and rename/
@@ -1258,7 +1179,7 @@ def read_delta_as_df(
     ``with_row_ids``: on a Row-Tracking table, append `_row_id` =
     add.baseRowId + physical position (the spec's default row-id
     derivation) — stable across DV updates because re-adds keep their
-    original baseRowId. Parquet-only (keys on _metadata.row_index)."""
+    original baseRowId. Parquet-only (keys on the parquet row index)."""
     if as_of_timestamp_ms is not None:
         if version is not None:
             raise ValueError(
@@ -1269,234 +1190,28 @@ def read_delta_as_df(
     if meta is None:
         raise ValueError(f"not a delta table (no metaData): {base_path}")
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
-    if cm_mode == "id":
-        _enable_field_id_reads(spark)
     live = list(live_adds(base_path, version).values())
     part_cols = list(meta["partitionColumns"] or [])
     if prune:
         live = _prune_live_rows(live, schema, part_cols, prune)
     base = base_path.rstrip("/")
-    paths = [os.path.join(base, r["path"]) for r in live]
-    if not paths:
-        empty_schema = (
-            T.StructType(list(schema.fields) + [T.StructField("_row_id", T.LongType())])
-            if with_row_ids
-            else schema
-        )
-        return spark.createDataFrame([], empty_schema)
-    # avro/unknown data files refuse loudly; orc row-reads natively (r8)
-    from incubator_xtable_spark.model.file_formats import (
-        from_delta_provider,
-        from_extension,
-        split_readable,
+    from incubator_xtable_spark.sources.delta_dv import read_dv_positions
+
+    return _scan(
+        spark,
+        base,
+        meta,
+        schema,
+        [(r["path"], r["partitionValues"]) for r in live],
+        [f for f in schema.fields if f.name not in part_cols],
+        "read_delta_as_df",
+        positions=[
+            (os.path.join(base, r["path"]), read_dv_positions(base, _dv_of(r)))
+            for r in live
+            if _dv_of(r)
+        ],
+        row_ids={r["path"]: r["baseRowId"] for r in live} if with_row_ids else None,
     )
-
-    provider_fmt = from_delta_provider(
-        meta["format"]["provider"] if meta["format"] is not None else None
-    )
-    pq_paths, orc_paths, avro_paths = split_readable(
-        ((p, from_extension(p, default=provider_fmt)) for p in paths),
-        reader="read_delta_as_df",
-    )
-    # refusal matrix (README "Delta non-parquet depth"): ORC and AVRO
-    # serve mode=name by PHYSICAL-NAME resolution (ORC columns / avro
-    # fields ARE named the physical names); mode=id stays refused on
-    # both (id resolution keys on parquet field ids those formats
-    # cannot carry).
-    if avro_paths and cm_mode == "id":
-        raise NotImplementedError(
-            "read_delta_as_df: column mapping mode=id with AVRO data files "
-            "is not supported (id resolution needs parquet field ids)"
-        )
-    if orc_paths and cm_mode == "id":
-        raise NotImplementedError(
-            "read_delta_as_df: column mapping mode=id with ORC data files "
-            "is not supported (id resolution needs parquet field ids)"
-        )
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    read_struct = (
-        _physical_type(T.StructType(data_fields), with_field_ids=cm_mode == "id")
-        if cm_mode in ("name", "id")
-        else T.StructType(data_fields)
-    )
-    if cm_mode == "id":
-        _require_field_ids(pq_paths)
-    df = spark.read.schema(read_struct).parquet(*pq_paths) if pq_paths else None
-    if df is not None and cm_mode in ("name", "id"):
-        # physical -> logical: collision-safe rename, then cast nested
-        # structs back (struct casts match by position, same shape)
-        df = _rename_back(
-            df, {rf.name: f.name for f, rf in zip(data_fields, read_struct.fields) if rf.name != f.name}
-        )
-        for f, rf in zip(data_fields, read_struct.fields):
-            if rf.dataType != f.dataType:
-                df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-    if with_row_ids:
-        if orc_paths or avro_paths:
-            raise NotImplementedError(
-                "with_row_ids is parquet-only (row ids key on _metadata.row_index)"
-            )
-        missing = [r["path"] for r in live if r["baseRowId"] is None]
-        if missing:
-            raise ValueError(
-                "with_row_ids: table has adds without baseRowId (row tracking "
-                f"not enabled), e.g. {missing[0]!r}"
-            )
-    dv_rows = [r for r in live if r["deletionVector"] and r["deletionVector"]["storageType"]]
-    dv_abs = {os.path.join(base, r["path"]) for r in dv_rows}
-    positions = None
-    if dv_rows:
-        from incubator_xtable_spark.sources.delta_dv import read_dv_positions
-        from incubator_xtable_spark.sources.row_deletes import positions_frame
-
-        positions = positions_frame(
-            spark,
-            {
-                os.path.join(base, r["path"]): read_dv_positions(base, r["deletionVector"])
-                for r in dv_rows
-            },
-        )
-    if df is not None and (positions is not None or with_row_ids):
-        # _metadata is resolvable only on the scan relation (not through
-        # joins): materialize file path + physical position ONCE, then
-        # both the row-id attach and the DV anti-join key on them
-        df = df.withColumn(
-            "_fp", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
-        ).withColumn("_ri", F.col("_metadata.row_index"))
-        df = with_file_paths(df, "_fp")
-        if with_row_ids:
-            rid = spark.createDataFrame(
-                [(os.path.join(base, r["path"]), r["baseRowId"]) for r in live],
-                "_fp STRING, _base LONG",
-            )
-            df = (
-                df.join(F.broadcast(rid), "_fp")
-                .withColumn("_row_id", F.col("_base") + F.col("_ri"))
-                .drop("_base")
-            )
-        if positions is not None:
-            # the anti-join keys on (file, row) so positions of non-parquet
-            # files simply never match this branch
-            df = df.join(
-                positions,
-                (F.col("_fp") == positions.file_path) & (F.col("_ri") == positions.pos),
-                "left_anti",
-            )
-        df = df.drop("_fp", "_ri")
-    # ORC files WITHOUT deletion vectors stay on Spark's vectorized
-    # native reader; DV'd ORC files re-route through the
-    # ordinal-preserving pyarrow scan (sources/orc_scan.py — Spark's ORC
-    # reader exposes no _metadata.row_index). AVRO always rides the OCF
-    # scan, which emits ordinals when any avro file carries a DV.
-    orc_plain = [p for p in orc_paths if p not in dv_abs]
-    orc_dv = [p for p in orc_paths if p in dv_abs]
-    if orc_plain:
-        orc_struct = (
-            _physical_type(T.StructType(data_fields), with_field_ids=False)
-            if cm_mode == "name"
-            else T.StructType(data_fields)
-        )
-        orc_df = spark.read.schema(orc_struct).orc(list(orc_plain))
-        if cm_mode == "name":
-            orc_df = _rename_back(
-                orc_df,
-                {
-                    rf.name: f.name
-                    for f, rf in zip(data_fields, orc_struct.fields)
-                    if rf.name != f.name
-                },
-            )
-            for f, rf in zip(data_fields, orc_struct.fields):
-                if rf.dataType != f.dataType:
-                    orc_df = orc_df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        df = orc_df if df is None else df.unionByName(orc_df)
-
-    def _positional_branch(reader_fn, branch_paths: list[str]) -> DataFrame:
-        """Read ``branch_paths`` through an ordinal-capable scan (no
-        file-scan relation, so input_file_name() is empty there): project
-        the physical struct by NAME, drop DV'd positions, rename/cast
-        back, attach partition values keyed on the scan's own path
-        column, and return fully-formed logical rows."""
-        struct = (
-            _physical_type(T.StructType(data_fields), with_field_ids=False)
-            if cm_mode == "name"
-            else T.StructType(data_fields)
-        )
-        needs_ri = positions is not None and any(p in dv_abs for p in branch_paths)
-        bdf = reader_fn(
-            spark,
-            branch_paths,
-            list(struct.fields),
-            path_col="abs_path",
-            row_index_col="_ri" if needs_ri else None,
-        )
-        if needs_ri:
-            bdf = bdf.join(
-                positions,
-                (F.col("abs_path") == positions.file_path)
-                & (F.col("_ri") == positions.pos),
-                "left_anti",
-            ).drop("_ri")
-        if cm_mode == "name":
-            bdf = _rename_back(
-                bdf,
-                {
-                    rf.name: f.name
-                    for f, rf in zip(data_fields, struct.fields)
-                    if rf.name != f.name
-                },
-            )
-            for f, rf in zip(data_fields, struct.fields):
-                if rf.dataType != f.dataType:
-                    bdf = bdf.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        if part_cols:
-            apv = spark.createDataFrame(
-                [(os.path.join(base, r["path"]), dict(r["partitionValues"] or {})) for r in live],
-                "abs_path STRING, pv MAP<STRING,STRING>",
-            )
-            bdf = bdf.join(F.broadcast(apv), "abs_path", "left")
-            for c in part_cols:
-                bdf = bdf.withColumn(
-                    c, F.col("pv").getItem(_physical_name(schema, c)).cast(schema[c].dataType)
-                )
-            bdf = bdf.drop("pv")
-        return bdf.select(*[column(f.name) for f in schema.fields])
-
-    pos_branches = []
-    if orc_dv:
-        from incubator_xtable_spark.sources.orc_scan import read_orc_rows
-
-        pos_branches.append(_positional_branch(read_orc_rows, orc_dv))
-    if avro_paths:
-        from incubator_xtable_spark.sources.avro_scan import read_avro_rows
-
-        pos_branches.append(_positional_branch(read_avro_rows, avro_paths))
-    avro_df = None
-    if pos_branches:
-        avro_df = pos_branches[0]
-        for b in pos_branches[1:]:
-            avro_df = avro_df.unionByName(b)
-    if df is None:
-        return avro_df if avro_df is not None else spark.createDataFrame([], schema)
-    if part_cols:
-        pv = spark.createDataFrame(
-            [(os.path.join(base, r["path"]), dict(r["partitionValues"] or {})) for r in live],
-            "abs_path STRING, pv MAP<STRING,STRING>",
-        )
-        # input_file_name() may yield file:/p or file:///p depending on the
-        # file index path — strip both forms (URI authority is empty)
-        df = df.withColumn("abs_path", F.regexp_replace(F.input_file_name(), r"^file:(//)?", ""))
-        df = with_file_paths(df, "abs_path").join(F.broadcast(pv), "abs_path", "left")
-        for c in part_cols:
-            df = df.withColumn(
-                c, F.col("pv").getItem(_physical_name(schema, c)).cast(schema[c].dataType)
-            )
-        df = df.drop("abs_path", "pv")
-    out = df.select(
-        *([column(f.name) for f in schema.fields] + (["_row_id"] if with_row_ids else []))
-    )
-    return out.unionByName(avro_df) if avro_df is not None else out
 
 
 # ---------------------------------------------------------------------------

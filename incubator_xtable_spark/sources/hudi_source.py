@@ -47,10 +47,9 @@ from incubator_xtable_spark.model.core import (
     TableChange,
     TableFormat,
     arrow_table,
-    column,
 )
 from incubator_xtable_spark.model.file_formats import APACHE_ORC, PARQUET, from_extension
-from incubator_xtable_spark.model.files_diff import relativize, with_file_paths
+from incubator_xtable_spark.model.files_diff import relativize
 from incubator_xtable_spark.model.hive_partitions import partition_values
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 from incubator_xtable_spark.targets.hudi_target import (
@@ -827,16 +826,17 @@ def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFram
         {group_key(r): r for r in src._effective_rows(prev, table, touched)} if prev else {}
     )
 
-    def _read(reps: dict, alias: str) -> DataFrame:
-        paths = [
-            os.path.join(base_path, reps[key]["path"]) for key in touched if key in reps
-        ]
-        if not paths:
-            return spark.createDataFrame([], table.read_schema)
-        return spark.read.schema(table.read_schema).parquet(*paths)
+    def _read(reps: dict) -> DataFrame:
+        return _scan_base_files(
+            spark,
+            base_path,
+            [reps[key] for key in touched if key in reps],
+            table,
+            "read_hudi_cdc",
+        )
 
-    old_df = _read(eff_old, "o")
-    new_df = _read(eff_new, "n")
+    old_df = _read(eff_old)
+    new_df = _read(eff_new)
     data_cols = [f.name for f in table.read_schema.fields]
     o = old_df.select(F.col(key_field).alias("_k"), F.struct(*data_cols).alias("_o"))
     n = new_df.select(F.col(key_field).alias("_k"), F.struct(*data_cols).alias("_n"))
@@ -945,14 +945,26 @@ def read_hudi_as_df(
             if include_logs
             else base_df
         )
-    # partition columns may live INSIDE the data files (Paimon-sourced
-    # conversions store the full row) or only in the hive-style path
-    # (parquet-dir sources) — and a table synced from BOTH kinds of
-    # source is heterogeneous, so group files by which partition columns
-    # their footer actually stores and read each group with its own
-    # schema (footer-only probes, same driver-side posture as the file
-    # listing itself)
-    import pyarrow.parquet as _pq
+    out = _scan_base_files(spark, base_path, rows, table, "read_hudi_as_df")
+    if include_logs and log_rows:
+        out = _apply_log_overlay(spark, base_path, out, log_rows, table, as_of_instant)
+    return out
+
+
+def _scan_base_files(
+    spark: SparkSession, base_path: str, rows: list[dict], table: InternalTable, reader: str
+) -> DataFrame:
+    """Read the listed base files (``rows``, paths relative to the table)
+    as ``table``'s read schema through `file_scan.scan_files`. Partition columns may
+    live INSIDE the data files (Paimon-sourced conversions store the full
+    row) or only in the hive-style path (parquet-dir sources), and a
+    table synced from BOTH kinds of source is heterogeneous, so files
+    group by which partition columns their footer stores and the rest
+    come from the path. ORC base files (hoodie.table.base.file.format=ORC)
+    read through Spark's ORC scan; any other format refuses: real Hudi
+    base formats are PARQUET/ORC/HFILE only, so an avro base file is a
+    corrupt table, not a read gap."""
+    from incubator_xtable_spark.sources.file_scan import scan_files, stored_column_groups
 
     declared = (
         read_properties(base_path).get("hoodie.table.base.file.format") or "PARQUET"
@@ -961,65 +973,28 @@ def read_hudi_as_df(
     # keep the raw tag so extension-less files under it hit the loud
     # per-file refusal below instead of being parsed as ORC
     default_fmt = {"PARQUET": PARQUET, "ORC": APACHE_ORC}.get(declared, declared)
-
-    def _file_cols(abs_p: str, fmt: str) -> set[str]:
-        if fmt == APACHE_ORC:
-            import pyarrow.orc as _orc
-
-            return set(_orc.ORCFile(abs_p).schema.names)
-        return set(_pq.read_schema(abs_p).names)
-
-    # groups key on (partition-cols-present, file format): orc base files
-    # (hoodie.table.base.file.format=ORC, r8) read via spark.read.orc;
-    # avro refuses here — real Hudi base formats are PARQUET/ORC/HFILE
-    # only, so an avro base file is a corrupt table, not a read gap
-    part_cols = [pf.output_name for pf in table.partition_fields]
-    groups: dict[tuple, list[dict]] = {}
+    files = []
     for r in rows:
         abs_p = os.path.join(base_path, r["path"])
         fmt = from_extension(abs_p, default=default_fmt)
         if fmt not in (PARQUET, APACHE_ORC):
             raise NotImplementedError(
-                f"read_hudi_as_df: data file {abs_p!r} has format {fmt}; "
+                f"{reader}: data file {abs_p!r} has format {fmt}; "
                 "PARQUET and ORC base files are row-readable"
             )
-        if part_cols:
-            present = frozenset(c for c in part_cols if c in _file_cols(abs_p, fmt))
-        else:
-            present = frozenset()
-        groups.setdefault((present, fmt), []).append(r)
-
-    parts: list[DataFrame] = []
-    for (present, fmt), grp_rows in groups.items():
-        grp_paths = [os.path.join(base_path, r["path"]) for r in grp_rows]
-        fields = [
-            f
-            for f in table.read_schema.fields
-            if f.name not in part_cols or f.name in present
-        ]
-        reader = spark.read.schema(T.StructType(fields))
-        df = reader.orc(list(grp_paths)) if fmt == APACHE_ORC else reader.parquet(*grp_paths)
-        missing = [c for c in part_cols if c not in present]
-        if missing:
-            pv_rows = []
-            for r in grp_rows:
-                pv = partition_values(os.path.dirname(r["path"]))
-                pv_rows.append((os.path.join(base_path, r["path"]), pv))
-            pv_df = spark.createDataFrame(pv_rows, "abs_path STRING, pv MAP<STRING,STRING>")
-            df = df.withColumn(
-                "abs_path", F.regexp_replace(F.input_file_name(), r"^file:(//)?", "")
-            )
-            df = with_file_paths(df, "abs_path").join(F.broadcast(pv_df), "abs_path", "left")
-            for c in missing:
-                df = df.withColumn(c, F.col("pv").getItem(c).cast(table.read_schema[c].dataType))
-            df = df.drop("abs_path", "pv")
-        parts.append(df.select(*[column(f.name) for f in table.read_schema.fields]))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if include_logs and log_rows:
-        out = _apply_log_overlay(spark, base_path, out, log_rows, table, as_of_instant)
-    return out
+        files.append((abs_p, fmt))
+    part_cols = [pf.output_name for pf in table.partition_fields]
+    return scan_files(
+        spark,
+        stored_column_groups(files, table.read_schema, part_cols),
+        table.read_schema.fields,
+        partition_values={
+            os.path.join(base_path, r["path"]): partition_values(os.path.dirname(r["path"]))
+            for r in rows
+        }
+        if part_cols
+        else None,
+    )
 
 
 def _apply_log_overlay(

@@ -51,14 +51,12 @@ from incubator_xtable_spark.model.core import (
     TableChange,
     TableFormat,
     arrow_table,
-    column,
 )
 from incubator_xtable_spark.model import file_formats as _ff
-from incubator_xtable_spark.model.files_diff import with_file_paths
 from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
+from incubator_xtable_spark.sources.file_scan import ScanGroup, scan_files
 from incubator_xtable_spark.sources.row_deletes import (
-    positions_frame,
     positions_id,
     positions_minus,
     shadow_path,
@@ -386,13 +384,7 @@ class IcebergConversionSource:
         by_id = {
             (f.metadata or {}).get("xtable.fieldId"): f for f in table.read_schema.fields
         }
-        from incubator_xtable_spark.model.core import PartitionTransformType
-
-        identity_cols = {
-            pf.source_field
-            for pf in table.partition_fields
-            if pf.transform == PartitionTransformType.VALUE
-        }
+        identity_cols = _identity_columns(table)
         pv_raw = {
             e["data_file"]["file_path"]: e["data_file"].get("partition") or {}
             for e in data_entries
@@ -443,35 +435,25 @@ class IcebergConversionSource:
             # name mapping: renamed sources' files store physical names,
             # resolved per distinct footer schema (mixed provenances read
             # each with their own resolution)
-            df = (
-                _read_name_mapped(self.spark, self._meta(), file_fields, cand)
-                .withColumnRenamed("_nm_path", "file_path")
-                .withColumnRenamed("_nm_pos", "pos")
-            )
             part_fields = [f for f in fields if f.name in identity_cols]
-            info = self.spark.createDataFrame(
-                [
-                    (
-                        p,
-                        seq_by_path[p],
-                        data_scope[p],
-                        {
-                            f.name: (
-                                None
-                                if pv_raw[p].get(f.name) is None
-                                else str(pv_raw[p].get(f.name))
-                            )
-                            for f in part_fields
-                        },
-                    )
+            df = scan_files(
+                self.spark,
+                _scan_groups(self._meta(), T.StructType(file_fields), cand),
+                fields,
+                partition_values={
+                    p: {
+                        f.name: None if pv_raw[p].get(f.name) is None else str(pv_raw[p][f.name])
+                        for f in part_fields
+                    }
                     for p in cand
-                ],
-                "file_path STRING, _data_seq LONG, _data_scope STRING, pv MAP<STRING,STRING>",
+                },
+                file_rows=True,
+            ).withColumnRenamed("_fp", "file_path").withColumnRenamed("_ri", "pos")
+            info = self.spark.createDataFrame(
+                [(p, seq_by_path[p], data_scope[p]) for p in cand],
+                "file_path STRING, _data_seq LONG, _data_scope STRING",
             )
             df = df.join(F.broadcast(info), "file_path")
-            for f in part_fields:
-                df = df.withColumn(f.name, F.col("pv").getItem(f.name).cast(f.dataType))
-            df = df.drop("pv")
             del_schema = T.StructType([T.StructField(f.name, f.dataType) for f in fields])
             del_parts = []
             for e, scope in zip(group, del_scope):
@@ -992,9 +974,16 @@ def _with_parquet_field_ids(dt: "T.DataType"):
     return annotated, complete
 
 
-def _read_name_mapped(spark, meta: dict, fields, paths: list[str]) -> DataFrame:
-    """Read ``paths`` presenting the LOGICAL columns of ``fields``,
-    resolved PER DISTINCT FOOTER SCHEMA (one driver-side footer pass):
+def _scan_groups(
+    meta: dict,
+    fields: T.StructType,
+    pq_paths: list[str],
+    orc_paths: list[str] = (),
+    avro_paths: list[str] = (),
+) -> list[ScanGroup]:
+    """The `file_scan` groups that present the LOGICAL columns of
+    ``fields``, parquet files resolved PER DISTINCT FOOTER SCHEMA (one
+    driver-side footer pass):
 
     - files that STORE PARQUET FIELD IDS resolve by id (the Iceberg
       spec's primary rule) via Spark's native field-id matching, with
@@ -1007,40 +996,48 @@ def _read_name_mapped(spark, meta: dict, fields, paths: list[str]) -> DataFrame:
       alongside physical/storage names) never silently nulls (ADVICE
       r5).
 
-    Also attaches `_nm_path` (normalized file path) and `_nm_pos` (row
-    index) — `_metadata` binds per relation, so they are captured before
-    the per-group union."""
-    from incubator_xtable_spark.sources.delta_source import _rename_back
-
-    logical_names = [f.name for f in fields]
-    groups = _footer_column_groups(paths) if fields else {(frozenset(), False): list(paths)}
-    parts = []
-    for (footer_cols, has_ids), grp_paths in groups.items():
+    ORC and AVRO files project ``fields`` by name."""
+    footer_groups = (
+        _footer_column_groups(pq_paths) if fields else {(frozenset(), False): list(pq_paths)}
+    )
+    groups = []
+    for (footer_cols, has_ids), paths in footer_groups.items():
         renames: dict[str, str] = {}
         mapped = None
         if has_ids:
-            annotated, complete = _with_parquet_field_ids(T.StructType(list(fields)))
+            annotated, complete = _with_parquet_field_ids(fields)
             if complete:
-                spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-                spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
                 mapped = annotated
         if mapped is None:
             mapped, renames = _name_mapped_fields(meta, fields, set(footer_cols))
-        df = (
-            spark.read.schema(mapped)
-            .parquet(*grp_paths)
-            .withColumn(
-                "_nm_path",
-                F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", ""),
-            )
-            .withColumn("_nm_pos", F.col("_metadata.row_index"))
-        )
-        df = _rename_back(df, renames)
-        parts.append(df.select(*map(column, logical_names), "_nm_path", "_nm_pos"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        groups.append(ScanGroup(_ff.PARQUET, paths, mapped, renames))
+    return groups + [
+        ScanGroup(_ff.APACHE_ORC, list(orc_paths), fields),
+        ScanGroup(_ff.APACHE_AVRO, list(avro_paths), fields),
+    ]
+
+
+def _identity_columns(table: InternalTable) -> set[str]:
+    """The IDENTITY partition columns: absent from the data files, they
+    re-attach from manifest values (non-identity transforms such as
+    day/bucket derive from source columns the files keep)."""
+    from incubator_xtable_spark.model.core import PartitionTransformType
+
+    return {
+        pf.source_field
+        for pf in table.partition_fields
+        if pf.transform == PartitionTransformType.VALUE
+    }
+
+
+def _identity_values(entries: list[dict], part_cols: set[str]) -> Optional[dict[str, dict]]:
+    """{data file path: {identity partition column: manifest value}}."""
+    if not part_cols:
+        return None
+    return {
+        e["data_file"]["file_path"]: {c: e["data_file"]["partition"].get(c) for c in part_cols}
+        for e in entries
+    }
 
 
 def _prune_iceberg_entries(
@@ -1106,7 +1103,7 @@ def read_iceberg_as_df(
     lineage derivation; inherited manifest ids are materialized by
     `model/iceberg_manifests`). Stable across commits, rewrites and
     deletes — the Iceberg twin of read_delta_as_df's Row Tracking
-    reads. Parquet-only (positions key on _metadata.row_index)."""
+    reads. Parquet-only (positions key on the parquet row index)."""
     src = IcebergConversionSource(spark, base_path, ref=ref)
     meta = src._meta()
     table = src.get_current_table()
@@ -1167,87 +1164,20 @@ def read_iceberg_as_df(
                 f"with_row_ids: {len(no_id)} data file(s) carry no first_row_id "
                 f"(not a v3 row-lineage table?), e.g. {no_id[:3]}"
             )
-    paths = pq_paths
-    from incubator_xtable_spark.model.core import PartitionTransformType
-
-    # only IDENTITY partition columns are absent from the data files and
-    # re-attach from manifest values; non-identity transforms (day/bucket)
-    # derive from source columns that remain in the files
-    part_cols = {
-        pf.source_field
-        for pf in table.partition_fields
-        if pf.transform == PartitionTransformType.VALUE
-    }
-    from pyspark.sql import types as T
-
+    part_cols = _identity_columns(table)
     data_fields = T.StructType([f for f in table.read_schema.fields if f.name not in part_cols])
-    # name mapping (spec schema.name-mapping.default): files whose parquet
-    # columns carry STORAGE names (column-mapped Delta sources) read by
-    # the mapped name and rename back to the logical schema, resolved
-    # per distinct footer schema (mixed-provenance groups read correctly).
-    # _nm_path doubles as the scan-time path column: _metadata.file_path
-    # binds per relation (input_file_name() would fail once the
-    # delete-positions parquet joins in)
-    df = (
-        _read_name_mapped(spark, meta, data_fields.fields, paths).withColumnRenamed(
-            "_nm_path", "_scan_path"
-        )
-        if paths
-        else None
+    return scan_files(
+        spark,
+        _scan_groups(meta, data_fields, pq_paths, orc_paths, avro_paths),
+        table.read_schema.fields,
+        partition_values=_identity_values(entries, part_cols),
+        positions=list(src._resolve_deletes(entries, delete_entries).items()),
+        row_ids=(
+            {e["data_file"]["file_path"]: int(e["data_file"]["first_row_id"]) for e in entries}
+            if with_row_ids
+            else None
+        ),
     )
-    if orc_paths:
-        orc_df = (
-            spark.read.schema(data_fields)
-            .orc(list(orc_paths))
-            .withColumn(
-                "_scan_path",
-                F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", ""),
-            )
-            .withColumn("_nm_pos", F.lit(None).cast("long"))
-        )
-        df = orc_df if df is None else df.unionByName(orc_df)
-    if avro_paths:
-        from incubator_xtable_spark.sources.avro_scan import read_avro_rows
-
-        avro_df = read_avro_rows(
-            spark, avro_paths, list(data_fields.fields), path_col="_scan_path"
-        ).withColumn("_nm_pos", F.lit(None).cast("long"))
-        df = avro_df if df is None else df.unionByName(avro_df)
-    # every join below keys on the data file's path as the manifest has it
-    df = with_file_paths(df, "_scan_path")
-    resolved = src._resolve_deletes(entries, delete_entries)
-    if resolved:
-        # deletes applied row-level: the positions resolved on the driver
-        # anti-join on (_metadata.file_path, _metadata.row_index)
-        applicable = positions_frame(spark, resolved)
-        df = df.join(
-            applicable,
-            (F.col("_scan_path") == applicable.file_path)
-            & (F.col("_nm_pos") == applicable.pos),
-            "left_anti",
-        )
-    if part_cols:
-        pv_rows = [
-            (e["data_file"]["file_path"], {c: e["data_file"]["partition"].get(c) for c in part_cols})
-            for e in entries
-        ]
-        pv = spark.createDataFrame(pv_rows, "abs_path STRING, pv MAP<STRING,STRING>")
-        df = df.join(F.broadcast(pv), df["_scan_path"] == pv["abs_path"], "left")
-        for c in part_cols:
-            df = df.withColumn(c, F.col("pv").getItem(c).cast(table.read_schema[c].dataType))
-        df = df.drop("abs_path", "pv")
-    if with_row_ids:
-        fr = spark.createDataFrame(
-            [
-                (e["data_file"]["file_path"], int(e["data_file"]["first_row_id"]))
-                for e in entries
-            ],
-            "_fr_path STRING, _first_row_id LONG",
-        )
-        df = df.join(F.broadcast(fr), df["_scan_path"] == fr["_fr_path"], "left")
-        df = df.withColumn("_row_id", F.col("_first_row_id") + F.col("_nm_pos"))
-        return df.select(*[column(f.name) for f in table.read_schema.fields], "_row_id")
-    return df.select(*[column(f.name) for f in table.read_schema.fields])
 
 
 def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> DataFrame:
@@ -1310,52 +1240,22 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
         reader="read_iceberg_cdc",
     )
 
-    from incubator_xtable_spark.model.core import PartitionTransformType
-
-    part_cols = {
-        pf.source_field
-        for pf in table.partition_fields
-        if pf.transform == PartitionTransformType.VALUE
-    }
+    part_cols = _identity_columns(table)
     data_fields = T.StructType([f for f in table.read_schema.fields if f.name not in part_cols])
-    out_names = [f.name for f in table.read_schema.fields] + [
-        "_change_type",
-        "_commit_snapshot_id",
-    ]
 
-    def rows_of(entries, change_type: str, positions: dict, mode: str) -> DataFrame:
+    def rows_of(entries, change_type: str, positions: dict, keep: bool = False) -> DataFrame:
         file_paths = [e["data_file"]["file_path"] for e in entries]
-        df = (
-            _read_name_mapped(spark, meta, data_fields.fields, file_paths)
-            .withColumnRenamed("_nm_path", "_fp")
-            .withColumnRenamed("_nm_pos", "_ri")
-        )
-        if positions:
-            positions = positions_frame(spark, positions)
-            df = df.join(
-                positions,
-                (F.col("_fp") == positions.file_path) & (F.col("_ri") == positions.pos),
-                "left_anti" if mode == "drop" else "left_semi",
-            )
-        if part_cols:
-            pv = spark.createDataFrame(
-                [
-                    (
-                        e["data_file"]["file_path"],
-                        {c: e["data_file"]["partition"].get(c) for c in part_cols},
-                    )
-                    for e in entries
-                ],
-                "abs_path STRING, pv MAP<STRING,STRING>",
-            )
-            df = df.join(F.broadcast(pv), df["_fp"] == pv["abs_path"], "left")
-            for c in part_cols:
-                df = df.withColumn(c, F.col("pv").getItem(c).cast(table.read_schema[c].dataType))
-            df = df.drop("abs_path", "pv")
         return (
-            df.withColumn("_change_type", F.lit(change_type))
+            scan_files(
+                spark,
+                _scan_groups(meta, data_fields, file_paths),
+                table.read_schema.fields,
+                partition_values=_identity_values(entries, part_cols),
+                positions=[(p, positions[p]) for p in file_paths if p in positions],
+                keep=keep,
+            )
+            .withColumn("_change_type", F.lit(change_type))
             .withColumn("_commit_snapshot_id", F.lit(int(snapshot_id)))
-            .select(*out_names)
         )
 
     cur_by_path = {e["data_file"]["file_path"]: e for e in cur_data}
@@ -1369,9 +1269,9 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
 
     parts: list[DataFrame] = []
     if added:
-        parts.append(rows_of(added, "insert", cur_pos, mode="drop"))
+        parts.append(rows_of(added, "insert", cur_pos))
     if removed:
-        parts.append(rows_of(removed, "delete", prev_pos, mode="drop"))
+        parts.append(rows_of(removed, "delete", prev_pos))
     if common:
         common_paths = {e["data_file"]["file_path"] for e in common}
         cur_common = {f: pos for f, pos in cur_pos.items() if f in common_paths}
@@ -1379,9 +1279,9 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
         newly = positions_minus(cur_common, prev_common)
         restored = positions_minus(prev_common, cur_common)
         if newly:
-            parts.append(rows_of(common, "delete", newly, mode="keep"))
+            parts.append(rows_of(common, "delete", newly, keep=True))
         if restored:
-            parts.append(rows_of(common, "insert", restored, mode="keep"))
+            parts.append(rows_of(common, "insert", restored, keep=True))
     if not parts:
         out_fields = list(table.read_schema.fields) + [
             T.StructField("_change_type", T.StringType()),

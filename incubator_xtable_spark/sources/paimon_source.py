@@ -64,9 +64,7 @@ from incubator_xtable_spark.model.core import (
     TableChange,
     TableFormat,
     arrow_table,
-    column,
 )
-from incubator_xtable_spark.model.files_diff import with_file_paths
 from incubator_xtable_spark.model.paimon_binary import (
     PaimonFieldType,
     decode_binary_row,
@@ -1083,110 +1081,76 @@ def read_paimon_as_df(
     paths = [src._entry_abs_path(e, sch) for e in entries]
     if not paths:
         return spark.createDataFrame([], table.read_schema)
-    # Paimon identifies a data file's format purely by suffix
-    # (`file.format` option; mixed formats across commits are legal after
-    # a format migration) — split into parquet / ORC / AVRO scan branches
-    # like the r8 Delta/Iceberg readers; unknown suffixes refuse loudly.
-    from incubator_xtable_spark.model.file_formats import from_extension, split_readable
-
-    pq_paths, orc_paths, avro_paths = split_readable(
-        ((p, from_extension(p)) for p in paths), reader="read_paimon_as_df"
-    )
     dv = src._view_dvs(snap, sch, set(paths))
-    part_keys = sch.get("partitionKeys") or []
-    df = None
-    if pq_paths:
-        # Native Paimon data files store the full row INCLUDING partition
-        # columns (the hive-style dirs are layout only). EXTERNAL files
-        # from a conversion (paimon_target references them via
-        # _EXTERNAL_PATH) may lack them — probe one footer and re-attach
-        # manifest partition values when missing (same posture as the
-        # hudi read path). Only the parquet branch needs this: external
-        # files are parquet by construction, native ORC/AVRO files carry
-        # the full row.
-        import pyarrow.parquet as _pq
-
-        footer_cols = set(_pq.read_schema(pq_paths[0]).names)
-        missing_parts = [k for k in part_keys if k not in footer_cols]
-        scan_fields = [f for f in table.read_schema.fields if f.name not in missing_parts]
-        df = spark.read.schema(T.StructType(scan_fields)).parquet(*pq_paths)
-        if missing_parts:
-            keys, codecs, dtypes = src._partition_ctx(sch)
-            options = sch.get("options") or {}
-            pv_rows = []
-            for e, p in zip(entries, paths):
-                pv, _ = src._decode_partition(e["_PARTITION"], keys, codecs, dtypes, options)
-                pv_rows.append((p, pv or {}))
-            pv_df = spark.createDataFrame(pv_rows, "abs_path STRING, pv MAP<STRING,STRING>")
-            df = df.withColumn(
-                "abs_path", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
-            )
-            df = with_file_paths(df, "abs_path").join(F.broadcast(pv_df), "abs_path", "left")
-            for k in missing_parts:
-                df = df.withColumn(k, F.col("pv").getItem(k).cast(table.read_schema[k].dataType))
-            df = df.drop("abs_path", "pv")
-        if dv:
-            # deletion vectors apply row-level: decode positions on the
-            # driver and anti-join on (_metadata.file_path, row_index) —
-            # same shape as the Delta DV read path. _dv_items refuses DVs
-            # that point at non-parquet files (positions key on parquet
-            # row indexes).
-            from incubator_xtable_spark.sources.row_deletes import positions_frame
-
-            positions = positions_frame(
-                spark, {p: src._dv_positions(m) for p, m in src._dv_items(dv)}
-            )
-            df = df.withColumn(
-                "_fp", F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "")
-            ).withColumn("_ri", F.col("_metadata.row_index"))
-            df = with_file_paths(df, "_fp").join(
-                positions,
-                (F.col("_fp") == positions.file_path) & (F.col("_ri") == positions.pos),
-                "left_anti",
-            )
-        df = df.select(*[column(f.name) for f in table.read_schema.fields])
-    elif dv:
-        # no parquet branch but DVs present: still surface the refusal
-        src._dv_items(dv)
-    if orc_paths:
-        orc_df = spark.read.schema(table.read_schema).orc(list(orc_paths)).select(
-            *[column(f.name) for f in table.read_schema.fields]
-        )
-        df = orc_df if df is None else df.unionByName(orc_df)
-    if avro_paths:
-        from incubator_xtable_spark.sources.avro_scan import read_avro_rows
-
-        avro_df = read_avro_rows(spark, avro_paths, list(table.read_schema.fields))
-        df = avro_df if df is None else df.unionByName(avro_df)
-    return df
+    # deletion vectors apply row-level: positions decode on the driver;
+    # _dv_items refuses DVs that point at non-parquet files (positions key
+    # on parquet row indexes)
+    return _scan_entries(
+        spark,
+        src,
+        sch,
+        entries,
+        paths,
+        table.read_schema,
+        "read_paimon_as_df",
+        positions=[(p, src._dv_positions(m)) for p, m in src._dv_items(dv)],
+    )
 
 
-def _scan_paimon_files(
-    spark: SparkSession, paths: list[str], read_schema: T.StructType, reader: str
+def _scan_entries(
+    spark: SparkSession,
+    src: "PaimonConversionSource",
+    sch: dict,
+    entries: list[dict],
+    paths: list[str],
+    schema: T.StructType,
+    reader: str,
+    positions=None,
 ) -> DataFrame:
-    """Schema-driven scan of Paimon data/changelog files, format split by
-    suffix: parquet + ORC through Spark's native scans, AVRO through the
-    engine's distributed OCF decoder (one task per file). Branches union
-    by name so a table that migrated `file.format` mid-history still reads
-    every row."""
-    from incubator_xtable_spark.model.file_formats import from_extension, split_readable
+    """Scan the data or changelog files of manifest ``entries`` (at
+    ``paths``) as ``schema`` through `file_scan.scan_files`. Paimon
+    identifies a file's format purely by suffix (`file.format`; mixed
+    formats across commits are legal after a format migration), so
+    branches split by suffix and unknown suffixes refuse loudly. Native
+    Paimon files store the full row INCLUDING partition columns (the
+    hive-style dirs are layout only), but EXTERNAL files from a
+    conversion (paimon_target references them via _EXTERNAL_PATH) may
+    lack them: files group by which partition columns they store, and
+    the missing ones come from the manifest partition values."""
+    from incubator_xtable_spark.model.file_formats import (
+        APACHE_AVRO,
+        APACHE_ORC,
+        PARQUET,
+        from_extension,
+        split_readable,
+    )
+    from incubator_xtable_spark.sources.file_scan import scan_files, stored_column_groups
 
     pq_paths, orc_paths, avro_paths = split_readable(
         ((p, from_extension(p)) for p in paths), reader=reader
     )
-    cols = [f.name for f in read_schema.fields]
-    df = None
-    if pq_paths:
-        df = spark.read.schema(read_schema).parquet(*pq_paths)
-    if orc_paths:
-        orc_df = spark.read.schema(read_schema).orc(list(orc_paths))
-        df = orc_df if df is None else df.select(*cols).unionByName(orc_df.select(*cols))
-    if avro_paths:
-        from incubator_xtable_spark.sources.avro_scan import read_avro_rows
-
-        avro_df = read_avro_rows(spark, avro_paths, list(read_schema.fields))
-        df = avro_df if df is None else df.select(*cols).unionByName(avro_df)
-    return df
+    files = (
+        [(p, PARQUET) for p in pq_paths]
+        + [(p, APACHE_ORC) for p in orc_paths]
+        + [(p, APACHE_AVRO) for p in avro_paths]
+    )
+    keys, codecs, dtypes = src._partition_ctx(sch)
+    options = sch.get("options") or {}
+    partition_values = (
+        {
+            p: src._decode_partition(e["_PARTITION"], keys, codecs, dtypes, options)[0] or {}
+            for e, p in zip(entries, paths)
+        }
+        if keys
+        else None
+    )
+    return scan_files(
+        spark,
+        stored_column_groups(files, schema, keys),
+        schema.fields,
+        partition_values=partition_values,
+        positions=positions,
+    )
 
 
 # RowKind ordinal -> Delta-CDF-style change type string
@@ -1228,12 +1192,19 @@ def read_paimon_changelog(
         if e["_KIND"] == FILE_KIND_ADD
     ]
     if cl_entries:
-        paths = [src._entry_abs_path(e, sch) for e in cl_entries]
         read_schema = T.StructType(
             [T.StructField("_VALUE_KIND", T.ByteType(), True)]
             + list(table.read_schema.fields)
         )
-        df = _scan_paimon_files(spark, paths, read_schema, "read_paimon_changelog")
+        df = _scan_entries(
+            spark,
+            src,
+            sch,
+            cl_entries,
+            [src._entry_abs_path(e, sch) for e in cl_entries],
+            read_schema,
+            "read_paimon_changelog",
+        )
         mapping = F.create_map(
             *[x for k, v in _CHANGE_TYPES.items() for x in (F.lit(k), F.lit(v))]
         )
@@ -1278,8 +1249,15 @@ def read_paimon_changelog(
                 ]
             ),
         )
-    paths = [src._entry_abs_path(e, sch) for e in entries]
-    df = _scan_paimon_files(spark, paths, table.read_schema, "read_paimon_changelog")
+    df = _scan_entries(
+        spark,
+        src,
+        sch,
+        entries,
+        [src._entry_abs_path(e, sch) for e in entries],
+        table.read_schema,
+        "read_paimon_changelog",
+    )
     return df.select(
         *data_cols,
         F.lit("insert").alias("_change_type"),

@@ -19,8 +19,8 @@ after that happens here, on the driver:
   without their deleted rows (conversion without it). Shadows are
   data-sized, so a batch whose pending data bytes exceed
   `_DRIVER_PURGE_MAX_BYTES` runs one Spark task per file;
-- `positions_frame`: one Arrow-backed (file_path, pos) DataFrame that a
-  reader anti-joins against its scan.
+- `positions_frame`: one Arrow-backed (file_path, pos) DataFrame that
+  `file_scan.scan_files` anti-joins against a reader's scan.
 
 Output names share one convention, ``<data stem>.deletes-<id>.parquet``
 and ``<data stem>.purged-<id>.parquet``: targets supersede delete files
@@ -141,22 +141,29 @@ def positions_minus(a: dict[str, np.ndarray], b: dict[str, np.ndarray]) -> dict[
     return {p: d for p, d in diffs.items() if len(d)}
 
 
-def positions_frame(spark: SparkSession, positions: dict[str, np.ndarray]) -> DataFrame:
-    """{data path: positions} -> one (file_path STRING, pos BIGINT)
+def positions_frame(spark: SparkSession, pairs: list[tuple[str, np.ndarray]]) -> DataFrame:
+    """(data path, positions) pairs -> one (file_path STRING, pos BIGINT)
     DataFrame for a reader's anti-join. It is sent as one Arrow row per
     data file (its positions as a list, 8 bytes each, the path once) and
-    exploded by Spark, so neither side repeats a path per position. The
-    planner cannot see how many positions the lists hold, and a broadcast
-    of millions of keyed rows exhausts the driver heap, so joins against
-    it sort-merge."""
+    exploded by Spark, so neither side repeats a path per position.
+
+    ``pairs`` is consumed: its positions are copied into one preallocated
+    int64 buffer, and each entry is dropped from the list once copied, so
+    a caller that holds no other reference frees every decoded array
+    right after its copy (the driver holds about 8 bytes per position).
+
+    The planner cannot see how many positions the lists hold, and a
+    broadcast of millions of keyed rows exhausts the driver heap, so
+    joins against it sort-merge."""
     from pyspark.sql import functions as F
 
-    paths = list(positions)
-    arrays = [np.asarray(positions[p], dtype=np.int64) for p in paths]
-    offsets = np.concatenate([[0], np.cumsum([len(a) for a in arrays], dtype=np.int64)])
-    pos = pa.ListArray.from_arrays(
-        pa.array(offsets.astype(np.int32)),
-        pa.array(np.concatenate(arrays) if arrays else np.empty(0, np.int64), pa.int64()),
-    )
+    paths = [p for p, _ in pairs]
+    offsets = np.zeros(len(pairs) + 1, np.int64)
+    np.cumsum([len(pos) for _, pos in pairs], out=offsets[1:])
+    values = np.empty(int(offsets[-1]), np.int64)
+    for i in range(len(pairs)):
+        values[offsets[i] : offsets[i + 1]] = pairs[i][1]
+        pairs[i] = None
+    pos = pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(values))
     per_file = spark.createDataFrame(pa.table({"file_path": pa.array(paths, pa.string()), "pos": pos}))
     return per_file.select("file_path", F.explode("pos").alias("pos")).hint("merge")

@@ -26,7 +26,7 @@ import json
 import os
 from typing import Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 # ---------------------------------------------------------------------------
@@ -36,8 +36,8 @@ from pyspark.sql import SparkSession
 
 def delta_expire_log(base_path: str) -> list[int]:
     """Delete what the last checkpoint makes unnecessary: the commit
-    JSONs at/below it (reconstructable from it), the checkpoints below
-    it, and the v2 sidecars that no remaining checkpoint references and
+    JSONs below it (reconstructable from it), the checkpoints below it,
+    and the v2 sidecars that no remaining checkpoint references and
     that are older than its top-level file (a failed checkpoint write
     leaves such sidecars behind; a concurrent writer's new sidecars are
     younger, so they stay). Returns the pruned versions."""
@@ -55,7 +55,10 @@ def delta_expire_log(base_path: str) -> list[int]:
     log_dir = os.path.join(base_path, "_delta_log")
     pruned = []
     for v in list_log_versions(base_path):
-        if v <= cp["version"]:
+        # the checkpoint's own commit JSON stays, as in Delta's log
+        # cleanup: the log's newest version is read from commit files,
+        # and a head checkpoint with none left would restart it at 0
+        if v < cp["version"]:
             os.unlink(os.path.join(log_dir, f"{v:020d}.json"))
             pruned.append(v)
     remaining = []
@@ -667,6 +670,17 @@ def hudi_clean_mor_shadows(spark, base_path: str) -> list[str]:
     return sorted(removed)
 
 
+def _scan_as_stored(spark: SparkSession, paths: list[str], positions: list) -> DataFrame:
+    """The rows of parquet ``paths`` in the columns their footer stores,
+    minus the deleted ``positions`` (data path, positions) pairs: what a
+    compaction rewrites."""
+    from incubator_xtable_spark.model.file_formats import PARQUET
+    from incubator_xtable_spark.sources.file_scan import ScanGroup, scan_files
+
+    fields = spark.read.parquet(*paths).schema
+    return scan_files(spark, [ScanGroup(PARQUET, paths, fields)], fields, positions=positions)
+
+
 def delta_optimize(
     spark: SparkSession,
     base_path: str,
@@ -713,7 +727,6 @@ def delta_optimize(
     import time as _time
     import uuid as _uuid
 
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from incubator_xtable_spark.model.stat_codec import to_delta_stats_json
@@ -770,23 +783,11 @@ def delta_optimize(
             continue
         if zorder_by and not cand:
             continue
-        paths = [_abs(r["path"]) for r in cand]
-        df = spark.read.parquet(*paths)
-        pos_rows = []
-        for r in only_dv:
-            for pos in read_dv_positions(base_path, r["deletionVector"]):
-                pos_rows.append((_abs(r["path"]), int(pos)))
-        if pos_rows:
-            df = df.withColumn(
-                "_opt_path",
-                F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", ""),
-            ).withColumn("_opt_pos", F.col("_metadata.row_index"))
-            dels = spark.createDataFrame(pos_rows, "p STRING, pos LONG")
-            df = df.join(
-                dels,
-                (F.col("_opt_path") == F.col("p")) & (F.col("_opt_pos") == F.col("pos")),
-                "left_anti",
-            ).drop("_opt_path", "_opt_pos")
+        df = _scan_as_stored(
+            spark,
+            [_abs(r["path"]) for r in cand],
+            [(_abs(r["path"]), read_dv_positions(base_path, _dv_of(r))) for r in only_dv],
+        )
         n_out = max(1, math.ceil(sum(r["size"] for r in cand) / target_file_bytes))
         tmp = os.path.join(base_path, f".optimize-{_uuid.uuid4().hex}")
         if zorder_by:
@@ -919,15 +920,12 @@ def iceberg_rewrite_data_files(
     import math
     import uuid as _uuid
 
-    from pyspark.sql import functions as F
-
     from incubator_xtable_spark.model.core import ROW_DELETES_ARROW, TableChange, table_rows
     from incubator_xtable_spark.model.iceberg_manifests import live_entries
     from incubator_xtable_spark.sources.iceberg_source import (
         IcebergConversionSource,
         is_equality_delete,
     )
-    from incubator_xtable_spark.sources.row_deletes import positions_frame
     from incubator_xtable_spark.targets.iceberg_target import IcebergConversionTarget
 
     src = IcebergConversionSource(spark, base_path, name=table_name)
@@ -976,25 +974,9 @@ def iceberg_rewrite_data_files(
         if len(cand) < 2 and not has_deletes:
             continue
         paths = [e["data_file"]["file_path"] for e in cand]
-        df = spark.read.parquet(*paths)
-        if has_deletes:
-            applicable_pos = positions_frame(
-                spark, {p: resolved[p] for p in paths if p in resolved}
-            )
-            df = (
-                df.withColumn(
-                    "_rw_path",
-                    F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", ""),
-                )
-                .withColumn("_rw_pos", F.col("_metadata.row_index"))
-                .join(
-                    applicable_pos,
-                    (F.col("_rw_path") == F.col("file_path"))
-                    & (F.col("_rw_pos") == F.col("pos")),
-                    "left_anti",
-                )
-                .drop("_rw_path", "_rw_pos")
-            )
+        df = _scan_as_stored(
+            spark, paths, [(p, resolved[p]) for p in paths if p in resolved]
+        )
         total = sum(int(e["data_file"].get("file_size_in_bytes") or 0) for e in cand)
         n_out = max(1, math.ceil(total / target_file_bytes))
         data_dir = os.path.join(base_path, "data")

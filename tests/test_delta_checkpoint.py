@@ -232,7 +232,7 @@ def test_expire_removes_sidecars_a_failed_checkpoint_left(spark, tmp_path, monke
     expected = sorted(map(tuple, read_delta_as_df(spark, d).collect()))
     assert check_delta_conformance(spark, d).passed
 
-    assert delta_expire_log(d) == list(range(5))
+    assert delta_expire_log(d) == list(range(4))
     (top,) = glob.glob(os.path.join(log, "*.checkpoint*.parquet"))
     assert os.path.basename(top).startswith(f"{4:020d}.checkpoint.")
     refs = pq.read_table(top, columns=["sidecar"]).column("sidecar").to_pylist()

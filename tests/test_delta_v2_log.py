@@ -187,7 +187,7 @@ def test_v2_checkpoint_with_sidecars_read(spark, tmp_path):
     assert _rows(spark, base) == expected
     # and purely from the checkpoint: expire the covered commit JSONs
     pruned = delta_expire_log(base)
-    assert pruned == [0, 1, 2]
+    assert pruned == [0, 1]
     assert _rows(spark, base) == expected
     assert len(expected) == 15  # 3 commits x 5 regions
 
@@ -350,7 +350,7 @@ def test_v2_checkpoint_write_layout_and_readback(spark, tmp_path):
     assert cp["version"] == 2
     expected = _rows(spark, base)
     assert len(expected) == 15
-    assert delta_expire_log(base) == [0, 1, 2]
+    assert delta_expire_log(base) == [0, 1]
     assert _rows(spark, base) == expected
 
 
@@ -413,7 +413,7 @@ def test_v2_checkpoint_then_incremental_commits(spark, tmp_path):
     expected = _rows(spark, base)
     assert len(expected) == 20
     # prune pre-checkpoint JSON; v3 must still apply on top of the checkpoint
-    assert delta_expire_log(base) == [0, 1, 2]
+    assert delta_expire_log(base) == [0, 1]
     assert _rows(spark, base) == expected
 
 
@@ -463,7 +463,7 @@ def test_multipart_checkpoint_write_layout_and_readback(spark, tmp_path, monkeyp
     # readback survives pruning every pre-checkpoint commit JSON
     expected = _rows(spark, base)
     assert len(expected) == 15
-    assert delta_expire_log(base) == [0, 1, 2]
+    assert delta_expire_log(base) == [0, 1]
     assert _rows(spark, base) == expected
 
 
@@ -471,7 +471,7 @@ def test_multipart_checkpoint_then_incremental_commits(spark, tmp_path, monkeypa
     base = _make_multipart_table(spark, tmp_path, monkeypatch, commits=4, interval=2)
     expected = _rows(spark, base)
     assert len(expected) == 20
-    assert delta_expire_log(base) == [0, 1, 2]
+    assert delta_expire_log(base) == [0, 1]
     assert _rows(spark, base) == expected
 
 

@@ -505,7 +505,7 @@ def test_replay_with_checkpoint_in_range(spark, delta_table, monkeypatch, layout
         assert len(parts) > 2, parts
     for expired in (False, True):
         if expired:
-            assert delta_expire_log(delta_table) == [0, 1, 2, 3, 4]
+            assert delta_expire_log(delta_table) == [0, 1, 2, 3]
         for v in views:
             live = _live_rows(delta_table, v)
             assert state(live, v) == expected[v], f"version {v}, expired={expired}"

@@ -58,14 +58,50 @@ def test_delta_expire_log_and_vacuum(spark, tmp_path):
 
     assert read_last_checkpoint(d)["version"] == 2
     pruned = delta_expire_log(d)
-    assert pruned == [0, 1, 2]
+    assert pruned == [0, 1]
     # head still fully readable from checkpoint + tail
     assert read_delta_as_df(spark, d).count() == 20
-    assert list_log_versions(d) == [3]
+    assert list_log_versions(d) == [2, 3]
 
     # vacuum: nothing is orphaned (all files live)
     assert delta_vacuum(spark, d, dry_run=True) == []
 
+
+def test_delta_expire_log_at_a_head_checkpoint_keeps_later_commits(spark, tmp_path):
+    """Expiring the log behind a checkpoint at the head version keeps
+    that version's commit JSON: the next sync commits version 2 (not a
+    second version 0), the reader sees its file, and the log conforms."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incubator_xtable_spark.model.conformance import check_delta_conformance
+    from incubator_xtable_spark.model.core import SyncStatusCode
+    from incubator_xtable_spark.sources.delta_source import write_checkpoint
+
+    d = str(tmp_path / "expire_head")
+    os.makedirs(d)
+
+    def add_file(i: int) -> None:
+        pq.write_table(pa.table({"id": pa.array([i], pa.int64())}), os.path.join(d, f"f{i}.parquet"))
+
+    source = ParquetConversionSource(spark, d, name="t")
+    targets = {TableFormat.DELTA: DeltaConversionTarget(spark, d)}
+    controller = ConversionController()
+    add_file(0)
+    controller.sync(source, targets)
+    add_file(1)
+    controller.sync(source, targets)
+    assert list_log_versions(d) == [0, 1]
+    write_checkpoint(d, 1)
+    assert delta_expire_log(d) == [0]
+
+    add_file(2)
+    res = controller.sync(source, targets)[TableFormat.DELTA]
+    assert res.status == SyncStatusCode.SUCCESS, res.error
+    assert res.mode == SyncMode.INCREMENTAL
+    assert list_log_versions(d) == [1, 2]
+    assert sorted(r.id for r in read_delta_as_df(spark, d).collect()) == [0, 1, 2]
+    assert check_delta_conformance(spark, d).passed
 
 def test_iceberg_expire_snapshots_breaks_chain(spark, tmp_path):
     d = str(tmp_path / "ret_ice")
