@@ -129,10 +129,8 @@ def _group_scans(
                 spark, group.paths, list(group.fields), path_col="_fp", row_index_col="_ri"
             )
         ]
-    if group.fmt == PARQUET:
-        return [_native_scan(spark, group, group.paths, need_fp, need_ri)]
     if group.fmt != APACHE_ORC:
-        raise ValueError(f"scan_files: no scan for file format {group.fmt!r}")
+        return [_native_scan(spark, group, group.paths, need_fp, need_ri)]
     # ORC files that need row ordinals ride the pyarrow scan; the rest
     # stay on Spark's vectorized reader
     slow = [p for p in group.paths if p in positional]

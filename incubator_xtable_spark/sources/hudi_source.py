@@ -955,12 +955,12 @@ def _scan_base_files(
     spark: SparkSession, base_path: str, rows: list[dict], table: InternalTable, reader: str
 ) -> DataFrame:
     """Read the listed base files (``rows``, paths relative to the table)
-    as ``table``'s read schema through `file_scan.scan_files`. Partition columns may
-    live INSIDE the data files (Paimon-sourced conversions store the full
-    row) or only in the hive-style path (parquet-dir sources), and a
-    table synced from BOTH kinds of source is heterogeneous, so files
-    group by which partition columns their footer stores and the rest
-    come from the path. ORC base files (hoodie.table.base.file.format=ORC)
+    as ``table``'s read schema through `file_scan.scan_files`. Partition
+    columns may live INSIDE the data files (Paimon-sourced conversions
+    store the full row) or only in the hive-style path (parquet-dir
+    sources), and a table synced from BOTH kinds of source is
+    heterogeneous, so files group by which partition columns their
+    footer stores and the rest come from the path. ORC base files (hoodie.table.base.file.format=ORC)
     read through Spark's ORC scan; any other format refuses: real Hudi
     base formats are PARQUET/ORC/HFILE only, so an avro base file is a
     corrupt table, not a read gap."""
