@@ -39,7 +39,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -56,6 +55,12 @@ from incubator_xtable_spark.model.core import (
     arrow_table,
 )
 from incubator_xtable_spark.model.file_formats import from_extension
+from incubator_xtable_spark.sources.change_plan import (
+    ChangeFile,
+    ChangePlan,
+    read_changes,
+    read_positions,
+)
 from incubator_xtable_spark.model.stat_codec import encode_stat
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -775,155 +780,170 @@ def _commit_diff_local(base_path: str, version: int, by_raw_path: bool):
     )
 
 
-def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFrame:
-    """Change Data Feed of ONE commit as a CDC-shaped DataFrame: the row
-    columns plus `_change_type` (insert / update_preimage /
-    update_postimage / delete) and `_commit_version` — the Delta twin of
-    sources/paimon_source.read_paimon_changelog.
+def plan_changes(base_path: str, version: int) -> ChangePlan:
+    """The row changes of commit ``version``, planned from its own log
+    JSON and the live state before it (`change_plan.ChangePlan`; no
+    SparkSession). Delta PROTOCOL.md Change Data Files, in order:
 
-    Source of truth, in order (Delta PROTOCOL.md Change Data Files):
-    1. the commit's `cdc` actions — explicit change files under
-       _change_data/ whose rows carry `_change_type`;
-    2. derivation from the file actions, per the spec's CDF-read rules:
-       add(dataChange) = inserts of the file's visible rows,
-       remove(dataChange) = deletes of the rows visible at the previous
-       version, and the remove+re-add deletion-vector update shape (what
-       our own target writes) = row-level deletes of exactly the NEWLY
-       deleted positions (new DV minus old DV; positions restored by a
-       shrinking DV emit as inserts).
+    1. the commit's `cdc` actions: change files under _change_data/ whose
+       rows carry `_change_type`;
+    2. otherwise the file actions: add(dataChange) = inserts of the
+       file's visible rows, remove(dataChange) = deletes of the rows
+       visible at the previous version, and a remove + re-add of one
+       path (a deletion-vector update) = a position diff of the old and
+       new DVs.
 
-    Scale: one distributed scan over only the files this commit touched;
-    DV position sets decode on the driver (metadata-sized) and diff in
-    numpy; no data row ever collects to the driver. Pair with
-    get_commits_backlog for the commit cursor.
-    """
-    meta = latest_action(base_path, "metaData", version)
-    if meta is None:
-        raise ValueError(f"not a delta table (no metaData): {base_path}")
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta["partitionColumns"] or [])
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    change_type = T.StructField("_change_type", T.StringType())
+    Partition values key by logical name; under column mapping the
+    plan's columns name each column's physical name, and mode=id adds
+    its field id. Refuses a commit whose JSON is gone and a removed file
+    that has been vacuumed."""
+    from incubator_xtable_spark.model.file_formats import from_delta_provider
+
     commit_file = os.path.join(_log_dir(base_path), f"{version:020d}.json")
     if not os.path.exists(commit_file):
         raise ValueError(
             f"commit {version} has no retained JSON file (expired or compacted); "
             "CDF reads need the commit's own actions"
         )
-    actions = [json.loads(line) for line in open(commit_file, encoding="utf-8") if line.strip()]
+    meta = latest_action(base_path, "metaData", version)
+    if meta is None:
+        raise ValueError(f"not a delta table (no metaData): {base_path}")
+    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    part_cols = list(meta["partitionColumns"] or [])
+    cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
+    provider_fmt = from_delta_provider(
+        meta["format"]["provider"] if meta["format"] is not None else None
+    )
     base = base_path.rstrip("/")
+    actions = [json.loads(line) for line in open(commit_file, encoding="utf-8") if line.strip()]
 
-    def _positions(items: list[tuple]) -> list[tuple[str, np.ndarray]]:
-        """(absolute path, deleted positions) of the items' DVs."""
-        from incubator_xtable_spark.sources.delta_dv import read_dv_positions
-
-        return [
-            (os.path.join(base, p), read_dv_positions(base, d))
-            for p, _, d in items
-            if d and d.get("storageType")
-        ]
-
-    def _rows_of(items: list[tuple], change: str, positions=None, keep: bool = False) -> DataFrame:
-        """The rows of the items' (path, partitionValues, DV) files tagged
-        ``change``; ``positions`` drop rows (``keep``: keep only those)."""
-        return (
-            _scan(
-                spark,
-                base,
-                meta,
-                schema,
-                [(p, v) for p, v, _ in items],
-                data_fields,
-                "read_delta_cdf",
-                positions=positions,
-                keep=keep,
-            )
-            .withColumn("_change_type", F.lit(change))
-            .withColumn("_commit_version", F.lit(version).cast("long"))
+    def change_file(path: str, change, values, drop, restore=None) -> ChangeFile:
+        return ChangeFile(
+            os.path.join(base, path),
+            from_extension(path, default=provider_fmt),
+            change,
+            _logical_partition_values(schema, part_cols, values),
+            drop,
+            restore,
         )
+
+    def dv(path: str, descriptor: Optional[dict]) -> tuple:
+        if not descriptor or not descriptor.get("storageType"):
+            return ()
+        return ({"kind": "delta_dv", "base": base, "path": os.path.join(base, path), "dv": descriptor},)
 
     cdc = [a["cdc"] for a in actions if a.get("cdc")]
     if cdc:
+        files = [change_file(c["path"], "_change_type", c.get("partitionValues"), ()) for c in cdc]
+    else:
+        adds = {
+            a["add"]["path"]: a["add"]
+            for a in actions
+            if a.get("add") and a["add"].get("dataChange", True)
+        }
+        removes = {
+            a["remove"]["path"]: a["remove"]
+            for a in actions
+            if a.get("remove") and a["remove"].get("dataChange", True)
+        }
+        prev = live_adds(base_path, version - 1) if removes and version > 0 else {}
+        gone = [
+            p for p in removes if p not in adds and not os.path.exists(os.path.join(base, p))
+        ]
+        if gone:
+            raise ValueError(
+                f"CDF derivation for commit {version} needs the removed data files, "
+                f"but they are vacuumed: {gone[:3]}"
+            )
+        files = []
+        for p, a in adds.items():
+            if p in removes:  # the DV-update shape: a position diff
+                old = (prev.get(p) or {}).get("deletionVector")
+                files.append(
+                    change_file(p, None, a.get("partitionValues"), dv(p, a.get("deletionVector")), dv(p, old))
+                )
+            else:
+                files.append(change_file(p, "insert", a.get("partitionValues"), dv(p, a.get("deletionVector"))))
+        for p, r in removes.items():
+            if p not in adds:
+                state = prev.get(p) or {}
+                values = r.get("partitionValues") or state.get("partitionValues")
+                files.append(change_file(p, "delete", values, dv(p, state.get("deletionVector"))))
+    columns, field_ids = {}, {}
+    if cm_mode in ("name", "id"):
+        for f in schema.fields:
+            columns[f.name] = [_physical_name(schema, f.name)]
+            fid = (f.metadata or {}).get("delta.columnMapping.id")
+            if cm_mode == "id" and fid is not None:
+                field_ids[f.name] = int(fid)
+    return ChangePlan(schema, files, columns, field_ids, None)
+
+
+def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFrame:
+    """Change Data Feed of ONE commit as a CDC-shaped DataFrame: the row
+    columns plus `_change_type` (insert / update_preimage /
+    update_postimage / delete) and `_commit_version` — the Delta twin of
+    sources/paimon_source.read_paimon_changelog. The rows are the ones
+    `plan_changes` plans: explicit change files win; otherwise inserts
+    of added files, deletes of removed ones, and for a deletion-vector
+    update exactly the NEWLY deleted positions (new DV minus old DV;
+    positions restored by a shrinking DV emit as inserts).
+
+    Scale: one distributed scan over only the files this commit touched;
+    DV position sets decode on the driver (metadata-sized) and diff in
+    numpy; no data row ever collects to the driver. Pair with
+    get_commits_backlog for the commit cursor.
+    """
+    plan = plan_changes(base_path, version)
+    meta = latest_action(base_path, "metaData", version)
+    part_cols = list(meta["partitionColumns"] or [])
+    data_fields = [f for f in plan.schema.fields if f.name not in part_cols]
+    cache: dict = {}
+
+    def scan(files, extra, positions, keep) -> DataFrame:
         return _scan(
             spark,
-            base,
+            base_path.rstrip("/"),
             meta,
-            schema,
-            [(c["path"], c.get("partitionValues")) for c in cdc],
-            data_fields + [change_type],
+            plan.schema,
+            [(f.path, f.partition_values) for f in files],
+            data_fields + extra,
             "read_delta_cdf",
-            change_files=True,
-        ).withColumn("_commit_version", F.lit(version).cast("long"))
-
-    adds = {a["add"]["path"]: a["add"] for a in actions if a.get("add")}
-    removes = {
-        a["remove"]["path"]: a["remove"]
-        for a in actions
-        if a.get("remove") and a["remove"].get("dataChange", True)
-    }
-    adds = {p: a for p, a in adds.items() if a.get("dataChange", True)}
-    pair_paths = sorted(set(adds) & set(removes))
-    prev_dv: dict[str, Optional[dict]] = {}
-    prev_pv: dict[str, Optional[dict]] = {}
-    if (pair_paths or removes) and version > 0:
-        prev_rows = live_adds(base_path, version - 1).values()
-        prev_dv = {r["path"]: r["deletionVector"] for r in prev_rows}
-        prev_pv = {r["path"]: r["partitionValues"] or None for r in prev_rows}
-
-    parts: list[DataFrame] = []
-    # 1. DV-update pairs: remove+re-add of the same path -> row-level diff
-    # of each paired file's old and new position sets
-    if pair_paths:
-        new_items = [
-            (p, adds[p].get("partitionValues"), adds[p].get("deletionVector"))
-            for p in pair_paths
-        ]
-        from incubator_xtable_spark.sources.row_deletes import positions_minus
-
-        new_pos = dict(_positions(new_items))
-        old_pos = dict(_positions([(p, None, prev_dv.get(p)) for p in pair_paths]))
-        newly_deleted = positions_minus(new_pos, old_pos)
-        restored = positions_minus(old_pos, new_pos)
-        if newly_deleted:
-            parts.append(_rows_of(new_items, "delete", list(newly_deleted.items()), keep=True))
-        if restored:
-            parts.append(_rows_of(new_items, "insert", list(restored.items()), keep=True))
-
-    # 2. pure adds: the file's visible rows are inserts
-    pure_adds = [
-        (p, a.get("partitionValues"), a.get("deletionVector"))
-        for p, a in adds.items()
-        if p not in removes
-    ]
-    if pure_adds:
-        parts.append(_rows_of(pure_adds, "insert", _positions(pure_adds)))
-
-    # 3. pure removes: rows visible at the previous version are deletes
-    pure_removes = [
-        (p, r.get("partitionValues") or prev_pv.get(p), prev_dv.get(p))
-        for p, r in removes.items()
-        if p not in adds
-    ]
-    gone = [p for p, _, _ in pure_removes if not os.path.exists(os.path.join(base, p))]
-    if gone:
-        raise ValueError(
-            f"CDF derivation for commit {version} needs the removed data files, "
-            f"but they are vacuumed: {gone[:3]}"
+            positions=positions,
+            keep=keep,
+            change_files=bool(extra),
         )
-    if pure_removes:
-        parts.append(_rows_of(pure_removes, "delete", _positions(pure_removes)))
 
-    if not parts:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                list(schema.fields) + [change_type, T.StructField("_commit_version", T.LongType())]
-            ),
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return read_changes(
+        spark,
+        plan,
+        scan,
+        lambda pairs: read_positions(pairs, cache),
+        T.StructField("_commit_version", T.LongType()),
+        version,
+    )
+
+
+def commit_data_bytes(base_path: str, version: int) -> int:
+    """Planned data bytes of one commit from its OWN json: dataChange add
+    sizes + CDC file sizes (metadata read only — no file stats); a
+    commit without a JSON counts 0."""
+    commit_file = os.path.join(_log_dir(base_path), f"{version:020d}.json")
+    if not os.path.exists(commit_file):
+        return 0
+    total = 0
+    for a in _json_actions(commit_file):
+        if a.get("add") and a["add"].get("dataChange", True):
+            total += int(a["add"].get("size") or 0)
+        elif a.get("cdc"):
+            total += int(a["cdc"].get("size") or 0)
+    return total
+
+
+def _logical_partition_values(schema: T.StructType, part_cols: list[str], values) -> dict:
+    """partitionValues (keyed by PHYSICAL name under column mapping) ->
+    {logical partition column: value}."""
+    return {c: (values or {}).get(_physical_name(schema, c)) for c in part_cols}
 
 
 def _scan(
@@ -940,15 +960,16 @@ def _scan(
     row_ids: Optional[dict[str, Optional[int]]] = None,
     change_files: bool = False,
 ) -> DataFrame:
-    """Scan a Delta table's (relative path, partitionValues) ``files``
-    through `file_scan.scan_files` (``row_ids`` keys each file's
-    baseRowId by relative path), resolving the stored columns of
+    """Scan a Delta table's (path, partition values) ``files`` through
+    `file_scan.scan_files` (a path relative to ``base`` or absolute;
+    ``row_ids`` keys each file's baseRowId by relative path), resolving the stored columns of
     ``fields`` (the logical columns the files hold) the way the table's
     column mapping says: mode=name reads each column's PHYSICAL name,
     mode=id matches PARQUET FIELD IDS (fed from delta.columnMapping.id,
     mirroring DeltaSchemaExtractor.java:57-58,137-144), and both rename
-    and cast back to the logical schema. Partition columns come from
-    partitionValues, which key by physical name.
+    and cast back to the logical schema. Partition columns come from the
+    files' partition values, keyed by logical name
+    (`_logical_partition_values`).
 
     Refusal matrix (README "Delta non-parquet depth"): ORC and AVRO
     files serve mode=name (their columns and fields ARE named the
@@ -1010,12 +1031,7 @@ def _scan(
         for fmt, fmt_paths in ((PARQUET, pq_paths), (APACHE_ORC, orc_paths), (APACHE_AVRO, avro_paths))
     ]
     partition_values = (
-        {
-            path: {c: (pv or {}).get(_physical_name(schema, c)) for c in part_cols}
-            for path, (_, pv) in zip(paths, files)
-        }
-        if part_cols
-        else None
+        {path: pv or {} for path, (_, pv) in zip(paths, files)} if part_cols else None
     )
     out = list(schema.fields) + [f for f in fields if f.name not in schema.names]
     return scan_files(
@@ -1202,7 +1218,7 @@ def read_delta_as_df(
         base,
         meta,
         schema,
-        [(r["path"], r["partitionValues"]) for r in live],
+        [(r["path"], _logical_partition_values(schema, part_cols, r["partitionValues"])) for r in live],
         [f for f in schema.fields if f.name not in part_cols],
         "read_delta_as_df",
         positions=[

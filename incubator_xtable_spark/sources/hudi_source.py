@@ -52,6 +52,12 @@ from incubator_xtable_spark.model.file_formats import APACHE_ORC, PARQUET, from_
 from incubator_xtable_spark.model.files_diff import relativize
 from incubator_xtable_spark.model.hive_partitions import partition_values
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
+from incubator_xtable_spark.sources.change_plan import (
+    HUDI_CDC_LOG,
+    ChangeFile,
+    ChangePlan,
+    read_changes,
+)
 from incubator_xtable_spark.targets.hudi_target import (
     HOODIE_DIR,
     instant_to_epoch_ms,
@@ -726,98 +732,172 @@ class HudiConversionSource:
         return None
 
 
+def plan_changes(base_path: str, instant: str) -> ChangePlan:
+    """The row changes of ONE completed instant (`change_plan.ChangePlan`;
+    no SparkSession), in order:
+
+    1. the commit's CDC supplemental log files (hoodie.table.cdc.enabled
+       writers; cdcStats in the commit's write stats name them), whose
+       CDC blocks carry {op: i|u|d, before, after} records;
+    2. an adds-only commit (action=commit, no replacements, no log
+       files, no rewritten file group): each written base file's rows
+       are inserts, partition values from its hive-style directory;
+    3. any other commit rewrites state without CDC logging (a COW
+       upsert, a MOR deltacommit, a replacecommit): the plan carries no
+       files and ``derive`` says why; `read_hudi_cdc` derives the rows by
+       a join of the touched file groups, and the stream refuses."""
+    action = next((a for i, a in list_completed_instants(base_path) if i == instant), None)
+    if action is None:
+        raise ValueError(f"no completed instant {instant} in {base_path}")
+    meta = read_commit_metadata(base_path, instant, action)
+    stats = [st for sts in (meta.get("partitionToWriteStats") or {}).values() for st in sts]
+    cdc_paths = [p for st in stats for p in (st.get("cdcStats") or {})]
+    rewrites = [
+        st
+        for st in stats
+        if not (st.get("path") or "").endswith(".parquet")
+        or st.get("prevCommit") not in (None, "null")
+        or int(st.get("numUpdateWrites") or 0) > 0
+        or int(st.get("numDeletes") or 0) > 0
+    ]
+    if not cdc_paths and (action != "commit" or meta.get("partitionToReplaceFileIds") or rewrites):
+        # a COW upsert rewrites a file GROUP: its new file version is not
+        # all-inserts (prevCommit names the rewritten base;
+        # numUpdateWrites/numDeletes count the mutated rows)
+        return ChangePlan(
+            T.StructType([]),
+            [],
+            {},
+            {},
+            f"instant {instant} ({action}) rewrites state without CDC logging; "
+            "hudi_cdc cannot derive its row changes per file. Enable CDC "
+            "supplemental logging on the writer (hudiChangeFeed / "
+            "hoodie.table.cdc.enabled — what Hudi's own CDC query requires) "
+            "or consume via streaming.cdc_stream.run_cdc_stream",
+        )
+    table = HudiConversionSource(None, base_path).get_current_table()
+    if table is None:
+        raise ValueError(f"not a hudi table: {base_path}")
+    if cdc_paths:
+        files = [ChangeFile(os.path.join(base_path, p), HUDI_CDC_LOG, "op", {}, (), None) for p in cdc_paths]
+    else:
+        part_cols = [pf.output_name for pf in table.partition_fields]
+        files = [
+            ChangeFile(
+                os.path.join(base_path, st["path"]),
+                from_extension(st["path"]),
+                "insert",
+                partition_values(os.path.dirname(st["path"])) if part_cols else {},
+                (),
+                None,
+            )
+            for st in stats
+            if st.get("path")
+        ]
+    return ChangePlan(table.read_schema, files, {}, {}, None)
+
+
+def cdc_log_rows(path: str, schema: T.StructType) -> list[tuple]:
+    """The rows of one CDC supplemental log file: each record's after
+    image (insert, update_postimage) or before image (delete,
+    update_preimage) as values of ``schema``'s columns, then its change
+    type. Avro logical types that decode as raw numbers become dates and
+    datetimes."""
+    import datetime as _dt
+
+    from incubator_xtable_spark.sources.hudi_log import block_records, read_log_blocks
+
+    def _decode(v, dt):
+        if v is None:
+            return None
+        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)) and isinstance(v, int):
+            return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=v)
+        if isinstance(dt, T.DateType) and isinstance(v, int):
+            return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
+        return v
+
+    def _vals(rec: dict, change: str) -> tuple:
+        return tuple(_decode(rec.get(f.name), f.dataType) for f in schema.fields) + (change,)
+
+    rows: list[tuple] = []
+    for block in read_log_blocks(path):
+        kind, records = block_records(None, block)
+        if kind != "cdc":
+            continue
+        for r in records:
+            op, before, after = r.get("op"), r.get("before"), r.get("after")
+            if op == "i" and after is not None:
+                rows.append(_vals(after, "insert"))
+            elif op == "d" and before is not None:
+                rows.append(_vals(before, "delete"))
+            elif op == "u":
+                if before is not None:
+                    rows.append(_vals(before, "update_preimage"))
+                if after is not None:
+                    rows.append(_vals(after, "update_postimage"))
+    return rows
+
+
+def instant_data_bytes(base_path: str, instant: str, action: str) -> int:
+    """Planned data bytes of one instant from its commit metadata: write
+    stats' fileSizeInBytes plus CDC supplemental file sizes."""
+    try:
+        meta = read_commit_metadata(base_path, instant, action)
+    except OSError:
+        return 0
+    total = 0
+    for stats in (meta.get("partitionToWriteStats") or {}).values():
+        for st in stats:
+            total += int(st.get("fileSizeInBytes") or 0)
+            for sz in (st.get("cdcStats") or {}).values():
+                total += int(sz or 0)
+    return total
+
+
 def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFrame:
     """Row-level changes of ONE commit as a CDC-shaped DataFrame: the row
     columns plus `_change_type` (insert / update_preimage /
     update_postimage / delete) and `_commit_instant` — the Hudi member of
-    the CDC-read triple (read_paimon_changelog / read_delta_cdf).
-
-    Source of truth, in order:
-    1. the commit's CDC supplemental log files (hoodie.table.cdc.enabled
-       writers; cdcStats in the commit's write stats name them) — CDC
-       blocks carry {op: i|u|d, before, after} records, logging mode
-       data_before_after;
-    2. derivation: the commit's touched file groups' EFFECTIVE rows
-       (base or log-merged compaction shadow — the snapshot-view
-       machinery) before vs after the commit, full-outer-joined on the
-       record key; value changes emit preimage+postimage pairs.
+    the CDC-read triple (read_paimon_changelog / read_delta_cdf), reading
+    the rows `plan_changes` plans. CDC log records decode on the driver
+    (a log is change-sized); a commit the plan leaves to derivation reads
+    the touched file groups' EFFECTIVE rows (base or log-merged
+    compaction shadow) before vs after the commit, full-outer-joined on
+    the record key; value changes emit preimage+postimage pairs.
 
     Scale: the derivation scans only the touched groups' files on both
     sides and joins on the record key — the minimum any engine pays to
     reconstruct CDC that was never logged; with CDC logging enabled the
     read is just the cdc blocks."""
+    plan = plan_changes(base_path, instant)
+    commit_column = T.StructField("_commit_instant", T.StringType())
+    if plan.derive:
+        return _derive_changes(spark, base_path, instant, commit_column)
+    table = HudiConversionSource(spark, base_path).get_current_table()
+
+    def scan(files, extra, positions, keep) -> DataFrame:
+        if extra:  # CDC logs
+            rows = [r for f in files for r in cdc_log_rows(f.path, plan.schema)]
+            return spark.createDataFrame(rows, T.StructType(list(plan.schema.fields) + extra))
+        rows = [{"path": os.path.relpath(f.path, base_path)} for f in files]
+        return _scan_base_files(spark, base_path, rows, table, "read_hudi_cdc")
+
+    return read_changes(spark, plan, scan, lambda pairs: {}, commit_column, instant)
+
+
+def _derive_changes(
+    spark: SparkSession, base_path: str, instant: str, commit_column: T.StructField
+) -> DataFrame:
+    """A commit's row changes by effective-representation diff of the
+    touched file groups (replaced groups count as fully deleted)."""
     src = HudiConversionSource(spark, base_path, view="snapshot")
     table = src.get_current_table()
-    if table is None:
-        raise ValueError(f"not a hudi table: {base_path}")
-    action = next(
-        (a for i, a in list_completed_instants(base_path) if i == instant), None
-    )
-    if action is None:
-        raise ValueError(f"no completed instant {instant} in {base_path}")
+    action = next(a for i, a in list_completed_instants(base_path) if i == instant)
     meta = read_commit_metadata(base_path, instant, action)
-    props = read_properties(base_path)
     key_field = (
-        props.get("hoodie.table.recordkey.fields") or table.read_schema.fields[0].name
+        read_properties(base_path).get("hoodie.table.recordkey.fields")
+        or table.read_schema.fields[0].name
     ).split(",")[0]
-    out_names = [f.name for f in table.read_schema.fields] + ["_change_type", "_commit_instant"]
-    out_schema = T.StructType(
-        list(table.read_schema.fields)
-        + [T.StructField("_change_type", T.StringType()), T.StructField("_commit_instant", T.StringType())]
-    )
-
-    # tier 1: CDC supplemental files named by cdcStats
-    cdc_paths = [
-        p
-        for stats_list in (meta.get("partitionToWriteStats") or {}).values()
-        for st in stats_list
-        for p in (st.get("cdcStats") or {})
-    ]
-    if cdc_paths:
-        import datetime as _dt
-
-        from incubator_xtable_spark.sources.hudi_log import block_records, read_log_blocks
-
-        types = {f.name: f.dataType for f in table.read_schema.fields}
-
-        def _decode(v, dt):
-            """Avro logical-type representations back to Spark values
-            (the decode path yields raw longs/ints for them)."""
-            if v is None:
-                return None
-            if isinstance(dt, (T.TimestampType, T.TimestampNTZType)) and isinstance(v, int):
-                return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=v)
-            if isinstance(dt, T.DateType) and isinstance(v, int):
-                return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
-            return v
-
-        rows: list[tuple] = []
-        cols = [f.name for f in table.read_schema.fields]
-
-        def _vals(rec) -> tuple:
-            return tuple(_decode(rec.get(c), types[c]) for c in cols)
-
-        for p in cdc_paths:
-            for block in read_log_blocks(os.path.join(base_path, p)):
-                kind, records = block_records(spark, block)
-                if kind != "cdc":
-                    continue
-                for r in records:
-                    op = r.get("op")
-                    before, after = r.get("before"), r.get("after")
-                    if op == "i" and after is not None:
-                        rows.append(_vals(after) + ("insert", instant))
-                    elif op == "d" and before is not None:
-                        rows.append(_vals(before) + ("delete", instant))
-                    elif op == "u":
-                        if before is not None:
-                            rows.append(_vals(before) + ("update_preimage", instant))
-                        if after is not None:
-                            rows.append(_vals(after) + ("update_postimage", instant))
-        return spark.createDataFrame(rows, out_schema)
-
-    # tier 2: derivation by effective-representation diff of the touched
-    # file groups (replaced groups count as fully deleted)
     replaced, written = _commit_groups(meta)
     touched = set(replaced) | {key for key, _ in written}
     prev = _prev_instant(base_path, instant)
@@ -835,11 +915,9 @@ def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFram
             "read_hudi_cdc",
         )
 
-    old_df = _read(eff_old)
-    new_df = _read(eff_new)
     data_cols = [f.name for f in table.read_schema.fields]
-    o = old_df.select(F.col(key_field).alias("_k"), F.struct(*data_cols).alias("_o"))
-    n = new_df.select(F.col(key_field).alias("_k"), F.struct(*data_cols).alias("_n"))
+    o = _read(eff_old).select(F.col(key_field).alias("_k"), F.struct(*data_cols).alias("_o"))
+    n = _read(eff_new).select(F.col(key_field).alias("_k"), F.struct(*data_cols).alias("_n"))
     j = o.join(n, "_k", "full_outer")
     ins = j.filter(F.col("_o").isNull()).select("_n.*").withColumn("_change_type", F.lit("insert"))
     dels = j.filter(F.col("_n").isNull()).select("_o.*").withColumn("_change_type", F.lit("delete"))
@@ -852,7 +930,7 @@ def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFram
     pre = upd.select("_o.*").withColumn("_change_type", F.lit("update_preimage"))
     post = upd.select("_n.*").withColumn("_change_type", F.lit("update_postimage"))
     out = ins.unionByName(dels).unionByName(pre).unionByName(post)
-    return out.withColumn("_commit_instant", F.lit(instant)).select(*out_names)
+    return out.select(*data_cols, "_change_type", F.lit(instant).alias(commit_column.name))
 
 
 def _prev_instant(base_path: str, commit: str) -> Optional[str]:

@@ -55,10 +55,15 @@ from incubator_xtable_spark.model.core import (
 from incubator_xtable_spark.model import file_formats as _ff
 from incubator_xtable_spark.model.iceberg_manifests import live_entries, snapshot_by_id
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
+from incubator_xtable_spark.sources.change_plan import (
+    ChangeFile,
+    ChangePlan,
+    read_changes,
+    read_positions,
+)
 from incubator_xtable_spark.sources.file_scan import ScanGroup, scan_files
 from incubator_xtable_spark.sources.row_deletes import (
     positions_id,
-    positions_minus,
     shadow_path,
 )
 from incubator_xtable_spark.targets.iceberg_target import (
@@ -68,8 +73,17 @@ from incubator_xtable_spark.targets.iceberg_target import (
 
 
 # -- delete application rules (Iceberg spec "Scan Planning") ---------------
-# The batch resolver (`IcebergConversionSource._resolve_deletes`) and the
-# `iceberg_cdc` stream planner both apply deletes through these.
+# The snapshot resolver (`IcebergConversionSource._resolve_deletes`) and
+# the change planner (`plan_changes`) both apply deletes through these.
+
+# the delete-file fields `delete_file_positions` reads, carried in a plan
+_POSITION_FILE_KEYS = (
+    "file_path",
+    "file_format",
+    "referenced_data_file",
+    "content_offset",
+    "content_size_in_bytes",
+)
 
 
 # the scope of a delete file without partition values: it applies globally
@@ -98,7 +112,7 @@ def _equality_rule(delete_seq, data_seq, delete_scope, data_scope):
     it (data_seq < delete_seq), and only within its partition scope; a
     global one applies everywhere. Its operators mean the same on Python
     values and on Spark columns, so the driver and the batch join
-    (`_equality_positions_df`) apply this one expression."""
+    (`equality_positions_df`) apply this one expression."""
     return (data_seq < delete_seq) & (
         (delete_scope == _GLOBAL_SCOPE) | (delete_scope == data_scope)
     )
@@ -162,6 +176,150 @@ def delete_file_positions(delete_file: dict) -> dict[str, np.ndarray]:
         reader="iceberg position-delete read",
     )
     return _positions_by_file(pq.read_table(delete_file["file_path"], columns=["file_path", "pos"]))
+
+
+def equality_source(entry: dict) -> dict:
+    """An equality-delete manifest entry as the descriptor planners and
+    `equality_positions_df` use: path, format, sorted equality field ids,
+    sequence number and partition scope."""
+    df = entry["data_file"]
+    ids = sorted(df.get("equality_ids") or [])
+    if not ids:
+        raise ValueError(f"equality delete file {df['file_path']} has no equality_ids")
+    return {
+        "kind": "equality",
+        "path": df["file_path"],
+        "file_format": df.get("file_format"),
+        "eq_ids": ids,
+        "seq": entry["sequence_number"],
+        "scope": _scope_key(df.get("partition")),
+    }
+
+
+def equality_fields(schema: T.StructType, eq_ids: list[int]) -> list[T.StructField]:
+    """The top-level columns an equality delete's field ids name."""
+    by_id = {(f.metadata or {}).get("xtable.fieldId"): f for f in schema.fields}
+    fields = []
+    for fid in eq_ids:
+        f = by_id.get(fid)
+        if f is None:
+            raise ValueError(
+                f"equality delete references field id {fid} that is not a "
+                "top-level column; nested equality columns are not supported"
+            )
+        fields.append(f)
+    return fields
+
+
+def equality_positions_df(
+    spark: SparkSession,
+    meta: dict,
+    table: InternalTable,
+    deletes: list[dict],
+    data_files: dict[str, tuple],
+) -> Optional[DataFrame]:
+    """Resolve v2 EQUALITY deletes (`equality_source` descriptors) to the
+    (file_path, pos) rows they delete in ``data_files`` ({path: (sequence
+    number, partition scope, identity partition values)}); None when no
+    delete applies anywhere.
+
+    Per distinct equality-id set: ONE distributed scan of only the data
+    files some delete file applies to, pruned to the equality columns +
+    row index, joined null-safely (Iceberg equality matches NULLs)
+    against the delete rows under `_equality_rule` (the STRICT data_seq <
+    delete_seq rule, partition-scoped: a delete file written into a
+    partition applies only there, a partition-less one globally). The
+    driver sends one row per candidate data file (sequence number,
+    scope) and tags each delete file's rows with its own, so the
+    metadata shipped is linear in data files plus delete files.
+    Identity-partition equality columns absent from the data files
+    re-attach from manifest values.
+
+    Scale: cost is one column-pruned scan of candidate files per id set —
+    the minimum any engine pays to apply equality deletes; the join keys
+    are the equality columns, so AQE broadcasts the (typically tiny
+    CDC-key) delete side."""
+    if not deletes or not data_files:
+        return None
+    identity_cols = _identity_columns(table)
+    groups: dict[tuple, list[dict]] = {}
+    for d in {d["path"]: d for d in deletes}.values():
+        groups.setdefault(tuple(d["eq_ids"]), []).append(d)
+
+    out_parts = []
+    for ids, group in groups.items():
+        fields = equality_fields(table.read_schema, list(ids))
+        cols = [f.name for f in fields]
+        # the rule only widens with delete_seq, so a data file is a
+        # candidate iff the newest delete in its scope or the newest
+        # global one applies to it
+        newest: dict[str, int] = {}
+        for d in group:
+            newest[d["scope"]] = max(newest.get(d["scope"], d["seq"]), d["seq"])
+        cand = sorted(
+            p
+            for p, (seq, scope, _) in data_files.items()
+            if any(
+                _equality_rule(newest[k], seq, k, scope)
+                for k in {_GLOBAL_SCOPE, scope}
+                if k in newest
+            )
+        )
+        if not cand:
+            continue
+        file_fields = [f for f in fields if f.name not in identity_cols]
+        # name mapping: renamed sources' files store physical names,
+        # resolved per distinct footer schema (mixed provenances read
+        # each with their own resolution)
+        part_fields = [f for f in fields if f.name in identity_cols]
+        df = scan_files(
+            spark,
+            _scan_groups(meta, T.StructType(file_fields), cand),
+            fields,
+            partition_values={
+                p: {
+                    f.name: None if data_files[p][2].get(f.name) is None else str(data_files[p][2][f.name])
+                    for f in part_fields
+                }
+                for p in cand
+            },
+            file_rows=True,
+        ).withColumnRenamed("_fp", "file_path").withColumnRenamed("_ri", "pos")
+        info = spark.createDataFrame(
+            [(p, data_files[p][0], data_files[p][1]) for p in cand],
+            "file_path STRING, _data_seq LONG, _data_scope STRING",
+        )
+        df = df.join(F.broadcast(info), "file_path")
+        del_schema = T.StructType([T.StructField(f.name, f.dataType) for f in fields])
+        del_parts = []
+        for d in group:
+            _ff.require_parquet(
+                [(d["path"], _ff.from_iceberg_manifest(d["file_format"]))],
+                reader="iceberg equality-delete read",
+            )
+            del_parts.append(
+                spark.read.schema(del_schema)
+                .parquet(d["path"])
+                .withColumn("_del_seq", F.lit(d["seq"]).cast("long"))
+                .withColumn("_del_scope", F.lit(d["scope"]))
+            )
+        dels = del_parts[0]
+        for p in del_parts[1:]:
+            dels = dels.unionByName(p)
+        dels = dels.select(*[F.col(c).alias(f"_del_{c}") for c in cols], "_del_seq", "_del_scope")
+        cond = _equality_rule(
+            F.col("_del_seq"), F.col("_data_seq"), F.col("_del_scope"), F.col("_data_scope")
+        )
+        for c in cols:
+            cond = cond & F.col(c).eqNullSafe(F.col(f"_del_{c}"))
+        out_parts.append(df.join(dels, cond).select("file_path", "pos"))
+    if not out_parts:
+        return None
+    out = out_parts[0]
+    for p in out_parts[1:]:
+        out = out.unionByName(p)
+    # a row matched by several delete files/rows counts once
+    return out.distinct()
 
 
 class IcebergConversionSource:
@@ -333,7 +491,7 @@ class IcebergConversionSource:
         names until its own delete set changes. Position-delete parquets
         and Puffin deletion vectors are read on the driver, each file
         once; equality deletes lowered to positions come from
-        `_equality_positions_df`, the one data-sized scan."""
+        `equality_positions_df`, the one data-sized scan."""
         data_seq = {e["data_file"]["file_path"]: e["sequence_number"] for e in data_entries}
         found: dict[str, list[np.ndarray]] = {}
         eq_entries = []
@@ -344,149 +502,29 @@ class IcebergConversionSource:
             for path, pos in delete_file_positions(e["data_file"]).items():
                 if path in data_seq and position_delete_applies(e, data_seq[path]):
                     found.setdefault(path, []).append(pos)
-        eq = self._equality_positions_df(eq_entries, data_entries)
-        if eq is not None:
-            for path, pos in _positions_by_file(eq.toArrow()).items():
-                found.setdefault(path, []).append(pos)
+        if eq_entries and data_entries:
+            table = self.get_current_table()
+            values = _identity_values(data_entries, _identity_columns(table)) or {}
+            eq = equality_positions_df(
+                self.spark,
+                self._meta(),
+                table,
+                [equality_source(e) for e in eq_entries],
+                {
+                    path: (seq, _scope_key(e["data_file"].get("partition")), values.get(path, {}))
+                    for e in data_entries
+                    for path, seq in [(e["data_file"]["file_path"], e["sequence_number"])]
+                },
+            )
+            if eq is not None:
+                for path, pos in _positions_by_file(eq.toArrow()).items():
+                    found.setdefault(path, []).append(pos)
         out = {}
         for path, parts in found.items():
             pos = np.unique(np.concatenate(parts))
             if len(pos):
                 out[path] = pos
         return out
-
-    def _equality_positions_df(
-        self, eq_entries: list[dict], data_entries: list[dict]
-    ) -> Optional[DataFrame]:
-        """Resolve v2 EQUALITY deletes (content==2) to the (file_path, pos)
-        rows they delete; None when no delete file applies anywhere.
-
-        Per distinct equality-id set: ONE distributed scan of only the
-        data files some delete file applies to, pruned to the equality
-        columns + _metadata.row_index, joined null-safely (Iceberg
-        equality matches NULLs) against the delete rows under
-        `_equality_rule` (the STRICT data_seq < delete_seq rule,
-        partition-scoped: a delete file written into a partition applies
-        only there, a partition-less one globally). The driver sends one
-        row per candidate data file (sequence number, scope) and tags
-        each delete file's rows with its own, so the metadata shipped is
-        linear in data files plus delete files. Identity-partition
-        equality columns absent from the data files re-attach from
-        manifest values.
-
-        Scale: cost is one column-pruned scan of candidate files per id
-        set — the minimum any engine pays to apply equality deletes; the
-        join keys are the equality columns, so AQE broadcasts the
-        (typically tiny CDC-key) delete side."""
-        if not eq_entries or not data_entries:
-            return None
-        table = self.get_current_table()
-        by_id = {
-            (f.metadata or {}).get("xtable.fieldId"): f for f in table.read_schema.fields
-        }
-        identity_cols = _identity_columns(table)
-        pv_raw = {
-            e["data_file"]["file_path"]: e["data_file"].get("partition") or {}
-            for e in data_entries
-        }
-        data_scope = {p: _scope_key(part) for p, part in pv_raw.items()}
-        seq_by_path = {e["data_file"]["file_path"]: e["sequence_number"] for e in data_entries}
-
-        groups: dict[tuple, list[dict]] = {}
-        for e in eq_entries:
-            ids = tuple(sorted(e["data_file"].get("equality_ids") or []))
-            if not ids:
-                raise ValueError(
-                    f"equality delete file {e['data_file']['file_path']} has no equality_ids"
-                )
-            groups.setdefault(ids, []).append(e)
-
-        out_parts = []
-        for ids, group in groups.items():
-            fields = []
-            for fid in ids:
-                f = by_id.get(fid)
-                if f is None:
-                    raise ValueError(
-                        f"equality delete references field id {fid} that is not a "
-                        "top-level column; nested equality columns are not supported"
-                    )
-                fields.append(f)
-            cols = [f.name for f in fields]
-            del_scope = [_scope_key(e["data_file"].get("partition")) for e in group]
-            # the rule only widens with delete_seq, so a data file is a
-            # candidate iff the newest delete in its scope or the newest
-            # global one applies to it
-            newest: dict[str, int] = {}
-            for e, scope in zip(group, del_scope):
-                newest[scope] = max(newest.get(scope, e["sequence_number"]), e["sequence_number"])
-            cand = sorted(
-                p
-                for p, seq in seq_by_path.items()
-                if any(
-                    _equality_rule(newest[k], seq, k, data_scope[p])
-                    for k in {_GLOBAL_SCOPE, data_scope[p]}
-                    if k in newest
-                )
-            )
-            if not cand:
-                continue
-            file_fields = [f for f in fields if f.name not in identity_cols]
-            # name mapping: renamed sources' files store physical names,
-            # resolved per distinct footer schema (mixed provenances read
-            # each with their own resolution)
-            part_fields = [f for f in fields if f.name in identity_cols]
-            df = scan_files(
-                self.spark,
-                _scan_groups(self._meta(), T.StructType(file_fields), cand),
-                fields,
-                partition_values={
-                    p: {
-                        f.name: None if pv_raw[p].get(f.name) is None else str(pv_raw[p][f.name])
-                        for f in part_fields
-                    }
-                    for p in cand
-                },
-                file_rows=True,
-            ).withColumnRenamed("_fp", "file_path").withColumnRenamed("_ri", "pos")
-            info = self.spark.createDataFrame(
-                [(p, seq_by_path[p], data_scope[p]) for p in cand],
-                "file_path STRING, _data_seq LONG, _data_scope STRING",
-            )
-            df = df.join(F.broadcast(info), "file_path")
-            del_schema = T.StructType([T.StructField(f.name, f.dataType) for f in fields])
-            del_parts = []
-            for e, scope in zip(group, del_scope):
-                dfile = e["data_file"]
-                _ff.require_parquet(
-                    [(dfile["file_path"], _ff.from_iceberg_manifest(dfile.get("file_format")))],
-                    reader="iceberg equality-delete read",
-                )
-                del_parts.append(
-                    self.spark.read.schema(del_schema)
-                    .parquet(dfile["file_path"])
-                    .withColumn("_del_seq", F.lit(e["sequence_number"]).cast("long"))
-                    .withColumn("_del_scope", F.lit(scope))
-                )
-            dels = del_parts[0]
-            for p in del_parts[1:]:
-                dels = dels.unionByName(p)
-            dels = dels.select(
-                *[F.col(c).alias(f"_del_{c}") for c in cols], "_del_seq", "_del_scope"
-            )
-            cond = _equality_rule(
-                F.col("_del_seq"), F.col("_data_seq"), F.col("_del_scope"), F.col("_data_scope")
-            )
-            for c in cols:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"_del_{c}"))
-            out_parts.append(df.join(dels, cond).select("file_path", "pos"))
-        if not out_parts:
-            return None
-        out = out_parts[0]
-        for p in out_parts[1:]:
-            out = out.unionByName(p)
-        # a row matched by several delete files/rows counts once
-        return out.distinct()
 
     def _write_shadows(self, resolved: dict, data_entries: list[dict]) -> None:
         """Purged shadow files for the data files with applicable deletes,
@@ -563,9 +601,6 @@ class IcebergConversionSource:
             from_iceberg_partition_value,
         )
 
-        by_id = {
-            (f.metadata or {}).get("xtable.fieldId"): f for f in table.read_schema.fields
-        }
         pf_by_name = {pf.output_name: pf for pf in table.partition_fields}
         files = []
         for e in eq_entries:
@@ -575,15 +610,7 @@ class IcebergConversionSource:
                 raise ValueError(
                     f"equality delete file {df['file_path']} has no equality_ids"
                 )
-            cols = []
-            for fid in ids:
-                f = by_id.get(fid)
-                if f is None:
-                    raise ValueError(
-                        f"equality delete references field id {fid} that is not a "
-                        "top-level column; nested equality columns are not supported"
-                    )
-                cols.append(f.name)
+            cols = [f.name for f in equality_fields(table.read_schema, ids)]
             # spec-native manifest partition values -> the engine's
             # serialized strings (the same conversion the inventory uses),
             # so targets re-serialize transform-aware; {} = global delete
@@ -1180,46 +1207,50 @@ def read_iceberg_as_df(
     )
 
 
-def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> DataFrame:
-    """Row-level changes of ONE snapshot as a CDC-shaped DataFrame: the
-    row columns plus `_change_type` (insert / delete) and
-    `_commit_snapshot_id` — the Iceberg member of the CDC-read family
-    (read_delta_cdf / read_hudi_cdc / read_paimon_changelog).
+def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
+    """The row changes of ONE snapshot against its parent
+    (`change_plan.ChangePlan`; no SparkSession), the changelog-scan
+    semantics (Iceberg logs no explicit change files):
 
-    Derivation against the parent snapshot (Iceberg logs no explicit
-    change files; this is the changelog-scan semantics):
     - data files added by the snapshot -> inserts of their visible rows
-      (the snapshot's applicable delete positions excluded);
+      (the snapshot's applicable deletes dropped);
     - data files removed -> deletes of the rows that were visible under
       the PARENT's delete state;
-    - persisting files whose applicable position/equality-delete set
-      widened -> deletes of exactly the newly covered positions (a
-      narrowed set emits the restored rows as inserts).
+    - carried files whose applicable delete set changed -> a position
+      diff: deletes of newly covered rows, inserts of restored ones.
 
-    Iceberg expresses updates as delete+insert pairs, so `update_*`
-    change types never occur here — consumers treat a same-key
-    delete+insert in one snapshot as an update if they key the stream.
-
-    Scale: scans only the files the snapshot touched; delete positions
-    resolve and diff on the driver (metadata-sized, except lowered
-    equality deletes), and no data row reaches the driver."""
-    src = IcebergConversionSource(spark, base_path)
+    Which delete files apply to which data file is decided here, by
+    `position_delete_applies` and `equality_delete_applies`; position
+    deletes are sources (`delete_file_positions` reads them), equality
+    deletes are `equality_source` descriptors that the batch reader
+    resolves by a Spark join and the stream by a value match. Identity
+    partition values come from the manifest; columns resolve by field id
+    or through the name mapping. Refuses a snapshot whose parent has
+    expired and a touched data file that is not parquet; a `replace`
+    snapshot (compaction) plans no changes."""
+    src = IcebergConversionSource(None, base_path)
     meta = src._meta()
     table = src.get_current_table()
     snap = snapshot_by_id(meta, snapshot_id)
     if snap is None:
         raise ValueError(f"no snapshot {snapshot_id} in {base_path}")
+    schema = table.read_schema
+    field_ids = {
+        f.name: (f.metadata or {})["xtable.fieldId"]
+        for f in schema.fields
+        if (f.metadata or {}).get("xtable.fieldId") is not None
+    }
+    nm_raw = (meta.get("properties") or {}).get("schema.name-mapping.default")
+    names_by_id = {m.get("field-id"): m.get("names") or [] for m in json.loads(nm_raw)} if nm_raw else {}
+    columns = {
+        f.name: names_by_id[field_ids[f.name]] + [f.name]
+        for f in schema.fields
+        if field_ids.get(f.name) in names_by_id
+    }
     if (snap.get("summary") or {}).get("operation") == "replace":
         # spec: replace snapshots (compaction/rewrites) change the file
         # layout, never the logical rows — the changelog scan skips them
-        empty_schema = T.StructType(
-            list(table.read_schema.fields)
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_snapshot_id", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame([], empty_schema)
+        return ChangePlan(schema, [], columns, field_ids, None)
     parent = snap.get("parent-snapshot-id")
     if parent is not None and snapshot_by_id(meta, parent) is None:
         # an expired parent would silently turn the whole table into
@@ -1229,66 +1260,126 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
             "its changelog can no longer be derived"
         )
     cur_data, cur_dels = live_entries(meta, snapshot_id)
-    prev_data, prev_dels = (
-        live_entries(meta, parent) if parent is not None else ([], [])
-    )
-    _ff.require_parquet(
-        (
-            (e["data_file"]["file_path"], _ff.from_iceberg_manifest(e["data_file"].get("file_format")))
-            for e in cur_data + prev_data
-        ),
-        reader="read_iceberg_cdc",
-    )
+    prev_data, prev_dels = live_entries(meta, parent) if parent is not None else ([], [])
+    identity = _identity_columns(table)
 
-    part_cols = _identity_columns(table)
-    data_fields = T.StructType([f for f in table.read_schema.fields if f.name not in part_cols])
+    def sources(deletes: list[dict], e: dict) -> tuple:
+        path, seq = e["data_file"]["file_path"], e["sequence_number"]
+        part = e["data_file"].get("partition")
+        out = []
+        for d in deletes:
+            if is_equality_delete(d):
+                if equality_delete_applies(d, seq, part):
+                    out.append(dict(equality_source(d), data_seq=seq, data_scope=_scope_key(part)))
+            elif position_delete_applies(d, seq) and dv_reference(d["data_file"]) in (None, path):
+                out.append(
+                    {"kind": "iceberg_position", "file": {k: d["data_file"].get(k) for k in _POSITION_FILE_KEYS}}
+                )
+        return tuple(out)
 
-    def rows_of(entries, change_type: str, positions: dict, keep: bool = False) -> DataFrame:
-        file_paths = [e["data_file"]["file_path"] for e in entries]
-        return (
-            scan_files(
-                spark,
-                _scan_groups(meta, data_fields, file_paths),
-                table.read_schema.fields,
-                partition_values=_identity_values(entries, part_cols),
-                positions=[(p, positions[p]) for p in file_paths if p in positions],
-                keep=keep,
-            )
-            .withColumn("_change_type", F.lit(change_type))
-            .withColumn("_commit_snapshot_id", F.lit(int(snapshot_id)))
+    def change_file(e: dict, change, drop: tuple, restore=None) -> ChangeFile:
+        df = e["data_file"]
+        part = df.get("partition") or {}
+        return ChangeFile(
+            df["file_path"],
+            _ff.from_iceberg_manifest(df.get("file_format")),
+            change,
+            {c: None if part.get(c) is None else str(part.get(c)) for c in identity},
+            drop,
+            restore,
         )
 
     cur_by_path = {e["data_file"]["file_path"]: e for e in cur_data}
     prev_by_path = {e["data_file"]["file_path"]: e for e in prev_data}
-    added = [e for p, e in cur_by_path.items() if p not in prev_by_path]
-    removed = [e for p, e in prev_by_path.items() if p not in cur_by_path]
-    common = [e for p, e in cur_by_path.items() if p in prev_by_path]
+    files = [change_file(e, "insert", sources(cur_dels, e)) for p, e in cur_by_path.items() if p not in prev_by_path]
+    for p, e in prev_by_path.items():
+        if p not in cur_by_path:
+            files.append(change_file(e, "delete", sources(prev_dels, e)))
+        else:
+            now, before = sources(cur_dels, cur_by_path[p]), sources(prev_dels, e)
+            if now != before:
+                files.append(change_file(cur_by_path[p], None, now, before))
+    _ff.require_parquet(((f.path, f.fmt) for f in files), reader="iceberg change read")
+    return ChangePlan(schema, files, columns, field_ids, None)
 
-    cur_pos = src._resolve_deletes(cur_data, cur_dels)
-    prev_pos = src._resolve_deletes(prev_data, prev_dels)
 
-    parts: list[DataFrame] = []
-    if added:
-        parts.append(rows_of(added, "insert", cur_pos))
-    if removed:
-        parts.append(rows_of(removed, "delete", prev_pos))
-    if common:
-        common_paths = {e["data_file"]["file_path"] for e in common}
-        cur_common = {f: pos for f, pos in cur_pos.items() if f in common_paths}
-        prev_common = {f: pos for f, pos in prev_pos.items() if f in common_paths}
-        newly = positions_minus(cur_common, prev_common)
-        restored = positions_minus(prev_common, cur_common)
-        if newly:
-            parts.append(rows_of(common, "delete", newly, keep=True))
-        if restored:
-            parts.append(rows_of(common, "insert", restored, keep=True))
-    if not parts:
-        out_fields = list(table.read_schema.fields) + [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_commit_snapshot_id", T.LongType()),
-        ]
-        return spark.createDataFrame([], T.StructType(out_fields))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
+def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> DataFrame:
+    """Row-level changes of ONE snapshot as a CDC-shaped DataFrame: the
+    row columns plus `_change_type` (insert / delete) and
+    `_commit_snapshot_id` — the Iceberg member of the CDC-read family
+    (read_delta_cdf / read_hudi_cdc / read_paimon_changelog), reading the
+    rows `plan_changes` plans.
+
+    Iceberg expresses updates as delete+insert pairs, so `update_*`
+    change types never occur here — consumers treat a same-key
+    delete+insert in one snapshot as an update if they key the stream.
+
+    Scale: scans only the files the snapshot touched; position deletes
+    resolve and diff on the driver (each delete file read once), lowered
+    equality deletes by one Spark join per side, and no data row reaches
+    the driver."""
+    plan = plan_changes(base_path, snapshot_id)
+    src = IcebergConversionSource(spark, base_path)
+    meta = src._meta()
+    table = src.get_current_table()
+    identity = _identity_columns(table)
+    data_fields = T.StructType([f for f in plan.schema.fields if f.name not in identity])
+    values = {f.path: f.partition_values for f in plan.files}
+    cache: dict = {}
+
+    def resolve(pairs: list) -> dict:
+        """Positions of position sources, plus equality deletes lowered
+        by `equality_positions_df` (each call is one side of the commit,
+        so the sequence rule sees one snapshot's delete set)."""
+        out = read_positions(pairs, cache)
+        eq = {
+            path: [s for s in sources if s["kind"] == "equality"] for path, sources in pairs
+        }
+        eq = {path: found for path, found in eq.items() if found}
+        if eq:
+            lowered = equality_positions_df(
+                spark,
+                meta,
+                table,
+                [s for found in eq.values() for s in found],
+                {path: (found[0]["data_seq"], found[0]["data_scope"], values[path]) for path, found in eq.items()},
+            )
+            if lowered is not None:
+                for path, pos in _positions_by_file(lowered.toArrow()).items():
+                    out[path] = np.union1d(out.get(path, np.empty(0, np.int64)), pos)
+        return out
+
+    def scan(files, extra, positions, keep) -> DataFrame:
+        paths = [f.path for f in files]
+        return scan_files(
+            spark,
+            _scan_groups(meta, data_fields, paths),
+            plan.schema.fields,
+            partition_values={p: values[p] for p in paths} if identity else None,
+            positions=positions,
+            keep=keep,
+        )
+
+    return read_changes(
+        spark,
+        plan,
+        scan,
+        resolve,
+        T.StructField("_commit_snapshot_id", T.LongType()),
+        snapshot_id,
+    )
+
+
+def snapshot_data_bytes(snapshot: dict) -> int:
+    """Planned data bytes of one snapshot from its summary
+    (added-files-size + removed-files-size, the standard Iceberg summary
+    keys — the engine's own target writes them). Snapshots without size
+    summaries count 0 (best-effort pacing)."""
+    summary = snapshot.get("summary") or {}
+    total = 0
+    for key in ("added-files-size", "removed-files-size"):
+        try:
+            total += int(summary.get(key) or 0)
+        except (TypeError, ValueError):
+            pass
+    return total

@@ -47,7 +47,6 @@ from typing import Any, Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from incubator_xtable_spark.model import schema_meta
@@ -71,6 +70,7 @@ from incubator_xtable_spark.model.paimon_binary import (
     decode_long_array,
 )
 from incubator_xtable_spark.model.stat_codec import encode_stat
+from incubator_xtable_spark.sources.change_plan import ChangeFile, ChangePlan, read_changes
 
 DEFAULT_PARTITION_NAME = "__DEFAULT_PARTITION__"  # CoreOptions partition.default-name
 
@@ -1087,30 +1087,39 @@ def read_paimon_as_df(
     # on parquet row indexes)
     return _scan_entries(
         spark,
-        src,
-        sch,
-        entries,
-        paths,
+        src._partition_ctx(sch)[0],
+        _entry_partition_values(src, sch, entries, paths),
         table.read_schema,
         "read_paimon_as_df",
         positions=[(p, src._dv_positions(m)) for p, m in src._dv_items(dv)],
     )
 
 
+def _entry_partition_values(
+    src: "PaimonConversionSource", sch: dict, entries: list[dict], paths: list[str]
+) -> dict[str, dict]:
+    """{path: {partition key: value string}} of manifest ``entries``."""
+    keys, codecs, dtypes = src._partition_ctx(sch)
+    options = sch.get("options") or {}
+    return {
+        p: (src._decode_partition(e["_PARTITION"], keys, codecs, dtypes, options)[0] or {})
+        for e, p in zip(entries, paths)
+    }
+
+
 def _scan_entries(
     spark: SparkSession,
-    src: "PaimonConversionSource",
-    sch: dict,
-    entries: list[dict],
-    paths: list[str],
+    keys: list[str],
+    values: dict[str, dict],
     schema: T.StructType,
     reader: str,
     positions=None,
 ) -> DataFrame:
-    """Scan the data or changelog files of manifest ``entries`` (at
-    ``paths``) as ``schema`` through `file_scan.scan_files`. Paimon
-    identifies a file's format purely by suffix (`file.format`; mixed
-    formats across commits are legal after a format migration), so
+    """Scan the data or changelog files ``values`` lists (path ->
+    partition values of the ``keys``) as ``schema`` through
+    `file_scan.scan_files`. Paimon identifies a file's format purely by
+    suffix (`file.format`; mixed formats across commits are legal after
+    a format migration), so
     branches split by suffix and unknown suffixes refuse loudly. Native
     Paimon files store the full row INCLUDING partition columns (the
     hive-style dirs are layout only), but EXTERNAL files from a
@@ -1127,34 +1136,86 @@ def _scan_entries(
     from incubator_xtable_spark.sources.file_scan import scan_files, stored_column_groups
 
     pq_paths, orc_paths, avro_paths = split_readable(
-        ((p, from_extension(p)) for p in paths), reader=reader
+        ((p, from_extension(p)) for p in values), reader=reader
     )
     files = (
         [(p, PARQUET) for p in pq_paths]
         + [(p, APACHE_ORC) for p in orc_paths]
         + [(p, APACHE_AVRO) for p in avro_paths]
     )
-    keys, codecs, dtypes = src._partition_ctx(sch)
-    options = sch.get("options") or {}
-    partition_values = (
-        {
-            p: src._decode_partition(e["_PARTITION"], keys, codecs, dtypes, options)[0] or {}
-            for e, p in zip(entries, paths)
-        }
-        if keys
-        else None
-    )
     return scan_files(
         spark,
         stored_column_groups(files, schema, keys),
         schema.fields,
-        partition_values=partition_values,
+        partition_values=values if keys else None,
         positions=positions,
     )
 
 
-# RowKind ordinal -> Delta-CDF-style change type string
-_CHANGE_TYPES = {0: "insert", 1: "update_preimage", 2: "update_postimage", 3: "delete"}
+def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
+    """The row changes of ONE snapshot (`change_plan.ChangePlan`; no
+    SparkSession), in order:
+
+    1. the snapshot's changelogManifestList (changelog-producer=
+       input/lookup/full-compaction): changelog data files store the
+       RowKind as a leading `_VALUE_KIND` tinyint column;
+    2. a COMPACT snapshot rewrites the layout, never the logical rows:
+       no changes;
+    3. for append-only tables' APPEND commits with no changelog
+       manifests, the delta data files themselves (every row an insert —
+       Paimon's own fallback for changelog-producer=none).
+
+    Otherwise refuses: PK deltas without a changelog producer are
+    compaction artifacts, not row changes. Partition values come from
+    the manifest entries, for files that do not store the columns."""
+    from incubator_xtable_spark.model.file_formats import from_extension
+
+    src = PaimonConversionSource(None, base_path)
+    snap = src._snapshot(snapshot_id)
+    sch = src._schema(snap.get("schemaId", 0))
+    schema = paimon_fields_to_schema(sch["fields"])
+    cl_list = snap.get("changelogManifestList")
+    entries = [
+        e for e in (src._entries_for_lists([cl_list]) if cl_list else []) if e["_KIND"] == FILE_KIND_ADD
+    ]
+    change = "_VALUE_KIND"
+    if not entries:
+        if snap.get("commitKind") == "COMPACT":
+            return ChangePlan(schema, [], {}, {}, None)
+        if sch.get("primaryKeys") or snap.get("commitKind") != "APPEND":
+            raise ValueError(
+                f"snapshot {snapshot_id} has no changelog manifests and its "
+                "delta files are not row changes (PK table or non-APPEND "
+                "commit); enable a changelog producer on the source table"
+            )
+        entries = [
+            e
+            for e in src._entries_for_lists([snap.get("deltaManifestList") or ""])
+            if e["_KIND"] == FILE_KIND_ADD
+        ]
+        change = "insert"
+    paths = [src._entry_abs_path(e, sch) for e in entries]
+    values = _entry_partition_values(src, sch, entries, paths)
+    files = [ChangeFile(p, from_extension(p), change, values[p], (), None) for p in paths]
+    return ChangePlan(schema, files, {}, {}, None)
+
+
+def snapshot_data_bytes(base_path: str, snapshot_id: int) -> int:
+    """Planned data bytes of one snapshot: _FILE_SIZE over its changelog
+    (or delta) manifests' ADD entries — metadata-sized avro reads only.
+    Missing/expired snapshots count 0 (planning raises the real expiry
+    error with context)."""
+    src = PaimonConversionSource(None, base_path)
+    try:
+        snap = src._snapshot(snapshot_id)
+    except (OSError, ValueError):
+        return 0
+    lists = [snap.get("changelogManifestList") or snap.get("deltaManifestList") or ""]
+    return sum(
+        int(e["_FILE"]["_FILE_SIZE"] or 0)
+        for e in src._entries_for_lists([l for l in lists if l])
+        if e["_KIND"] == FILE_KIND_ADD
+    )
 
 
 def read_paimon_changelog(
@@ -1162,104 +1223,33 @@ def read_paimon_changelog(
 ) -> DataFrame:
     """Row-level changes of ONE commit as a CDC-shaped DataFrame: the row
     columns plus `_change_type` (insert / update_preimage /
-    update_postimage / delete) and `_commit_snapshot_id`.
-
-    Source of truth, in order:
-    1. the snapshot's changelogManifestList (changelog-producer=
-       input/lookup/full-compaction) — changelog data files store the
-       RowKind as a leading `_VALUE_KIND` tinyint column;
-    2. for append-only tables' APPEND commits with no changelog
-       manifests, the delta data files themselves (every row an insert —
-       Paimon's own fallback for changelog-producer=none);
-    otherwise raises: PK deltas without a changelog producer are
-    compaction artifacts, not row changes.
+    update_postimage / delete) and `_commit_snapshot_id`, reading the
+    rows `plan_changes` plans.
 
     Scale: one distributed parquet scan over the commit's changelog
     files; no driver rows. Feeds Structured Streaming / CDC pipelines a
     per-commit micro-batch (pair with get_commits_backlog for the
     commit cursor).
     """
-    src = PaimonConversionSource(spark, base_path)
-    snap = src._snapshot(snapshot_id)
-    sch = src._schema(snap.get("schemaId", 0))
-    table = src.get_table(snapshot_id)
-    data_cols = [f.name for f in table.read_schema.fields]
+    plan = plan_changes(base_path, snapshot_id)
+    src = PaimonConversionSource(None, base_path)
+    keys = src._partition_ctx(src._schema(src._snapshot(snapshot_id).get("schemaId", 0)))[0]
 
-    cl_list = snap.get("changelogManifestList")
-    cl_entries = [
-        e
-        for e in (src._entries_for_lists([cl_list]) if cl_list else [])
-        if e["_KIND"] == FILE_KIND_ADD
-    ]
-    if cl_entries:
-        read_schema = T.StructType(
-            [T.StructField("_VALUE_KIND", T.ByteType(), True)]
-            + list(table.read_schema.fields)
-        )
-        df = _scan_entries(
+    def scan(files, extra, positions, keep) -> DataFrame:
+        return _scan_entries(
             spark,
-            src,
-            sch,
-            cl_entries,
-            [src._entry_abs_path(e, sch) for e in cl_entries],
-            read_schema,
+            keys,
+            {f.path: f.partition_values for f in files},
+            T.StructType(extra + list(plan.schema.fields)),
             "read_paimon_changelog",
-        )
-        mapping = F.create_map(
-            *[x for k, v in _CHANGE_TYPES.items() for x in (F.lit(k), F.lit(v))]
-        )
-        return df.select(
-            *data_cols,
-            mapping[F.col("_VALUE_KIND").cast("int")].alias("_change_type"),
-            F.lit(int(snapshot_id)).alias("_commit_snapshot_id"),
+            positions=positions,
         )
 
-    if snap.get("commitKind") == "COMPACT":
-        # compaction rewrites the layout, never the logical rows — the
-        # changelog of a COMPACT snapshot is empty by definition
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                list(table.read_schema.fields)
-                + [
-                    T.StructField("_change_type", T.StringType()),
-                    T.StructField("_commit_snapshot_id", T.LongType()),
-                ]
-            ),
-        )
-    if sch.get("primaryKeys") or snap.get("commitKind") != "APPEND":
-        raise ValueError(
-            f"snapshot {snapshot_id} has no changelog manifests and its "
-            "delta files are not row changes (PK table or non-APPEND "
-            "commit); enable a changelog producer on the source table"
-        )
-    entries = [
-        e
-        for e in src._entries_for_lists([snap.get("deltaManifestList") or ""])
-        if e["_KIND"] == FILE_KIND_ADD
-    ]
-    if not entries:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                list(table.read_schema.fields)
-                + [
-                    T.StructField("_change_type", T.StringType(), True),
-                    T.StructField("_commit_snapshot_id", T.LongType(), False),
-                ]
-            ),
-        )
-    df = _scan_entries(
+    return read_changes(
         spark,
-        src,
-        sch,
-        entries,
-        [src._entry_abs_path(e, sch) for e in entries],
-        table.read_schema,
-        "read_paimon_changelog",
-    )
-    return df.select(
-        *data_cols,
-        F.lit("insert").alias("_change_type"),
-        F.lit(int(snapshot_id)).alias("_commit_snapshot_id"),
+        plan,
+        scan,
+        lambda pairs: {},
+        T.StructField("_commit_snapshot_id", T.LongType()),
+        snapshot_id,
     )

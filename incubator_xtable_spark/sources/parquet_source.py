@@ -15,7 +15,9 @@ them paid seconds of fixed per-job cost at every size.
 - schema: ``footer_schema`` merges the files' schemas and maps them to
   Spark types the way Spark's schema-merging Parquet read does, partition
   columns appended as Spark's partition discovery infers them;
-- partition values: ``model/hive_partitions`` over each file's path;
+- partition values: ``model/hive_partitions`` over each file's path; a
+  source constructed without ``partition_fields`` takes the hive columns
+  the paths name as VALUE partition fields;
 - stats: ``_footer_stat_rows`` over the same ``FileMetaData``.
 """
 
@@ -76,6 +78,7 @@ class _Footers(NamedTuple):
     schema: T.StructType
     partition_values: dict
     stats: dict  # path -> (record_count, column_stats)
+    hive_columns: list  # the columns the paths' col=value segments name
 
 
 class ParquetConversionSource:
@@ -106,14 +109,20 @@ class ParquetConversionSource:
         if self._schema_cache is None or self._schema_cache[0] != key:
             self._schema_cache = (key, self._read_footers(files))
         footers = self._schema_cache[1]
+        # undeclared partition fields: the hive columns the paths name,
+        # as VALUE fields (a partition-shaped directory read flat would
+        # convert its partition column as a data column no file stores)
+        partition_fields = self.partition_fields or [
+            InternalPartitionField(c) for c in footers.hive_columns
+        ]
         table = InternalTable(
             name=self.name,
             table_format=TableFormat.PARQUET,
             base_path=self.base_path,
             read_schema=footers.schema,
-            partition_fields=self.partition_fields,
+            partition_fields=partition_fields,
             layout_strategy=DataLayoutStrategy.HIVE_STYLE_PARTITION
-            if self.partition_fields
+            if partition_fields
             else DataLayoutStrategy.FLAT,
             latest_commit_time_ms=max((mtime for _, _, mtime in files), default=None),
         )
@@ -130,7 +139,10 @@ class ParquetConversionSource:
         types_by_name = {f.name: f.dataType for f in schema.fields if f.name not in part_cols}
         stats = _footer_stat_rows(zip(paths, footers), types_by_name)
         return _Footers(
-            schema, dict(zip(paths, part_values)), {p: (rc, cs) for p, rc, cs in stats}
+            schema,
+            dict(zip(paths, part_values)),
+            {p: (rc, cs) for p, rc, cs in stats},
+            list(part_schema.names),
         )
 
     # -- table -------------------------------------------------------------

@@ -5,8 +5,9 @@ def register_stream_sources(spark) -> list[str]:
     source registry — one call instead of four. Returns the format
     names: spark.readStream.format(<name>).option("path", dir).load().
 
-    Formats: delta_cdf, iceberg_cdc, hudi_cdc, paimon_changelog (see
-    each module's docstring for offsets, options and boundaries).
+    Formats: delta_cdf, iceberg_cdc, hudi_cdc, paimon_changelog, all
+    read by the one reader in change_feed.py (see each format module's
+    docstring for offsets, options and boundaries).
     Re-registration in the same session is a no-op."""
     from incubator_xtable_spark.streaming.cdf_datasource import DeltaCDFDataSource
     from incubator_xtable_spark.streaming.hudi_cdc_datasource import HudiCDCDataSource

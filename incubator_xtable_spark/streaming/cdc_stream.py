@@ -83,9 +83,11 @@ def _commits_after(
         return [str(s) for s in range(floor + 1, latest + 1)]
     if fmt == "ICEBERG":
         from incubator_xtable_spark.model.iceberg_manifests import snapshot_by_id
-        from incubator_xtable_spark.streaming.iceberg_cdc_datasource import _py_meta
+        from incubator_xtable_spark.targets.iceberg_target import read_table_metadata
 
-        meta = _py_meta(base_path)
+        meta = read_table_metadata(base_path)
+        if meta is None:
+            raise ValueError(f"not an iceberg table: {base_path}")
         chain: list[str] = []
         cur = snapshot_by_id(meta, meta.get("current-snapshot-id"))
         stop = int(after) if after is not None else None
@@ -217,13 +219,11 @@ def run_cdc_stream(
       processing-time trigger: poll every ``interval_seconds``
       (``max_ticks`` bounds the loop for tests).
 
-    A true ``spark.readStream`` source is deliberately NOT used: the
-    Python data-source stream reader executes in a worker process with
-    no SparkSession, so each commit's CDC read (a distributed Spark
-    plan over only that commit's touched files) could not run there —
-    rows would have to funnel through a single Python process, which is
-    exactly the scan this surface avoids. This driver keeps each batch
-    a lazy, fully distributed DataFrame.
+    Each batch here is the batch reader's lazy, distributed DataFrame
+    (a Spark plan over only that commit's touched files). The
+    ``spark.readStream`` sources (`streaming/change_feed.py`) read the
+    same per-commit plans with pyarrow on executors instead, since a
+    Python data-source reader has no SparkSession.
 
     Returns the final cursor (also durable in ``checkpoint_dir``).
     """

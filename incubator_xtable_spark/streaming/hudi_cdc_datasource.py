@@ -1,28 +1,19 @@
-"""`spark.readStream.format("hudi_cdc")` — Structured-Streaming CDC
-source for Hudi tables (Python Data Source API).
+"""`spark.readStream.format("hudi_cdc")` — Hudi row changes as a
+Structured-Streaming source (Python Data Source API), read by the one
+change-feed reader in streaming/change_feed.py.
 
-Third member of the readStream family (delta_cdf / iceberg_cdc),
-enabled by r6's pure-python codecs: offsets are completed timeline
-instants (lexicographic timestamps — naturally ordered, unlike Iceberg
-snapshot ids), planning reads commit metadata JSON pure-python, and
-each partition decodes executor-side:
+Offsets are completed timeline instants ({"instant": ts}; lexicographic,
+naturally ordered); option `startingInstant` emits the instants after
+it. Rows are the ones `hudi_source.plan_changes` plans: CDC supplemental
+log files named by cdcStats (hoodie.table.cdc.enabled writers and this
+engine's HudiConversionTarget(change_feed=True)) decode executor-side,
+and an adds-only commit streams its base files' rows as inserts.
 
-- CDC supplemental log files named by cdcStats (what
-  hoodie.table.cdc.enabled writers and this engine's
-  HudiConversionTarget(change_feed=True) produce): framed
-  CDC_DATA_BLOCKs whose {op, before, after} Avro records decode typed
-  through model/avro_codec — no JVM anywhere;
-- insert-only commits without cdcStats (action=commit, no
-  replacements): each added base parquet's rows stream as inserts via
-  pyarrow — the same all-inserts derivation the batch read applies to
-  first commits.
-
-Boundary (documented, loud): commits that REWRITE state without CDC
-logging — replacecommits, MOR deltacommits, upsert rewrites — need the
-before/after effective-representation diff, a Spark-native join the
-per-file source does not re-implement. Planning raises and points at
-(a) enabling CDC logging on the writer (hudiChangeFeed /
-hoodie.table.cdc.enabled — exactly what real Hudi's CDC query requires)
+Boundary (documented, loud): a commit that REWRITES state without CDC
+logging (replacecommit, MOR deltacommit, upsert rewrite) needs the
+before/after effective-representation diff, a Spark join the batch
+`read_hudi_cdc` runs and the stream refuses, pointing at (a) enabling
+CDC logging on the writer (hudiChangeFeed / hoodie.table.cdc.enabled)
 or (b) streaming/cdc_stream.run_cdc_stream, whose batches run the
 engine's full derivation.
 
@@ -32,258 +23,16 @@ then  spark.readStream.format("hudi_cdc").option("path", p).load().
 
 from __future__ import annotations
 
-import json
-import os
-from typing import Optional
-
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 
-from incubator_xtable_spark.streaming.cdf_datasource import _arrow_type
+from incubator_xtable_spark.streaming.change_feed import ChangeFeedSource
 
 
-def _table_schema(base_path: str) -> T.StructType:
-    """Latest commit's schema (dual Avro/StructType shapes) — pure."""
-    from incubator_xtable_spark.model.hudi_ids import parse_schema_json
-    from incubator_xtable_spark.targets.hudi_target import (
-        list_completed_instants,
-        read_commit_metadata,
-    )
-
-    for instant, action in reversed(list_completed_instants(base_path)):
-        raw = (
-            read_commit_metadata(base_path, instant, action).get("extraMetadata") or {}
-        ).get("schema")
-        if raw:
-            schema, _ = parse_schema_json(raw)
-            if schema is not None:
-                return schema
-    raise ValueError(f"no commit schema found in {base_path}/.hoodie")
-
-
-def _plan_instant(base_path: str, instant: str, action: str) -> list[dict]:
-    from incubator_xtable_spark.targets.hudi_target import read_commit_metadata
-
-    meta = read_commit_metadata(base_path, instant, action)
-    stats = [
-        st
-        for stats_list in (meta.get("partitionToWriteStats") or {}).values()
-        for st in stats_list
-    ]
-    cdc_paths = [p for st in stats for p in (st.get("cdcStats") or {})]
-    if cdc_paths:
-        return [{"kind": "cdc", "path": p} for p in cdc_paths]
-    log_stats = [st for st in stats if not (st.get("path") or "").endswith(".parquet")]
-    rewrites = [
-        st
-        for st in stats
-        if st.get("prevCommit") not in (None, "null")
-        or int(st.get("numUpdateWrites") or 0) > 0
-        or int(st.get("numDeletes") or 0) > 0
-    ]
-    if (
-        action == "commit"
-        and not meta.get("partitionToReplaceFileIds")
-        and not log_stats
-        and not rewrites  # a COW upsert rewrites a file GROUP — its new
-        # file version is not all-inserts (prevCommit names the rewritten
-        # base; numUpdateWrites/numDeletes count the mutated rows)
-    ):
-        # adds-only commit: every added file's rows are inserts
-        return [
-            {"kind": "rows", "path": st["path"]}
-            for st in stats
-            if st.get("path")
-        ]
-    raise ValueError(
-        f"instant {instant} ({action}) rewrites state without CDC logging; "
-        "hudi_cdc cannot derive its row changes per file. Enable CDC "
-        "supplemental logging on the writer (hudiChangeFeed / "
-        "hoodie.table.cdc.enabled — what Hudi's own CDC query requires) "
-        "or consume via streaming.cdc_stream.run_cdc_stream"
-    )
-
-
-def _instant_data_bytes(base_path: str, instant: str, action: str) -> int:
-    """Planned data bytes of one instant from its commit metadata: write
-    stats' fileSizeInBytes plus CDC supplemental file sizes."""
-    from incubator_xtable_spark.targets.hudi_target import read_commit_metadata
-
-    try:
-        meta = read_commit_metadata(base_path, instant, action)
-    except OSError:
-        return 0
-    total = 0
-    for stats in (meta.get("partitionToWriteStats") or {}).values():
-        for st in stats:
-            total += int(st.get("fileSizeInBytes") or 0)
-            for sz in (st.get("cdcStats") or {}).values():
-                total += int(sz or 0)
-    return total
-
-
-class _Part(InputPartition):
-    def __init__(self, payload: str) -> None:
-        self.payload = payload
-
-
-class HudiCDCStreamReader(DataSourceStreamReader):
-    def __init__(self, schema: T.StructType, options: dict) -> None:
-        self.base_path = (options.get("path") or "").rstrip("/")
-        if not self.base_path:
-            raise ValueError("hudi_cdc requires .option('path', <table dir>)")
-        self.starting = options.get("startinginstant", options.get("startingInstant"))
-        # best-effort micro-batch pacing; see cdf_datasource for the
-        # floor-tracking contract and its restart caveat
-        from incubator_xtable_spark.streaming.pacing import read_pacing_options
-
-        self.max_per_trigger, self.max_bytes_per_trigger = read_pacing_options(options)
-        self._size_cache: dict = {}  # completed-commit bytes are immutable
-        self._floor = self.starting
-        self.table_schema = _table_schema(self.base_path)
-
-    def initialOffset(self) -> dict:
-        return {"instant": self.starting}
-
-    def latestOffset(self) -> dict:
-        from incubator_xtable_spark.streaming.pacing import memoized_sizer, paced_head
-        from incubator_xtable_spark.targets.hudi_target import list_completed_instants
-
-        completed = list_completed_instants(self.base_path)
-        instants = [i for i, _ in completed]
-        actions = dict(completed)
-        latest = instants[-1] if instants else self.starting
-        if (self.max_per_trigger is not None or self.max_bytes_per_trigger is not None) and instants:
-            ahead = [i for i in instants if self._floor is None or i > self._floor]
-            head = paced_head(
-                ahead,
-                memoized_sizer(self._size_cache, lambda i: _instant_data_bytes(self.base_path, i, actions[i])),
-                self.max_per_trigger,
-                self.max_bytes_per_trigger,
-            )
-            latest = head if head is not None else self._floor
-        if latest is not None and (self._floor is None or latest > self._floor):
-            self._floor = latest
-        return {"instant": latest}
-
-    def partitions(self, start: dict, end: dict):
-        from incubator_xtable_spark.targets.hudi_target import list_completed_instants
-
-        floor = start.get("instant")
-        if end.get("instant") is not None and (
-            self._floor is None or end["instant"] > self._floor
-        ):
-            self._floor = end["instant"]
-        ceil = end.get("instant")
-        parts = []
-        for instant, action in list_completed_instants(self.base_path):
-            if floor is not None and instant <= floor:
-                continue
-            if ceil is not None and instant > ceil:
-                continue
-            for u in _plan_instant(self.base_path, instant, action):
-                payload = dict(
-                    u,
-                    instant=instant,
-                    base=self.base_path,
-                    schema_json=self.table_schema.jsonValue(),
-                )
-                parts.append(_Part(json.dumps(payload)))
-        return parts or [_Part(json.dumps({"kind": "empty"}))]
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def read(self, partition: _Part):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        u = json.loads(partition.payload)
-        if u.get("kind") == "empty":
-            return iter(())
-        schema = T.StructType.fromJson(u["schema_json"])
-        cols = [f.name for f in schema.fields]
-        instant = u["instant"]
-
-        if u["kind"] == "rows":
-            tbl = pq.read_table(os.path.join(u["base"], u["path"]))
-            out_arrays, out_names = [], []
-            for f in schema.fields:
-                if f.name in tbl.column_names:
-                    out_arrays.append(tbl.column(f.name).combine_chunks())
-                else:
-                    out_arrays.append(pa.nulls(len(tbl), _arrow_type(f.dataType)))
-                out_names.append(f.name)
-            out_arrays.append(pa.array(["insert"] * len(tbl), type=pa.string()))
-            out_names.append("_change_type")
-            out_arrays.append(pa.array([instant] * len(tbl), type=pa.string()))
-            out_names.append("_commit_instant")
-            yield pa.RecordBatch.from_arrays(out_arrays, out_names)
-            return
-
-        # cdc supplemental file: typed avro decode, {op, before, after}
-        from incubator_xtable_spark.sources.hudi_log import (
-            block_records,
-            read_log_blocks,
-        )
-
-        rows: list[tuple] = []
-        for block in read_log_blocks(os.path.join(u["base"], u["path"])):
-            kind, records = block_records(None, block)
-            if kind != "cdc":
-                continue
-            for r in records:
-                op = r.get("op")
-                before, after = r.get("before"), r.get("after")
-                if op == "i" and after is not None:
-                    rows.append(tuple(after.get(c) for c in cols) + ("insert",))
-                elif op == "d" and before is not None:
-                    rows.append(tuple(before.get(c) for c in cols) + ("delete",))
-                elif op == "u":
-                    if before is not None:
-                        rows.append(
-                            tuple(before.get(c) for c in cols) + ("update_preimage",)
-                        )
-                    if after is not None:
-                        rows.append(
-                            tuple(after.get(c) for c in cols) + ("update_postimage",)
-                        )
-        if not rows:
-            return
-        out_arrays, out_names = [], []
-        for i, f in enumerate(schema.fields):
-            out_arrays.append(
-                pa.array([r[i] for r in rows], type=_arrow_type(f.dataType))
-            )
-            out_names.append(f.name)
-        out_arrays.append(pa.array([r[-1] for r in rows], type=pa.string()))
-        out_names.append("_change_type")
-        out_arrays.append(pa.array([instant] * len(rows), type=pa.string()))
-        out_names.append("_commit_instant")
-        yield pa.RecordBatch.from_arrays(out_arrays, out_names)
-
-
-class HudiCDCDataSource(DataSource):
+class HudiCDCDataSource(ChangeFeedSource):
     """spark.readStream.format("hudi_cdc").option("path", dir).load()"""
+
+    commit_column = T.StructField("_commit_instant", T.StringType())
 
     @classmethod
     def name(cls) -> str:
         return "hudi_cdc"
-
-    def schema(self) -> T.StructType:
-        schema = _table_schema((self.options.get("path") or "").rstrip("/"))
-        fields = [T.StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
-        return T.StructType(
-            fields
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_instant", T.StringType()),
-            ]
-        )
-
-    def streamReader(self, schema: T.StructType) -> HudiCDCStreamReader:
-        return HudiCDCStreamReader(schema, dict(self.options))

@@ -306,7 +306,7 @@ class PaimonConversionTarget:
         df = self._row_changes
         if df is None or df.isEmpty():
             return None
-        # inverse of sources/paimon_source._CHANGE_TYPES (RowKind bytes)
+        # inverse of sources/change_plan.CHANGE_TYPES (RowKind bytes)
         kind_map = F.create_map(
             F.lit("insert"), F.lit(0),
             F.lit("update_preimage"), F.lit(1),

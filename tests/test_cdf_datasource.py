@@ -287,8 +287,10 @@ def test_max_commits_per_trigger_bounded_catch_up(spark, tmp_path):
 
 
 def test_starting_timestamp_option(spark, tmp_path):
-    """startingTimestamp resolves to the first commit at/after it
-    (commitInfo.timestamp); epoch-millis and ISO forms both work."""
+    """startingTimestamp resolves to the first commit whose commit
+    timestamp (`delta_source.commit_timestamps`) is at/after it; the
+    engine's commits carry the bound as commitInfo.timestamp, and
+    epoch-millis and ISO forms both work."""
     import json as _json
     import time as _time
 
@@ -336,3 +338,52 @@ def test_starting_timestamp_option(spark, tmp_path):
     )
     q2.awaitTermination(300)
     assert spark.sql("select * from cdf_ts2").count() == 0
+
+
+def test_starting_timestamp_follows_in_commit_timestamps(spark, tmp_path):
+    """A log whose inCommitTimestamp differs from commitInfo.timestamp:
+    startingTimestamp resolves by the in-commit timestamp, the same
+    commit-timestamp rule timestamp time travel uses."""
+    import json as _json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path / "ict")
+    log = os.path.join(base, "_delta_log")
+    os.makedirs(log)
+    schema = {"type": "struct", "fields": [{"name": "id", "type": "long", "nullable": True, "metadata": {}}]}
+    # (in-commit timestamp, commitInfo.timestamp): the two orders disagree
+    stamps = [(1000, 5000), (2000, 500)]
+    for v, (ict, ts) in enumerate(stamps):
+        rel = f"f{v}.parquet"
+        pq.write_table(pa.table({"id": pa.array([2 * v, 2 * v + 1], pa.int64())}), os.path.join(base, rel))
+        actions = [{"commitInfo": {"inCommitTimestamp": ict, "timestamp": ts, "operation": "WRITE"}}]
+        if v == 0:
+            actions += [
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 7, "writerFeatures": ["inCommitTimestamp"]}},
+                {"metaData": {"id": "ict", "format": {"provider": "parquet", "options": {}},
+                              "schemaString": _json.dumps(schema), "partitionColumns": [],
+                              "configuration": {"delta.enableInCommitTimestamps": "true"}}},
+            ]
+        actions.append({"add": {"path": rel, "partitionValues": {}, "size": os.path.getsize(os.path.join(base, rel)),
+                                "modificationTime": ict, "dataChange": True}})
+        with open(os.path.join(log, f"{v:020d}.json"), "w") as fh:
+            fh.write("\n".join(_json.dumps(a) for a in actions) + "\n")
+    _register(spark)
+    df = (
+        spark.readStream.format("delta_cdf")
+        .option("path", base)
+        .option("startingTimestamp", "1500")
+        .load()
+    )
+    q = (
+        df.writeStream.format("memory")
+        .queryName("cdf_ict")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    rows = sorted((r["id"], r["_commit_version"]) for r in spark.sql("select * from cdf_ict").collect())
+    assert rows == [(2, 1), (3, 1)]

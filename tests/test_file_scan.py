@@ -92,6 +92,28 @@ def test_change_reader_partition_values_match_snapshot(spark, tmp_path, fmt):
     assert rows(_change_rows(spark, fmt, d)) == rows(read_snapshot(spark, d))
 
 
+@pytest.mark.parametrize("naming", ["per_partition", "same_name"])
+@pytest.mark.parametrize("fmt", sorted(_TARGETS))
+def test_undeclared_hive_partitions_read_back(spark, tmp_path, fmt, naming):
+    """A hive-partitioned parquet directory synced without declaring
+    `partition_fields`: the source takes the hive columns the paths name
+    as partition fields, so every snapshot reader gives the values Spark
+    reads from the paths, also when each partition's file has the same
+    name."""
+    d = str(tmp_path / "hive")
+    for p, ids in ((3, [1, 2]), (7, [11, 12])):
+        os.makedirs(os.path.join(d, f"p={p}"))
+        name = f"part-{p}.parquet" if naming == "per_partition" else "part-0.parquet"
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), os.path.join(d, f"p={p}", name))
+    table_format, make_target, read_snapshot = _TARGETS[fmt]
+    res = ConversionController().sync(
+        ParquetConversionSource(spark, d, name="t"), {table_format: make_target(spark, d)}
+    )[table_format]
+    assert res.status == SyncStatusCode.SUCCESS, res.error
+    got = sorted((r["id"], r["p"]) for r in read_snapshot(spark, d).select("id", "p").collect())
+    assert got == [(1, 3), (2, 3), (11, 7), (12, 7)]
+
+
 def test_rewrite_applies_position_deletes_on_escaped_paths(spark, tmp_path):
     """A data file whose path Spark reports URI-quoted (a `%` and a
     space) keeps its position deletes through iceberg_rewrite_data_files:

@@ -138,7 +138,7 @@ def test_upsert_rewrite_commit_refused(spark, tmp_path):
     must refuse it, not derive wrong inserts."""
     import json
 
-    from incubator_xtable_spark.streaming.hudi_cdc_datasource import _plan_instant
+    from incubator_xtable_spark.streaming.change_feed import plan_commit
 
     base = str(tmp_path / "t")
     os.makedirs(os.path.join(base, ".hoodie"))
@@ -160,4 +160,4 @@ def test_upsert_rewrite_commit_refused(spark, tmp_path):
     with open(os.path.join(base, ".hoodie", "002.commit"), "w") as fh:
         json.dump(meta, fh)
     with pytest.raises(ValueError, match="without CDC logging"):
-        _plan_instant(base, "002", "commit")
+        plan_commit("hudi_cdc", base, "002")

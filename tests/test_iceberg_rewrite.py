@@ -64,9 +64,9 @@ def test_rewrite_compacts_preserves_rows_and_is_replace(spark, tmp_path):
 
     # CDC consumers skip replace snapshots
     assert read_iceberg_cdc(spark, d, out["snapshot_id"]).count() == 0
-    from incubator_xtable_spark.streaming.iceberg_cdc_datasource import _plan_snapshot
+    from incubator_xtable_spark.sources.iceberg_source import plan_changes
 
-    assert _plan_snapshot(meta2, out["snapshot_id"]) == []
+    assert plan_changes(d, out["snapshot_id"]).files == []
 
     report = check_iceberg_conformance(spark, d)
     assert report.passed, [(i.code, i.detail) for i in report.issues]

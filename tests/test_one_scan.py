@@ -3,7 +3,9 @@
 (``_metadata.file_path``, ``_metadata.row_index``, ``input_file_name``)
 or builds a partition-values frame (``MAP<STRING,STRING>``); every
 reader hands its files to `scan_files` instead, except the uses listed
-here."""
+here. Under `streaming/`, only `streaming/change_feed.py` subclasses
+`DataSourceStreamReader` or reads a table with `pq.read_table`: the
+readStream sources share its one reader."""
 
 from __future__ import annotations
 
@@ -62,3 +64,39 @@ def test_the_gate_sees_each_form():
     passes everything)."""
     owner = _scan_tokens(os.path.join(_ROOT, _OWNER))
     assert {"_metadata.file_path", "_metadata.row_index", "MAP<STRING,STRING>"} <= set(owner)
+
+
+_STREAM_OWNER = os.path.join("streaming", "change_feed.py")
+
+
+def _stream_forms(path: str) -> set[str]:
+    """The stream-reader forms of one file: a class that subclasses
+    `DataSourceStreamReader`, and a `read_table` call."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ClassDef):
+            for base in node.bases:
+                name = base.attr if isinstance(base, ast.Attribute) else getattr(base, "id", None)
+                if name == "DataSourceStreamReader":
+                    found.add("DataSourceStreamReader")
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr == "read_table":
+                found.add("read_table")
+    return found
+
+
+def test_only_change_feed_reads_streams():
+    found = set()
+    for dirpath, _, names in os.walk(os.path.join(_ROOT, "streaming")):
+        for name in sorted(names):
+            if name.endswith(".py"):
+                rel = os.path.relpath(os.path.join(dirpath, name), _ROOT)
+                if rel != _STREAM_OWNER:
+                    found |= {(rel, t) for t in _stream_forms(os.path.join(dirpath, name))}
+    assert found == set()
+
+
+def test_the_stream_gate_sees_each_form():
+    assert _stream_forms(os.path.join(_ROOT, _STREAM_OWNER)) == {"DataSourceStreamReader", "read_table"}

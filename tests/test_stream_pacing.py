@@ -77,10 +77,8 @@ def test_delta_cdf_bytes_split_backlog(spark, tmp_path):
     """3-commit backlog: a budget fitting the first two commits drains
     them in run 1 and the third in run 2; a 1-byte budget drains exactly
     one commit per run (oversized-commit progress)."""
-    from incubator_xtable_spark.streaming.cdf_datasource import (
-        DeltaCDFDataSource,
-        _commit_data_bytes,
-    )
+    from incubator_xtable_spark.sources.delta_source import commit_data_bytes
+    from incubator_xtable_spark.streaming.cdf_datasource import DeltaCDFDataSource
     from incubator_xtable_spark.targets.delta_target import DeltaConversionTarget
 
     try:
@@ -99,7 +97,7 @@ def test_delta_cdf_bytes_split_backlog(spark, tmp_path):
         ).parquet(base)
         ctrl.sync(src, {TableFormat.DELTA: tgt})
 
-    budget = _commit_data_bytes(base, 0) + _commit_data_bytes(base, 1)
+    budget = commit_data_bytes(base, 0) + commit_data_bytes(base, 1)
     assert budget > 0
     cp, out = str(tmp_path / "cp"), str(tmp_path / "out")
     assert _runs(spark, "delta_cdf", base, cp, out, budget) == list(range(9))
@@ -112,10 +110,8 @@ def test_delta_cdf_bytes_split_backlog(spark, tmp_path):
 
 
 def test_hudi_cdc_bytes_split_backlog(spark, tmp_path):
-    from incubator_xtable_spark.streaming.hudi_cdc_datasource import (
-        HudiCDCDataSource,
-        _instant_data_bytes,
-    )
+    from incubator_xtable_spark.sources.hudi_source import instant_data_bytes
+    from incubator_xtable_spark.streaming.hudi_cdc_datasource import HudiCDCDataSource
     from incubator_xtable_spark.targets.hudi_target import (
         HudiConversionTarget,
         list_completed_instants,
@@ -139,7 +135,7 @@ def test_hudi_cdc_bytes_split_backlog(spark, tmp_path):
 
     instants = list_completed_instants(base)
     assert len(instants) == 3
-    budget = sum(_instant_data_bytes(base, i, a) for i, a in instants[:2])
+    budget = sum(instant_data_bytes(base, i, a) for i, a in instants[:2])
     assert budget > 0
     cp, out = str(tmp_path / "cp"), str(tmp_path / "out")
     assert _runs(spark, "hudi_cdc", base, cp, out, budget) == list(range(9))
@@ -147,10 +143,8 @@ def test_hudi_cdc_bytes_split_backlog(spark, tmp_path):
 
 
 def test_iceberg_cdc_bytes_split_backlog(spark, tmp_path):
-    from incubator_xtable_spark.streaming.iceberg_cdc_datasource import (
-        IcebergCDCDataSource,
-        _snapshot_data_bytes,
-    )
+    from incubator_xtable_spark.sources.iceberg_source import snapshot_data_bytes
+    from incubator_xtable_spark.streaming.iceberg_cdc_datasource import IcebergCDCDataSource
     from incubator_xtable_spark.targets.iceberg_target import (
         IcebergConversionTarget,
         read_table_metadata,
@@ -182,16 +176,16 @@ def test_iceberg_cdc_bytes_split_backlog(spark, tmp_path):
     assert len(chain) == 3
     # r8: the target writes real summary size stats the pacing reads
     assert int(by_id[chain[0]]["summary"]["added-files-size"]) > 0
-    budget = sum(_snapshot_data_bytes(by_id[s]) for s in chain[:2])
+    budget = sum(snapshot_data_bytes(by_id[s]) for s in chain[:2])
     cp, out = str(tmp_path / "cp"), str(tmp_path / "out")
     assert _runs(spark, "iceberg_cdc", base, cp, out, budget) == list(range(9))
     assert _runs(spark, "iceberg_cdc", base, cp, out, budget) == list(range(12))
 
 
 def test_paimon_changelog_bytes_split_backlog(spark, tmp_path):
+    from incubator_xtable_spark.sources.paimon_source import snapshot_data_bytes
     from incubator_xtable_spark.streaming.paimon_changelog_datasource import (
         PaimonChangelogDataSource,
-        _snapshot_data_bytes,
     )
 
     from .paimon_testtable import PaimonTestTable
@@ -205,7 +199,7 @@ def test_paimon_changelog_bytes_split_backlog(spark, tmp_path):
     for lo, hi in ((0, 6), (6, 9), (9, 12)):
         t.append([{"id": i, "name": f"n-{i}"} for i in range(lo, hi)])
 
-    budget = _snapshot_data_bytes(t.base, 1) + _snapshot_data_bytes(t.base, 2)
+    budget = snapshot_data_bytes(t.base, 1) + snapshot_data_bytes(t.base, 2)
     assert budget > 0
     cp, out = str(tmp_path / "cp"), str(tmp_path / "out")
     assert _runs(spark, "paimon_changelog", t.base, cp, out, budget) == list(range(9))
