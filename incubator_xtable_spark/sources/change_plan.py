@@ -14,15 +14,20 @@ everything about the commit's row changes:
   inserts;
 - the position sources each file's rows are read against (Delta DV
   descriptors, Iceberg delete-file references);
-- partition values for the columns a file does not store, and the
-  stored-to-logical column names;
+- how each file's columns resolve: the `file_scan.ScanGroup`s the
+  format's own group builder makes (stored names, parquet field ids,
+  renames to the logical names);
+- partition values for the columns a file does not store;
 - every refusal, raised while planning.
 
-Two readers consume a plan. `read_changes` is the batch one: it resolves
-positions on the driver (each delete file read once) and reads the files
-through the format's `file_scan.scan_files` call. The readStream sources
-(`streaming/change_feed.py`) send each planned file to an executor and
-read it with pyarrow, resolving positions with the same `read_positions`.
+Two readers consume a plan, with one column rule: a column the file's
+group stores reads from the file, any other from the file's partition
+values, else null. `read_changes` is the batch one: it resolves
+positions on the driver (each delete file read once) and hands the
+plan's groups to `file_scan.scan_files`. The readStream sources
+(`streaming/change_feed.py`) send each planned file with its group to an
+executor and read it with pyarrow, resolving positions with the same
+`read_positions`.
 """
 
 from __future__ import annotations
@@ -35,27 +40,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# the format of a Hudi CDC supplemental log file (records carry the op)
+# the format of a Hudi CDC supplemental log file: its records decode to
+# rows and their change types (`hudi_source.cdc_log_rows`), never a scan
 HUDI_CDC_LOG = "HUDI_CDC_LOG"
 
 # Paimon RowKind byte -> change type
 CHANGE_TYPES = {0: "insert", 1: "update_preimage", 2: "update_postimage", 3: "delete"}
 
-# the columns that carry each row's change type, and their types: Delta
-# change files store `_change_type`, Paimon changelog files `_VALUE_KIND`,
-# and a Hudi CDC log's records an ``op``, read as the change type
-TYPE_COLUMNS = {"_change_type": T.StringType(), "_VALUE_KIND": T.ByteType(), "op": T.StringType()}
+# the stored columns that carry each row's change type, and their types:
+# Delta change files store `_change_type`, Paimon changelog files
+# `_VALUE_KIND`
+TYPE_COLUMNS = {"_change_type": T.StringType(), "_VALUE_KIND": T.ByteType()}
 
 
 class ChangeFile(NamedTuple):
     """One file's part of a commit's row changes.
 
-    ``change`` is ``insert`` or ``delete``, the stored column that holds
-    each row's type (``_change_type``, ``_VALUE_KIND``), ``op`` for a Hudi
-    CDC log, or None for a position diff. ``drop`` lists the position
-    sources whose rows are not read; a position diff (``restore`` set)
-    instead emits the rows ``drop`` covers and ``restore`` does not as
-    deletes, and the reverse as inserts. ``partition_values`` maps each
+    ``change`` is ``insert`` or ``delete``, the column that holds each
+    row's type (``_VALUE_KIND``, or ``_change_type`` for Delta change
+    files and Hudi CDC logs), or None for a position diff. ``drop``
+    lists the position sources whose rows are not read; a position diff
+    (``restore`` set) instead emits the rows ``drop`` covers and
+    ``restore`` does not as deletes, and the reverse as inserts. ``partition_values`` maps each
     column the file need not store to its value as a string."""
 
     path: str
@@ -68,18 +74,17 @@ class ChangeFile(NamedTuple):
 
 class ChangePlan(NamedTuple):
     """One commit's row changes. ``schema`` is the logical row schema;
-    ``columns`` maps a logical column to the names a file may store it
-    under, tried in order (a column absent from it is stored under its
-    own name), and ``field_ids`` to the parquet field id that wins where
-    a file stores ids. ``derive`` is set when the row changes are not
-    per file (a Hudi rewrite without CDC logging; the plan then has no
-    files and an empty schema): the batch reader derives them by a join,
-    and the stream refuses with this message."""
+    ``groups`` are the `file_scan.ScanGroup`s of every planned file that
+    scans (all but Hudi CDC logs): the columns each file stores, under
+    which names or field ids, and with which type column. ``derive`` is
+    set when the row changes are not per file (a Hudi rewrite without CDC
+    logging; the plan then has no files and an empty schema): the batch
+    reader derives them by a join, and the stream refuses with this
+    message."""
 
     schema: T.StructType
     files: list
-    columns: dict
-    field_ids: dict
+    groups: list
     derive: Optional[str]
 
 
@@ -130,18 +135,37 @@ def change_schema(schema: T.StructType, commit_column: T.StructField) -> T.Struc
 def read_changes(
     spark: SparkSession,
     plan: ChangePlan,
-    scan: Callable[[list, list, list, bool], DataFrame],
-    resolve: Callable[[list], dict],
     commit_column: T.StructField,
     commit,
+    resolve: Optional[Callable[[list], dict]] = None,
 ) -> DataFrame:
     """The batch change read of ``plan``: ``resolve`` turns (data path,
-    position sources) pairs into positions on the driver (`read_positions`
-    or a format's wrapper of it), and ``scan(files, extra_fields,
-    positions, keep)`` is the format's `scan_files` call, returning the
-    plan's columns plus ``extra_fields``. Files of one change type read in
-    one scan; position diffs read their newly deleted and restored rows
-    with ``keep``. No data row reaches the driver."""
+    position sources) pairs into positions on the driver (by default
+    `read_positions`, each source read once per read; Iceberg adds its
+    equality lowering), and the files of one change type read in one
+    `file_scan.scan_files` call over the plan's groups; position diffs
+    read their newly deleted and restored rows with ``keep``. No data row
+    reaches the driver."""
+    from incubator_xtable_spark.sources.file_scan import scan_files
+
+    if resolve is None:
+        cache: dict = {}
+
+        def resolve(pairs: list) -> dict:
+            return read_positions(pairs, cache)
+
+    def scan(files: list, extra: list, positions: dict, keep: bool) -> DataFrame:
+        paths = {f.path for f in files}
+        values = {f.path: f.partition_values for f in files if f.partition_values}
+        return scan_files(
+            spark,
+            [g._replace(paths=[p for p in g.paths if p in paths]) for g in plan.groups],
+            list(plan.schema.fields) + extra,
+            partition_values=values or None,
+            positions=list(positions.items()),
+            keep=keep,
+        )
+
     out = change_schema(plan.schema, commit_column)
     by_change: dict = {}
     diffs = []
@@ -150,8 +174,7 @@ def read_changes(
     parts = []
     for change, files in by_change.items():
         extra = [T.StructField(change, TYPE_COLUMNS[change])] if change in TYPE_COLUMNS else []
-        positions = resolve([(f.path, f.drop) for f in files])
-        df = scan(files, extra, list(positions.items()), False)
+        df = scan(files, extra, resolve([(f.path, f.drop) for f in files]), False)
         if change == "_VALUE_KIND":
             kinds = F.create_map(*[x for k, v in CHANGE_TYPES.items() for x in (F.lit(k), F.lit(v))])
             df = df.withColumn("_change_type", kinds[F.col(change).cast("int")])
@@ -169,7 +192,7 @@ def read_changes(
         ):
             if positions:
                 files = [f for f in diffs if f.path in positions]
-                df = scan(files, [], list(positions.items()), True)
+                df = scan(files, [], positions, True)
                 parts.append(df.withColumn("_change_type", F.lit(change)))
     if not parts:
         return spark.createDataFrame([], out)

@@ -55,12 +55,7 @@ from incubator_xtable_spark.model.core import (
     arrow_table,
 )
 from incubator_xtable_spark.model.file_formats import from_extension
-from incubator_xtable_spark.sources.change_plan import (
-    ChangeFile,
-    ChangePlan,
-    read_changes,
-    read_positions,
-)
+from incubator_xtable_spark.sources.change_plan import ChangeFile, ChangePlan, read_changes
 from incubator_xtable_spark.model.stat_codec import encode_stat
 from incubator_xtable_spark.model.sync_metadata import TableSyncMetadata, XTABLE_METADATA_KEY
 
@@ -793,10 +788,10 @@ def plan_changes(base_path: str, version: int) -> ChangePlan:
        path (a deletion-vector update) = a position diff of the old and
        new DVs.
 
-    Partition values key by logical name; under column mapping the
-    plan's columns name each column's physical name, and mode=id adds
-    its field id. Refuses a commit whose JSON is gone and a removed file
-    that has been vacuumed."""
+    Partition values key by logical name, and the files' columns resolve
+    through `_scan_groups` (column mapping's physical names or field
+    ids). Refuses a commit whose JSON is gone and a removed file that
+    has been vacuumed."""
     from incubator_xtable_spark.model.file_formats import from_delta_provider
 
     commit_file = os.path.join(_log_dir(base_path), f"{version:020d}.json")
@@ -810,7 +805,6 @@ def plan_changes(base_path: str, version: int) -> ChangePlan:
         raise ValueError(f"not a delta table (no metaData): {base_path}")
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = list(meta["partitionColumns"] or [])
-    cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
     provider_fmt = from_delta_provider(
         meta["format"]["provider"] if meta["format"] is not None else None
     )
@@ -869,14 +863,11 @@ def plan_changes(base_path: str, version: int) -> ChangePlan:
                 state = prev.get(p) or {}
                 values = r.get("partitionValues") or state.get("partitionValues")
                 files.append(change_file(p, "delete", values, dv(p, state.get("deletionVector"))))
-    columns, field_ids = {}, {}
-    if cm_mode in ("name", "id"):
-        for f in schema.fields:
-            columns[f.name] = [_physical_name(schema, f.name)]
-            fid = (f.metadata or {}).get("delta.columnMapping.id")
-            if cm_mode == "id" and fid is not None:
-                field_ids[f.name] = int(fid)
-    return ChangePlan(schema, files, columns, field_ids, None)
+    fields = [f for f in schema.fields if f.name not in part_cols]
+    if cdc:
+        fields.append(T.StructField("_change_type", T.StringType()))
+    groups = _scan_groups(meta, [f.path for f in files], fields, "read_delta_cdf", change_files=bool(cdc))
+    return ChangePlan(schema, files, groups, None)
 
 
 def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFrame:
@@ -894,33 +885,8 @@ def read_delta_cdf(spark: SparkSession, base_path: str, version: int) -> DataFra
     numpy; no data row ever collects to the driver. Pair with
     get_commits_backlog for the commit cursor.
     """
-    plan = plan_changes(base_path, version)
-    meta = latest_action(base_path, "metaData", version)
-    part_cols = list(meta["partitionColumns"] or [])
-    data_fields = [f for f in plan.schema.fields if f.name not in part_cols]
-    cache: dict = {}
-
-    def scan(files, extra, positions, keep) -> DataFrame:
-        return _scan(
-            spark,
-            base_path.rstrip("/"),
-            meta,
-            plan.schema,
-            [(f.path, f.partition_values) for f in files],
-            data_fields + extra,
-            "read_delta_cdf",
-            positions=positions,
-            keep=keep,
-            change_files=bool(extra),
-        )
-
     return read_changes(
-        spark,
-        plan,
-        scan,
-        lambda pairs: read_positions(pairs, cache),
-        T.StructField("_commit_version", T.LongType()),
-        version,
+        spark, plan_changes(base_path, version), T.StructField("_commit_version", T.LongType()), version
     )
 
 
@@ -956,25 +922,63 @@ def _scan(
     reader: str,
     *,
     positions=None,
-    keep: bool = False,
     row_ids: Optional[dict[str, Optional[int]]] = None,
-    change_files: bool = False,
 ) -> DataFrame:
     """Scan a Delta table's (path, partition values) ``files`` through
     `file_scan.scan_files` (a path relative to ``base`` or absolute;
-    ``row_ids`` keys each file's baseRowId by relative path), resolving the stored columns of
-    ``fields`` (the logical columns the files hold) the way the table's
-    column mapping says: mode=name reads each column's PHYSICAL name,
-    mode=id matches PARQUET FIELD IDS (fed from delta.columnMapping.id,
-    mirroring DeltaSchemaExtractor.java:57-58,137-144), and both rename
-    and cast back to the logical schema. Partition columns come from the
-    files' partition values, keyed by logical name
-    (`_logical_partition_values`).
+    ``row_ids`` keys each file's baseRowId by relative path), the stored
+    columns of ``fields`` resolved by `_scan_groups`. Partition columns
+    come from the files' partition values, keyed by logical name
+    (`_logical_partition_values`)."""
+    from incubator_xtable_spark.sources.file_scan import scan_files
+
+    paths = [os.path.join(base, p) for p, _ in files]
+    groups = _scan_groups(meta, paths, fields, reader, row_ids=row_ids is not None)
+    if row_ids is not None:
+        missing = [p for p, base_row_id in row_ids.items() if base_row_id is None]
+        if missing:
+            raise ValueError(
+                "with_row_ids: table has adds without baseRowId (row tracking "
+                f"not enabled), e.g. {missing[0]!r}"
+            )
+        row_ids = {os.path.join(base, p): base_row_id for p, base_row_id in row_ids.items()}
+    part_cols = list(meta["partitionColumns"] or [])
+    partition_values = (
+        {path: pv or {} for path, (_, pv) in zip(paths, files)} if part_cols else None
+    )
+    out = list(schema.fields) + [f for f in fields if f.name not in schema.names]
+    return scan_files(
+        spark,
+        groups,
+        out,
+        partition_values=partition_values,
+        positions=positions,
+        row_ids=row_ids,
+    )
+
+
+def _scan_groups(
+    meta: dict,
+    paths: list[str],
+    fields: list[T.StructField],
+    reader: str,
+    *,
+    change_files: bool = False,
+    row_ids: bool = False,
+) -> list:
+    """The `file_scan` groups of a Delta table's data or change files
+    (absolute ``paths``), presenting the logical columns ``fields`` (the
+    ones the files hold) the way the table's column mapping says:
+    mode=name reads each column's PHYSICAL name, mode=id matches PARQUET
+    FIELD IDS (fed from delta.columnMapping.id, mirroring
+    DeltaSchemaExtractor.java:57-58,137-144), and both rename back to the
+    logical names.
 
     Refusal matrix (README "Delta non-parquet depth"): ORC and AVRO
     files serve mode=name (their columns and fields ARE named the
     physical names); mode=id refuses on both, since id resolution keys
-    on parquet field ids those formats cannot carry."""
+    on parquet field ids those formats cannot carry; ``row_ids`` (the
+    parquet row index) refuses them too."""
     from incubator_xtable_spark.model.file_formats import (
         APACHE_AVRO,
         APACHE_ORC,
@@ -982,13 +986,12 @@ def _scan(
         from_delta_provider,
         split_readable,
     )
-    from incubator_xtable_spark.sources.file_scan import ScanGroup, scan_files
+    from incubator_xtable_spark.sources.file_scan import ScanGroup
 
     cm_mode = dict(meta["configuration"] or {}).get("delta.columnMapping.mode", "none")
     provider_fmt = from_delta_provider(
         meta["format"]["provider"] if meta["format"] is not None else None
     )
-    paths = [os.path.join(base, p) for p, _ in files]
     pq_paths, orc_paths, avro_paths = split_readable(
         ((p, from_extension(p, default=provider_fmt)) for p in paths),
         reader=f"{reader}(change files)" if change_files else reader,
@@ -1006,18 +1009,10 @@ def _scan(
                     "supported (id resolution needs parquet field ids)"
                 )
         _require_field_ids(pq_paths)
-    if row_ids is not None:
-        if orc_paths or avro_paths:
-            raise NotImplementedError(
-                "with_row_ids is parquet-only (row ids key on _metadata.row_index)"
-            )
-        missing = [p for p, base_row_id in row_ids.items() if base_row_id is None]
-        if missing:
-            raise ValueError(
-                "with_row_ids: table has adds without baseRowId (row tracking "
-                f"not enabled), e.g. {missing[0]!r}"
-            )
-        row_ids = {os.path.join(base, p): base_row_id for p, base_row_id in row_ids.items()}
+    if row_ids and (orc_paths or avro_paths):
+        raise NotImplementedError(
+            "with_row_ids is parquet-only (row ids key on _metadata.row_index)"
+        )
     logical = T.StructType(list(fields))
     stored = (
         _physical_type(logical, with_field_ids=cm_mode == "id")
@@ -1025,24 +1020,10 @@ def _scan(
         else logical
     )
     renames = {rf.name: f.name for f, rf in zip(logical.fields, stored.fields) if rf.name != f.name}
-    part_cols = list(meta["partitionColumns"] or [])
-    groups = [
+    return [
         ScanGroup(fmt, fmt_paths, stored, renames)
         for fmt, fmt_paths in ((PARQUET, pq_paths), (APACHE_ORC, orc_paths), (APACHE_AVRO, avro_paths))
     ]
-    partition_values = (
-        {path: pv or {} for path, (_, pv) in zip(paths, files)} if part_cols else None
-    )
-    out = list(schema.fields) + [f for f in fields if f.name not in schema.names]
-    return scan_files(
-        spark,
-        groups,
-        out,
-        partition_values=partition_values,
-        positions=positions,
-        keep=keep,
-        row_ids=row_ids,
-    )
 
 
 def _physical_name(schema: T.StructType, name: str) -> str:

@@ -56,6 +56,7 @@ from incubator_xtable_spark.sources.change_plan import (
     HUDI_CDC_LOG,
     ChangeFile,
     ChangePlan,
+    change_schema,
     read_changes,
 )
 from incubator_xtable_spark.targets.hudi_target import (
@@ -448,19 +449,9 @@ class HudiConversionSource:
         """Schema from the newest commit's extraMetadata, else from a live
         parquet footer; the five _hoodie_* meta fields are dropped
         (HudiSchemaExtractor semantics)."""
-        for instant, action in reversed(instants):
-            meta = read_commit_metadata(self.base_path, instant, action)
-            raw = (meta.get("extraMetadata") or {}).get("schema")
-            if raw:
-                # real Hudi (and this engine's target) stores an AVRO
-                # record schema with hudi_id_tracking field ids; legacy
-                # Spark StructType JSON is still accepted
-                from incubator_xtable_spark.model.hudi_ids import parse_schema_json
-
-                schema, _ = parse_schema_json(raw)
-                return T.StructType(
-                    [f for f in schema.fields if f.name not in HOODIE_META_FIELDS]
-                )
+        schema = commit_schema(self.base_path, instants)
+        if schema is not None:
+            return T.StructType([f for f in schema.fields if f.name not in HOODIE_META_FIELDS])
         rows = live_files_rows(self.base_path)
         if not rows:
             return T.StructType([])
@@ -732,13 +723,34 @@ class HudiConversionSource:
         return None
 
 
+def commit_schema(
+    base_path: str, instants: Optional[list[tuple[str, str]]] = None
+) -> Optional[T.StructType]:
+    """The newest commit's extraMetadata schema as written (meta fields
+    kept), or None when no commit records one. Real Hudi (and this
+    engine's target) stores an AVRO record schema with hudi_id_tracking
+    field ids; legacy Spark StructType JSON is still accepted."""
+    from incubator_xtable_spark.model.hudi_ids import parse_schema_json
+
+    if instants is None:
+        instants = list_completed_instants(base_path)
+    for instant, action in reversed(instants):
+        raw = (read_commit_metadata(base_path, instant, action).get("extraMetadata") or {}).get("schema")
+        if raw:
+            schema, _ = parse_schema_json(raw)
+            if schema is not None:
+                return schema
+    return None
+
+
 def plan_changes(base_path: str, instant: str) -> ChangePlan:
     """The row changes of ONE completed instant (`change_plan.ChangePlan`;
     no SparkSession), in order:
 
     1. the commit's CDC supplemental log files (hoodie.table.cdc.enabled
        writers; cdcStats in the commit's write stats name them), whose
-       CDC blocks carry {op: i|u|d, before, after} records;
+       CDC blocks carry {op: i|u|d, before, after} records that
+       `cdc_log_rows` decodes to rows and their `_change_type`;
     2. an adds-only commit (action=commit, no replacements, no log
        files, no rewritten file group): each written base file's rows
        are inserts, partition values from its hive-style directory;
@@ -767,8 +779,7 @@ def plan_changes(base_path: str, instant: str) -> ChangePlan:
         return ChangePlan(
             T.StructType([]),
             [],
-            {},
-            {},
+            [],
             f"instant {instant} ({action}) rewrites state without CDC logging; "
             "hudi_cdc cannot derive its row changes per file. Enable CDC "
             "supplemental logging on the writer (hudiChangeFeed / "
@@ -779,22 +790,26 @@ def plan_changes(base_path: str, instant: str) -> ChangePlan:
     if table is None:
         raise ValueError(f"not a hudi table: {base_path}")
     if cdc_paths:
-        files = [ChangeFile(os.path.join(base_path, p), HUDI_CDC_LOG, "op", {}, (), None) for p in cdc_paths]
-    else:
-        part_cols = [pf.output_name for pf in table.partition_fields]
         files = [
-            ChangeFile(
-                os.path.join(base_path, st["path"]),
-                from_extension(st["path"]),
-                "insert",
-                partition_values(os.path.dirname(st["path"])) if part_cols else {},
-                (),
-                None,
-            )
-            for st in stats
-            if st.get("path")
+            ChangeFile(os.path.join(base_path, p), HUDI_CDC_LOG, "_change_type", {}, (), None)
+            for p in cdc_paths
         ]
-    return ChangePlan(table.read_schema, files, {}, {}, None)
+        return ChangePlan(table.read_schema, files, [], None)
+    part_cols = [pf.output_name for pf in table.partition_fields]
+    paths = [st["path"] for st in stats if st.get("path")]
+    files = [
+        ChangeFile(
+            os.path.join(base_path, p),
+            from_extension(p),
+            "insert",
+            partition_values(os.path.dirname(p)) if part_cols else {},
+            (),
+            None,
+        )
+        for p in paths
+    ]
+    groups = _base_file_groups(base_path, paths, table, "read_hudi_cdc")
+    return ChangePlan(table.read_schema, files, groups, None)
 
 
 def cdc_log_rows(path: str, schema: T.StructType) -> list[tuple]:
@@ -873,16 +888,11 @@ def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFram
     commit_column = T.StructField("_commit_instant", T.StringType())
     if plan.derive:
         return _derive_changes(spark, base_path, instant, commit_column)
-    table = HudiConversionSource(spark, base_path).get_current_table()
-
-    def scan(files, extra, positions, keep) -> DataFrame:
-        if extra:  # CDC logs
-            rows = [r for f in files for r in cdc_log_rows(f.path, plan.schema)]
-            return spark.createDataFrame(rows, T.StructType(list(plan.schema.fields) + extra))
-        rows = [{"path": os.path.relpath(f.path, base_path)} for f in files]
-        return _scan_base_files(spark, base_path, rows, table, "read_hudi_cdc")
-
-    return read_changes(spark, plan, scan, lambda pairs: {}, commit_column, instant)
+    logs = [f for f in plan.files if f.fmt == HUDI_CDC_LOG]
+    if not logs:
+        return read_changes(spark, plan, commit_column, instant)
+    rows = [r + (instant,) for f in logs for r in cdc_log_rows(f.path, plan.schema)]
+    return spark.createDataFrame(rows, change_schema(plan.schema, commit_column))
 
 
 def _derive_changes(
@@ -1033,16 +1043,37 @@ def _scan_base_files(
     spark: SparkSession, base_path: str, rows: list[dict], table: InternalTable, reader: str
 ) -> DataFrame:
     """Read the listed base files (``rows``, paths relative to the table)
-    as ``table``'s read schema through `file_scan.scan_files`. Partition
-    columns may live INSIDE the data files (Paimon-sourced conversions
-    store the full row) or only in the hive-style path (parquet-dir
-    sources), and a table synced from BOTH kinds of source is
-    heterogeneous, so files group by which partition columns their
-    footer stores and the rest come from the path. ORC base files (hoodie.table.base.file.format=ORC)
-    read through Spark's ORC scan; any other format refuses: real Hudi
-    base formats are PARQUET/ORC/HFILE only, so an avro base file is a
-    corrupt table, not a read gap."""
-    from incubator_xtable_spark.sources.file_scan import scan_files, stored_column_groups
+    as ``table``'s read schema through `file_scan.scan_files`, grouped by
+    `_base_file_groups`; partition columns a file does not store come
+    from its hive-style path."""
+    from incubator_xtable_spark.sources.file_scan import scan_files
+
+    paths = [r["path"] for r in rows]
+    part_cols = [pf.output_name for pf in table.partition_fields]
+    return scan_files(
+        spark,
+        _base_file_groups(base_path, paths, table, reader),
+        table.read_schema.fields,
+        partition_values={
+            os.path.join(base_path, p): partition_values(os.path.dirname(p)) for p in paths
+        }
+        if part_cols
+        else None,
+    )
+
+
+def _base_file_groups(base_path: str, paths: list[str], table: InternalTable, reader: str) -> list:
+    """The `file_scan` groups of base files (``paths`` relative to the
+    table). Partition columns may live INSIDE the data files
+    (Paimon-sourced conversions store the full row) or only in the
+    hive-style path (parquet-dir sources), and a table synced from BOTH
+    kinds of source is heterogeneous, so files group by which partition
+    columns their footer stores. ORC base files
+    (hoodie.table.base.file.format=ORC) read through Spark's ORC scan;
+    any other format refuses: real Hudi base formats are
+    PARQUET/ORC/HFILE only, so an avro base file is a corrupt table, not
+    a read gap."""
+    from incubator_xtable_spark.sources.file_scan import stored_column_groups
 
     declared = (
         read_properties(base_path).get("hoodie.table.base.file.format") or "PARQUET"
@@ -1052,8 +1083,8 @@ def _scan_base_files(
     # per-file refusal below instead of being parsed as ORC
     default_fmt = {"PARQUET": PARQUET, "ORC": APACHE_ORC}.get(declared, declared)
     files = []
-    for r in rows:
-        abs_p = os.path.join(base_path, r["path"])
+    for p in paths:
+        abs_p = os.path.join(base_path, p)
         fmt = from_extension(abs_p, default=default_fmt)
         if fmt not in (PARQUET, APACHE_ORC):
             raise NotImplementedError(
@@ -1062,17 +1093,7 @@ def _scan_base_files(
             )
         files.append((abs_p, fmt))
     part_cols = [pf.output_name for pf in table.partition_fields]
-    return scan_files(
-        spark,
-        stored_column_groups(files, table.read_schema, part_cols),
-        table.read_schema.fields,
-        partition_values={
-            os.path.join(base_path, r["path"]): partition_values(os.path.dirname(r["path"]))
-            for r in rows
-        }
-        if part_cols
-        else None,
-    )
+    return stored_column_groups(files, table.read_schema, part_cols)
 
 
 def _apply_log_overlay(

@@ -1224,10 +1224,16 @@ def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
     deletes are sources (`delete_file_positions` reads them), equality
     deletes are `equality_source` descriptors that the batch reader
     resolves by a Spark join and the stream by a value match. Identity
-    partition values come from the manifest; columns resolve by field id
-    or through the name mapping. Refuses a snapshot whose parent has
-    expired and a touched data file that is not parquet; a `replace`
-    snapshot (compaction) plans no changes."""
+    partition values come from the manifest; columns resolve through
+    `_scan_groups` (field ids, else the name mapping). Refuses a snapshot
+    whose parent has expired and a touched data file that is not
+    parquet; a `replace` snapshot (compaction) plans no changes."""
+    return _plan_changes(base_path, snapshot_id)[0]
+
+
+def _plan_changes(base_path: str, snapshot_id: int) -> tuple[ChangePlan, dict, InternalTable]:
+    """`plan_changes`, with the table metadata and table it planned
+    against (the batch reader's equality lowering needs both)."""
     src = IcebergConversionSource(None, base_path)
     meta = src._meta()
     table = src.get_current_table()
@@ -1235,22 +1241,10 @@ def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
     if snap is None:
         raise ValueError(f"no snapshot {snapshot_id} in {base_path}")
     schema = table.read_schema
-    field_ids = {
-        f.name: (f.metadata or {})["xtable.fieldId"]
-        for f in schema.fields
-        if (f.metadata or {}).get("xtable.fieldId") is not None
-    }
-    nm_raw = (meta.get("properties") or {}).get("schema.name-mapping.default")
-    names_by_id = {m.get("field-id"): m.get("names") or [] for m in json.loads(nm_raw)} if nm_raw else {}
-    columns = {
-        f.name: names_by_id[field_ids[f.name]] + [f.name]
-        for f in schema.fields
-        if field_ids.get(f.name) in names_by_id
-    }
     if (snap.get("summary") or {}).get("operation") == "replace":
         # spec: replace snapshots (compaction/rewrites) change the file
         # layout, never the logical rows — the changelog scan skips them
-        return ChangePlan(schema, [], columns, field_ids, None)
+        return ChangePlan(schema, [], [], None), meta, table
     parent = snap.get("parent-snapshot-id")
     if parent is not None and snapshot_by_id(meta, parent) is None:
         # an expired parent would silently turn the whole table into
@@ -1300,7 +1294,8 @@ def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
             if now != before:
                 files.append(change_file(cur_by_path[p], None, now, before))
     _ff.require_parquet(((f.path, f.fmt) for f in files), reader="iceberg change read")
-    return ChangePlan(schema, files, columns, field_ids, None)
+    data_fields = T.StructType([f for f in schema.fields if f.name not in identity])
+    return ChangePlan(schema, files, _scan_groups(meta, data_fields, [f.path for f in files]), None), meta, table
 
 
 def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> DataFrame:
@@ -1318,12 +1313,7 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
     resolve and diff on the driver (each delete file read once), lowered
     equality deletes by one Spark join per side, and no data row reaches
     the driver."""
-    plan = plan_changes(base_path, snapshot_id)
-    src = IcebergConversionSource(spark, base_path)
-    meta = src._meta()
-    table = src.get_current_table()
-    identity = _identity_columns(table)
-    data_fields = T.StructType([f for f in plan.schema.fields if f.name not in identity])
+    plan, meta, table = _plan_changes(base_path, snapshot_id)
     values = {f.path: f.partition_values for f in plan.files}
     cache: dict = {}
 
@@ -1349,24 +1339,8 @@ def read_iceberg_cdc(spark: SparkSession, base_path: str, snapshot_id: int) -> D
                     out[path] = np.union1d(out.get(path, np.empty(0, np.int64)), pos)
         return out
 
-    def scan(files, extra, positions, keep) -> DataFrame:
-        paths = [f.path for f in files]
-        return scan_files(
-            spark,
-            _scan_groups(meta, data_fields, paths),
-            plan.schema.fields,
-            partition_values={p: values[p] for p in paths} if identity else None,
-            positions=positions,
-            keep=keep,
-        )
-
     return read_changes(
-        spark,
-        plan,
-        scan,
-        resolve,
-        T.StructField("_commit_snapshot_id", T.LongType()),
-        snapshot_id,
+        spark, plan, T.StructField("_commit_snapshot_id", T.LongType()), snapshot_id, resolve
     )
 
 

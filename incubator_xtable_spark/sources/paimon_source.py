@@ -1098,11 +1098,18 @@ def read_paimon_as_df(
 def _entry_partition_values(
     src: "PaimonConversionSource", sch: dict, entries: list[dict], paths: list[str]
 ) -> dict[str, dict]:
-    """{path: {partition key: value string}} of manifest ``entries``."""
+    """{path: {partition key: value string, or None}} of manifest
+    ``entries``: the strings the partition directories name, and None
+    for a null value (not the table's `partition.default-name`)."""
     keys, codecs, dtypes = src._partition_ctx(sch)
     options = sch.get("options") or {}
     return {
-        p: (src._decode_partition(e["_PARTITION"], keys, codecs, dtypes, options)[0] or {})
+        p: {
+            k: None if v is None else format_partition_value(v, dt, options)
+            for k, v, dt in zip(keys, decode_binary_row(e["_PARTITION"], codecs), dtypes)
+        }
+        if keys
+        else {}
         for e, p in zip(entries, paths)
     }
 
@@ -1115,17 +1122,31 @@ def _scan_entries(
     reader: str,
     positions=None,
 ) -> DataFrame:
-    """Scan the data or changelog files ``values`` lists (path ->
-    partition values of the ``keys``) as ``schema`` through
-    `file_scan.scan_files`. Paimon identifies a file's format purely by
-    suffix (`file.format`; mixed formats across commits are legal after
-    a format migration), so
-    branches split by suffix and unknown suffixes refuse loudly. Native
-    Paimon files store the full row INCLUDING partition columns (the
-    hive-style dirs are layout only), but EXTERNAL files from a
-    conversion (paimon_target references them via _EXTERNAL_PATH) may
-    lack them: files group by which partition columns they store, and
-    the missing ones come from the manifest partition values."""
+    """Scan the data files ``values`` lists (path -> partition values of
+    the ``keys``) as ``schema`` through `file_scan.scan_files`, grouped
+    by `_entry_groups`."""
+    from incubator_xtable_spark.sources.file_scan import scan_files
+
+    return scan_files(
+        spark,
+        _entry_groups(list(values), schema, keys, reader),
+        schema.fields,
+        partition_values=values if keys else None,
+        positions=positions,
+    )
+
+
+def _entry_groups(paths: list[str], schema: T.StructType, keys: list[str], reader: str) -> list:
+    """The `file_scan` groups of Paimon data or changelog ``paths`` read
+    as ``schema``. Paimon identifies a file's format purely by suffix
+    (`file.format`; mixed formats across commits are legal after a
+    format migration), so groups split by suffix and unknown suffixes
+    refuse loudly. Native Paimon files store the full row INCLUDING
+    partition columns (the hive-style dirs are layout only), but
+    EXTERNAL files from a conversion (paimon_target references them via
+    _EXTERNAL_PATH) may lack them: files group by which partition
+    columns they store, and the missing ones come from the manifest
+    partition values."""
     from incubator_xtable_spark.model.file_formats import (
         APACHE_AVRO,
         APACHE_ORC,
@@ -1133,23 +1154,17 @@ def _scan_entries(
         from_extension,
         split_readable,
     )
-    from incubator_xtable_spark.sources.file_scan import scan_files, stored_column_groups
+    from incubator_xtable_spark.sources.file_scan import stored_column_groups
 
     pq_paths, orc_paths, avro_paths = split_readable(
-        ((p, from_extension(p)) for p in values), reader=reader
+        ((p, from_extension(p)) for p in paths), reader=reader
     )
     files = (
         [(p, PARQUET) for p in pq_paths]
         + [(p, APACHE_ORC) for p in orc_paths]
         + [(p, APACHE_AVRO) for p in avro_paths]
     )
-    return scan_files(
-        spark,
-        stored_column_groups(files, schema, keys),
-        schema.fields,
-        partition_values=values if keys else None,
-        positions=positions,
-    )
+    return stored_column_groups(files, schema, keys)
 
 
 def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
@@ -1181,7 +1196,7 @@ def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
     change = "_VALUE_KIND"
     if not entries:
         if snap.get("commitKind") == "COMPACT":
-            return ChangePlan(schema, [], {}, {}, None)
+            return ChangePlan(schema, [], [], None)
         if sch.get("primaryKeys") or snap.get("commitKind") != "APPEND":
             raise ValueError(
                 f"snapshot {snapshot_id} has no changelog manifests and its "
@@ -1197,7 +1212,11 @@ def plan_changes(base_path: str, snapshot_id: int) -> ChangePlan:
     paths = [src._entry_abs_path(e, sch) for e in entries]
     values = _entry_partition_values(src, sch, entries, paths)
     files = [ChangeFile(p, from_extension(p), change, values[p], (), None) for p in paths]
-    return ChangePlan(schema, files, {}, {}, None)
+    fields = T.StructType(
+        ([T.StructField(change, T.ByteType())] if change == "_VALUE_KIND" else []) + list(schema.fields)
+    )
+    groups = _entry_groups(paths, fields, src._partition_ctx(sch)[0], "read_paimon_changelog")
+    return ChangePlan(schema, files, groups, None)
 
 
 def snapshot_data_bytes(base_path: str, snapshot_id: int) -> int:
@@ -1231,25 +1250,9 @@ def read_paimon_changelog(
     per-commit micro-batch (pair with get_commits_backlog for the
     commit cursor).
     """
-    plan = plan_changes(base_path, snapshot_id)
-    src = PaimonConversionSource(None, base_path)
-    keys = src._partition_ctx(src._schema(src._snapshot(snapshot_id).get("schemaId", 0)))[0]
-
-    def scan(files, extra, positions, keep) -> DataFrame:
-        return _scan_entries(
-            spark,
-            keys,
-            {f.path: f.partition_values for f in files},
-            T.StructType(extra + list(plan.schema.fields)),
-            "read_paimon_changelog",
-            positions=positions,
-        )
-
     return read_changes(
         spark,
-        plan,
-        scan,
-        lambda pairs: {},
+        plan_changes(base_path, snapshot_id),
         T.StructField("_commit_snapshot_id", T.LongType()),
         snapshot_id,
     )

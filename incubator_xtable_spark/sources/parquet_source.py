@@ -145,6 +145,17 @@ class ParquetConversionSource:
             list(part_schema.names),
         )
 
+    @property
+    def sync_view(self) -> Optional[str]:
+        """Tags a sync whose partition fields come from the paths
+        (undeclared ``partition_fields`` on a hive-shaped directory): a
+        target synced before that inference holds the directory FLAT, so
+        the controller restates it FULL once instead of adding a
+        partition spec its files carry no values for."""
+        if self.partition_fields or not self._scan()[2].hive_columns:
+            return None
+        return "hive-partitions-from-paths"
+
     # -- table -------------------------------------------------------------
 
     def get_current_table(self) -> InternalTable:

@@ -19,11 +19,15 @@ format's `plan_changes`) and splits the work the way Spark wants:
   With Trigger.AvailableNow, Spark samples latestOffset ONCE per run, so
   the options bound the RUN — repeated availableNow runs against one
   checkpoint drain a backlog in bounded steps;
-- `partitions()` is the plan: one input partition per planned file, so
-  a stream of N planned files runs N partitions;
-- `read()` runs on executors: it reads the file with pyarrow, resolves
-  its columns by the plan's field ids and stored names, types partition
-  values with one cast from their string form, resolves deleted
+- `partitions()` is the plan: one input partition per planned file,
+  carrying the file's scan group, so a stream of N planned files runs N
+  partitions;
+- `read()` runs on executors: it reads the file with pyarrow and takes
+  its columns by the batch rule (a column the file's group stores reads
+  from the file, matched by field id or stored name and renamed to its
+  logical name; any other from the partition values, typed with one
+  cast from their string form; a column the plan does not know, such as
+  a Hudi meta field, under its own name or null), resolves deleted
   positions with `change_plan.read_positions` (the batch readers'
   function), and adds `_change_type` and the commit column. No data row
   passes through the driver.
@@ -134,12 +138,13 @@ def _iceberg_plan(base_path: str, commit: str) -> ChangePlan:
 
 
 def _hudi_schema(base_path: str) -> T.StructType:
-    from incubator_xtable_spark.sources.hudi_source import HudiConversionSource
+    """The newest commit's schema as written, meta fields included."""
+    from incubator_xtable_spark.sources.hudi_source import commit_schema
 
-    table = HudiConversionSource(None, base_path).get_current_table()
-    if table is None:
-        raise ValueError(f"not a hudi table: {base_path}")
-    return table.read_schema
+    schema = commit_schema(base_path)
+    if schema is None:
+        raise ValueError(f"no commit schema found in {base_path}/.hoodie")
+    return schema
 
 
 def _hudi_bytes(base_path: str, commit: str) -> int:
@@ -256,23 +261,25 @@ def _column(tbl, name: Optional[str], dtype: T.DataType, n: int):
     return col
 
 
-def _stored_names(file_schema, fields, columns: dict, field_ids: dict) -> dict:
-    """{logical column: the name this file stores it under, or None}: the
-    field id where the file stores ids, else the first stored name of the
-    plan's list (the column's own name when it has none)."""
+def _stored_columns(file_schema, group) -> dict:
+    """{logical column: the name this file stores it under, or None} for
+    the columns ``group`` (a `file_scan.ScanGroup`) stores: by parquet
+    field id where the group carries one (a missing id reads null, as
+    Spark's ignoreMissing does), else by stored name."""
     by_fid = {
         int(f.metadata[b"PARQUET:field_id"]): f.name
         for f in file_schema
         if f.metadata and b"PARQUET:field_id" in f.metadata
     }
     names = set(file_schema.names)
+    renames = group.renames or {}
     out = {}
-    for f in fields:
-        fid = field_ids.get(f.name)
-        if by_fid and fid in by_fid:
-            out[f.name] = by_fid[fid]
+    for g in group.fields:
+        fid = (g.metadata or {}).get("parquet.field.id")
+        if fid is not None:
+            out[renames.get(g.name, g.name)] = by_fid.get(int(fid))
         else:
-            out[f.name] = next((c for c in columns.get(f.name, [f.name]) if c in names), None)
+            out[renames.get(g.name, g.name)] = g.name if g.name in names else None
     return out
 
 
@@ -297,14 +304,14 @@ def _equality_positions(sources: list, values: dict, schema: T.StructType, n: in
 
 
 class _ChangePartition(InputPartition):
-    """One planned file of one commit (``file`` None: nothing to read)."""
+    """One planned file of one commit with its scan group (None for a
+    Hudi CDC log; ``file`` None: nothing to read)."""
 
-    def __init__(self, file, commit, schema: T.StructType, columns: dict, field_ids: dict) -> None:
+    def __init__(self, file, commit, schema: T.StructType, group) -> None:
         self.file = file
         self.commit = commit
         self.schema = schema
-        self.columns = columns
-        self.field_ids = field_ids
+        self.group = group
 
 
 class ChangeFeedStreamReader(DataSourceStreamReader):
@@ -363,11 +370,11 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         for c in commits:
             plan = plan_commit(self.name, self.base_path, c)
             commit = self.feed.commit_type(c)
+            groups = {p: g._replace(paths=[p]) for g in plan.groups for p in g.paths}
             parts.extend(
-                _ChangePartition(f, commit, plan.schema, plan.columns, plan.field_ids)
-                for f in plan.files
+                _ChangePartition(f, commit, plan.schema, groups.get(f.path)) for f in plan.files
             )
-        return parts or [_ChangePartition(None, None, T.StructType([]), {}, {})]
+        return parts or [_ChangePartition(None, None, T.StructType([]), None)]
 
     def commit(self, end: dict) -> None:
         pass
@@ -404,15 +411,16 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
 
         tbl = pq.read_table(f.path)
         n = len(tbl)
-        stored = _stored_names(tbl.schema, self.fields, partition.columns, partition.field_ids)
-        values = {
-            field.name: (
-                _constant(f.partition_values[field.name], field.dataType, n)
-                if field.name in f.partition_values
-                else _column(tbl, stored[field.name], field.dataType, n)
-            )
-            for field in self.fields
-        }
+        stored = _stored_columns(tbl.schema, partition.group)
+        values = {}
+        for field in self.fields:
+            if field.name in stored:
+                values[field.name] = _column(tbl, stored[field.name], field.dataType, n)
+            elif field.name in f.partition_values:
+                values[field.name] = _constant(f.partition_values[field.name], field.dataType, n)
+            else:
+                own = field.name if field.name in tbl.column_names else None
+                values[field.name] = _column(tbl, own, field.dataType, n)
 
         def deleted(sources: tuple) -> np.ndarray:
             pos = read_positions([(f.path, sources)], {}).get(f.path, np.empty(0, np.int64))

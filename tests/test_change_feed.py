@@ -24,6 +24,7 @@ _FEEDS = {"delta": "delta_cdf", "iceberg": "iceberg_cdc", "hudi": "hudi_cdc", "p
 # (directory value, value as read) per partition of the hive fixture
 _VALUES = {
     "int": [("3", 3), ("7", 7)],
+    "null": [("__HIVE_DEFAULT_PARTITION__", None), ("7", 7)],
     "timestamp": [
         ("2024-01-01 10%3A00%3A00", datetime.datetime(2024, 1, 1, 10)),
         ("2024-01-02 10%3A00%3A00", datetime.datetime(2024, 1, 2, 10)),
@@ -48,37 +49,54 @@ def _stream_rows(spark, fmt: str, d: str, cp: str, name: str):
     return spark.sql(f"select * from {name}")
 
 
-# the Paimon target cannot convert a timestamp partition column yet
-_CASES = [(k, f) for k in sorted(_VALUES) for f in sorted(_FEEDS) if (k, f) != ("timestamp", "paimon")]
+# the Paimon target cannot convert a timestamp partition column yet;
+# "native": a Paimon table written natively, whose files store the
+# partition column, one partition of it null
+_CASES = [
+    (k, f) for k in sorted(_VALUES) for f in sorted(_FEEDS) if (k, f) != ("timestamp", "paimon")
+] + [("native", "paimon")]
+
+
+def _native_paimon(spark, d: str) -> None:
+    from .paimon_testtable import PaimonTestTable
+
+    t = PaimonTestTable(spark, d, [("id", "BIGINT"), ("p", "INT")], partition_keys=["p"]).create()
+    t.append([{"id": i, "p": None} for i in (1, 2)] + [{"id": i, "p": 7} for i in (11, 12)])
 
 
 @pytest.mark.parametrize("kind,fmt", _CASES, ids=[f"{k}-{f}" for k, f in _CASES])
 def test_stream_equals_batch(spark, tmp_path, kind, fmt):
     """A hive-partitioned parquet directory (the partition column lives
-    only in the path) synced FULL, then read through the stream and
-    through the batch change reader: the same (id, p, _change_type)
-    rows, with the partition values the paths name."""
+    only in the path) synced FULL, or a native Paimon table (its files
+    store the column), then read through the stream and through the
+    batch change reader: the same (id, p, _change_type) rows, with the
+    partition values the paths name."""
     d = str(tmp_path / "hive")
     ids = ([1, 2], [11, 12])
-    for (raw, _), part_ids in zip(_VALUES[kind], ids):
-        os.makedirs(os.path.join(d, f"p={raw}"))
-        pq.write_table(
-            pa.table({"id": pa.array(part_ids, pa.int64())}),
-            os.path.join(d, f"p={raw}", f"part-{part_ids[0]}.parquet"),
-        )
-    table_format, make_target, _ = _TARGETS[fmt]
-    res = ConversionController().sync(
-        ParquetConversionSource(spark, d, name="t", partition_fields=[InternalPartitionField("p")]),
-        {table_format: make_target(spark, d)},
-    )[table_format]
-    assert res.status == SyncStatusCode.SUCCESS, res.error
-    assert res.mode == SyncMode.FULL
+    if kind == "native":
+        _native_paimon(spark, d)
+    else:
+        for (raw, _), part_ids in zip(_VALUES[kind], ids):
+            os.makedirs(os.path.join(d, f"p={raw}"))
+            pq.write_table(
+                pa.table({"id": pa.array(part_ids, pa.int64())}),
+                os.path.join(d, f"p={raw}", f"part-{part_ids[0]}.parquet"),
+            )
+        table_format, make_target, _ = _TARGETS[fmt]
+        res = ConversionController().sync(
+            ParquetConversionSource(spark, d, name="t", partition_fields=[InternalPartitionField("p")]),
+            {table_format: make_target(spark, d)},
+        )[table_format]
+        assert res.status == SyncStatusCode.SUCCESS, res.error
+        assert res.mode == SyncMode.FULL
 
     def rows(df):
         return sorted((r["id"], r["p"], r["_change_type"]) for r in df.collect())
 
     want = sorted(
-        (i, value, "insert") for (_, value), part_ids in zip(_VALUES[kind], ids) for i in part_ids
+        (i, value, "insert")
+        for (_, value), part_ids in zip(_VALUES["null" if kind == "native" else kind], ids)
+        for i in part_ids
     )
     assert rows(_change_rows(spark, fmt, d)) == want
     got = _stream_rows(spark, fmt, d, str(tmp_path / "cp"), f"feed_{kind}_{fmt}")

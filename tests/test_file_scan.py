@@ -4,6 +4,7 @@ applies deletes to files whose paths Spark reports quoted."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -13,6 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from incubator_xtable_spark.model.core import (
+    DataLayoutStrategy,
     InternalPartitionField,
     SyncMode,
     SyncStatusCode,
@@ -112,6 +114,47 @@ def test_undeclared_hive_partitions_read_back(spark, tmp_path, fmt, naming):
     assert res.status == SyncStatusCode.SUCCESS, res.error
     got = sorted((r["id"], r["p"]) for r in read_snapshot(spark, d).select("id", "p").collect())
     assert got == [(1, 3), (2, 3), (11, 7), (12, 7)]
+
+
+class _FlatSource(ParquetConversionSource):
+    """The parquet source as it converted a hive directory without
+    `partition_fields` before it took the paths' hive columns: FLAT, with
+    no view tag."""
+
+    sync_view = None
+
+    def _scan(self):
+        files, table, footers = super()._scan()
+        return files, dataclasses.replace(table, partition_fields=[], layout_strategy=DataLayoutStrategy.FLAT), footers
+
+
+def test_flat_target_restates_once_with_inferred_partitions(spark, tmp_path):
+    """A target synced FLAT from an undeclared hive directory, then
+    synced by the source that takes the paths' hive columns as partition
+    fields: the source's view tag differs from the bookmark's, so that
+    sync restates FULL, and the sync after it is incremental again."""
+    d = str(tmp_path / "hive")
+
+    def write(p, ids, mtime):
+        os.makedirs(os.path.join(d, f"p={p}"), exist_ok=True)
+        path = os.path.join(d, f"p={p}", f"part-{p}.parquet")
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), path)
+        os.utime(path, (mtime, mtime))
+
+    def sync(source):
+        res = ConversionController().sync(source, {TableFormat.DELTA: DeltaConversionTarget(spark, d)})
+        assert res[TableFormat.DELTA].status == SyncStatusCode.SUCCESS, res[TableFormat.DELTA].error
+        return res[TableFormat.DELTA].mode
+
+    now = time.time() - 100
+    write(3, [1, 2], now)
+    write(7, [11, 12], now)
+    assert sync(_FlatSource(spark, d, name="t")) == SyncMode.FULL
+    assert ParquetConversionSource(spark, d, name="t").sync_view is not None
+    write(9, [21], now + 10)
+    assert sync(ParquetConversionSource(spark, d, name="t")) == SyncMode.FULL
+    write(5, [31], now + 20)
+    assert sync(ParquetConversionSource(spark, d, name="t")) == SyncMode.INCREMENTAL
 
 
 def test_rewrite_applies_position_deletes_on_escaped_paths(spark, tmp_path):

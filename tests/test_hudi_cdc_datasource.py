@@ -161,3 +161,37 @@ def test_upsert_rewrite_commit_refused(spark, tmp_path):
         json.dump(meta, fh)
     with pytest.raises(ValueError, match="without CDC logging"):
         plan_commit("hudi_cdc", base, "002")
+
+
+def test_stream_schema_keeps_commit_meta_fields(spark, tmp_path):
+    """The stream's columns are the newest commit's schema as written,
+    `_hoodie_*` meta fields included (the batch reader's table schema
+    drops them); a base file that stores one streams its values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+
+    base = str(tmp_path / "t")
+    os.makedirs(base)
+    pq.write_table(
+        pa.table({"_hoodie_commit_time": ["c1", "c1"], "id": pa.array([1, 2], pa.int64())}),
+        os.path.join(base, "f.parquet"),
+    )
+    target = HudiConversionTarget(spark, base, table_name="t")
+    res = ConversionController().sync(ParquetConversionSource(spark, base, name="t"), {TableFormat.HUDI: target})
+    assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS
+    assert HudiCDCDataSource({"path": base}).schema().names == [
+        "_hoodie_commit_time",
+        "id",
+        "_change_type",
+        "_commit_instant",
+    ]
+    _register(spark)
+    got = _drain(spark, base, str(tmp_path / "cp"), "hudi_cdc_meta")
+    assert sorted((r["_hoodie_commit_time"], r["id"], r["_change_type"]) for r in got.collect()) == [
+        ("c1", 1, "insert"),
+        ("c1", 2, "insert"),
+    ]
+    (instant, _), = list_completed_instants(base)
+    assert "_hoodie_commit_time" not in read_hudi_cdc(spark, base, instant).columns
