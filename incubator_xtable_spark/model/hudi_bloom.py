@@ -1,6 +1,6 @@
 """Hudi bloom filters — the serialized form real Hudi stores in parquet
-footers (``org.apache.hudi.bloomfilter``) and in the ``bloom_filters``
-metadata partition (HoodieMetadataBloomFilter payloads).
+footers (``org.apache.hudi.bloomfilter``) and in the ``bloomFilter`` meta
+block of metadata-table HFiles.
 
 Public-format restatement (what, not code): Hudi's ``SimpleBloomFilter``
 wraps ``org.apache.hadoop.util.bloom.BloomFilter`` with
@@ -28,13 +28,11 @@ writable bytes:
 Provenance: restated from the public Apache Hadoop/Hudi sources named
 above; the environment ships no Hudi jars, so cross-writer byte equality
 is pinned by spec + self-consistent roundtrips (the same posture as
-model/hudi_hash.py). The metadata-record payload stores the UTF-8 bytes
-of the base64 string (HoodieMetadataPayload ships the string form).
+model/hudi_hash.py).
 
-Scale: bloom bytes are per-FILE metadata (KBs); building them scans each
-added file's key column once — executor-side in the record-index pass
-(targets/hudi_metadata_index.write_record_index_commit), never on the
-driver.
+Scale: an HFile's bloom covers that file's metadata record keys (KBs);
+the base-HFile writer (targets/hudi_metadata_index._write_base) builds it
+on the driver from the records it writes.
 """
 
 from __future__ import annotations

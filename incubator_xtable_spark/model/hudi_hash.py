@@ -154,45 +154,10 @@ def col_stats_index_key(partition_path: str, file_name: str, column: str) -> str
     )
 
 
-def java_string_hashcode(s: str) -> int:
-    """Java ``String.hashCode()`` — 31*h + c over UTF-16 code units, int32
-    wraparound (record keys with astral-plane chars hash over surrogate
-    PAIRS, exactly like the JVM)."""
-    h = 0
-    b = s.encode("utf-16-be")
-    for i in range(0, len(b), 2):
-        h = (31 * h + (b[i] << 8 | b[i + 1])) & 0xFFFFFFFF
-    return h - 0x100000000 if h >= 0x80000000 else h
-
-
-def _java_abs32(x: int) -> int:
-    # Java Math.abs(Integer.MIN_VALUE) overflows back to MIN_VALUE
-    return x if x == -(2**31) else abs(x)
-
-
-def map_record_key_to_file_group_index(record_key: str, num_file_groups: int) -> int:
-    """HoodieTableMetadataUtil.mapRecordKeyToFileGroupIndex — the shard a
-    record-index key lives in: ``Math.abs(Math.abs(hashCode) % n)`` with
-    Java's truncated (sign-of-dividend) modulo, so a real Hudi reader's
-    point lookup lands on the same file group this engine wrote."""
-    h = _java_abs32(java_string_hashcode(record_key))
-    r = _java_abs32(h) % num_file_groups if h >= 0 else -((-h) % num_file_groups)
-    return _java_abs32(r)
-
-
 def partition_stats_index_key(partition_path: str, column: str) -> str:
     """HoodieMetadataPayload.getPartitionStatsIndexKey (columnID +
     partitionID) — the col_stats key scheme minus the file member, so a
     column's partition aggregates sort contiguously for range scans."""
     return column_index_id(column) + partition_index_id(
         partition_identifier(partition_path)
-    )
-
-
-def bloom_filter_index_key(partition_path: str, file_name: str) -> str:
-    """HoodieMetadataPayload.getBloomFilterIndexKey (partitionID+fileID) —
-    the key shape of the bloom_filters partition, kept here for when that
-    partition lands."""
-    return partition_index_id(partition_identifier(partition_path)) + file_index_id(
-        file_name
     )

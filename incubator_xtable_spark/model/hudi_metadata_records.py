@@ -282,211 +282,6 @@ def files_partition_records(
     return out
 
 
-BLOOM_FILTER_TYPE = 4  # MetadataPartitionType.BLOOM_FILTERS record type
-RECORD_INDEX_TYPE = 5  # MetadataPartitionType.RECORD_INDEX record type
-
-# writer schema for bloom_filters records: HoodieMetadataRecord's
-# resolvable subset PLUS the HoodieMetadataBloomFilter branch (public
-# HoodieMetadata.avsc shape); ``bloomFilter`` carries the UTF-8 bytes of
-# the base64 SimpleBloomFilter string (model/hudi_bloom.py) — the string
-# form HoodieMetadataPayload ships
-BLOOM_FILTER_RECORD_SCHEMA = {
-    "type": "record",
-    "name": "HoodieMetadataRecord",
-    "namespace": "org.apache.hudi.avro.model",
-    "fields": HUDI_METADATA_RECORD_SCHEMA["fields"]
-    + [
-        {
-            "name": "BloomFilterMetadata",
-            "type": [
-                "null",
-                {
-                    "type": "record",
-                    "name": "HoodieMetadataBloomFilter",
-                    "fields": [
-                        {"name": "type", "type": "string"},
-                        {"name": "timestamp", "type": "string"},
-                        {"name": "bloomFilter", "type": "bytes"},
-                        {"name": "isDeleted", "type": "boolean"},
-                    ],
-                },
-            ],
-            "default": None,
-        }
-    ],
-}
-
-
-def bloom_filter_record(
-    partition_path: str,
-    file_name: str,
-    bloom_b64: str,
-    instant: str,
-    is_deleted: bool = False,
-) -> tuple[bytes, bytes]:
-    """-> (cell row key, avro value bytes) for one bloom-filter record,
-    keyed by HoodieMetadataPayload.getBloomFilterIndexKey (hashed
-    partitionID+fileID, model/hudi_hash.py)."""
-    from incubator_xtable_spark.model.hudi_hash import bloom_filter_index_key
-
-    key = bloom_filter_index_key(partition_path, file_name)
-    rec = {
-        "key": key,
-        "type": BLOOM_FILTER_TYPE,
-        "filesystemMetadata": None,
-        "ColumnStatsMetadata": None,
-        "BloomFilterMetadata": {
-            "type": "SIMPLE",
-            "timestamp": instant,
-            "bloomFilter": bloom_b64.encode("utf-8"),
-            "isDeleted": is_deleted,
-        },
-    }
-    return key.encode("utf-8"), encode_binary_record(BLOOM_FILTER_RECORD_SCHEMA, rec)
-
-# writer schema for record_index records: HoodieMetadataRecord's
-# resolvable subset PLUS the HoodieRecordIndexInfo branch (public
-# HoodieMetadata.avsc shape; fileIdEncoding=1 stores the fileId RAW in
-# the fileId field — the encoding external/non-UUID file ids take)
-RECORD_INDEX_RECORD_SCHEMA = {
-    "type": "record",
-    "name": "HoodieMetadataRecord",
-    "namespace": "org.apache.hudi.avro.model",
-    "fields": HUDI_METADATA_RECORD_SCHEMA["fields"]
-    + [
-        {
-            "name": "recordIndexMetadata",
-            "type": [
-                "null",
-                {
-                    "type": "record",
-                    "name": "HoodieRecordIndexInfo",
-                    "fields": [
-                        {"name": "partitionName", "type": ["null", "string"], "default": None},
-                        {"name": "fileIdHighBits", "type": ["null", "long"], "default": None},
-                        {"name": "fileIdLowBits", "type": ["null", "long"], "default": None},
-                        {"name": "fileIndex", "type": ["null", "int"], "default": None},
-                        {"name": "fileId", "type": ["null", "string"], "default": None},
-                        {"name": "instantTime", "type": ["null", "long"], "default": None},
-                        {"name": "fileIdEncoding", "type": "int", "default": 0},
-                    ],
-                },
-            ],
-            "default": None,
-        }
-    ],
-}
-
-
-def record_index_record(
-    record_key: str, partition_path: str, file_id: str, instant_ms: int
-) -> tuple[bytes, bytes]:
-    """-> (cell row key, avro value bytes) for one record-index entry.
-    Row key = the PLAIN record key (real Hudi does not hash RLI keys);
-    external file ids (not UUID-derived) use fileIdEncoding=1 raw."""
-    rec = {
-        "key": record_key,
-        "type": RECORD_INDEX_TYPE,
-        "filesystemMetadata": None,
-        "ColumnStatsMetadata": None,
-        "recordIndexMetadata": {
-            "partitionName": partition_path if partition_path else NON_PARTITIONED_NAME,
-            "fileIdHighBits": None,
-            "fileIdLowBits": None,
-            "fileIndex": None,
-            "fileId": file_id,
-            "instantTime": int(instant_ms),
-            "fileIdEncoding": 1,
-        },
-    }
-    return record_key.encode("utf-8"), encode_binary_record(RECORD_INDEX_RECORD_SCHEMA, rec)
-
-
-SECONDARY_INDEX_TYPE = 7  # MetadataPartitionType.SECONDARY_INDEX record type
-
-# writer schema for secondary-index records: HoodieMetadataRecord's
-# resolvable subset PLUS the HoodieSecondaryIndexInfo branch (public
-# HoodieMetadata.avsc, Hudi 1.0). The (secondary key, record key) pair
-# lives in the RECORD KEY itself — escaped parts joined by '$' per
-# SecondaryIndexKeyUtils — so the payload carries only the liveness flag.
-SECONDARY_INDEX_RECORD_SCHEMA = {
-    "type": "record",
-    "name": "HoodieMetadataRecord",
-    "namespace": "org.apache.hudi.avro.model",
-    "fields": HUDI_METADATA_RECORD_SCHEMA["fields"]
-    + [
-        {
-            "name": "SecondaryIndexMetadata",
-            "type": [
-                "null",
-                {
-                    "type": "record",
-                    "name": "HoodieSecondaryIndexInfo",
-                    "fields": [{"name": "isDeleted", "type": "boolean"}],
-                },
-            ],
-            "default": None,
-        }
-    ],
-}
-
-
-def escape_secondary_key_part(part: str) -> str:
-    r"""SecondaryIndexKeyUtils.escapeSpecialChars (public Hudi 1.0):
-    backslash doubles, the '$' separator escapes to '\$'."""
-    return part.replace("\\", "\\\\").replace("$", "\\$")
-
-
-def construct_secondary_index_key(secondary_key: str, record_key: str) -> str:
-    """escape(secondaryKey) + '$' + escape(recordKey) — the metadata-table
-    record key for one secondary-index mapping (SecondaryIndexKeyUtils.
-    constructSecondaryIndexKey; recipe restated from public Hudi sources,
-    unpinnable against a real artifact on this machine — the hudi-common
-    probe in tests/test_hudi_hash_jvm.py found no jar)."""
-    return f"{escape_secondary_key_part(secondary_key)}${escape_secondary_key_part(record_key)}"
-
-
-def split_secondary_index_key(key: str) -> tuple[str, str]:
-    """Inverse of construct_secondary_index_key: split on the first
-    UNESCAPED '$', unescape both parts."""
-    parts: list[str] = []
-    buf: list[str] = []
-    i = 0
-    while i < len(key):
-        c = key[i]
-        if c == "\\" and i + 1 < len(key):
-            buf.append(key[i + 1])
-            i += 2
-            continue
-        if c == "$" and not parts:
-            parts.append("".join(buf))
-            buf = []
-            i += 1
-            continue
-        buf.append(c)
-        i += 1
-    if not parts:
-        raise ValueError(f"secondary-index key has no unescaped '$': {key!r}")
-    return parts[0], "".join(buf)
-
-
-def secondary_index_record(
-    secondary_key: str, record_key: str, is_deleted: bool = False
-) -> tuple[bytes, bytes]:
-    """-> (cell row key, avro value bytes) for one secondary-index mapping;
-    isDeleted=True is the update/delete tombstone real
-    HoodieMetadataPayload ships for a superseded mapping."""
-    key = construct_secondary_index_key(secondary_key, record_key)
-    rec = {
-        "key": key,
-        "type": SECONDARY_INDEX_TYPE,
-        "filesystemMetadata": None,
-        "ColumnStatsMetadata": None,
-        "SecondaryIndexMetadata": {"isDeleted": is_deleted},
-    }
-    return key.encode("utf-8"), encode_binary_record(SECONDARY_INDEX_RECORD_SCHEMA, rec)
-
-
 def files_partition_mutation_records(
     adds: dict[str, dict[str, int]],
     removes: dict[str, list[str]],
@@ -649,20 +444,6 @@ def merge_metadata_records(
             else:
                 out[key] = rec
             continue
-        if rtype == 4:
-            bf = rec.get("BloomFilterMetadata") or {}
-            if bf.get("isDeleted"):
-                out.pop(key, None)
-            else:
-                out[key] = rec
-            continue
-        if rtype == 7:
-            si = rec.get("SecondaryIndexMetadata") or {}
-            if si.get("isDeleted"):
-                out.pop(key, None)
-            else:
-                out[key] = rec
-            continue
         if rtype in (1, 2):
             prev = out.get(key)
             merged = dict((prev or {}).get("filesystemMetadata") or {})
@@ -691,8 +472,7 @@ def merged_metadata_slice_records(
     DELETE_BLOCK (record keys to drop), rollback COMMAND blocks (applied
     by the log reader). Anything else refuses loudly — callers probe with
     metadata_logs_supported first and fall back instead of serving stale
-    state. Runs wherever called (executor-side from the read tiers);
-    bounded by index size, never data size."""
+    state. Bounded by index size, never data size."""
     from incubator_xtable_spark.model.hfile import read_hfile
 
     ordered: list[tuple[str, dict]] = list(

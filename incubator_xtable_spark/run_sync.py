@@ -192,14 +192,7 @@ def build_target(spark, fmt: str, dataset: dict[str, Any]):
             metadata_index_compact_every=int(
                 dataset.get("hudiMetadataIndexCompactEvery", 10)
             ),
-            # per-ROW record-level index sharded by the given key field
-            record_index_field=dataset.get("hudiRecordIndexField"),
-            record_index_shards=int(dataset.get("hudiRecordIndexShards", 4)),
-            bloom_filters=str(dataset.get("hudiBloomFilters", "")).lower() == "true",
             partition_stats=str(dataset.get("hudiPartitionStats", "")).lower() == "true",
-            # Hudi 1.0 secondary index on one column (requires the RLI)
-            secondary_index_field=dataset.get("hudiSecondaryIndexField"),
-            secondary_index_shards=int(dataset.get("hudiSecondaryIndexShards", 4)),
             # 8 -> Hudi 1.0 active-timeline layout (.hoodie/timeline,
             # completion-time instant filenames)
             table_version=int(dataset.get("hudiTableVersion", 6)),

@@ -31,8 +31,7 @@ and footers like an unindexed one.
 Scale notes: the stats, listing and point-lookup readers run on the
 driver. The indexes are metadata-sized (files x columns records), and a
 Spark job over them paid seconds of fixed per-job cost where the decode
-takes milliseconds. The bulk record-index and secondary-index reads
-return DataFrames for Spark consumers, one task per file slice.
+takes milliseconds.
 Each LITE delta is one pyarrow file written from the rows the target
 already holds, then renamed into place.
 """
@@ -40,13 +39,11 @@ already holds, then renamed into place.
 from __future__ import annotations
 
 import glob
-import json
 import logging
 import os
 import uuid
 from struct import error as struct_error
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 log = logging.getLogger(__name__)
@@ -471,287 +468,6 @@ def hfile_files_listing(base_path: str) -> list[tuple[str, str, int]]:
                 if not info.get("isDeleted"):
                     out.append((part, name, int(info["size"])))
     return out
-
-
-RECORD_INDEX_PARTITION = "record_index"
-HFILE_RECORD_INDEX_SUBDIR = os.path.join(".hoodie", "metadata", "record_index")
-
-
-def record_index_available(base_path: str) -> bool:
-    """isMetadataPartitionAvailable(RECORD_INDEX) analog: the table config
-    advertises the partition and decodable HFile slices exist in it."""
-    from incubator_xtable_spark.sources.hudi_source import read_properties
-
-    props = read_properties(base_path)
-    parts = (props.get(METADATA_PARTITIONS_KEY) or "").split(",")
-    if RECORD_INDEX_PARTITION not in parts:
-        return False
-    d = os.path.join(base_path, HFILE_RECORD_INDEX_SUBDIR)
-    slices, logs_ok = _hfile_partition_state(d)
-    if not logs_ok:
-        log.warning(
-            "record_index metadata partition of %s has undecodable log "
-            "file(s); key lookups unavailable",
-            base_path,
-        )
-        return False
-    return bool(slices)
-
-
-def record_index_num_shards(base_path: str) -> int:
-    """Shard count = number of record-index file groups on disk (the
-    writer names them record-index-<i:04d>-0; real Hudi likewise fixes
-    the file-group count at index build time)."""
-    d = os.path.join(base_path, HFILE_RECORD_INDEX_SUBDIR)
-    slices, _ = _hfile_partition_state(d)
-    return len(slices)
-
-
-def read_record_index(spark: SparkSession, base_path: str) -> DataFrame:
-    """Decode the record_index partition into (record_key, partition_path,
-    file_id, instant_ms) — one task per shard slice, pure-python
-    HFile/log/avro codecs in Arrow batch workers (the same distribution
-    as the col-stats and files tiers); tombstoned keys drop in the
-    merge. Beyond the reference (it consumes files/col_stats only)."""
-    slices, _ = _hfile_partition_state(os.path.join(base_path, HFILE_RECORD_INDEX_SUBDIR))
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out_schema = T.StructType(
-        [
-            T.StructField("record_key", T.StringType(), False),
-            T.StructField("partition_path", T.StringType(), True),
-            T.StructField("file_id", T.StringType(), True),
-            T.StructField("instant_ms", T.LongType(), True),
-        ]
-    )
-
-    def _decode(batches):
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import json as _json
-
-        import pandas as pd
-
-        from incubator_xtable_spark.model.hudi_metadata_records import (
-            NON_PARTITIONED_NAME,
-            merged_metadata_slice_records,
-        )
-
-        for pdf in batches:
-            rows = []
-            for p, logs_json in zip(pdf["hfile_path"], pdf["log_paths"]):
-                for key, rec in merged_metadata_slice_records(p, _json.loads(logs_json)):
-                    ri = rec.get("recordIndexMetadata")
-                    if ri is None:
-                        continue
-                    part = ri.get("partitionName")
-                    rows.append(
-                        (
-                            key,
-                            "" if part == NON_PARTITIONED_NAME else part,
-                            ri.get("fileId"),
-                            ri.get("instantTime"),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["record_key", "partition_path", "file_id", "instant_ms"]
-            )
-
-    listing = spark.createDataFrame(
-        [(p, json.dumps(logs)) for p, logs in slices],
-        "hfile_path STRING, log_paths STRING",
-    )
-    if listing.rdd.getNumPartitions() < len(slices):
-        listing = listing.repartition(len(slices))
-    return listing.mapInPandas(_decode, out_schema)
-
-
-def lookup_record_key(base_path: str, record_key: str) -> dict | None:
-    """POINT lookup of one record key — the RLI read shape real Hudi's
-    key-based file pruning uses: shard by
-    mapRecordKeyToFileGroupIndex (Java hashCode semantics), HFile-seek
-    that one shard's base, replay its logs for the key. -> decoded
-    HoodieRecordIndexInfo dict (partitionName/fileId/instantTime), or
-    None when the key is absent/tombstoned. Driver-side by design —
-    metadata-cheap probes; bulk reads go through read_record_index."""
-    from incubator_xtable_spark.model.hudi_hash import (
-        map_record_key_to_file_group_index,
-    )
-
-    d = os.path.join(base_path, HFILE_RECORD_INDEX_SUBDIR)
-    slices, _ = _hfile_partition_state(d, probe=False)
-    if not slices:
-        return None
-    by_group = {os.path.basename(p).split("_")[0]: (p, logs) for p, logs in slices}
-    shard = map_record_key_to_file_group_index(record_key, len(slices))
-    hit = by_group.get(f"record-index-{shard:04d}-0")
-    if hit is None:
-        return None
-    rec = _safe_point_lookup(hit[0], hit[1], record_key)
-    # None means NOT INDEXED, not proven-absent: a crashed commit may
-    # leave tombstones for files the timeline still lists (the same
-    # orphan-index posture as col_stats, where the footer tier covers the
-    # gap) — consumers needing proof must fall back to a data scan.
-    return (rec or {}).get("recordIndexMetadata")
-
-
-def _secondary_index_dir(base_path: str, field: str) -> str:
-    return os.path.join(
-        base_path, ".hoodie", "metadata", f"secondary_index_idx_{field}"
-    )
-
-
-def secondary_index_available(base_path: str, field: str) -> bool:
-    """isMetadataPartitionAvailable(SECONDARY_INDEX) analog for the
-    ``secondary_index_idx_<field>`` partition."""
-    from incubator_xtable_spark.sources.hudi_source import read_properties
-
-    props = read_properties(base_path)
-    parts = (props.get(METADATA_PARTITIONS_KEY) or "").split(",")
-    if f"secondary_index_idx_{field}" not in parts:
-        return False
-    slices, logs_ok = _hfile_partition_state(_secondary_index_dir(base_path, field))
-    if not logs_ok:
-        log.warning(
-            "secondary_index_idx_%s partition of %s has undecodable log "
-            "file(s); secondary lookups unavailable",
-            field,
-            base_path,
-        )
-        return False
-    return bool(slices)
-
-
-def read_secondary_index(spark: SparkSession, base_path: str, field: str) -> DataFrame:
-    """Decode a secondary-index partition into (secondary_key, record_key)
-    mappings — one task per shard slice, pure-python codecs in Arrow
-    batch workers; isDeleted mappings drop in the type-7 merge. Beyond
-    the reference (Hudi 1.0 feature; the reference consumes
-    files/col_stats only)."""
-    slices, _ = _hfile_partition_state(_secondary_index_dir(base_path, field))
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out_schema = T.StructType(
-        [
-            T.StructField("secondary_key", T.StringType(), False),
-            T.StructField("record_key", T.StringType(), False),
-        ]
-    )
-
-    def _decode(batches):
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import json as _json
-
-        import pandas as pd
-
-        from incubator_xtable_spark.model.hudi_metadata_records import (
-            merged_metadata_slice_records,
-            split_secondary_index_key,
-        )
-
-        for pdf in batches:
-            rows = []
-            for p, logs_json in zip(pdf["hfile_path"], pdf["log_paths"]):
-                for key, rec in merged_metadata_slice_records(p, _json.loads(logs_json)):
-                    if rec.get("type") != 7:
-                        continue
-                    rows.append(split_secondary_index_key(key))
-            yield pd.DataFrame(rows, columns=["secondary_key", "record_key"])
-
-    listing = spark.createDataFrame(
-        [(p, json.dumps(logs)) for p, logs in slices],
-        "hfile_path STRING, log_paths STRING",
-    )
-    if listing.rdd.getNumPartitions() < len(slices):
-        listing = listing.repartition(len(slices))
-    return listing.mapInPandas(_decode, out_schema)
-
-
-def lookup_secondary_key(base_path: str, field: str, value: str) -> list[str]:
-    """POINT lookup: record keys whose ``field`` equals ``value``,
-    resolved from ONE shard (mappings shard by Java hashCode of the
-    escaped secondary part — see
-    targets/hudi_metadata_index.write_secondary_index_commit; an engine
-    routing decision, documented there). Prefix-scans the pinned shard's
-    merged records for ``escape(value)$`` — bounded by that shard's index
-    size, metadata-cheap by construction; bulk reads go through
-    read_secondary_index. Returns [] when the value is absent (or its
-    mappings are all tombstoned)."""
-    from incubator_xtable_spark.model.hudi_hash import (
-        map_record_key_to_file_group_index,
-    )
-    from incubator_xtable_spark.model.hudi_metadata_records import (
-        escape_secondary_key_part,
-        merged_metadata_slice_records,
-        split_secondary_index_key,
-    )
-
-    d = _secondary_index_dir(base_path, field)
-    slices, _ = _hfile_partition_state(d, probe=False)
-    if not slices:
-        return []
-    by_group = {os.path.basename(p).split("_")[0]: (p, logs) for p, logs in slices}
-    shard = map_record_key_to_file_group_index(
-        escape_secondary_key_part(value), len(slices)
-    )
-    hit = by_group.get(f"secondary-index-{shard:04d}-0")
-    if hit is None:
-        return []
-    prefix = escape_secondary_key_part(value) + "$"
-    out = []
-    for key, rec in merged_metadata_slice_records(hit[0], list(hit[1])):
-        if rec.get("type") == 7 and key.startswith(prefix):
-            sec, rk = split_secondary_index_key(key)
-            if sec == value:
-                out.append(rk)
-    return sorted(out)
-
-
-BLOOM_FILTERS_PARTITION = "bloom_filters"
-HFILE_BLOOM_FILTERS_SUBDIR = os.path.join(".hoodie", "metadata", "bloom_filters")
-
-
-def bloom_filters_available(base_path: str) -> bool:
-    """isMetadataPartitionAvailable(BLOOM_FILTERS) analog."""
-    from incubator_xtable_spark.sources.hudi_source import read_properties
-
-    props = read_properties(base_path)
-    parts = (props.get(METADATA_PARTITIONS_KEY) or "").split(",")
-    if BLOOM_FILTERS_PARTITION not in parts:
-        return False
-    d = os.path.join(base_path, HFILE_BLOOM_FILTERS_SUBDIR)
-    slices, logs_ok = _hfile_partition_state(d)
-    return logs_ok and bool(slices)
-
-
-def lookup_bloom_filter(base_path: str, partition_path: str, file_name: str):
-    """POINT lookup of one file's bloom filter — the read shape real
-    Hudi's bloom-index file pruning uses: compute the hashed
-    getBloomFilterIndexKey, HFile-seek the base, replay logs for the key.
-    -> model/hudi_bloom.SimpleBloomFilter, or None when absent/deleted.
-    Probe keys with .might_contain(record_key). None means NO
-    INFORMATION (skip pruning), never proof of emptiness — e.g. a
-    crashed commit can tombstone a bloom for a file the timeline still
-    lists."""
-    from incubator_xtable_spark.model.hudi_bloom import SimpleBloomFilter
-    from incubator_xtable_spark.model.hudi_hash import bloom_filter_index_key
-
-    key = bloom_filter_index_key(partition_path, file_name)
-    d = os.path.join(base_path, HFILE_BLOOM_FILTERS_SUBDIR)
-    slices, _ = _hfile_partition_state(d, probe=False)
-    for base, logs in slices:
-        rec = _safe_point_lookup(base, logs, key)
-        if rec is not None:
-            bf = rec.get("BloomFilterMetadata") or {}
-            if bf.get("isDeleted") or not bf.get("bloomFilter"):
-                return None
-            return SimpleBloomFilter.deserialize_from_string(
-                bytes(bf["bloomFilter"]).decode("utf-8")
-            )
-    return None
 
 
 def coerce_hudi_wrapper_value(v, dtype):

@@ -853,6 +853,18 @@ def cdc_log_rows(path: str, schema: T.StructType) -> list[tuple]:
     return rows
 
 
+def cdc_log_batch(path: str, schema: T.StructType, commit_column: str, instant: str) -> pa.RecordBatch:
+    """`cdc_log_rows` of one CDC log as an Arrow batch: ``schema``'s
+    columns, `_change_type`, then ``commit_column`` holding ``instant``."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    rows = cdc_log_rows(path, schema)
+    types = [to_arrow_type(f.dataType) for f in schema.fields] + [pa.string()]
+    arrays = [pa.array([r[i] for r in rows], type=t) for i, t in enumerate(types)]
+    arrays.append(pa.array([instant] * len(rows), pa.string()))
+    return pa.RecordBatch.from_arrays(arrays, schema.fieldNames() + ["_change_type", commit_column])
+
+
 def instant_data_bytes(base_path: str, instant: str, action: str) -> int:
     """Planned data bytes of one instant from its commit metadata: write
     stats' fileSizeInBytes plus CDC supplemental file sizes."""
@@ -874,8 +886,8 @@ def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFram
     columns plus `_change_type` (insert / update_preimage /
     update_postimage / delete) and `_commit_instant` — the Hudi member of
     the CDC-read triple (read_paimon_changelog / read_delta_cdf), reading
-    the rows `plan_changes` plans. CDC log records decode on the driver
-    (a log is change-sized); a commit the plan leaves to derivation reads
+    the rows `plan_changes` plans. CDC logs decode on executors, one
+    task per log file; a commit the plan leaves to derivation reads
     the touched file groups' EFFECTIVE rows (base or log-merged
     compaction shadow) before vs after the commit, full-outer-joined on
     the record key; value changes emit preimage+postimage pairs.
@@ -891,8 +903,25 @@ def read_hudi_cdc(spark: SparkSession, base_path: str, instant: str) -> DataFram
     logs = [f for f in plan.files if f.fmt == HUDI_CDC_LOG]
     if not logs:
         return read_changes(spark, plan, commit_column, instant)
-    rows = [r + (instant,) for f in logs for r in cdc_log_rows(f.path, plan.schema)]
-    return spark.createDataFrame(rows, change_schema(plan.schema, commit_column))
+    schema, name = plan.schema, commit_column.name
+    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+    def _decode(batches):
+        import sys as _sys
+
+        if pkg_root not in _sys.path:
+            _sys.path.insert(0, pkg_root)
+        from incubator_xtable_spark.sources.hudi_source import cdc_log_batch
+
+        for b in batches:
+            for path in b.column(0).to_pylist():
+                yield cdc_log_batch(path, schema, name, instant)
+
+    # one slice, so one task, per log
+    paths = spark.sparkContext.parallelize([(f.path,) for f in logs], len(logs))
+    return spark.createDataFrame(paths, "path STRING").mapInArrow(
+        _decode, change_schema(schema, commit_column)
+    )
 
 
 def _derive_changes(

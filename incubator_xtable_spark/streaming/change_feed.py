@@ -388,17 +388,13 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         if f is None:
             return
         if f.fmt == HUDI_CDC_LOG:
-            from incubator_xtable_spark.sources.hudi_source import cdc_log_rows
+            from incubator_xtable_spark.sources.hudi_source import cdc_log_batch
 
-            table = T.StructType(list(self.fields))
-            rows = cdc_log_rows(f.path, table)
-            if not rows:
-                return
-            arrays = [
-                pa.array([r[i] for r in rows], type=to_arrow_type(field.dataType))
-                for i, field in enumerate(self.fields)
-            ]
-            yield self._batch(arrays, pa.array([r[-1] for r in rows], pa.string()), partition.commit)
+            batch = cdc_log_batch(
+                f.path, T.StructType(list(self.fields)), self.commit_name, partition.commit
+            )
+            if batch.num_rows:
+                yield batch
             return
         if f.fmt != "PARQUET":
             # the executor read parses files with pyarrow.parquet; refuse

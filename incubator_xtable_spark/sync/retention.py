@@ -1127,27 +1127,12 @@ def hudi_cluster_small_files(
     props = read_properties(base_path)
     # index posture must FOLLOW the table, not this function's defaults:
     # an hfile-indexed table gets hfile deltas (mixed parquet/hfile
-    # shapes would break the advertised-partition contract), and a table
-    # advertising row-keyed indexes (record_index / bloom / secondary)
-    # refuses — a clustering commit that does not rewrite those index
-    # mappings would leave record keys pointing at replaced files.
+    # shapes would break the advertised-partition contract)
     advertised = [
         p
         for p in (props.get("hoodie.table.metadata.partitions") or "").split(",")
         if p
     ]
-    row_keyed = [
-        p
-        for p in advertised
-        if p == "record_index" or p == "bloom_filters" or p.startswith("secondary_index_")
-    ]
-    if row_keyed:
-        raise NotImplementedError(
-            "hudi_cluster_small_files on a table advertising row-keyed "
-            f"metadata indexes ({', '.join(row_keyed)}) would leave stale "
-            "record->file mappings; cluster through a full target sync with "
-            "the index key fields configured instead"
-        )
     meta_dir = os.path.join(base_path, ".hoodie", "metadata", "files")
     index_format = (
         "hfile"

@@ -101,7 +101,6 @@ def _write_base(
     file_id: str,
     instant: str,
     records: list[tuple[bytes, bytes]],
-    record_schema: dict | None = None,
 ) -> tuple[str, int]:
     """Write one full-state base HFile; -> (rel path inside the metadata
     table, file size). Atomic via write_hfile's tmp+replace.
@@ -117,7 +116,7 @@ def _write_base(
     os.makedirs(d, exist_ok=True)
     records = sorted(records, key=lambda kv: kv[0])
     path = os.path.join(d, f"{file_id}_{WRITE_TOKEN}_{instant}.hfile")
-    info = {"schema": json.dumps(record_schema or HUDI_METADATA_RECORD_SCHEMA).encode("utf-8")}
+    info = {"schema": json.dumps(HUDI_METADATA_RECORD_SCHEMA).encode("utf-8")}
     meta_blocks = None
     if records:
         info["minRecordKey"] = records[0][0]
@@ -137,7 +136,6 @@ def _append_log(
     instant: str,
     records: list[tuple[bytes, bytes]],
     delete_keys: list[str] | None = None,
-    record_schema: dict | None = None,
 ) -> tuple[str, int]:
     """Append one metadata log file carrying this commit's delta records as
     a single HFILE_DATA_BLOCK (real Hudi's metadata log block format —
@@ -155,11 +153,10 @@ def _append_log(
     )
     from incubator_xtable_spark.sources.hudi_metadata import slice_log_files
 
-    schema = record_schema or HUDI_METADATA_RECORD_SCHEMA
+    schema = json.dumps(HUDI_METADATA_RECORD_SCHEMA)
     name = os.path.basename(base_path_of_slice)[: -len(".hfile")]
     file_id, _token, base_instant = name.split("_")[0], None, name.split("_")[2]
-    # idempotence under Spark task retries/speculation (shard appends run
-    # executor-side): the write token IS the commit instant, the content
+    # idempotence: the write token IS the commit instant, the content
     # is deterministic (key-sorted records, order-free bloom bits), and
     # one commit writes at most one log per file group — so a log whose
     # token matches this instant is THIS append already done
@@ -191,10 +188,10 @@ def _append_log(
             struct.pack(">ii", 1, len(blob)) + blob,
         )
     if records or not delete_keys:
-        content = hfile_bytes(records, {"schema": json.dumps(schema).encode("utf-8")})
+        content = hfile_bytes(records, {"schema": schema.encode("utf-8")})
         block += _block_bytes(
             HFILE_DATA_BLOCK,
-            {H_INSTANT_TIME: instant, H_SCHEMA: json.dumps(schema)},
+            {H_INSTANT_TIME: instant, H_SCHEMA: schema},
             content,
         )
     path = os.path.join(d, f".{file_id}_{base_instant}.log.{version}_{instant}")
@@ -282,13 +279,7 @@ def _compacted_records(
             fs_ordered.append((key, rec))
             continue
         cs = rec.get("ColumnStatsMetadata") or {}
-        bf = rec.get("BloomFilterMetadata") or {}
-        si = rec.get("SecondaryIndexMetadata") or {}
-        if (
-            (rtype == 3 and cs.get("isDeleted"))
-            or (rtype == 4 and bf.get("isDeleted"))
-            or (rtype == 7 and si.get("isDeleted"))
-        ):
+        if rtype == 3 and cs.get("isDeleted"):
             raw_state.pop(key, None)
         elif combine_type3 and rtype == 3:
             raw_state.setdefault(key, []).append(raw)
@@ -312,7 +303,6 @@ def _commit_partition(
     delta_records: list[tuple[bytes, bytes]],
     compact_every: int,
     delete_keys: list[str] | None = None,
-    record_schema: dict | None = None,
     combine_type3: bool = False,
     full_state_fn=None,
 ) -> tuple[str, int, int]:
@@ -328,11 +318,11 @@ def _commit_partition(
     base, logs = _slice_state(d, file_id)
     if base is None:
         # fresh index: tombstones have nothing to drop
-        rel, size = _write_base(d, file_id, instant, delta_records, record_schema)
+        rel, size = _write_base(d, file_id, instant, delta_records)
         return rel, size, len(delta_records)
-    rel, size = _append_log(d, base, instant, delta_records, delete_keys, record_schema)
+    rel, size = _append_log(d, base, instant, delta_records, delete_keys)
     # re-list instead of appending: _append_log's idempotent early-return
-    # (task retries) must not double-count a log toward compact_every or
+    # must not double-count a log toward compact_every or
     # feed compaction the same delta twice
     from incubator_xtable_spark.sources.hudi_metadata import slice_log_files
 
@@ -341,484 +331,9 @@ def _commit_partition(
         merged = full_state_fn() if full_state_fn is not None else None
         if merged is None:
             merged = _compacted_records(base, logs_after, combine_type3=combine_type3)
-        rel, size = _write_base(d, file_id, instant, merged, record_schema)
+        rel, size = _write_base(d, file_id, instant, merged)
         return rel, size, len(merged)
     return rel, size, len(delta_records)
-
-
-RECORD_INDEX_PARTITION = "record_index"
-DEFAULT_RECORD_INDEX_SHARDS = 4
-
-
-def write_record_index_commit(
-    spark,
-    base_path: str,
-    instant: str,
-    add_rel_paths: list[str],
-    removed_rel_paths: list[str],
-    record_key_field: str,
-    *,
-    num_shards: int = DEFAULT_RECORD_INDEX_SHARDS,
-    compact_every: int = DEFAULT_COMPACT_EVERY,
-) -> list[tuple[str, str, str, int, int]]:
-    """Maintain the ``record_index`` metadata partition (real Hudi's RLI,
-    beyond the reference — it only consumes files/col_stats) for one
-    commit: one HoodieRecordIndexInfo record per data row keyed by the
-    PLAIN record key, sharded across ``num_shards`` file groups by
-    HoodieTableMetadataUtil.mapRecordKeyToFileGroupIndex (Java hashCode
-    semantics, model/hudi_hash.py) so real readers' point lookups land on
-    the right group. -> metadata-deltacommit stat tuples
-    (partition, fileId, rel_path, size, n_records).
-
-    Scale/distribution: the index is DATA-scale (one record per row), so
-    nothing funnels through the driver — added/removed files scan
-    distributed for the key column, keys shard by the Java hash, and each
-    shard's log/base file is written EXECUTOR-side by its own task
-    (applyInPandas over groupBy(shard); the pure-python HFile/log codecs
-    run in the worker). Removed files' keys that do not re-appear in this
-    commit's adds tombstone via DELETE_BLOCKs (a distributed left_anti —
-    the files still exist on disk, conversion is metadata-only).
-    Single-writer posture assumes a shared filesystem, the same
-    assumption every target's metadata write already makes."""
-    from pyspark.sql import functions as F
-
-    base = base_path.rstrip("/")
-
-    def _keys(rel_paths: list[str]):
-        if not rel_paths:
-            return None
-        paths = [os.path.join(base, p) for p in rel_paths]
-        df = spark.read.parquet(*paths).select(
-            F.col(record_key_field).cast("string").alias("record_key"),
-            F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "").alias("_fp"),
-        )
-        rel = F.col("_fp").substr(F.lit(len(base) + 2), F.length(F.col("_fp")))
-        fname = F.substring_index(rel, "/", -1)
-        part = F.when(
-            rel.contains("/"), rel.substr(F.lit(1), F.length(rel) - F.length(fname) - 1)
-        ).otherwise(F.lit(""))
-        # fileId = file name stem (targets/hudi_target.file_id_of semantics)
-        file_id = F.regexp_replace(fname, r"\.[^.]*$", "")
-        return df.select(
-            "record_key",
-            part.alias("partition_path"),
-            file_id.alias("file_id"),
-        )
-
-    adds = _keys(add_rel_paths)
-    removed = _keys(removed_rel_paths)
-    if adds is None and removed is None:
-        return []
-    tomb = (
-        removed.select("record_key").join(adds.select("record_key"), "record_key", "left_anti")
-        if adds is not None and removed is not None
-        else (removed.select("record_key") if adds is None else None)
-    )
-
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    d = _partition_dir(base_path, RECORD_INDEX_PARTITION)
-    os.makedirs(d, exist_ok=True)
-    instant_ms = _instant_ms(instant)
-
-    # the shard->key mapping is FIXED at index build time (real Hudi
-    # likewise pins the file-group count): later commits must shard by
-    # the on-disk group count, whatever num_shards the caller passes now
-    from incubator_xtable_spark.sources.hudi_metadata import _hfile_partition_state
-
-    existing_groups, _ = _hfile_partition_state(d)
-    if existing_groups:
-        num_shards = len(existing_groups)
-
-    rows = None
-    if adds is not None:
-        rows = adds.select(
-            "record_key", "partition_path", "file_id", F.lit(False).alias("is_tombstone")
-        )
-    if tomb is not None:
-        trows = tomb.select(
-            "record_key",
-            F.lit("").alias("partition_path"),
-            F.lit("").alias("file_id"),
-            F.lit(True).alias("is_tombstone"),
-        ).distinct()
-        rows = trows if rows is None else rows.unionByName(trows)
-
-    import pandas as pd  # noqa: F401  (worker dependency, import-checked here)
-
-    out_schema = (
-        "shard INT, rel_path STRING, size LONG, n_records LONG"
-    )
-
-    def _write_shard(key, pdf):
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import pandas as _pd
-
-        from incubator_xtable_spark.model.hudi_metadata_records import (
-            RECORD_INDEX_RECORD_SCHEMA,
-            record_index_record,
-        )
-        from incubator_xtable_spark.targets.hudi_metadata_index import (
-            _commit_partition as _cp,
-        )
-
-        shard = int(key[0])
-        file_id = f"record-index-{shard:04d}-0"
-        records, delete_keys = [], []
-        for rk, part, fid, is_t in zip(
-            pdf["record_key"], pdf["partition_path"], pdf["file_id"], pdf["is_tombstone"]
-        ):
-            if bool(is_t):
-                delete_keys.append(str(rk))
-            else:
-                records.append(record_index_record(str(rk), str(part), str(fid), instant_ms))
-        rel, size, n = _cp(
-            d,
-            file_id,
-            instant,
-            records,
-            compact_every,
-            delete_keys=delete_keys or None,
-            record_schema=RECORD_INDEX_RECORD_SCHEMA,
-        )
-        return _pd.DataFrame(
-            [(shard, rel, size, n)], columns=["shard", "rel_path", "size", "n_records"]
-        )
-
-    # shard assignment is Arrow-batched (mapInPandas — no row UDFs in
-    # this repo): Java String.hashCode semantics live in
-    # model/hudi_hash.map_record_key_to_file_group_index; the groupBy
-    # below is the single shuffle of the whole index write
-    shard_schema = (
-        "record_key STRING, partition_path STRING, file_id STRING, "
-        "is_tombstone BOOLEAN, shard INT"
-    )
-
-    def _assign_shards(batches):
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        from incubator_xtable_spark.model.hudi_hash import (
-            map_record_key_to_file_group_index as _map,
-        )
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["shard"] = [_map(str(k), num_shards) for k in pdf["record_key"]]
-            yield pdf
-
-    sharded = rows.mapInPandas(_assign_shards, shard_schema)
-    stats = sharded.groupBy("shard").applyInPandas(_write_shard, out_schema).collect()
-    out = [
-        (
-            RECORD_INDEX_PARTITION,
-            f"record-index-{int(r['shard']):04d}-0",
-            r["rel_path"],
-            int(r["size"]),
-            int(r["n_records"]),
-        )
-        for r in stats
-    ]
-    # every shard's file group must exist from the FIRST commit — the
-    # reader derives the shard modulus from the on-disk group count, so
-    # a missing (never-touched) group would silently change the mapping
-    from incubator_xtable_spark.model.hudi_metadata_records import (
-        RECORD_INDEX_RECORD_SCHEMA,
-    )
-
-    touched = {int(r["shard"]) for r in stats}
-    for i in range(num_shards):
-        fid = f"record-index-{i:04d}-0"
-        if i in touched or _slice_state(d, fid)[0] is not None:
-            continue
-        rel, size = _write_base(d, fid, instant, [], RECORD_INDEX_RECORD_SCHEMA)
-        out.append((RECORD_INDEX_PARTITION, fid, rel, size, 0))
-    return out
-
-
-DEFAULT_SECONDARY_INDEX_SHARDS = 4
-
-
-def secondary_index_partition_name(field: str) -> str:
-    """Hudi 1.0 names SQL-created secondary indexes
-    ``secondary_index_<index name>``; the engine derives the index name as
-    ``idx_<field>`` (what ``CREATE INDEX idx_<field> ...`` would yield)."""
-    return f"secondary_index_idx_{field}"
-
-
-def write_secondary_index_commit(
-    spark,
-    base_path: str,
-    instant: str,
-    add_rel_paths: list[str],
-    removed_rel_paths: list[str],
-    record_key_field: str,
-    secondary_key_field: str,
-    *,
-    num_shards: int = DEFAULT_SECONDARY_INDEX_SHARDS,
-    compact_every: int = DEFAULT_COMPACT_EVERY,
-) -> list[tuple[str, str, str, int, int]]:
-    """Maintain a ``secondary_index_idx_<field>`` metadata partition
-    (Hudi 1.0's secondary index, beyond the reference): one type-7
-    HoodieSecondaryIndexInfo record per (secondary value, record key)
-    mapping in ADDED files — keyed by SecondaryIndexKeyUtils'
-    ``escape(sec)$escape(rec)`` — plus isDeleted records for mappings
-    that leave with REMOVED files (the payload tombstone real
-    HoodieMetadataPayload ships for superseded mappings, dropped by the
-    type-7 merge at read and at compaction). -> metadata-deltacommit
-    stat tuples.
-
-    Sharding: mappings shard by Java hashCode of the ESCAPED secondary
-    part (model/hudi_hash.map_record_key_to_file_group_index), so a
-    secondary-key lookup pins ONE file group, mirroring the RLI point-
-    lookup shape. (Real Hudi's exact SI file-group routing is unpinnable
-    on this machine — the hudi-common probe in tests/test_hudi_hash_jvm
-    found no jar; the key RECIPE is restated from public sources and the
-    routing is an engine decision, documented at the read tier.)
-    NULL secondary values are not indexed (documented posture — a
-    secondary lookup is an equality probe, and the writer would need a
-    null-marker key real Hudi does not publish).
-
-    Distribution: added/removed files scan distributed for the two key
-    columns; pairs shard via one Arrow-batched pass; each shard's
-    base/log write runs in its own task through the shared
-    base/log/compaction lifecycle (_commit_partition). The single
-    shuffle is the groupBy(shard)."""
-    from pyspark.sql import functions as F
-
-    base = base_path.rstrip("/")
-    partition = secondary_index_partition_name(secondary_key_field)
-    d = _partition_dir(base_path, partition)
-    os.makedirs(d, exist_ok=True)
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    instant_s = instant
-
-    def _pairs(rel_paths: list[str]):
-        if not rel_paths:
-            return None
-        paths = [os.path.join(base, p) for p in rel_paths]
-        return (
-            spark.read.parquet(*paths)
-            .select(
-                F.col(secondary_key_field).cast("string").alias("sec"),
-                F.col(record_key_field).cast("string").alias("rec"),
-            )
-            .filter(F.col("sec").isNotNull() & F.col("rec").isNotNull())
-            .distinct()
-        )
-
-    adds = _pairs(add_rel_paths)
-    removed = _pairs(removed_rel_paths)
-    if adds is None and removed is None:
-        return []
-    # a mapping leaving with a removed file tombstones only if no added
-    # file re-asserts the SAME (sec, rec) pair this commit
-    tomb = (
-        removed.join(adds, ["sec", "rec"], "left_anti")
-        if adds is not None and removed is not None
-        else removed
-    )
-
-    # shard modulus is pinned by the on-disk group count after the first
-    # commit (same rule as record_index)
-    from incubator_xtable_spark.sources.hudi_metadata import _hfile_partition_state
-
-    existing_groups, _ = _hfile_partition_state(d)
-    if existing_groups:
-        num_shards = len(existing_groups)
-
-    rows = None
-    if adds is not None:
-        rows = adds.select("sec", "rec", F.lit(False).alias("is_tombstone"))
-    if tomb is not None:
-        trows = tomb.select("sec", "rec", F.lit(True).alias("is_tombstone"))
-        rows = trows if rows is None else rows.unionByName(trows)
-
-    shard_schema = "sec STRING, rec STRING, is_tombstone BOOLEAN, shard INT"
-
-    def _assign_shards(batches):
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        from incubator_xtable_spark.model.hudi_hash import (
-            map_record_key_to_file_group_index as _map,
-        )
-        from incubator_xtable_spark.model.hudi_metadata_records import (
-            escape_secondary_key_part as _esc,
-        )
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["shard"] = [_map(_esc(str(s)), num_shards) for s in pdf["sec"]]
-            yield pdf
-
-    out_schema = "shard INT, rel_path STRING, size LONG, n_records LONG"
-
-    def _write_shard(key, pdf):
-        import sys as _sys
-
-        if pkg_root not in _sys.path:
-            _sys.path.insert(0, pkg_root)
-        import pandas as _pd
-
-        from incubator_xtable_spark.model.hudi_metadata_records import (
-            SECONDARY_INDEX_RECORD_SCHEMA,
-            secondary_index_record,
-        )
-        from incubator_xtable_spark.targets.hudi_metadata_index import (
-            _commit_partition as _cp,
-        )
-
-        shard = int(key[0])
-        file_id = f"secondary-index-{shard:04d}-0"
-        # tombstones render FIRST so a same-commit re-assert wins the
-        # ordered merge (defensive: the left_anti above already prevents
-        # a live pair from tombstoning)
-        pdf = pdf.sort_values("is_tombstone", ascending=False, kind="mergesort")
-        records = [
-            secondary_index_record(str(s), str(r), is_deleted=bool(t))
-            for s, r, t in zip(pdf["sec"], pdf["rec"], pdf["is_tombstone"])
-        ]
-        rel, size, n = _cp(
-            d,
-            file_id,
-            instant_s,
-            records,
-            compact_every,
-            record_schema=SECONDARY_INDEX_RECORD_SCHEMA,
-        )
-        return _pd.DataFrame(
-            [(shard, rel, size, n)], columns=["shard", "rel_path", "size", "n_records"]
-        )
-
-    sharded = rows.mapInPandas(_assign_shards, shard_schema)
-    stats = sharded.groupBy("shard").applyInPandas(_write_shard, out_schema).collect()
-    out = [
-        (
-            partition,
-            f"secondary-index-{int(r['shard']):04d}-0",
-            r["rel_path"],
-            int(r["size"]),
-            int(r["n_records"]),
-        )
-        for r in stats
-    ]
-    # pre-create every shard group (the reader derives the modulus from
-    # the on-disk group count — same invariant as record_index)
-    from incubator_xtable_spark.model.hudi_metadata_records import (
-        SECONDARY_INDEX_RECORD_SCHEMA,
-    )
-
-    touched = {int(r["shard"]) for r in stats}
-    for i in range(num_shards):
-        fid = f"secondary-index-{i:04d}-0"
-        if i in touched or _slice_state(d, fid)[0] is not None:
-            continue
-        rel, size = _write_base(d, fid, instant, [], SECONDARY_INDEX_RECORD_SCHEMA)
-        out.append((partition, fid, rel, size, 0))
-    return out
-
-
-BLOOM_FILTERS_PARTITION = "bloom_filters"
-BLOOM_FILTERS_FILE_ID = "bloom-filters-0000-0"
-
-
-def write_bloom_filters_commit(
-    spark,
-    base_path: str,
-    instant: str,
-    add_rel_paths: list[str],
-    removed_rel_paths: list[str],
-    record_key_field: str,
-    *,
-    fpp: float = 0.001,
-    compact_every: int = DEFAULT_COMPACT_EVERY,
-) -> list[tuple[str, str, str, int, int]]:
-    """Maintain the ``bloom_filters`` metadata partition (real Hudi's
-    bloom index, beyond the reference) for one commit: one type-4
-    HoodieMetadataBloomFilter record per ADDED file — a Hadoop-format
-    SIMPLE bloom over the file's record keys (model/hudi_bloom.py) keyed
-    by getBloomFilterIndexKey's hashed partitionID+fileID — plus
-    isDeleted records per removed file. -> metadata-deltacommit stat
-    tuples.
-
-    Distribution: each added file's bloom builds in that file's own task
-    (groupBy(_fp).applyInPandas over ONLY the key column); what returns
-    to the driver is one row per FILE carrying KB-scale bloom bytes —
-    metadata volume — which the single file group then writes via the
-    same base/log/compaction lifecycle as col_stats."""
-    from pyspark.sql import functions as F
-
-    base = base_path.rstrip("/")
-    d = _partition_dir(base_path, BLOOM_FILTERS_PARTITION)
-    os.makedirs(d, exist_ok=True)
-    pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-    from incubator_xtable_spark.model.hudi_metadata_records import bloom_filter_record
-
-    # tombstones FIRST, and never for a path re-added this commit (the
-    # fresh bloom must win the latest-wins merge)
-    added_paths = set(add_rel_paths)
-    records: list[tuple[bytes, bytes]] = []
-    for rel in removed_rel_paths:
-        if rel in added_paths:
-            continue
-        part, fname = os.path.dirname(rel), os.path.basename(rel)
-        records.append(bloom_filter_record(part, fname, "", instant, is_deleted=True))
-    if add_rel_paths:
-        paths = [os.path.join(base, p) for p in add_rel_paths]
-        df = spark.read.parquet(*paths).select(
-            F.col(record_key_field).cast("string").alias("record_key"),
-            F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "").alias("_fp"),
-        )
-
-        def _build(key, pdf):
-            import sys as _sys
-
-            if pkg_root not in _sys.path:
-                _sys.path.insert(0, pkg_root)
-            import pandas as _pd
-
-            from incubator_xtable_spark.model.hudi_bloom import SimpleBloomFilter
-            from incubator_xtable_spark.model.hudi_metadata_records import (
-                bloom_filter_record,
-            )
-
-            fp = str(key[0])
-            rel = os.path.relpath(fp, base)
-            part, fname = os.path.dirname(rel), os.path.basename(rel)
-            bf = SimpleBloomFilter.for_entries(len(pdf), fpp)
-            for k in pdf["record_key"]:
-                bf.add(str(k))
-            row, blob = bloom_filter_record(part, fname, bf.serialize_to_string(), instant)
-            return _pd.DataFrame([(row, blob)], columns=["row", "value"])
-
-        built = (
-            df.groupBy("_fp")
-            .applyInPandas(_build, "row BINARY, value BINARY")
-            .collect()
-        )
-        records.extend((bytes(r["row"]), bytes(r["value"])) for r in built)
-
-    if not records:
-        return []
-    from incubator_xtable_spark.model.hudi_metadata_records import (
-        BLOOM_FILTER_RECORD_SCHEMA,
-    )
-
-    rel, size, n = _commit_partition(
-        d,
-        BLOOM_FILTERS_FILE_ID,
-        instant,
-        records,
-        compact_every,
-        record_schema=BLOOM_FILTER_RECORD_SCHEMA,
-    )
-    return [(BLOOM_FILTERS_PARTITION, BLOOM_FILTERS_FILE_ID, rel, size, n)]
 
 
 PARTITION_STATS_PARTITION = "partition_stats"
@@ -1058,15 +573,6 @@ def write_partition_stats_commit(
     return [(PARTITION_STATS_PARTITION, PARTITION_STATS_FILE_ID, rel, size, n)]
 
 
-def _instant_ms(instant: str) -> int:
-    from incubator_xtable_spark.targets.hudi_target import instant_to_epoch_ms
-
-    try:
-        return instant_to_epoch_ms(instant)
-    except ValueError:
-        return 0
-
-
 def write_hfile_index_commit(
     base_path: str,
     instant: str,
@@ -1201,7 +707,7 @@ def write_hfile_index_commit(
             (COLUMN_STATS_PARTITION, COL_STATS_FILE_ID, cs_rel, cs_size, cs_n),
             (FILES_PARTITION, FILES_FILE_ID, f_rel, f_size, f_n),
         ]
-        + list(extra_stats or []),  # e.g. record_index shard writes
+        + list(extra_stats or []),  # e.g. partition_stats writes
     )
 
 

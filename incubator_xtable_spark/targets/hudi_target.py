@@ -49,6 +49,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import shutil
 import uuid
 from typing import Any, Iterator, Optional
 
@@ -85,6 +86,28 @@ def epoch_ms_to_instant(ms: int) -> str:
 
 def _hoodie_dir(base_path: str) -> str:
     return os.path.join(base_path, HOODIE_DIR)
+
+
+# Metadata partitions that older builds maintained by scanning data rows
+# (the record index, bloom filters and secondary indexes). This build
+# writes none of them; a sync unlists and deletes any it finds.
+_RETIRED_PARTITIONS = ("record_index", "bloom_filters")
+_RETIRED_PREFIX = "secondary_index_"
+
+
+def _is_retired_partition(partition: str) -> bool:
+    return partition in _RETIRED_PARTITIONS or partition.startswith(_RETIRED_PREFIX)
+
+
+def _drop_retired_partitions(base_path: str) -> None:
+    meta = os.path.join(_hoodie_dir(base_path), "metadata")
+    try:
+        names = os.listdir(meta)
+    except FileNotFoundError:
+        return
+    for name in names:
+        if _is_retired_partition(name):
+            shutil.rmtree(os.path.join(meta, name))
 
 
 def file_id_of(path: str) -> str:
@@ -196,12 +219,7 @@ class HudiConversionTarget:
         metadata_index_format: str = "parquet",
         metadata_index_key_mode: str = "hashed",
         metadata_index_compact_every: int = 10,
-        record_index_field: Optional[str] = None,
-        record_index_shards: int = 4,
-        bloom_filters: bool = False,
         partition_stats: bool = False,
-        secondary_index_field: Optional[str] = None,
-        secondary_index_shards: int = 4,
         table_version: int = 6,
     ) -> None:
         self.spark = spark
@@ -239,29 +257,6 @@ class HudiConversionTarget:
         self.metadata_index_format = metadata_index_format
         self.metadata_index_key_mode = metadata_index_key_mode
         self.metadata_index_compact_every = metadata_index_compact_every
-        # opt-in record-level index (real Hudi's RLI metadata partition,
-        # beyond the reference): one record per data ROW keyed by this
-        # field, sharded by Java-hashCode file groups. Data-scale — built
-        # by a distributed scan of the commit's added/removed files, so
-        # it is the one index whose maintenance reads data bytes.
-        if record_index_field is not None and (
-            metadata_index_format != "hfile" or not metadata_indexes
-        ):
-            raise ValueError(
-                "record_index_field requires metadata_indexes=True and "
-                "metadata_index_format='hfile' (the record index is a "
-                "real-Hudi metadata partition)"
-            )
-        self.record_index_field = record_index_field
-        self.record_index_shards = record_index_shards
-        # opt-in bloom_filters metadata partition: a Hadoop-format SIMPLE
-        # bloom per data file over record_index_field's values (the same
-        # key source as the record index; also data-scale to build)
-        if bloom_filters and record_index_field is None:
-            raise ValueError(
-                "bloom_filters requires record_index_field as the key source"
-            )
-        self.bloom_filters = bloom_filters
         # opt-in partition_stats metadata partition (Hudi 1.0's
         # partition-pruning index, beyond the reference): per-commit
         # delta aggregates per (partition, column) that accumulate via
@@ -274,24 +269,6 @@ class HudiConversionTarget:
                 "metadata partition)"
             )
         self.partition_stats = partition_stats
-        # opt-in secondary index (Hudi 1.0's secondary_index_idx_<field>
-        # metadata partition, beyond the reference): one type-7 mapping
-        # per (secondary value, record key), keyed per
-        # SecondaryIndexKeyUtils, sharded so an equality lookup pins one
-        # file group. Requires the record index (real Hudi's SI is built
-        # on RLI-tracked record keys) — data-scale to maintain.
-        if secondary_index_field is not None and record_index_field is None:
-            raise ValueError(
-                "secondary_index_field requires record_index_field (Hudi "
-                "secondary indexes map secondary values to RLI record keys)"
-            )
-        if secondary_index_field is not None and secondary_index_field == record_index_field:
-            raise ValueError(
-                "secondary_index_field must differ from record_index_field "
-                "(a secondary index on the record key is the record index)"
-            )
-        self.secondary_index_field = secondary_index_field
-        self.secondary_index_shards = secondary_index_shards
         # CDC channel -> Hudi CDC supplemental blocks: incremental row
         # changes persist as CDC_DATA_BLOCK log files named by cdcStats
         # in the commit's write stats (the shape hoodie.table.cdc.enabled
@@ -338,7 +315,8 @@ class HudiConversionTarget:
         if os.path.exists(props_path):
             # upgrade path: older tables created before the indexes existed
             # get the availability flags; their historical files are simply
-            # uncovered (sources fall back to footers / timeline replay)
+            # uncovered (sources fall back to footers / timeline replay).
+            # Tables from builds that kept row-keyed partitions lose them.
             from incubator_xtable_spark.sources.hudi_source import read_properties
 
             existing = read_properties(self.base_path)
@@ -352,36 +330,24 @@ class HudiConversionTarget:
                     "target table or match the version"
                 )
             parts = [p for p in (existing.get(METADATA_PARTITIONS_KEY) or "").split(",") if p]
+            kept = [p for p in parts if not _is_retired_partition(p)]
             wanted = [COLUMN_STATS_PARTITION, FILES_PARTITION]
-            if self.record_index_field is not None:
-                from incubator_xtable_spark.targets.hudi_metadata_index import (
-                    BLOOM_FILTERS_PARTITION,
-                    RECORD_INDEX_PARTITION,
-                )
-
-                wanted.append(RECORD_INDEX_PARTITION)
-                if self.bloom_filters:
-                    wanted.append(BLOOM_FILTERS_PARTITION)
-                if self.secondary_index_field is not None:
-                    from incubator_xtable_spark.targets.hudi_metadata_index import (
-                        secondary_index_partition_name,
-                    )
-
-                    wanted.append(
-                        secondary_index_partition_name(self.secondary_index_field)
-                    )
             if self.partition_stats:
                 from incubator_xtable_spark.targets.hudi_metadata_index import (
                     PARTITION_STATS_PARTITION,
                 )
 
                 wanted.append(PARTITION_STATS_PARTITION)
-            missing = [p for p in wanted if p not in parts]
-            if missing and self.metadata_indexes:
+            missing = [p for p in wanted if p not in kept] if self.metadata_indexes else []
+            if missing or len(kept) < len(parts):
+                # read_properties takes a key's last value
                 with open(props_path, "a", encoding="utf-8") as fh:
                     fh.write(
-                        f"{METADATA_PARTITIONS_KEY}=" + ",".join(parts + missing) + "\n"
+                        f"{METADATA_PARTITIONS_KEY}=" + ",".join(kept + missing) + "\n"
                     )
+            # after the property step, so a crash in between leaves
+            # unlisted directories that the next sync removes
+            _drop_retired_partitions(self.base_path)
             if self.change_feed and existing.get("hoodie.table.cdc.enabled") != "true":
                 with open(props_path, "a", encoding="utf-8") as fh:
                     fh.write("hoodie.table.cdc.enabled=true\n")
@@ -405,23 +371,6 @@ class HudiConversionTarget:
             props["hoodie.timeline.path"] = "timeline"
         if self.metadata_indexes:
             props[METADATA_PARTITIONS_KEY] = f"{COLUMN_STATS_PARTITION},{FILES_PARTITION}"
-            if self.record_index_field is not None:
-                from incubator_xtable_spark.targets.hudi_metadata_index import (
-                    BLOOM_FILTERS_PARTITION,
-                    RECORD_INDEX_PARTITION,
-                )
-
-                props[METADATA_PARTITIONS_KEY] += f",{RECORD_INDEX_PARTITION}"
-                if self.bloom_filters:
-                    props[METADATA_PARTITIONS_KEY] += f",{BLOOM_FILTERS_PARTITION}"
-                if self.secondary_index_field is not None:
-                    from incubator_xtable_spark.targets.hudi_metadata_index import (
-                        secondary_index_partition_name,
-                    )
-
-                    props[METADATA_PARTITIONS_KEY] += (
-                        "," + secondary_index_partition_name(self.secondary_index_field)
-                    )
             if self.partition_stats:
                 from incubator_xtable_spark.targets.hudi_metadata_index import (
                     PARTITION_STATS_PARTITION,
@@ -557,57 +506,12 @@ class HudiConversionTarget:
             )
 
             extra_stats = []
-            if self.record_index_field is not None:
-                from incubator_xtable_spark.targets.hudi_metadata_index import (
-                    write_record_index_commit,
-                )
-
-                extra_stats = write_record_index_commit(
-                    self.spark,
-                    self.base_path,
-                    instant,
-                    [a["rel_path"] for a in index_adds],
-                    index_removed,
-                    self.record_index_field,
-                    num_shards=self.record_index_shards,
-                    compact_every=self.metadata_index_compact_every,
-                )
-                if self.bloom_filters:
-                    from incubator_xtable_spark.targets.hudi_metadata_index import (
-                        write_bloom_filters_commit,
-                    )
-
-                    extra_stats = extra_stats + write_bloom_filters_commit(
-                        self.spark,
-                        self.base_path,
-                        instant,
-                        [a["rel_path"] for a in index_adds],
-                        index_removed,
-                        self.record_index_field,
-                        compact_every=self.metadata_index_compact_every,
-                    )
-                if self.secondary_index_field is not None:
-                    from incubator_xtable_spark.targets.hudi_metadata_index import (
-                        write_secondary_index_commit,
-                    )
-
-                    extra_stats = extra_stats + write_secondary_index_commit(
-                        self.spark,
-                        self.base_path,
-                        instant,
-                        [a["rel_path"] for a in index_adds],
-                        index_removed,
-                        self.record_index_field,
-                        self.secondary_index_field,
-                        num_shards=self.secondary_index_shards,
-                        compact_every=self.metadata_index_compact_every,
-                    )
             if self.partition_stats:
                 from incubator_xtable_spark.targets.hudi_metadata_index import (
                     write_partition_stats_commit,
                 )
 
-                extra_stats = extra_stats + write_partition_stats_commit(
+                extra_stats = write_partition_stats_commit(
                     self.base_path,
                     instant,
                     index_adds,

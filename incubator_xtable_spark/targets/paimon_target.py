@@ -126,7 +126,17 @@ def _partition_typed_value(raw: Optional[str], dtype: T.DataType) -> Any:
         return raw.lower() == "true"
     if isinstance(dtype, T.DateType):
         return (datetime.date.fromisoformat(raw) - datetime.date(1970, 1, 1)).days
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        # the wall clock the path names, as format_partition_value renders it
+        return _timestamp_value(datetime.datetime.fromisoformat(raw))
     return raw  # strings (and anything hive-path-encoded as a string)
+
+
+def _timestamp_value(v: datetime.datetime) -> tuple[int, int]:
+    """-> the codec's (epoch millis, nano of milli) for ``v``."""
+    delta = v - datetime.datetime(1970, 1, 1, tzinfo=v.tzinfo)
+    millis = delta.days * 86_400_000 + delta.seconds * 1000 + delta.microseconds // 1000
+    return (millis, (delta.microseconds % 1000) * 1000)
 
 
 def _stat_typed_value(v: Any, codec: PaimonFieldType) -> Any:
@@ -136,10 +146,7 @@ def _stat_typed_value(v: Any, codec: PaimonFieldType) -> Any:
     if codec.kind == "date" and isinstance(v, datetime.date):
         return (v - datetime.date(1970, 1, 1)).days
     if codec.kind == "timestamp" and isinstance(v, datetime.datetime):
-        epoch = datetime.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-        delta = v - epoch
-        millis = delta.days * 86_400_000 + delta.seconds * 1000 + delta.microseconds // 1000
-        return (millis, (delta.microseconds % 1000) * 1000)
+        return _timestamp_value(v)
     return v
 
 

@@ -297,8 +297,7 @@ def scenario_clean(
 
 
 def _gen_real_dataset(spark, data_dir: str, n_files: int, n_partitions: int, rows_per_file: int, start_idx: int = 0) -> None:
-    """Write ``n_files`` REAL hive-partitioned parquet files (unique
-    string keys — the record/bloom indexes scan actual rows), fanned out
+    """Write ``n_files`` REAL hive-partitioned parquet files, fanned out
     via mapInPandas (each task pyarrow-writes its slice; no single-file
     driver loop)."""
 
@@ -348,24 +347,18 @@ def scenario_indexes(
     rows_per_file: int = 10,
     compact_every: int = 10,
     table_version: int = 6,
-    secondary_index: bool = False,
 ) -> list[dict]:
-    """ALL Hudi metadata indexes at once over REAL data files:
-    record_index (per-ROW — the one data-sized index; executor-side
-    shard writes), bloom_filters, partition_stats, col_stats + files,
-    optionally the r11 secondary index (``--secondary-index``, on the
-    int column ``v``) and the Hudi 1.0 ``.hoodie/timeline`` layout
-    (``--table-version 8``). Full sync over ``n_files`` real files,
-    then ONE incremental commit of ``per_commit`` more — wall + RSS for
-    both, plus index read-back proof (distributed record-index count ==
-    total rows; record/partition-stats/secondary point lookups
-    resolve)."""
+    """ALL Hudi metadata indexes at once over REAL data files: the HFile
+    column_stats, files and partition_stats partitions, optionally in the
+    Hudi 1.0 ``.hoodie/timeline`` layout (``--table-version 8``). Full
+    sync over ``n_files`` real files, then ONE incremental commit of
+    ``per_commit`` more — wall + RSS for both, plus index read-back proof
+    (the files partition lists every file; a partition-stats point
+    lookup resolves)."""
     from incubator_xtable_spark.model.core import InternalPartitionField
     from incubator_xtable_spark.sources.hudi_metadata import (
+        hfile_files_listing,
         lookup_partition_stats,
-        lookup_record_key,
-        lookup_secondary_key,
-        read_record_index,
     )
     from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
     from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
@@ -382,12 +375,9 @@ def scenario_indexes(
             work,
             table_name="loadidx",
             metadata_index_format="hfile",
-            record_index_field="rk",
-            bloom_filters=True,
             partition_stats=True,
             metadata_index_compact_every=compact_every,
             table_version=table_version,
-            secondary_index_field="v" if secondary_index else None,
         )
         ctrl = ConversionController()
         rss_before = rss_mb()
@@ -401,33 +391,21 @@ def scenario_indexes(
                 "rows": n_files * rows_per_file,
                 "partitions": n_partitions,
                 "table_version": table_version,
-                "secondary_index": secondary_index,
                 "status": res[TableFormat.HUDI].status.value,
                 "seconds": round(wall, 2),
                 "rss_mb_before": rss_before,
                 "rss_mb_after": rss_mb(),
             }
         )
-        # read-back proof: distributed record-index count == rows written,
-        # a sampled point lookup resolves to the right file, and the
-        # partition aggregate covers the partition's rows
-        n_idx = read_record_index(spark, work).count()
-        probe = lookup_record_key(work, f"k{0:012d}")
+        # read-back proof: the files partition lists every file written,
+        # and the partition aggregate covers the partition's rows
         pstats = lookup_partition_stats(work, "p=0", "v")
         readback = {
             "scenario": "index_readback",
-            "record_index_rows": n_idx,
-            "rows_expected": n_files * rows_per_file,
-            "point_lookup_ok": bool(probe and probe.get("fileId", "").startswith("f-0000000")),
+            "listed_files": len(hfile_files_listing(work)),
+            "files_expected": n_files,
             "partition_stats_ok": bool(pstats and int(pstats.get("valueCount") or 0) > 0),
         }
-        if secondary_index:
-            # secondary value "7" maps to record key k...7 in file f-0000000
-            sec_keys = lookup_secondary_key(work, "v", "7")
-            readback["secondary_lookup_ok"] = sec_keys == [f"k{7:012d}"]
-            readback["secondary_pins_one_group"] = bool(
-                sec_keys and lookup_record_key(work, sec_keys[0])
-            )
         if table_version == 8:
             readback["timeline_v8"] = os.path.isdir(os.path.join(work, ".hoodie", "timeline"))
         out.append(readback)
@@ -706,15 +684,14 @@ def main() -> int:
         default="delta",
         help="conversion target: delta (default), the Hudi REAL-layout "
         "HFile metadata-index writer over a synthetic inventory, or "
-        "hudi-indexes = ALL r9 index partitions (record_index + blooms "
+        "hudi-indexes = ALL HFile index partitions (column_stats + files "
         "+ partition_stats) over REAL generated data files",
     )
     ap.add_argument(
         "--rows-per-file",
         type=int,
         default=10,
-        help="hudi-indexes: rows per generated data file (record_index "
-        "cost is per-row)",
+        help="hudi-indexes: rows per generated data file",
     )
     ap.add_argument(
         "--compact-every",
@@ -729,11 +706,6 @@ def main() -> int:
         default=6,
         choices=[6, 8],
         help="hudi-indexes: Hudi table version (8 = 1.0 .hoodie/timeline layout)",
-    )
-    ap.add_argument(
-        "--secondary-index",
-        action="store_true",
-        help="hudi-indexes: also maintain secondary_index_idx_v on column v",
     )
     ap.add_argument(
         "--seed-files",
@@ -783,7 +755,6 @@ def main() -> int:
             args.rows_per_file,
             args.compact_every,
             args.table_version,
-            args.secondary_index,
         )
         for o in outs:
             print(json.dumps(o))

@@ -107,3 +107,66 @@ def write_metadata_log_file(
     with open(path, "wb") as fh:
         fh.write(block)
     return path
+
+
+def add_retired_index_partitions(base_path: str, secondary_field: str) -> list[str]:
+    """Lay the row-keyed metadata partitions that older builds maintained
+    (``record_index``, ``bloom_filters``, ``secondary_index_idx_<field>``)
+    onto an HFile-indexed table the way those builds left them: base HFiles
+    named ``<fileId>_0-0-0_<instant>.hfile``, an appended
+    ``hoodie.table.metadata.partitions`` line listing them, and write stats
+    in the metadata table's latest deltacommit. -> the partition names."""
+    import glob
+
+    from incubator_xtable_spark.model.avro_codec import encode_binary_record
+    from incubator_xtable_spark.sources.hudi_source import read_properties
+
+    schema = {
+        "type": "record",
+        "name": "HoodieMetadataRecord",
+        "namespace": "org.apache.hudi.avro.model",
+        "fields": [{"name": "key", "type": "string"}, {"name": "type", "type": "int"}],
+    }
+    meta = os.path.join(base_path, ".hoodie", "metadata")
+    commit = sorted(glob.glob(os.path.join(meta, ".hoodie", "*.deltacommit")))[-1]
+    instant = os.path.basename(commit).split(".")[0]
+    groups = {
+        "record_index": (5, [f"record-index-{i:04d}-0" for i in range(4)]),
+        "bloom_filters": (4, ["bloom-filters-0000-0"]),
+        f"secondary_index_idx_{secondary_field}": (
+            7,
+            [f"secondary-index-{i:04d}-0" for i in range(4)],
+        ),
+    }
+    with open(commit, encoding="utf-8") as fh:
+        dc = json.load(fh)
+    for partition, (rtype, file_ids) in groups.items():
+        d = os.path.join(meta, partition)
+        os.makedirs(d)
+        for fid in file_ids:
+            key = f"{fid}-key"
+            path = os.path.join(d, f"{fid}_0-0-0_{instant}.hfile")
+            write_hfile(
+                path,
+                [(key.encode(), encode_binary_record(schema, {"key": key, "type": rtype}))],
+                {"schema": json.dumps(schema).encode("utf-8")},
+            )
+            size = os.path.getsize(path)
+            dc["partitionToWriteStats"].setdefault(partition, []).append(
+                {
+                    "fileId": fid,
+                    "path": os.path.join(partition, os.path.basename(path)),
+                    "prevCommit": "null",
+                    "numWrites": 1,
+                    "numInserts": 1,
+                    "totalWriteBytes": size,
+                    "fileSizeInBytes": size,
+                    "partitionPath": partition,
+                }
+            )
+    with open(commit, "w", encoding="utf-8") as fh:
+        json.dump(dc, fh, sort_keys=True)
+    listed = read_properties(base_path)["hoodie.table.metadata.partitions"]
+    with open(os.path.join(base_path, ".hoodie", "hoodie.properties"), "a", encoding="utf-8") as fh:
+        fh.write(f"hoodie.table.metadata.partitions={listed}," + ",".join(groups) + "\n")
+    return list(groups)

@@ -669,3 +669,53 @@ def test_hudi_cdc_round_trips_timestamp_and_date(spark, tmp_path):
         (2, ts, None, "update_postimage"),
     }
     assert got == want
+
+
+def test_hudi_cdc_read_decodes_one_log_per_task(spark, tmp_path, monkeypatch):
+    """A commit with two CDC logs reads through one Spark task per log,
+    and no log decodes on the driver."""
+    from incubator_xtable_spark.sources import hudi_source
+    from incubator_xtable_spark.sources.hudi_log import write_cdc_log_file
+    from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
+    from incubator_xtable_spark.targets.hudi_target import (
+        HudiConversionTarget,
+        completed_instant_file,
+    )
+
+    base = str(tmp_path / "two_logs")
+    spark.range(0, 2).coalesce(1).write.parquet(base)
+    target = HudiConversionTarget(spark, base, table_name="t", change_feed=True)
+    src = ParquetConversionSource(spark, base, name="t")
+    res = ConversionController().sync(src, {TableFormat.HUDI: target})
+    assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS
+    spark.range(2, 4).coalesce(1).write.mode("append").parquet(base)
+    table = src.get_current_table()
+    target.begin_sync(table)
+    target.sync_schema(table.read_schema)
+    target.sync_partition_spec([])
+    target.sync_files_for_snapshot(src.get_current_snapshot().files)
+    target.sync_row_changes(spark.createDataFrame([(2, "insert")], "id long, _change_type string"))
+    instant = target.complete_sync()
+
+    # a second CDC log in the same commit
+    commit = completed_instant_file(base, instant, "commit")
+    with open(commit, encoding="utf-8") as fh:
+        meta = json.load(fh)
+    rel = f".cdc-{instant}.log.2_0-0-0.cdc"
+    size = write_cdc_log_file(
+        os.path.join(base, rel),
+        instant,
+        meta["extraMetadata"]["schema"],
+        [{"op": "i", "before": None, "after": {"id": 3}}],
+    )
+    next(iter(meta["partitionToWriteStats"].values()))[0]["cdcStats"][rel] = size
+    with open(commit, "w", encoding="utf-8") as fh:
+        json.dump(meta, fh)
+
+    def driver_decode(*_args):
+        raise AssertionError("a CDC log was decoded on the driver")
+
+    monkeypatch.setattr(hudi_source, "cdc_log_rows", driver_decode)
+    df = read_hudi_cdc(spark, base, instant)
+    per_task = df.rdd.glom().map(lambda rows: [(r["id"], r["_change_type"]) for r in rows])
+    assert sorted(per_task.collect()) == [[(2, "insert")], [(3, "insert")]]

@@ -49,12 +49,9 @@ def _stream_rows(spark, fmt: str, d: str, cp: str, name: str):
     return spark.sql(f"select * from {name}")
 
 
-# the Paimon target cannot convert a timestamp partition column yet;
 # "native": a Paimon table written natively, whose files store the
 # partition column, one partition of it null
-_CASES = [
-    (k, f) for k in sorted(_VALUES) for f in sorted(_FEEDS) if (k, f) != ("timestamp", "paimon")
-] + [("native", "paimon")]
+_CASES = [(k, f) for k in sorted(_VALUES) for f in sorted(_FEEDS)] + [("native", "paimon")]
 
 
 def _native_paimon(spark, d: str) -> None:

@@ -278,7 +278,7 @@ def test_build_target_change_feed_flags(spark, tmp_path):
 
 
 def test_build_target_hudi_index_flags(spark, tmp_path):
-    """YAML dataset keys reach the Hudi target's r9 index options."""
+    """YAML dataset keys reach the Hudi target's metadata-index options."""
     from incubator_xtable_spark.run_sync import build_target
 
     t = build_target(
@@ -289,20 +289,13 @@ def test_build_target_hudi_index_flags(spark, tmp_path):
             "tableName": "t",
             "hudiMetadataIndexFormat": "hfile",
             "hudiMetadataIndexCompactEvery": "5",
-            "hudiRecordIndexField": "id",
-            "hudiRecordIndexShards": "8",
-            "hudiBloomFilters": "true",
             "hudiPartitionStats": "true",
         },
     )
     assert t.metadata_index_format == "hfile"
     assert t.metadata_index_compact_every == 5
-    assert t.record_index_field == "id"
-    assert t.record_index_shards == 8
-    assert t.bloom_filters is True
     assert t.partition_stats is True
     # defaults stay the LITE tier with everything opt-in off
     d = build_target(spark, "HUDI", {"tableBasePath": str(tmp_path / "d")})
     assert d.metadata_index_format == "parquet"
-    assert d.record_index_field is None
-    assert d.bloom_filters is False and d.partition_stats is False
+    assert d.partition_stats is False

@@ -1,38 +1,23 @@
-"""Hudi bloom_filters metadata partition + the Hadoop-format bloom codec
-(r9, beyond the reference — it consumes only files/col_stats).
+"""The Hadoop-format bloom codec real Hudi uses in parquet footers and in
+metadata-table HFiles' ``bloomFilter`` meta block.
 
 Codec gates: Hadoop Filter header shape, MSB-first bit vector, chained
 murmur2 rounds with Java int semantics, serialize/deserialize roundtrip,
-membership soundness (no false negatives) and bounded false positives.
-End-to-end gates: opt-in target writes one bloom per added file keyed by
-the hashed getBloomFilterIndexKey; point lookups answer membership for
-every real key; replaced files' blooms tombstone out."""
+membership soundness (no false negatives) and bounded false positives."""
 
 from __future__ import annotations
 
 import base64
-import os
 import struct
 
 import pytest
-from pyspark.sql import functions as F
 
-from incubator_xtable_spark.model.core import SyncStatusCode, TableFormat
 from incubator_xtable_spark.model.hudi_bloom import (
     SimpleBloomFilter,
     bloom_bit_indexes,
     bloom_sizing,
     murmur32,
 )
-from incubator_xtable_spark.sources.hudi_metadata import (
-    bloom_filters_available,
-    lookup_bloom_filter,
-)
-from incubator_xtable_spark.sources.parquet_source import ParquetConversionSource
-from incubator_xtable_spark.sync.controller import ConversionController
-from incubator_xtable_spark.targets.hudi_target import HudiConversionTarget
-
-from .conftest import SF_SMOKE
 
 
 def test_murmur32_java_int_semantics():
@@ -88,91 +73,4 @@ def test_corrupt_header_refuses():
     with pytest.raises(ValueError, match="hash type"):
         SimpleBloomFilter.deserialize_from_string(
             base64.b64encode(struct.pack(">iibi", -1, 3, 0, 96) + b"\0" * 12).decode()
-        )
-
-
-# -- end-to-end through the Hudi target -------------------------------------
-
-
-def _sync(spark, d, target=None):
-    target = target or HudiConversionTarget(
-        spark,
-        d,
-        table_name="nation",
-        metadata_index_format="hfile",
-        record_index_field="n_nationkey",
-        bloom_filters=True,
-    )
-    res = ConversionController().sync(
-        ParquetConversionSource(spark, d, name="nation"), {TableFormat.HUDI: target}
-    )
-    assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS, res[TableFormat.HUDI].error
-    return target
-
-
-@pytest.fixture()
-def table_dir(spark, tmp_path):
-    d = str(tmp_path / "bloom")
-    (
-        spark.read.parquet(f"{SF_SMOKE}/nation.parquet")
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(d)
-    )
-    return d
-
-
-def _file_keys(spark, d):
-    """Ground truth: file rel path -> set of record keys in it."""
-    from incubator_xtable_spark.sources.hudi_source import live_files_rows
-
-    live = {r["path"] for r in live_files_rows(d)}
-    df = spark.read.parquet(*[os.path.join(d, p) for p in live]).select(
-        F.col("n_nationkey").cast("string").alias("k"),
-        F.regexp_replace(F.col("_metadata.file_path"), r"^file:(//)?", "").alias("fp"),
-    )
-    out: dict[str, set] = {}
-    for r in df.collect():
-        out.setdefault(os.path.relpath(r["fp"], d), set()).add(r["k"])
-    return out
-
-
-def test_bloom_partition_answers_membership(spark, table_dir):
-    target = _sync(spark, table_dir)
-    assert bloom_filters_available(table_dir)
-    truth = _file_keys(spark, table_dir)
-    all_keys = set().union(*truth.values())
-    for rel, keys in truth.items():
-        part, fname = os.path.dirname(rel), os.path.basename(rel)
-        bf = lookup_bloom_filter(table_dir, part, fname)
-        assert bf is not None, rel
-        assert all(bf.might_contain(k) for k in keys)  # no false negatives
-        # keys of OTHER files mostly answer False (tiny table, fpp 0.001)
-        others = all_keys - keys
-        assert sum(bf.might_contain(k) for k in others) <= max(1, len(others) // 10)
-    assert lookup_bloom_filter(table_dir, "", "no-such.parquet") is None
-
-    # replacing resync: old files' blooms tombstone out, new file covered
-    spark.read.parquet(f"{SF_SMOKE}/nation.parquet").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(table_dir)
-    _sync(spark, table_dir, target)
-    new_truth = _file_keys(spark, table_dir)
-    assert len(new_truth) == 1
-    for rel in truth:  # every replaced file's bloom is gone
-        if rel in new_truth:
-            continue
-        assert (
-            lookup_bloom_filter(table_dir, os.path.dirname(rel), os.path.basename(rel))
-            is None
-        )
-    (rel,) = new_truth
-    bf = lookup_bloom_filter(table_dir, os.path.dirname(rel), os.path.basename(rel))
-    assert bf is not None and all(bf.might_contain(k) for k in new_truth[rel])
-
-
-def test_bloom_requires_key_source(spark, tmp_path):
-    with pytest.raises(ValueError, match="requires record_index_field"):
-        HudiConversionTarget(
-            spark, str(tmp_path), metadata_index_format="hfile", bloom_filters=True
         )

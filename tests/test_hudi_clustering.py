@@ -114,23 +114,19 @@ def test_clustering_hfile_index_table_keeps_hfile_shape(spark, tmp_path):
     assert report.passed, [(i.code, i.detail) for i in report.issues]
 
 
-def test_clustering_refuses_row_keyed_indexes(spark, tmp_path):
-    import pytest
+def test_clustering_retires_row_keyed_indexes(spark, tmp_path):
+    from incubator_xtable_spark.sources.hudi_source import read_properties
 
-    d = str(tmp_path / "hudi_rli")
-    spark.read.parquet(f"{SF_SMOKE}/nation.parquet").repartition(3).write.parquet(d)
-    res = ConversionController().sync(
-        ParquetConversionSource(spark, d, name="nation"),
-        {
-            TableFormat.HUDI: HudiConversionTarget(
-                spark,
-                d,
-                table_name="nation",
-                metadata_index_format="hfile",
-                record_index_field="n_nationkey",
-            )
-        },
-    )
-    assert res[TableFormat.HUDI].status == SyncStatusCode.SUCCESS
-    with pytest.raises(NotImplementedError, match="record_index"):
-        hudi_cluster_small_files(spark, d, target_file_bytes=64 * 1024 * 1024)
+    from .hudi_hfile_fixture import add_retired_index_partitions
+
+    d = _make_hudi(spark, tmp_path, n_files=3, metadata_index_format="hfile")
+    retired = add_retired_index_partitions(d, "n_name")
+    before = _keys(read_hudi_as_df(spark, d))
+    out = hudi_cluster_small_files(spark, d, target_file_bytes=64 * 1024 * 1024)
+    assert out["instant"] is not None
+    assert _keys(read_hudi_as_df(spark, d)) == before
+    listed = read_properties(d)["hoodie.table.metadata.partitions"].split(",")
+    assert listed == ["column_stats", "files"]
+    assert not set(retired) & set(os.listdir(os.path.join(d, ".hoodie", "metadata")))
+    report = check_hudi_conformance(d)
+    assert report.passed, [(i.code, i.detail) for i in report.issues]

@@ -18,7 +18,6 @@ from incubator_xtable_spark.model.hudi_hash import (
     COL_STATS_KEY_LEN,
     FILE_ID_B64_LEN,
     HASH_SEED,
-    bloom_filter_index_key,
     col_stats_index_key,
     column_index_id,
     file_index_id,
@@ -90,11 +89,6 @@ def test_partition_identifier_root_maps_to_dot():
     assert k_root == k_dot  # getPartitionIdentifier normalization
 
 
-def test_bloom_key_is_partition_plus_file():
-    k = bloom_filter_index_key("p", "f.parquet")
-    assert k == partition_index_id("p") + file_index_id("f.parquet")
-
-
 def test_keys_are_distinct_across_components():
     # distinct columns/files/partitions never share a key
     keys = {
@@ -104,23 +98,3 @@ def test_keys_are_distinct_across_components():
         for c in ("c1", "c2", "c3")
     }
     assert len(keys) == 3 * 2 * 3
-
-
-def test_java_string_hashcode_vectors():
-    from incubator_xtable_spark.model.hudi_hash import (
-        java_string_hashcode,
-        map_record_key_to_file_group_index,
-    )
-
-    # published Java String.hashCode values
-    assert java_string_hashcode("") == 0
-    assert java_string_hashcode("a") == 97
-    assert java_string_hashcode("abc") == 96354
-    assert java_string_hashcode("hello") == 99162322
-    # the famous Integer.MIN_VALUE case: Math.abs stays negative in Java,
-    # and the double-abs + truncated-mod shard math must survive it
-    assert java_string_hashcode("polygenelubricants") == -(2**31)
-    assert map_record_key_to_file_group_index("polygenelubricants", 7) == 2
-    for n in (1, 2, 4, 10):
-        for k in ("", "a", "abc", "key-12345", "polygenelubricants"):
-            assert 0 <= map_record_key_to_file_group_index(k, n) < n

@@ -10,8 +10,8 @@ carries the very hashing library Hudi delegates to — so this suite
 compiles a tiny Java driver against it and pins the engine's
 pure-python ``model/hudi_hash.py`` byte-for-byte against the JVM on the
 full pipeline: XXH64(seed)→big-endian→Base64, MD5→Base64, and the
-assembled 48-char getColumnStatsIndexKey /
-getPartitionStatsIndexKey / getBloomFilterIndexKey shapes
+assembled 48-char getColumnStatsIndexKey and the
+getPartitionStatsIndexKey shape
 (HoodieMetadataPayload; consumed by ref
 hudi/HudiFileStatsExtractor.java:99-186 via point lookups).
 
@@ -189,21 +189,11 @@ def test_assembled_col_stats_key_matches_jvm(jvm_hashes):
 
 
 def test_partition_stats_and_bloom_key_shapes_match_jvm(jvm_hashes):
-    from incubator_xtable_spark.model.hudi_hash import (
-        bloom_filter_index_key,
-        partition_stats_index_key,
-    )
+    from incubator_xtable_spark.model.hudi_hash import partition_stats_index_key
 
-    col, part, fname = (
-        "l_shipdate",
-        "year=2024/month=07/day=15",
-        "c8e0f3a5-0f12-4d7b-9f9e-000000000001-0_1-2-3_20240101010101000.parquet",
-    )
+    col, part = "l_shipdate", "year=2024/month=07/day=15"
     assert partition_stats_index_key(part, col) == (
         jvm_hashes[col][0] + jvm_hashes[part][0]
-    )
-    assert bloom_filter_index_key(part, fname) == (
-        jvm_hashes[part][0] + jvm_hashes[fname][1]
     )
 
 
@@ -212,8 +202,8 @@ def test_partition_stats_and_bloom_key_shapes_match_jvm(jvm_hashes):
 # ---------------------------------------------------------------------------
 # The gap the suite above leaves open: WHICH string feeds which ID —
 # ColumnIndexID(column) vs PartitionIndexID(getPartitionIdentifier(part))
-# vs FileIndexID(fileName), and the col_stats / partition_stats /
-# bloom_filters key assembly — is restated from public Hudi sources. The
+# vs FileIndexID(fileName), and the col_stats / partition_stats key
+# assembly — is restated from public Hudi sources. The
 # probe below pins it against the real classes whenever a hudi-common
 # jar exists in any local artifact cache.
 #
